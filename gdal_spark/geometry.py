@@ -211,9 +211,9 @@ class Geom:
         return total
 
     def all_points(self):
-        out = []
+        z = np.empty(0)
+        out = [(z, z)]  # a polygon with no rings has no points either
         if not self.parts:
-            z = np.empty(0)
             return z, z
         if self.kind in ("point", "linestring", "multipoint"):
             out.append(self.parts[0])

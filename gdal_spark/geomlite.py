@@ -58,8 +58,9 @@ def parse_wkt_batch(wkt: "np.ndarray") -> tuple[list[np.ndarray], list[np.ndarra
     """Parse POINT/POLYGON WKT batch -> per-row (xs, ys) vertex arrays.
 
     POINT -> length-1 arrays; POLYGON -> exterior ring, closing vertex
-    dropped. Mirrors OGRGeometryFactory::createFromWkt for the two types
-    the fixtures use (gdal/ogr/ogrgeometryfactory.cpp:374).
+    dropped; NULL or any EMPTY geometry -> length-0 arrays. Mirrors
+    OGRGeometryFactory::createFromWkt for the two types the fixtures use
+    (gdal/ogr/ogrgeometryfactory.cpp:374).
 
     The dominant POINT case is vectorized through pandas' C regex
     engine; only polygons (and malformed rows) take the Python path.
@@ -84,7 +85,10 @@ def parse_wkt_batch(wkt: "np.ndarray") -> tuple[list[np.ndarray], list[np.ndarra
             ys_out[i] = np.empty(0)
             continue
         s = s.strip()
-        if s.startswith("POINT"):
+        if s.endswith("EMPTY"):
+            xs_out[i] = np.empty(0)
+            ys_out[i] = np.empty(0)
+        elif s.startswith("POINT"):
             body = s[s.index("(") + 1 : s.rindex(")")]
             x, y = body.split()
             xs_out[i] = np.array([float(x)])
@@ -116,7 +120,10 @@ def parse_wkt_objs(objs) -> tuple[list[np.ndarray], list[np.ndarray]]:
             ys_out.append(np.empty(0))
             continue
         s = s.strip()
-        if s.startswith("POINT"):
+        if s.endswith("EMPTY"):
+            xs_out.append(np.empty(0))
+            ys_out.append(np.empty(0))
+        elif s.startswith("POINT"):
             body = s[s.index("(") + 1 : s.rindex(")")]
             x, y = body.split()
             xs_out.append(np.array([float(x)]))

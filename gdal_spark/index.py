@@ -11,7 +11,7 @@ re-expressed for Spark's execution model:
   broadcast variable.
 
 The big documents side never joins, never shuffles, and never carries a
-byte of candidate data per row: a single vectorized pandas UDF looks its
+byte of candidate data per row: a single Arrow UDF (joins.py) looks its
 cell up in the broadcast index (np.searchsorted) and runs the staged
 exact test (OGRLayer::FilterGeometry, generic/ogrlayer.cpp:1357 — bbox
 reject :1377-1382, exact Intersects :1449-1462) over flat numpy arrays.
@@ -288,14 +288,12 @@ def first_match_packed(cov, cell, px, py, polys=None):
     return zone_out, eas_out
 
 
-def all_matches_packed(cov, cell, px, py, polys=None) -> list[list[tuple[int, int]]]:
-    """Per doc, the ordered list of matching (zone_id, eas_id) — empty
-    when no zone intersects (overlay-join semantics)."""
-    B = len(px)
-    out: list[list[tuple[int, int]]] = [[] for _ in range(B)]
+def all_matches_packed(cov, cell, px, py, polys=None):
+    """Every doc's matches in CSR form (offsets, zone_id, eas_id): doc
+    i's hits, in zone_id order, are [offsets[i], offsets[i+1]) — empty
+    when no zone intersects (overlay-join semantics). Flat arrays, no
+    per-doc or per-hit Python objects."""
     doc_idx, zpos = eval_pairs_packed(cov, cell, px, py, polys)
-    zid = cov.zone_id[zpos]
-    eas = cov.eas_id[zpos]
-    for k in range(len(doc_idx)):
-        out[int(doc_idx[k])].append((int(zid[k]), int(eas[k])))
-    return out
+    offsets = np.zeros(len(px) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(doc_idx, minlength=len(px)), out=offsets[1:])
+    return offsets, cov.zone_id[zpos], cov.eas_id[zpos]

@@ -5,8 +5,8 @@ PIP join = the reference's spatial-filter / overlay candidate pattern
 overlay Intersection's per-feature pushdown, :2128-2198) restated as:
 
   zones --(driver build, CSR numpy)--> broadcast PackedCover (index.py)
-  docs  --(ONE vectorized pandas UDF: parse WKT -> rep point -> cell
-           lookup in the broadcast -> bbox reject -> exact PIP)--> matches
+  docs  --(ONE Arrow UDF: parse WKT -> rep point -> cell lookup in
+           the broadcast -> bbox reject -> exact PIP)--> matches
 
 The whole join is a single map stage: no shuffle, no join, no row
 duplication, no per-row Python, and the only cross-task data movement
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,7 +45,7 @@ def geom_wkt_col():
 _POINT_RE = r"^POINT\(([-0-9.eE+]+) ([-0-9.eE+]+)\)$"
 
 
-def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: np.ndarray) -> dict:
+def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: pa.Array) -> dict:
     """Rows whose lon is NaN carry a non-point (or missing) WKT in
     `raw`: parse them Python-side (bounded minority), fill their rep
     point (vertex mean via sequential np.add.reduce — matches the
@@ -55,7 +56,7 @@ def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: np.ndarray) -> dict:
     polys: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     miss = np.where(np.isnan(lon))[0]
     if len(miss):
-        gxs, gys = G.parse_wkt_objs(raw[miss])
+        gxs, gys = G.parse_wkt_objs(raw.take(miss).to_pylist())
         for k, i in enumerate(miss):
             xs, ys = gxs[k], gys[k]
             n = len(xs)
@@ -71,52 +72,55 @@ def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: np.ndarray) -> dict:
     return polys
 
 
+_GEOM = T.StructType(
+    [
+        T.StructField("gx", T.ArrayType(T.DoubleType())),
+        T.StructField("gy", T.ArrayType(T.DoubleType())),
+        T.StructField("lon", T.DoubleType()),
+        T.StructField("lat", T.DoubleType()),
+    ]
+)
+
+
+def _geom_struct(xs: list, ys: list) -> pa.StructArray:
+    """The shared tail of extract_geom / extract_geom_wkb: per-row vertex
+    arrays -> gx/gy list columns (one flat buffer + offsets) and the rep
+    point, the vertex mean by sequential np.add.reduce (the oracle's
+    fold order) — NULL for a missing or empty geometry."""
+    off = np.zeros(len(xs) + 1, dtype=np.int32)
+    np.cumsum([len(a) for a in xs], out=off[1:])
+
+    def lists(vs):
+        return pa.ListArray.from_arrays(off, pa.array(np.concatenate([np.empty(0), *vs])))
+
+    def rep(vs):
+        mean = [np.add.reduce(a) / len(a) if len(a) else np.nan for a in vs]
+        return pa.array(np.array(mean, dtype=np.float64), from_pandas=True)
+
+    return pa.StructArray.from_arrays(
+        [lists(xs), lists(ys), rep(xs), rep(ys)], names=_GEOM.fieldNames()
+    )
+
+
+def _with_geom(docs: DataFrame, parsed) -> DataFrame:
+    return (
+        docs.withColumn("_g", parsed)
+        .withColumns({f: F.col(f"_g.{f}") for f in _GEOM.fieldNames()})
+        .drop("_g")
+    )
+
+
 def extract_geom(docs: DataFrame) -> DataFrame:
     """Pull geometry out of spans, parse to vertex arrays + rep point in
     one Arrow UDF batch. Used by operators that need the vertex columns
     JVM-side (kNN, tiling); pip_join fuses this work into its own UDF."""
     docs = docs.withColumn("geom_wkt", geom_wkt_col())
 
-    schema = T.StructType(
-        [
-            T.StructField("gx", T.ArrayType(T.DoubleType())),
-            T.StructField("gy", T.ArrayType(T.DoubleType())),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]
-    )
+    @F.arrow_udf(_GEOM)
+    def parse_wkt(wkt: pa.Array) -> pa.Array:
+        return _geom_struct(*G.parse_wkt_batch(wkt.to_numpy(zero_copy_only=False)))
 
-    @F.pandas_udf(schema)
-    def parse_wkt(wkt_s: pd.Series) -> pd.DataFrame:
-        gxs, gys = G.parse_wkt_batch(wkt_s.to_numpy())
-        n = len(gxs)
-        lon = np.full(n, np.nan)
-        lat = np.full(n, np.nan)
-        for i in range(n):
-            m = len(gxs[i])
-            if m == 1:
-                lon[i] = gxs[i][0]
-                lat[i] = gys[i][0]
-            elif m > 1:
-                lon[i] = np.add.reduce(gxs[i]) / m
-                lat[i] = np.add.reduce(gys[i]) / m
-        return pd.DataFrame(
-            {
-                "gx": [a.tolist() for a in gxs],
-                "gy": [a.tolist() for a in gys],
-                "lon": lon,
-                "lat": lat,
-            }
-        )
-
-    docs = docs.withColumn("_g", parse_wkt(F.col("geom_wkt")))
-    return (
-        docs.withColumn("gx", F.col("_g.gx"))
-        .withColumn("gy", F.col("_g.gy"))
-        .withColumn("lon", F.col("_g.lon"))
-        .withColumn("lat", F.col("_g.lat"))
-        .drop("_g")
-    )
+    return _with_geom(docs, parse_wkt(F.col("geom_wkt")))
 
 
 def extract_geom_wkb(docs: DataFrame, wkb_col: str = "geom_wkb") -> DataFrame:
@@ -130,203 +134,111 @@ def extract_geom_wkb(docs: DataFrame, wkb_col: str = "geom_wkb") -> DataFrame:
 
     from . import geometry as GM
 
-    schema = T.StructType(
-        [
-            T.StructField("gx", T.ArrayType(T.DoubleType())),
-            T.StructField("gy", T.ArrayType(T.DoubleType())),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def parse(bs: pd.Series) -> pd.DataFrame:
-        vals = bs.to_numpy()
-        n = len(vals)
-        gxs: list = [None] * n
-        gys: list = [None] * n
-        lon = np.full(n, np.nan)
-        lat = np.full(n, np.nan)
-        for i, v in enumerate(vals):
+    @F.arrow_udf(_GEOM)
+    def parse(bs: pa.Array) -> pa.Array:
+        xs, ys = [], []
+        for v in bs.to_pylist():
             if v is None:
-                gxs[i], gys[i] = [], []
-                continue
-            v = bytes(v)
-            if len(v) == 21 and v[0] == 1 and v[1:5] == b"\x01\x00\x00\x00":
-                x, y = struct.unpack_from("<2d", v, 5)
-                gxs[i], gys[i] = [x], [y]
-                lon[i], lat[i] = x, y
-                continue
-            g = GM.parse_wkb(v)
-            xs, ys = g.all_points()
-            gxs[i] = xs.tolist()
-            gys[i] = ys.tolist()
-            if len(xs) == 1:
-                lon[i], lat[i] = float(xs[0]), float(ys[0])
-            elif len(xs) > 1:
-                lon[i] = float(np.add.reduce(xs) / len(xs))
-                lat[i] = float(np.add.reduce(ys) / len(ys))
-        return pd.DataFrame({"gx": gxs, "gy": gys, "lon": lon, "lat": lat})
+                x = y = np.empty(0)
+            elif len(v) == 21 and v[0] == 1 and v[1:5] == b"\x01\x00\x00\x00":
+                x, y = (np.array([c]) for c in struct.unpack_from("<2d", v, 5))
+            else:
+                x, y = GM.parse_wkb(v).all_points()
+            xs.append(x)
+            ys.append(y)
+        return _geom_struct(xs, ys)
 
-    docs = docs.withColumn("_g", parse(F.col(wkb_col)))
-    return (
-        docs.withColumn("gx", F.col("_g.gx"))
-        .withColumn("gy", F.col("_g.gy"))
-        .withColumn("lon", F.col("_g.lon"))
-        .withColumn("lat", F.col("_g.lat"))
-        .drop("_g")
-    )
+    return _with_geom(docs, parse(F.col(wkb_col)))
 
 
-_FUSED_FIRST = T.StructType(
-    [
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("zone_id", T.LongType()),
-        T.StructField("eas_id", T.LongType()),
-    ]
-)
+_POINT_FIELDS = [
+    T.StructField("lon", T.DoubleType()),
+    T.StructField("lat", T.DoubleType()),
+]
 
-_MATCHES = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("zone_id", T.LongType()),
-            T.StructField("eas_id", T.LongType()),
-        ]
-    )
-)
+_PAIR = [
+    T.StructField("zone_id", T.LongType()),
+    T.StructField("eas_id", T.LongType()),
+]
 
-_FUSED_ALL = T.StructType(
-    [
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("matches", _MATCHES),
-    ]
-)
+_MATCH_FIELDS = {
+    "first": _PAIR,
+    "all": [T.StructField("_matches", T.ArrayType(T.StructType(_PAIR)))],
+}
 
 
-def _mask_sentinel(zone: np.ndarray, eas: np.ndarray) -> pd.DataFrame:
-    miss = zone < 0
-    return pd.DataFrame(
-        {
-            "zone_id": pd.array(np.where(miss, 0, zone), dtype="Int64"),
-            "eas_id": pd.array(np.where(miss, 0, eas), dtype="Int64"),
-        }
-    ).mask(pd.DataFrame({"zone_id": miss, "eas_id": miss}))
+def _coords(a: pa.Array) -> np.ndarray:
+    """float64 copy of an Arrow double column, NULL -> NaN; writable,
+    because _fill_poly_rows fills polygon rows in place."""
+    return a.to_numpy(zero_copy_only=False, writable=True)
 
 
-def _make_fused_udf(bc, level: int, mode: str):
-    """One UDF does rep point -> cell -> staged match against the
-    broadcast PackedCover. Point coordinates arrive pre-extracted by
-    JVM codegen (pip_join); only the minority polygon rows ship their
-    WKT into Python. Arrow traffic: two doubles + a rarely-non-null
-    string in, one small struct out — candidate data never rides on
-    document rows."""
-    if mode == "first":
-
-        @F.pandas_udf(_FUSED_FIRST)
-        def fused_first(
-            plon: pd.Series, plat: pd.Series, poly_wkt: pd.Series
-        ) -> pd.DataFrame:
-            cov = bc.value
-            lon = plon.to_numpy(dtype=np.float64, na_value=np.nan)
-            lat = plat.to_numpy(dtype=np.float64, na_value=np.nan)
-            polys = _fill_poly_rows(lon, lat, poly_wkt.to_numpy())
-            cell = np_geo_cell(np.nan_to_num(lon, nan=-999.0),
-                               np.nan_to_num(lat, nan=-999.0), level)
-            cell[np.isnan(lon)] = -1
-            zone, eas = IX.first_match_packed(cov, cell, lon, lat, polys)
-            out = _mask_sentinel(zone, eas)
-            out.insert(0, "lat", lat)
-            out.insert(0, "lon", lon)
-            return out
-
-        return fused_first
-
-    @F.pandas_udf(_FUSED_ALL)
-    def fused_all(
-        plon: pd.Series, plat: pd.Series, poly_wkt: pd.Series
-    ) -> pd.DataFrame:
-        cov = bc.value
-        lon = plon.to_numpy(dtype=np.float64, na_value=np.nan)
-        lat = plat.to_numpy(dtype=np.float64, na_value=np.nan)
-        polys = _fill_poly_rows(lon, lat, poly_wkt.to_numpy())
-        cell = np_geo_cell(np.nan_to_num(lon, nan=-999.0),
-                           np.nan_to_num(lat, nan=-999.0), level)
-        cell[np.isnan(lon)] = -1
-        matches = IX.all_matches_packed(cov, cell, lon, lat, polys)
-        return pd.DataFrame(
-            {
-                "lon": lon,
-                "lat": lat,
-                "matches": [
-                    [{"zone_id": z, "eas_id": e} for z, e in m] for m in matches
-                ],
-            }
-        )
-
-    return fused_all
-
-
-_PRE_FIRST = T.StructType(
-    [
-        T.StructField("zone_id", T.LongType()),
-        T.StructField("eas_id", T.LongType()),
-    ]
-)
-
-
-def _polys_from_lists(gx: pd.Series, gy: pd.Series) -> dict:
+def _polys_from_lists(gx: pa.ListArray, gy: pa.ListArray) -> dict:
     """Sparse {row: (xs, ys)} for rows whose vertex list is not a single
-    point (extract_geom output carries gx/gy as list columns)."""
-    polys: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for i, a in enumerate(gx):
-        if a is None or len(a) != 1:
-            xs = np.asarray(a, dtype=np.float64) if a is not None else np.empty(0)
-            ys_raw = gy.iloc[i]
-            ys = np.asarray(ys_raw, dtype=np.float64) if ys_raw is not None else np.empty(0)
-            polys[i] = (xs, ys)
-    return polys
+    point, sliced out of the list offsets (extract_geom output carries
+    gx/gy as list columns; a NULL list is an empty geometry)."""
+    xo, yo = gx.offsets.to_numpy(), gy.offsets.to_numpy()
+    xv, yv = gx.values.to_numpy(), gy.values.to_numpy()
+    n = gx.value_lengths().fill_null(0).to_numpy()
+    return {
+        int(i): (xv[xo[i] : xo[i] + n[i]], yv[yo[i] : yo[i] + n[i]])
+        for i in np.flatnonzero(n != 1)
+    }
 
 
-def _make_prepared_udf(bc, level: int, mode: str):
-    """Variant over already-extracted geometry columns (extract_geom
-    output) — avoids re-parsing when the caller needs gx/gy anyway."""
+def _match_arrays(cov, level: int, mode: str, lon, lat, polys) -> list:
+    """The mode adapter: rep point -> cell -> staged match, returned as
+    the Arrow columns of _MATCH_FIELDS[mode]. 'first' masks the -1
+    sentinel to NULL; 'all' wraps the kernel's CSR output in a ListArray
+    directly — no Python object per row or per hit."""
+    cell = np_geo_cell(np.nan_to_num(lon, nan=-999.0),
+                       np.nan_to_num(lat, nan=-999.0), level)
+    cell[np.isnan(lon)] = -1
     if mode == "first":
+        zone, eas = IX.first_match_packed(cov, cell, lon, lat, polys)
+        miss = zone < 0
+        return [pa.array(zone, mask=miss), pa.array(eas, mask=miss)]
+    off, zone, eas = IX.all_matches_packed(cov, cell, lon, lat, polys)
+    pairs = pa.StructArray.from_arrays([zone, eas], names=[f.name for f in _PAIR])
+    return [pa.ListArray.from_arrays(off.astype(np.int32), pairs)]
 
-        @F.pandas_udf(_PRE_FIRST)
-        def prep_first(
-            lon: pd.Series, lat: pd.Series, gx: pd.Series, gy: pd.Series
-        ) -> pd.DataFrame:
-            cov = bc.value
-            lo = lon.to_numpy(dtype=np.float64)
-            la = lat.to_numpy(dtype=np.float64)
-            polys = _polys_from_lists(gx, gy)
-            cell = np_geo_cell(np.nan_to_num(lo, nan=-999.0),
-                               np.nan_to_num(la, nan=-999.0), level)
-            cell[np.isnan(lo)] = -1
-            zone, eas = IX.first_match_packed(cov, cell, lo, la, polys)
-            return _mask_sentinel(zone, eas)
 
-        return prep_first
+def _make_pip_udf(bc, level: int, mode: str, prepared: bool):
+    """One Arrow UDF runs rep point -> cell -> staged match against the
+    broadcast PackedCover. Fused (prepared=False): point coordinates
+    arrive pre-extracted by JVM codegen (pip_join) and only the minority
+    polygon rows ship their WKT into Python; the struct also returns the
+    filled rep point. Prepared: the inputs are extract_geom's lon/lat/
+    gx/gy columns, so nothing is re-parsed. Arrow traffic: two doubles
+    plus a rarely-non-null string (or the vertex lists) in, one small
+    struct out — candidate data never rides on document rows."""
+    fields = _MATCH_FIELDS[mode] if prepared else _POINT_FIELDS + _MATCH_FIELDS[mode]
+    rtype = T.StructType(fields)
+    names = rtype.fieldNames()
 
-    @F.pandas_udf(_MATCHES)
-    def prep_all(
-        lon: pd.Series, lat: pd.Series, gx: pd.Series, gy: pd.Series
-    ) -> pd.Series:
-        cov = bc.value
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        polys = _polys_from_lists(gx, gy)
-        cell = np_geo_cell(np.nan_to_num(lo, nan=-999.0),
-                           np.nan_to_num(la, nan=-999.0), level)
-        cell[np.isnan(lo)] = -1
-        matches = IX.all_matches_packed(cov, cell, lo, la, polys)
-        return pd.Series(
-            [[{"zone_id": z, "eas_id": e} for z, e in m] for m in matches]
-        )
+    def struct(lon, lat, polys) -> pa.StructArray:
+        arrs = _match_arrays(bc.value, level, mode, lon, lat, polys)
+        if not prepared:
+            arrs = [pa.array(lon, from_pandas=True),
+                    pa.array(lat, from_pandas=True)] + arrs
+        return pa.StructArray.from_arrays(arrs, names=names)
 
-    return prep_all
+    if prepared:
+
+        @F.arrow_udf(rtype)
+        def pip_prepared(
+            lon: pa.Array, lat: pa.Array, gx: pa.Array, gy: pa.Array
+        ) -> pa.Array:
+            return struct(_coords(lon), _coords(lat), _polys_from_lists(gx, gy))
+
+        return pip_prepared
+
+    @F.arrow_udf(rtype)
+    def pip_fused(plon: pa.Array, plat: pa.Array, pwkt: pa.Array) -> pa.Array:
+        lon, lat = _coords(plon), _coords(plat)
+        return struct(lon, lat, _fill_poly_rows(lon, lat, pwkt))
+
+    return pip_fused
 
 
 def pip_join(
@@ -343,7 +255,7 @@ def pip_join(
       when none — OGR SQL LEFT JOIN semantics (ogr_sql_dialect.rst:490).
     mode 'all': one row per intersecting pair, NULL row when none —
       overlay-join semantics (generic/ogrlayer.cpp:2062).
-    engine 'arrow' (default): everything through the fused pandas UDF.
+    engine 'arrow' (default): everything through the one Arrow UDF.
       'auto': point documents run the pure-JVM Catalyst leg (jvmpip.py
       — zero Arrow/Python on the hot path), the polygon minority keeps
       the Arrow kernel; legs are unioned. Both produce identical rows
@@ -363,16 +275,7 @@ def pip_join(
         return _pip_join_hybrid(docs, zindex, mode)
 
     if "gx" in docs.columns:  # pre-extracted geometry path
-        udf = _make_prepared_udf(zindex.bc, zindex.level, mode)
-        m = udf(F.col("lon"), F.col("lat"), F.col("gx"), F.col("gy"))
-        if mode == "first":
-            j = docs.withColumn("_m", m)
-            return (
-                j.withColumn("zone_id", F.col("_m.zone_id"))
-                .withColumn("eas_id", F.col("_m.eas_id"))
-                .drop("_m")
-            )
-        j = docs.withColumn("_matches", m)
+        src, prepared, args = docs, True, ("lon", "lat", "gx", "gy")
     else:  # fused path: parse + locate + match in one UDF
         if "geom_wkt" in docs.columns:
             src = docs
@@ -391,24 +294,16 @@ def pip_join(
                 "_pwkt", F.when(F.col("_plon").isNull(), F.col("geom_wkt"))
             )
         )
-        udf = _make_fused_udf(zindex.bc, zindex.level, mode)
-        j = src.withColumn(
-            "_m", udf(F.col("_plon"), F.col("_plat"), F.col("_pwkt"))
-        ).drop("_plon", "_plat", "_pwkt")
-        if mode == "first":
-            return (
-                j.withColumn("lon", F.col("_m.lon"))
-                .withColumn("lat", F.col("_m.lat"))
-                .withColumn("zone_id", F.col("_m.zone_id"))
-                .withColumn("eas_id", F.col("_m.eas_id"))
-                .drop("_m")
-            )
-        j = (
-            j.withColumn("lon", F.col("_m.lon"))
-            .withColumn("lat", F.col("_m.lat"))
-            .withColumn("_matches", F.col("_m.matches"))
-            .drop("_m")
-        )
+        prepared, args = False, ("_plon", "_plat", "_pwkt")
+    udf = _make_pip_udf(zindex.bc, zindex.level, mode, prepared)
+    j = (
+        src.withColumn("_m", udf(*args))
+        .drop("_plon", "_plat", "_pwkt")
+        .withColumns({f: F.col(f"_m.{f}") for f in udf.returnType.fieldNames()})
+        .drop("_m")
+    )
+    if mode == "first":
+        return j
 
     ex = j.select("*", F.explode_outer("_matches").alias("_e"))
     return (

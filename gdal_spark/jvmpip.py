@@ -1,8 +1,9 @@
 """Pure-JVM point-in-polygon join path (no Python in the hot leg).
 
-The round-3 scaling profile (tools/profile_scaling.py) isolated the
+A per-layer scaling profile (today: `perfbench/run.py --trace 1`, which
+splits each rep into scan -> parse -> pip_join -> full) isolated the
 8->32-core efficiency loss of the headline PIP join to Arrow IPC
-memory bandwidth: the fused pandas UDF ships two doubles + a null
+memory bandwidth: the fused Arrow UDF ships two doubles + a null
 string per document into Python workers and a small struct back, and
 at 32 concurrent workers that serialization traffic saturates the
 box's memory bus before the cores saturate. This module removes

@@ -33,10 +33,13 @@ def pip_oracle(docs_pdf: pd.DataFrame, zones_pdf: pd.DataFrame, mode: str = "fir
     rows = []
     for k, doc_id in enumerate(docs_pdf["doc_id"]):
         dx, dy = gxs[k], gys[k]
-        bx0, bx1, by0, by1 = dx.min(), dx.max(), dy.min(), dy.max()
-        cand = np.where(
-            (bx1 >= zxmin) & (bx0 <= zxmax) & (by1 >= zymin) & (by0 <= zymax)
-        )[0]
+        if len(dx):
+            bx0, bx1, by0, by1 = dx.min(), dx.max(), dy.min(), dy.max()
+            cand = np.where(
+                (bx1 >= zxmin) & (bx0 <= zxmax) & (by1 >= zymin) & (by0 <= zymax)
+            )[0]
+        else:  # no geometry, or an empty one: intersects nothing
+            cand = []
         matches = []
         for z in sorted(cand, key=lambda c: int(zid[c])):
             if len(dx) == 1:

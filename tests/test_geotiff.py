@@ -19,7 +19,11 @@ from gdal_spark import geomlite as G
 from gdal_spark import geotiff, synth
 from gdal_spark.tiling import checksum_table
 
-DATA = "/root/reference/autotest/gcore/data/"
+from .conftest import reference_fixture
+
+
+def _gcore(name):
+    return reference_fixture("autotest/gcore/data/" + name)
 
 
 def _full_checksums(spark, path, **kw):
@@ -46,7 +50,7 @@ def _full_checksums(spark, path, **kw):
 
 
 def test_byte_tif_reference_parity(spark):
-    cs, rows = _full_checksums(spark, DATA + "byte.tif")
+    cs, rows = _full_checksums(spark, _gcore("byte.tif"))
     assert cs == {1: 4672}
     r = rows[0]
     assert list(r.geotransform) == [440720.0, 60.0, 0.0, 3751320.0, 0.0, -60.0]
@@ -55,7 +59,7 @@ def test_byte_tif_reference_parity(spark):
 
 
 def test_rgbsmall_band_checksums(spark):
-    cs, _ = _full_checksums(spark, DATA + "rgbsmall.tif")
+    cs, _ = _full_checksums(spark, _gcore("rgbsmall.tif"))
     assert cs == {1: 21212, 2: 21053, 3: 21349}
 
 
@@ -65,23 +69,23 @@ def test_rgbsmall_band_checksums(spark):
      ("float32.tif", "float32")],
 )
 def test_other_dtypes_checksum_4672(spark, fname, dtype):
-    cs, rows = _full_checksums(spark, DATA + fname)
+    cs, rows = _full_checksums(spark, _gcore(fname))
     assert cs == {1: 4672}
     assert rows[0].dtype == dtype
 
 
 def test_bigtiff_strips(spark):
-    cs, _ = _full_checksums(spark, DATA + "byte_bigtiff_strip5lines.tif")
+    cs, _ = _full_checksums(spark, _gcore("byte_bigtiff_strip5lines.tif"))
     assert cs == {1: 4672}
 
 
 def test_planar_separate_tiled(spark):
-    cs, _ = _full_checksums(spark, DATA + "separate_tiled.tif")
+    cs, _ = _full_checksums(spark, _gcore("separate_tiled.tif"))
     assert len(cs) == 3 and len(set(cs.values())) == 1
 
 
 def test_ifd_meta(spark):
-    meta = geotiff.ifd_meta(DATA + "byte.tif")
+    meta = geotiff.ifd_meta(_gcore("byte.tif"))
     assert meta[0]["width"] == 20 and meta[0]["height"] == 20
     assert meta[0]["crs"] == "EPSG:26711"
 
@@ -112,6 +116,6 @@ def test_read_plan_is_distributed(spark):
     """Driver reads only the IFD; the segment scan is a mapInPandas
     over a many-partition descriptor table (each task range-reads its
     own segments — the COG-over-object-store access pattern)."""
-    t = geotiff.read_geotiff(spark, DATA + "rgbsmall.tif")
+    t = geotiff.read_geotiff(spark, _gcore("rgbsmall.tif"))
     plan = t._jdf.queryExecution().executedPlan().toString()
     assert "mapInPandas" in plan or "MapInPandas" in plan

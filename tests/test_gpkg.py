@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from gdal_spark import geometry, gpkg, synth, tiling
 
-BYTE_GPKG = "/root/reference/autotest/gdrivers/data/gpkg/byte.gpkg"
-POLY_SQL = "/root/reference/autotest/ogr/data/gpkg/poly.gpkg.sql"
+from .conftest import reference_fixture
+
+BYTE_GPKG = "autotest/gdrivers/data/gpkg/byte.gpkg"
+POLY_SQL = "autotest/ogr/data/gpkg/poly.gpkg.sql"
 
 
 @pytest.fixture(scope="module")
@@ -22,7 +24,7 @@ def poly_gpkg(tmp_path_factory):
     """Materialise the reference's poly.gpkg.sql dump (rtree lines
     need GPKG ST_* SQL functions sqlite3 lacks — stripped; the rtree
     is a write-only extension, not part of the data model)."""
-    sql = open(POLY_SQL).read()
+    sql = open(reference_fixture(POLY_SQL)).read()
     lines = [l for l in sql.splitlines() if "rtree" not in l.lower()]
     path = str(tmp_path_factory.mktemp("gpkg") / "poly.gpkg")
     con = sqlite3.connect(path)
@@ -63,7 +65,7 @@ def test_read_poly_fixture(spark, poly_gpkg):
 
 
 def test_read_byte_gpkg_tiles(spark):
-    t = gpkg.read_gpkg_tiles(spark, BYTE_GPKG, raster_id="byte")
+    t = gpkg.read_gpkg_tiles(spark, reference_fixture(BYTE_GPKG), raster_id="byte")
     rows = t.filter("band = 1").collect()
     assert len(rows) == 1
     r = rows[0]

@@ -8,6 +8,7 @@ NULL zone columns when nothing intersects.
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark import synth
@@ -121,3 +122,75 @@ def test_pip_points_jvm_no_python_in_plan(spark):
         F.count("*").alias("n"), F.count("zone_id").alias("m")
     ).collect()[0]
     assert got["n"] == 1000 and got["m"] > 0
+
+
+# zone 5 and zone 2 overlap on x in [5, 10]: listed out of zone_id order
+_ZONES = [(5, 500, [0, 10, 10, 0], [0, 0, 10, 10]),
+          (2, 200, [5, 15, 15, 5], [0, 0, 10, 10]),
+          (9, 900, [50, 60, 60, 50], [50, 50, 60, 60])]
+
+_DOCS = [
+    ("d0_nogeom", None),
+    ("d1_empty", "POLYGON EMPTY"),
+    ("d2_odd_point", "POINT (1 2)"),       # misses the JVM regexp
+    ("d3_polygon", "POLYGON((12 4, 14 4, 14 6, 12 6, 12 4))"),
+    ("d4_two_zones", "POINT(7 5)"),
+    ("d5_poly_two_zones", "POLYGON((9 4, 11 4, 11 6, 9 6, 9 4))"),
+    ("d6_no_match", "POINT(30 30)"),
+]
+
+
+def _adapter_inputs(spark):
+    import struct
+
+    from gdal_spark import geometry as GM
+    from gdal_spark.joins import extract_geom, extract_geom_wkb
+
+    zones = pd.DataFrame([
+        {"zone_id": z, "eas_id": e, "xs": xs, "ys": ys, "xmin": min(xs),
+         "ymin": min(ys), "xmax": max(xs), "ymax": max(ys)}
+        for z, e, xs, ys in _ZONES
+    ])
+
+    def spans(w):
+        s = [("text", "w0001", "", 0)]
+        return s + [("geom", w, "", 1)] if w is not None else s
+
+    def wkb(w):
+        if w is None:
+            return None
+        if w.endswith("EMPTY"):
+            return struct.pack("<BII", 1, 3, 0)  # polygon with no rings
+        return GM.to_wkb(GM.parse_wkt(w))
+
+    docs = spark.createDataFrame(
+        [(d, spans(w), wkb(w)) for d, w in _DOCS],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>, geom_wkb binary",
+    ).coalesce(1)
+    return zones, {
+        "fused": docs.drop("geom_wkb"),
+        "prepared_wkt": extract_geom(docs.drop("geom_wkb")),
+        "prepared_wkb": extract_geom_wkb(docs),
+    }
+
+
+@pytest.mark.parametrize("mode", ["first", "all"])
+def test_pip_adapter_paths_match_oracle(spark, mode):
+    """Fused and prepared (WKT and WKB geometry) inputs, in both modes,
+    give the oracle's rows in the oracle's order: per doc, matches in
+    zone_id order, and one NULL row for a doc that matches nothing,
+    has no geometry, or has an empty one."""
+    from gdal_spark.index import zone_index
+
+    zones, inputs = _adapter_inputs(spark)
+    exp = pip_oracle(pd.DataFrame(_DOCS, columns=["doc_id", "geom_wkt"]), zones, mode)
+    exp = [(d, None if pd.isna(z) else int(z), None if pd.isna(e) else int(e))
+           for d, z, e in exp[["doc_id", "zone_id", "eas_id"]].itertuples(index=False)]
+    assert ("d4_two_zones", 2, 200) in exp
+    assert (("d4_two_zones", 5, 500) in exp) == (mode == "all")
+    assert ("d6_no_match", None, None) in exp
+    zidx = zone_index(spark, zones)
+    for path, docs in inputs.items():
+        got = pip_join(docs, zidx, mode=mode).select("doc_id", "zone_id", "eas_id")
+        assert [tuple(r) for r in got.collect()] == exp, path

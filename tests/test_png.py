@@ -10,7 +10,9 @@ import pytest
 from gdal_spark.geomlite import gdal_checksum
 from gdal_spark.png import decode_png, encode_png
 
-BYTE_GPKG = "/root/reference/autotest/gdrivers/data/gpkg/byte.gpkg"
+from .conftest import reference_fixture
+
+BYTE_GPKG = "autotest/gdrivers/data/gpkg/byte.gpkg"
 
 
 @pytest.mark.parametrize(
@@ -49,7 +51,7 @@ def test_byte_gpkg_tile_checksum_4672():
     checksums to the canonical 4672 (autotest/gcore/tiff_read.py)."""
     import sqlite3
 
-    con = sqlite3.connect(BYTE_GPKG)
+    con = sqlite3.connect(reference_fixture(BYTE_GPKG))
     blob = con.execute("SELECT tile_data FROM byte").fetchone()[0]
     con.close()
     img = decode_png(blob)

@@ -15,6 +15,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import reference_fixture
+
 POLY = pd.DataFrame(
     {
         "fid": range(10),
@@ -148,7 +150,7 @@ def _read_byte_tif():
 
     import numpy as np
 
-    data = open("/root/reference/autotest/gcore/data/byte.tif", "rb").read()
+    data = open(reference_fixture("autotest/gcore/data/byte.tif"), "rb").read()
     bo = "<" if data[:2] == b"II" else ">"
     off = struct.unpack(bo + "I", data[4:8])[0]
     n = struct.unpack(bo + "H", data[off : off + 2])[0]
@@ -239,7 +241,7 @@ def _read_utmsmall():
 
     import numpy as np
 
-    data = open("/root/reference/autotest/gcore/data/utmsmall.tif", "rb").read()
+    data = open(reference_fixture("autotest/gcore/data/utmsmall.tif"), "rb").read()
     bo = "<" if data[:2] == b"II" else ">"
     off = struct.unpack(bo + "I", data[4:8])[0]
     n = struct.unpack(bo + "H", data[off : off + 2])[0]
@@ -391,7 +393,7 @@ def test_gdalwarp_11_bilinear_vs_golden_raster(spark):
     ).collect()[0]
     got = np.frombuffer(out["data"], dtype=np.uint8).reshape(40, 40).astype(np.int64)
     ref = _read_ref_tif(
-        "/root/reference/autotest/utilities/ref_data/testgdalwarp11.tif"
+        reference_fixture("autotest/utilities/ref_data/testgdalwarp11.tif")
     ).astype(np.int64)
     assert np.abs(got - ref).max() <= 1
 
@@ -404,7 +406,7 @@ def test_ogr_sql_like_ilike_on_reference_csv(spark):
     from gdal_spark import ogrsql as Q
 
     df = spark.read.option("header", True).csv(
-        "/root/reference/autotest/ogr/data/prime_meridian.csv"
+        reference_fixture("autotest/ogr/data/prime_meridian.csv")
     )
     col = "PRIME_MERIDIAN_NAME"
     assert df.filter(Q.ogr_ilike(col, "GREEN%")).count() == 1
@@ -431,6 +433,6 @@ def test_gdalwarp_12_cubic_vs_golden_raster(spark):
     ).collect()[0]
     got = np.frombuffer(out["data"], dtype=np.uint8).reshape(40, 40).astype(np.int64)
     ref = _read_ref_tif(
-        "/root/reference/autotest/utilities/ref_data/testgdalwarp12.tif"
+        reference_fixture("autotest/utilities/ref_data/testgdalwarp12.tif")
     ).astype(np.int64)
     assert np.abs(got - ref).max() <= 1

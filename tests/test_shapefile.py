@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 from gdal_spark import geometry as GM
 from gdal_spark import shapefile as SHP
 
-POLY_BASE = "/root/reference/autotest/ogr/data/poly"
+from .conftest import reference_fixture
+
+
+def _poly_base():
+    return reference_fixture("autotest/ogr/data/poly.shp")[: -len(".shp")]
+
 
 EAS = [168, 179, 171, 173, 172, 169, 166, 158, 165, 170]
 AREA = [215229.266, 247328.172, 261752.781, 547597.188, 15775.758,
@@ -26,7 +31,7 @@ PRF = ["35043411", "35043423", "35043414", "35043416", "35043415",
 
 @pytest.fixture(scope="module")
 def poly(spark):
-    return SHP.read_shapefile(spark, POLY_BASE).orderBy("fid").collect()
+    return SHP.read_shapefile(spark, _poly_base()).orderBy("fid").collect()
 
 
 def test_poly_attributes(poly):
@@ -51,7 +56,7 @@ def test_poly_geometry_kinds(poly):
 
 
 def test_roundtrip(spark, poly, tmp_path):
-    df = SHP.read_shapefile(spark, POLY_BASE).select(
+    df = SHP.read_shapefile(spark, _poly_base()).select(
         "geom_wkt", "AREA", "EAS_ID", "PRFEDEA"
     )
     info = SHP.write_shapefile(df, str(tmp_path / "rt"))
@@ -118,7 +123,7 @@ def test_ogr2ogr_over_real_shapefile(spark, tmp_path):
     shapefile sink + re-scan."""
     from gdal_spark.ogr2ogr import ogr2ogr_layer
 
-    src = SHP.read_shapefile(spark, POLY_BASE).withColumnRenamed(
+    src = SHP.read_shapefile(spark, _poly_base()).withColumnRenamed(
         "EAS_ID", "eas_id"
     ).withColumnRenamed("PRFEDEA", "prfedea")
     out = ogr2ogr_layer(src, where="eas_id < 170", select=["prfedea", "eas_id"])
@@ -134,7 +139,7 @@ def test_ogr_sql_over_real_shapefile(spark):
     ... in first-encounter order (swq DISTINCT_LIST semantics)."""
     from gdal_spark.ogr_sql_exec import execute_ogr_sql
 
-    poly = SHP.read_shapefile(spark, POLY_BASE).select(
+    poly = SHP.read_shapefile(spark, _poly_base()).select(
         "fid",
         F.col("AREA").alias("area"),
         F.col("EAS_ID").alias("eas_id"),
