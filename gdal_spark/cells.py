@@ -84,17 +84,16 @@ def lonlat_to_tile(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]
 def quadkey(tx: Column, ty_tms: Column, zoom: int) -> Column:
     """Bing quadkey from TMS tile coords (gdal2tiles.py:451-466).
 
-    Unrolled over the fixed zoom: digit_i = bit(tx) + 2*bit(ty_google),
-    MSB first — stays in whole-stage codegen (no UDF, no loop at runtime).
+    digit_i = bit_i(tx) + 2*bit_i(ty_google), MSB first, is the Morton
+    interleave of the two coordinates read in base 4: `bin` spells each
+    coordinate in binary, `conv` reads those digits as base 4, and the
+    sum x4 + 2*y4 cannot carry. One `conv` back to base 4 and an `lpad`
+    to `zoom` digits give the key, so the expression has the same size
+    at every zoom and stays in whole-stage codegen.
     """
-    ty_g = tms_to_google(ty_tms, zoom)
-    digits = []
-    for i in range(zoom, 0, -1):
-        shift = i - 1
-        bit_x = F.shiftright(tx, shift).bitwiseAND(F.lit(1))
-        bit_y = F.shiftright(ty_g, shift).bitwiseAND(F.lit(1))
-        digits.append((bit_x + bit_y * 2).cast("string"))
-    return F.concat(*digits) if digits else F.lit("")
+    x4 = F.conv(F.bin(tx), 4, 10).cast("long")
+    y4 = F.conv(F.bin(tms_to_google(ty_tms, zoom)), 4, 10).cast("long")
+    return F.lpad(F.conv(x4 + y4 * 2, 10, 4), zoom, "0")
 
 
 def tile_id(tx: Column, ty_google: Column, zoom: int) -> Column:

@@ -35,14 +35,42 @@ from .cells import np_geo_cell
 
 
 def geom_wkt_col():
-    """The single 'geom' span's WKT, pulled out of the nested spans
-    array with JVM higher-order functions — no Python."""
-    return F.element_at(
-        F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("geom")), 1
-    )["text"]
+    """The first 'geom' span's WKT (NULL when there is none or `spans`
+    is NULL). `array_position` over the spans' kind array finds it, so
+    the lookup compiles into whole-stage codegen — no lambda."""
+    pos = F.array_position(F.col("spans.kind"), "geom")
+    return F.get(F.col("spans"), pos - 1)["text"]
 
 
 _POINT_RE = r"^POINT\(([-0-9.eE+]+) ([-0-9.eE+]+)\)$"
+
+
+def _with_point_parse(docs: DataFrame) -> DataFrame:
+    """docs plus geom_wkt and the POINT fast path: _plon/_plat are a
+    POINT WKT's coordinates, extracted JVM-side by codegen'd regexp +
+    cast (NULL for any other geometry), and _pwkt keeps the WKT of only
+    the rows that missed, the minority whose text ships through Arrow.
+    geom_wkt gets its own projection, which the optimizer keeps (its
+    four uses below are not cheap to inline), so the span lookup runs
+    once per row in the scan's codegen stage and the UDF's input rows
+    carry the WKT rather than the whole spans array."""
+    if "geom_wkt" not in docs.columns:
+        docs = docs.withColumn("geom_wkt", geom_wkt_col())
+    wkt = F.col("geom_wkt")
+    plon = F.regexp_extract(wkt, _POINT_RE, 1).cast("double")
+    plat = F.regexp_extract(wkt, _POINT_RE, 2).cast("double")
+    return docs.withColumns({"_plon": plon, "_plat": plat, "_pwkt": F.when(plon.isNull(), wkt)})
+
+
+def _splice(df: DataFrame, struct: str, fields: list, drop: tuple = ()) -> DataFrame:
+    """One projection that lifts `struct`'s fields to top-level columns:
+    a field named like an existing column replaces it in place, the
+    others follow in field order; `struct` and `drop` go. Plain names,
+    not Column calls: a name costs a few py4j round trips on the driver, a
+    Column call about a dozen."""
+    keep = [c for c in df.columns if c != struct and c not in drop]
+    out = [f"{struct}.{c}" if c in fields else "`" + c.replace("`", "``") + "`" for c in keep]
+    return df.select(*out, *(f"{struct}.{f}" for f in fields if f not in keep))
 
 
 def _fill_poly_rows(lon: np.ndarray, lat: np.ndarray, raw: pa.Array) -> dict:
@@ -103,11 +131,7 @@ def _geom_struct(xs: list, ys: list) -> pa.StructArray:
 
 
 def _with_geom(docs: DataFrame, parsed) -> DataFrame:
-    return (
-        docs.withColumn("_g", parsed)
-        .withColumns({f: F.col(f"_g.{f}") for f in _GEOM.fieldNames()})
-        .drop("_g")
-    )
+    return _splice(docs.withColumn("_g", parsed), "_g", _GEOM.fieldNames())
 
 
 def extract_geom(docs: DataFrame) -> DataFrame:
@@ -277,40 +301,14 @@ def pip_join(
     if "gx" in docs.columns:  # pre-extracted geometry path
         src, prepared, args = docs, True, ("lon", "lat", "gx", "gy")
     else:  # fused path: parse + locate + match in one UDF
-        if "geom_wkt" in docs.columns:
-            src = docs
-        else:
-            src = docs.withColumn("geom_wkt", geom_wkt_col())
-        # point coords extracted JVM-side (whole-stage codegen regexp +
-        # cast); only non-point rows ship their WKT through Arrow
-        src = (
-            src.withColumn(
-                "_plon", F.regexp_extract("geom_wkt", _POINT_RE, 1).cast("double")
-            )
-            .withColumn(
-                "_plat", F.regexp_extract("geom_wkt", _POINT_RE, 2).cast("double")
-            )
-            .withColumn(
-                "_pwkt", F.when(F.col("_plon").isNull(), F.col("geom_wkt"))
-            )
-        )
-        prepared, args = False, ("_plon", "_plat", "_pwkt")
+        src, prepared, args = _with_point_parse(docs), False, ("_plon", "_plat", "_pwkt")
     udf = _make_pip_udf(zindex.bc, zindex.level, mode, prepared)
-    j = (
-        src.withColumn("_m", udf(*args))
-        .drop("_plon", "_plat", "_pwkt")
-        .withColumns({f: F.col(f"_m.{f}") for f in udf.returnType.fieldNames()})
-        .drop("_m")
-    )
+    j = _splice(src.withColumn("_m", udf(*args)), "_m", udf.returnType.fieldNames(),
+                drop=("_plon", "_plat", "_pwkt"))
     if mode == "first":
         return j
-
     ex = j.select("*", F.explode_outer("_matches").alias("_e"))
-    return (
-        ex.withColumn("zone_id", F.col("_e.zone_id"))
-        .withColumn("eas_id", F.col("_e.eas_id"))
-        .drop("_matches", "_e")
-    )
+    return _splice(ex, "_e", ["zone_id", "eas_id"], drop=("_matches",))
 
 
 def _pip_join_hybrid(docs: DataFrame, zindex: IX.ZoneIndex, mode: str) -> DataFrame:
@@ -325,26 +323,15 @@ def _pip_join_hybrid(docs: DataFrame, zindex: IX.ZoneIndex, mode: str) -> DataFr
     bottleneck (BENCH/BASELINE.md)."""
     from . import jvmpip
 
-    if "geom_wkt" in docs.columns:
-        src = docs
-    else:
-        src = docs.withColumn("geom_wkt", geom_wkt_col())
-    src = src.withColumn(
-        "_plon", F.regexp_extract("geom_wkt", _POINT_RE, 1).cast("double")
-    ).withColumn(
-        "_plat", F.regexp_extract("geom_wkt", _POINT_RE, 2).cast("double")
-    )
-
-    pts = (
-        src.filter(F.col("_plon").isNotNull())
-        .withColumn("lon", F.col("_plon"))
-        .withColumn("lat", F.col("_plat"))
-        .drop("_plon", "_plat")
-    )
+    src = _with_point_parse(docs)
+    tmp = ("_plon", "_plat", "_pwkt")
+    pts = src.filter(F.col("_plon").isNotNull()).withColumns(
+        {"lon": F.col("_plon"), "lat": F.col("_plat")}
+    ).drop(*tmp)
     cover = zindex.cover_df(docs.sparkSession)
     jvm_leg = jvmpip.pip_points_jvm(pts, cover, zindex.level, mode=mode)
 
-    rest = src.filter(F.col("_plon").isNull()).drop("_plon", "_plat")
+    rest = src.filter(F.col("_plon").isNull()).drop(*tmp)
     arrow_leg = pip_join(rest, zindex, mode=mode, engine="arrow")
     return jvm_leg.unionByName(arrow_leg)
 

@@ -48,17 +48,19 @@ from .synth import TILE_SCHEMA
 def assign_tiles(docs: DataFrame, zoom: int, lon_col: str = "lon",
                  lat_col: str = "lat") -> DataFrame:
     """Add (zoom, tile_x, tile_y, quadkey) — Google tile convention for
-    x/y (gdal2tiles.py:445-449), Bing quadkey (:451-466). Pure columns."""
+    x/y (gdal2tiles.py:445-449), Bing quadkey (:451-466). Pure columns,
+    added in one projection; existing columns of those names are
+    replaced in place."""
     mx, my = lonlat_to_meters(F.col(lon_col), F.col(lat_col))
     tx, ty_tms = meters_to_tile_tms(mx, my, zoom)
     tx = clamp_tile(tx, zoom)
     ty_tms = clamp_tile(ty_tms, zoom)
-    return (
-        docs.withColumn("zoom", F.lit(zoom))
-        .withColumn("tile_x", tx)
-        .withColumn("tile_y", tms_to_google(ty_tms, zoom))
-        .withColumn("quadkey", quadkey(tx, ty_tms, zoom))
-    )
+    return docs.withColumns({
+        "zoom": F.lit(zoom),
+        "tile_x": tx,
+        "tile_y": tms_to_google(ty_tms, zoom),
+        "quadkey": quadkey(tx, ty_tms, zoom),
+    })
 
 
 # ------------------------------------------------------------------ helpers

@@ -83,6 +83,72 @@ def test_pip_join_plan_has_no_shuffle(spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
+_SPANS = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+
+
+def test_geom_wkt_col_matches_filter_expression(spark):
+    """geom_wkt_col (array_position + get) gives what the first-match
+    filter lambda gave: the first 'geom' span's text, NULL when there
+    is none, when `spans` is NULL or empty, or for NULL elements."""
+    from gdal_spark.joins import geom_wkt_col
+
+    def s(kind, text):
+        return (kind, text, "", 0)
+
+    cases = [
+        ("no_geom", [s("text", "a"), s("media", "b")], None),
+        ("two_geoms", [s("text", "a"), s("geom", "G1"), s("geom", "G2")], "G1"),
+        ("geom_first", [s("geom", "G0"), s("text", "a")], "G0"),
+        ("geom_last", [s("text", "a"), s("media", "b"), s("geom", "GL")], "GL"),
+        ("null_spans", None, None),
+        ("empty", [], None),
+        ("null_elems", [None, (None, "x", "", 0), s("geom", "GN")], "GN"),
+    ]
+    df = spark.createDataFrame([(c, sp) for c, sp, _ in cases], f"case string, spans {_SPANS}")
+    old = F.element_at(F.filter(F.col("spans"), lambda x: x["kind"] == F.lit("geom")), 1)["text"]
+    got = {r.case: (r.new, r.old) for r in df.select("case", geom_wkt_col().alias("new"),
+                                                      old.alias("old")).collect()}
+    assert got == {c: (exp, exp) for c, _, exp in cases}
+
+
+def test_pip_join_fused_plan_is_codegen(spark, tmp_path):
+    """No lambda is left in the fused join, and the Project that feeds
+    the Arrow UDF (the span lookup) runs inside the scan's
+    whole-stage-codegen stage."""
+    synth.documents_df(spark, 200).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    out = pip_join_full(spark, docs, synth.zones_np(N_ZONES), mode="first")
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan.lower()
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    feed = lines[i + 1].strip()
+    assert feed.startswith("+- *(") and "Project" in feed, plan
+
+
+@pytest.mark.parametrize("mode", ["first", "all"])
+def test_pip_join_output_columns(spark, mode):
+    """The output keeps the input's columns in order, then geom_wkt,
+    lon, lat, zone_id, eas_id; an input lon/lat is replaced in place by
+    the representative point, not duplicated."""
+    from gdal_spark.index import zone_index
+
+    docs = synth.documents_df(spark, 200)
+    zidx = zone_index(spark, synth.zones_np(N_ZONES))
+    plain = pip_join(docs, zidx, mode=mode)
+    assert plain.columns == ["doc_id", "spans", "geom_wkt", "lon", "lat", "zone_id", "eas_id"]
+    stale = docs.withColumns({"lon": F.lit(999.0), "lat": F.lit(-999.0)})
+    out = pip_join(stale, zidx, mode=mode)
+    assert out.columns == ["doc_id", "spans", "lon", "lat", "geom_wkt", "zone_id", "eas_id"]
+    cols = ["doc_id", "lon", "lat", "zone_id", "eas_id"]
+
+    def rows(df):
+        return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
+    assert rows(out) == rows(plain)
+
+
 def test_pip_join_jvm_engine_parity(spark):
     """engine='auto' (pure-JVM Catalyst leg for points + Arrow leg for
     the polygon minority, jvmpip.py) must produce IDENTICAL rows to the

@@ -33,17 +33,20 @@ def _oracle_tile(lon: float, lat: float, zoom: int):
     tx = int(math.ceil(px / 256.0) - 1)
     ty = int(math.ceil(py / 256.0) - 1)  # TMS
     ty_google = (2**zoom - 1) - ty
+    return tx, ty_google, _oracle_quadkey(tx, ty_google, zoom)
+
+
+def _oracle_quadkey(tx: int, ty_google: int, zoom: int) -> str:
     quadkey = ""
-    ty_q = (2**zoom - 1) - ty
     for i in range(zoom, 0, -1):
         digit = 0
         mask = 1 << (i - 1)
         if (tx & mask) != 0:
             digit += 1
-        if (ty_q & mask) != 0:
+        if (ty_google & mask) != 0:
             digit += 2
         quadkey += str(digit)
-    return tx, ty_google, quadkey
+    return quadkey
 
 
 def test_tile_assignment_golden(spark):
@@ -72,6 +75,56 @@ def test_tile_assignment_is_pure_codegen(spark):
     out = tiling.assign_tiles(docs.select("doc_id", "lon", "lat"), ZOOM)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # no shuffle: pure map arithmetic
+
+
+def _tile_centre(tx: int, ty_google: int, zoom: int) -> tuple[float, float]:
+    n = 2**zoom
+    lat = math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * (ty_google + 0.5) / n))))
+    return (tx + 0.5) / n * 360.0 - 180.0, lat
+
+
+@pytest.mark.parametrize("zoom", [1, 12, 23])
+def test_quadkey_across_zooms(spark, zoom):
+    """The Morton quadkey equals the reference's per-bit digits at low,
+    mid and high zoom: on the four corner tiles (tx/ty at 0 and 2^z-1),
+    on the domain edges (lon +-180, lat +-85.05, where assign_tiles
+    clamps the tile) and on a random sample."""
+    hi = 2**zoom - 1
+    corners = [(x, y) for x in (0, hi) for y in (0, hi)]
+    pts = [_tile_centre(x, y, zoom) for x, y in corners]
+    pts += [(lon, lat) for lon in (-180.0, 180.0) for lat in (-85.05, 0.0, 85.05)]
+    rng = np.random.default_rng(zoom)
+    pts += list(zip(rng.uniform(-180, 180, 200), rng.uniform(-85.05, 85.05, 200)))
+    df = spark.createDataFrame(
+        [(i, float(lon), float(lat)) for i, (lon, lat) in enumerate(pts)],
+        "i int, lon double, lat double",
+    )
+    got = tiling.assign_tiles(df, zoom).orderBy("i").collect()
+    assert [(r.tile_x, r.tile_y) for r in got[:4]] == corners
+    for r in got:
+        tx, ty, _ = _oracle_tile(r.lon, r.lat, zoom)
+        tx, ty = min(max(tx, 0), hi), min(max(ty, 0), hi)
+        assert (r.tile_x, r.tile_y, r.quadkey) == (tx, ty, _oracle_quadkey(tx, ty, zoom)), r.i
+
+
+def test_quadkey_zoom0_is_empty(spark):
+    df = spark.createDataFrame([(-180.0, -85.05), (0.0, 0.0), (180.0, 85.05)], "lon double, lat double")
+    got = tiling.assign_tiles(df, 0).collect()
+    assert [(r.tile_x, r.tile_y, r.quadkey) for r in got] == [(0, 0, "")] * 3
+
+
+def test_quadkey_expression_size_is_flat_in_zoom(spark):
+    """The quadkey is one Morton code, not one expression per digit:
+    its expression text at zoom 24 is within a few literal digits of
+    its text at zoom 4."""
+    from pyspark.sql import functions as F
+
+    from gdal_spark.cells import quadkey
+
+    def size(z):
+        return len(str(quadkey(F.col("tx"), F.col("ty"), z)))
+
+    assert size(24) - size(4) <= 16
 
 
 # --------------------------------------------------------------- checksums
