@@ -72,21 +72,6 @@ def _q_pip_zone_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "zone_id", "eas_id")
 
 
-def _q_pip_zone_join_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure-JVM PIP leg (jvmpip.py): broadcast cover DataFrame join
-    + Catalyst higher-order-function ray cast — zero Arrow, zero Python
-    workers. Same oracle as pip_zone_join: the two engines must agree
-    row-for-row (the ray cast is expression-for-expression the numpy
-    kernel's arithmetic)."""
-    from gdal_spark import jvmpip
-
-    d = DRV.with_derived_points(_read(spark, sf_dir, "documents"))
-    zones = DRV.rect_zone_grid(ZONE_G)
-    zidx = zone_index(spark, zones)
-    out = jvmpip.pip_points_jvm(d, zidx.cover_df(spark), zidx.level, mode="first")
-    return out.select("doc_id", "zone_id", "eas_id")
-
-
 def _q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GeoJSONSeq source (ogr/ogrsf_frmts/geojson, RFC 8142 streaming
     form): features serialized in-Spark (to_json), written as a
@@ -7008,7 +6993,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vrt_xml_composite": _q_vrt_xml_composite,
         "vrt_xml_derived": _q_vrt_xml_derived,
         "pip_zone_join": _q_pip_zone_join,
-        "pip_zone_join_jvm": _q_pip_zone_join_jvm,
         "pip_zone_join_wkb": _q_pip_zone_join_wkb,
         "streaming_pip": _q_streaming_pip,
         "geojson_roundtrip": _q_geojson_roundtrip,
@@ -8031,7 +8015,6 @@ def _oracle_sql_static() -> dict[str, str]:
         "csv_layer_roundtrip":
             "SELECT doc_id, lang, source, n_chars FROM documents",
         "pip_zone_join": _PIP_SQL,
-        "pip_zone_join_jvm": _PIP_SQL,
         "pip_zone_join_wkb": _PIP_SQL,
         "tile_assign": _TILE_SQL,
         "knn_top5": _KNN_SQL,

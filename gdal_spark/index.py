@@ -134,17 +134,6 @@ class ZoneIndex:
     def __init__(self, bc, level: int):
         self.bc = bc
         self.level = level
-        self._cover_df = None
-
-    def cover_df(self, spark: SparkSession):
-        """The same cover as a (cell, cands) DataFrame for the pure-JVM
-        join leg (jvmpip.py) — built once per index, broadcast by the
-        join."""
-        if self._cover_df is None:
-            from . import jvmpip
-
-            self._cover_df = jvmpip.cover_df(spark, self.bc.value)
-        return self._cover_df
 
 
 def zone_index(

@@ -23,9 +23,8 @@ it (SURVEY.md §1.1).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -265,12 +264,7 @@ def _make_pip_udf(bc, level: int, mode: str, prepared: bool):
     return pip_fused
 
 
-def pip_join(
-    docs: DataFrame,
-    zindex: IX.ZoneIndex,
-    mode: str = "first",
-    engine: str = "arrow",
-) -> DataFrame:
+def pip_join(docs: DataFrame, zindex: IX.ZoneIndex, mode: str = "first") -> DataFrame:
     """Join documents to zones by geometric intersection.
 
     docs: the raw document table (spans nested) OR extract_geom output.
@@ -279,24 +273,13 @@ def pip_join(
       when none — OGR SQL LEFT JOIN semantics (ogr_sql_dialect.rst:490).
     mode 'all': one row per intersecting pair, NULL row when none —
       overlay-join semantics (generic/ogrlayer.cpp:2062).
-    engine 'arrow' (default): everything through the one Arrow UDF.
-      'auto': point documents run the pure-JVM Catalyst leg (jvmpip.py
-      — zero Arrow/Python on the hot path), the polygon minority keeps
-      the Arrow kernel; legs are unioned. Both produce identical rows
-      (tests assert it). MEASURED (8M docs, local[32], interleaved
-      reps): arrow best 5.4 s / auto best 10.9 s — Catalyst's
-      higher-order-function lambdas evaluate interpreted per vertex,
-      which costs more than the Arrow IPC they avoid, so the Arrow
-      kernel remains the default; 'auto' exists for clusters where
-      Python workers are unavailable or their memory is the constraint.
+
+    One engine: one Arrow UDF over the broadcast cover, map-only, no
+    shuffle. POINT rows arrive as coordinates parsed by JVM codegen
+    (`_with_point_parse`); any other geometry ships its WKT.
     """
     if mode not in ("first", "all"):
         raise ValueError(f"mode must be 'first' or 'all', got {mode}")
-    if engine not in ("auto", "arrow"):
-        raise ValueError(f"engine must be 'auto' or 'arrow', got {engine}")
-
-    if engine == "auto" and "gx" not in docs.columns:
-        return _pip_join_hybrid(docs, zindex, mode)
 
     if "gx" in docs.columns:  # pre-extracted geometry path
         src, prepared, args = docs, True, ("lon", "lat", "gx", "gy")
@@ -309,40 +292,3 @@ def pip_join(
         return j
     ex = j.select("*", F.explode_outer("_matches").alias("_e"))
     return _splice(ex, "_e", ["zone_id", "eas_id"], drop=("_matches",))
-
-
-def _pip_join_hybrid(docs: DataFrame, zindex: IX.ZoneIndex, mode: str) -> DataFrame:
-    """engine='auto': point rows (WKT matches the POINT regexp, parsed
-    by JVM codegen) take the pure-JVM Catalyst leg — broadcast cover
-    join + expression ray cast, zero Arrow/Python (jvmpip.py); the
-    polygon/malformed minority takes the fused Arrow kernel. Legs are
-    unioned by name; both are map-only over a broadcast, so the
-    document side still never shuffles. The source is scanned twice
-    (once per leg) — at 95% points that trades one cheap extra codegen
-    scan for a 20x cut in Arrow IPC traffic, the measured 8->32-core
-    bottleneck (BENCH/BASELINE.md)."""
-    from . import jvmpip
-
-    src = _with_point_parse(docs)
-    tmp = ("_plon", "_plat", "_pwkt")
-    pts = src.filter(F.col("_plon").isNotNull()).withColumns(
-        {"lon": F.col("_plon"), "lat": F.col("_plat")}
-    ).drop(*tmp)
-    cover = zindex.cover_df(docs.sparkSession)
-    jvm_leg = jvmpip.pip_points_jvm(pts, cover, zindex.level, mode=mode)
-
-    rest = src.filter(F.col("_plon").isNull()).drop(*tmp)
-    arrow_leg = pip_join(rest, zindex, mode=mode, engine="arrow")
-    return jvm_leg.unionByName(arrow_leg)
-
-
-def pip_join_full(
-    spark: SparkSession,
-    docs: DataFrame,
-    zones_pdf: pd.DataFrame,
-    level: int | None = None,
-    mode: str = "first",
-) -> DataFrame:
-    """Convenience: build + broadcast the packed cover, fused join."""
-    zidx = IX.zone_index(spark, zones_pdf, level)
-    return pip_join(docs, zidx, mode=mode)

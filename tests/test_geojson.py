@@ -69,3 +69,41 @@ def test_write_read_roundtrip(spark, tmp_path):
     assert back[1]["geom_wkt"] == "POINT(1.5000000 2.5000000)"
     assert back[2]["geom_wkt"].startswith("POLYGON((")
     assert back[1]["properties"]["name"] == "a"
+
+
+def test_geojson_seq_line_number_fallback_is_global(spark, tmp_path):
+    """Features WITHOUT ids must get their global line number as fid —
+    partition offsets, not per-partition restarts."""
+    path = str(tmp_path / "feats")
+    feats = [
+        json.dumps({"type": "Feature",
+                    "geometry": {"type": "Point", "coordinates": [i, 0]},
+                    "properties": {}}, separators=(",", ":"))
+        for i in range(97)
+    ]
+    spark.createDataFrame([(f,) for f in feats], ["value"]) \
+        .repartition(5).write.mode("overwrite").text(path)
+    out = read_geojson_seq(spark, path)
+    fids = sorted(r["fid"] for r in out.select("fid").collect())
+    assert fids == list(range(97))  # a restart would duplicate low fids
+
+
+def test_geojson_string_id_kept_as_attribute(spark, tmp_path):
+    """RFC 7946 string ids must not crash the task; non-integral ids
+    fall back to the sequential fid and survive in properties (the
+    reference driver's integral-id-only FID promotion)."""
+    path = str(tmp_path / "feats")
+    feats = [
+        json.dumps({"type": "Feature", "id": "abc",
+                    "geometry": {"type": "Point", "coordinates": [1, 2]},
+                    "properties": {"v": "x"}}),
+        json.dumps({"type": "Feature", "id": "42",
+                    "geometry": {"type": "Point", "coordinates": [3, 4]},
+                    "properties": {}}),
+    ]
+    spark.createDataFrame([(f,) for f in feats], ["value"]) \
+        .coalesce(1).write.mode("overwrite").text(path)
+    rows = {tuple(sorted(r["properties"].items())): r["fid"]
+            for r in read_geojson_seq(spark, path).collect()}
+    assert rows[(("id", "abc"), ("v", "x"))] == 0  # fallback line number
+    assert 42 in rows.values()  # integral string id promotes to fid

@@ -12,7 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark import synth
-from gdal_spark.joins import pip_join, pip_join_full
+from gdal_spark.index import zone_index
+from gdal_spark.joins import pip_join
 
 from .oracle import pip_oracle, span_tuples
 
@@ -23,7 +24,7 @@ N_ZONES = 16
 def _result(spark, mode):
     docs = synth.documents_df(spark, N_DOCS)
     zones = synth.zones_np(N_ZONES)
-    out = pip_join_full(spark, docs, zones, mode=mode)
+    out = pip_join(docs, zone_index(spark, zones), mode=mode)
     return out.select("doc_id", "zone_id", "eas_id", "spans").toPandas()
 
 
@@ -77,7 +78,7 @@ def test_pip_join_plan_has_no_shuffle(spark):
     (the fused parse+locate+match UDF)."""
     docs = synth.documents_df(spark, 100)
     zones = synth.zones_np(N_ZONES)
-    out = pip_join_full(spark, docs, zones, mode="first")
+    out = pip_join(docs, zone_index(spark, zones), mode="first")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert plan.count("ArrowEvalPython") == 1
@@ -117,7 +118,7 @@ def test_pip_join_fused_plan_is_codegen(spark, tmp_path):
     whole-stage-codegen stage."""
     synth.documents_df(spark, 200).write.parquet(str(tmp_path / "docs"))
     docs = spark.read.parquet(str(tmp_path / "docs"))
-    out = pip_join_full(spark, docs, synth.zones_np(N_ZONES), mode="first")
+    out = pip_join(docs, zone_index(spark, synth.zones_np(N_ZONES)), mode="first")
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "lambdafunction" not in plan.lower()
@@ -132,8 +133,6 @@ def test_pip_join_output_columns(spark, mode):
     """The output keeps the input's columns in order, then geom_wkt,
     lon, lat, zone_id, eas_id; an input lon/lat is replaced in place by
     the representative point, not duplicated."""
-    from gdal_spark.index import zone_index
-
     docs = synth.documents_df(spark, 200)
     zidx = zone_index(spark, synth.zones_np(N_ZONES))
     plain = pip_join(docs, zidx, mode=mode)
@@ -149,45 +148,10 @@ def test_pip_join_output_columns(spark, mode):
     assert rows(out) == rows(plain)
 
 
-def test_pip_join_jvm_engine_parity(spark):
-    """engine='auto' (pure-JVM Catalyst leg for points + Arrow leg for
-    the polygon minority, jvmpip.py) must produce IDENTICAL rows to the
-    default Arrow kernel in both modes — the ray cast is
-    expression-for-expression the same IEEE-754 arithmetic, so this is
-    exact equality, not approximate."""
-    docs = synth.documents_df(spark, N_DOCS)
-    zones = synth.zones_np(N_ZONES)
-    from gdal_spark.index import zone_index
-
-    zidx = zone_index(spark, zones)
-    for mode in ("first", "all"):
-        cols = ["doc_id", "lon", "lat", "zone_id", "eas_id"]
-        a = sorted(map(tuple, pip_join(docs, zidx, mode=mode, engine="arrow").select(*cols).collect()))
-        b = sorted(map(tuple, pip_join(docs, zidx, mode=mode, engine="auto").select(*cols).collect()))
-        assert a == b
-        assert len(a) >= N_DOCS
-
-
-def test_pip_points_jvm_no_python_in_plan(spark):
-    """The JVM leg's physical plan must contain no Python/Arrow eval
-    node — that is its entire reason to exist."""
-    from gdal_spark import derived as DRV
-    from gdal_spark import jvmpip
-    from gdal_spark.index import zone_index
-
-    docs = spark.range(0, 1000).select(
-        (F.col("id")).alias("doc_id")
-    )
-    docs = DRV.with_derived_points(docs)
+def test_pip_join_rejects_unknown_mode(spark):
     zidx = zone_index(spark, synth.zones_np(N_ZONES))
-    out = jvmpip.pip_points_jvm(docs, zidx.cover_df(spark), zidx.level)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    got = out.groupBy().agg(
-        F.count("*").alias("n"), F.count("zone_id").alias("m")
-    ).collect()[0]
-    assert got["n"] == 1000 and got["m"] > 0
+    with pytest.raises(ValueError, match="mode must be 'first' or 'all'"):
+        pip_join(synth.documents_df(spark, 10), zidx, mode="any")
 
 
 # zone 5 and zone 2 overlap on x in [5, 10]: listed out of zone_id order
@@ -247,8 +211,6 @@ def test_pip_adapter_paths_match_oracle(spark, mode):
     give the oracle's rows in the oracle's order: per doc, matches in
     zone_id order, and one NULL row for a doc that matches nothing,
     has no geometry, or has an empty one."""
-    from gdal_spark.index import zone_index
-
     zones, inputs = _adapter_inputs(spark)
     exp = pip_oracle(pd.DataFrame(_DOCS, columns=["doc_id", "geom_wkt"]), zones, mode)
     exp = [(d, None if pd.isna(z) else int(z), None if pd.isna(e) else int(e))
