@@ -7,15 +7,22 @@ queries()     — one entry per implemented operator family (SURVEY.md §2);
                 spatial queries run the REAL engine machinery (cell
                 cover + broadcast join + Arrow UDF) while their oracles
                 are independent closed-form SQL.
-oracle_sql()  — DuckDB ANSI SQL equivalents. Omitted for genuinely
-                non-SQL ops (minhash/simhash/LSH/raster kernels), which
-                the driver records as rows-only checks.
+oracle_sql()  — DuckDB ANSI SQL equivalents, one per query. Non-SQL ops
+                (minhash/simhash/LSH/raster kernels) answer to literal
+                VALUES built by the single-node references in localref.py.
+
+Both are views over REGISTRY, the one table that declares each query
+with its builder, its oracle (built lazily; oracle(name) builds one)
+and whether bench.py's timed suite runs it.
 """
 
 from __future__ import annotations
 
 import math
+import sys
 from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +39,8 @@ from gdal_spark.functions import text as TX
 from gdal_spark.index import zone_index
 from gdal_spark.joins import pip_join
 from gdal_spark.knn import knn_join
+
+import localref
 
 ZOOM = 12
 ZONE_G = 8
@@ -6936,369 +6945,6 @@ def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("long").alias("n_chars"))
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "csv_layer_roundtrip": _q_csv_roundtrip,
-        "gdalinfo_report": _q_gdalinfo_report,
-        "ogrinfo_zones": _q_ogrinfo_zones,
-        "cog_roundtrip": _q_cog_roundtrip,
-        "aaigrid_roundtrip": _q_aaigrid_roundtrip,
-        "xyz_roundtrip": _q_xyz_roundtrip,
-        "webtiles_xyz": _q_webtiles_xyz,
-        "ehdr_roundtrip": _q_ehdr_roundtrip,
-        "bmp_roundtrip": _q_bmp_roundtrip,
-        "gif_roundtrip": _q_gif_roundtrip,
-        "pnm_roundtrip": _q_pnm_roundtrip,
-        "fits_roundtrip": _q_fits_roundtrip,
-        "tga_roundtrip": _q_tga_roundtrip,
-        "aig_cover_ref": _q_aig_cover_ref,
-        "pds_cover_ref": _q_pds_cover_ref,
-        "pcidsk_roundtrip": _q_pcidsk_roundtrip,
-        "tab_all_geoms": _q_tab_all_geoms,
-        "dgn_read": _q_dgn_read,
-        "lcp_cover_ref": _q_lcp_cover_ref,
-        "fast_cover_ref": _q_fast_cover_ref,
-        "s57_read": _q_s57_read,
-        "sdts_cover_ref": _q_sdts_cover_ref,
-        "nitf_cover_ref": _q_nitf_cover_ref,
-        "zmap_sigdem_roundtrip": _q_zmap_sigdem_roundtrip,
-        "tab_attributes": _q_tab_attributes,
-        "isis_cover_ref": _q_isis_cover_ref,
-        "bt_roundtrip": _q_bt_roundtrip,
-        "kro_roundtrip": _q_kro_roundtrip,
-        "rraster_roundtrip": _q_rraster_roundtrip,
-        "hfa_roundtrip": _q_hfa_roundtrip,
-        "saga_roundtrip": _q_saga_roundtrip,
-        "lan_roundtrip": _q_lan_roundtrip,
-        "surfer_roundtrip": _q_surfer_roundtrip,
-        "rst_roundtrip": _q_rst_roundtrip,
-        "ers_roundtrip": _q_ers_roundtrip,
-        "dted_roundtrip": _q_dted_roundtrip,
-        "srtmhgt_roundtrip": _q_srtmhgt_roundtrip,
-        "cnsdtf_roundtrip": _q_cnsdtf_roundtrip,
-        "mdreader_scenes": _q_mdreader_scenes,
-        "tfat_roundtrip": _q_tfat_roundtrip,
-        "cog_validate": _q_cog_validate,
-        "transform_geolocs": _q_transform_geolocs,
-        "dump_overviews": _q_dump_overviews,
-        "segmentize_lines": _q_segmentize_lines,
-        "envi_roundtrip": _q_envi_roundtrip,
-        "mbtiles_roundtrip": _q_mbtiles_roundtrip,
-        "mbtiles_jpeg_roundtrip": _q_mbtiles_jpeg_roundtrip,
-        "tiff_jpeg_roundtrip": _q_tiff_jpeg_roundtrip,
-        "pgdump_roundtrip": _q_pgdump_roundtrip,
-        "gpx_roundtrip": _q_gpx_roundtrip,
-        "kml_roundtrip": _q_kml_roundtrip,
-        "mif_roundtrip": _q_mif_roundtrip,
-        "vrt_xml_composite": _q_vrt_xml_composite,
-        "vrt_xml_derived": _q_vrt_xml_derived,
-        "pip_zone_join": _q_pip_zone_join,
-        "pip_zone_join_wkb": _q_pip_zone_join_wkb,
-        "streaming_pip": _q_streaming_pip,
-        "geojson_roundtrip": _q_geojson_roundtrip,
-        "netcdf_roundtrip": _q_netcdf_roundtrip,
-        "netcdf4_roundtrip": _q_netcdf4_roundtrip,
-        "grib2_roundtrip": _q_grib2_roundtrip,
-        "grib2_complex_roundtrip": _q_grib2_complex_roundtrip,
-        "grib2_lcc_roundtrip": _q_grib2_lcc_roundtrip,
-        "grib2_ps_roundtrip": _q_grib2_ps_roundtrip,
-        "mvt_roundtrip": _q_mvt_roundtrip,
-        "dxf_roundtrip": _q_dxf_roundtrip,
-        "ogr_tindex": _q_ogr_tindex,
-        "fgb_roundtrip": _q_fgb_roundtrip,
-        "sqlite_roundtrip": _q_sqlite_roundtrip,
-        "ogr_dissolve": _q_ogr_dissolve,
-        "netcdf_raster": _q_netcdf_raster,
-        "fgb_bbox_filter": _q_fgb_bbox_filter,
-        "gml_roundtrip": _q_gml_roundtrip,
-        "osm_nodes": _q_osm_nodes,
-        "osm_lines": _q_osm_lines,
-        "lineref_subline": _q_lineref_subline,
-        "lineref_pickets": _q_lineref_pickets,
-        "gdal_create": _q_gdal_create,
-        "identify": _q_identify,
-        "lineref_repers": _q_lineref_repers,
-        "lineref_coord": _q_lineref_coord,
-        "lineref_pos": _q_lineref_pos,
-        "tile_assign": _q_tile_assign,
-        "knn_top5": _q_knn,
-        "knn_large": _q_knn_large,
-        "extent_docs": _q_extent,
-        "ogr_where_ci": _q_ogr_where_ci,
-        "ogr_like": _q_ogr_like,
-        "ogr_in_between": _q_ogr_in_between,
-        "ogr_summary": _q_ogr_summary,
-        "ogr_distinct_ci": _q_ogr_distinct_ci,
-        "ogr_orderby_limit_offset": _q_ogr_orderby_limit_offset,
-        "ogr_first_match_join": _q_ogr_first_match_join,
-        "ogr_union_all": _q_ogr_union_all,
-        "ogr_intersect": _q_ogr_intersect,
-        "ogr_except": _q_ogr_except,
-        "ogr_scalar_funcs": _q_ogr_scalar_funcs,
-        "ogr_avg_timestamp": _q_ogr_avg_timestamp,
-        "json_props": _q_json_props,
-        "window_rank": _q_window_rank,
-        "dedup_exact": _q_dedup_exact,
-        "token_count": _q_token_count,
-        "quality_score": _q_quality_score,
-        "lang_id": _q_lang_id,
-        "text_scrub_pii": _q_text_scrub,
-        "span_scrub": _q_span_scrub,
-        "text_repetition": _q_text_repetition,
-        "gopher_filter": _q_gopher_filter,
-        "dup_spans": _q_dup_spans,
-        "sample_split": _q_sample_split,
-        "stratified_sample": _q_stratified_sample,
-        "domain_resample": _q_domain_resample,
-        "ogrmerge_single": _q_ogrmerge,
-        "bpe_tokenize": _q_bpe_tokenize,
-        "paragraph_dedup": _q_paragraph_dedup,
-        "url_canonical_dedup": _q_url_canonical,
-        "media_manifest": _q_media_manifest,
-        "url_blocklist": _q_url_blocklist,
-        "pack_sequences": _q_pack_sequences,
-        "chunk_documents": _q_chunk_documents,
-        "minhash_pairs": _q_minhash_pairs,
-        "dedup_groups": _q_dedup_groups,
-        "decontaminate": _q_decontaminate,
-        "salted_join": _q_salted_join,
-        "simhash_table": _q_simhash_table,
-        "simhash_pairs": _q_simhash_pairs,
-        "geometry_curves": _q_geometry_curves,
-        "geometry_makevalid_bowtie": _q_geometry_makevalid_bowtie,
-        "ann_cosine_topk": _q_ann_cosine_topk,
-        "ann_lsh_topk": _q_ann_lsh_topk,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        "raster_checksums": _q_raster_checksums,
-        "geotiff_roundtrip": _q_geotiff_roundtrip,
-        "geotiff_byte_ref": _q_geotiff_byte_ref,
-        "shapefile_poly_ref": _q_shapefile_poly_ref,
-        "shapefile_roundtrip": _q_shapefile_roundtrip,
-        "gpkg_byte_ref": _q_gpkg_byte_ref,
-        "gpkg_roundtrip": _q_gpkg_roundtrip,
-        "gpkg_tiles_roundtrip": _q_gpkg_tiles_roundtrip,
-        "enhance_equalize_checksums": _q_enhance_equalize,
-        "lut_checksums": _q_apply_lut,
-        "hsv_merge_checksums": _q_hsv_merge,
-        "val_repl_checksums": _q_val_repl,
-        "fft_magphase": _q_fft_magphase,
-        "fft_roundtrip": _q_fft_roundtrip,
-        "graticule_segments": _q_graticule_segments,
-        "graticule_lines": _q_graticule_lines,
-        "junction_table": _q_junction_table,
-        "gcps2wld": _q_gcps2wld,
-        "classify_checksums": _q_classify,
-        "rat_roundtrip": _q_rat_roundtrip,
-        "attachpct_checksums": _q_attachpct,
-        "nearblack_checksums": _q_nearblack,
-        "mask_band_checksums": _q_mask_band,
-        "footprint": _q_footprint,
-        "overview_select": _q_overview_select,
-        "translate_scale": _q_translate_scale,
-        "gdal_edit_gt": _q_gdal_edit,
-        "gdalmove_gt": _q_gdalmove,
-        "checkpoint_lineage": _q_checkpoint,
-        "gdal_calc_checksums": _q_gdal_calc,
-        "vrt_separate_checksums": _q_vrt_separate,
-        "cog_plan": _q_cog_plan,
-        "overview_checksums": _q_overview_checksums,
-        "overview_mode_checksums": _q_overview_kernel("mode", 2),
-        "overview_gauss_checksums": _q_overview_kernel("gauss", 4),
-        "warp_checksums": _q_warp_checksums,
-        "warp_average_checksums": _q_warp_kernel("average", 2.0),
-        "warp_rms_checksums": _q_warp_kernel("rms", 2.0),
-        "warp_max_checksums": _q_warp_kernel("max", 2.0),
-        "warp_lanczos_checksums": _q_warp_kernel("lanczos", 1.5),
-        "warp_mode_checksums": _q_warp_kernel("mode", 2.0),
-        "warp_med_checksums": _q_warp_kernel("med", 2.0),
-        "warp_q1_checksums": _q_warp_kernel("q1", 2.0),
-        "warp_q3_checksums": _q_warp_kernel("q3", 2.0),
-        "warp_cubicspline_checksums": _q_warp_kernel("cubicspline", 0.75),
-        "overview_rms_checksums": _q_overview_kernel("rms", 2),
-        "raster_stats": _q_raster_stats,
-        "raster_histogram": _q_raster_histogram,
-        "windowed_read": _q_windowed_read,
-        "retile_checksums": _q_retile_checksums,
-        "overview_cubic_checksums": _q_overview_conv("cubic", 4),
-        "overview_lanczos_checksums": _q_overview_conv("lanczos", 4),
-        "overlay_intersection": _q_overlay_intersection,
-        "overlay_union": _q_overlay_union,
-        "overlay_symdifference": _q_overlay_symdiff,
-        "overlay_update": _q_overlay_update,
-        "overlay_concave": _q_overlay_concave,
-        "overlay_clip": _q_overlay_clip,
-        "overlay_erase": _q_overlay_erase,
-        "overlay_identity": _q_overlay_identity,
-        "geometry_functions": _q_geometry_functions,
-        "geometry_segmentize": _q_geometry_segmentize,
-        "geometry_explode": _q_geometry_explode,
-        "lineref": _q_lineref,
-        "lineref_create": _q_lineref_create,
-        "geometry_wrapdateline": _q_geometry_wrapdateline,
-        "geometry_predicates": _q_geometry_predicates,
-        "geometry_boolean": _q_geometry_boolean,
-        "geometry_constructive": _q_geometry_constructive,
-        "rasterize_z": _q_rasterize_z,
-        "rasterize_lines_z": _q_rasterize_lines_z,
-        "dem_igor_checksums": _q_hillshade_igor,
-        "mdarray_view": _q_mdarray_view,
-        "mdarray_unscale": _q_mdarray_unscale,
-        "mdim_translate": _q_mdim_translate,
-        "mdarray_transpose": _q_mdarray_transpose,
-        "mdarray_stats": _q_mdarray_stats,
-        "mdarray_mask": _q_mdarray_mask,
-        "mdarray_classic_checksums": _q_mdarray_classic,
-        "mdarray_roundtrip": _q_mdarray_roundtrip,
-        "streaming_dedup": _q_streaming_dedup,
-        "graph_ksp": _q_graph_ksp,
-        "srsinfo_report": _q_srsinfo,
-        "vshift_checksums": _q_vshift_checksums,
-        "surf_gcps": _q_surf_gcps,
-        "streaming_window": _q_streaming_window,
-        "ogr_style": _q_ogr_style,
-        "ogr2ogr_translate": _q_ogr2ogr_translate,
-        "compression_ratio": _q_compression_ratio,
-        "dedup_keep_best": _q_dedup_keep_best,
-        "cutline_blend": _q_cutline_blend,
-        "overlay_concave_wkt": _q_overlay_concave_wkt,
-        "rasterize_counts": _q_rasterize_counts,
-        "rasterize_invert": _q_rasterize_invert,
-        "rasterize_alltouched": _q_rasterize_alltouched,
-        "rasterize_add": _q_rasterize_add,
-        "raster_locate": _q_raster_locate,
-        "hstore_get": _q_hstore,
-        "embed_neardup": _q_embed_neardup,
-        "kmeans_embeddings": _q_kmeans_embeddings,
-        "semdedup_pairs": _q_semdedup_pairs,
-        "idw_grid": _q_idw_grid,
-        "grid_nearest": _q_grid_kernel("nearest"),
-        "grid_invdistnn": _q_grid_kernel("invdistnn"),
-        "grid_average": _q_grid_kernel("average"),
-        "grid_count": _q_grid_kernel("count"),
-        "grid_avgdist": _q_grid_kernel("average_distance"),
-        "grid_avgdist_pts": _q_grid_kernel("average_distance_pts"),
-        "grid_linear": _q_grid_linear,
-        "grid_ellipse": _q_grid_ellipse,
-        "grid_range": _q_grid_kernel("range"),
-        "contour_polylines": _q_contour_polylines,
-        "color_relief_checksums": _q_color_relief,
-        "jaccard_dedup": _q_jaccard_dedup,
-        "sql_dialect": _q_sql_dialect,
-        "ogr_sql_text": _q_ogr_sql_text,
-        "ogr_sql_text_agg": _q_ogr_sql_text_agg,
-        "semi_anti_join": _q_semi_anti,
-        "custom_func": _q_custom_func,
-        "ogr_sql_text_union": _q_ogr_sql_text_union,
-        "ogr_sql_special_fields": _q_ogr_sql_special_fields,
-        "ogr_sql_ddl": _q_ogr_sql_ddl,
-        "ogr_sql_spatialfilter": _q_ogr_sql_spatialfilter,
-        "geometry_force": _q_geometry_force,
-        "st_sql_funcs": _q_st_sql_funcs,
-        "ogr_codec": _q_ogr_codec,
-        "gdal2xyz": _q_gdal2xyz,
-        "bm25_rank": _q_bm25_rank,
-        "gdalcompare_stats": _q_gdalcompare,
-        "sqlite_dialect_exec": _q_sqlite_dialect_exec,
-        "ogr_style_query": _q_ogr_style_query,
-        "hstore_text": _q_hstore_text,
-        "tile_index": _q_tile_index,
-        "reproject_3857": _q_reproject_3857,
-        "utm_transform": _q_utm,
-        "mosaic_checksums": _q_mosaic_checksums,
-        "dem_tri_checksums": _q_dem_tri,
-        "dem_aspect_checksums": _q_dem_aspect,
-        "dem_hillshade_md_checksums": _q_hillshade_md,
-        "dem_slope_zt_checksums": _q_dem_slope_zt,
-        "dem_hillshade_checksums": _q_dem_hillshade,
-        "dem_hillshade_comb_checksums": _q_dem_hillshade_comb,
-        "dem_hillshade_zt_checksums": _q_dem_hillshade_zt,
-        "dem_slope_checksums": _q_dem_slope,
-        "dem_slope_pct_checksums": _q_dem_slope_pct,
-        "gcp_transform": _q_gcp_transform,
-        "tps_transform": _q_tps_transform,
-        "rpc_transform": _q_rpc_transform,
-        "cem_transform": _q_cem_transform,
-        "lcc_transform": _q_conic(3347),
-        "warped_layer_conic": _q_warped_layer_conic,
-        "albers_transform": _q_conic(5070),
-        "polar_stereo_transform": _q_conic(3031),
-        "mercator_transform": _q_conic(3395),
-        "sterea_transform": _q_conic(28992),
-        "eqdc_transform": _q_conic(102031),
-        "aeqd_transform": _q_conic(102016),
-        "krovak_transform": _q_conic(5514),
-        "nzmg_transform": _q_nzmg_transform,
-        "geoid_shift": _q_geoid_shift,
-        "laborde_transform": _q_laborde_transform,
-        "sinu_transform": _q_conic(54008),
-        "eqc_transform": _q_conic(4087),
-        "moll_transform": _q_conic(54009),
-        "laea_transform": _q_conic(3035),
-        "cea_transform": _q_conic(6933),
-        "eqearth_transform": _q_conic(8857),
-        "hom_swiss_transform": _q_conic(2056),
-        "hom_rso_transform": _q_conic(29873),
-        "nztm_transform": _q_conic(2193),
-        "cassini_transform": _q_conic_mapped(30200),
-        "polyconic_transform": _q_polyconic_transform,
-        "bonne_transform": _q_conic(54024),
-        "ups_north_transform": _q_conic_mapped(5041),
-        "tmso_transform": _q_conic_mapped(2054),
-        "nsidc_ps_north_transform": _q_conic_mapped(3413),
-        "ups_south_transform": _q_conic_mapped(5042),
-        "laea_arctic_transform": _q_conic_mapped(3575),
-        "ease2_north_transform": _q_conic_mapped(6931),
-        "ease2_south_transform": _q_conic_mapped(6932),
-        "miller_transform": _q_conic(54003),
-        "gall_transform": _q_conic(54016),
-        "eckert4_transform": _q_eckert4_transform,
-        "eckert6_transform": _q_conic(54010),
-        "robinson_transform": _q_robinson_transform,
-        "goode_transform": _q_goode_transform,
-        "winkel_transform": _q_winkel_transform,
-        "hammer_transform": _q_conic(54044),
-        "geos_meteosat_transform": _q_conic_mapped(-90360),
-        "geos_goes_transform": _q_conic_mapped(-90750),
-        "crs_to_crs_transform": _q_crs_to_crs,
-        "proj4_import_parity": _q_proj4_import,
-        "wkt_import_parity": _q_wkt_import,
-        "helmert_transform": _q_helmert_transform,
-        "gridshift_transform": _q_gridshift_transform,
-        "ntv2_transform": _q_ntv2_transform,
-        "bng_transform": _q_bng_transform,
-        "nad27_utm_transform": _q_nad27_utm_transform,
-        "pansharpen_checksums": _q_pansharpen,
-        "pixel_functions_checksums": _q_pixel_functions,
-        "pixel_multiband_checksums": _q_pixel_multiband,
-        "pixel_complex_checksums": _q_pixel_complex,
-        "polygonize_regions": _q_polygonize,
-        "polygonize_8conn": _q_polygonize_8conn,
-        "contour_polygons": _q_contour_polygons,
-        "polygonize_wkt": _q_polygonize_wkt,
-        "contour_totals": _q_contour,
-        "span_invariance": _q_span_invariance,
-        "sessionize": _q_sessionize,
-        "graph_sssp": _q_graph_sssp,
-        "graph_sssp_blocked": _q_graph_sssp_blocked,
-        "viewshed_curvature": _q_viewshed_curvature,
-        "contour_interval": _q_contour_interval,
-        "proximity_checksums": _q_proximity,
-        "proximity_full_checksums": _q_proximity_full,
-        "media_thumbnails": _q_media_thumbs,
-        "fillnodata_checksums": _q_fillnodata,
-        "fillnodata_smooth_checksums": _q_fillnodata_smooth,
-        "sieve_checksums": _q_sieve,
-        "viewshed_counts": _q_viewshed,
-        "dither_checksums": _q_dither,
-        "expand_rgb_checksums": _q_expand_rgb,
-        "warp_cutline_checksums": _q_warp_cutline,
-        "warp_reproject_checksums": _q_warp_reproject,
-        "warp_datum_checksums": _q_warp_datum,
-        "ogr_special_fields": _q_special_fields,
-        "layer_merge": _q_layer_merge,
-    }
-
-
 # ============================================================== oracle SQL
 _LON = DRV.DERIVED_LON_SQL
 _LAT = DRV.DERIVED_LAT_SQL
@@ -8010,177 +7656,391 @@ def _cluster_sql(which: str) -> str:
     return CL.semdedup_pairs_sql(k=8, iters=3, threshold=0.4)
 
 
-def _oracle_sql_static() -> dict[str, str]:
-    return {
-        "csv_layer_roundtrip":
-            "SELECT doc_id, lang, source, n_chars FROM documents",
-        "pip_zone_join": _PIP_SQL,
-        "pip_zone_join_wkb": _PIP_SQL,
-        "tile_assign": _TILE_SQL,
-        "knn_top5": _KNN_SQL,
-        "knn_large": _knn_sql(500),
-        "extent_docs": f"""
-            SELECT MIN(lon) AS xmin, MIN(lat) AS ymin,
-                   MAX(lon) AS xmax, MAX(lat) AS ymax
-            FROM (SELECT {_LON} AS lon, {_LAT} AS lat FROM documents)
-        """,
-        "ogr_where_ci": """
-            SELECT c_custkey, c_name, c_acctbal FROM customer
-            WHERE LOWER(c_mktsegment) = LOWER('BUILDING') AND c_acctbal > 1000.0
-        """,
-        "ogr_like": """
-            SELECT p_partkey, p_type, p_brand FROM part
-            WHERE p_type LIKE '%BRASS' OR LOWER(p_brand) LIKE LOWER('brand#1%')
-        """,
-        "ogr_in_between": """
-            SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
-            WHERE l_returnflag IN ('A', 'R')
-              AND l_quantity BETWEEN 10.0 AND 20.0
-              AND l_shipdate IS NOT NULL
-        """,
-        "ogr_summary": """
-            SELECT COUNT(*) AS cnt,
-                   COUNT(DISTINCT l_returnflag) AS cnt_rf,
-                   MIN(l_quantity) AS min_qty,
-                   MAX(l_quantity) AS max_qty,
-                   SUM(l_quantity) AS sum_qty,
-                   ROUND(AVG(l_extendedprice), 4) AS avg_price
-            FROM lineitem
-        """,
-        "ogr_distinct_ci": """
-            SELECT arg_min(lang, doc_id) AS lang FROM documents GROUP BY LOWER(lang)
-        """,
-        "ogr_orderby_limit_offset": """
-            SELECT o_orderkey, o_totalprice FROM orders
-            ORDER BY o_totalprice DESC, o_orderkey ASC
-            LIMIT 10 OFFSET 5
-        """,
-        "ogr_first_match_join": """
-            SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-            FROM customer c LEFT JOIN (
-              SELECT * FROM (
-                SELECT o_custkey, o_orderkey, o_totalprice,
-                       ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
-                FROM orders
-              ) WHERE rn = 1
-            ) o ON c.c_custkey = o.o_custkey
-        """,
-        "ogr_union_all": """
-            SELECT r_regionkey AS key, r_name AS name,
-                   CAST(NULL AS INTEGER) AS regionkey, 'region' AS layer_name
-            FROM region
-            UNION ALL
-            SELECT n_nationkey AS key, n_name AS name,
-                   n_regionkey AS regionkey, 'nation' AS layer_name
-            FROM nation
-        """,
-        "ogr_intersect": """
-            SELECT c_nationkey AS nk FROM customer
-            INTERSECT
-            SELECT n_nationkey AS nk FROM nation WHERE n_regionkey <= 1
-        """,
-        "ogr_except": """
-            SELECT c_nationkey AS nk FROM customer
-            EXCEPT
-            SELECT n_nationkey AS nk FROM nation WHERE n_regionkey <= 1
-        """,
-        "ogr_scalar_funcs": """
-            SELECT n_nationkey,
-                   n_name || '_' || CAST(n_regionkey AS VARCHAR) AS tagged,
-                   RIGHT(n_name, 3) AS tail3,
-                   SUBSTRING(n_name, 2, 3) AS mid3,
-                   CAST(n_regionkey AS DOUBLE) AS rk_dbl
-            FROM nation
-        """,
-        "ogr_avg_timestamp": """
-            SELECT COUNT(*) AS cnt, AVG(FLOOR(epoch(ts))) AS avg_ts_epoch FROM events
-        """,
-        "json_props": """
-            SELECT event_id, json_extract_string(props, '$.k') AS k_val FROM events
-        """,
-        "window_rank": """
-            SELECT event_id, user_id,
-                   ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS rn
-            FROM events
-        """,
-        "dedup_exact": """
-            SELECT doc_id,
-                   doc_id = MIN(doc_id) OVER (
-                     PARTITION BY TRIM(regexp_replace(LOWER(text), '\\s+', ' ', 'g'))
-                   ) AS is_canonical
-            FROM documents
-        """,
-        "token_count": """
-            SELECT doc_id,
-                   LEN(list_filter(regexp_split_to_array(LOWER(text), '\\s+'), x -> x <> '')) AS ntok,
-                   LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS nbpe
-            FROM documents
-        """,
-        "quality_score": _QUALITY_SQL,
-        "text_scrub_pii": r"""
+def _ogrinfo_zones_sql() -> str:
+    zg = DRV.rect_zone_grid(ZONE_G)
+    return localref.values_sql(
+        [(len(zg), round(float(zg.xmin.min()), 6),
+          round(float(zg.ymin.min()), 6),
+          round(float(zg.xmax.max()), 6),
+          round(float(zg.ymax.max()), 6), "POLYGON")],
+        ["feature_count", "xmin", "ymin", "xmax", "ymax", "geometry_type"],
+        ["bigint", "double", "double", "double", "double", "varchar"],
+    )
+
+
+def _poly_ref_sql() -> str:
+    """poly.shp attribute transcription (autotest/ogr/data/poly.dbf —
+    the same literal expectations as autotest/ogr/ogr_sql_test.py)."""
+    rows = list(
+        zip(
+            range(10),
+            [215229.266, 247328.172, 261752.781, 547597.188, 15775.758,
+             101429.977, 268597.625, 1634833.375, -596610.313, 5268.813],
+            [168, 179, 171, 173, 172, 169, 166, 158, 165, 170],
+            ["35043411", "35043423", "35043414", "35043416", "35043415",
+             "35043412", "35043409", "35043369", "35043408", "35043413"],
+        )
+    )
+    return localref.values_sql(
+        rows,
+        ["fid", "area", "eas_id", "prfedea"],
+        ["bigint", "double", "bigint", "varchar"],
+    )
+
+
+def _zone_attrs_sql(fid0: int) -> str:
+    """The rect zone grid's attribute table, fids numbered from fid0."""
+    zr = DRV.rect_zone_grid(ZONE_G).reset_index(drop=True)
+    return localref.values_sql(
+        [
+            (k + fid0, int(r.zone_id), int(r.eas_id), r.prfedea)
+            for k, r in enumerate(zr.itertuples(index=False))
+        ],
+        ["fid", "zone_id", "eas_id", "prfedea"],
+        ["bigint", "bigint", "bigint", "varchar"],
+    )
+
+
+def _zmap_sigdem_sql() -> str:
+    base = localref.sql_raster_checksums_2x2()
+    return (f"SELECT *, 'zmap' AS sink FROM ({base}) UNION ALL "
+            f"SELECT *, 'sigdem' AS sink FROM ({base})")
+
+
+def _ogr_style_query_sql() -> str:
+    from gdal_spark.style import style_param_sql as _sps
+
+    return f"""
+            WITH s AS (
+              SELECT c_custkey,
+                CASE WHEN c_custkey % 2 = 0
+                     THEN 'PEN(c:#FF0000,w:' || CAST(c_custkey % 5 AS VARCHAR)
+                          || 'px);BRUSH(fc:#33AA55)'
+                     ELSE 'SYMBOL(id:ogr-sym-0,s:'
+                          || CAST(c_custkey % 7 AS VARCHAR) || 'pt)'
+                END AS style
+              FROM customer)
+            SELECT c_custkey, style,
+                   {_sps('style', 'PEN', 'w')} AS pen_w,
+                   {_sps('style', 'PEN', 'c')} AS pen_c,
+                   {_sps('style', 'BRUSH', 'fc')} AS brush_fc
+            FROM s WHERE style LIKE 'PEN%'
+        """
+
+
+# ================================================================ registry
+class Query(NamedTuple):
+    """One contract query: the builder that runs it on Spark, its
+    oracle (DuckDB SQL over the same parquet tables, or a zero-argument
+    callable that builds that SQL on demand, most of them single-node
+    reference implementations in localref.py), and whether bench.py's
+    timed operator suite runs it."""
+
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[], str]
+    suite: bool = False
+
+
+# Every contract query, declared once; queries() keeps this order.
+REGISTRY: dict[str, Query] = {
+    "csv_layer_roundtrip": Query(
+        _q_csv_roundtrip,
+        "SELECT doc_id, lang, source, n_chars FROM documents"),
+    "gdalinfo_report": Query(_q_gdalinfo_report, localref.sql_gdalinfo_2x2),
+    "ogrinfo_zones": Query(_q_ogrinfo_zones, _ogrinfo_zones_sql),
+    "cog_roundtrip": Query(_q_cog_roundtrip, localref.sql_cog_checksums),
+    "aaigrid_roundtrip": Query(
+        _q_aaigrid_roundtrip, localref.sql_raster_checksums_2x2),
+    "xyz_roundtrip": Query(
+        _q_xyz_roundtrip, localref.sql_raster_checksums_2x2),
+    "webtiles_xyz": Query(_q_webtiles_xyz, localref.sql_raster_checksums_2x2),
+    "ehdr_roundtrip": Query(
+        _q_ehdr_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+    "bmp_roundtrip": Query(_q_bmp_roundtrip, localref.sql_bmp_checksums),
+    "gif_roundtrip": Query(_q_gif_roundtrip, localref.sql_gif_checksums),
+    "pnm_roundtrip": Query(
+        _q_pnm_roundtrip, localref.sql_raster_checksums_2x2),
+    "fits_roundtrip": Query(
+        _q_fits_roundtrip, localref.sql_raster_checksums_2x2),
+    "tga_roundtrip": Query(_q_tga_roundtrip, localref.sql_bmp_checksums),
+    "aig_cover_ref": Query(
+        _q_aig_cover_ref,
+        "SELECT 'abc3x1' AS raster_id, 1 AS band, 0 AS tile_x,"
+        " 0 AS tile_y, 3 AS checksum, 255.0 AS nodata, -0.5 AS gt0,"
+        " 1.0 AS gt1, 0.5 AS gt3, -1.0 AS gt5"),
+    "pds_cover_ref": Query(
+        _q_pds_cover_ref,
+        "SELECT 'mc02' AS raster_id, 1 AS band, 0 AS tile_x,"
+        " 0 AS tile_y, 47151 AS checksum,"
+        " -10668385.19835e0 AS gt0,"
+        " 926.1152999999999e0 AS gt1,"
+        " 3852176.5903499997e0 AS gt3,"
+        " -926.1152999999999e0 AS gt5"),
+    "pcidsk_roundtrip": Query(
+        _q_pcidsk_roundtrip, localref.sql_raster_checksums_2x2),
+    "tab_all_geoms": Query(
+        _q_tab_all_geoms,
+        "SELECT row_number() OVER () AS fid,"
+        " regexp_extract(WKT, '^[A-Z]+') AS kind,"
+        " len(regexp_extract_all(WKT, '-?[0-9][-0-9.eE]*')) AS ncoords,"
+        " round(list_aggregate(list_transform("
+        "   regexp_extract_all(WKT, '-?[0-9][-0-9.eE]*'),"
+        "   v -> CAST(v AS DOUBLE)), 'sum'), 3) AS coord_sum"
+        " FROM read_csv('/root/reference/autotest/ogr/data/mitab/"
+        "all_geoms.mif.golden.csv', header=true)"),
+    "dgn_read": Query(
+        _q_dgn_read,
+        "SELECT * FROM (VALUES"
+        " (1, 17, 1, 0, 'Demo Text', 'POINT', 2, 4.956),"
+        " (2, 15, 2, 0, NULL, 'LINESTRING', 146, 704.874),"
+        " (3, 6, 2, 83, NULL, 'POLYGON', 10, 38.373),"
+        " (4, 3, 2, 83, NULL, 'LINESTRING', 4, 16.873))"
+        " t(fid, Type, Level, ColorIndex, Text, kind, ncoords,"
+        " coord_sum)"),
+    "lcp_cover_ref": Query(
+        _q_lcp_cover_ref,
+        "SELECT 'farsite' AS raster_id, band, 0 AS zoom, 0 AS tile_x,"
+        " 0 AS tile_y, checksum FROM (VALUES"
+        " (1, 18645), (2, 16431), (3, 18851), (4, 26182),"
+        " (5, 30038), (6, 22077), (7, 30388), (8, 23249))"
+        " t(band, checksum)"),
+    "fast_cover_ref": Query(
+        _q_fast_cover_ref,
+        "SELECT 'hpn' AS raster_id, 1 AS band, 60323 AS checksum,"
+        " 280342.5e0 AS gt0, 15.0e0 AS gt1, 3621457.5e0 AS gt3,"
+        " -15.0e0 AS gt5"),
+    "s57_read": Query(
+        _q_s57_read,
+        "SELECT * FROM (VALUES"
+        " ('COALNE', 1, 30, 427.223e0), ('DEPARE', 4, 130, 1851.525e0),"
+        " ('DEPCNT', 4, 42, 598.207e0), ('LNDARE', 1, 42, 598.106e0),"
+        " ('LNDELV', 2, 14, 199.364e0), ('M_COVR', 1, 36, 512.705e0),"
+        " ('M_NSYS', 1, 36, 512.705e0), ('M_QUAL', 1, 36, 512.705e0),"
+        " ('SBDARE', 2, 88, 1253.256e0), ('SLCONS', 1, 4, 56.966e0),"
+        " ('SLOTOP', 1, 14, 199.368e0), ('SOUNDG', 2, 33, 307.026e0))"
+        " t(layer, n, ncoords, coord_sum)"),
+    "sdts_cover_ref": Query(
+        _q_sdts_cover_ref,
+        "SELECT 'alanson' AS raster_id, 1 AS band, 61672 AS checksum,"
+        " 666015.0e0 AS gt0, 30.0e0 AS gt1, 5040735.0e0 AS gt3,"
+        " -30.0e0 AS gt5"),
+    "nitf_cover_ref": Query(
+        _q_nitf_cover_ref,
+        "SELECT * FROM (VALUES"
+        " ('rgb', 1, 21212), ('rgb', 2, 21053), ('rgb', 3, 21349))"
+        " t(raster_id, band, checksum),"
+        " (SELECT -44.842029478e0 AS gt0, 0.003503401e0 AS gt1,"
+        "  -22.930748299e0 AS gt3, -0.003503401e0 AS gt5) g"),
+    "zmap_sigdem_roundtrip": Query(_q_zmap_sigdem_roundtrip, _zmap_sigdem_sql),
+    "tab_attributes": Query(
+        _q_tab_attributes,
+        "SELECT * FROM (VALUES"
+        " (1, 215229.266, 168, '35043411'),"
+        " (2, 247328.172, 179, '35043423'),"
+        " (3, 261752.781, 171, '35043414'),"
+        " (4, 547597.188, 173, '35043416'),"
+        " (5, 15775.758, 172, '35043415'),"
+        " (6, 101429.977, 169, '35043412'),"
+        " (7, 268597.625, 166, '35043409'),"
+        " (8, 1634833.375, 158, '35043369'),"
+        " (9, 596610.313, 165, '35043408'),"
+        " (10, 5268.813, 170, '35043413'))"
+        " t(fid, area, eas_id, prfedea)"),
+    "isis_cover_ref": Query(
+        _q_isis_cover_ref,
+        "SELECT * FROM (VALUES"
+        " ('arvidson', 1, 0, 0, 0, 382),"
+        " ('isis3_detached', 1, 0, 0, 0, 9978),"
+        " ('isis3_tiled', 1, 0, 0, 0, 42403))"
+        " t(raster_id, band, zoom, tile_x, tile_y, checksum)"),
+    "bt_roundtrip": Query(_q_bt_roundtrip, localref.sql_raster_checksums_2x2),
+    "kro_roundtrip": Query(
+        _q_kro_roundtrip, localref.sql_raster_checksums_2x2),
+    "rraster_roundtrip": Query(
+        _q_rraster_roundtrip, localref.sql_raster_checksums_2x2),
+    "hfa_roundtrip": Query(
+        _q_hfa_roundtrip, localref.sql_raster_checksums_2x2),
+    "saga_roundtrip": Query(
+        _q_saga_roundtrip, localref.sql_raster_checksums_2x2),
+    "lan_roundtrip": Query(
+        _q_lan_roundtrip, localref.sql_raster_checksums_2x2),
+    "surfer_roundtrip": Query(
+        _q_surfer_roundtrip, localref.sql_surfer_checksums),
+    "rst_roundtrip": Query(_q_rst_roundtrip, localref.sql_bmp_checksums),
+    "ers_roundtrip": Query(
+        _q_ers_roundtrip, localref.sql_envi_checksums_2x2_2band),
+    "dted_roundtrip": Query(
+        _q_dted_roundtrip,
+        partial(localref.sql_dem_checksums, 121, 64, "dem_cell"), suite=True),
+    "srtmhgt_roundtrip": Query(
+        _q_srtmhgt_roundtrip,
+        partial(localref.sql_dem_checksums, 1201, 256, "dem_cell"),
+        suite=True),
+    "cnsdtf_roundtrip": Query(
+        _q_cnsdtf_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+    "mdreader_scenes": Query(
+        _q_mdreader_scenes, localref.sql_mdreader_scenes, suite=True),
+    "tfat_roundtrip": Query(
+        _q_tfat_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+    "cog_validate": Query(_q_cog_validate, """
+            SELECT * FROM (VALUES
+              ('plain', 'WARNING', 'The file is greater than 512xH or ' ||
+               'Wx512, it is recommended to include internal overviews'),
+              ('ext', 'ERROR', 'Overviews found in external .ovr file. ' ||
+               'They should be internal')
+            ) AS t(file, severity, message)
+        """, suite=True),
+    "transform_geolocs": Query(
+        _q_transform_geolocs, localref.sql_transform_geolocs, suite=True),
+    "dump_overviews": Query(
+        _q_dump_overviews, localref.sql_dump_overviews, suite=True),
+    "segmentize_lines": Query(_q_segmentize_lines, f"""
             WITH b AS (
-              SELECT doc_id, SUBSTR(text, 1, 40) AS t
-              FROM documents WHERE doc_id < 400
-            ), c AS (
-              SELECT doc_id,
-                     CONCAT(t, ' mail user', CAST(doc_id AS VARCHAR),
-                            '@example.com', ' call +1 555-000-',
-                            CAST(doc_id AS VARCHAR), ' from 10.0.0.',
-                            CAST(doc_id % 200 AS VARCHAR)) AS body
+              SELECT doc_id, {_LON} AS lon, {_LAT} AS lat,
+                     1.0 + (doc_id % 5) AS dx, 0.7 AS dy
+              FROM documents WHERE doc_id < 1500
+            ), k AS (
+              SELECT *,
+                CASE WHEN (dx*dx + dy*dy) - 2.25 > 2.25e-5
+                     THEN CAST(FLOOR(SQRT((dx*dx + dy*dy) / 2.25) - 0.01)
+                               AS INTEGER)
+                     ELSE 0 END AS n
               FROM b
             )
+            -- segmentize() canonicalizes direction: x0 < x1 always
+            -- holds here, so the kernel works from the FAR endpoint
+            -- (x1 + (n+1-j)*(x0-x1)/(n+1)) — mirror that association
+            -- exactly for bit-equal doubles
+            SELECT doc_id, CAST(j AS BIGINT) AS j,
+                   ROUND(CASE WHEN j = 0 THEN lon
+                              WHEN j = n + 1 THEN lon + dx
+                              ELSE (lon + dx) + (n + 1 - j)
+                                   * (lon - (lon + dx)) / (n + 1)
+                         END, 5) AS x,
+                   ROUND(CASE WHEN j = 0 THEN lat
+                              WHEN j = n + 1 THEN lat + dy
+                              ELSE (lat + dy) + (n + 1 - j)
+                                   * (lat - (lat + dy)) / (n + 1)
+                         END, 5) AS y
+            FROM k, UNNEST(generate_series(0, n + 1)) AS t(j)
+        """, suite=True),
+    "envi_roundtrip": Query(
+        _q_envi_roundtrip, localref.sql_envi_checksums_2x2_2band, suite=True),
+    "mbtiles_roundtrip": Query(
+        _q_mbtiles_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+    "mbtiles_jpeg_roundtrip": Query(
+        _q_mbtiles_jpeg_roundtrip,
+        partial(localref.sql_mbtiles_jpeg_checksums, 85), suite=True),
+    "tiff_jpeg_roundtrip": Query(
+        _q_tiff_jpeg_roundtrip,
+        partial(localref.sql_mbtiles_jpeg_checksums, 85)),
+    "pgdump_roundtrip": Query(_q_pgdump_roundtrip, """
+            SELECT doc_id, text, lang, n_chars,
+                   CAST(doc_id % 360 - 180 AS DOUBLE) AS lon,
+                   CAST(doc_id % 171 - 85 AS DOUBLE) AS lat
+            FROM documents
+        """, suite=True),
+    "gpx_roundtrip": Query(_q_gpx_roundtrip, f"""
             SELECT doc_id,
-                   REGEXP_REPLACE(REGEXP_REPLACE(REGEXP_REPLACE(body,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                       '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-                       '\+?\d[\d\- ]{7,}\d', '<PHONE>', 'g') AS scrubbed
-            FROM c
-        """,
-        "geojson_roundtrip": f"""
+                   {_LAT} AS lat,
+                   {_LON} AS lon,
+                   lang || ' & ' || source AS lang_source
+            FROM documents
+        """, suite=True),
+    "kml_roundtrip": Query(_q_kml_roundtrip, f"""
+            SELECT doc_id, source,
+                   {_LON} AS lon,
+                   {_LAT} AS lat
+            FROM documents
+        """, suite=True),
+    "mif_roundtrip": Query(_q_mif_roundtrip, f"""
+            SELECT doc_id,
+                   {_LON} AS lon,
+                   {_LAT} AS lat,
+                   lang || ' & ' || source AS lang_source,
+                   CAST(n_chars AS BIGINT) AS n_chars
+            FROM documents WHERE doc_id < 3000
+        """, suite=True),
+    "vrt_xml_composite": Query(
+        _q_vrt_xml_composite, localref.sql_vrt_composite_checksums),
+    "vrt_xml_derived": Query(
+        _q_vrt_xml_derived, localref.sql_vrt_derived_checksums),
+    "pip_zone_join": Query(_q_pip_zone_join, _PIP_SQL, suite=True),
+    "pip_zone_join_wkb": Query(_q_pip_zone_join_wkb, _PIP_SQL),
+    # the streaming path answers to the same oracle as the batch join
+    "streaming_pip": Query(_q_streaming_pip, _PIP_SQL),
+    "geojson_roundtrip": Query(_q_geojson_roundtrip, f"""
             SELECT doc_id,
                    printf('POINT(%.7f %.7f)', {_LON}, {_LAT}) AS geom_wkt,
                    lang
             FROM documents WHERE doc_id < 400
-        """,
-        "lineref_repers": """
-            SELECT p.range AS path_id, k.part_i,
-                   1000 * p.range + k.mb AS mbeg,
-                   1000 * p.range + k.me AS mend,
-                   k.scale, k.np AS n_points
-            FROM range(40) p CROSS JOIN (
-              VALUES (0, 7.5, 10.0, 1.0, 2),
-                     (1, 10.0, 25.0, 0.5, 3),
-                     (2, 25.0, 30.0, 1.0, 2)
-            ) AS k(part_i, mb, me, scale, np)
-        """,
-        "lineref_coord": """
-            WITH q AS (
-              SELECT p.range AS path_id, s.range AS pos_id,
-                     8.0 + 4.0 * s.range AS mr
-              FROM range(40) p CROSS JOIN range(6) s
-            ), d AS (
-              SELECT *,
-                     CASE WHEN mr < 10 THEN mr - 7.5
-                          WHEN mr < 25 THEN 2.5 + (mr - 10) * 0.5
-                          ELSE 10 + (mr - 25) END AS dp
-              FROM q
-            )
-            SELECT path_id, pos_id, 1000 * path_id + mr AS m,
-                   ROUND(CASE WHEN dp <= 5
-                              THEN 10 * path_id + dp / 5 * 3
-                              ELSE 10 * path_id + 3 + (dp - 5) / 10 * 6
-                         END, 9) AS x,
-                   ROUND(CASE WHEN dp <= 5 THEN dp / 5 * 4
-                              ELSE 4 + (dp - 5) / 10 * 8 END, 9) AS y
-            FROM d
-        """,
-        "lineref_pos": """
-            SELECT p.range AS path_id, k.pt_id, k.relpos, 0.5 AS dist
-            FROM range(40) p CROSS JOIN (
-              VALUES (0, 9.5), (1, 13.0), (2, 19.0), (3, 27.0)
-            ) AS k(pt_id, relpos)
-        """,
-        "mvt_roundtrip": f"""
+        """, suite=True),
+    "netcdf_roundtrip": Query(_q_netcdf_roundtrip, """
+            SELECT 'grid' AS var, CAST(a.range AS BIGINT) AS d0,
+                   CAST(b.range AS BIGINT) AS d1,
+                   CAST((a.range * 131 + b.range) % 251 - 17 AS DOUBLE)
+                     AS value
+            FROM range(24) a CROSS JOIN range(37) b
+            UNION ALL
+            SELECT 't', CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
+                   CASE WHEN (a.range * 53 + b.range * 7) % 113 = 0
+                        THEN NULL
+                        ELSE CAST((a.range * 53 + b.range * 7) % 113 - 9
+                                  AS DOUBLE) * 0.25 + 3.0 END
+            FROM range(11) a CROSS JOIN range(29) b
+        """, suite=True),
+    "netcdf4_roundtrip": Query(_q_netcdf4_roundtrip, """
+            SELECT 'grid' AS var, CAST(a.range AS BIGINT) AS d0,
+                   CAST(b.range AS BIGINT) AS d1,
+                   CAST((a.range * 131 + b.range) % 251 - 17 AS DOUBLE)
+                     AS value
+            FROM range(24) a CROSS JOIN range(37) b
+            UNION ALL
+            SELECT 't', CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
+                   CASE WHEN (a.range * 53 + b.range * 7) % 113 = 0
+                        THEN NULL
+                        ELSE CAST((a.range * 53 + b.range * 7) % 113 - 9
+                                  AS DOUBLE) * 0.25 + 3.0 END
+            FROM range(11) a CROSS JOIN range(29) b
+        """, suite=True),
+    "grib2_roundtrip": Query(_q_grib2_roundtrip, """
+            SELECT 1 AS band, CAST(a.range AS BIGINT) AS d0,
+                   CAST(b.range AS BIGINT) AS d1,
+                   CAST(((a.range * 131 + b.range) % 251 - 17) * 25
+                        AS DOUBLE) / 100.0 AS value
+            FROM range(24) a CROSS JOIN range(37) b
+            UNION ALL
+            SELECT 2, CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
+                   CASE WHEN (a.range * 7 + b.range * 3) % 19 = 0
+                        THEN NULL
+                        ELSE CAST(((a.range * 53 + b.range * 7) % 113
+                                   - 9) * 5 AS DOUBLE) / 10.0 END
+            FROM range(11) a CROSS JOIN range(29) b
+        """, suite=True),
+    "grib2_complex_roundtrip": Query(_q_grib2_complex_roundtrip, """
+            SELECT 1 AS band, CAST(a.range AS BIGINT) AS d0,
+                   CAST(b.range AS BIGINT) AS d1,
+                   CAST(((a.range * 131 + b.range * 17) % 509 - 200)
+                        * 25 AS DOUBLE) / 100.0 AS value
+            FROM range(40) a CROSS JOIN range(53) b
+            UNION ALL
+            SELECT 2, CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
+                   CASE WHEN (a.range * 7 + b.range * 3) % 19 = 0
+                        THEN NULL
+                        ELSE CAST(((a.range * 53 + b.range * 7) % 113
+                                   - 9) * 5 AS DOUBLE) / 10.0 END
+            FROM range(33) a CROSS JOIN range(29) b
+            UNION ALL
+            SELECT 3, CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
+                   CAST(((a.range * 5 + b.range * 3) % 97 - 40) * 25
+                        AS DOUBLE) / 100.0
+            FROM range(21) a CROSS JOIN range(17) b
+        """, suite=True),
+    "grib2_lcc_roundtrip": Query(
+        _q_grib2_lcc_roundtrip, _grib2_lcc_sql, suite=True),
+    "grib2_ps_roundtrip": Query(
+        _q_grib2_ps_roundtrip, _grib2_ps_sql, suite=True),
+    "mvt_roundtrip": Query(_q_mvt_roundtrip, f"""
             WITH pts AS (
               SELECT doc_id, {_LON} AS lon, {_LAT} AS lat, lang
               FROM documents WHERE doc_id < 500
@@ -8211,107 +8071,8 @@ def _oracle_sql_static() -> dict[str, str]:
                         AS BIGINT) AS py,
                    lang
             FROM t
-        """,
-        "gdal_create": """
-            SELECT * FROM (VALUES
-              (1, 78000, 7.0, 7.0, 7.0),
-              (2, 78000, 9.0, 9.0, 9.0)
-            ) AS t(band, n, "min", "max", mean)
-        """,
-        "lineref_pickets": """
-            SELECT p.range AS path_id, k.part_i, k.mb AS mbeg,
-                   k.me AS mend, k.scale, k.np AS n_points
-            FROM range(40) p CROSS JOIN (
-              VALUES (0, 7.5, 10.0, 1.0, 2), (1, 10.0, 15.0, 0.5, 2),
-                     (2, 15.0, 20.0, 0.5, 2), (3, 20.0, 25.0, 0.5, 2),
-                     (4, 25.0, 30.0, 1.0, 2)
-            ) AS k(part_i, mb, me, scale, np)
-        """,
-        "lineref_subline": """
-            SELECT p.range AS path_id, 7 AS n_points,
-                   0.9 AS x_first, 1.2 AS y_first,
-                   7.2 AS x_last, 9.6 AS y_last
-            FROM range(40) p
-        """,
-        "osm_lines": f"""
-            SELECT doc_id // 5 AS id, 5 AS n_points,
-                   CAST(doc_id // 5 AS VARCHAR) AS ref,
-                   ROUND(FLOOR({_LON} * 1000000000.0 + 0.5) * 1e-9, 9)
-                     AS x_first,
-                   ROUND(FLOOR((-85.0 + CAST(((doc_id + 5)
-                         * 2654435761) % 4294967296 AS DOUBLE)
-                         * 170.0 / 4294967296)
-                         * 1000000000.0 + 0.5) * 1e-9, 9) AS y_last
-            FROM documents
-            WHERE doc_id < 400 AND doc_id % 5 = 0
-        """,
-        "osm_nodes": f"""
-            SELECT doc_id,
-                   FLOOR({_LAT} * 1000000000.0 + 0.5) * 1e-9 AS lat,
-                   FLOOR({_LON} * 1000000000.0 + 0.5) * 1e-9 AS lon,
-                   lang
-            FROM documents WHERE doc_id < 400
-        """,
-        "gml_roundtrip": f"""
-            SELECT doc_id, lang, 'docs' AS layer,
-                   {_LON} AS x, {_LAT} AS y
-            FROM documents WHERE doc_id < 400
-        """,
-        "fgb_bbox_filter": f"""
-            SELECT doc_id, lang FROM documents
-            WHERE doc_id < 500
-              AND {_LON} BETWEEN -60.0 AND 60.0
-              AND {_LAT} BETWEEN -85.0 AND -40.0
-        """,
-        "netcdf_raster": """
-            WITH v AS (
-              SELECT a.range AS lat, b.range AS lon
-              FROM range(20) a CROSS JOIN range(30) b
-              WHERE (a.range * 30 + b.range) % 41 <> 0
-            )
-            SELECT -40.125 AS gt0, 0.25 AS gt1, 19.75 AS gt3,
-                   -0.5 AS gt5, COUNT(*) AS n,
-                   CAST(MIN(lat * 100 + lon) AS DOUBLE) AS vmin,
-                   CAST(MAX(lat * 100 + lon) AS DOUBLE) AS vmax,
-                   ROUND(SUM(lat * 100 + lon) * 1.0 / COUNT(*), 6)
-                     AS mean
-            FROM v
-        """,
-        "ogr_dissolve": """
-            SELECT doc_id % 20 AS k, COUNT(*) AS n_parts,
-                   CAST(COUNT(DISTINCT ((doc_id // 20) * (doc_id // 20))
-                              % 13) AS DOUBLE) AS area
-            FROM documents WHERE doc_id < 600 GROUP BY doc_id % 20
-        """,
-        "fgb_roundtrip": f"""
-            SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
-                   ROUND({_LON}, 6) AS x, ROUND({_LAT}, 6) AS y
-            FROM documents WHERE doc_id < 400
-        """,
-        "sqlite_roundtrip": f"""
-            SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
-                   ROUND({_LON}, 6) AS x, ROUND({_LAT}, 6) AS y
-            FROM documents WHERE doc_id < 400
-        """,
-        "ogr_tindex": f"""
-            SELECT source || '.shp,0' AS LOCATION,
-                   ROUND(MIN({_LON}), 9) AS xmin,
-                   ROUND(MIN({_LAT}), 9) AS ymin,
-                   ROUND(MAX({_LON}), 9) AS xmax,
-                   ROUND(MAX({_LAT}), 9) AS ymax,
-                   COUNT(*) AS feature_count
-            FROM documents GROUP BY source
-        """,
-        "identify": """
-            SELECT * FROM (VALUES
-              ('a.tif', 'GTiff'), ('b.png', 'PNG'), ('c.nc', 'netCDF'),
-              ('d.shp', 'ESRI Shapefile'), ('e.gpkg', 'GPKG'),
-              ('f.dxf', 'DXF'), ('g.json', 'GeoJSON'),
-              ('h.asc', 'AAIGrid'), ('j.bil', 'EHdr'),
-              ('junk.bin', NULL)
-            ) AS t(name, driver)
-        """,
-        "dxf_roundtrip": f"""
+        """, suite=True),
+    "dxf_roundtrip": Query(_q_dxf_roundtrip, f"""
             WITH p AS (
               SELECT doc_id, {_LON} AS lon, {_LAT} AS lat, lang,
                      {DRV.DERIVED_HALF_SQL} AS h
@@ -8327,103 +8088,266 @@ def _oracle_sql_static() -> dict[str, str]:
                    || ', ' || {_sql_xy('lon + h', 'lat + h')}
                    || ', ' || {_sql_xy('lon - h', 'lat - h')} || '))'
             FROM p
-        """,
-        "netcdf_roundtrip": """
-            SELECT 'grid' AS var, CAST(a.range AS BIGINT) AS d0,
-                   CAST(b.range AS BIGINT) AS d1,
-                   CAST((a.range * 131 + b.range) % 251 - 17 AS DOUBLE)
-                     AS value
-            FROM range(24) a CROSS JOIN range(37) b
-            UNION ALL
-            SELECT 't', CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
-                   CASE WHEN (a.range * 53 + b.range * 7) % 113 = 0
-                        THEN NULL
-                        ELSE CAST((a.range * 53 + b.range * 7) % 113 - 9
-                                  AS DOUBLE) * 0.25 + 3.0 END
-            FROM range(11) a CROSS JOIN range(29) b
-        """,
-        "grib2_roundtrip": """
-            SELECT 1 AS band, CAST(a.range AS BIGINT) AS d0,
-                   CAST(b.range AS BIGINT) AS d1,
-                   CAST(((a.range * 131 + b.range) % 251 - 17) * 25
-                        AS DOUBLE) / 100.0 AS value
-            FROM range(24) a CROSS JOIN range(37) b
-            UNION ALL
-            SELECT 2, CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
-                   CASE WHEN (a.range * 7 + b.range * 3) % 19 = 0
-                        THEN NULL
-                        ELSE CAST(((a.range * 53 + b.range * 7) % 113
-                                   - 9) * 5 AS DOUBLE) / 10.0 END
-            FROM range(11) a CROSS JOIN range(29) b
-        """,
-        "grib2_lcc_roundtrip": _grib2_lcc_sql(),
-        "grib2_ps_roundtrip": _grib2_ps_sql(),
-        "grib2_complex_roundtrip": """
-            SELECT 1 AS band, CAST(a.range AS BIGINT) AS d0,
-                   CAST(b.range AS BIGINT) AS d1,
-                   CAST(((a.range * 131 + b.range * 17) % 509 - 200)
-                        * 25 AS DOUBLE) / 100.0 AS value
-            FROM range(40) a CROSS JOIN range(53) b
-            UNION ALL
-            SELECT 2, CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
-                   CASE WHEN (a.range * 7 + b.range * 3) % 19 = 0
-                        THEN NULL
-                        ELSE CAST(((a.range * 53 + b.range * 7) % 113
-                                   - 9) * 5 AS DOUBLE) / 10.0 END
-            FROM range(33) a CROSS JOIN range(29) b
-            UNION ALL
-            SELECT 3, CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
-                   CAST(((a.range * 5 + b.range * 3) % 97 - 40) * 25
-                        AS DOUBLE) / 100.0
-            FROM range(21) a CROSS JOIN range(17) b
-        """,
-        "netcdf4_roundtrip": """
-            SELECT 'grid' AS var, CAST(a.range AS BIGINT) AS d0,
-                   CAST(b.range AS BIGINT) AS d1,
-                   CAST((a.range * 131 + b.range) % 251 - 17 AS DOUBLE)
-                     AS value
-            FROM range(24) a CROSS JOIN range(37) b
-            UNION ALL
-            SELECT 't', CAST(a.range AS BIGINT), CAST(b.range AS BIGINT),
-                   CASE WHEN (a.range * 53 + b.range * 7) % 113 = 0
-                        THEN NULL
-                        ELSE CAST((a.range * 53 + b.range * 7) % 113 - 9
-                                  AS DOUBLE) * 0.25 + 3.0 END
-            FROM range(11) a CROSS JOIN range(29) b
-        """,
-        "salted_join": """
-            SELECT lang, COUNT(*) AS n,
-                   CAST(SUM(LENGTH(lang)) AS BIGINT) AS wsum
-            FROM documents GROUP BY lang
-        """,
-        "pgdump_roundtrip": """
-            SELECT doc_id, text, lang, n_chars,
-                   CAST(doc_id % 360 - 180 AS DOUBLE) AS lon,
-                   CAST(doc_id % 171 - 85 AS DOUBLE) AS lat
-            FROM documents
-        """,
-        "gpx_roundtrip": f"""
+        """, suite=True),
+    "ogr_tindex": Query(_q_ogr_tindex, f"""
+            SELECT source || '.shp,0' AS LOCATION,
+                   ROUND(MIN({_LON}), 9) AS xmin,
+                   ROUND(MIN({_LAT}), 9) AS ymin,
+                   ROUND(MAX({_LON}), 9) AS xmax,
+                   ROUND(MAX({_LAT}), 9) AS ymax,
+                   COUNT(*) AS feature_count
+            FROM documents GROUP BY source
+        """, suite=True),
+    "fgb_roundtrip": Query(_q_fgb_roundtrip, f"""
+            SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
+                   ROUND({_LON}, 6) AS x, ROUND({_LAT}, 6) AS y
+            FROM documents WHERE doc_id < 400
+        """, suite=True),
+    "sqlite_roundtrip": Query(_q_sqlite_roundtrip, f"""
+            SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
+                   ROUND({_LON}, 6) AS x, ROUND({_LAT}, 6) AS y
+            FROM documents WHERE doc_id < 400
+        """, suite=True),
+    "ogr_dissolve": Query(_q_ogr_dissolve, """
+            SELECT doc_id % 20 AS k, COUNT(*) AS n_parts,
+                   CAST(COUNT(DISTINCT ((doc_id // 20) * (doc_id // 20))
+                              % 13) AS DOUBLE) AS area
+            FROM documents WHERE doc_id < 600 GROUP BY doc_id % 20
+        """, suite=True),
+    "netcdf_raster": Query(_q_netcdf_raster, """
+            WITH v AS (
+              SELECT a.range AS lat, b.range AS lon
+              FROM range(20) a CROSS JOIN range(30) b
+              WHERE (a.range * 30 + b.range) % 41 <> 0
+            )
+            SELECT -40.125 AS gt0, 0.25 AS gt1, 19.75 AS gt3,
+                   -0.5 AS gt5, COUNT(*) AS n,
+                   CAST(MIN(lat * 100 + lon) AS DOUBLE) AS vmin,
+                   CAST(MAX(lat * 100 + lon) AS DOUBLE) AS vmax,
+                   ROUND(SUM(lat * 100 + lon) * 1.0 / COUNT(*), 6)
+                     AS mean
+            FROM v
+        """, suite=True),
+    "fgb_bbox_filter": Query(_q_fgb_bbox_filter, f"""
+            SELECT doc_id, lang FROM documents
+            WHERE doc_id < 500
+              AND {_LON} BETWEEN -60.0 AND 60.0
+              AND {_LAT} BETWEEN -85.0 AND -40.0
+        """, suite=True),
+    "gml_roundtrip": Query(_q_gml_roundtrip, f"""
+            SELECT doc_id, lang, 'docs' AS layer,
+                   {_LON} AS x, {_LAT} AS y
+            FROM documents WHERE doc_id < 400
+        """, suite=True),
+    "osm_nodes": Query(_q_osm_nodes, f"""
             SELECT doc_id,
-                   {_LAT} AS lat,
-                   {_LON} AS lon,
-                   lang || ' & ' || source AS lang_source
+                   FLOOR({_LAT} * 1000000000.0 + 0.5) * 1e-9 AS lat,
+                   FLOOR({_LON} * 1000000000.0 + 0.5) * 1e-9 AS lon,
+                   lang
+            FROM documents WHERE doc_id < 400
+        """, suite=True),
+    "osm_lines": Query(_q_osm_lines, f"""
+            SELECT doc_id // 5 AS id, 5 AS n_points,
+                   CAST(doc_id // 5 AS VARCHAR) AS ref,
+                   ROUND(FLOOR({_LON} * 1000000000.0 + 0.5) * 1e-9, 9)
+                     AS x_first,
+                   ROUND(FLOOR((-85.0 + CAST(((doc_id + 5)
+                         * 2654435761) % 4294967296 AS DOUBLE)
+                         * 170.0 / 4294967296)
+                         * 1000000000.0 + 0.5) * 1e-9, 9) AS y_last
             FROM documents
-        """,
-        "mif_roundtrip": f"""
+            WHERE doc_id < 400 AND doc_id % 5 = 0
+        """, suite=True),
+    "lineref_subline": Query(_q_lineref_subline, """
+            SELECT p.range AS path_id, 7 AS n_points,
+                   0.9 AS x_first, 1.2 AS y_first,
+                   7.2 AS x_last, 9.6 AS y_last
+            FROM range(40) p
+        """, suite=True),
+    "lineref_pickets": Query(_q_lineref_pickets, """
+            SELECT p.range AS path_id, k.part_i, k.mb AS mbeg,
+                   k.me AS mend, k.scale, k.np AS n_points
+            FROM range(40) p CROSS JOIN (
+              VALUES (0, 7.5, 10.0, 1.0, 2), (1, 10.0, 15.0, 0.5, 2),
+                     (2, 15.0, 20.0, 0.5, 2), (3, 20.0, 25.0, 0.5, 2),
+                     (4, 25.0, 30.0, 1.0, 2)
+            ) AS k(part_i, mb, me, scale, np)
+        """, suite=True),
+    "gdal_create": Query(_q_gdal_create, """
+            SELECT * FROM (VALUES
+              (1, 78000, 7.0, 7.0, 7.0),
+              (2, 78000, 9.0, 9.0, 9.0)
+            ) AS t(band, n, "min", "max", mean)
+        """, suite=True),
+    "identify": Query(_q_identify, """
+            SELECT * FROM (VALUES
+              ('a.tif', 'GTiff'), ('b.png', 'PNG'), ('c.nc', 'netCDF'),
+              ('d.shp', 'ESRI Shapefile'), ('e.gpkg', 'GPKG'),
+              ('f.dxf', 'DXF'), ('g.json', 'GeoJSON'),
+              ('h.asc', 'AAIGrid'), ('j.bil', 'EHdr'),
+              ('junk.bin', NULL)
+            ) AS t(name, driver)
+        """, suite=True),
+    "lineref_repers": Query(_q_lineref_repers, """
+            SELECT p.range AS path_id, k.part_i,
+                   1000 * p.range + k.mb AS mbeg,
+                   1000 * p.range + k.me AS mend,
+                   k.scale, k.np AS n_points
+            FROM range(40) p CROSS JOIN (
+              VALUES (0, 7.5, 10.0, 1.0, 2),
+                     (1, 10.0, 25.0, 0.5, 3),
+                     (2, 25.0, 30.0, 1.0, 2)
+            ) AS k(part_i, mb, me, scale, np)
+        """, suite=True),
+    "lineref_coord": Query(_q_lineref_coord, """
+            WITH q AS (
+              SELECT p.range AS path_id, s.range AS pos_id,
+                     8.0 + 4.0 * s.range AS mr
+              FROM range(40) p CROSS JOIN range(6) s
+            ), d AS (
+              SELECT *,
+                     CASE WHEN mr < 10 THEN mr - 7.5
+                          WHEN mr < 25 THEN 2.5 + (mr - 10) * 0.5
+                          ELSE 10 + (mr - 25) END AS dp
+              FROM q
+            )
+            SELECT path_id, pos_id, 1000 * path_id + mr AS m,
+                   ROUND(CASE WHEN dp <= 5
+                              THEN 10 * path_id + dp / 5 * 3
+                              ELSE 10 * path_id + 3 + (dp - 5) / 10 * 6
+                         END, 9) AS x,
+                   ROUND(CASE WHEN dp <= 5 THEN dp / 5 * 4
+                              ELSE 4 + (dp - 5) / 10 * 8 END, 9) AS y
+            FROM d
+        """, suite=True),
+    "lineref_pos": Query(_q_lineref_pos, """
+            SELECT p.range AS path_id, k.pt_id, k.relpos, 0.5 AS dist
+            FROM range(40) p CROSS JOIN (
+              VALUES (0, 9.5), (1, 13.0), (2, 19.0), (3, 27.0)
+            ) AS k(pt_id, relpos)
+        """, suite=True),
+    "tile_assign": Query(_q_tile_assign, _TILE_SQL, suite=True),
+    "knn_top5": Query(_q_knn, _KNN_SQL, suite=True),
+    "knn_large": Query(_q_knn_large, partial(_knn_sql, 500), suite=True),
+    "extent_docs": Query(_q_extent, f"""
+            SELECT MIN(lon) AS xmin, MIN(lat) AS ymin,
+                   MAX(lon) AS xmax, MAX(lat) AS ymax
+            FROM (SELECT {_LON} AS lon, {_LAT} AS lat FROM documents)
+        """),
+    "ogr_where_ci": Query(_q_ogr_where_ci, """
+            SELECT c_custkey, c_name, c_acctbal FROM customer
+            WHERE LOWER(c_mktsegment) = LOWER('BUILDING') AND c_acctbal > 1000.0
+        """),
+    "ogr_like": Query(_q_ogr_like, """
+            SELECT p_partkey, p_type, p_brand FROM part
+            WHERE p_type LIKE '%BRASS' OR LOWER(p_brand) LIKE LOWER('brand#1%')
+        """),
+    "ogr_in_between": Query(_q_ogr_in_between, """
+            SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
+            WHERE l_returnflag IN ('A', 'R')
+              AND l_quantity BETWEEN 10.0 AND 20.0
+              AND l_shipdate IS NOT NULL
+        """),
+    "ogr_summary": Query(_q_ogr_summary, """
+            SELECT COUNT(*) AS cnt,
+                   COUNT(DISTINCT l_returnflag) AS cnt_rf,
+                   MIN(l_quantity) AS min_qty,
+                   MAX(l_quantity) AS max_qty,
+                   SUM(l_quantity) AS sum_qty,
+                   ROUND(AVG(l_extendedprice), 4) AS avg_price
+            FROM lineitem
+        """, suite=True),
+    "ogr_distinct_ci": Query(_q_ogr_distinct_ci, """
+            SELECT arg_min(lang, doc_id) AS lang FROM documents GROUP BY LOWER(lang)
+        """),
+    "ogr_orderby_limit_offset": Query(_q_ogr_orderby_limit_offset, """
+            SELECT o_orderkey, o_totalprice FROM orders
+            ORDER BY o_totalprice DESC, o_orderkey ASC
+            LIMIT 10 OFFSET 5
+        """),
+    "ogr_first_match_join": Query(_q_ogr_first_match_join, """
+            SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+            FROM customer c LEFT JOIN (
+              SELECT * FROM (
+                SELECT o_custkey, o_orderkey, o_totalprice,
+                       ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
+                FROM orders
+              ) WHERE rn = 1
+            ) o ON c.c_custkey = o.o_custkey
+        """, suite=True),
+    "ogr_union_all": Query(_q_ogr_union_all, """
+            SELECT r_regionkey AS key, r_name AS name,
+                   CAST(NULL AS INTEGER) AS regionkey, 'region' AS layer_name
+            FROM region
+            UNION ALL
+            SELECT n_nationkey AS key, n_name AS name,
+                   n_regionkey AS regionkey, 'nation' AS layer_name
+            FROM nation
+        """),
+    "ogr_intersect": Query(_q_ogr_intersect, """
+            SELECT c_nationkey AS nk FROM customer
+            INTERSECT
+            SELECT n_nationkey AS nk FROM nation WHERE n_regionkey <= 1
+        """),
+    "ogr_except": Query(_q_ogr_except, """
+            SELECT c_nationkey AS nk FROM customer
+            EXCEPT
+            SELECT n_nationkey AS nk FROM nation WHERE n_regionkey <= 1
+        """),
+    "ogr_scalar_funcs": Query(_q_ogr_scalar_funcs, """
+            SELECT n_nationkey,
+                   n_name || '_' || CAST(n_regionkey AS VARCHAR) AS tagged,
+                   RIGHT(n_name, 3) AS tail3,
+                   SUBSTRING(n_name, 2, 3) AS mid3,
+                   CAST(n_regionkey AS DOUBLE) AS rk_dbl
+            FROM nation
+        """),
+    "ogr_avg_timestamp": Query(_q_ogr_avg_timestamp, """
+            SELECT COUNT(*) AS cnt, AVG(FLOOR(epoch(ts))) AS avg_ts_epoch FROM events
+        """),
+    "json_props": Query(_q_json_props, """
+            SELECT event_id, json_extract_string(props, '$.k') AS k_val FROM events
+        """),
+    "window_rank": Query(_q_window_rank, """
+            SELECT event_id, user_id,
+                   ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS rn
+            FROM events
+        """),
+    "dedup_exact": Query(_q_dedup_exact, """
             SELECT doc_id,
-                   {_LON} AS lon,
-                   {_LAT} AS lat,
-                   lang || ' & ' || source AS lang_source,
-                   CAST(n_chars AS BIGINT) AS n_chars
-            FROM documents WHERE doc_id < 3000
-        """,
-        "kml_roundtrip": f"""
-            SELECT doc_id, source,
-                   {_LON} AS lon,
-                   {_LAT} AS lat
+                   doc_id = MIN(doc_id) OVER (
+                     PARTITION BY TRIM(regexp_replace(LOWER(text), '\\s+', ' ', 'g'))
+                   ) AS is_canonical
             FROM documents
-        """,
-        "span_scrub": r"""
+        """, suite=True),
+    "token_count": Query(_q_token_count, """
+            SELECT doc_id,
+                   LEN(list_filter(regexp_split_to_array(LOWER(text), '\\s+'), x -> x <> '')) AS ntok,
+                   LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS nbpe
+            FROM documents
+        """),
+    "quality_score": Query(_q_quality_score, _QUALITY_SQL),
+    "lang_id": Query(_q_lang_id, _lang_sql),
+    "text_scrub_pii": Query(_q_text_scrub, r"""
+            WITH b AS (
+              SELECT doc_id, SUBSTR(text, 1, 40) AS t
+              FROM documents WHERE doc_id < 400
+            ), c AS (
+              SELECT doc_id,
+                     CONCAT(t, ' mail user', CAST(doc_id AS VARCHAR),
+                            '@example.com', ' call +1 555-000-',
+                            CAST(doc_id AS VARCHAR), ' from 10.0.0.',
+                            CAST(doc_id % 200 AS VARCHAR)) AS body
+              FROM b
+            )
+            SELECT doc_id,
+                   REGEXP_REPLACE(REGEXP_REPLACE(REGEXP_REPLACE(body,
+                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+                       '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
+                       '\+?\d[\d\- ]{7,}\d', '<PHONE>', 'g') AS scrubbed
+            FROM c
+        """),
+    "span_scrub": Query(_q_span_scrub, r"""
             WITH b AS (
               SELECT doc_id, SUBSTR(text, 1, 40) AS t
               FROM documents WHERE doc_id < 400
@@ -8442,8 +8366,8 @@ def _oracle_sql_static() -> dict[str, str]:
                        '\+?\d[\d\- ]{7,}\d', '<PHONE>', 'g') AS scrubbed,
                    printf('media://%09d', doc_id) AS media_ref
             FROM c
-        """,
-        "text_repetition": r"""
+        """, suite=True),
+    "text_repetition": Query(_q_text_repetition, r"""
             WITH b AS (
               SELECT doc_id,
                      list_filter(regexp_split_to_array(LOWER(text), '\s+'),
@@ -8460,8 +8384,8 @@ def _oracle_sql_static() -> dict[str, str]:
                      FLOOR((1.0 - CAST(LEN(list_distinct(lns)) AS DOUBLE)
                             / LEN(lns)) * 1e6) / 1e6 ELSE 0.0 END AS dup_line_frac
             FROM b
-        """,
-        "gopher_filter": r"""
+        """),
+    "gopher_filter": Query(_q_gopher_filter, r"""
             WITH b AS (
               SELECT doc_id, text,
                      list_filter(regexp_split_to_array(LOWER(text), '\s+'),
@@ -8499,80 +8423,8 @@ def _oracle_sql_static() -> dict[str, str]:
                    (f_tokens AND f_wordlen AND f_alpha AND f_dup_words
                     AND f_dup_lines) AS keep
             FROM f
-        """,
-        "pack_sequences": r"""
-            WITH t AS (
-              SELECT doc_id,
-                     LEN(list_filter(regexp_split_to_array(LOWER(text), '\s+'),
-                                     x -> x <> '')) AS ntok,
-                     ((doc_id * 2654435761) % 4294967296) % 8 AS shard
-              FROM documents
-            ), s AS (
-              SELECT doc_id, shard, ntok,
-                     COALESCE(SUM(ntok) OVER (
-                       PARTITION BY shard ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0) AS start_offset
-              FROM t
-            )
-            SELECT doc_id, CAST(shard AS BIGINT) AS shard,
-                   CAST(start_offset AS BIGINT) AS start_offset,
-                   CAST(FLOOR(start_offset / 256.0) AS BIGINT) AS bin
-            FROM s
-        """,
-        "chunk_documents": r"""
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(LOWER(text), '\s+'),
-                                 x -> x <> '') AS toks
-              FROM documents
-            ), s AS (
-              SELECT doc_id, toks,
-                     list_filter(range(0, GREATEST(LEN(toks), 1), 24),
-                                 x -> x = 0 OR x + 8 < LEN(toks)) AS starts
-              FROM t
-            ), e AS (
-              SELECT doc_id, toks,
-                     GENERATE_SUBSCRIPTS(starts, 1) - 1 AS chunk_idx,
-                     UNNEST(starts) AS start_tok
-              FROM s
-            )
-            SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-                   CAST(start_tok AS INT) AS start_tok,
-                   array_to_string(toks[start_tok + 1 : start_tok + 32], ' ')
-                     AS chunk
-            FROM e
-        """,
-        "url_blocklist": r"""
-            WITH b AS (
-              SELECT doc_id,
-                     CONCAT(text, ' see https://site',
-                            CAST(doc_id % 5 AS VARCHAR),
-                            '.example.com/page') AS body
-              FROM documents
-            ), d AS (
-              SELECT doc_id,
-                     list_sort(list_distinct(list_transform(
-                         regexp_extract_all(body,
-                             'https?://([A-Za-z0-9.-]+)', 1),
-                         x -> LOWER(x)))) AS doms
-              FROM b
-            )
-            SELECT doc_id, array_to_string(doms, ',') AS domains
-            FROM d
-            WHERE NOT EXISTS (
-              SELECT 1 FROM UNNEST(doms) AS u(x)
-              WHERE x IN ('site0.example.com', 'site3.example.com')
-            )
-        """,
-        "sample_split": _sample_split_sql(),
-        "stratified_sample": _stratified_sample_sql(),
-        "domain_resample": _domain_resample_sql(),
-        "ogrmerge_single": _ogrmerge_sql(),
-        "paragraph_dedup": _paragraph_dedup_sql(),
-        "url_canonical_dedup": _url_canonical_sql(),
-        "media_manifest": _media_manifest_sql(),
-        "dup_spans": rf"""
+        """, suite=True),
+    "dup_spans": Query(_q_dup_spans, rf"""
             WITH t AS (
               SELECT doc_id,
                      CASE WHEN doc_id % 3 = 0
@@ -8603,9 +8455,105 @@ def _oracle_sql_static() -> dict[str, str]:
             )
             SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 15 AS span_end
             FROM r GROUP BY doc_id, grp
-        """,
-        "lang_id": _lang_sql(),
-        "ann_cosine_topk": """
+        """, suite=True),
+    "sample_split": Query(_q_sample_split, _sample_split_sql, suite=True),
+    "stratified_sample": Query(_q_stratified_sample, _stratified_sample_sql),
+    "domain_resample": Query(
+        _q_domain_resample, _domain_resample_sql, suite=True),
+    "ogrmerge_single": Query(_q_ogrmerge, _ogrmerge_sql, suite=True),
+    "bpe_tokenize": Query(
+        _q_bpe_tokenize, localref.sql_bpe_tokenize, suite=True),
+    "paragraph_dedup": Query(
+        _q_paragraph_dedup, _paragraph_dedup_sql, suite=True),
+    "url_canonical_dedup": Query(
+        _q_url_canonical, _url_canonical_sql, suite=True),
+    "media_manifest": Query(
+        _q_media_manifest, _media_manifest_sql, suite=True),
+    "url_blocklist": Query(_q_url_blocklist, r"""
+            WITH b AS (
+              SELECT doc_id,
+                     CONCAT(text, ' see https://site',
+                            CAST(doc_id % 5 AS VARCHAR),
+                            '.example.com/page') AS body
+              FROM documents
+            ), d AS (
+              SELECT doc_id,
+                     list_sort(list_distinct(list_transform(
+                         regexp_extract_all(body,
+                             'https?://([A-Za-z0-9.-]+)', 1),
+                         x -> LOWER(x)))) AS doms
+              FROM b
+            )
+            SELECT doc_id, array_to_string(doms, ',') AS domains
+            FROM d
+            WHERE NOT EXISTS (
+              SELECT 1 FROM UNNEST(doms) AS u(x)
+              WHERE x IN ('site0.example.com', 'site3.example.com')
+            )
+        """),
+    "pack_sequences": Query(_q_pack_sequences, r"""
+            WITH t AS (
+              SELECT doc_id,
+                     LEN(list_filter(regexp_split_to_array(LOWER(text), '\s+'),
+                                     x -> x <> '')) AS ntok,
+                     ((doc_id * 2654435761) % 4294967296) % 8 AS shard
+              FROM documents
+            ), s AS (
+              SELECT doc_id, shard, ntok,
+                     COALESCE(SUM(ntok) OVER (
+                       PARTITION BY shard ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                     ), 0) AS start_offset
+              FROM t
+            )
+            SELECT doc_id, CAST(shard AS BIGINT) AS shard,
+                   CAST(start_offset AS BIGINT) AS start_offset,
+                   CAST(FLOOR(start_offset / 256.0) AS BIGINT) AS bin
+            FROM s
+        """),
+    "chunk_documents": Query(_q_chunk_documents, r"""
+            WITH t AS (
+              SELECT doc_id,
+                     list_filter(regexp_split_to_array(LOWER(text), '\s+'),
+                                 x -> x <> '') AS toks
+              FROM documents
+            ), s AS (
+              SELECT doc_id, toks,
+                     list_filter(range(0, GREATEST(LEN(toks), 1), 24),
+                                 x -> x = 0 OR x + 8 < LEN(toks)) AS starts
+              FROM t
+            ), e AS (
+              SELECT doc_id, toks,
+                     GENERATE_SUBSCRIPTS(starts, 1) - 1 AS chunk_idx,
+                     UNNEST(starts) AS start_tok
+              FROM s
+            )
+            SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
+                   CAST(start_tok AS INT) AS start_tok,
+                   array_to_string(toks[start_tok + 1 : start_tok + 32], ' ')
+                     AS chunk
+            FROM e
+        """),
+    "minhash_pairs": Query(
+        _q_minhash_pairs, localref.sql_minhash_pairs, suite=True),
+    "dedup_groups": Query(
+        _q_dedup_groups, localref.sql_dedup_groups, suite=True),
+    "decontaminate": Query(
+        _q_decontaminate, localref.sql_decontaminate, suite=True),
+    "salted_join": Query(_q_salted_join, """
+            SELECT lang, COUNT(*) AS n,
+                   CAST(SUM(LENGTH(lang)) AS BIGINT) AS wsum
+            FROM documents GROUP BY lang
+        """, suite=True),
+    "simhash_table": Query(_q_simhash_table, localref.sql_simhash_table),
+    "simhash_pairs": Query(
+        _q_simhash_pairs, localref.sql_simhash_pairs, suite=True),
+    "geometry_curves": Query(
+        _q_geometry_curves, localref.sql_geometry_curves, suite=True),
+    "geometry_makevalid_bowtie": Query(
+        _q_geometry_makevalid_bowtie,
+        localref.sql_geometry_makevalid_bowtie, suite=True),
+    "ann_cosine_topk": Query(_q_ann_cosine_topk, """
             SELECT q_id, vec_id, rank FROM (
               SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
                      ROW_NUMBER() OVER (
@@ -8616,12 +8564,142 @@ def _oracle_sql_static() -> dict[str, str]:
               FROM embeddings e
               CROSS JOIN (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8) q
             ) WHERE rank <= 10
-        """,
-        "overlay_intersection": _OVERLAY_CTE + """
+        """, suite=True),
+    "ann_lsh_topk": Query(_q_ann_lsh_topk, localref.sql_ann_lsh_topk),
+    "ann_ivf_topk": Query(_q_ann_ivf_topk, localref.sql_ann_ivf_topk),
+    "raster_checksums": Query(
+        _q_raster_checksums, localref.sql_raster_checksums),
+    # a faithful GeoTIFF roundtrip reproduces the source tile table
+    # exactly, so it answers to the raster_checksums oracle
+    "geotiff_roundtrip": Query(
+        _q_geotiff_roundtrip, localref.sql_raster_checksums),
+    "geotiff_byte_ref": Query(
+        _q_geotiff_byte_ref,
+        "SELECT 'byte' AS raster_id, 1 AS band, 0 AS tile_x, 0 AS tile_y,"
+        " 4672 AS checksum, 'EPSG:26711' AS crs, 440720.0 AS gt0,"
+        " 60.0 AS gt1, 3751320.0 AS gt3, -60.0 AS gt5"),
+    "shapefile_poly_ref": Query(_q_shapefile_poly_ref, _poly_ref_sql),
+    "shapefile_roundtrip": Query(
+        _q_shapefile_roundtrip, partial(_zone_attrs_sql, 0)),
+    # byte.gpkg carries the same byte.tif raster: same canonical
+    # checksum + geotransform (the GPKG tile was PNG-encoded by GDAL)
+    "gpkg_byte_ref": Query(
+        _q_gpkg_byte_ref,
+        "SELECT 'byte' AS raster_id, 1 AS band, 4672 AS checksum,"
+        " 'EPSG:26711' AS crs, 440720.0 AS gt0, 60.0 AS gt1,"
+        " 3751320.0 AS gt3, -60.0 AS gt5"),
+    "gpkg_roundtrip": Query(_q_gpkg_roundtrip, partial(_zone_attrs_sql, 1)),
+    # a faithful tile roundtrip reproduces the synth tile table
+    "gpkg_tiles_roundtrip": Query(
+        _q_gpkg_tiles_roundtrip, localref.sql_raster_checksums),
+    "enhance_equalize_checksums": Query(
+        _q_enhance_equalize, localref.sql_enhance_checksums, suite=True),
+    "lut_checksums": Query(
+        _q_apply_lut, localref.sql_lut_checksums, suite=True),
+    "hsv_merge_checksums": Query(
+        _q_hsv_merge,
+        partial(localref.sql_hsv_merge_checksums, _RELIEF_RAMP), suite=True),
+    "val_repl_checksums": Query(
+        _q_val_repl, localref.sql_val_repl_checksums, suite=True),
+    "fft_magphase": Query(
+        _q_fft_magphase, localref.sql_fft_magphase, suite=True),
+    "fft_roundtrip": Query(
+        _q_fft_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+    "graticule_segments": Query(
+        _q_graticule_segments, localref.sql_graticule_segments, suite=True),
+    "graticule_lines": Query(
+        _q_graticule_lines, localref.sql_graticule_lines, suite=True),
+    "junction_table": Query(_q_junction_table, """
+            SELECT CAST('doc' || doc_id AS VARCHAR) AS a_gml_id,
+                   CAST(regexp_replace(h, '^#', '') AS VARCHAR) AS b_gml_id
+            FROM documents, UNNEST(['#' || (doc_id * 7 % 97),
+                                    'x' || (doc_id * 13 % 89)]) AS t(h)
+            WHERE doc_id < 1500
+        """, suite=True),
+    "gcps2wld": Query(_q_gcps2wld, localref.sql_gcps2wld, suite=True),
+    "classify_checksums": Query(
+        _q_classify, localref.sql_classify_checksums, suite=True),
+    "rat_roundtrip": Query(
+        _q_rat_roundtrip, localref.sql_rat_roundtrip, suite=True),
+    "attachpct_checksums": Query(
+        _q_attachpct, localref.sql_attachpct_checksums, suite=True),
+    "nearblack_checksums": Query(
+        _q_nearblack, localref.sql_nearblack_checksums, suite=True),
+    "mask_band_checksums": Query(
+        _q_mask_band, localref.sql_mask_band_checksums, suite=True),
+    "footprint": Query(_q_footprint, localref.sql_footprint, suite=True),
+    "overview_select": Query(
+        _q_overview_select, localref.sql_overview_select, suite=True),
+    "translate_scale": Query(
+        _q_translate_scale, localref.sql_translate_scale, suite=True),
+    "gdal_edit_gt": Query(_q_gdal_edit, _gdal_edit_sql, suite=True),
+    "gdalmove_gt": Query(_q_gdalmove, _gdalmove_sql),
+    "checkpoint_lineage": Query(_q_checkpoint, """
+            SELECT 'filtered' AS stage,
+                   (SELECT COUNT(*) FROM documents WHERE doc_id < 3000)
+                     AS rows, CAST(1 AS BIGINT) AS builds
+            UNION ALL
+            SELECT 'by_lang' AS stage,
+                   (SELECT COUNT(DISTINCT lang) FROM documents
+                    WHERE doc_id < 3000) AS rows,
+                   CAST(1 AS BIGINT) AS builds
+        """),
+    "gdal_calc_checksums": Query(
+        _q_gdal_calc, localref.sql_gdal_calc_checksums, suite=True),
+    "vrt_separate_checksums": Query(
+        _q_vrt_separate, localref.sql_vrt_separate_checksums),
+    "cog_plan": Query(_q_cog_plan, _cog_plan_sql, suite=True),
+    "overview_checksums": Query(
+        _q_overview_checksums, localref.sql_overview_checksums, suite=True),
+    "overview_mode_checksums": Query(
+        _q_overview_kernel("mode", 2), localref.sql_overview_mode_checksums),
+    "overview_gauss_checksums": Query(
+        _q_overview_kernel("gauss", 4), localref.sql_overview_gauss_checksums),
+    "warp_checksums": Query(
+        _q_warp_checksums, localref.sql_warp_checksums, suite=True),
+    "warp_average_checksums": Query(
+        _q_warp_kernel("average", 2.0), localref.sql_warp_average_checksums),
+    "warp_rms_checksums": Query(
+        _q_warp_kernel("rms", 2.0), localref.sql_warp_rms_checksums),
+    "warp_max_checksums": Query(
+        _q_warp_kernel("max", 2.0), localref.sql_warp_max_checksums),
+    "warp_lanczos_checksums": Query(
+        _q_warp_kernel("lanczos", 1.5), localref.sql_warp_lanczos_checksums),
+    "warp_mode_checksums": Query(
+        _q_warp_kernel("mode", 2.0), localref.sql_warp_mode_checksums),
+    "warp_med_checksums": Query(
+        _q_warp_kernel("med", 2.0), localref.sql_warp_med_checksums),
+    "warp_q1_checksums": Query(
+        _q_warp_kernel("q1", 2.0), localref.sql_warp_q1_checksums),
+    "warp_q3_checksums": Query(
+        _q_warp_kernel("q3", 2.0), localref.sql_warp_q3_checksums),
+    "warp_cubicspline_checksums": Query(
+        _q_warp_kernel("cubicspline", 0.75),
+        localref.sql_warp_cubicspline_checksums),
+    "overview_rms_checksums": Query(
+        _q_overview_kernel("rms", 2), localref.sql_overview_rms_checksums),
+    "raster_stats": Query(_q_raster_stats, localref.sql_raster_stats),
+    "raster_histogram": Query(
+        _q_raster_histogram, localref.sql_raster_histogram),
+    "windowed_read": Query(_q_windowed_read, localref.sql_windowed_read),
+    "retile_checksums": Query(
+        _q_retile_checksums, localref.sql_retile_checksums),
+    "overview_cubic_checksums": Query(
+        _q_overview_conv("cubic", 4), localref.sql_overview_cubic_checksums),
+    "overview_lanczos_checksums": Query(
+        _q_overview_conv("lanczos", 4),
+        localref.sql_overview_lanczos_checksums),
+    "overlay_intersection": Query(_q_overlay_intersection, _OVERLAY_CTE + """
             SELECT doc_id, zone_id, eas_id, ROUND(pa, 6) AS piece_area
             FROM pieces WHERE pa > 0
-        """,
-        "overlay_concave": f"""
+        """, suite=True),
+    "overlay_union": Query(
+        _q_overlay_union, partial(_overlay_union_sql, "union"), suite=True),
+    "overlay_symdifference": Query(
+        _q_overlay_symdiff, partial(_overlay_union_sql, "symdiff")),
+    "overlay_update": Query(
+        _q_overlay_update, partial(_overlay_union_sql, "update")),
+    "overlay_concave": Query(_q_overlay_concave, f"""
             WITH zs AS (
               SELECT zid AS zone_id,
                      -180.0 + CAST(zid // {ZONE_G} AS DOUBLE) * {360.0 / ZONE_G} AS zx0,
@@ -8646,18 +8724,18 @@ def _oracle_sql_static() -> dict[str, str]:
             )
             SELECT doc_id, zone_id, ROUND(pa, 6) AS piece_area
             FROM p WHERE pa > 1e-9
-        """,
-        "overlay_clip": _OVERLAY_CTE + """
+        """),
+    "overlay_clip": Query(_q_overlay_clip, _OVERLAY_CTE + """
             SELECT doc_id, ROUND(covered, 6) AS clip_area
             FROM cov WHERE nhit > 0
-        """,
-        "overlay_erase": _OVERLAY_CTE + """
+        """),
+    "overlay_erase": Query(_q_overlay_erase, _OVERLAY_CTE + """
             SELECT b.doc_id,
                    ROUND(GREATEST(0.0, (x1 - x0) * (y1 - y0)
                          - COALESCE(c.covered, 0.0)), 6) AS erase_area
             FROM b LEFT JOIN cov c USING (doc_id)
-        """,
-        "overlay_identity": _OVERLAY_CTE + """
+        """),
+    "overlay_identity": Query(_q_overlay_identity, _OVERLAY_CTE + """
             SELECT doc_id, zone_id, ROUND(pa, 6) AS piece_area
             FROM pieces WHERE pa > 0
             UNION ALL
@@ -8667,8 +8745,21 @@ def _oracle_sql_static() -> dict[str, str]:
             FROM b LEFT JOIN cov c USING (doc_id)
             WHERE GREATEST(0.0, (x1 - x0) * (y1 - y0)
                   - COALESCE(c.covered, 0.0)) > 1e-9
-        """,
-        "geometry_segmentize": f"""
+        """),
+    "geometry_functions": Query(_q_geometry_functions, f"""
+            WITH b AS (
+              SELECT doc_id, {_LON} AS lon, {_LAT} AS lat, {_HALF} AS h
+              FROM documents WHERE doc_id < 200
+            )
+            SELECT doc_id,
+                   ROUND((2 * h) * (2 * h), 6) AS area,
+                   ROUND((2 * h) * (2 * h), 6) AS area_wkb,
+                   ROUND(lon, 6) AS cx,
+                   ROUND(lat, 6) AS cy,
+                   ROUND(0.5 * 120 * 0.25 * SIN(2 * PI() / 120), 6) AS buf_area
+            FROM b
+        """),
+    "geometry_segmentize": Query(_q_geometry_segmentize, f"""
             WITH b AS (
               SELECT doc_id, FLOOR(({_LON})*8)/8 AS lon8,
                      FLOOR(({_LAT})*8)/8 AS lat8,
@@ -8679,8 +8770,8 @@ def _oracle_sql_static() -> dict[str, str]:
                    (2*dx+1) * (lon8 + dx/2) AS sum_x,
                    (2*dx+1) * lat8 AS sum_y
             FROM b
-        """,
-        "geometry_explode": f"""
+        """),
+    "geometry_explode": Query(_q_geometry_explode, f"""
             WITH b AS (
               SELECT doc_id, FLOOR(({_LON})*8)/8 AS lon8,
                      FLOOR(({_LAT})*8)/8 AS lat8
@@ -8693,8 +8784,92 @@ def _oracle_sql_static() -> dict[str, str]:
             SELECT doc_id, 1, 4.0,
                    ROUND(lon8 + 3.0, 6), ROUND(lat8 + 1.0, 6)
             FROM b
-        """,
-        "geometry_wrapdateline": f"""
+        """),
+    "lineref": Query(_q_lineref, f"""
+            WITH b AS (
+              SELECT doc_id,
+                     ({_LON} - {_HALF}) AS x0, ({_LON} + {_HALF}) AS x1,
+                     ({_LAT} - {_HALF}) AS y0, ({_LAT} + {_HALF}) AS y1
+              FROM documents WHERE doc_id < 500
+            ), c AS (
+              SELECT doc_id, x0, x1, y0, y1,
+                     x1 - x0 AS w, y1 - y0 AS h
+              FROM b
+            ), m AS (
+              SELECT *, 0.25 * (w + h) AS m1, 0.75 * (w + h) AS m2,
+                     (x0 + 0.25 * w) AS qx, (y0 + 0.125 * h) AS qy
+              FROM c
+            ), r AS (
+              SELECT *, m1 / w AS r1, (m2 - w) / h AS r2,
+                     ((qx - x0) * w / (w * w)) * w AS locm
+              FROM m
+            )
+            SELECT doc_id,
+                   printf('POINT(%.7f %.7f)',
+                          x0 * (1.0 - r1) + x1 * r1,
+                          y0 * (1.0 - r1) + y0 * r1) AS ip,
+                   ROUND(locm, 6) AS loc_m,
+                   printf('LINESTRING(%.7f %.7f, %.7f %.7f, %.7f %.7f)',
+                          x0 * (1.0 - r1) + x1 * r1,
+                          y0 * (1.0 - r1) + y0 * r1,
+                          x1, y0,
+                          x1 * (1.0 - r2) + x1 * r2,
+                          y0 * (1.0 - r2) + y1 * r2) AS sub
+            FROM r
+        """, suite=True),
+    "lineref_create": Query(_q_lineref_create, f"""
+            WITH b AS (
+              SELECT doc_id,
+                     ({_LON} - {_HALF}) AS x0, ({_LON} + {_HALF}) AS x1,
+                     ({_LAT} - {_HALF}) AS y0, ({_LAT} + {_HALF}) AS y1
+              FROM documents WHERE doc_id < 300
+            ), c AS (
+              SELECT doc_id, x0, x1, y0, y1,
+                     x1 - x0 AS w, y1 - y0 AS h,
+                     (x1 - x0) + (y1 - y0) AS len
+              FROM b
+            ), m AS (
+              SELECT *, 0.375 * len AS step FROM c
+            ), r AS (
+              SELECT *,
+                     ((1.0 * step) - 0.0) / w AS r0,
+                     ((LEAST(len, 2.0 * step)) - w) / h AS re1,
+                     ((2.0 * step) - w) / h AS rb2,
+                     (len - w) / h AS re2
+              FROM m
+            )
+            SELECT doc_id, CAST(0 AS INTEGER) AS part,
+                   ROUND(0.0 * step, 6) AS beg,
+                   ROUND(1.0 * step, 6) AS "end",
+                   CAST(1.0 AS DOUBLE) AS scale,
+                   printf('LINESTRING(%.7f %.7f, %.7f %.7f, %.7f %.7f)',
+                          x0, y0, x0, y0,
+                          x0 * (1.0 - r0) + x1 * r0,
+                          y0 * (1.0 - r0) + y0 * r0) AS sub
+            FROM r
+            UNION ALL
+            SELECT doc_id, 1,
+                   ROUND(1.0 * step, 6), ROUND(LEAST(len, 2.0 * step), 6),
+                   CAST(1.0 AS DOUBLE),
+                   printf('LINESTRING(%.7f %.7f, %.7f %.7f, %.7f %.7f)',
+                          x0 * (1.0 - r0) + x1 * r0,
+                          y0 * (1.0 - r0) + y0 * r0,
+                          x1, y0,
+                          x1 * (1.0 - re1) + x1 * re1,
+                          y0 * (1.0 - re1) + y1 * re1)
+            FROM r
+            UNION ALL
+            SELECT doc_id, 2,
+                   ROUND(2.0 * step, 6), ROUND(len, 6),
+                   CAST(1.0 AS DOUBLE),
+                   printf('LINESTRING(%.7f %.7f, %.7f %.7f)',
+                          x1 * (1.0 - rb2) + x1 * rb2,
+                          y0 * (1.0 - rb2) + y1 * rb2,
+                          x1 * (1.0 - re2) + x1 * re2,
+                          y0 * (1.0 - re2) + y1 * re2)
+            FROM r
+        """, suite=True),
+    "geometry_wrapdateline": Query(_q_geometry_wrapdateline, f"""
             WITH b AS (
               SELECT doc_id, FLOOR(({_LON})*8)/8/2 + 170.0 AS x0,
                      FLOOR(({_LAT})*8)/8 AS y0
@@ -8718,21 +8893,8 @@ def _oracle_sql_static() -> dict[str, str]:
                    ROUND(y0 + (180.0 - x0)/2.0, 6),
                    ROUND(x1 - 360.0, 6), ROUND(y1, 6)
             FROM c WHERE crosses
-        """,
-        "geometry_functions": f"""
-            WITH b AS (
-              SELECT doc_id, {_LON} AS lon, {_LAT} AS lat, {_HALF} AS h
-              FROM documents WHERE doc_id < 200
-            )
-            SELECT doc_id,
-                   ROUND((2 * h) * (2 * h), 6) AS area,
-                   ROUND((2 * h) * (2 * h), 6) AS area_wkb,
-                   ROUND(lon, 6) AS cx,
-                   ROUND(lat, 6) AS cy,
-                   ROUND(0.5 * 120 * 0.25 * SIN(2 * PI() / 120), 6) AS buf_area
-            FROM b
-        """,
-        "geometry_predicates": f"""
+        """, suite=True),
+    "geometry_predicates": Query(_q_geometry_predicates, f"""
             WITH b AS (
               SELECT doc_id, {_LON} - {_HALF} AS x0, {_LON} + {_HALF} AS x1,
                      {_LAT} - {_HALF} AS y0, {_LAT} + {_HALF} AS y1
@@ -8753,8 +8915,10 @@ def _oracle_sql_static() -> dict[str, str]:
                     AND NOT (ax0 <= bx0 AND ax1 >= bx1 AND ay0 <= by0 AND ay1 >= by1)
                     AND NOT (bx0 <= ax0 AND bx1 >= ax1 AND by0 <= ay0 AND by1 >= ay1)) AS overl
             FROM p
-        """,
-        "geometry_constructive": f"""
+        """),
+    "geometry_boolean": Query(
+        _q_geometry_boolean, localref.sql_geometry_boolean, suite=True),
+    "geometry_constructive": Query(_q_geometry_constructive, f"""
             WITH b AS (
               SELECT doc_id, {_LON} - {_HALF} AS x0, {_LON} + {_HALF} AS x1,
                      {_LAT} - {_HALF} AS y0, {_LAT} + {_HALF} AS y1
@@ -8782,87 +8946,8 @@ def _oracle_sql_static() -> dict[str, str]:
                    FALSE AS bow_simple,
                    5 AS n_tri
             FROM p
-        """,
-        "mdarray_view": """
-            SELECT CAST(b.range AS BIGINT) AS j, CAST(a.range AS BIGINT) AS i,
-                   CAST((2 + 3 * a.range) * 7919
-                        + (2 * b.range) * 131 + 5 AS BIGINT) AS value
-            FROM range(6) a CROSS JOIN range(8) b
-        """,
-        "mdarray_unscale": """
-            SELECT CAST(a.range AS BIGINT) AS i, CAST(b.range AS BIGINT) AS j,
-                   CASE WHEN ((4 * a.range) * 7919
-                              + (1 + 3 * b.range) * 131 + 2) % 97 = 13
-                        THEN NULL
-                        ELSE CAST(((4 * a.range) * 7919
-                                   + (1 + 3 * b.range) * 131 + 2) % 97
-                                  AS DOUBLE) * 0.5 + 10.0 END AS value
-            FROM range(5) a CROSS JOIN range(5) b
-        """,
-        "mdim_translate": """
-            SELECT CAST(a.range AS BIGINT) AS xo, CAST(b.range AS BIGINT) AS yo,
-                   CAST(((2 + 2 * b.range) * 17 + 9 * a.range) % 89
-                        AS DOUBLE) * 0.25 - 1.0 AS value
-            FROM range(8) a CROSS JOIN range(13) b
-        """,
-        "mdarray_stats": """
-            WITH v AS (
-              SELECT CAST((a.range * 7919 + b.range * 131 + c.range) % 97
-                          AS DOUBLE) AS x
-              FROM range(20) a CROSS JOIN range(16) b CROSS JOIN range(8) c
-            ), f AS (SELECT x FROM v WHERE x <> 0.0)
-            SELECT MIN(x) AS vmin, MAX(x) AS vmax,
-                   ROUND(SUM(x) / COUNT(*), 6) AS mean,
-                   ROUND(SQRT(SUM(x * x) / COUNT(*)
-                              - (SUM(x) / COUNT(*)) * (SUM(x) / COUNT(*))),
-                         6) AS std,
-                   COUNT(*) AS valid_count
-            FROM f
-        """,
-        "streaming_dedup": """
-            SELECT DISTINCT user_id, event_type FROM events
-        """,
-        "mdarray_roundtrip": """
-            SELECT CAST(a.range AS BIGINT) AS y, CAST(b.range AS BIGINT) AS x,
-                   CAST(((100 + 7 * a.range) * 131
-                         + (37 + 11 * b.range)) % 251 AS DOUBLE) AS value
-            FROM range(43) a CROSS JOIN range(43) b
-        """,
-        "mdarray_mask": """
-            SELECT CAST(a.range AS BIGINT) AS i, CAST(c.range AS BIGINT) AS k,
-                   CASE WHEN ((5 * a.range) * 7919 + 3 * 131
-                              + (2 * c.range)) % 97 = 0
-                        THEN 0 ELSE 1 END AS value
-            FROM range(4) a CROSS JOIN range(4) c
-        """,
-        "ogr_style": _ogr_style_sql(),
-        "ogr2ogr_translate": _ogr2ogr_sql(),
-        "streaming_window": """
-            WITH m AS (SELECT MAX(ts) AS mx FROM events),
-            a AS (
-              SELECT date_trunc('hour', ts) AS wstart, event_type,
-                     COUNT(*) AS n, ROUND(SUM(value), 6) AS vsum
-              FROM events GROUP BY 1, 2
-            )
-            SELECT a.wstart, a.event_type, a.n, a.vsum
-            FROM a, m
-            WHERE a.wstart + INTERVAL 1 HOUR <= m.mx - INTERVAL 10 MINUTE
-        """,
-        "mdarray_transpose": """
-            WITH v AS (
-              SELECT CAST(kk.range AS BIGINT) AS k,
-                     CAST(ii.range AS BIGINT) AS i,
-                     CAST(jj.range AS BIGINT) AS j,
-                     (2 + 2 * ii.range) * 100 + (3 * jj.range) * 10
-                       + (1 + kk.range) AS raw
-              FROM range(4) kk CROSS JOIN range(4) ii CROSS JOIN range(4) jj
-            )
-            SELECT k, i, j,
-                   CASE WHEN raw = 432 THEN NULL
-                        ELSE CAST(raw AS DOUBLE) * 0.5 + 100.0 END AS value
-            FROM v
-        """,
-        "rasterize_z": f"""
+        """),
+    "rasterize_z": Query(_q_rasterize_z, f"""
             WITH p AS (
               SELECT doc_id, {_LON} AS lon, {_LAT} AS lat,
                      CAST(doc_id % 97 AS DOUBLE) AS z
@@ -8876,11 +8961,106 @@ def _oracle_sql_static() -> dict[str, str]:
             SELECT gx, gy, ROUND(SUM(v), 6) AS value
             FROM g WHERE gx >= 0 AND gx < 64 AND gy >= 0 AND gy < 64
             GROUP BY gx, gy
-        """,
-        "rasterize_counts": _rasterize_sql(),
-        "rasterize_invert": _rasterize_invert_sql(),
-        "cog_plan": _cog_plan_sql(),
-        "rasterize_alltouched": f"""
+        """),
+    "rasterize_lines_z": Query(
+        _q_rasterize_lines_z, localref.sql_rasterize_lines_z),
+    "dem_igor_checksums": Query(
+        _q_hillshade_igor, localref.sql_dem_igor_checksums),
+    "mdarray_view": Query(_q_mdarray_view, """
+            SELECT CAST(b.range AS BIGINT) AS j, CAST(a.range AS BIGINT) AS i,
+                   CAST((2 + 3 * a.range) * 7919
+                        + (2 * b.range) * 131 + 5 AS BIGINT) AS value
+            FROM range(6) a CROSS JOIN range(8) b
+        """),
+    "mdarray_unscale": Query(_q_mdarray_unscale, """
+            SELECT CAST(a.range AS BIGINT) AS i, CAST(b.range AS BIGINT) AS j,
+                   CASE WHEN ((4 * a.range) * 7919
+                              + (1 + 3 * b.range) * 131 + 2) % 97 = 13
+                        THEN NULL
+                        ELSE CAST(((4 * a.range) * 7919
+                                   + (1 + 3 * b.range) * 131 + 2) % 97
+                                  AS DOUBLE) * 0.5 + 10.0 END AS value
+            FROM range(5) a CROSS JOIN range(5) b
+        """),
+    "mdim_translate": Query(_q_mdim_translate, """
+            SELECT CAST(a.range AS BIGINT) AS xo, CAST(b.range AS BIGINT) AS yo,
+                   CAST(((2 + 2 * b.range) * 17 + 9 * a.range) % 89
+                        AS DOUBLE) * 0.25 - 1.0 AS value
+            FROM range(8) a CROSS JOIN range(13) b
+        """, suite=True),
+    "mdarray_transpose": Query(_q_mdarray_transpose, """
+            WITH v AS (
+              SELECT CAST(kk.range AS BIGINT) AS k,
+                     CAST(ii.range AS BIGINT) AS i,
+                     CAST(jj.range AS BIGINT) AS j,
+                     (2 + 2 * ii.range) * 100 + (3 * jj.range) * 10
+                       + (1 + kk.range) AS raw
+              FROM range(4) kk CROSS JOIN range(4) ii CROSS JOIN range(4) jj
+            )
+            SELECT k, i, j,
+                   CASE WHEN raw = 432 THEN NULL
+                        ELSE CAST(raw AS DOUBLE) * 0.5 + 100.0 END AS value
+            FROM v
+        """, suite=True),
+    "mdarray_stats": Query(_q_mdarray_stats, """
+            WITH v AS (
+              SELECT CAST((a.range * 7919 + b.range * 131 + c.range) % 97
+                          AS DOUBLE) AS x
+              FROM range(20) a CROSS JOIN range(16) b CROSS JOIN range(8) c
+            ), f AS (SELECT x FROM v WHERE x <> 0.0)
+            SELECT MIN(x) AS vmin, MAX(x) AS vmax,
+                   ROUND(SUM(x) / COUNT(*), 6) AS mean,
+                   ROUND(SQRT(SUM(x * x) / COUNT(*)
+                              - (SUM(x) / COUNT(*)) * (SUM(x) / COUNT(*))),
+                         6) AS std,
+                   COUNT(*) AS valid_count
+            FROM f
+        """),
+    "mdarray_mask": Query(_q_mdarray_mask, """
+            SELECT CAST(a.range AS BIGINT) AS i, CAST(c.range AS BIGINT) AS k,
+                   CASE WHEN ((5 * a.range) * 7919 + 3 * 131
+                              + (2 * c.range)) % 97 = 0
+                        THEN 0 ELSE 1 END AS value
+            FROM range(4) a CROSS JOIN range(4) c
+        """),
+    "mdarray_classic_checksums": Query(
+        _q_mdarray_classic, localref.sql_mdarray_classic_checksums),
+    "mdarray_roundtrip": Query(_q_mdarray_roundtrip, """
+            SELECT CAST(a.range AS BIGINT) AS y, CAST(b.range AS BIGINT) AS x,
+                   CAST(((100 + 7 * a.range) * 131
+                         + (37 + 11 * b.range)) % 251 AS DOUBLE) AS value
+            FROM range(43) a CROSS JOIN range(43) b
+        """),
+    "streaming_dedup": Query(_q_streaming_dedup, """
+            SELECT DISTINCT user_id, event_type FROM events
+        """),
+    "graph_ksp": Query(_q_graph_ksp, localref.sql_graph_ksp, suite=True),
+    "srsinfo_report": Query(_q_srsinfo, localref.sql_srsinfo),
+    "vshift_checksums": Query(
+        _q_vshift_checksums, localref.sql_vshift_checksums),
+    "surf_gcps": Query(_q_surf_gcps, localref.sql_surf_gcps, suite=True),
+    "streaming_window": Query(_q_streaming_window, """
+            WITH m AS (SELECT MAX(ts) AS mx FROM events),
+            a AS (
+              SELECT date_trunc('hour', ts) AS wstart, event_type,
+                     COUNT(*) AS n, ROUND(SUM(value), 6) AS vsum
+              FROM events GROUP BY 1, 2
+            )
+            SELECT a.wstart, a.event_type, a.n, a.vsum
+            FROM a, m
+            WHERE a.wstart + INTERVAL 1 HOUR <= m.mx - INTERVAL 10 MINUTE
+        """),
+    "ogr_style": Query(_q_ogr_style, _ogr_style_sql),
+    "ogr2ogr_translate": Query(_q_ogr2ogr_translate, _ogr2ogr_sql),
+    "compression_ratio": Query(
+        _q_compression_ratio, localref.sql_compression_ratio),
+    "dedup_keep_best": Query(_q_dedup_keep_best, localref.sql_dedup_keep_best),
+    "cutline_blend": Query(_q_cutline_blend, localref.sql_cutline_blend),
+    "overlay_concave_wkt": Query(
+        _q_overlay_concave_wkt, localref.sql_overlay_concave_wkt, suite=True),
+    "rasterize_counts": Query(_q_rasterize_counts, _rasterize_sql, suite=True),
+    "rasterize_invert": Query(_q_rasterize_invert, _rasterize_invert_sql),
+    "rasterize_alltouched": Query(_q_rasterize_alltouched, f"""
             WITH px AS (
               SELECT a.range AS gx, b.range AS gy
               FROM range(60) a CROSS JOIN range(60) b
@@ -8906,8 +9086,8 @@ def _oracle_sql_static() -> dict[str, str]:
                    CAST(COALESCE(v, -1) AS BIGINT) AS value,
                    CAST(COUNT(*) AS BIGINT) AS npix
             FROM m GROUP BY tile_x, tile_y, value
-        """,
-        "rasterize_add": f"""
+        """),
+    "rasterize_add": Query(_q_rasterize_add, f"""
             WITH px AS (
               SELECT a.range AS gx, b.range AS gy
               FROM range(512) a CROSS JOIN range(512) b
@@ -8936,22 +9116,24 @@ def _oracle_sql_static() -> dict[str, str]:
                    CAST(v AS BIGINT) AS value,
                    CAST(COUNT(*) AS BIGINT) AS npix
             FROM m GROUP BY tile_x, tile_y, value
-        """,
-        "raster_locate": _locate_sql(),
-        "hstore_get": """
+        """),
+    "raster_locate": Query(_q_raster_locate, _locate_sql),
+    "hstore_get": Query(_q_hstore, """
             SELECT n_nationkey, n_name AS name_val,
                    CAST(n_regionkey AS VARCHAR) AS rk_val,
                    CAST(NULL AS VARCHAR) AS missing_val
             FROM nation
-        """,
-        "embed_neardup": """
+        """),
+    "embed_neardup": Query(_q_embed_neardup, """
             SELECT a.vec_id AS id_a, b.vec_id AS id_b
             FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
             WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.4
-        """,
-        "kmeans_embeddings": _cluster_sql("kmeans"),
-        "semdedup_pairs": _cluster_sql("semdedup"),
-        "idw_grid": f"""
+        """, suite=True),
+    "kmeans_embeddings": Query(
+        _q_kmeans_embeddings, partial(_cluster_sql, "kmeans"), suite=True),
+    "semdedup_pairs": Query(
+        _q_semdedup_pairs, partial(_cluster_sql, "semdedup")),
+    "idw_grid": Query(_q_idw_grid, f"""
             WITH pts AS (
               SELECT {_LON} AS lon, {_LAT} AS lat,
                      CAST(doc_id % 97 AS DOUBLE) AS v
@@ -8975,9 +9157,11 @@ def _oracle_sql_static() -> dict[str, str]:
             SELECT CAST(gx AS INTEGER) AS gx, CAST(gy AS INTEGER) AS gy,
                    ROUND(num / den, 6) AS value
             FROM j
-        """,
-        "grid_nearest": _grid_sql("ROUND(arg_min(v, d2), 6)", True),
-        "grid_invdistnn": f"""
+        """),
+    "grid_nearest": Query(
+        _q_grid_kernel("nearest"),
+        partial(_grid_sql, "ROUND(arg_min(v, d2), 6)", True)),
+    "grid_invdistnn": Query(_q_grid_kernel("invdistnn"), f"""
             WITH pts AS (
               SELECT {_LON} AS lon, {_LAT} AS lat,
                      CAST(doc_id % 97 AS DOUBLE) AS v
@@ -9004,27 +9188,19 @@ def _oracle_sql_static() -> dict[str, str]:
             SELECT CAST(gx AS INTEGER) AS gx, CAST(gy AS INTEGER) AS gy,
                    ROUND(SUM(v / d2) / SUM(1.0 / d2), 6) AS value
             FROM r WHERE rn <= 12 GROUP BY gx, gy
-        """,
-        "grid_average": _grid_sql("ROUND(AVG(v), 6)", True),
-        "grid_ellipse": _grid_ellipse_sql(),
-        "gdal_edit_gt": _gdal_edit_sql(),
-        "gdalmove_gt": _gdalmove_sql(),
-        "checkpoint_lineage": """
-            SELECT 'filtered' AS stage,
-                   (SELECT COUNT(*) FROM documents WHERE doc_id < 3000)
-                     AS rows, CAST(1 AS BIGINT) AS builds
-            UNION ALL
-            SELECT 'by_lang' AS stage,
-                   (SELECT COUNT(DISTINCT lang) FROM documents
-                    WHERE doc_id < 3000) AS rows,
-                   CAST(1 AS BIGINT) AS builds
-        """,
-        "grid_count": _grid_sql(
-            "CAST(SUM(CASE WHEN d2 <= 900.0 THEN 1 ELSE 0 END) AS DOUBLE)", False
-        ),
-        "grid_range": _grid_sql("ROUND(MAX(v) - MIN(v), 6)", True),
-        "grid_avgdist": _grid_sql("ROUND(AVG(SQRT(d2)), 6)", True),
-        "grid_avgdist_pts": f"""
+        """),
+    "grid_average": Query(
+        _q_grid_kernel("average"),
+        partial(_grid_sql, "ROUND(AVG(v), 6)", True)),
+    "grid_count": Query(
+        _q_grid_kernel("count"),
+        partial(_grid_sql,
+                "CAST(SUM(CASE WHEN d2 <= 900.0 THEN 1 ELSE 0 END) AS DOUBLE)",
+                False)),
+    "grid_avgdist": Query(
+        _q_grid_kernel("average_distance"),
+        partial(_grid_sql, "ROUND(AVG(SQRT(d2)), 6)", True)),
+    "grid_avgdist_pts": Query(_q_grid_kernel("average_distance_pts"), f"""
             WITH pts AS (
               SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents
             ), px AS (
@@ -9047,8 +9223,18 @@ def _oracle_sql_static() -> dict[str, str]:
             FROM hit a JOIN hit b
               ON a.gx = b.gx AND a.gy = b.gy AND a.doc_id < b.doc_id
             GROUP BY a.gx, a.gy
-        """,
-        "jaccard_dedup": """
+        """),
+    "grid_linear": Query(_q_grid_linear, localref.sql_grid_linear, suite=True),
+    "grid_ellipse": Query(_q_grid_ellipse, _grid_ellipse_sql),
+    "grid_range": Query(
+        _q_grid_kernel("range"),
+        partial(_grid_sql, "ROUND(MAX(v) - MIN(v), 6)", True)),
+    "contour_polylines": Query(
+        _q_contour_polylines, localref.sql_contour_polylines, suite=True),
+    "color_relief_checksums": Query(
+        _q_color_relief,
+        partial(localref.sql_color_relief_checksums, _RELIEF_RAMP)),
+    "jaccard_dedup": Query(_q_jaccard_dedup, """
             WITH t AS (
               SELECT doc_id,
                      list_filter(regexp_split_to_array(LOWER(text), '\\s+'),
@@ -9068,28 +9254,44 @@ def _oracle_sql_static() -> dict[str, str]:
               FROM e a JOIN e b ON a.gram = b.gram AND a.doc_id < b.doc_id
               GROUP BY a.doc_id, b.doc_id
             ) WHERE CAST(inter AS DOUBLE) / (sa + sb - inter) >= 0.5
-        """,
-        "semi_anti_join": """
-            SELECT c_custkey AS custkey, 'semi' AS kind FROM customer c
-            WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-            UNION ALL
-            SELECT c_custkey AS custkey, 'anti' AS kind FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        """,
-        "custom_func": """
-            SELECT CAST(FLOOR(c_acctbal / 1000.0) AS BIGINT) AS band,
-                   COUNT(*) AS n
-            FROM customer GROUP BY 1
-        """,
-        "ogr_sql_text_agg": """
+        """),
+    "sql_dialect": Query(_q_sql_dialect, """
+            SELECT l.l_returnflag AS rf, COUNT(*) AS cnt,
+                   ROUND(SUM(l.l_quantity), 3) AS sum_qty,
+                   COUNT(DISTINCT o.o_custkey) AS custs
+            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+            GROUP BY l.l_returnflag
+        """),
+    "ogr_sql_text": Query(_q_ogr_sql_text, """
+            SELECT c_custkey, RIGHT(c_name, 3) AS tail,
+                   c_acctbal / 2 AS half
+            FROM customer
+            WHERE LOWER(c_mktsegment) = 'building'
+              AND c_acctbal BETWEEN 100 AND 5000
+            ORDER BY c_acctbal DESC, c_custkey
+            LIMIT 20 OFFSET 3
+        """),
+    "ogr_sql_text_agg": Query(_q_ogr_sql_text_agg, """
             SELECT COUNT(*) AS n, COUNT(DISTINCT c_mktsegment) AS nseg,
                    ROUND(MIN(c_acctbal), 3) AS mn,
                    ROUND(MAX(c_acctbal), 3) AS mx,
                    ROUND(SUM(c_acctbal), 3) AS total,
                    ROUND(AVG(c_acctbal), 3) AS av
             FROM customer WHERE c_acctbal > 0
-        """,
-        "ogr_sql_text_union": """
+        """),
+    "semi_anti_join": Query(_q_semi_anti, """
+            SELECT c_custkey AS custkey, 'semi' AS kind FROM customer c
+            WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+            UNION ALL
+            SELECT c_custkey AS custkey, 'anti' AS kind FROM customer c
+            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+        """),
+    "custom_func": Query(_q_custom_func, """
+            SELECT CAST(FLOOR(c_acctbal / 1000.0) AS BIGINT) AS band,
+                   COUNT(*) AS n
+            FROM customer GROUP BY 1
+        """),
+    "ogr_sql_text_union": Query(_q_ogr_sql_text_union, """
             SELECT CAST(c_custkey AS BIGINT) AS k,
                    UPPER(c_mktsegment) AS tag,
                    CAST(TRUNC(c_acctbal) AS BIGINT) AS bal
@@ -9098,17 +9300,8 @@ def _oracle_sql_static() -> dict[str, str]:
             SELECT CAST(s_suppkey AS BIGINT) AS k, 'SUPP' AS tag,
                    CAST(TRUNC(s_acctbal) AS BIGINT) AS bal
             FROM supplier WHERE s_suppkey <= 40
-        """,
-        "ogr_sql_text": """
-            SELECT c_custkey, RIGHT(c_name, 3) AS tail,
-                   c_acctbal / 2 AS half
-            FROM customer
-            WHERE LOWER(c_mktsegment) = 'building'
-              AND c_acctbal BETWEEN 100 AND 5000
-            ORDER BY c_acctbal DESC, c_custkey
-            LIMIT 20 OFFSET 3
-        """,
-        "ogr_sql_special_fields": f"""
+        """),
+    "ogr_sql_special_fields": Query(_q_ogr_sql_special_fields, f"""
             WITH b AS (
               SELECT doc_id, {_HALF} AS h FROM documents WHERE doc_id < 300
             ), r AS (
@@ -9120,19 +9313,19 @@ def _oracle_sql_static() -> dict[str, str]:
                    ROUND((2 * h) * (2 * h), 6) AS area,
                    CAST(NULL AS VARCHAR) AS style
             FROM r WHERE fid < 120 ORDER BY fid
-        """,
-        "ogr_sql_ddl": """
+        """),
+    "ogr_sql_ddl": Query(_q_ogr_sql_ddl, """
             SELECT c_custkey, c_mktsegment AS segment,
                    CAST(NULL AS BIGINT) AS flag
             FROM customer WHERE LOWER(c_mktsegment) = 'building'
             ORDER BY c_custkey LIMIT 50
-        """,
-        "ogr_sql_spatialfilter": f"""
+        """),
+    "ogr_sql_spatialfilter": Query(_q_ogr_sql_spatialfilter, f"""
             SELECT doc_id FROM documents
             WHERE {_LON} BETWEEN -60 AND 60 AND {_LAT} BETWEEN -40 AND 40
             ORDER BY doc_id
-        """,
-        "geometry_force": f"""
+        """),
+    "geometry_force": Query(_q_geometry_force, f"""
             WITH b AS (
               SELECT doc_id, {_HALF} AS h FROM documents WHERE doc_id < 150
             )
@@ -9142,8 +9335,8 @@ def _oracle_sql_static() -> dict[str, str]:
                    'LINESTRING' AS fl_kind, 3 AS fl_npts,
                    'MULTIPOINT' AS mpt_kind
             FROM b
-        """,
-        "st_sql_funcs": f"""
+        """),
+    "st_sql_funcs": Query(_q_st_sql_funcs, f"""
             WITH b AS (
               SELECT doc_id, {_HALF} AS h FROM documents WHERE doc_id < 150
             )
@@ -9152,9 +9345,13 @@ def _oracle_sql_static() -> dict[str, str]:
                    TRUE AS ia_ok,
                    (doc_id % 2 = 0) AS b_in_a
             FROM b
-        """,
-
-        "gdal2xyz": """
+        """),
+    "ogr_codec": Query(_q_ogr_codec, """
+            SELECT doc_id, LENGTH(text) AS n, TRUE AS roundtrip,
+                   TRUE AS nonempty
+            FROM documents WHERE doc_id < 400
+        """),
+    "gdal2xyz": Query(_q_gdal2xyz, """
             SELECT * FROM (VALUES (0, 0, -20037489.2335, -20027743.5124, 37.0),
               (64, 0, -20035043.2486, -20027743.5124, 229.0),
               (128, 0, -20032597.2637, -20027743.5124, 170.0),
@@ -9220,8 +9417,8 @@ def _oracle_sql_static() -> dict[str, str]:
               (384, 448, -20022813.3241, -20025297.5275, 254.0),
               (448, 448, -20020367.3392, -20025297.5275, 195.0))
             AS t(px, py, gx, gy, value)
-        """,
-        "bm25_rank": """
+        """),
+    "bm25_rank": Query(_q_bm25_rank, """
             WITH tk AS (
               SELECT doc_id,
                      list_filter(string_split_regex(lower(text),
@@ -9255,110 +9452,14 @@ def _oracle_sql_static() -> dict[str, str]:
                        * (tf2 * 2.2 / (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl)))
                    , 4) AS bm25
             FROM w, st
-        """,
-        "gdalcompare_stats": """
+        """),
+    "gdalcompare_stats": Query(_q_gdalcompare, """
             SELECT * FROM (VALUES
               ('same', 1, 262144, 0, 0.0),
               ('plus1', 1, 262144, 262144, 1.0))
             AS t(which, band, n_pixels, n_diff, max_diff)
-        """,
-        "ogr_codec": """
-            SELECT doc_id, LENGTH(text) AS n, TRUE AS roundtrip,
-                   TRUE AS nonempty
-            FROM documents WHERE doc_id < 400
-        """,
-        "sql_dialect": """
-            SELECT l.l_returnflag AS rf, COUNT(*) AS cnt,
-                   ROUND(SUM(l.l_quantity), 3) AS sum_qty,
-                   COUNT(DISTINCT o.o_custkey) AS custs
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-            GROUP BY l.l_returnflag
-        """,
-        "lineref": f"""
-            WITH b AS (
-              SELECT doc_id,
-                     ({_LON} - {_HALF}) AS x0, ({_LON} + {_HALF}) AS x1,
-                     ({_LAT} - {_HALF}) AS y0, ({_LAT} + {_HALF}) AS y1
-              FROM documents WHERE doc_id < 500
-            ), c AS (
-              SELECT doc_id, x0, x1, y0, y1,
-                     x1 - x0 AS w, y1 - y0 AS h
-              FROM b
-            ), m AS (
-              SELECT *, 0.25 * (w + h) AS m1, 0.75 * (w + h) AS m2,
-                     (x0 + 0.25 * w) AS qx, (y0 + 0.125 * h) AS qy
-              FROM c
-            ), r AS (
-              SELECT *, m1 / w AS r1, (m2 - w) / h AS r2,
-                     ((qx - x0) * w / (w * w)) * w AS locm
-              FROM m
-            )
-            SELECT doc_id,
-                   printf('POINT(%.7f %.7f)',
-                          x0 * (1.0 - r1) + x1 * r1,
-                          y0 * (1.0 - r1) + y0 * r1) AS ip,
-                   ROUND(locm, 6) AS loc_m,
-                   printf('LINESTRING(%.7f %.7f, %.7f %.7f, %.7f %.7f)',
-                          x0 * (1.0 - r1) + x1 * r1,
-                          y0 * (1.0 - r1) + y0 * r1,
-                          x1, y0,
-                          x1 * (1.0 - r2) + x1 * r2,
-                          y0 * (1.0 - r2) + y1 * r2) AS sub
-            FROM r
-        """,
-        "lineref_create": f"""
-            WITH b AS (
-              SELECT doc_id,
-                     ({_LON} - {_HALF}) AS x0, ({_LON} + {_HALF}) AS x1,
-                     ({_LAT} - {_HALF}) AS y0, ({_LAT} + {_HALF}) AS y1
-              FROM documents WHERE doc_id < 300
-            ), c AS (
-              SELECT doc_id, x0, x1, y0, y1,
-                     x1 - x0 AS w, y1 - y0 AS h,
-                     (x1 - x0) + (y1 - y0) AS len
-              FROM b
-            ), m AS (
-              SELECT *, 0.375 * len AS step FROM c
-            ), r AS (
-              SELECT *,
-                     ((1.0 * step) - 0.0) / w AS r0,
-                     ((LEAST(len, 2.0 * step)) - w) / h AS re1,
-                     ((2.0 * step) - w) / h AS rb2,
-                     (len - w) / h AS re2
-              FROM m
-            )
-            SELECT doc_id, CAST(0 AS INTEGER) AS part,
-                   ROUND(0.0 * step, 6) AS beg,
-                   ROUND(1.0 * step, 6) AS "end",
-                   CAST(1.0 AS DOUBLE) AS scale,
-                   printf('LINESTRING(%.7f %.7f, %.7f %.7f, %.7f %.7f)',
-                          x0, y0, x0, y0,
-                          x0 * (1.0 - r0) + x1 * r0,
-                          y0 * (1.0 - r0) + y0 * r0) AS sub
-            FROM r
-            UNION ALL
-            SELECT doc_id, 1,
-                   ROUND(1.0 * step, 6), ROUND(LEAST(len, 2.0 * step), 6),
-                   CAST(1.0 AS DOUBLE),
-                   printf('LINESTRING(%.7f %.7f, %.7f %.7f, %.7f %.7f)',
-                          x0 * (1.0 - r0) + x1 * r0,
-                          y0 * (1.0 - r0) + y0 * r0,
-                          x1, y0,
-                          x1 * (1.0 - re1) + x1 * re1,
-                          y0 * (1.0 - re1) + y1 * re1)
-            FROM r
-            UNION ALL
-            SELECT doc_id, 2,
-                   ROUND(2.0 * step, 6), ROUND(len, 6),
-                   CAST(1.0 AS DOUBLE),
-                   printf('LINESTRING(%.7f %.7f, %.7f %.7f)',
-                          x1 * (1.0 - rb2) + x1 * rb2,
-                          y0 * (1.0 - rb2) + y1 * rb2,
-                          x1 * (1.0 - re2) + x1 * re2,
-                          y0 * (1.0 - re2) + y1 * re2)
-            FROM r
-        """,
-        "sqlite_dialect_exec": f"""
+        """),
+    "sqlite_dialect_exec": Query(_q_sqlite_dialect_exec, f"""
             WITH sq AS (
               SELECT lang,
                      (({_LON} + {_HALF}) - ({_LON} - {_HALF}))
@@ -9372,28 +9473,149 @@ def _oracle_sql_static() -> dict[str, str]:
             SELECT lang, n, area_sum,
                    RANK() OVER (ORDER BY n DESC, lang) AS rnk
             FROM g
-        """,
-        "hstore_text": """
+        """),
+    "ogr_style_query": Query(
+        _q_ogr_style_query, _ogr_style_query_sql, suite=True),
+    "hstore_text": Query(_q_hstore_text, """
             SELECT n_nationkey, n_name AS name_val,
                    CAST(NULL AS VARCHAR) AS missing_val
             FROM nation ORDER BY n_nationkey
-        """,
-        # tile_index: expected envelope is a closed-form fixture (synth
-        # geotransforms, 3x2 tiles of 256px at zoom-12 resolution)
-        "layer_merge": """
+        """),
+    # tile_index: expected envelope is a closed-form fixture (synth
+    # geotransforms, 3x2 tiles of 256px at zoom-12 resolution)
+    # float association mirrors the engine exactly: per-tile corner
+    # = (origin + tx*256*res) +/- 256*res, then min/max
+    "tile_index": Query(_q_tile_index, f"""
+            SELECT 'byte_like' AS location,
+                   CAST({_R_X0!r} AS DOUBLE) AS xmin,
+                   (CAST({_R_X0!r} AS DOUBLE) + 256.0 * CAST({_R_RES12!r} AS DOUBLE))
+                     - 256.0 * CAST({_R_RES12!r} AS DOUBLE) AS ymin,
+                   (CAST({_R_X0!r} AS DOUBLE) + 512.0 * CAST({_R_RES12!r} AS DOUBLE))
+                     + 256.0 * CAST({_R_RES12!r} AS DOUBLE) AS xmax,
+                   CAST({_R_X0!r} AS DOUBLE) + 512.0 * CAST({_R_RES12!r} AS DOUBLE) AS ymax
+        """),
+    "reproject_3857": Query(_q_reproject_3857, f"""
             SELECT doc_id,
-                   CASE WHEN doc_id < 50 THEN 'UPDATED' ELSE text END AS text
-            FROM documents
-            WHERE NOT (doc_id < 50 AND doc_id % 10 = 0)
-        """,
-        "ogr_special_fields": f"""
-            SELECT doc_id AS fid, 'POLYGON' AS ogr_geometry,
-                   ROUND((({_LON} + {_HALF}) - ({_LON} - {_HALF}))
-                         * (({_LAT} + {_HALF}) - ({_LAT} - {_HALF})), 6)
-                     AS ogr_geom_area
-            FROM documents
-        """,
-        "span_invariance": f"""
+                   lon * 20037508.342789244 / 180.0 AS mx,
+                   ROUND(LN(TAN(((90.0 + lat) * PI()) / 360.0))
+                         / (PI() / 180.0) * (20037508.342789244 / 180.0), 2) AS my
+            FROM (SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents)
+        """),
+    "utm_transform": Query(_q_utm, _utm_sql),
+    "mosaic_checksums": Query(
+        _q_mosaic_checksums, localref.sql_mosaic_checksums),
+    "dem_tri_checksums": Query(_q_dem_tri, localref.sql_dem_tri_checksums),
+    "dem_aspect_checksums": Query(
+        _q_dem_aspect, localref.sql_dem_aspect_checksums),
+    "dem_hillshade_md_checksums": Query(
+        _q_hillshade_md, localref.sql_hillshade_md_checksums),
+    "dem_slope_zt_checksums": Query(
+        _q_dem_slope_zt, localref.sql_dem_slope_zt_checksums),
+    "dem_hillshade_checksums": Query(
+        _q_dem_hillshade, localref.sql_dem_hillshade_checksums),
+    "dem_hillshade_comb_checksums": Query(
+        _q_dem_hillshade_comb,
+        localref.sql_dem_hillshade_comb_checksums, suite=True),
+    "dem_hillshade_zt_checksums": Query(
+        _q_dem_hillshade_zt, localref.sql_dem_hillshade_zt_checksums),
+    "dem_slope_checksums": Query(
+        _q_dem_slope, localref.sql_dem_slope_checksums),
+    "dem_slope_pct_checksums": Query(
+        _q_dem_slope_pct, localref.sql_dem_slope_pct_checksums),
+    "gcp_transform": Query(_q_gcp_transform, _gcp_sql),
+    "tps_transform": Query(_q_tps_transform, _tps_sql),
+    "rpc_transform": Query(_q_rpc_transform, _rpc_sql),
+    "cem_transform": Query(_q_cem_transform, _cem_sql, suite=True),
+    "lcc_transform": Query(_q_conic(3347), partial(_conic_sql, 3347)),
+    "warped_layer_conic": Query(
+        _q_warped_layer_conic, _warped_layer_sql, suite=True),
+    "albers_transform": Query(_q_conic(5070), partial(_conic_sql, 5070)),
+    "polar_stereo_transform": Query(_q_conic(3031), partial(_conic_sql, 3031)),
+    "mercator_transform": Query(_q_conic(3395), partial(_conic_sql, 3395)),
+    "sterea_transform": Query(_q_conic(28992), partial(_conic_sql, 28992)),
+    "eqdc_transform": Query(_q_conic(102031), partial(_conic_sql, 102031)),
+    "aeqd_transform": Query(_q_conic(102016), partial(_conic_sql, 102016)),
+    "krovak_transform": Query(
+        _q_conic(5514), partial(_conic_sql, 5514), suite=True),
+    "nzmg_transform": Query(_q_nzmg_transform, _nzmg_sql, suite=True),
+    "geoid_shift": Query(_q_geoid_shift, localref.sql_geoid_shift, suite=True),
+    "laborde_transform": Query(_q_laborde_transform, _laborde_sql, suite=True),
+    "sinu_transform": Query(_q_conic(54008), partial(_conic_sql, 54008)),
+    "eqc_transform": Query(_q_conic(4087), partial(_conic_sql, 4087)),
+    "moll_transform": Query(_q_conic(54009), partial(_conic_sql, 54009)),
+    "laea_transform": Query(
+        _q_conic(3035), partial(_conic_sql, 3035), suite=True),
+    "cea_transform": Query(
+        _q_conic(6933), partial(_conic_sql, 6933), suite=True),
+    "eqearth_transform": Query(
+        _q_conic(8857), partial(_conic_sql, 8857), suite=True),
+    "hom_swiss_transform": Query(
+        _q_conic(2056), partial(_conic_sql, 2056), suite=True),
+    "hom_rso_transform": Query(
+        _q_conic(29873), partial(_conic_sql, 29873), suite=True),
+    "nztm_transform": Query(
+        _q_conic(2193), partial(_conic_sql, 2193), suite=True),
+    "cassini_transform": Query(
+        _q_conic_mapped(30200), partial(_conic_mapped_sql, 30200)),
+    "polyconic_transform": Query(_q_polyconic_transform, _polyconic_sql),
+    "bonne_transform": Query(_q_conic(54024), partial(_conic_sql, 54024)),
+    "ups_north_transform": Query(
+        _q_conic_mapped(5041), partial(_conic_mapped_sql, 5041)),
+    "tmso_transform": Query(
+        _q_conic_mapped(2054), partial(_conic_mapped_sql, 2054)),
+    "nsidc_ps_north_transform": Query(
+        _q_conic_mapped(3413), partial(_conic_mapped_sql, 3413)),
+    "ups_south_transform": Query(
+        _q_conic_mapped(5042), partial(_conic_mapped_sql, 5042)),
+    "laea_arctic_transform": Query(
+        _q_conic_mapped(3575), partial(_conic_mapped_sql, 3575)),
+    "ease2_north_transform": Query(
+        _q_conic_mapped(6931), partial(_conic_mapped_sql, 6931)),
+    "ease2_south_transform": Query(
+        _q_conic_mapped(6932), partial(_conic_mapped_sql, 6932)),
+    "miller_transform": Query(_q_conic(54003), partial(_conic_sql, 54003)),
+    "gall_transform": Query(_q_conic(54016), partial(_conic_sql, 54016)),
+    "eckert4_transform": Query(_q_eckert4_transform, _eckert4_sql, suite=True),
+    "eckert6_transform": Query(_q_conic(54010), partial(_conic_sql, 54010)),
+    "robinson_transform": Query(
+        _q_robinson_transform, _robinson_sql, suite=True),
+    "goode_transform": Query(_q_goode_transform, _goode_sql, suite=True),
+    "winkel_transform": Query(_q_winkel_transform, _winkel_sql, suite=True),
+    "hammer_transform": Query(_q_conic(54044), partial(_conic_sql, 54044)),
+    "geos_meteosat_transform": Query(
+        _q_conic_mapped(-90360), partial(_conic_mapped_sql, -90360)),
+    "geos_goes_transform": Query(
+        _q_conic_mapped(-90750),
+        partial(_conic_mapped_sql, -90750), suite=True),
+    "crs_to_crs_transform": Query(_q_crs_to_crs, _crs_to_crs_sql),
+    "proj4_import_parity": Query(_q_proj4_import, _proj4_import_sql),
+    "wkt_import_parity": Query(_q_wkt_import, _wkt_import_sql),
+    "helmert_transform": Query(_q_helmert_transform, _helmert_sql, suite=True),
+    "gridshift_transform": Query(
+        _q_gridshift_transform, _gridshift_sql, suite=True),
+    "ntv2_transform": Query(
+        _q_ntv2_transform, localref.sql_ntv2_transform, suite=True),
+    "bng_transform": Query(_q_bng_transform, _bng_sql, suite=True),
+    "nad27_utm_transform": Query(
+        _q_nad27_utm_transform, _nad27_utm_sql, suite=True),
+    "pansharpen_checksums": Query(
+        _q_pansharpen, localref.sql_pansharpen_checksums),
+    "pixel_functions_checksums": Query(
+        _q_pixel_functions,
+        localref.sql_pixel_functions_checksums, suite=True),
+    "pixel_multiband_checksums": Query(
+        _q_pixel_multiband, localref.sql_pixel_multiband_checksums),
+    "pixel_complex_checksums": Query(
+        _q_pixel_complex, localref.sql_pixel_complex_checksums),
+    "polygonize_regions": Query(
+        _q_polygonize, localref.sql_polygonize_regions),
+    "polygonize_8conn": Query(
+        _q_polygonize_8conn, localref.sql_polygonize_8conn),
+    "contour_polygons": Query(
+        _q_contour_polygons, localref.sql_contour_polygons, suite=True),
+    "polygonize_wkt": Query(_q_polygonize_wkt, localref.sql_polygonize_wkt),
+    "contour_totals": Query(_q_contour, localref.sql_contour_totals),
+    "span_invariance": Query(_q_span_invariance, f"""
             WITH b AS (
               SELECT doc_id, text, {_LON} AS lon, {_LAT} AS lat FROM documents
             ), c AS (
@@ -9407,8 +9629,8 @@ def _oracle_sql_static() -> dict[str, str]:
                    'text,media,geom' AS kind_seq,
                    CAST(((lt * 31) + 18) * 31 + lg + 2 AS BIGINT) AS span_sig
             FROM c
-        """,
-        "sessionize": """
+        """),
+    "sessionize": Query(_q_sessionize, """
             WITH g AS (
               SELECT user_id, event_id, ts,
                      CASE WHEN LAG(ts) OVER w IS NULL
@@ -9427,437 +9649,71 @@ def _oracle_sql_static() -> dict[str, str]:
             FROM (SELECT user_id, sid, COUNT(*) AS cnt
                   FROM s GROUP BY user_id, sid)
             GROUP BY user_id
-        """,
-        "graph_sssp": _sssp_oracle_sql(),
-        "graph_sssp_blocked": _sssp_oracle_sql(_SSSP_BLOCKED),
-        "utm_transform": _utm_sql(),
-        "gcp_transform": _gcp_sql(),
-        "tps_transform": _tps_sql(),
-        "rpc_transform": _rpc_sql(),
-        "cem_transform": _cem_sql(),
-        "lcc_transform": _conic_sql(3347),
-        "warped_layer_conic": _warped_layer_sql(),
-        "albers_transform": _conic_sql(5070),
-        "polar_stereo_transform": _conic_sql(3031),
-        "mercator_transform": _conic_sql(3395),
-        "sterea_transform": _conic_sql(28992),
-        "eqdc_transform": _conic_sql(102031),
-        "aeqd_transform": _conic_sql(102016),
-        "krovak_transform": _conic_sql(5514),
-        "nzmg_transform": _nzmg_sql(),
-        "sinu_transform": _conic_sql(54008),
-        "eqc_transform": _conic_sql(4087),
-        "moll_transform": _conic_sql(54009),
-        "laea_transform": _conic_sql(3035),
-        "cea_transform": _conic_sql(6933),
-        "eqearth_transform": _conic_sql(8857),
-        "hom_swiss_transform": _conic_sql(2056),
-        "hom_rso_transform": _conic_sql(29873),
-        "nztm_transform": _conic_sql(2193),
-        "cassini_transform": _conic_mapped_sql(30200),
-        "polyconic_transform": _polyconic_sql(),
-        "bonne_transform": _conic_sql(54024),
-        "ups_north_transform": _conic_mapped_sql(5041),
-        "tmso_transform": _conic_mapped_sql(2054),
-        "nsidc_ps_north_transform": _conic_mapped_sql(3413),
-        "ups_south_transform": _conic_mapped_sql(5042),
-        "laea_arctic_transform": _conic_mapped_sql(3575),
-        "ease2_north_transform": _conic_mapped_sql(6931),
-        "ease2_south_transform": _conic_mapped_sql(6932),
-        "miller_transform": _conic_sql(54003),
-        "gall_transform": _conic_sql(54016),
-        "eckert4_transform": _eckert4_sql(),
-        "eckert6_transform": _conic_sql(54010),
-        "robinson_transform": _robinson_sql(),
-        "goode_transform": _goode_sql(),
-        "winkel_transform": _winkel_sql(),
-        "hammer_transform": _conic_sql(54044),
-        "geos_meteosat_transform": _conic_mapped_sql(-90360),
-        "geos_goes_transform": _conic_mapped_sql(-90750),
-        "crs_to_crs_transform": _crs_to_crs_sql(),
-        "proj4_import_parity": _proj4_import_sql(),
-        "wkt_import_parity": _wkt_import_sql(),
-        "helmert_transform": _helmert_sql(),
-        "gridshift_transform": _gridshift_sql(),
-        "bng_transform": _bng_sql(),
-        "nad27_utm_transform": _nad27_utm_sql(),
-        "reproject_3857": f"""
+        """),
+    "graph_sssp": Query(_q_graph_sssp, _sssp_oracle_sql),
+    "graph_sssp_blocked": Query(
+        _q_graph_sssp_blocked, partial(_sssp_oracle_sql, _SSSP_BLOCKED)),
+    "viewshed_curvature": Query(
+        _q_viewshed_curvature, localref.sql_viewshed_curv_counts),
+    "contour_interval": Query(
+        _q_contour_interval, localref.sql_contour_totals_interval),
+    "proximity_checksums": Query(
+        _q_proximity, localref.sql_proximity_checksums),
+    "proximity_full_checksums": Query(
+        _q_proximity_full, localref.sql_proximity_full_checksums, suite=True),
+    "media_thumbnails": Query(_q_media_thumbs, localref.sql_media_thumbnails),
+    "fillnodata_checksums": Query(
+        _q_fillnodata, localref.sql_fillnodata_checksums),
+    "fillnodata_smooth_checksums": Query(
+        _q_fillnodata_smooth,
+        localref.sql_fillnodata_smooth_checksums, suite=True),
+    "sieve_checksums": Query(_q_sieve, localref.sql_sieve_checksums),
+    "viewshed_counts": Query(_q_viewshed, localref.sql_viewshed_counts),
+    "dither_checksums": Query(
+        _q_dither, localref.sql_dither_checksums, suite=True),
+    "expand_rgb_checksums": Query(
+        _q_expand_rgb, localref.sql_expand_rgb_checksums),
+    "warp_cutline_checksums": Query(
+        _q_warp_cutline, localref.sql_warp_cutline_checksums),
+    "warp_reproject_checksums": Query(
+        _q_warp_reproject, localref.sql_warp_reproject_checksums, suite=True),
+    "warp_datum_checksums": Query(
+        _q_warp_datum, localref.sql_warp_datum_checksums, suite=True),
+    "ogr_special_fields": Query(_q_special_fields, f"""
+            SELECT doc_id AS fid, 'POLYGON' AS ogr_geometry,
+                   ROUND((({_LON} + {_HALF}) - ({_LON} - {_HALF}))
+                         * (({_LAT} + {_HALF}) - ({_LAT} - {_HALF})), 6)
+                     AS ogr_geom_area
+            FROM documents
+        """),
+    "layer_merge": Query(_q_layer_merge, """
             SELECT doc_id,
-                   lon * 20037508.342789244 / 180.0 AS mx,
-                   ROUND(LN(TAN(((90.0 + lat) * PI()) / 360.0))
-                         / (PI() / 180.0) * (20037508.342789244 / 180.0), 2) AS my
-            FROM (SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents)
-        """,
-        # float association mirrors the engine exactly: per-tile corner
-        # = (origin + tx*256*res) +/- 256*res, then min/max
-        "tile_index": f"""
-            SELECT 'byte_like' AS location,
-                   CAST({_R_X0!r} AS DOUBLE) AS xmin,
-                   (CAST({_R_X0!r} AS DOUBLE) + 256.0 * CAST({_R_RES12!r} AS DOUBLE))
-                     - 256.0 * CAST({_R_RES12!r} AS DOUBLE) AS ymin,
-                   (CAST({_R_X0!r} AS DOUBLE) + 512.0 * CAST({_R_RES12!r} AS DOUBLE))
-                     + 256.0 * CAST({_R_RES12!r} AS DOUBLE) AS xmax,
-                   CAST({_R_X0!r} AS DOUBLE) + 512.0 * CAST({_R_RES12!r} AS DOUBLE) AS ymax
-        """,
-    }
+                   CASE WHEN doc_id < 50 THEN 'UPDATED' ELSE text END AS text
+            FROM documents
+            WHERE NOT (doc_id < 50 AND doc_id % 10 = 0)
+        """),
+}
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: q.build for name, q in REGISTRY.items()}
+
+
+def oracle(name: str) -> str:
+    """The oracle SQL of one query, built now if it is a callable."""
+    o = REGISTRY[name].oracle
+    return o if isinstance(o, str) else o()
 
 
 def oracle_sql() -> dict[str, str]:
-    d = _oracle_sql_static()
-    # the streaming path answers to the same oracle as the batch join
-    d.setdefault("streaming_pip", d["pip_zone_join"])
-    # a faithful GeoTIFF roundtrip reproduces the source tile table
-    # exactly, so it answers to the raster_checksums oracle
-    try:
-        import localref
-
-        d.setdefault("geotiff_roundtrip", localref.sql_raster_checksums())
-        d.setdefault("ntv2_transform", localref.sql_ntv2_transform())
-        d.setdefault("geoid_shift", localref.sql_geoid_shift())
-        d.setdefault("laborde_transform", _laborde_sql())
-        d.setdefault("vrt_xml_composite", localref.sql_vrt_composite_checksums())
-        d.setdefault("aaigrid_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("cog_roundtrip", localref.sql_cog_checksums())
-        d.setdefault("gdalinfo_report", localref.sql_gdalinfo_2x2())
-        d.setdefault("srsinfo_report", localref.sql_srsinfo())
-        d.setdefault("vshift_checksums", localref.sql_vshift_checksums())
-        d.setdefault("surf_gcps", localref.sql_surf_gcps())
-        _zg = DRV.rect_zone_grid(ZONE_G)
-        d.setdefault(
-            "ogrinfo_zones",
-            localref.values_sql(
-                [(len(_zg), round(float(_zg.xmin.min()), 6),
-                  round(float(_zg.ymin.min()), 6),
-                  round(float(_zg.xmax.max()), 6),
-                  round(float(_zg.ymax.max()), 6), "POLYGON")],
-                ["feature_count", "xmin", "ymin", "xmax", "ymax",
-                 "geometry_type"],
-                ["bigint", "double", "double", "double", "double", "varchar"],
-            ))
-        d.setdefault("xyz_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("webtiles_xyz", localref.sql_raster_checksums_2x2())
-        d.setdefault("ehdr_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("bmp_roundtrip", localref.sql_bmp_checksums())
-        d.setdefault("gif_roundtrip", localref.sql_gif_checksums())
-        d.setdefault("pnm_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("fits_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("tga_roundtrip", localref.sql_bmp_checksums())
-        d.setdefault("pcidsk_roundtrip",
-                     localref.sql_raster_checksums_2x2())
-        d.setdefault("bt_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("kro_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("rraster_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("hfa_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("saga_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("lan_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("surfer_roundtrip", localref.sql_surfer_checksums())
-        d.setdefault("rst_roundtrip", localref.sql_bmp_checksums())
-        d.setdefault("ers_roundtrip",
-                     localref.sql_envi_checksums_2x2_2band())
-        d.setdefault("dted_roundtrip",
-                     localref.sql_dem_checksums(121, 64, "dem_cell"))
-        d.setdefault("srtmhgt_roundtrip",
-                     localref.sql_dem_checksums(1201, 256, "dem_cell"))
-        d.setdefault("cnsdtf_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("mdreader_scenes", localref.sql_mdreader_scenes())
-        d.setdefault("tfat_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("transform_geolocs", localref.sql_transform_geolocs())
-        d.setdefault("dump_overviews", localref.sql_dump_overviews())
-        d.setdefault("segmentize_lines", f"""
-            WITH b AS (
-              SELECT doc_id, {_LON} AS lon, {_LAT} AS lat,
-                     1.0 + (doc_id % 5) AS dx, 0.7 AS dy
-              FROM documents WHERE doc_id < 1500
-            ), k AS (
-              SELECT *,
-                CASE WHEN (dx*dx + dy*dy) - 2.25 > 2.25e-5
-                     THEN CAST(FLOOR(SQRT((dx*dx + dy*dy) / 2.25) - 0.01)
-                               AS INTEGER)
-                     ELSE 0 END AS n
-              FROM b
-            )
-            -- segmentize() canonicalizes direction: x0 < x1 always
-            -- holds here, so the kernel works from the FAR endpoint
-            -- (x1 + (n+1-j)*(x0-x1)/(n+1)) — mirror that association
-            -- exactly for bit-equal doubles
-            SELECT doc_id, CAST(j AS BIGINT) AS j,
-                   ROUND(CASE WHEN j = 0 THEN lon
-                              WHEN j = n + 1 THEN lon + dx
-                              ELSE (lon + dx) + (n + 1 - j)
-                                   * (lon - (lon + dx)) / (n + 1)
-                         END, 5) AS x,
-                   ROUND(CASE WHEN j = 0 THEN lat
-                              WHEN j = n + 1 THEN lat + dy
-                              ELSE (lat + dy) + (n + 1 - j)
-                                   * (lat - (lat + dy)) / (n + 1)
-                         END, 5) AS y
-            FROM k, UNNEST(generate_series(0, n + 1)) AS t(j)
-        """)
-        d.setdefault("cog_validate", """
-            SELECT * FROM (VALUES
-              ('plain', 'WARNING', 'The file is greater than 512xH or ' ||
-               'Wx512, it is recommended to include internal overviews'),
-              ('ext', 'ERROR', 'Overviews found in external .ovr file. ' ||
-               'They should be internal')
-            ) AS t(file, severity, message)
-        """)
-        d.setdefault("envi_roundtrip",
-                     localref.sql_envi_checksums_2x2_2band())
-        d.setdefault("mbtiles_roundtrip",
-                     localref.sql_raster_checksums_2x2())
-        d.setdefault("mbtiles_jpeg_roundtrip",
-                     localref.sql_mbtiles_jpeg_checksums(85))
-        d.setdefault("tiff_jpeg_roundtrip",
-                     localref.sql_mbtiles_jpeg_checksums(85))
-        d.setdefault("vrt_xml_derived", localref.sql_vrt_derived_checksums())
-    except Exception:
-        pass
-    # poly.shp attribute transcription (autotest/ogr/data/poly.dbf —
-    # the same literal expectations as autotest/ogr/ogr_sql_test.py)
-    try:
-        import localref
-
-        _poly_rows = list(
-            zip(
-                range(10),
-                [215229.266, 247328.172, 261752.781, 547597.188, 15775.758,
-                 101429.977, 268597.625, 1634833.375, -596610.313, 5268.813],
-                [168, 179, 171, 173, 172, 169, 166, 158, 165, 170],
-                ["35043411", "35043423", "35043414", "35043416", "35043415",
-                 "35043412", "35043409", "35043369", "35043408", "35043413"],
-            )
-        )
-        d.setdefault(
-            "shapefile_poly_ref",
-            localref.values_sql(
-                _poly_rows,
-                ["fid", "area", "eas_id", "prfedea"],
-                ["bigint", "double", "bigint", "varchar"],
-            ),
-        )
-        _zr = DRV.rect_zone_grid(ZONE_G).reset_index(drop=True)
-        d.setdefault(
-            "shapefile_roundtrip",
-            localref.values_sql(
-                [
-                    (k, int(r.zone_id), int(r.eas_id), r.prfedea)
-                    for k, r in enumerate(_zr.itertuples(index=False))
-                ],
-                ["fid", "zone_id", "eas_id", "prfedea"],
-                ["bigint", "bigint", "bigint", "varchar"],
-            ),
-        )
-    except Exception:
-        pass
-    d.setdefault(
-        "nitf_cover_ref",
-        "SELECT * FROM (VALUES"
-        " ('rgb', 1, 21212), ('rgb', 2, 21053), ('rgb', 3, 21349))"
-        " t(raster_id, band, checksum),"
-        " (SELECT -44.842029478e0 AS gt0, 0.003503401e0 AS gt1,"
-        "  -22.930748299e0 AS gt3, -0.003503401e0 AS gt5) g",
-    )
-    d.setdefault(
-        "sdts_cover_ref",
-        "SELECT 'alanson' AS raster_id, 1 AS band, 61672 AS checksum,"
-        " 666015.0e0 AS gt0, 30.0e0 AS gt1, 5040735.0e0 AS gt3,"
-        " -30.0e0 AS gt5",
-    )
-    d.setdefault(
-        "s57_read",
-        "SELECT * FROM (VALUES"
-        " ('COALNE', 1, 30, 427.223e0), ('DEPARE', 4, 130, 1851.525e0),"
-        " ('DEPCNT', 4, 42, 598.207e0), ('LNDARE', 1, 42, 598.106e0),"
-        " ('LNDELV', 2, 14, 199.364e0), ('M_COVR', 1, 36, 512.705e0),"
-        " ('M_NSYS', 1, 36, 512.705e0), ('M_QUAL', 1, 36, 512.705e0),"
-        " ('SBDARE', 2, 88, 1253.256e0), ('SLCONS', 1, 4, 56.966e0),"
-        " ('SLOTOP', 1, 14, 199.368e0), ('SOUNDG', 2, 33, 307.026e0))"
-        " t(layer, n, ncoords, coord_sum)",
-    )
-    d.setdefault(
-        "fast_cover_ref",
-        "SELECT 'hpn' AS raster_id, 1 AS band, 60323 AS checksum,"
-        " 280342.5e0 AS gt0, 15.0e0 AS gt1, 3621457.5e0 AS gt3,"
-        " -15.0e0 AS gt5",
-    )
-    d.setdefault(
-        "lcp_cover_ref",
-        "SELECT 'farsite' AS raster_id, band, 0 AS zoom, 0 AS tile_x,"
-        " 0 AS tile_y, checksum FROM (VALUES"
-        " (1, 18645), (2, 16431), (3, 18851), (4, 26182),"
-        " (5, 30038), (6, 22077), (7, 30388), (8, 23249))"
-        " t(band, checksum)",
-    )
-    try:
-        import localref
-
-        _base = localref.sql_raster_checksums_2x2()
-        d.setdefault(
-            "zmap_sigdem_roundtrip",
-            f"SELECT *, 'zmap' AS sink FROM ({_base}) UNION ALL "
-            f"SELECT *, 'sigdem' AS sink FROM ({_base})",
-        )
-    except Exception:
-        pass
-    d.setdefault(
-        "dgn_read",
-        "SELECT * FROM (VALUES"
-        " (1, 17, 1, 0, 'Demo Text', 'POINT', 2, 4.956),"
-        " (2, 15, 2, 0, NULL, 'LINESTRING', 146, 704.874),"
-        " (3, 6, 2, 83, NULL, 'POLYGON', 10, 38.373),"
-        " (4, 3, 2, 83, NULL, 'LINESTRING', 4, 16.873))"
-        " t(fid, Type, Level, ColorIndex, Text, kind, ncoords,"
-        " coord_sum)",
-    )
-    d.setdefault(
-        "tab_all_geoms",
-        "SELECT row_number() OVER () AS fid,"
-        " regexp_extract(WKT, '^[A-Z]+') AS kind,"
-        " len(regexp_extract_all(WKT, '-?[0-9][-0-9.eE]*')) AS ncoords,"
-        " round(list_aggregate(list_transform("
-        "   regexp_extract_all(WKT, '-?[0-9][-0-9.eE]*'),"
-        "   v -> CAST(v AS DOUBLE)), 'sum'), 3) AS coord_sum"
-        " FROM read_csv('/root/reference/autotest/ogr/data/mitab/"
-        "all_geoms.mif.golden.csv', header=true)",
-    )
-    d.setdefault(
-        "tab_attributes",
-        "SELECT * FROM (VALUES"
-        " (1, 215229.266, 168, '35043411'),"
-        " (2, 247328.172, 179, '35043423'),"
-        " (3, 261752.781, 171, '35043414'),"
-        " (4, 547597.188, 173, '35043416'),"
-        " (5, 15775.758, 172, '35043415'),"
-        " (6, 101429.977, 169, '35043412'),"
-        " (7, 268597.625, 166, '35043409'),"
-        " (8, 1634833.375, 158, '35043369'),"
-        " (9, 596610.313, 165, '35043408'),"
-        " (10, 5268.813, 170, '35043413'))"
-        " t(fid, area, eas_id, prfedea)",
-    )
-    d.setdefault(
-        "pds_cover_ref",
-        "SELECT 'mc02' AS raster_id, 1 AS band, 0 AS tile_x,"
-        " 0 AS tile_y, 47151 AS checksum,"
-        " -10668385.19835e0 AS gt0,"
-        " 926.1152999999999e0 AS gt1,"
-        " 3852176.5903499997e0 AS gt3,"
-        " -926.1152999999999e0 AS gt5",
-    )
-    d.setdefault(
-        "isis_cover_ref",
-        "SELECT * FROM (VALUES"
-        " ('arvidson', 1, 0, 0, 0, 382),"
-        " ('isis3_detached', 1, 0, 0, 0, 9978),"
-        " ('isis3_tiled', 1, 0, 0, 0, 42403))"
-        " t(raster_id, band, zoom, tile_x, tile_y, checksum)",
-    )
-    d.setdefault(
-        "aig_cover_ref",
-        "SELECT 'abc3x1' AS raster_id, 1 AS band, 0 AS tile_x,"
-        " 0 AS tile_y, 3 AS checksum, 255.0 AS nodata, -0.5 AS gt0,"
-        " 1.0 AS gt1, 0.5 AS gt3, -1.0 AS gt5",
-    )
-    d.setdefault(
-        "geotiff_byte_ref",
-        "SELECT 'byte' AS raster_id, 1 AS band, 0 AS tile_x, 0 AS tile_y,"
-        " 4672 AS checksum, 'EPSG:26711' AS crs, 440720.0 AS gt0,"
-        " 60.0 AS gt1, 3751320.0 AS gt3, -60.0 AS gt5",
-    )
-    # byte.gpkg carries the same byte.tif raster: same canonical
-    # checksum + geotransform (the GPKG tile was PNG-encoded by GDAL)
-    d.setdefault(
-        "gpkg_byte_ref",
-        "SELECT 'byte' AS raster_id, 1 AS band, 4672 AS checksum,"
-        " 'EPSG:26711' AS crs, 440720.0 AS gt0, 60.0 AS gt1,"
-        " 3751320.0 AS gt3, -60.0 AS gt5",
-    )
-    try:
-        import localref
-
-        # a faithful tile roundtrip reproduces the synth tile table
-        d.setdefault("gpkg_tiles_roundtrip", localref.sql_raster_checksums())
-        _zr = DRV.rect_zone_grid(ZONE_G).reset_index(drop=True)
-        d.setdefault(
-            "gpkg_roundtrip",
-            localref.values_sql(
-                [
-                    (k + 1, int(r.zone_id), int(r.eas_id), r.prfedea)
-                    for k, r in enumerate(_zr.itertuples(index=False))
-                ],
-                ["fid", "zone_id", "eas_id", "prfedea"],
-                ["bigint", "bigint", "bigint", "varchar"],
-            ),
-        )
-    except Exception:
-        pass
-    # non-SQL-expressible queries (hash kernels, pixel kernels, LSH)
-    # get literal VALUES oracles computed by the single-node reference
-    # implementations in localref.py — any entry whose inputs are
-    # unavailable is skipped and stays a rows-only check
-    try:
-        import localref
-
-        for name, sql in localref.oracle_entries().items():
-            d.setdefault(name, sql)
-    except Exception:
-        pass
-    for which, name in (
-        ("union", "overlay_union"),
-        ("symdiff", "overlay_symdifference"),
-        ("update", "overlay_update"),
-    ):
+    """Every query's oracle SQL. An oracle that raises while it is built
+    is named on stderr and left out on its own; the driver then checks
+    that query rows-only."""
+    out = {}
+    for name in REGISTRY:
         try:
-            d.setdefault(name, _overlay_union_sql(which))
-        except Exception:
-            pass
-    try:
-        import localref
-
-        d.setdefault(
-            "color_relief_checksums",
-            localref.sql_color_relief_checksums(_RELIEF_RAMP),
-        )
-        d.setdefault(
-            "hsv_merge_checksums",
-            localref.sql_hsv_merge_checksums(_RELIEF_RAMP),
-        )
-        d.setdefault("val_repl_checksums",
-                     localref.sql_val_repl_checksums())
-        d.setdefault("classify_checksums",
-                     localref.sql_classify_checksums())
-        d.setdefault("rat_roundtrip", localref.sql_rat_roundtrip())
-        from gdal_spark.style import style_param_sql as _sps
-        d.setdefault("ogr_style_query", f"""
-            WITH s AS (
-              SELECT c_custkey,
-                CASE WHEN c_custkey % 2 = 0
-                     THEN 'PEN(c:#FF0000,w:' || CAST(c_custkey % 5 AS VARCHAR)
-                          || 'px);BRUSH(fc:#33AA55)'
-                     ELSE 'SYMBOL(id:ogr-sym-0,s:'
-                          || CAST(c_custkey % 7 AS VARCHAR) || 'pt)'
-                END AS style
-              FROM customer)
-            SELECT c_custkey, style,
-                   {_sps('style', 'PEN', 'w')} AS pen_w,
-                   {_sps('style', 'PEN', 'c')} AS pen_c,
-                   {_sps('style', 'BRUSH', 'fc')} AS brush_fc
-            FROM s WHERE style LIKE 'PEN%'
-        """)
-        d.setdefault("attachpct_checksums",
-                     localref.sql_attachpct_checksums())
-        d.setdefault("fft_magphase", localref.sql_fft_magphase())
-        d.setdefault("fft_roundtrip", localref.sql_raster_checksums_2x2())
-        d.setdefault("graticule_segments", localref.sql_graticule_segments())
-        d.setdefault("graticule_lines", localref.sql_graticule_lines())
-        d.setdefault("junction_table", """
-            SELECT CAST('doc' || doc_id AS VARCHAR) AS a_gml_id,
-                   CAST(regexp_replace(h, '^#', '') AS VARCHAR) AS b_gml_id
-            FROM documents, UNNEST(['#' || (doc_id * 7 % 97),
-                                    'x' || (doc_id * 13 % 89)]) AS t(h)
-            WHERE doc_id < 1500
-        """)
-        d.setdefault("gcps2wld", localref.sql_gcps2wld())
-    except Exception:
-        pass
-    return d
+            out[name] = oracle(name)
+        except Exception as ex:  # noqa: BLE001
+            print(f"oracle_sql: {name}: {type(ex).__name__}: {ex}",
+                  file=sys.stderr)
+    return out

@@ -17,8 +17,8 @@ The document table is staged to parquet once (generation excluded from
 timing — the benchmark measures the engine, not the generator).
 
 Also times the driver-table operator queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1): kNN, minhash dedup, ANN, raster
-overview+warp, and a relational OGR-SQL representative.
+(default /root/testdata/sf0.1): the __spark_entry__.REGISTRY rows
+tagged suite=True, in registry order.
 
 Scaling evidence (north rule N vs 4N executors) is produced by
 tools/scaling_bench.py which runs THIS benchmark at local[8] and
@@ -28,7 +28,6 @@ local[32] in fresh JVMs and writes BENCH/BASELINE.md.
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -38,11 +37,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from gdal_spark import synth, tiling  # noqa: E402
-from gdal_spark.functions import ann as ANN  # noqa: E402
-from gdal_spark.functions import text as TX  # noqa: E402
 from gdal_spark.index import zone_index  # noqa: E402
 from gdal_spark.joins import pip_join  # noqa: E402
-from gdal_spark.knn import knn_join  # noqa: E402
 from gdal_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -52,125 +48,6 @@ STAGE_DIR = os.environ.get(
     "SPARK_GRAFT_STAGE_DIR", f"/tmp/gdal_spark_bench/docs_{N_DOCS}"
 )
 
-
-# The timed operator suite: names of __spark_entry__.queries(), run in
-# this order (tests/test_registry.py keeps the two in step).
-SUITE = (
-    "pip_zone_join", "tile_assign", "knn_top5", "ogr_summary",
-    "ogr_first_match_join", "dedup_exact", "minhash_pairs",
-    "ann_cosine_topk", "overview_checksums", "warp_checksums",
-    "overlay_intersection", "rasterize_counts",
-    # round-2 additions: distributed block near-dup, the
-    # union-overlay rect sweep, and the two-level polyline stitch
-    "embed_neardup", "overlay_union", "contour_polylines",
-    # round-3 additions: geometry-valued booleans (boundary
-    # classification clipper), concave overlay with piece WKT, the
-    # TIN grid (broadcast Delaunay), and the compiled dither path
-    "geometry_boolean", "overlay_concave_wkt", "grid_linear",
-    "dither_checksums",
-    # this round: DataFrame-state kNN (500 queries, no driver
-    # loop), unbounded ring-doubling proximity, the full VRT
-    # pixel-function sweep, and dateline splitting
-    "knn_large", "proximity_full_checksums",
-    "pixel_functions_checksums", "geometry_wrapdateline",
-    # this session: broadcast-Lloyd k-means over embeddings,
-    # exact-substring span dedup (full n-gram explode), the
-    # no-shuffle split assignment, and band-polygon contouring
-    "kmeans_embeddings", "dup_spans", "sample_split",
-    "contour_polygons",
-    # this session: nearblack closed form, textual gdal_calc,
-    # CC dedup groups, eval-set decontamination, linear referencing
-    "nearblack_checksums", "gdal_calc_checksums", "dedup_groups",
-    "decontaminate", "lineref",
-    # and the planner/metadata/composite ops (cheap, breadth)
-    "cog_plan", "overview_select", "gdal_edit_gt", "salted_join",
-    "gopher_filter", "span_scrub", "warped_layer_conic",
-    # last batch: interchange roundtrip, -si smoothing, -scale,
-    # combined hillshade, mask bands, lineref -create
-    "geojson_roundtrip", "fillnodata_smooth_checksums",
-    "translate_scale", "dem_hillshade_comb_checksums",
-    "mask_band_checksums", "lineref_create",
-    # round 4: curve linearization, MakeValid re-noding, Krovak,
-    # capped simhash banding, multidim transpose+unscale, and
-    # Yen's K-shortest-paths (driver-orchestrated spur SSSPs — the
-    # suite's one intentionally iterative entry)
-    "geometry_curves", "geometry_makevalid_bowtie",
-    "krovak_transform", "simhash_pairs", "mdarray_transpose",
-    "graph_ksp",
-    # datum pipelines: ECEF+Helmert, NTv2-style broadcast grid
-    # shift, the compound BNG and NAD27->NAD83-UTM pipelines
-    "helmert_transform", "gridshift_transform", "bng_transform",
-    "nad27_utm_transform",
-    # general-transformer raster warps (gdalwarp -t_srs): polar
-    # reprojection and the cross-datum BNG chain
-    "warp_reproject_checksums", "warp_datum_checksums",
-    # enhancement: distributed-histogram equalization + gdal_lut
-    "enhance_equalize_checksums", "lut_checksums",
-    # equal-area CRS families: LAEA Europe, EASE-Grid 2.0 CEA,
-    # Equal Earth
-    "laea_transform", "cea_transform", "eqearth_transform",
-    # gdal_footprint: mask -> polygonize -> georef transform
-    "footprint",
-    # Hotine Oblique Mercator variant B (Swiss LV95 + RSO Borneo)
-    "hom_swiss_transform", "hom_rso_transform", "nztm_transform",
-    # vector-layer append + domain-mix resampling
-    "ogrmerge_single", "domain_resample",
-    # BPE tokenizer: distributed pair-count train + map-only apply
-    "bpe_tokenize", "paragraph_dedup", "url_canonical_dedup",
-    "media_manifest",
-    # raw-binary drivers: EHdr BIL loop (map-only scan), ENVI BIP
-    # 2-band loop (one keyed interleave shuffle in the sink)
-    "ehdr_roundtrip", "envi_roundtrip",
-    # MBTiles loop: distributed PNG encode/decode + TMS flip
-    "mbtiles_roundtrip",
-    # PGDump loop: JVM escape chain out, distributed parse back
-    "pgdump_roundtrip",
-    # XML interchange: file-parallel GPX/KML loops
-    "gpx_roundtrip", "kml_roundtrip",
-    # MapInfo MIF/MID: ordered pair sink + file-parallel scan
-    "mif_roundtrip",
-    # session-5 drivers: NetCDF strip IO + mdimtranslate chain,
-    # distributed linear referencing, MVT tile pipeline, DXF
-    # chunk scan, FlatGeobuf Hilbert-sort + R-tree build, and the
-    # registry/index/dissolve utilities
-    "netcdf_roundtrip", "mdim_translate",
-    "lineref_repers", "lineref_coord", "lineref_pos",
-    "lineref_subline", "mvt_roundtrip", "dxf_roundtrip",
-    "fgb_roundtrip", "ogr_tindex", "identify", "ogr_dissolve",
-    "fgb_bbox_filter", "netcdf_raster", "gml_roundtrip",
-    "osm_nodes", "osm_lines", "gdal_create",
-    "lineref_pickets", "surf_gcps", "cem_transform",
-    "cnsdtf_roundtrip", "mdreader_scenes", "tfat_roundtrip",
-    "cog_validate", "transform_geolocs", "dump_overviews",
-    "segmentize_lines", "hsv_merge_checksums",
-    "val_repl_checksums", "classify_checksums", "attachpct_checksums",
-    # distributed transpose-method 2-D FFT (two strip exchanges)
-    "fft_magphase", "fft_roundtrip",
-    # pure-codegen graticule, junction explode, normal-eq GCP fit
-    "graticule_segments", "graticule_lines", "junction_table",
-    "gcps2wld",
-    # round 5: real NTv2 .gsb consumption, SQLite/Spatialite scan,
-    # RAT histogram + PAM loop, OGR_STYLE dialect, the from-scratch
-    # HDF5/netCDF-4 chunk-parallel loop, and the baseline-JPEG
-    # MBTiles pyramid
-    "ntv2_transform", "sqlite_roundtrip", "rat_roundtrip",
-    "ogr_style_query", "netcdf4_roundtrip", "mbtiles_jpeg_roundtrip",
-    "grib2_roundtrip", "grib2_complex_roundtrip",
-    "grib2_lcc_roundtrip", "grib2_ps_roundtrip",
-    # elevation cells: DTED column-profile loop (one keyed strip
-    # shuffle in the sink), SRTMHGT headerless raw loop (map-only)
-    "dted_roundtrip", "srtmhgt_roundtrip",
-    # NZMG complex-polynomial projection, staged pure codegen
-    "nzmg_transform",
-    # GTX geoid vertical shift: broadcast bilinear, no point shuffle
-    "geoid_shift",
-    # Laborde complex-cubic oblique Mercator, staged inverse
-    "laborde_transform",
-    # world-map batch: Robinson staged-Newton spline inverse,
-    # Goode staged seam CASE, geostationary GOES-East fixed grid
-    "robinson_transform", "goode_transform", "geos_goes_transform",
-    "eckert4_transform", "winkel_transform",
-)
 
 def _stage_docs(spark):
     marker = os.path.join(STAGE_DIR, "_SUCCESS")
@@ -240,13 +117,13 @@ def main():
     # ---------------- operator suite at SF_DIR ----------------
     import __spark_entry__ as E
 
-    qs = E.queries()
-    for name in SUITE:
-        df_fn = qs[name]
+    for name, q in E.REGISTRY.items():
+        if not q.suite:
+            continue
         # noop sink, NOT count(): count() lets Catalyst prune every
         # computed column, so pure-transform queries would be timed as
         # bare scans (methodology fix this round — see BENCH/BASELINE.md)
-        timed(name, lambda f=df_fn: f(spark, SF_DIR)
+        timed(name, lambda: q.build(spark, SF_DIR)
               .write.format("noop").mode("overwrite").save())
 
     total = round(sum(timings.values()), 3)

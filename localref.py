@@ -6,10 +6,13 @@ halo exchange, in-process union-find instead of connected-component
 joins, pure-Python xxhash64 instead of Spark's JVM expression — and
 emits it as an ANSI `SELECT ... FROM (VALUES ...)` string DuckDB can
 run. This is the `_sssp_oracle_sql` pattern (an independent local
-Dijkstra as the oracle for the Pregel loop) applied to every
-previously rows-only query: the thing verified is the distributed
-orchestration (tiling, halo seams, shuffle joins, broadcast maps), by
-comparing it to a straightforward single-node computation.
+Dijkstra as the oracle for the Pregel loop) applied to every query
+whose answer no closed-form SQL expresses: the thing verified is the
+distributed orchestration (tiling, halo seams, shuffle joins,
+broadcast maps), by comparing it to a straightforward single-node
+computation. `__spark_entry__.REGISTRY` names the function that
+builds each query's oracle; each runs only when that oracle is asked
+for.
 
 Shared primitives (the declared single-node kernels: tile_pixels_np
 input generator, gdal_checksum, los_visibility, idw_fill_window,
@@ -1221,105 +1224,6 @@ def sql_ann_ivf_topk(k: int = 10, n_lists: int = 16, nprobe: int = 4) -> str:
             rows.append((int(q), int(ids[cand[j]]), rank))
     return values_sql(rows, ["q_id", "vec_id", "rank"],
                       ["bigint", "bigint", "bigint"])
-
-
-# ============================================================= entry point
-def oracle_entries() -> dict:
-    """All localref-backed oracle SQL strings, each built lazily and
-    skipped (-> rows-only driver check) if its inputs are unavailable."""
-    makers = {
-        "raster_checksums": sql_raster_checksums,
-        "overview_checksums": sql_overview_checksums,
-        "warp_checksums": sql_warp_checksums,
-        "warp_cutline_checksums": sql_warp_cutline_checksums,
-        "warp_reproject_checksums": sql_warp_reproject_checksums,
-        "warp_datum_checksums": sql_warp_datum_checksums,
-        "mdarray_classic_checksums": sql_mdarray_classic_checksums,
-        "mosaic_checksums": sql_mosaic_checksums,
-        "dem_tri_checksums": sql_dem_tri_checksums,
-        "dem_aspect_checksums": sql_dem_aspect_checksums,
-        "pansharpen_checksums": sql_pansharpen_checksums,
-        "proximity_checksums": sql_proximity_checksums,
-        "fillnodata_checksums": sql_fillnodata_checksums,
-        "contour_totals": sql_contour_totals,
-        "viewshed_counts": sql_viewshed_counts,
-        "viewshed_curvature": sql_viewshed_curv_counts,
-        "contour_interval": sql_contour_totals_interval,
-        "polygonize_regions": sql_polygonize_regions,
-        "sieve_checksums": sql_sieve_checksums,
-        "dither_checksums": sql_dither_checksums,
-        "media_thumbnails": sql_media_thumbnails,
-        "minhash_pairs": sql_minhash_pairs,
-        "simhash_table": sql_simhash_table,
-        "simhash_pairs": sql_simhash_pairs,
-        "geometry_curves": sql_geometry_curves,
-        "geometry_makevalid_bowtie": sql_geometry_makevalid_bowtie,
-        "graph_ksp": sql_graph_ksp,
-        "ann_lsh_topk": sql_ann_lsh_topk,
-        "ann_ivf_topk": sql_ann_ivf_topk,
-        "overview_mode_checksums": sql_overview_mode_checksums,
-        "overview_gauss_checksums": sql_overview_gauss_checksums,
-        "warp_average_checksums": sql_warp_average_checksums,
-        "warp_lanczos_checksums": sql_warp_lanczos_checksums,
-        "contour_polylines": sql_contour_polylines,
-        "dem_hillshade_md_checksums": sql_hillshade_md_checksums,
-        "warp_rms_checksums": sql_warp_rms_checksums,
-        "warp_max_checksums": sql_warp_max_checksums,
-        "dem_slope_zt_checksums": sql_dem_slope_zt_checksums,
-        "polygonize_wkt": sql_polygonize_wkt,
-        "dem_hillshade_checksums": sql_dem_hillshade_checksums,
-        "dem_slope_checksums": sql_dem_slope_checksums,
-        "geometry_boolean": sql_geometry_boolean,
-        "overlay_concave_wkt": sql_overlay_concave_wkt,
-        "grid_linear": sql_grid_linear,
-        "dem_igor_checksums": sql_dem_igor_checksums,
-        "rasterize_lines_z": sql_rasterize_lines_z,
-        "cutline_blend": sql_cutline_blend,
-        "raster_stats": sql_raster_stats,
-        "raster_histogram": sql_raster_histogram,
-        "windowed_read": sql_windowed_read,
-        "retile_checksums": sql_retile_checksums,
-        "warp_mode_checksums": sql_warp_mode_checksums,
-        "warp_med_checksums": sql_warp_med_checksums,
-        "warp_q1_checksums": sql_warp_q1_checksums,
-        "warp_q3_checksums": sql_warp_q3_checksums,
-        "warp_cubicspline_checksums": sql_warp_cubicspline_checksums,
-        "overview_rms_checksums": sql_overview_rms_checksums,
-        "overview_cubic_checksums": sql_overview_cubic_checksums,
-        "overview_lanczos_checksums": sql_overview_lanczos_checksums,
-        "pixel_functions_checksums": sql_pixel_functions_checksums,
-        "pixel_multiband_checksums": sql_pixel_multiband_checksums,
-        "pixel_complex_checksums": sql_pixel_complex_checksums,
-        "proximity_full_checksums": sql_proximity_full_checksums,
-        "polygonize_8conn": sql_polygonize_8conn,
-        "contour_polygons": sql_contour_polygons,
-        "expand_rgb_checksums": sql_expand_rgb_checksums,
-        "nearblack_checksums": sql_nearblack_checksums,
-        "dedup_groups": sql_dedup_groups,
-        "dedup_keep_best": sql_dedup_keep_best,
-        "compression_ratio": sql_compression_ratio,
-        "gdal_calc_checksums": sql_gdal_calc_checksums,
-        "vrt_separate_checksums": sql_vrt_separate_checksums,
-        "decontaminate": sql_decontaminate,
-        "dem_slope_pct_checksums": sql_dem_slope_pct_checksums,
-        "mask_band_checksums": sql_mask_band_checksums,
-        "overview_select": sql_overview_select,
-        "translate_scale": sql_translate_scale,
-        "dem_hillshade_comb_checksums": sql_dem_hillshade_comb_checksums,
-        "dem_hillshade_zt_checksums": sql_dem_hillshade_zt_checksums,
-        "fillnodata_smooth_checksums": sql_fillnodata_smooth_checksums,
-        "enhance_equalize_checksums": sql_enhance_checksums,
-        "lut_checksums": sql_lut_checksums,
-        "footprint": sql_footprint,
-        "bpe_tokenize": sql_bpe_tokenize,
-    }
-    out = {}
-    for name, fn in makers.items():
-        try:
-            out[name] = fn()
-        except Exception:
-            pass  # rows-only fallback, same as before
-    return out
 
 
 # ============================================================ overlay legs

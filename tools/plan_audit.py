@@ -34,17 +34,10 @@ def main():
     if args and os.path.isdir(args[0]):
         sf_dir = args.pop(0)
 
-    import importlib.util
-
+    import __spark_entry__ as E
     from gdal_spark.session import get_spark
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__",
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    qs = mod.queries()
+    qs = E.queries()
     spark = get_spark("plan_audit", cpus=8)
 
     print("| query | hash-ex | range-ex | single-part | bcast-join |"
