@@ -4137,7 +4137,7 @@ def _derived_rgb_tiles(spark: SparkSession) -> DataFrame:
                     d["band"] = band
                     d["data"] = a.astype(np.uint8).tobytes()
                     rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in synth.TILE_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=synth.TILE_COLUMNS)
 
     return base.mapInPandas(derive, schema=synth.TILE_SCHEMA)
 
@@ -4155,22 +4155,7 @@ def _q_expand_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes back to 3 RGB bands via broadcast color-table lookup."""
     from gdal_spark.color import dither, expand_rgb, median_cut_palette
 
-    base = synth.tiles_src_df(spark, 2, 1)
-    import numpy as np
-
-    def derive(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = np.frombuffer(r.data, dtype=np.uint8).reshape(r.height, r.width)
-                for band, a in ((1, arr), (2, 255 - arr), (3, arr // 2)):
-                    d = r._asdict()
-                    d["band"] = band
-                    d["data"] = a.astype(np.uint8).tobytes()
-                    rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in synth.TILE_SCHEMA.fields])
-
-    rgb = base.mapInPandas(derive, schema=synth.TILE_SCHEMA)
+    rgb = _derived_rgb_tiles(spark)
     pal = median_cut_palette(rgb, n_colors=8)
     return tiling.checksum_table(expand_rgb(dither(rgb, pal), pal))
 

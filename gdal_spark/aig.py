@@ -53,7 +53,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 GRID_NO_DATA = -2147483647
 FLOAT_NO_DATA = float(np.finfo(np.float32).min)
@@ -408,18 +408,12 @@ def read_aig(spark: SparkSession, cover: str, *,
                         .astype(np.int16)
                 else:
                     t = a.astype(dtype, copy=False)
-                out.append({
-                    "raster_id": rid, "band": 1, "zoom": int(zoom),
-                    "tile_x": int(r.bx), "tile_y": int(r.by),
-                    "width": int(w), "height": int(h), "dtype": dtype,
-                    "nodata": float(nodata), "crs": crs,
-                    "geotransform": [
-                        gt[0] + int(r.bx) * bxs * gt[1], gt[1], 0.0,
-                        gt[3] + int(r.by) * bys * gt[5], 0.0, gt[5]],
-                    "data": np.ascontiguousarray(t).tobytes(),
-                })
+                out.append(tile_row(
+                    rid, 1, int(zoom), int(r.bx), int(r.by), t, gt,
+                    x0=int(r.bx) * bxs, y0=int(r.by) * bys,
+                    nodata=float(nodata), crs=crs, dtype=dtype))
             for fd in handles.values():
                 os.close(fd)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)

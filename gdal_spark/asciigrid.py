@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_SCHEMA, tile_row
 from .tiling import _decode
 from .zipindex import with_global_index
 
@@ -128,15 +128,10 @@ def _assemble_tiles(frags: DataFrame, hdr_gt: list[float], nrows: int,
         arr = np.full((h, w), nodata, dtype=np.float64)
         for r in pdf.itertuples(index=False):
             arr[int(r.row_in_tile), :] = np.frombuffer(r.chunk, dtype=np.float64)
-        out = arr.astype(dtype)
-        gt = [x0 + tx * tile_px * dx, dx, 0.0,
-              y3 + ty * tile_px * ndy, 0.0, ndy]
-        return pd.DataFrame([{
-            "raster_id": raster_id, "band": 1, "zoom": zoom,
-            "tile_x": tx, "tile_y": ty, "width": w, "height": h,
-            "dtype": dtype, "nodata": float(nodata), "crs": crs,
-            "geotransform": gt, "data": out.tobytes(),
-        }])
+        return pd.DataFrame([tile_row(
+            raster_id, 1, zoom, tx, ty, arr.astype(dtype),
+            (x0, dx, 0.0, y3, 0.0, ndy), x0=tx * tile_px, y0=ty * tile_px,
+            nodata=float(nodata), crs=crs, dtype=dtype)])
 
     return frags.groupBy("tile_x", "tile_y").applyInPandas(
         build, schema=TILE_SCHEMA)
@@ -257,14 +252,9 @@ def read_xyz(spark: SparkSession, path: str, *, tile_px: int = 256,
         h = min(tile_px, nrows - ty * tile_px)
         arr = np.full((h, w), np.nan)
         arr[pdf["row"] % tile_px, pdf["col"] % tile_px] = pdf["z"]
-        return pd.DataFrame([{
-            "raster_id": rid, "band": 1, "zoom": zoom,
-            "tile_x": tx, "tile_y": ty, "width": w, "height": h,
-            "dtype": "float64", "nodata": float("nan"), "crs": crs,
-            "geotransform": [gt[0] + tx * tile_px * dx, dx, 0.0,
-                             gt[3] - ty * tile_px * dy, 0.0, -dy],
-            "data": arr.tobytes(),
-        }])
+        return pd.DataFrame([tile_row(
+            rid, 1, zoom, tx, ty, arr, gt, x0=tx * tile_px,
+            y0=ty * tile_px, crs=crs)])
 
     return cells.withColumn(
         "tile_x", (F.col("col") / tile_px).cast("int")

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 FILE_HDR = 14
 BIH_WIN4 = 40
@@ -163,7 +163,6 @@ def read_bmp(spark: SparkSession, path: str, *, tile_px: int = 256,
         [0.0, 1.0, 0.0, float(nrows), 0.0, -1.0]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nty = math.ceil(nrows / tile_px)
-    ntx = math.ceil(ncols / tile_px)
 
     rows = []
     for ty in range(nty):
@@ -197,28 +196,17 @@ def read_bmp(spark: SparkSession, path: str, *, tile_px: int = 256,
                         planes = [(1, _unpack_sub_byte(
                             scanlines[:, :(ncols * bits + 7) // 8],
                             bits, ncols))]
-                    for band, plane in planes:
-                        for tx in range(ntx):
-                            w = min(tile_px, ncols - tx * tile_px)
-                            t = np.ascontiguousarray(
-                                plane[:, tx * tile_px:tx * tile_px + w])
-                            out.append({
-                                "raster_id": rid, "band": band,
-                                "zoom": int(zoom), "tile_x": tx,
-                                "tile_y": int(r.tile_y),
-                                "width": w, "height": h,
-                                "dtype": "uint8", "nodata": None,
-                                "crs": crs,
-                                "geotransform": [
-                                    gt[0] + tx * tile_px * gt[1]
-                                    + int(r.y0) * gt[2],
-                                    gt[1], gt[2],
-                                    gt[3] + tx * tile_px * gt[4]
-                                    + int(r.y0) * gt[5],
-                                    gt[4], gt[5]],
-                                "data": t.tobytes(),
-                            })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                    y0 = int(r.y0)
+                    # world-file rotation terms shift the origin too
+                    out += [tile_row(
+                        rid, band, int(zoom), tx, int(r.tile_y),
+                        plane[:, x:x + tile_px],
+                        [gt[0] + x * gt[1] + y0 * gt[2], gt[1], gt[2],
+                         gt[3] + x * gt[4] + y0 * gt[5], gt[4], gt[5]],
+                        nodata=None, crs=crs)
+                        for band, plane in planes
+                        for tx, x in enumerate(range(0, ncols, tile_px))]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

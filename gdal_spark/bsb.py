@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
 def parse_bsb(path: str) -> dict:
@@ -195,7 +195,6 @@ def read_bsb(spark: SparkSession, path: str, *, tile_px: int = 256,
             pal[k] = rgb
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nty = math.ceil(H / tile_px)
-    ntx = math.ceil(W / tile_px)
     rows = [(0, ty, min(tile_px, H - ty * tile_px))
             for ty in range(nty)]
     desc = spark.createDataFrame(
@@ -223,23 +222,14 @@ def read_bsb(spark: SparkSession, path: str, *, tile_px: int = 256,
                     plane = np.stack(lines)
                     emit = [(1, plane)] if expand != "rgb" else [
                         (b + 1, pal[plane, b]) for b in range(3)]
-                    for band, pl in emit:
-                        for tx in range(ntx):
-                            w = min(tile_px, W - tx * tile_px)
-                            t = np.ascontiguousarray(
-                                pl[:, tx * tile_px:tx * tile_px + w])
-                            out.append({
-                                "raster_id": rid, "band": band,
-                                "zoom": int(zoom), "tile_x": tx,
-                                "tile_y": int(r.tile_y), "width": w,
-                                "height": hh, "dtype": "uint8",
-                                "nodata": float("nan"), "crs": "",
-                                "geotransform": [0.0, 1.0, 0.0, 0.0,
-                                                 0.0, -1.0],
-                                "data": t.tobytes(),
-                            })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    # every tile carries the unshifted identity transform
+                    out += [tile_row(rid, band, int(zoom), tx,
+                                     int(r.tile_y), pl[:, x:x + tile_px],
+                                     [0.0, 1.0, 0.0, 0.0, 0.0, -1.0],
+                                     dtype="uint8")
+                            for band, pl in emit
+                            for tx, x in enumerate(range(0, W, tile_px))]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .synth import tile_row
 from .tiling import TILE_SCHEMA, _decode
 
 _ALLOWED_FUNCS = {
@@ -137,22 +138,10 @@ def gdal_calc(inputs: dict[str, DataFrame], calc: str,
                     for name in letters
                 }
                 res = run(arrays).astype(out_dtype)
-                out_rows.append(
-                    {
-                        "raster_id": raster_id,
-                        "band": 1,
-                        "zoom": int(r["zoom"]),
-                        "tile_x": int(r["tile_x"]),
-                        "tile_y": int(r["tile_y"]),
-                        "width": w,
-                        "height": h,
-                        "dtype": out_dtype,
-                        "nodata": r["nodata"],
-                        "crs": r["crs"],
-                        "geotransform": r["geotransform"],
-                        "data": res.tobytes(),
-                    }
-                )
+                out_rows.append(tile_row(
+                    raster_id, 1, int(r["zoom"]), int(r["tile_x"]),
+                    int(r["tile_y"]), res, r["geotransform"],
+                    nodata=r["nodata"], crs=r["crs"], dtype=out_dtype))
             yield pd.DataFrame(out_rows)
 
     return joined.mapInPandas(kern, schema=TILE_SCHEMA)

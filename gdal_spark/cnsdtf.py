@@ -183,7 +183,6 @@ def _fragment_tokens(lines: DataFrame, ncols: int,
         raise ValueError(
             f"CNSDTF: {acc} data tokens, expected {nrows}x{ncols}")
 
-    ntx = math.ceil(ncols / tile_px)
 
     def frag(batches):
         pos = None  # partition-local running token offset
@@ -219,7 +218,7 @@ def _assemble_tiles_cols(frags: DataFrame, hdr: dict, ncols: int,
                          zoom: int, crs: str) -> DataFrame:
     """Like asciigrid._assemble_tiles but chunks carry a column
     offset (wrapped-line scans can split a row mid-tile)."""
-    from .synth import TILE_SCHEMA
+    from .synth import TILE_SCHEMA, tile_row
 
     x0, dx, _, y3, _, ndy = hdr["geotransform"]
     dtype = hdr["dtype"]
@@ -240,14 +239,10 @@ def _assemble_tiles_cols(frags: DataFrame, hdr: dict, ncols: int,
             v = np.frombuffer(r.chunk, dtype=np.float64)
             arr[int(r.row_in_tile),
                 int(r.col_in_tile):int(r.col_in_tile) + len(v)] = v
-        gt = [x0 + tx * tile_px * dx, dx, 0.0,
-              y3 + sy * tile_px * ndy, 0.0, ndy]
-        return pd.DataFrame([{
-            "raster_id": raster_id, "band": 1, "zoom": zoom,
-            "tile_x": tx, "tile_y": nty - 1 - sy, "width": w, "height": h,
-            "dtype": dtype, "nodata": float(nodata), "crs": crs,
-            "geotransform": gt, "data": arr.astype(dtype).tobytes(),
-        }])
+        return pd.DataFrame([tile_row(
+            raster_id, 1, zoom, tx, nty - 1 - sy, arr.astype(dtype),
+            (x0, dx, 0.0, y3, 0.0, ndy), x0=tx * tile_px, y0=sy * tile_px,
+            nodata=float(nodata), crs=crs, dtype=dtype)])
 
     return frags.groupBy("tile_x", "tile_y").applyInPandas(
         build, schema=TILE_SCHEMA)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 from .tiling import _decode
 
 HIST_SCHEMA = T.StructType(
@@ -334,25 +334,15 @@ def dither(tiles: DataFrame, palette: np.ndarray,
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pal = bc.value
-        rgb, h, w = _assemble_rgb(pdf)
+        rgb = _assemble_rgb(pdf)[0]
         out = dither_tile(
             np.clip(np.round(rgb), 0, 255).astype(np.uint8), pal
         )
         first = pdf.iloc[0]
-        return pd.DataFrame(
-            [
-                {
-                    "raster_id": dst_raster_id, "band": 1,
-                    "zoom": int(first["zoom"]),
-                    "tile_x": int(first["tile_x"]),
-                    "tile_y": int(first["tile_y"]),
-                    "width": w, "height": h, "dtype": "uint8",
-                    "nodata": -1.0, "crs": str(first["crs"]),
-                    "geotransform": list(first["geotransform"]),
-                    "data": out.tobytes(),
-                }
-            ]
-        )
+        return pd.DataFrame([tile_row(
+            dst_raster_id, 1, int(first["zoom"]), int(first["tile_x"]),
+            int(first["tile_y"]), out, list(first["geotransform"]),
+            nodata=-1.0, crs=str(first["crs"]), dtype="uint8")])
 
     return tiles.groupBy("tile_x", "tile_y").applyInPandas(run, schema=TILE_SCHEMA)
 
@@ -375,19 +365,12 @@ def expand_rgb(index_tiles: DataFrame, palette: np.ndarray,
                     r.height, r.width
                 )
                 rgb = pal[idx]  # (H, W, 3)
-                for b in range(3):
-                    rows.append(
-                        {
-                            "raster_id": dst_raster_id, "band": b + 1,
-                            "zoom": int(r.zoom), "tile_x": int(r.tile_x),
-                            "tile_y": int(r.tile_y), "width": int(r.width),
-                            "height": int(r.height), "dtype": "uint8",
-                            "nodata": -1.0, "crs": str(r.crs),
-                            "geotransform": list(r.geotransform),
-                            "data": rgb[:, :, b].tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+                rows += [tile_row(dst_raster_id, b + 1, int(r.zoom),
+                                  int(r.tile_x), int(r.tile_y), rgb[:, :, b],
+                                  list(r.geotransform), nodata=-1.0,
+                                  crs=str(r.crs))
+                         for b in range(3)]
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return index_tiles.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -484,6 +467,6 @@ def hsv_merge(color_tiles: DataFrame, grey_tiles: DataFrame,
             d.update(raster_id=dst_raster_id)
             rows.append(d)
         pout = pd.DataFrame(rows)
-        return pout[[f.name for f in TILE_SCHEMA.fields]]
+        return pout[TILE_COLUMNS]
 
     return j.groupBy(*key).applyInPandas(run, schema=TILE_SCHEMA)

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import ehdr
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 UHL_SIZE, DSI_SIZE, ACC_SIZE = 80, 648, 2700
 DTED_NODATA = -32767
@@ -257,7 +257,6 @@ def read_dted(spark: SparkSession, path: str, *, tile_px: int = 256,
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     rec = 12 + 2 * ny
     ntx = math.ceil(nx / tile_px)
-    nty = math.ceil(ny / tile_px)
     strips = [(tx * tile_px, min(tile_px, nx - tx * tile_px))
               for tx in range(ntx)]
     seg = spark.createDataFrame(strips, _STRIP_SCHEMA) \
@@ -274,21 +273,12 @@ def read_dted(spark: SparkSession, path: str, *, tile_px: int = 256,
                     plane = _decode_profiles(raw, w, ny, c0,
                                              verify_checksum)
                     tx = c0 // tile_px
-                    for ty in range(nty):
-                        h = min(tile_px, ny - ty * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[ty * tile_px:ty * tile_px + h, :])
-                        out.append({
-                            "raster_id": rid, "band": 1, "zoom": zoom,
-                            "tile_x": tx, "tile_y": ty,
-                            "width": w, "height": h, "dtype": "int16",
-                            "nodata": float(DTED_NODATA), "crs": _WGS84,
-                            "geotransform": [
-                                gt[0] + c0 * gt[1], gt[1], 0.0,
-                                gt[3] + ty * tile_px * gt[5], 0.0, gt[5]],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                    out += [tile_row(rid, 1, zoom, tx, ty,
+                                     plane[y0:y0 + tile_px], gt, x0=c0,
+                                     y0=y0, nodata=float(DTED_NODATA),
+                                     crs=_WGS84, dtype="int16")
+                            for ty, y0 in enumerate(range(0, ny, tile_px))]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 # ENVI `data type` code -> numpy dtype (envidataset.cpp:1018 mapping)
 ENVI_DTYPES = {1: "uint8", 2: "int16", 3: "int32", 4: "float32",
@@ -167,13 +167,14 @@ def read_raw(spark: SparkSession, data_path: str, hdr: dict, *,
     nbands, dtype = hdr["nbands"], hdr["dtype"]
     interleave, skip = hdr["interleave"], hdr["skip"]
     gt = hdr["geotransform"]
+    gt = (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5])   # tiles carry no rotation
     nodata = hdr.get("nodata")
+    nodata = float("nan") if nodata is None else float(nodata)
     crs = crs if crs is not None else hdr.get("crs", "")
     isz = np.dtype(dtype).itemsize
     np_dtype = np.dtype(dtype).newbyteorder(hdr["byteorder"])
     rid = raster_id or os.path.splitext(os.path.basename(data_path))[0]
     nty = math.ceil(nrows / tile_px)
-    ntx = math.ceil(ncols / tile_px)
 
     rows = []
     for ty in range(nty):
@@ -210,26 +211,12 @@ def read_raw(spark: SparkSession, data_path: str, hdr: dict, *,
                         a = arr.reshape(h, ncols, nbands)
                         planes = [(b + 1, a[:, :, b]) for b in range(nbands)]
                     for band, plane in planes:
-                        for tx in range(ntx):
-                            w = min(tile_px, ncols - tx * tile_px)
-                            t = np.ascontiguousarray(
-                                plane[:, tx * tile_px:tx * tile_px + w]
-                            ).astype(np.dtype(dtype), copy=False)
-                            out.append({
-                                "raster_id": rid, "band": band,
-                                "zoom": int(zoom),
-                                "tile_x": tx, "tile_y": int(r.tile_y),
-                                "width": w, "height": h, "dtype": dtype,
-                                "nodata": float("nan") if nodata is None
-                                else float(nodata),
-                                "crs": crs,
-                                "geotransform": [
-                                    gt[0] + tx * tile_px * gt[1], gt[1], 0.0,
-                                    gt[3] + int(r.tile_y) * tile_px * gt[5],
-                                    0.0, gt[5]],
-                                "data": t.tobytes(),
-                            })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                        out += strip_rows(
+                            rid, band, int(zoom), int(r.tile_y),
+                            plane.astype(np.dtype(dtype), copy=False), gt,
+                            tile_px, y0=int(r.tile_y) * tile_px,
+                            nodata=nodata, crs=crs, dtype=dtype)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .raster import histogram
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA
 from .tiling import _decode
 
 
@@ -86,7 +86,7 @@ def _apply_table(tiles: DataFrame, per_band_lut: dict, scale_min: float,
                 datas.append(res.astype(np.uint8).tobytes())
             out["data"] = datas
             out["dtype"] = "uint8"
-            yield out[[f.name for f in TILE_SCHEMA.fields]]
+            yield out[TILE_COLUMNS]
 
     return tiles.mapInPandas(apply, schema=TILE_SCHEMA)
 
@@ -119,7 +119,7 @@ def apply_lut(tiles: DataFrame, lut) -> DataFrame:
                 datas.append(np.clip(mapped, 0, 255).astype(np.uint8).tobytes())
             out["data"] = datas
             out["dtype"] = "uint8"
-            yield out[[f.name for f in TILE_SCHEMA.fields]]
+            yield out[TILE_COLUMNS]
 
     return tiles.mapInPandas(apply, schema=TILE_SCHEMA)
 
@@ -140,7 +140,7 @@ def val_repl(tiles: DataFrame, src_val: float, dst_val: float) -> DataFrame:
                                np.asarray(dst_val, dtype=arr.dtype), arr)
                 datas.append(rep.astype(arr.dtype).tobytes())
             out["data"] = datas
-            yield out[[f.name for f in TILE_SCHEMA.fields]]
+            yield out[TILE_COLUMNS]
 
     return tiles.mapInPandas(apply, schema=TILE_SCHEMA)
 
@@ -169,6 +169,6 @@ def classify(tiles: DataFrame,
                 datas.append(dst.tobytes())
             out["data"] = datas
             out["dtype"] = "uint8"
-            yield out[[f.name for f in TILE_SCHEMA.fields]]
+            yield out[TILE_COLUMNS]
 
     return tiles.mapInPandas(apply, schema=TILE_SCHEMA)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA
 from .tiling import _decode, _gdal_cast
 
 _KEY = ["raster_id", "band", "zoom"]
@@ -64,7 +64,7 @@ def _axis_fft(tiles: DataFrame, axis: int, inverse: bool,
             if dst_raster_id is not None:
                 d["raster_id"] = dst_raster_id
             rows.append(d)
-        return pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+        return pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.groupBy(*_KEY, gcol).applyInPandas(run, schema=TILE_SCHEMA)
 
@@ -92,7 +92,7 @@ def real_cast(tiles: DataFrame, out_dtype: str = "uint8") -> DataFrame:
                 for r in pdf.itertuples(index=False)
             ]
             out["dtype"] = out_dtype
-            yield out[[f.name for f in TILE_SCHEMA.fields]]
+            yield out[TILE_COLUMNS]
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -116,7 +116,7 @@ def magphase(tiles: DataFrame) -> DataFrame:
                         data=arr.astype(np.float64).tobytes(),
                     )
                     rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
 

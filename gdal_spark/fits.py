@@ -40,7 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 _BLOCK = 2880
 _CARD = 80
@@ -360,9 +360,9 @@ def read_fits(spark: SparkSession, path: str, *, hdu: int | None = None,
     out_np = np.dtype(info.dtype)
     isz = raw_np.itemsize
     gt = info.geotransform or [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]
-    nodata = info.nodata
+    gt = (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5])   # tiles carry no rotation
+    nodata = float("nan") if info.nodata is None else float(info.nodata)
     promote = info.promote
-    ntx = math.ceil(W / tile_px)
     nty = math.ceil(H / tile_px)
     base = info.data_offset
     crs = info.crs
@@ -393,25 +393,11 @@ def read_fits(spark: SparkSession, path: str, *, hdu: int | None = None,
                         arr = (arr.astype(np.int64) + promote).astype(out_np)
                     else:
                         arr = arr.astype(out_np, copy=False)
-                    for tx in range(ntx):
-                        w = min(tile_px, W - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            arr[:, tx * tile_px:tx * tile_px + w])
-                        out.append({
-                            "raster_id": rid, "band": int(r.band) + 1,
-                            "zoom": int(zoom),
-                            "tile_x": tx, "tile_y": int(r.tile_y),
-                            "width": w, "height": h, "dtype": dtype_name,
-                            "nodata": float("nan") if nodata is None
-                            else float(nodata),
-                            "crs": crs,
-                            "geotransform": [
-                                gt[0] + tx * tile_px * gt[1], gt[1], 0.0,
-                                gt[3] + int(r.tile_y) * tile_px * gt[5],
-                                0.0, gt[5]],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                    out += strip_rows(
+                        rid, int(r.band) + 1, int(zoom), int(r.tile_y), arr,
+                        gt, tile_px, y0=int(r.tile_y) * tile_px, nodata=nodata,
+                        crs=crs, dtype=dtype_name)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .polygonize import polygonize_wkt
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA
 from .tiling import _decode
 
 
@@ -64,7 +64,7 @@ def valid_mask(tiles: DataFrame, bands=None, combine: str = "union") -> DataFram
         out = r0.to_dict()
         out.update(band=1, dtype="uint8", nodata=None,
                    data=np.where(acc, 255, 0).astype(np.uint8).tobytes())
-        return pd.DataFrame([out], columns=[f.name for f in TILE_SCHEMA.fields])
+        return pd.DataFrame([out], columns=TILE_COLUMNS)
 
     return tiles.groupBy("raster_id", "tile_x", "tile_y").applyInPandas(
         run, schema=TILE_SCHEMA)

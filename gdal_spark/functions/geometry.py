@@ -376,21 +376,6 @@ def st_simplify_preserve_topology(col, tol: float):
     return u(col)
 
 
-def st_segmentize(col, max_len: float):
-    """ogr2ogr -segmentize: densify so no segment exceeds max_len
-    (OGRGeometry::segmentize)."""
-    @F.pandas_udf(T.StringType())
-    def u(c: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                GM.to_wkt(GM.segmentize(GM.geom_of(v), max_len))
-                if v is not None else None
-            for v in c]
-        )
-
-    return u(col)
-
-
 def st_dump(col):
     """Collection parts as an array of WKT strings (ogr2ogr
     -explodecollections; explode the result for one row per part)."""

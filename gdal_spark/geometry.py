@@ -1311,51 +1311,6 @@ def crosses(a: Geom, b: Geom) -> bool:
 
 
 # -------------------------------------------- ogr2ogr geometry transforms
-def segmentize(g: Geom, max_len: float) -> Geom:
-    """Insert evenly spaced vertices so no segment exceeds `max_len`
-    (OGRSimpleCurve::segmentize, ogr/ogrgeometry.cpp — the ogr2ogr
-    -segmentize flag). Points pass through unchanged."""
-    import math
-
-    def densify(xs, ys, closed):
-        xs = np.asarray(xs, np.float64)
-        ys = np.asarray(ys, np.float64)
-        n = len(xs)
-        if n < 2:
-            return xs, ys
-        x1 = np.roll(xs, -1)
-        y1 = np.roll(ys, -1)
-        m = n if closed else n - 1
-        nx, ny = [], []
-        for i in range(m):
-            nx.append(xs[i])
-            ny.append(ys[i])
-            L = math.hypot(x1[i] - xs[i], y1[i] - ys[i])
-            k = int(math.ceil(L / max_len)) if L > 0 else 1
-            if k > 1:
-                t = np.arange(1, k) / k
-                nx.extend(xs[i] + (x1[i] - xs[i]) * t)
-                ny.extend(ys[i] + (y1[i] - ys[i]) * t)
-        if not closed:
-            nx.append(xs[-1])
-            ny.append(ys[-1])
-        return np.asarray(nx), np.asarray(ny)
-
-    if g.kind == "point":
-        return g
-    if g.kind == "linestring":
-        xs, ys = g.parts[0]
-        return Geom("linestring", [densify(xs, ys, False)])
-    if g.kind == "polygon":
-        return Geom(
-            "polygon", [[densify(xs, ys, True) for xs, ys in g.parts[0]]]
-        )
-    return Geom(
-        "multipolygon",
-        [[densify(xs, ys, True) for xs, ys in rings] for rings in g.parts],
-    )
-
-
 def explode_parts(g: Geom) -> list[Geom]:
     """One Geom per collection member (ogr2ogr -explodecollections,
     apps/ogr2ogr_lib.cpp): multipolygon -> polygons; everything else is

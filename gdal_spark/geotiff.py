@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 # TIFF tag ids
 _TAGS = {
@@ -383,6 +383,13 @@ def read_geotiff(
     seg = spark.createDataFrame(rows, _SEG_SCHEMA).repartition(nslices)
 
     np_dtype = np.dtype(dtype).newbyteorder(bo)
+    gt = [float(v) for v in gt]
+    nodata = np.nan if nodata is None else float(nodata)
+
+    def row(r, band, a):
+        return tile_row(r.raster_id, band, int(r.zoom), int(r.tile_x),
+                        int(r.tile_y), a.astype(np.dtype(dtype), copy=False),
+                        gt, nodata=nodata, crs=crs, dtype=dtype)
 
     def scan(batches):
         for pdf in batches:
@@ -407,23 +414,7 @@ def read_geotiff(
                             img = img[:, :, None]
                         for b in range(img.shape[2]):
                             a = img[: r.height, : r.width, b]
-                            a = np.ascontiguousarray(a).astype(
-                                np.dtype(dtype), copy=False)
-                            out.append({
-                                "raster_id": r.raster_id,
-                                "band": b + 1,
-                                "zoom": int(r.zoom),
-                                "tile_x": int(r.tile_x),
-                                "tile_y": int(r.tile_y),
-                                "width": int(r.width),
-                                "height": int(r.height),
-                                "dtype": dtype,
-                                "nodata": np.nan if nodata is None
-                                else float(nodata),
-                                "crs": crs,
-                                "geotransform": [float(v) for v in gt],
-                                "data": a.tobytes(),
-                            })
+                            out.append(row(r, b + 1, a))
                         continue
                     data = _decompress(raw, comp, expected)
                     ch = spp if planar == 1 else 1
@@ -444,25 +435,8 @@ def read_geotiff(
                         arr = _undo_predictor(arr, pred)
                         planes = [(int(r.plane) + 1, arr)]
                     for band, a in planes:
-                        a = a[: r.height, : r.width]
-                        a = np.ascontiguousarray(a).astype(np.dtype(dtype), copy=False)
-                        out.append(
-                            {
-                                "raster_id": r.raster_id,
-                                "band": band,
-                                "zoom": int(r.zoom),
-                                "tile_x": int(r.tile_x),
-                                "tile_y": int(r.tile_y),
-                                "width": int(r.width),
-                                "height": int(r.height),
-                                "dtype": dtype,
-                                "nodata": np.nan if nodata is None else float(nodata),
-                                "crs": crs,
-                                "geotransform": [float(v) for v in gt],
-                                "data": a.tobytes(),
-                            }
-                        )
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA.fields])
+                        out.append(row(r, band, a[: r.height, : r.width]))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

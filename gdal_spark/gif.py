@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
@@ -202,8 +202,9 @@ def read_gif(spark: SparkSession, path: str, raster_id: str | None = None,
 
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     meta = parse_gif(path)
-    gt = read_world_file(os.path.splitext(path)[0] + ".wld") or \
-        [0.0, 1.0, 0.0, 0.0, 0.0, -1.0]
+    gt = [float(v) for v in read_world_file(
+        os.path.splitext(path)[0] + ".wld") or
+        [0.0, 1.0, 0.0, 0.0, 0.0, -1.0]]
     palettes = {k: fr["palette"] for k, fr in enumerate(meta["frames"])}
     rows = [(k, fr["width"], fr["height"], fr["interlaced"], fr["mcs"],
              fr["data_lo"], fr["data_hi"])
@@ -225,28 +226,14 @@ def read_gif(spark: SparkSession, path: str, raster_id: str | None = None,
                     if r.interlaced:
                         idx = _deinterlace(idx)
                     rid_k = rid if r.frame == 0 else f"{rid}:{r.frame}"
-                    if expand == "rgb":
-                        pal = palettes[int(r.frame)]
-                        for b in range(3):
-                            out.append(_row(rid_k, b + 1, zoom, r, gt,
-                                            pal[idx, b]))
-                    else:
-                        out.append(_row(rid_k, 1, zoom, r, gt, idx))
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    bands = [idx] if expand != "rgb" else [
+                        palettes[int(r.frame)][idx, b] for b in range(3)]
+                    out += [tile_row(rid_k, b + 1, int(zoom), 0,
+                                     int(r.frame), a.astype(np.uint8), gt)
+                            for b, a in enumerate(bands)]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
-
-
-def _row(rid, band, zoom, r, gt, arr):
-    return {
-        "raster_id": rid, "band": band, "zoom": int(zoom),
-        "tile_x": 0, "tile_y": int(r.frame),
-        "width": int(r.width), "height": int(r.height),
-        "dtype": "uint8", "nodata": float("nan"), "crs": "",
-        "geotransform": [float(v) for v in gt],
-        "data": np.ascontiguousarray(arr, dtype=np.uint8).tobytes(),
-    }
 
 
 def gif_palette(path: str, frame: int = 0) -> pd.DataFrame:

@@ -58,7 +58,7 @@ from pyspark.sql import types as T
 from . import geometry
 from .jpeg import decode_image, encode_jpeg
 from .png import encode_png
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
 def _ro_connect(path: str) -> sqlite3.Connection:
@@ -405,27 +405,10 @@ def read_gpkg_tiles(
                             float(min_x) + tc * tw * px, px, 0.0,
                             float(max_y) - tr * th * py, 0.0, -py,
                         ]
-                        for b in range(img.shape[2]):
-                            a = np.ascontiguousarray(img[:, :, b])
-                            out.append(
-                                {
-                                    "raster_id": rid,
-                                    "band": b + 1,
-                                    "zoom": int(z),
-                                    "tile_x": int(tc),
-                                    "tile_y": int(tr),
-                                    "width": int(a.shape[1]),
-                                    "height": int(a.shape[0]),
-                                    "dtype": str(a.dtype),
-                                    "nodata": np.nan,
-                                    "crs": crs,
-                                    "geotransform": gt,
-                                    "data": a.tobytes(),
-                                }
-                            )
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in TILE_SCHEMA.fields]
-                )
+                        out += [tile_row(rid, b + 1, int(z), int(tc),
+                                         int(tr), img[:, :, b], gt, crs=crs)
+                                for b in range(img.shape[2])]
+                yield pd.DataFrame(out, columns=TILE_COLUMNS)
         finally:
             con.close()
 

@@ -73,7 +73,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 _SEG_SCHEMA = T.StructType([
     T.StructField("band", T.IntegerType()),
@@ -693,42 +693,25 @@ def read_grib2(spark: SparkSession, path: str, *, tile_px: int = 256,
                         if r.flip:
                             grid = grid[::-1]
                         row0, h = int(r.row0), int(r.height)
+                    if m.get("grid", "latlon") in ("lcc", "ps"):
+                        dx, dy = m["dx"], m["dy"]
+                        ytop = m["y1"] + (
+                            (m["nj"] - 1) * dy if r.flip else 0.0)
+                        gt = (m["x1"] - dx / 2.0, dx, 0.0,
+                              ytop + dy / 2.0, 0.0, -dy)
+                        crs_s = m["proj4"]
+                    else:
+                        dx, dy = m["dlon"], m["dlat"]
+                        gt = (m["lon0"] - dx / 2.0, dx, 0.0,
+                              m["lat0"] + dy / 2.0, 0.0, -dy)
+                        crs_s = "EPSG:4326"
+                    grid = grid.astype(np.float64, copy=False)
                     for ty0 in range(0, h, tile_px):
-                        hh = min(tile_px, h - ty0)
-                        ty = (row0 + ty0) // tile_px
-                        for tx in range(math.ceil(ni / tile_px)):
-                            w = min(tile_px, ni - tx * tile_px)
-                            t = np.ascontiguousarray(
-                                grid[ty0:ty0 + hh,
-                                     tx * tile_px:tx * tile_px + w]
-                            ).astype(np.float64, copy=False)
-                            if m.get("grid", "latlon") in ("lcc", "ps"):
-                                dx, dy = m["dx"], m["dy"]
-                                ytop = m["y1"] + (
-                                    (m["nj"] - 1) * dy if r.flip else 0.0)
-                                gt0 = m["x1"] - dx / 2.0
-                                gt3 = ytop + dy / 2.0
-                                crs_s = m["proj4"]
-                            else:
-                                dx, dy = m["dlon"], m["dlat"]
-                                gt0 = m["lon0"] - dx / 2.0
-                                gt3 = m["lat0"] + dy / 2.0
-                                crs_s = "EPSG:4326"
-                            out.append({
-                                "raster_id": rid, "band": int(r.band),
-                                "zoom": 0, "tile_x": tx, "tile_y": ty,
-                                "width": w, "height": hh,
-                                "dtype": "float64",
-                                "nodata": float("nan"),
-                                "crs": crs_s,
-                                "geotransform": [
-                                    gt0 + tx * tile_px * dx,
-                                    dx, 0.0,
-                                    gt3 - (row0 + ty0) * dy,
-                                    0.0, -dy],
-                                "data": t.tobytes(),
-                            })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                        out += strip_rows(
+                            rid, int(r.band), 0, (row0 + ty0) // tile_px,
+                            grid[ty0:ty0 + tile_px], gt, tile_px,
+                            y0=row0 + ty0, crs=crs_s)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

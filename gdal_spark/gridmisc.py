@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
 
 _DESC = T.StructType([
     T.StructField("band", T.IntegerType()),
@@ -66,7 +66,6 @@ def _strip_scan(spark, path, *, W, H, nbands, dtype_of, origin_of,
     `origin_of(b) + y*line_stride` for `W*itemsize` bytes.  One
     descriptor per (band, strip); map-only."""
     nty = math.ceil(H / tile_px)
-    ntx = math.ceil(W / tile_px)
     rows = [(b, ty, min(tile_px, H - ty * tile_px))
             for b in range(nbands) for ty in range(nty)]
     desc = spark.createDataFrame(rows, _DESC).repartition(
@@ -91,24 +90,10 @@ def _strip_scan(spark, path, *, W, H, nbands, dtype_of, origin_of,
                         dt.newbyteorder("="), copy=False)
                     if transform is not None:
                         plane = transform(plane)
-                    for tx in range(ntx):
-                        w = min(tile_px, W - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[:, tx * tile_px:tx * tile_px + w])
-                        out.append({
-                            "raster_id": rid, "band": b + 1,
-                            "zoom": int(zoom), "tile_x": tx,
-                            "tile_y": int(r.tile_y), "width": w,
-                            "height": h, "dtype": str(t.dtype),
-                            "nodata": nodata, "crs": crs,
-                            "geotransform": [
-                                gt[0] + tx * tile_px * gt[1], gt[1],
-                                gt[2], gt[3] + y0 * gt[5], gt[4],
-                                gt[5]],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    out += strip_rows(rid, b + 1, int(zoom), int(r.tile_y),
+                                      plane, gt, tile_px, y0=y0,
+                                      nodata=nodata, crs=crs)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
 
@@ -275,18 +260,9 @@ def read_jdem(spark: SparkSession, path: str, *, tile_px: int = 256,
                         for x in range(W):
                             plane[i, x] = _jfield(
                                 raw, 9 + 5 * x, 5) * np.float32(0.1)
-                    out.append({
-                        "raster_id": rid, "band": 1, "zoom": int(zoom),
-                        "tile_x": 0, "tile_y": int(r.tile_y),
-                        "width": W, "height": hh, "dtype": "float32",
-                        "nodata": float("nan"), "crs": "",
-                        "geotransform": [gt[0], gt[1], gt[2],
-                                         gt[3] + y0 * gt[5], gt[4],
-                                         gt[5]],
-                        "data": plane.tobytes(),
-                    })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    out.append(tile_row(rid, 1, int(zoom), 0,
+                                        int(r.tile_y), plane, gt, y0=y0))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
 
@@ -508,7 +484,7 @@ def read_ctg(spark: SparkSession, path: str, *,
     zone = int(hdr[50:55])
     nwe = int(hdr[3 * 80 + 40:3 * 80 + 50])
     nwn = int(hdr[3 * 80 + 50:3 * 80 + 60])
-    gt = [nwe - cell / 2, cell, 0.0, nwn + cell / 2, 0.0,
+    gt = [nwe - cell / 2, float(cell), 0.0, nwn + cell / 2, 0.0,
           float(-cell)]
     rid = raster_id or os.path.basename(path)
     desc = spark.createDataFrame(
@@ -535,18 +511,9 @@ def read_ctg(spark: SparkSession, path: str, *,
                     for i in range(6):
                         v = int(ln[20 + 10 * i:30 + 10 * i])
                         img[i, cy, cx] = 0 if v >= 2000000000 else v
-                for b in range(6):
-                    out.append({
-                        "raster_id": rid, "band": b + 1,
-                        "zoom": int(zoom), "tile_x": 0, "tile_y": 0,
-                        "width": ncols, "height": nrows,
-                        "dtype": "int32", "nodata": float("nan"),
-                        "crs": f"EPSG:{32600 + zone}",
-                        "geotransform": [float(v) for v in gt],
-                        "data": np.ascontiguousarray(
-                            img[b]).tobytes(),
-                    })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                out += [tile_row(rid, b + 1, int(zoom), 0, 0, img[b], gt,
+                                 crs=f"EPSG:{32600 + zone}")
+                        for b in range(6)]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

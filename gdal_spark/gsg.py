@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 GSBG_NODATA = 1.701410009187828e+38
 GSBG_HEADER = 56
@@ -122,7 +122,6 @@ def _read_bottom_up(spark: SparkSession, path: str, hdr: dict, *,
     stride = ncols * isz
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nty = math.ceil(nrows / tile_px)
-    ntx = math.ceil(ncols / tile_px)
 
     rows = []
     for ty in range(nty):
@@ -144,25 +143,12 @@ def _read_bottom_up(spark: SparkSession, path: str, hdr: dict, *,
                     plane = np.frombuffer(
                         raw, dtype=np.dtype(dtype).newbyteorder("<")
                     ).reshape(h, ncols)[::-1]
-                    for tx in range(ntx):
-                        w = min(tile_px, ncols - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[:, tx * tile_px:tx * tile_px + w]
-                        ).astype(np.dtype(dtype), copy=False)
-                        out.append({
-                            "raster_id": rid, "band": 1,
-                            "zoom": int(zoom), "tile_x": tx,
-                            "tile_y": int(r.tile_y),
-                            "width": w, "height": h, "dtype": dtype,
-                            "nodata": float(nodata), "crs": crs,
-                            "geotransform": [
-                                gt[0] + tx * tile_px * gt[1], gt[1],
-                                gt[2],
-                                gt[3] + int(r.y0) * gt[5], gt[4],
-                                gt[5]],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                    out += strip_rows(
+                        rid, 1, int(zoom), int(r.tile_y),
+                        plane.astype(np.dtype(dtype), copy=False), gt,
+                        tile_px, y0=int(r.y0), nodata=float(nodata),
+                        crs=crs, dtype=dtype)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 
 def _fields_of(line: str, gtype: int) -> list[str]:
@@ -153,7 +153,6 @@ def read_gxf(spark: SparkSession, path: str, *, tile_px: int = 256,
     spans = h["spans"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nty = math.ceil(H / tile_px)
-    ntx = math.ceil(W / tile_px)
     rows = [(0, ty, min(tile_px, H - ty * tile_px))
             for ty in range(nty)]
     desc = spark.createDataFrame(
@@ -228,23 +227,9 @@ def read_gxf(spark: SparkSession, path: str, *, tile_px: int = 256,
                     if sense in (-1, -2):    # right-to-left senses
                         ln = ln[::-1]
                     plane[i] = ln
-                p32 = plane.astype(np.float32)
-                for tx in range(ntx):
-                    w = min(tile_px, W - tx * tile_px)
-                    t = np.ascontiguousarray(
-                        p32[:, tx * tile_px:tx * tile_px + w])
-                    out.append({
-                        "raster_id": rid, "band": 1, "zoom": int(zoom),
-                        "tile_x": tx, "tile_y": int(r.tile_y),
-                        "width": w, "height": hh, "dtype": "float32",
-                        "nodata": float(nodata), "crs": "",
-                        "geotransform": [gt[0] + tx * tile_px * gt[1],
-                                         gt[1], gt[2],
-                                         gt[3] + y0 * gt[5], gt[4],
-                                         gt[5]],
-                        "data": t.tobytes(),
-                    })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                out += strip_rows(rid, 1, int(zoom), int(r.tile_y),
+                                  plane.astype(np.float32), gt, tile_px,
+                                  y0=y0, nodata=float(nodata))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -47,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 _EPT = ["u1", "u2", "u4", "u8", "s8", "u16", "s16", "u32", "s32",
         "f32", "f64", "c64", "c128"]
@@ -465,20 +465,11 @@ def read_hfa(spark: SparkSession, path: str, *,
                 x0, y0 = int(r.bx) * bw, int(r.by) * bh
                 w = min(bw, W - x0)
                 h = min(bh, H - y0)
-                tile = np.ascontiguousarray(
-                    arr.reshape(bh, bw)[:h, :w])
-                out.append({
-                    "raster_id": rid, "band": int(r.band) + 1,
-                    "zoom": int(zoom), "tile_x": int(r.bx),
-                    "tile_y": int(r.by), "width": w, "height": h,
-                    "dtype": str(npdt), "nodata": float("nan"),
-                    "crs": crs,
-                    "geotransform": [gt[0] + x0 * gt[1], gt[1], gt[2],
-                                     gt[3] + y0 * gt[5], gt[4], gt[5]],
-                    "data": tile.tobytes(),
-                })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                out.append(tile_row(
+                    rid, int(r.band) + 1, int(zoom), int(r.bx), int(r.by),
+                    arr.reshape(bh, bw)[:h, :w], gt, x0=x0, y0=y0,
+                    crs=crs, dtype=str(npdt)))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
 

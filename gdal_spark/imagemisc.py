@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
 
 # ------------------------------------------------------------------ SGI
 
@@ -91,7 +91,6 @@ def read_sgi(spark: SparkSession, path: str, *, tile_px: int = 256,
     W, H, nb = h["width"], h["height"], h["nbands"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nty = math.ceil(H / tile_px)
-    ntx = math.ceil(W / tile_px)
     rows = [(b, ty, min(tile_px, H - ty * tile_px))
             for b in range(nb) for ty in range(nty)]
     desc = spark.createDataFrame(
@@ -124,25 +123,15 @@ def read_sgi(spark: SparkSession, path: str, *, tile_px: int = 256,
                             lines.append(np.frombuffer(
                                 os.pread(fd, W, off), np.uint8))
                     plane = np.stack(lines)
-                    for tx in range(ntx):
-                        w = min(tile_px, W - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[:, tx * tile_px:tx * tile_px + w])
-                        out.append(_row(rid, b + 1, zoom, tx,
-                                        int(r.tile_y), w, hh, "uint8",
-                                        t.tobytes()))
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    # every tile carries the unshifted identity transform
+                    out += [tile_row(rid, b + 1, int(zoom), tx,
+                                     int(r.tile_y), plane[:, x:x + tile_px],
+                                     [0.0, 1.0, 0.0, 0.0, 0.0, -1.0],
+                                     dtype="uint8")
+                            for tx, x in enumerate(range(0, W, tile_px))]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
-
-
-def _row(rid, band, zoom, tx, ty, w, h, dtype, data,
-         gt=(0.0, 1.0, 0.0, 0.0, 0.0, -1.0), crs=""):
-    return {"raster_id": rid, "band": band, "zoom": int(zoom),
-            "tile_x": tx, "tile_y": ty, "width": w, "height": h,
-            "dtype": dtype, "nodata": float("nan"), "crs": crs,
-            "geotransform": list(gt), "data": data}
 
 
 # ------------------------------------------------------------- Terragen
@@ -208,7 +197,6 @@ def read_terragen(spark: SparkSession, path: str, *,
     # custom: strip at rows [y0, y0+h) maps to file rows
     # [H-y0-h, H-y0) contiguous -> one pread + flip (gsg pattern)
     nty = math.ceil(H / tile_px)
-    ntx = math.ceil(W / tile_px)
     rows = [(0, ty, min(tile_px, H - ty * tile_px))
             for ty in range(nty)]
     desc = spark.createDataFrame(
@@ -230,20 +218,10 @@ def read_terragen(spark: SparkSession, path: str, *,
                     raw = os.pread(fd, hh * W * 2, off)
                     plane = np.frombuffer(raw, "<i2").reshape(
                         hh, W)[::-1]
-                    for tx in range(ntx):
-                        w = min(tile_px, W - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[:, tx * tile_px:tx * tile_px + w]
-                        ).astype(np.int16, copy=False)
-                        out.append(_row(rid, 1, zoom, tx,
-                                        int(r.tile_y), w, hh, "int16",
-                                        t.tobytes(),
-                                        gt=[gt[0] + tx * tile_px * gt[1],
-                                            gt[1], 0.0,
-                                            gt[3] + y0 * gt[5], 0.0,
-                                            gt[5]]))
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    out += strip_rows(rid, 1, int(zoom), int(r.tile_y),
+                                      plane.astype(np.int16, copy=False),
+                                      gt, tile_px, y0=y0)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
 

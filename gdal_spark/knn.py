@@ -234,89 +234,96 @@ def knn_join_distributed(
     cand = None
     results = None
     r_prev, radius = -1, initial_radius  # first annulus includes own cell
-    for _ in range(max_rounds):
-        cellq = (
-            pending.withColumn(
-                "dx", F.explode(F.sequence(F.lit(-radius), F.lit(radius)))
+    try:
+        for _ in range(max_rounds):
+            cellq = (
+                pending.withColumn(
+                    "dx", F.explode(F.sequence(F.lit(-radius), F.lit(radius)))
+                )
+                .withColumn(
+                    "dy", F.explode(F.sequence(F.lit(-radius), F.lit(radius)))
+                )
+                .filter(F.greatest(F.abs("dx"), F.abs("dy")) > r_prev)
+                .withColumn("ccy", F.col("cy") + F.col("dy"))
+                .filter((F.col("ccy") >= 0) & (F.col("ccy") < n))
+                .withColumn("ccx", F.pmod(F.col("cx") + F.col("dx"), F.lit(n)))
+                .select(
+                    *qcols,
+                    (
+                        F.lit(int(level)).cast("long") * (1 << 52)
+                        + F.col("ccx") * (1 << 26)
+                        + F.col("ccy")
+                    ).alias("cell_id"),
+                )
             )
-            .withColumn(
-                "dy", F.explode(F.sequence(F.lit(-radius), F.lit(radius)))
-            )
-            .filter(F.greatest(F.abs("dx"), F.abs("dy")) > r_prev)
-            .withColumn("ccy", F.col("cy") + F.col("dy"))
-            .filter((F.col("ccy") >= 0) & (F.col("ccy") < n))
-            .withColumn("ccx", F.pmod(F.col("cx") + F.col("dx"), F.lit(n)))
-            .select(
+            new = cellq.join(pts, "cell_id").select(
                 *qcols,
-                (
-                    F.lit(int(level)).cast("long") * (1 << 52)
-                    + F.col("ccx") * (1 << 26)
-                    + F.col("ccy")
-                ).alias("cell_id"),
+                F.col(id_col),
+                _haversine_col(
+                    F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")
+                ).alias("dist_m"),
             )
-        )
-        new = cellq.join(pts, "cell_id").select(
-            *qcols,
-            F.col(id_col),
-            _haversine_col(
-                F.col("q_lon"), F.col("q_lat"), F.col("p_lon"), F.col("p_lat")
-            ).alias("dist_m"),
-        )
-        cand = new if cand is None else cand.unionByName(new)
-        w = Window.partitionBy("q_id").orderBy(F.asc("dist_m"), F.asc(id_col))
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .localCheckpoint()
-        )
-
-        # column-math guard: LOWER bound on the distance to uncovered
-        # territory — lat boundaries by exact meridian distance, lon
-        # boundaries by cross-track distance to the boundary meridian
-        # (R*asin(|sin dlon|*cos lat), periodic so antimeridian wrap
-        # is free; same bound as _query_cells, see the comment there)
-        lat_lo = F.greatest(F.lit(-90.0), F.lit(-90.0) + (F.col("cy") - radius) * cell_h)
-        lat_hi = F.least(F.lit(90.0), F.lit(-90.0) + (F.col("cy") + radius + 1) * cell_h)
-
-        def xtrack(lon_b):
-            s = F.abs(F.sin(F.radians(F.col("q_lon") - lon_b))) * F.cos(
-                F.radians(F.col("q_lat"))
+            cand = new if cand is None else cand.unionByName(new)
+            w = Window.partitionBy("q_id").orderBy(F.asc("dist_m"), F.asc(id_col))
+            topk = (
+                cand.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= F.col("k"))
+                .localCheckpoint()
             )
-            return G.MEAN_EARTH_RADIUS * F.asin(F.least(s, F.lit(1.0)))
 
-        if (2 * radius + 1) < n:
-            lon_lo = F.lit(-180.0) + (F.col("cx") - radius) * cell_w
-            lon_hi = F.lit(-180.0) + (F.col("cx") + radius + 1) * cell_w
-            guard_w, guard_e = xtrack(lon_lo), xtrack(lon_hi)
+            # column-math guard: LOWER bound on the distance to uncovered
+            # territory — lat boundaries by exact meridian distance, lon
+            # boundaries by cross-track distance to the boundary meridian
+            # (R*asin(|sin dlon|*cos lat), periodic so antimeridian wrap
+            # is free; same bound as _query_cells, see the comment there)
+            lat_lo = F.greatest(F.lit(-90.0), F.lit(-90.0) + (F.col("cy") - radius) * cell_h)
+            lat_hi = F.least(F.lit(90.0), F.lit(-90.0) + (F.col("cy") + radius + 1) * cell_h)
+
+            def xtrack(lon_b):
+                s = F.abs(F.sin(F.radians(F.col("q_lon") - lon_b))) * F.cos(
+                    F.radians(F.col("q_lat"))
+                )
+                return G.MEAN_EARTH_RADIUS * F.asin(F.least(s, F.lit(1.0)))
+
+            if (2 * radius + 1) < n:
+                lon_lo = F.lit(-180.0) + (F.col("cx") - radius) * cell_w
+                lon_hi = F.lit(-180.0) + (F.col("cx") + radius + 1) * cell_w
+                guard_w, guard_e = xtrack(lon_lo), xtrack(lon_hi)
+            else:
+                guard_w = guard_e = inf
+            guard = F.least(
+                guard_w,
+                guard_e,
+                F.when(lat_lo > -90.0,
+                       _haversine_col(F.col("q_lon"), F.col("q_lat"), F.col("q_lon"), lat_lo)
+                       ).otherwise(inf),
+                F.when(lat_hi < 90.0,
+                       _haversine_col(F.col("q_lon"), F.col("q_lat"), F.col("q_lon"), lat_hi)
+                       ).otherwise(inf),
+            )
+            full_cover = radius >= n
+            stats = topk.groupBy(*qcols).agg(
+                F.count("*").alias("cnt"), F.max("dist_m").alias("kth")
+            ).withColumn(
+                "resolved",
+                F.lit(full_cover)
+                | ((F.col("cnt") >= F.col("k")) & (F.col("kth") <= guard)),
+            )
+            done_q = stats.filter("resolved").select("q_id")
+            got = topk.join(done_q, "q_id", "left_semi").select(
+                "q_id", id_col, "dist_m", "rank"
+            )
+            results = got if results is None else results.unionByName(got)
+            pending = pending.join(done_q, "q_id", "left_anti").localCheckpoint()
+            cand = topk.join(done_q, "q_id", "left_anti").drop("rank")
+            if full_cover or pending.isEmpty():
+                break
+            r_prev, radius = radius, radius * 2
         else:
-            guard_w = guard_e = inf
-        guard = F.least(
-            guard_w,
-            guard_e,
-            F.when(lat_lo > -90.0,
-                   _haversine_col(F.col("q_lon"), F.col("q_lat"), F.col("q_lon"), lat_lo)
-                   ).otherwise(inf),
-            F.when(lat_hi < 90.0,
-                   _haversine_col(F.col("q_lon"), F.col("q_lat"), F.col("q_lon"), lat_hi)
-                   ).otherwise(inf),
-        )
-        full_cover = radius >= n
-        stats = topk.groupBy(*qcols).agg(
-            F.count("*").alias("cnt"), F.max("dist_m").alias("kth")
-        ).withColumn(
-            "resolved",
-            F.lit(full_cover)
-            | ((F.col("cnt") >= F.col("k")) & (F.col("kth") <= guard)),
-        )
-        done_q = stats.filter("resolved").select("q_id")
-        got = topk.join(done_q, "q_id", "left_semi").select(
-            "q_id", id_col, "dist_m", "rank"
-        )
-        results = got if results is None else results.unionByName(got)
-        pending = pending.join(done_q, "q_id", "left_anti").localCheckpoint()
-        cand = topk.join(done_q, "q_id", "left_anti").drop("rank")
-        if full_cover or pending.isEmpty():
-            break
-        r_prev, radius = radius, radius * 2
-    pts.unpersist()
+            raise RuntimeError(
+                f"kNN did not converge for {pending.count()} queries within "
+                f"{max_rounds} rounds — raise max_rounds or lower level"
+            )
+    finally:
+        pts.unpersist()
     return results

@@ -117,13 +117,12 @@ def read_lan(spark: SparkSession, path: str, *, tile_px: int = 256,
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .synth import TILE_SCHEMA
+    from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
     nrows, ncols, nbands = h["nrows"], h["ncols"], h["nbands"]
     gt = h["geotransform"]
     line_b = (ncols + 1) // 2
     nty = math.ceil(nrows / tile_px)
-    ntx = math.ceil(ncols / tile_px)
     rows = []
     for ty in range(nty):
         hh = min(tile_px, nrows - ty * tile_px)
@@ -154,24 +153,9 @@ def read_lan(spark: SparkSession, path: str, *, tile_px: int = 256,
                     unp = np.empty((hh, line_b * 2), np.uint8)
                     unp[:, 0::2] = packed >> 4
                     unp[:, 1::2] = packed & 0x0F
-                    plane = unp[:, :ncols]
-                    for tx in range(ntx):
-                        w = min(tile_px, ncols - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[:, tx * tile_px:tx * tile_px + w])
-                        out.append({
-                            "raster_id": rid, "band": int(r.band) + 1,
-                            "zoom": int(zoom), "tile_x": tx,
-                            "tile_y": int(r.tile_y), "width": w,
-                            "height": hh, "dtype": "uint8",
-                            "nodata": float("nan"), "crs": "",
-                            "geotransform": [
-                                gt[0] + tx * tile_px * gt[1], gt[1],
-                                gt[2], gt[3] + y0 * gt[5], gt[4],
-                                gt[5]],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    out += strip_rows(rid, int(r.band) + 1, int(zoom),
+                                      int(r.tile_y), unp[:, :ncols], gt,
+                                      tile_px, y0=y0)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from .jpeg import decode_jpeg, encode_jpeg
 from .png import decode_png, encode_png
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 ORIGIN = -20037508.342789244  # -pi * 6378137 (web-mercator frame)
 
@@ -119,18 +119,10 @@ def read_mbtiles(spark: SparkSession, path: str, *, zoom: int | None = None,
                         h, w = img.shape[0], img.shape[1]
                         gt = [ORIGIN + int(tc) * w * res, res, 0.0,
                               -ORIGIN - ty * h * res, 0.0, -res]
-                        for b in range(img.shape[2]):
-                            a = np.ascontiguousarray(img[:, :, b])
-                            out.append({
-                                "raster_id": rid, "band": b + 1, "zoom": z,
-                                "tile_x": int(tc), "tile_y": ty,
-                                "width": w, "height": h,
-                                "dtype": str(a.dtype), "nodata": np.nan,
-                                "crs": "EPSG:3857", "geotransform": gt,
-                                "data": a.tobytes(),
-                            })
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in TILE_SCHEMA.fields])
+                        out += [tile_row(rid, b + 1, z, int(tc), ty,
+                                         img[:, :, b], gt, crs="EPSG:3857")
+                                for b in range(img.shape[2])]
+                yield pd.DataFrame(out, columns=TILE_COLUMNS)
         finally:
             con.close()
 

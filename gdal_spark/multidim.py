@@ -141,7 +141,7 @@ class MDArray:
         import numpy as np
         import pandas as pd
 
-        from .synth import TILE_SCHEMA
+        from .synth import TILE_SCHEMA, tile_row
         from .tiling import _gdal_cast
 
         if len(self.dims) != 2:
@@ -162,15 +162,10 @@ class MDArray:
             arr = np.full((ts, ts), float(nodata), dtype=np.float64)
             arr[pdf["p_y"].to_numpy(), pdf["p_x"].to_numpy()] = \
                 pdf["value"].to_numpy()
-            out = _gdal_cast(arr, dtype)
-            return pd.DataFrame([{
-                "raster_id": raster_id, "band": 1, "zoom": 0,
-                "tile_x": t_x, "tile_y": t_y, "width": ts, "height": ts,
-                "dtype": str(out.dtype), "nodata": float(nodata),
-                "crs": "", "geotransform": [float(t_x * ts), 1.0, 0.0,
-                                            -float(t_y * ts), 0.0, -1.0],
-                "data": out.tobytes(),
-            }])
+            return pd.DataFrame([tile_row(
+                raster_id, 1, 0, t_x, t_y, _gdal_cast(arr, dtype),
+                [float(t_x * ts), 1.0, 0.0, -float(t_y * ts), 0.0, -1.0],
+                nodata=float(nodata))])
 
         return coo.groupBy("t_y", "t_x").applyInPandas(
             assemble, schema=TILE_SCHEMA)

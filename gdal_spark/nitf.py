@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
 def identify(path: str) -> bool:
@@ -349,22 +349,12 @@ def read_nitf(spark: SparkSession, path: str, *, image: int = 0,
                         bh, bw * word).view(np_dt).reshape(bh, bw)
                 w = min(bw, W - int(r.bx) * bw)
                 h = min(bh, H - int(r.by) * bh)
-                t = np.ascontiguousarray(a[:h, :w]).astype(
-                    np.dtype(dtype) if bits > 1 else np.uint8,
-                    copy=False)
-                out.append({
-                    "raster_id": rid, "band": int(r.band) + 1,
-                    "zoom": int(zoom),
-                    "tile_x": int(r.bx), "tile_y": int(r.by),
-                    "width": int(w), "height": int(h),
-                    "dtype": str(t.dtype), "nodata": float("nan"),
-                    "crs": crs,
-                    "geotransform": [
-                        gt[0] + int(r.bx) * bw * gt[1], gt[1], gt[2],
-                        gt[3] + int(r.by) * bh * gt[5], gt[4], gt[5]],
-                    "data": t.tobytes(),
-                })
+                t = a[:h, :w].astype(
+                    np.dtype(dtype) if bits > 1 else np.uint8, copy=False)
+                out.append(tile_row(
+                    rid, int(r.band) + 1, int(zoom), int(r.bx), int(r.by),
+                    t, gt, x0=int(r.bx) * bw, y0=int(r.by) * bh, crs=crs))
             os.close(fd)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)

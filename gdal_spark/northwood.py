@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 NODATA = -1.0e37
 
@@ -148,7 +148,6 @@ def read_grd(spark: SparkSession, path: str, *, tile_px: int = 256,
     gt = h["geotransform"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nty = math.ceil(H / tile_px)
-    ntx = math.ceil(W / tile_px)
     rows = [(0, ty, min(tile_px, H - ty * tile_px))
             for ty in range(nty)]
     desc = spark.createDataFrame(
@@ -171,33 +170,14 @@ def read_grd(spark: SparkSession, path: str, *, tile_px: int = 256,
                          * scale).astype(np.float32)
                     z[u16 == 0] = NODATA
                     rgb = cmap[u16 >> 4]
-                    for band, plane, dt in (
-                            (1, rgb[:, :, 0], "uint8"),
-                            (2, rgb[:, :, 1], "uint8"),
-                            (3, rgb[:, :, 2], "uint8"),
-                            (4, z, "float32")):
-                        for tx in range(ntx):
-                            w = min(tile_px, W - tx * tile_px)
-                            t = np.ascontiguousarray(
-                                plane[:, tx * tile_px:tx * tile_px
-                                      + w])
-                            out.append({
-                                "raster_id": rid, "band": band,
-                                "zoom": int(zoom), "tile_x": tx,
-                                "tile_y": int(r.tile_y), "width": w,
-                                "height": hh, "dtype": dt,
-                                "nodata": NODATA if band == 4
-                                else float("nan"),
-                                "crs": "",
-                                "geotransform": [
-                                    gt[0] + tx * tile_px * gt[1],
-                                    gt[1], gt[2],
-                                    gt[3] + y0 * gt[5], gt[4],
-                                    gt[5]],
-                                "data": t.tobytes(),
-                            })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    for band, plane in enumerate(
+                            (rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2], z),
+                            start=1):
+                        out += strip_rows(
+                            rid, band, int(zoom), int(r.tile_y), plane, gt,
+                            tile_px, y0=y0,
+                            nodata=NODATA if band == 4 else float("nan"))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -35,7 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 _TYPES = {"8U": "uint8", "16S": "int16", "16U": "uint16",
           "32R": "float32", "32S": "int32", "32U": "uint32",
@@ -129,7 +129,6 @@ def read_pcidsk(spark: SparkSession, path: str, *, tile_px: int = 256,
     W, H = info["width"], info["height"]
     chans = info["channels"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    ntx = math.ceil(W / tile_px)
     nty = math.ceil(H / tile_px)
 
     rows = []
@@ -172,25 +171,14 @@ def read_pcidsk(spark: SparkSession, path: str, *, tile_px: int = 256,
                         buf[:, :W * step].reshape(h, W, step)[:, :, :isz]
                     ).reshape(h, W * isz).view(
                         np.dtype(dtype).newbyteorder("<")).reshape(h, W)
-                for tx in range(ntx):
-                    w = min(tile_px, W - tx * tile_px)
-                    t = np.ascontiguousarray(
-                        plane[:, tx * tile_px:tx * tile_px + w]
-                    ).astype(np.dtype(dtype), copy=False)
-                    out.append({
-                        "raster_id": rid, "band": int(r.band) + 1,
-                        "zoom": int(zoom),
-                        "tile_x": tx, "tile_y": int(r.tile_y),
-                        "width": int(w), "height": h, "dtype": dtype,
-                        "nodata": float("nan"), "crs": "",
-                        "geotransform": [float(tx * tile_px), 1.0, 0.0,
-                                         float(int(r.tile_y) * tile_px),
-                                         0.0, 1.0],
-                        "data": t.tobytes(),
-                    })
+                out += strip_rows(
+                    rid, int(r.band) + 1, int(zoom), int(r.tile_y),
+                    plane.astype(np.dtype(dtype), copy=False),
+                    (0.0, 1.0, 0.0, 0.0, 0.0, 1.0), tile_px,
+                    y0=int(r.tile_y) * tile_px, dtype=dtype)
             for fd in handles.values():
                 os.close(fd)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -45,7 +45,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
 
 NULL1 = 0.0
 NULL2 = -32768.0
@@ -570,7 +570,6 @@ def _strided_scan(spark, info, *, tile_px, raster_id, zoom):
     nodata, crs = info["nodata"], info["crs"]
     data_path = info["data_path"]
     rid = raster_id or os.path.splitext(os.path.basename(data_path))[0]
-    ntx = math.ceil(W / tile_px)
     nty = math.ceil(H / tile_px)
 
     if layout == "bip":
@@ -631,26 +630,14 @@ def _strided_scan(spark, info, *, tile_px, raster_id, zoom):
                         body[:, :, b, :]).reshape(h, W * isz).view(np_dt))
                         for b in range(nb)]
                 for band, plane in planes:
-                    plane = plane.reshape(h, W)
-                    for tx in range(ntx):
-                        w = min(tile_px, W - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[:, tx * tile_px:tx * tile_px + w]
-                        ).astype(np.dtype(dtype), copy=False)
-                        out.append({
-                            "raster_id": rid, "band": band,
-                            "zoom": int(zoom),
-                            "tile_x": tx, "tile_y": int(r.tile_y),
-                            "width": int(w), "height": h, "dtype": dtype,
-                            "nodata": float(nodata), "crs": crs,
-                            "geotransform": [
-                                gt[0] + tx * tile_px * gt[1], gt[1], 0.0,
-                                gt[3] + int(r.tile_y) * tile_px * gt[5],
-                                0.0, gt[5]],
-                            "data": t.tobytes(),
-                        })
+                    out += strip_rows(
+                        rid, band, int(zoom), int(r.tile_y),
+                        plane.reshape(h, W).astype(np.dtype(dtype),
+                                                   copy=False),
+                        gt, tile_px, y0=int(r.tile_y) * tile_px,
+                        nodata=float(nodata), crs=crs, dtype=dtype)
             os.close(fd)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 
@@ -758,20 +745,13 @@ def read_isis3(spark: SparkSession, path: str, *, tile_px: int = 256,
                 a = np.frombuffer(raw, np_dt).reshape(th, tw)
                 w = min(tw, W - int(r.tile_x) * tw)
                 h = min(th, H - int(r.tile_y) * th)
-                t = np.ascontiguousarray(a[:h, :w]).astype(
-                    np.dtype(dtype), copy=False)
-                out.append({
-                    "raster_id": rid, "band": int(r.band) + 1,
-                    "zoom": int(zoom),
-                    "tile_x": int(r.tile_x), "tile_y": int(r.tile_y),
-                    "width": int(w), "height": int(h), "dtype": dtype,
-                    "nodata": float(nodata), "crs": crs,
-                    "geotransform": [
-                        gt[0] + int(r.tile_x) * tw * gt[1], gt[1], 0.0,
-                        gt[3] + int(r.tile_y) * th * gt[5], 0.0, gt[5]],
-                    "data": t.tobytes(),
-                })
+                out.append(tile_row(
+                    rid, int(r.band) + 1, int(zoom), int(r.tile_x),
+                    int(r.tile_y), a[:h, :w].astype(np.dtype(dtype),
+                                                    copy=False),
+                    gt, x0=int(r.tile_x) * tw, y0=int(r.tile_y) * th,
+                    nodata=float(nodata), crs=crs, dtype=dtype))
             os.close(fd)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)

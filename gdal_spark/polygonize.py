@@ -551,9 +551,7 @@ def sieve(tiles: DataFrame, threshold: int, band: int = 1,
     parts.unpersist()
     bc = spark.sparkContext.broadcast(relabel)
 
-    from .synth import TILE_SCHEMA
-
-    _tile_fields = [f.name for f in TILE_SCHEMA.fields]
+    from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
     def rewrite(batches):
         for pdf in batches:
@@ -576,17 +574,11 @@ def sieve(tiles: DataFrame, threshold: int, band: int = 1,
                     [m.get(int(u), float(v0)) for u, v0 in zip(uniq, vals0)]
                 )
                 new = lut[inv].reshape(H, W)
-                out.append(
-                    {
-                        "raster_id": dst_raster_id, "band": int(r.band),
-                        "zoom": int(r.zoom), "tile_x": tx, "tile_y": ty,
-                        "width": W, "height": H, "dtype": "float64",
-                        "nodata": float(r.nodata), "crs": r.crs,
-                        "geotransform": list(r.geotransform),
-                        "data": new.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(out, columns=_tile_fields)
+                out.append(tile_row(
+                    dst_raster_id, int(r.band), int(r.zoom), tx, ty, new,
+                    list(r.geotransform), nodata=float(r.nodata),
+                    crs=r.crs, dtype="float64"))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(rewrite, schema=TILE_SCHEMA)
 

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 from .tiling import _decode, _gdal_cast
 
 # ------------------------------------------------------------------ stats
@@ -274,7 +274,7 @@ def _grouped_band_calc(tiles: DataFrame, fn, out_dtype: str,
             if raster_id:
                 d["raster_id"] = raster_id
             rows.append(d)
-        return pd.DataFrame(rows)[[f.name for f in TILE_SCHEMA.fields]]
+        return pd.DataFrame(rows)[TILE_COLUMNS]
 
     return tiles.groupBy(*_TILE_KEY).applyInPandas(run, schema=TILE_SCHEMA)
 
@@ -494,18 +494,11 @@ def rasterize_zones(
                     arr = np.where(
                         arr == -1, np.int32(invert_burn), np.int32(-1)
                     ).astype(np.int32)
-                rows.append(
-                    {
-                        "raster_id": raster_id, "band": 1, "zoom": 0,
-                        "tile_x": tx, "tile_y": ty,
-                        "width": tile_px, "height": tile_px,
-                        "dtype": "int32", "nodata": -1.0, "crs": "EPSG:4326",
-                        "geotransform": [x0 + tx * tile_px * rx, rx, 0.0,
-                                         y_top - ty * tile_px * ry, 0.0, -ry],
-                        "data": arr.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+                rows.append(tile_row(
+                    raster_id, 1, 0, tx, ty, arr, (x0, rx, 0.0, y_top, 0.0, -ry),
+                    x0=tx * tile_px, y0=ty * tile_px, nodata=-1.0,
+                    crs="EPSG:4326"))
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return base.mapInPandas(burn, schema=TILE_SCHEMA)
 
@@ -665,7 +658,7 @@ def mask_band(tiles: DataFrame, dst_band_offset: int = 200) -> DataFrame:
                 d.update(band=int(r.band) + dst_band_offset,
                          dtype="uint8", data=m.tobytes())
                 rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -786,17 +779,12 @@ def _focal(tiles: DataFrame, kernel_fn, out_dtype: str, dst_raster_id: str,
                     elif (dx, 0) in present:
                         pad[cy, cx] = pad[1 if dy < 0 else h, cx]
                 out = kernel_fn(pad, res)
-                out_rows.append(
-                    {
-                        "raster_id": dst_raster_id, "band": int(r.band),
-                        "zoom": int(r.zoom), "tile_x": int(r.tile_x),
-                        "tile_y": int(r.tile_y), "width": w, "height": h,
-                        "dtype": out_dtype, "nodata": float(r.nodata),
-                        "crs": r.crs, "geotransform": list(r.geotransform),
-                        "data": _gdal_cast(out, out_dtype).tobytes(),
-                    }
-                )
-            yield pd.DataFrame(out_rows, columns=[f.name for f in TILE_SCHEMA.fields])
+                out_rows.append(tile_row(
+                    dst_raster_id, int(r.band), int(r.zoom), int(r.tile_x),
+                    int(r.tile_y), _gdal_cast(out, out_dtype),
+                    list(r.geotransform), nodata=float(r.nodata), crs=r.crs,
+                    dtype=out_dtype))
+            yield pd.DataFrame(out_rows, columns=TILE_COLUMNS)
 
     return j.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -1022,18 +1010,11 @@ def pansharpen(pan: DataFrame, ms: DataFrame,
         rows = []
         for r in pdf.itertuples(index=False):
             out = arrs[int(r.band)] * ratio
-            rows.append(
-                {
-                    "raster_id": dst_raster_id, "band": int(r.band),
-                    "zoom": int(r.zoom), "tile_x": int(r.tile_x),
-                    "tile_y": int(r.tile_y), "width": int(r.width),
-                    "height": int(r.height), "dtype": "float64",
-                    "nodata": float(r.nodata), "crs": r.crs,
-                    "geotransform": list(r.geotransform),
-                    "data": out.tobytes(),
-                }
-            )
-        return pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+            rows.append(tile_row(
+                dst_raster_id, int(r.band), int(r.zoom), int(r.tile_x),
+                int(r.tile_y), out, list(r.geotransform),
+                nodata=float(r.nodata), crs=r.crs))
+        return pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return j.groupBy("tile_x", "tile_y").applyInPandas(run, schema=TILE_SCHEMA)
 
@@ -1160,17 +1141,11 @@ def proximity(tiles: DataFrame, target_values: list[float],
                         d2 = (dx * dx + dy * dy).min(axis=2)
                         best = np.minimum(best, d2)
                     out = np.where(best <= md2, np.sqrt(best), nodata)
-                rows.append(
-                    {
-                        "raster_id": dst_raster_id, "band": int(r.band),
-                        "zoom": int(r.zoom), "tile_x": int(r.tile_x),
-                        "tile_y": int(r.tile_y), "width": w, "height": h,
-                        "dtype": "float64", "nodata": nodata, "crs": r.crs,
-                        "geotransform": list(r.geotransform),
-                        "data": out.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+                rows.append(tile_row(
+                    dst_raster_id, int(r.band), int(r.zoom), int(r.tile_x),
+                    int(r.tile_y), out, list(r.geotransform), nodata=nodata,
+                    crs=r.crs, dtype="float64"))
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return j.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -1359,9 +1334,7 @@ def proximity_full(tiles: DataFrame, target_values: list[float],
                 d["nodata"] = nodata
                 d["data"] = out.tobytes()
                 rows.append(d)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TILE_SCHEMA.fields]
-            )
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return all_states.mapInPandas(finish, schema=TILE_SCHEMA)
 
@@ -1518,17 +1491,11 @@ def fill_nodata(tiles: DataFrame, search: int = 8, power: float = 2.0,
                         pad[ys, xs] = piece
                 filled = fill_smooth_window(pad, search, smoothing,
                                             float(r.nodata), power)
-                rows.append(
-                    {
-                        "raster_id": dst_raster_id, "band": int(r.band),
-                        "zoom": int(r.zoom), "tile_x": int(r.tile_x),
-                        "tile_y": int(r.tile_y), "width": W, "height": H,
-                        "dtype": "float64", "nodata": float(r.nodata),
-                        "crs": r.crs, "geotransform": list(r.geotransform),
-                        "data": filled.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+                rows.append(tile_row(
+                    dst_raster_id, int(r.band), int(r.zoom), int(r.tile_x),
+                    int(r.tile_y), filled, list(r.geotransform),
+                    nodata=float(r.nodata), crs=r.crs, dtype="float64"))
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return j.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -1708,7 +1675,7 @@ def color_relief(tiles: DataFrame, ramp: list[tuple[float, int, int, int]],
                         data=_gdal_cast(out, "uint8").tobytes(),
                     )
                     rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
 

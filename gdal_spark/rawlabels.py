@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .ehdr import read_raw
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
 
 # ------------------------------------------------------------- RRASTER
 _R_TYPES = {
@@ -214,7 +214,6 @@ def read_paux(spark: SparkSession, path: str, *, tile_px: int = 256,
     raw_path = hdr["raw"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nty = math.ceil(H / tile_px)
-    ntx = math.ceil(W / tile_px)
     chans = hdr["chans"]
 
     rows = []
@@ -255,26 +254,10 @@ def read_paux(spark: SparkSession, path: str, *, tile_px: int = 256,
                         h, W * dt.itemsize).view(dt)
                     vals = vals.astype(dt.newbyteorder("="),
                                        copy=False)
-                    for tx in range(ntx):
-                        w = min(tile_px, W - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            vals[:, tx * tile_px:tx * tile_px + w])
-                        out.append({
-                            "raster_id": rid,
-                            "band": int(r.band) + 1,
-                            "zoom": int(zoom), "tile_x": tx,
-                            "tile_y": int(r.tile_y), "width": w,
-                            "height": h,
-                            "dtype": str(t.dtype),
-                            "nodata": float("nan"), "crs": "",
-                            "geotransform": [
-                                gt[0] + tx * tile_px * gt[1], gt[1],
-                                gt[2], gt[3] + y0 * gt[5], gt[4],
-                                gt[5]],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    out += strip_rows(rid, int(r.band) + 1, int(zoom),
+                                      int(r.tile_y), vals, gt, tile_px,
+                                      y0=y0)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)
 
@@ -372,21 +355,11 @@ def read_mff(spark: SparkSession, path: str, *,
                 else:
                     h = int(r.nbytes) // (W * dt.itemsize)
                     arr = np.frombuffer(raw, dt).reshape(h, W)
-                    w = W
                     x0, y0 = 0, int(r.by) * th
-                arr = np.ascontiguousarray(arr).astype(
-                    dt.newbyteorder("="), copy=False)
-                out.append({
-                    "raster_id": rid, "band": int(r.band) + 1,
-                    "zoom": int(zoom), "tile_x": int(r.bx),
-                    "tile_y": int(r.by), "width": int(w),
-                    "height": int(h), "dtype": str(arr.dtype),
-                    "nodata": float("nan"), "crs": "",
-                    "geotransform": [float(x0), 1.0, 0.0,
-                                     float(-y0), 0.0, -1.0],
-                    "data": arr.tobytes(),
-                })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                out.append(tile_row(
+                    rid, int(r.band) + 1, int(zoom), int(r.bx), int(r.by),
+                    arr.astype(dt.newbyteorder("="), copy=False),
+                    (0.0, 1.0, 0.0, 0.0, 0.0, -1.0), x0=x0, y0=y0))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

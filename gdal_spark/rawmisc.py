@@ -42,7 +42,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 # ------------------------------------------------------------------ LCP
 
@@ -222,8 +222,6 @@ def read_zmap(spark: SparkSession, path: str, *, tile_px: int = 256,
     gt = info["geotransform"]
     nodata = info["nodata"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    ntx = math.ceil(W / tile_px)
-    nty = math.ceil(H / tile_px)
     seg = spark.createDataFrame([(0,)], "seg int").coalesce(1)
 
     def scan(batches):
@@ -236,25 +234,11 @@ def read_zmap(spark: SparkSession, path: str, *, tile_px: int = 256,
                                 np.float64)
             a = vals[:W * H].reshape(W, H).T   # column-major
             out = []
-            for ty in range(nty):
-                h = min(tile_px, H - ty * tile_px)
-                for tx in range(ntx):
-                    w = min(tile_px, W - tx * tile_px)
-                    t = np.ascontiguousarray(
-                        a[ty * tile_px:ty * tile_px + h,
-                          tx * tile_px:tx * tile_px + w])
-                    out.append({
-                        "raster_id": rid, "band": 1, "zoom": int(zoom),
-                        "tile_x": tx, "tile_y": ty,
-                        "width": int(w), "height": int(h),
-                        "dtype": "float64",
-                        "nodata": float(nodata), "crs": "",
-                        "geotransform": [
-                            gt[0] + tx * tile_px * gt[1], gt[1], 0.0,
-                            gt[3] + ty * tile_px * gt[5], 0.0, gt[5]],
-                        "data": t.tobytes(),
-                    })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            for ty, y0 in enumerate(range(0, H, tile_px)):
+                out += strip_rows(rid, 1, int(zoom), ty,
+                                  a[y0:y0 + tile_px], gt, tile_px, y0=y0,
+                                  nodata=float(nodata))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 
@@ -370,7 +354,6 @@ def read_sigdem(spark: SparkSession, path: str, *, tile_px: int = 256,
     gt = info["geotransform"]
     offz, scalez = info["offz"], info["scalez"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    ntx = math.ceil(W / tile_px)
     nty = math.ceil(H / tile_px)
     rows = [(ty, 132 + ty * tile_px * W * 4,
              min(tile_px, H - ty * tile_px) * W * 4,
@@ -389,24 +372,10 @@ def read_sigdem(spark: SparkSession, path: str, *, tile_px: int = 256,
                 iv = np.frombuffer(raw, ">i4").reshape(h, W)
                 a = np.where(iv == SIGDEM_NODATA, np.nan,
                              iv / (scalez or 1.0) + offz)
-                for tx in range(ntx):
-                    w = min(tile_px, W - tx * tile_px)
-                    t = np.ascontiguousarray(
-                        a[:, tx * tile_px:tx * tile_px + w])
-                    out.append({
-                        "raster_id": rid, "band": 1, "zoom": int(zoom),
-                        "tile_x": tx, "tile_y": int(r.tile_y),
-                        "width": int(w), "height": h,
-                        "dtype": "float64",
-                        "nodata": float("nan"), "crs": "",
-                        "geotransform": [
-                            gt[0] + tx * tile_px * gt[1], gt[1], 0.0,
-                            gt[3] + int(r.tile_y) * tile_px * gt[5],
-                            0.0, gt[5]],
-                        "data": t.tobytes(),
-                    })
+                out += strip_rows(rid, 1, int(zoom), int(r.tile_y), a, gt,
+                                  tile_px, y0=int(r.tile_y) * tile_px)
             os.close(fd)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -33,7 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
 def identify(path: str) -> bool:
@@ -105,7 +105,7 @@ def read_rmf(spark: SparkSession, path: str, *,
     dtype = info["dtype"]
     mult = info["mult"]
     gt = info["geotransform"]
-    nodata = info["nodata"] if mtw else None
+    nodata = info["nodata"] if mtw else float("nan")
     crs = info["crs"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     ntx = (W + tw - 1) // tw
@@ -158,26 +158,13 @@ def read_rmf(spark: SparkSession, path: str, *,
                         raw[:w * h * isz],
                         np.dtype(dtype).newbyteorder("<"))
                         .reshape(h, w)]
-                for b, plane in enumerate(planes, start=1):
-                    t = np.ascontiguousarray(plane).astype(
-                        np.dtype(dtype), copy=False)
-                    out.append({
-                        "raster_id": rid, "band": b, "zoom": int(zoom),
-                        "tile_x": int(r.tile_x),
-                        "tile_y": int(r.tile_y),
-                        "width": int(w), "height": int(h),
-                        "dtype": dtype,
-                        "nodata": float("nan") if nodata is None
-                        else float(nodata),
-                        "crs": crs,
-                        "geotransform": [
-                            gt[0] + int(r.tile_x) * tw * gt[1],
-                            gt[1], 0.0,
-                            gt[3] + int(r.tile_y) * th * gt[5],
-                            0.0, gt[5]],
-                        "data": t.tobytes(),
-                    })
+                out += [tile_row(
+                    rid, b, int(zoom), int(r.tile_x), int(r.tile_y),
+                    plane.astype(np.dtype(dtype), copy=False), gt,
+                    x0=int(r.tile_x) * tw, y0=int(r.tile_y) * th,
+                    nodata=nodata, crs=crs, dtype=dtype)
+                    for b, plane in enumerate(planes, start=1)]
             os.close(fd)
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)

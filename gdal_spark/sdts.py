@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .iso8211 import FT, ISO8211Reader
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 
 def _ci(path: str) -> str | None:
@@ -122,7 +122,6 @@ def read_sdts(spark: SparkSession, catd_path: str, *,
     cell_path = info["cell_path"]
     rid = raster_id or os.path.basename(
         os.path.dirname(os.path.abspath(catd_path))) or "sdts"
-    ntx = math.ceil(W / tile_px)
     nty = math.ceil(H / tile_px)
 
     # driver: leader-walk record offsets; ranges align to tile_px
@@ -184,21 +183,9 @@ def read_sdts(spark: SparkSession, catd_path: str, *,
                 block = np.zeros((h, W), np.dtype(dtype))
                 for y in mine:
                     block[y - ty * tile_px] = rows_here[y]
-                for tx in range(ntx):
-                    w = min(tile_px, W - tx * tile_px)
-                    t = np.ascontiguousarray(
-                        block[:, tx * tile_px:tx * tile_px + w])
-                    out.append({
-                        "raster_id": rid, "band": 1, "zoom": int(zoom),
-                        "tile_x": tx, "tile_y": ty,
-                        "width": int(w), "height": int(h),
-                        "dtype": dtype, "nodata": -32766.0,
-                        "crs": crs,
-                        "geotransform": [
-                            gt[0] + tx * tile_px * gt[1], gt[1], 0.0,
-                            gt[3] + ty * tile_px * gt[5], 0.0, gt[5]],
-                        "data": t.tobytes(),
-                    })
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                out += strip_rows(rid, 1, int(zoom), ty, block, gt, tile_px,
+                                  y0=ty * tile_px, nodata=-32766.0, crs=crs,
+                                  dtype=dtype)
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -332,6 +332,37 @@ TILE_SCHEMA = T.StructType(
         T.StructField("data", T.BinaryType()),
     ]
 )
+TILE_COLUMNS = TILE_SCHEMA.fieldNames()
+
+
+def tile_row(raster_id, band, zoom, tile_x, tile_y, arr: np.ndarray, gt,
+             *, x0=0, y0=0, nodata=float("nan"), crs="",
+             dtype=None) -> dict:
+    """One TILE_SCHEMA row (the GDALRasterBlock record) for the 2-D block
+    `arr`: width/height from its shape, data its C-order bytes, dtype
+    str(arr.dtype) unless given. A block at pixel offset (x0, y0) of a
+    raster with geotransform `gt` gets gt's origin shifted there; with
+    no offset `gt` is stored as passed."""
+    h, w = arr.shape
+    if x0 or y0:
+        gt = [gt[0] + x0 * gt[1], gt[1], gt[2],
+              gt[3] + y0 * gt[5], gt[4], gt[5]]
+    return {
+        "raster_id": raster_id, "band": band, "zoom": zoom,
+        "tile_x": tile_x, "tile_y": tile_y, "width": w, "height": h,
+        "dtype": str(arr.dtype) if dtype is None else dtype,
+        "nodata": nodata, "crs": crs, "geotransform": gt,
+        "data": arr.tobytes(),
+    }
+
+
+def strip_rows(raster_id, band, zoom, tile_y, strip: np.ndarray, gt,
+               tile_px: int, *, y0=0, **kw) -> list[dict]:
+    """Cut one decoded strip (rows [y0, y0+h) of the raster, full width)
+    into tile rows every tile_px columns, tile_x = 0, 1, ..."""
+    return [tile_row(raster_id, band, zoom, tx, tile_y,
+                     strip[:, x:x + tile_px], gt, x0=x, y0=y0, **kw)
+            for tx, x in enumerate(range(0, strip.shape[1], tile_px))]
 
 
 def tiles_src_df(spark: SparkSession, ntx: int, nty: int, zoom: int = 12,
@@ -347,31 +378,16 @@ def tiles_src_df(spark: SparkSession, ntx: int, nty: int, zoom: int = 12,
 
     def gen(batches):
         for pdf in batches:
-            n = len(pdf)
-            out = pd.DataFrame(
-                {
-                    "raster_id": raster_id,
-                    "band": np.int32(1),
-                    "zoom": np.int32(zoom),
-                    "tile_x": pdf["tile_x"].astype(np.int32),
-                    "tile_y": pdf["tile_y"].astype(np.int32),
-                    "width": np.int32(256),
-                    "height": np.int32(256),
-                    "dtype": "uint8",
-                    "nodata": 0.0,
-                    "crs": "EPSG:3857",
-                    "geotransform": [
-                        [origin + tx * 256 * res, res, 0.0,
-                         origin + (ty + 1) * 256 * res, 0.0, -res]
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                    "data": [
-                        tile_pixels_np(int(tx), int(ty), seed=seed).tobytes()
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                }
-            )
-            yield out
+            # TMS rows: the tile's top edge is (ty + 1) tiles above origin
+            yield pd.DataFrame([
+                tile_row(raster_id, 1, zoom, tx, ty,
+                         tile_pixels_np(tx, ty, seed=seed),
+                         (origin, res, 0.0, origin, 0.0, -res),
+                         x0=tx * 256, y0=-(ty + 1) * 256, nodata=0.0,
+                         crs="EPSG:3857")
+                for tx, ty in zip(pdf["tile_x"].tolist(),
+                                  pdf["tile_y"].tolist())
+            ], columns=TILE_COLUMNS)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)
 
@@ -427,29 +443,15 @@ def surf_tiles_df(spark: SparkSession, ntx: int = 2, nty: int = 2,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield pd.DataFrame(
-                {
-                    "raster_id": raster_id,
-                    "band": np.int32(1),
-                    "zoom": np.int32(0),
-                    "tile_x": pdf["tile_x"].astype(np.int32),
-                    "tile_y": pdf["tile_y"].astype(np.int32),
-                    "width": np.int32(tile_px),
-                    "height": np.int32(tile_px),
-                    "dtype": "float64",
-                    "nodata": -1.0,
-                    "crs": "",
-                    "geotransform": [[0.0, 1.0, 0.0, 0.0, 0.0, 1.0]
-                                     for _ in range(len(pdf))],
-                    "data": [
-                        surf_image_window_np(
-                            int(tx) * tile_px, int(ty) * tile_px,
-                            tile_px, tile_px, shift=shift,
-                            extent=extent, seed=seed).tobytes()
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                }
-            )
+            yield pd.DataFrame([
+                tile_row(raster_id, 1, 0, tx, ty,
+                         surf_image_window_np(
+                             tx * tile_px, ty * tile_px, tile_px, tile_px,
+                             shift=shift, extent=extent, seed=seed),
+                         [0.0, 1.0, 0.0, 0.0, 0.0, 1.0], nodata=-1.0)
+                for tx, ty in zip(pdf["tile_x"].tolist(),
+                                  pdf["tile_y"].tolist())
+            ], columns=TILE_COLUMNS)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)
 
@@ -477,26 +479,29 @@ def vshift_grid_df(spark: SparkSession, origin: tuple[float, float],
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield pd.DataFrame(
-                {
-                    "raster_id": "vshift_grid",
-                    "band": np.int32(1),
-                    "zoom": np.int32(0),
-                    "tile_x": pdf["tile_x"].astype(np.int32),
-                    "tile_y": pdf["tile_y"].astype(np.int32),
-                    "width": np.int32(256),
-                    "height": np.int32(256),
-                    "dtype": "float32",
-                    "nodata": -32768.0,
-                    "crs": "EPSG:3857",
-                    "geotransform": [[ox, res, 0.0, oy, 0.0, -res]
-                                     for _ in range(len(pdf))],
-                    "data": [vshift_grid_np(seed).tobytes()
-                             for _ in range(len(pdf))],
-                }
-            )
+            yield pd.DataFrame([
+                tile_row("vshift_grid", 1, 0, tx, ty, vshift_grid_np(seed),
+                         [ox, res, 0.0, oy, 0.0, -res], nodata=-32768.0,
+                         crs="EPSG:3857")
+                for tx, ty in zip(pdf["tile_x"].tolist(),
+                                  pdf["tile_y"].tolist())
+            ], columns=TILE_COLUMNS)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)
+
+
+def _image_tiles(pdf: pd.DataFrame, raster_id: str, img: np.ndarray,
+                 tile_px: int, nodata: float) -> pd.DataFrame:
+    """The tiles (pdf.tile_x, pdf.tile_y) of one in-memory uint8 image,
+    geotransform origin (tx, ty) * tile_px with a -1 pixel height."""
+    return pd.DataFrame([
+        tile_row(raster_id, 1, 0, tx, ty,
+                 img[ty * tile_px:(ty + 1) * tile_px,
+                     tx * tile_px:(tx + 1) * tile_px],
+                 [float(tx * tile_px), 1.0, 0.0, float(ty * tile_px), 0.0,
+                  -1.0], nodata=nodata, crs="EPSG:3857")
+        for tx, ty in zip(pdf["tile_x"].tolist(), pdf["tile_y"].tolist())
+    ], columns=TILE_COLUMNS)
 
 
 def checker_np(npx: int, cell: int = 16) -> np.ndarray:
@@ -517,33 +522,9 @@ def checker_tiles_df(spark: SparkSession, ntx: int = 2, nty: int = 2,
     )
     def gen(batches):
         for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "raster_id": "checker",
-                    "band": np.int32(1),
-                    "zoom": np.int32(0),
-                    "tile_x": pdf["tile_x"].astype(np.int32),
-                    "tile_y": pdf["tile_y"].astype(np.int32),
-                    "width": np.int32(tile_px),
-                    "height": np.int32(tile_px),
-                    "dtype": "uint8",
-                    "nodata": 255.0,
-                    "crs": "EPSG:3857",
-                    "geotransform": [
-                        [float(tx * tile_px), 1.0, 0.0,
-                         float(ty * tile_px), 0.0, -1.0]
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                    "data": [
-                        checker_np(max(ntx, nty) * tile_px, cell)[
-                            ty * tile_px:(ty + 1) * tile_px,
-                            tx * tile_px:(tx + 1) * tile_px,
-                        ].tobytes()
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                }
-            )
-            yield out
+            yield _image_tiles(pdf, "checker",
+                               checker_np(max(ntx, nty) * tile_px, cell),
+                               tile_px, 255.0)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)
 
@@ -583,33 +564,9 @@ def collar_tiles_df(spark: SparkSession, ntx: int = 4, nty: int = 4,
 
     def gen(batches):
         for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "raster_id": "collar",
-                    "band": np.int32(1),
-                    "zoom": np.int32(0),
-                    "tile_x": pdf["tile_x"].astype(np.int32),
-                    "tile_y": pdf["tile_y"].astype(np.int32),
-                    "width": np.int32(tile_px),
-                    "height": np.int32(tile_px),
-                    "dtype": "uint8",
-                    "nodata": 0.0,
-                    "crs": "EPSG:3857",
-                    "geotransform": [
-                        [float(tx * tile_px), 1.0, 0.0,
-                         float(ty * tile_px), 0.0, -1.0]
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                    "data": [
-                        collar_np(max(ntx, nty) * tile_px, seed)[
-                            ty * tile_px:(ty + 1) * tile_px,
-                            tx * tile_px:(tx + 1) * tile_px,
-                        ].tobytes()
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                }
-            )
-            yield out
+            yield _image_tiles(pdf, "collar",
+                               collar_np(max(ntx, nty) * tile_px, seed),
+                               tile_px, 0.0)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)
 
@@ -636,33 +593,7 @@ def dome_tiles_df(spark: SparkSession, ntx: int = 2, nty: int = 2,
 
     def gen(batches):
         for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "raster_id": "dome",
-                    "band": np.int32(1),
-                    "zoom": np.int32(0),
-                    "tile_x": pdf["tile_x"].astype(np.int32),
-                    "tile_y": pdf["tile_y"].astype(np.int32),
-                    "width": np.int32(tile_px),
-                    "height": np.int32(tile_px),
-                    "dtype": "uint8",
-                    "nodata": 255.0,
-                    "crs": "EPSG:3857",
-                    "geotransform": [
-                        [float(tx * tile_px), 1.0, 0.0,
-                         float(ty * tile_px), 0.0, -1.0]
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                    "data": [
-                        dome_np(npx)[
-                            ty * tile_px:(ty + 1) * tile_px,
-                            tx * tile_px:(tx + 1) * tile_px,
-                        ].tobytes()
-                        for tx, ty in zip(pdf["tile_x"], pdf["tile_y"])
-                    ],
-                }
-            )
-            yield out
+            yield _image_tiles(pdf, "dome", dome_np(npx), tile_px, 255.0)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)
 
@@ -798,16 +729,10 @@ def lonlat_bands_df(spark: SparkSession, ntx: int, nty: int,
                     np.arange(ty * tile_px, (ty + 1) * tile_px,
                               dtype=np.float64))
                 arr = (lon0 + jj * dlon) if b == 1 else (lat0 + ii * dlat)
-                rows.append({
-                    "raster_id": raster_id, "band": int(b), "zoom": zoom,
-                    "tile_x": int(tx), "tile_y": int(ty),
-                    "width": tile_px, "height": tile_px,
-                    "dtype": "float64", "nodata": float("nan"), "crs": "",
-                    "geotransform": [0.0, 1.0, 0.0, 0.0, 0.0, 1.0],
-                    "data": arr.tobytes(),
-                })
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in TILE_SCHEMA.fields])
+                rows.append(tile_row(raster_id, int(b), zoom, int(tx),
+                                     int(ty), arr,
+                                     [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]))
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)
 
@@ -848,16 +773,10 @@ def dem_tiles_df(spark: SparkSession, npx: int, tile_px: int = 256,
                 w = min(tile_px, npx - tx * tile_px)
                 h = min(tile_px, npx - ty * tile_px)
                 arr = dem_pixels_np(tx * tile_px, ty * tile_px, w, h)
-                rows.append({
-                    "raster_id": raster_id, "band": 1, "zoom": zoom,
-                    "tile_x": tx, "tile_y": ty,
-                    "width": w, "height": h, "dtype": "int16",
-                    "nodata": -32767.0, "crs": "EPSG:4326",
-                    "geotransform": [ulx + tx * tile_px * px, px, 0.0,
-                                     uly - ty * tile_px * px, 0.0, -px],
-                    "data": arr.tobytes(),
-                })
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in TILE_SCHEMA.fields])
+                rows.append(tile_row(raster_id, 1, zoom, tx, ty, arr,
+                                     (ulx, px, 0.0, uly, 0.0, -px),
+                                     x0=tx * tile_px, y0=ty * tile_px,
+                                     nodata=-32767.0, crs="EPSG:4326"))
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return base.mapInPandas(gen, schema=TILE_SCHEMA)

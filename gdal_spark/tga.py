@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 _FOOTER_SIG = b"TRUEVISION-XFILE.\x00"
 
@@ -211,34 +211,20 @@ def read_tga(spark: SparkSession, path: str, *, tile_px: int = 256,
     bpp = 2 if (nb == 1 and depth == 16) else depth // 8
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     nodata = info["nodata"]
+    nodata = float("nan") if nodata is None else float(nodata)
     top = info["top_origin"]
     rle = info["rle"]
     base = info["data_offset"]
     gt = [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]
-    ntx = math.ceil(W / tile_px)
     nty = math.ceil(H / tile_px)
 
-    def emit(plane_rows, ty, h):
+    def emit(plane_rows, ty):
         """plane_rows: (nbands, h, W) in gdal row order."""
-        out = []
-        for b in range(plane_rows.shape[0]):
-            for tx in range(ntx):
-                w = min(tile_px, W - tx * tile_px)
-                t = np.ascontiguousarray(
-                    plane_rows[b, :, tx * tile_px:tx * tile_px + w])
-                out.append({
-                    "raster_id": rid, "band": b + 1, "zoom": int(zoom),
-                    "tile_x": tx, "tile_y": ty, "width": w, "height": h,
-                    "dtype": dtype,
-                    "nodata": float("nan") if nodata is None
-                    else float(nodata),
-                    "crs": "",
-                    "geotransform": [gt[0] + tx * tile_px * gt[1], gt[1],
-                                     0.0, gt[3] + ty * tile_px * gt[5],
-                                     0.0, gt[5]],
-                    "data": t.tobytes(),
-                })
-        return out
+        return [row for b in range(plane_rows.shape[0])
+                for row in strip_rows(rid, b + 1, int(zoom), ty,
+                                      plane_rows[b], gt, tile_px,
+                                      y0=ty * tile_px, nodata=nodata,
+                                      dtype=dtype)]
 
     if rle:
         # no scanline index exists: the file is the parallel unit
@@ -265,12 +251,9 @@ def read_tga(spark: SparkSession, path: str, *, tile_px: int = 256,
                 if not top:
                     planes = planes[:, ::-1, :]
                 out = []
-                for ty in range(nty):
-                    h = min(tile_px, H - ty * tile_px)
-                    out.extend(emit(
-                        planes[:, ty * tile_px:ty * tile_px + h, :], ty, h))
-                yield pd.DataFrame(out,
-                                   columns=[f.name for f in TILE_SCHEMA])
+                for ty, y0 in enumerate(range(0, H, tile_px)):
+                    out.extend(emit(planes[:, y0:y0 + tile_px], ty))
+                yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
         return seg.mapInPandas(scan_rle, schema=TILE_SCHEMA)
 
@@ -307,8 +290,8 @@ def read_tga(spark: SparkSession, path: str, *, tile_px: int = 256,
                             .reshape(nb, h, W)
                     if not top:
                         planes = planes[:, ::-1, :]
-                    out.extend(emit(planes, int(r.tile_y), h))
-            yield pd.DataFrame(out, columns=[f.name for f in TILE_SCHEMA])
+                    out.extend(emit(planes, int(r.tile_y)))
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return seg.mapInPandas(scan, schema=TILE_SCHEMA)
 

@@ -41,7 +41,7 @@ from . import geomlite as G
 from .cells import (EARTH_RADIUS, ORIGIN_SHIFT, TILE_SIZE, clamp_tile,
                     lonlat_to_meters, meters_to_tile_tms, quadkey, resolution,
                     tms_to_google)
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
 # ----------------------------------------------------------- tile assignment
@@ -154,9 +154,7 @@ def translate(
                         geotransform=gt, data=piece.tobytes(),
                     )
                     rows.append(d)
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in TILE_SCHEMA.fields]
-                )
+                yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
         out = out.mapInPandas(clip, schema=TILE_SCHEMA)
     if cast_to is None and scale is None and scale_range is None:
@@ -381,16 +379,10 @@ def build_overview(tiles: DataFrame, kernel: str = "average") -> DataFrame:
         res2 = gt[1] * 2
         x0 = gt[0] - ((int(first["tile_x"]) - 2 * int(p_tx)) * w) * gt[1]
         y0 = gt[3] - ((int(first["tile_y"]) - 2 * int(p_ty)) * h) * gt[5]
-        return pd.DataFrame(
-            [{
-                "raster_id": raster_id, "band": band, "zoom": int(zoom) - 1,
-                "tile_x": int(p_tx), "tile_y": int(p_ty),
-                "width": w, "height": h, "dtype": str(out.dtype),
-                "nodata": float(first["nodata"]), "crs": first["crs"],
-                "geotransform": [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
-                "data": out.tobytes(),
-            }]
-        )
+        return pd.DataFrame([tile_row(
+            raster_id, band, int(zoom) - 1, int(p_tx), int(p_ty), out,
+            [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
+            nodata=float(first["nodata"]), crs=first["crs"])])
 
     return parent.groupBy("raster_id", "band", "zoom", "p_tx", "p_ty").applyInPandas(
         agg, schema=TILE_SCHEMA
@@ -487,17 +479,10 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
         res2 = gt[1] * 2
         x0 = gt[0] - ((int(first["s_tx"]) - 2 * int(p_tx)) * w) * gt[1]
         y0 = gt[3] - ((int(first["s_ty"]) - 2 * int(p_ty)) * h) * gt[5]
-        return pd.DataFrame(
-            [{
-                "raster_id": raster_id, "band": int(band),
-                "zoom": int(zoom) - 1, "tile_x": int(p_tx),
-                "tile_y": int(p_ty), "width": w, "height": h,
-                "dtype": str(out.dtype), "nodata": float(first["nodata"]),
-                "crs": first["crs"],
-                "geotransform": [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
-                "data": out.tobytes(),
-            }]
-        )
+        return pd.DataFrame([tile_row(
+            raster_id, int(band), int(zoom) - 1, int(p_tx), int(p_ty), out,
+            [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
+            nodata=float(first["nodata"]), crs=first["crs"])])
 
     return joined.groupBy("raster_id", "band", "zoom", "p_tx", "p_ty").applyInPandas(
         agg, schema=TILE_SCHEMA
@@ -596,7 +581,7 @@ def warp_affine(
     def warp_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         d_tx, d_ty = int(key[0]), int(key[1])
         if len(pdf) == 0:
-            return pd.DataFrame([], columns=[f.name for f in TILE_SCHEMA.fields])
+            return pd.DataFrame([], columns=TILE_COLUMNS)
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
         tx_min, ty_min = int(pdf["s_tx"].min()), int(pdf["s_ty"].min())
@@ -834,18 +819,11 @@ def warp_affine(
                 acc = acc + row * wy_
             acc = acc / (wsum_x * wsum_y)
             out = np.where(interior, acc, out)
-        out = _gdal_cast(out, str(first["dtype"]))
-        return pd.DataFrame(
-            [{
-                "raster_id": dst_raster_id, "band": int(first["band"]),
-                "zoom": int(first["zoom"]), "tile_x": d_tx, "tile_y": d_ty,
-                "width": ts, "height": ts, "dtype": str(out.dtype),
-                "nodata": nodata, "crs": first["crs"],
-                "geotransform": [dx0 + d_tx * ts * dst_res, dst_res, 0.0,
-                                 dy0 - d_ty * ts * dst_res, 0.0, -dst_res],
-                "data": out.tobytes(),
-            }]
-        )
+        return pd.DataFrame([tile_row(
+            dst_raster_id, int(first["band"]), int(first["zoom"]), d_tx,
+            d_ty, _gdal_cast(out, str(first["dtype"])),
+            (dx0, dst_res, 0.0, dy0, 0.0, -dst_res), x0=d_tx * ts,
+            y0=d_ty * ts, nodata=nodata, crs=first["crs"])])
 
     return joined.groupBy("d_tx", "d_ty").applyInPandas(warp_group, schema=TILE_SCHEMA)
 
@@ -976,7 +954,7 @@ def warp_transform(
         d_tx, d_ty = int(key[0]), int(key[1])
         if len(pdf) == 0:
             return pd.DataFrame(
-                [], columns=[f.name for f in TILE_SCHEMA.fields])
+                [], columns=TILE_COLUMNS)
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
         tx_min, ty_min = int(pdf["s_tx"].min()), int(pdf["s_ty"].min())
@@ -1021,18 +999,11 @@ def warp_transform(
                    + mosaic[y1i, x0i] * (1 - fx) * fy
                    + mosaic[y1i, x1i] * fx * fy)
         out = np.where(valid, out, nodata)
-        out = _gdal_cast(out, str(first["dtype"]))
-        return pd.DataFrame(
-            [{
-                "raster_id": dst_raster_id, "band": int(first["band"]),
-                "zoom": int(first["zoom"]), "tile_x": d_tx, "tile_y": d_ty,
-                "width": ts, "height": ts, "dtype": str(out.dtype),
-                "nodata": nodata, "crs": dst_crs,
-                "geotransform": [dx0 + d_tx * ts * dst_res, dst_res, 0.0,
-                                 dy0 - d_ty * ts * dst_res, 0.0, -dst_res],
-                "data": out.tobytes(),
-            }]
-        )
+        return pd.DataFrame([tile_row(
+            dst_raster_id, int(first["band"]), int(first["zoom"]), d_tx,
+            d_ty, _gdal_cast(out, str(first["dtype"])),
+            (dx0, dst_res, 0.0, dy0, 0.0, -dst_res), x0=d_tx * ts,
+            y0=d_ty * ts, nodata=nodata, crs=dst_crs)])
 
     return joined.groupBy("d_tx", "d_ty").applyInPandas(
         warp_group, schema=TILE_SCHEMA)
@@ -1110,7 +1081,7 @@ def cutline_blend_density(
                     data=dens.reshape(h, w).tobytes(),
                 )
                 rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -1254,7 +1225,7 @@ def upsample_nearest(tiles: DataFrame, factor: int,
                     raster_id=dst_raster_id or r.raster_id,
                 )
                 rows.append(d)
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
 
@@ -1296,7 +1267,7 @@ def retile(tiles: DataFrame, new_px: int,
                                 data=piece.tobytes(),
                             )
                             rows.append(d)
-                yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+                yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
         return tiles.mapInPandas(split, schema=TILE_SCHEMA)
 
@@ -1319,18 +1290,10 @@ def retile(tiles: DataFrame, new_px: int,
         gt = list(f0["geotransform"])
         ox0 = (int(f0["tile_x"]) - ntx * k) * old_px
         oy0 = (int(f0["tile_y"]) - nty * k) * old_px
-        out = _gdal_cast(big, str(f0["dtype"]))
-        return pd.DataFrame(
-            [{
-                "raster_id": dst_raster_id or str(f0["raster_id"]),
-                "band": int(f0["band"]), "zoom": int(f0["zoom"]),
-                "tile_x": ntx, "tile_y": nty,
-                "width": new_px, "height": new_px, "dtype": str(out.dtype),
-                "nodata": float(f0["nodata"]), "crs": str(f0["crs"]),
-                "geotransform": [gt[0] - ox0 * gt[1], gt[1], 0.0,
-                                 gt[3] - oy0 * gt[5], 0.0, gt[5]],
-                "data": out.tobytes(),
-            }]
-        )
+        return pd.DataFrame([tile_row(
+            dst_raster_id or str(f0["raster_id"]), int(f0["band"]),
+            int(f0["zoom"]), ntx, nty, _gdal_cast(big, str(f0["dtype"])),
+            (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5]), x0=-ox0, y0=-oy0,
+            nodata=float(f0["nodata"]), crs=str(f0["crs"]))])
 
     return keyed.groupBy("_ntx", "_nty").applyInPandas(paste, schema=TILE_SCHEMA)

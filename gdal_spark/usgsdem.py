@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 NODATA = -32767
 _WS = b" \t\r\n\x00"
@@ -195,7 +195,6 @@ def read_usgsdem(spark: SparkSession, path: str, *, tile_px: int = 256,
     spans = h["spans"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     ntx = math.ceil(W / tile_px)
-    nty = math.ceil(H / tile_px)
     rows = []
     for txi in range(ntx):
         x0 = txi * tile_px
@@ -270,22 +269,11 @@ def read_usgsdem(spark: SparkSession, path: str, *, tile_px: int = 256,
                                 (vals != NODATA)
                             plane[iy[keep], ci] = elev[keep].astype(
                                 plane.dtype)
-                    for tyi in range(nty):
-                        y0 = tyi * tile_px
-                        hh = min(tile_px, H - y0)
-                        t = np.ascontiguousarray(
-                            plane[y0:y0 + hh, :])
-                        out.append({
-                            "raster_id": rid, "band": 1,
-                            "zoom": int(zoom), "tile_x": int(r.txi),
-                            "tile_y": tyi, "width": w, "height": hh,
-                            "dtype": dtype, "nodata": float(NODATA),
-                            "crs": "", "geotransform": [
-                                gt[0] + x0 * gt[1], gt[1], gt[2],
-                                gt[3] + y0 * gt[5], gt[4], gt[5]],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    out += [tile_row(rid, 1, int(zoom), int(r.txi), tyi,
+                                     plane[y0:y0 + tile_px], gt, x0=x0,
+                                     y0=y0, nodata=float(NODATA),
+                                     dtype=dtype)
+                            for tyi, y0 in enumerate(range(0, H, tile_px))]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 _FMT = {"BYTE": ("u1", 1), "HALF": ("i2", 2), "FULL": ("i4", 4),
         "REAL": ("f4", 4), "DOUB": ("f8", 8), "COMP": ("c8", 8)}
@@ -129,7 +129,6 @@ def read_vicar(spark: SparkSession, path: str, *, tile_px: int = 256,
     ).repartition(max(4, min(len(rows), 64)))
     base, bo, vax = h["dtype"], h["byteorder"], h["vax"]
     data_off = h["data_off"]
-    ntx = math.ceil(NS / tile_px)
     fsize = os.path.getsize(path)
 
     def rec_offset(b, y):
@@ -200,27 +199,15 @@ def read_vicar(spark: SparkSession, path: str, *, tile_px: int = 256,
                         # CFloat32: emit interleaved re/im as the
                         # tile payload (the engine's complex carry)
                         plane = plane.astype(np.complex64)
-                        payload_dtype = "complex64"
                     else:
                         plane = plane.astype(
                             np.dtype(base).newbyteorder("="),
                             copy=False)
-                        payload_dtype = str(plane.dtype)
-                    for tx in range(ntx):
-                        w = min(tile_px, NS - tx * tile_px)
-                        t = np.ascontiguousarray(
-                            plane[:, tx * tile_px:tx * tile_px + w])
-                        out.append({
-                            "raster_id": rid, "band": b + 1,
-                            "zoom": int(zoom), "tile_x": tx,
-                            "tile_y": int(r.tile_y), "width": w,
-                            "height": hh, "dtype": payload_dtype,
-                            "nodata": float("nan"), "crs": "",
-                            "geotransform": [0.0, 1.0, 0.0, 0.0,
-                                             0.0, -1.0],
-                            "data": t.tobytes(),
-                        })
-            yield pd.DataFrame(
-                out, columns=[f2.name for f2 in TILE_SCHEMA.fields])
+                    # every tile carries the unshifted identity transform
+                    out += [tile_row(rid, b + 1, int(zoom), tx,
+                                     int(r.tile_y), plane[:, x:x + tile_px],
+                                     [0.0, 1.0, 0.0, 0.0, 0.0, -1.0])
+                            for tx, x in enumerate(range(0, NS, tile_px))]
+            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from gdal_spark import tiling
+from gdal_spark.synth import TILE_COLUMNS, tile_row
 from gdal_spark.tiling import TILE_SCHEMA, _decode, _gdal_cast
 
 
@@ -128,16 +129,10 @@ def apply_vertical_shift_grid(
                         f"pixels in tile ({r.tile_x},{r.tile_y})")
                 shifted = (sv * su + sgn * grd) / du
                 outv = np.where(valid, shifted, nod)
-                out_rows.append(dict(
-                    raster_id=out_raster_id, band=int(r.band),
-                    zoom=int(r.zoom), tile_x=int(r.tile_x),
-                    tile_y=int(r.tile_y), width=int(r.width),
-                    height=int(r.height), dtype=out_dtype,
-                    nodata=nod, crs=r.crs,
-                    geotransform=list(r.geotransform),
-                    data=_gdal_cast(outv, out_dtype).tobytes(),
-                ))
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in TILE_SCHEMA.fields])
+                out_rows.append(tile_row(
+                    out_raster_id, int(r.band), int(r.zoom), int(r.tile_x),
+                    int(r.tile_y), _gdal_cast(outv, out_dtype), gt,
+                    nodata=nod, crs=r.crs, dtype=out_dtype))
+            yield pd.DataFrame(out_rows, columns=TILE_COLUMNS)
 
     return joined.mapInPandas(combine, schema=TILE_SCHEMA)

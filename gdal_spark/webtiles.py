@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from .jpeg import decode_jpeg
 from .png import decode_png
-from .synth import TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 EARTH_RADIUS = 6378137.0
 ORIGIN = -math.pi * EARTH_RADIUS
@@ -120,26 +120,17 @@ def read_web_tiles(plan: DataFrame, *, raster_id: str = "web",
                 img = decode_blob(fetch(r.url))
                 if img.ndim == 2:
                     img = img[:, :, None]
-                h, w = img.shape[0], img.shape[1]
+                w = img.shape[1]
                 z, tx, ty = int(r.zoom), int(r.tile_x), int(r.tile_y)
                 size = SPAN / (2 ** z)
                 res = size / w
                 top = (ORIGIN + (ty + 1) * size) if tms_y \
                     else (-ORIGIN - ty * size)
                 gt = [ORIGIN + tx * size, res, 0.0, top, 0.0, -res]
-                for b in range(img.shape[2]):
-                    rows.append({
-                        "raster_id": raster_id, "band": b + 1,
-                        "zoom": z, "tile_x": tx, "tile_y": ty,
-                        "width": w, "height": h,
-                        "dtype": str(img.dtype), "nodata": 0.0,
-                        "crs": "EPSG:3857", "geotransform": gt,
-                        "data": np.ascontiguousarray(
-                            img[:, :, b]).tobytes(),
-                    })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TILE_SCHEMA.fields]) \
-                if rows else pd.DataFrame(
-                    {f.name: [] for f in TILE_SCHEMA.fields})
+                rows += [tile_row(raster_id, b + 1, z, tx, ty,
+                                  img[:, :, b], gt, nodata=0.0,
+                                  crs="EPSG:3857")
+                         for b in range(img.shape[2])]
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return plan.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -2,18 +2,14 @@
 expectations (autotest/gdrivers/aigrid.py tests 1-6;
 frmts/aigrid/gridlib.c, aigopen.c, aigdataset.cpp)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import aig
 from gdal_spark import geomlite as G
 
-DATA = "/root/reference/autotest/gdrivers/data/aigrid"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/aigrid"
 
 
 def _mosaic(rows, band=1):
@@ -29,7 +25,7 @@ def _mosaic(rows, band=1):
 
 def test_aig_abc3x1(spark):
     # autotest aigrid.py::test_aigrid_1/2/3
-    rows = aig.read_aig(spark, f"{DATA}/abc3x1").collect()
+    rows = aig.read_aig(spark, reference_fixture(f"{DATA}/abc3x1")).collect()
     a = _mosaic(rows)
     assert a.shape == (1, 3)
     assert a.dtype == np.uint8                 # sta range 0..2 -> Byte
@@ -45,7 +41,7 @@ def test_aig_abc3x1(spark):
 
 def test_aig_abc3x1_colormap():
     # autotest aigrid.py::test_aigrid_3
-    ct = aig.read_clr(f"{DATA}/abc3x1")
+    ct = aig.read_clr(reference_fixture(f"{DATA}/abc3x1"))
     assert len(ct) == 256
     assert ct[0] == (95, 113, 150, 255)
     assert ct[1] == (95, 57, 29, 255)
@@ -54,11 +50,11 @@ def test_aig_abc3x1_colormap():
 def test_aig_uppercase_coverage(spark):
     # autotest aigrid.py::test_aigrid_4/5 (ABC3X1UC is the same grid
     # with uppercase file names)
-    rows = aig.read_aig(spark, f"{DATA}/ABC3X1UC").collect()
+    rows = aig.read_aig(spark, reference_fixture(f"{DATA}/ABC3X1UC")).collect()
     a = _mosaic(rows)
     assert G.gdal_checksum(a) == 3
     assert rows[0].nodata == 255.0
-    ct = aig.read_clr(f"{DATA}/ABC3X1UC")
+    ct = aig.read_clr(reference_fixture(f"{DATA}/ABC3X1UC"))
     assert ct[0] == (95, 113, 150, 255)
     assert ct[1] == (95, 57, 29, 255)
 
@@ -66,13 +62,13 @@ def test_aig_uppercase_coverage(spark):
 def test_aig_sta_24bytes():
     # autotest aigrid.py::test_aigrid_6 — the 24-byte little-endian
     # sta.adf variant (gdal #6633)
-    info = aig.read_cover_info(f"{DATA}/aigrid_sta_24bytes/teststa")
+    info = aig.read_cover_info(reference_fixture(f"{DATA}/aigrid_sta_24bytes/teststa"))
     assert info["vmin"] == 0.0
     assert info["vmax"] == 2.0
 
 
 def test_aig_prj_parse():
-    kv = aig.parse_prj(open(f"{DATA}/abc3x1/prj.adf").read())
+    kv = aig.parse_prj(open(reference_fixture(f"{DATA}/abc3x1/prj.adf")).read())
     assert kv["projection"] == "UTM"
     assert kv["zone"] == "55"
     assert kv["datum"] == "GDA94"

@@ -2,7 +2,6 @@
 (autotest/ogr/ogr_avc.py: ARC UserIDs, the float32 first-arc
 geometry, compressed rejection, LAB points)."""
 
-import os
 import re
 
 import numpy as np
@@ -10,10 +9,9 @@ import pytest
 
 from gdal_spark import avc
 
-DATA = "/root/reference/autotest/ogr/data/avc"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/ogr/data/avc"
 
 
 def _nums(wkt):
@@ -23,7 +21,7 @@ def _nums(wkt):
 
 def test_avc_arcs(spark):
     # autotest ogr_avc.py::check_content
-    df = avc.read_avce00(spark, f"{DATA}/test.e00")
+    df = avc.read_avce00(spark, reference_fixture(f"{DATA}/test.e00"))
     arcs = df.filter(df.layer == "ARC").orderBy("fid").collect()
     assert [a.UserID for a in arcs] == ["1", "2", "3", "4", "5",
                                         "6", "7"]
@@ -37,7 +35,7 @@ def test_avc_arcs(spark):
 
 def test_avc_points(spark):
     # autotest ogr_avc.py::test_ogr_avc_4 (testpoint.e00)
-    df = avc.read_avce00(spark, f"{DATA}/testpoint.e00")
+    df = avc.read_avce00(spark, reference_fixture(f"{DATA}/testpoint.e00"))
     labs = df.filter(df.layer == "LAB").orderBy("fid").collect()
     assert len(labs) >= 5
     np.testing.assert_allclose(
@@ -49,4 +47,4 @@ def test_avc_points(spark):
 def test_avc_compressed_rejected():
     # autotest ogr_avc.py::test_ogr_avc_3
     with pytest.raises(ValueError, match="compressed"):
-        avc.parse_e00(f"{DATA}/compressed.e00")
+        avc.parse_e00(reference_fixture(f"{DATA}/compressed.e00"))

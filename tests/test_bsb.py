@@ -2,18 +2,15 @@
 (autotest/gdrivers/bsb.py:56-101 — all three rgbsmall variants must
 checksum 30321)."""
 
-import os
-
 import numpy as np
 import pytest
 
 from gdal_spark import bsb as B
 from gdal_spark import geomlite as G
 
-DATA = "/root/reference/autotest/gdrivers/data/bsb"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/bsb"
 
 
 def _band(rows, band=1):
@@ -31,19 +28,19 @@ def _band(rows, band=1):
     "rgbsmall.kap", "rgbsmall_index.kap",
     "rgbsmall_with_line_break.kap"])
 def test_bsb_rgbsmall_30321(spark, fname):
-    rows = B.read_bsb(spark, f"{DATA}/{fname}").collect()
+    rows = B.read_bsb(spark, reference_fixture(f"{DATA}/{fname}")).collect()
     a = _band(rows)
     assert a.shape == (50, 50)
     assert G.gdal_checksum(a) == 30321
 
 def test_bsb_palette_and_expand(spark):
-    pal = B.bsb_palette(f"{DATA}/rgbsmall.kap")
+    pal = B.bsb_palette(reference_fixture(f"{DATA}/rgbsmall.kap"))
     assert len(pal) >= 100 and pal["idx"].iloc[0] == 1
-    rows = B.read_bsb(spark, f"{DATA}/rgbsmall.kap",
+    rows = B.read_bsb(spark, reference_fixture(f"{DATA}/rgbsmall.kap"),
                       expand="rgb").collect()
     assert sorted({r.band for r in rows}) == [1, 2, 3]
 
 
 def test_bsb_australia4c(spark):
-    rows = B.read_bsb(spark, f"{DATA}/australia4c.kap").collect()
+    rows = B.read_bsb(spark, reference_fixture(f"{DATA}/australia4c.kap")).collect()
     assert len(rows) >= 1

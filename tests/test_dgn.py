@@ -1,18 +1,15 @@
 """DGN v7 reader vs the reference's own smalltest.dgn expectations
 (autotest/ogr/ogr_dgn.py tests 2-4; ogr/ogrsf_frmts/dgn/)."""
 
-import os
 import re
 
 import numpy as np
-import pytest
 
 from gdal_spark import dgn
 
-DATA = "/root/reference/autotest/ogr/data/dgn"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/ogr/data/dgn"
 
 
 def _nums(wkt):
@@ -23,7 +20,7 @@ def _nums(wkt):
 def test_dgn_text_feature(spark):
     # autotest ogr_dgn.py::test_ogr_dgn_2
     rows = dgn.read_dgn(
-        spark, f"{DATA}/smalltest.dgn").orderBy("fid").collect()
+        spark, reference_fixture(f"{DATA}/smalltest.dgn")).orderBy("fid").collect()
     f = rows[0]
     assert f.Type == 17 and f.Level == 1
     assert f.Text == "Demo Text"
@@ -35,7 +32,7 @@ def test_dgn_circle(spark):
     # autotest ogr_dgn.py::test_ogr_dgn_3 — ellipse strokes to a
     # LINESTRING with >= 15 points and the documented envelope
     rows = dgn.read_dgn(
-        spark, f"{DATA}/smalltest.dgn").orderBy("fid").collect()
+        spark, reference_fixture(f"{DATA}/smalltest.dgn")).orderBy("fid").collect()
     f = rows[1]
     assert f.Type == 15 and f.Level == 2
     assert f.geom_wkt.startswith("LINESTRING")
@@ -51,7 +48,7 @@ def test_dgn_circle(spark):
 def test_dgn_shape(spark):
     # autotest ogr_dgn.py::test_ogr_dgn_4
     rows = dgn.read_dgn(
-        spark, f"{DATA}/smalltest.dgn").orderBy("fid").collect()
+        spark, reference_fixture(f"{DATA}/smalltest.dgn")).orderBy("fid").collect()
     f = rows[2]
     assert f.Type == 6 and f.Level == 2 and f.ColorIndex == 83
     want = _nums(
@@ -62,6 +59,6 @@ def test_dgn_shape(spark):
 
 
 def test_dgn_identify():
-    assert dgn.identify(f"{DATA}/smalltest.dgn")
+    assert dgn.identify(reference_fixture(f"{DATA}/smalltest.dgn"))
     assert not dgn.identify(
-        "/root/reference/autotest/gcore/data/byte.tif")
+        reference_fixture("autotest/gcore/data/byte.tif"))

@@ -3,19 +3,15 @@ checksums: the literal files under autotest/gdrivers/data/ read
 through this engine must reproduce the checksums the reference's
 test suite asserts (autotest/gdrivers/pnm.py:41-71, gif.py:64)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import gif as GIF
 from gdal_spark import pnm
 
-DATA = "/root/reference/autotest/gdrivers/data"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data"
 
 
 def _cks(rows, band=1):
@@ -27,22 +23,22 @@ def _cks(rows, band=1):
 
 
 def test_pnm_byte_pgm_4672(spark):
-    rows = pnm.read_pnm(spark, f"{DATA}/pnm/byte.pgm").collect()
+    rows = pnm.read_pnm(spark, reference_fixture(f"{DATA}/pnm/byte.pgm")).collect()
     assert _cks(rows) == 4672          # autotest pnm.py:41
 
 
 def test_pnm_rgbsmall_ppm_band2_21053(spark):
-    rows = pnm.read_pnm(spark, f"{DATA}/pnm/rgbsmall.ppm").collect()
+    rows = pnm.read_pnm(spark, reference_fixture(f"{DATA}/pnm/rgbsmall.ppm")).collect()
     assert _cks(rows, band=2) == 21053  # autotest pnm.py:61
 
 
 def test_gif_bug407_57921(spark):
-    rows = GIF.read_gif(spark, f"{DATA}/gif/bug407.gif").collect()
+    rows = GIF.read_gif(spark, reference_fixture(f"{DATA}/gif/bug407.gif")).collect()
     assert _cks(rows) == 57921          # autotest gif.py test_gif_2
 
 
 def test_gif_byte_with_xmp_extension_blocks(spark):
     # application-extension (XMP) blocks must be skipped cleanly
     rows = GIF.read_gif(spark,
-                        f"{DATA}/gif/byte_with_xmp.gif").collect()
+                        reference_fixture(f"{DATA}/gif/byte_with_xmp.gif")).collect()
     assert len(rows) == 1 and _cks(rows) == 4672

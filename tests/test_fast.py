@@ -3,18 +3,14 @@
 geotransforms incl. the rotated IRS least-squares fits, Euromap
 channel-name conventions, GAIN/BIAS metadata)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import fast
 from gdal_spark import geomlite as G
 
-DATA = "/root/reference/autotest/gdrivers/data/fast"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/fast"
 
 
 def _row0(rows, band, n):
@@ -33,7 +29,7 @@ def _gt_close(got, want):
 
 def test_fast_l7_pan(spark):
     # autotest fast.py::test_fast_2/3/4
-    p = f"{DATA}/L71118038_03820020111_HPN.FST"
+    p = reference_fixture(f"{DATA}/L71118038_03820020111_HPN.FST")
     info = fast.parse_fast(p)
     md = info["metadata"]
     assert md["ACQUISITION_DATE"] == "20020111"
@@ -50,7 +46,7 @@ def test_fast_l7_pan(spark):
 
 def test_fast_l7_thermal(spark):
     # autotest fast.py::test_fast_5 — band 2 (B62), zone-stripped gt
-    p = f"{DATA}/L71230079_07920021111_HTM.FST"
+    p = reference_fixture(f"{DATA}/L71230079_07920021111_HTM.FST")
     info = fast.parse_fast(p)
     assert len(info["bands"]) == 2
     _gt_close(info["geotransform"],
@@ -61,7 +57,7 @@ def test_fast_l7_thermal(spark):
 
 def test_fast_euromap_liss3():
     # autotest fast.py::test_fast_6 — rotated least-squares gt
-    info = fast.parse_fast(f"{DATA}/n0o0y867.0fl")
+    info = fast.parse_fast(reference_fixture(f"{DATA}/n0o0y867.0fl"))
     assert info["width"] == 2741
     assert [b[-1] for b in info["bands"]] == ["m", "n", "o", "p"]
     _gt_close(info["geotransform"],
@@ -72,7 +68,7 @@ def test_fast_euromap_liss3():
 
 def test_fast_euromap_pan():
     # autotest fast.py::test_fast_7
-    info = fast.parse_fast(f"{DATA}/h0o0y867.1ah")
+    info = fast.parse_fast(reference_fixture(f"{DATA}/h0o0y867.1ah"))
     assert info["width"] == 5815
     assert info["bands"][0].endswith("1a7")
     _gt_close(info["geotransform"],
@@ -81,7 +77,7 @@ def test_fast_euromap_pan():
 
 def test_fast_euromap_wifs():
     # autotest fast.py::test_fast_8
-    info = fast.parse_fast(f"{DATA}/w0y13a4t.010")
+    info = fast.parse_fast(reference_fixture(f"{DATA}/w0y13a4t.010"))
     assert info["width"] == 4748
     assert len(info["bands"]) == 2
     _gt_close(info["geotransform"],

@@ -3,8 +3,6 @@
 multi-HDU subdataset listing and metadata merge semantics,
 offset/scale keywords; frmts/fits/fitsdataset.cpp Init dtype map)."""
 
-import os
-
 import numpy as np
 import pytest
 
@@ -12,10 +10,10 @@ from gdal_spark import fits
 from gdal_spark import geomlite as G
 from gdal_spark import synth
 
-DATA = "/root/reference/autotest/gdrivers/data/fits"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/fits"
+
 
 _MERC_WKT = (
     'PROJCS["Mercator_Earth",GEOGCS["GCS_Earth",DATUM["D_Earth",'
@@ -40,20 +38,20 @@ def _mosaic(rows, band=1):
 
 
 def test_fits_identify():
-    assert fits.identify(f"{DATA}/byte_merc.fits")
+    assert fits.identify(reference_fixture(f"{DATA}/byte_merc.fits"))
     assert not fits.identify(
-        "/root/reference/autotest/gdrivers/data/byte.tif")
+        reference_fixture("autotest/gdrivers/data/byte.tif"))
 
 
 def test_fits_georef_merc(spark):
     # autotest fits.py::test_fits_read_georef_merc, exact expectations
-    info = fits.FitsInfo(f"{DATA}/byte_merc.fits", 1)
+    info = fits.FitsInfo(reference_fixture(f"{DATA}/byte_merc.fits"), 1)
     assert info.crs == _MERC_WKT
     np.testing.assert_allclose(
         info.geotransform,
         [-13095897.481058259, 72.23522015778646, 0.0,
          3991653.2130816197, 0.0, -72.23522015778646], atol=1e-3)
-    rows = fits.read_fits(spark, f"{DATA}/byte_merc.fits").collect()
+    rows = fits.read_fits(spark, reference_fixture(f"{DATA}/byte_merc.fits")).collect()
     a = _mosaic(rows)
     assert a.shape == (20, 20)
     # The fixture stores the byte.tif scene in file order (checksum
@@ -67,7 +65,7 @@ def test_fits_georef_merc(spark):
 
 def test_fits_offset_scale_no_georef():
     # autotest fits.py::test_fits_read_offset_scale_no_georef
-    info = fits.FitsInfo(f"{DATA}/offset_scale_no_georef.fits", 1)
+    info = fits.FitsInfo(reference_fixture(f"{DATA}/offset_scale_no_georef.fits"), 1)
     assert info.offset != 0
     assert info.scale != 1
     assert info.geotransform is None
@@ -75,7 +73,7 @@ def test_fits_offset_scale_no_georef():
 
 def test_fits_multi_hdu_subdatasets():
     # autotest fits.py::test_fits_read_image_in_first_and_second_hdu
-    p = f"{DATA}/image_in_first_and_second_hdu.fits"
+    p = reference_fixture(f"{DATA}/image_in_first_and_second_hdu.fits")
     subs = fits.fits_subdatasets(p)
     assert [s[1] for s in subs] == [
         "HDU 1 (1x2, 1 band), FIRST_IMAGE", "HDU 2 (1x3, 1 band)"]
@@ -87,7 +85,7 @@ def test_fits_multi_hdu_subdatasets():
 
 def test_fits_image_in_second_hdu_metadata_merge(spark):
     # autotest fits.py::test_fits_read_image_in_second_hdu
-    p = f"{DATA}/image_in_second_hdu.fits"
+    p = reference_fixture(f"{DATA}/image_in_second_hdu.fits")
     assert fits.fits_metadata(p) == {
         "BAR": "BAZ     ", "FOO": "BAR_override", "FOO2": "BAR2    "}
     rows = fits.read_fits(spark, p).collect()
@@ -97,7 +95,7 @@ def test_fits_image_in_second_hdu_metadata_merge(spark):
 def test_fits_empty_primary_hdu_rejected():
     # autotest fits.py::test_fits_read_empty_primary_hdu
     with pytest.raises(ValueError):
-        fits.FitsInfo(f"{DATA}/empty_primary_hdu.fits", 1)
+        fits.FitsInfo(reference_fixture(f"{DATA}/empty_primary_hdu.fits"), 1)
 
 
 def _cast_tiles(tiles, dtype):

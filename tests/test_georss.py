@@ -2,16 +2,14 @@
 tables of autotest/ogr/ogr_georss.py (atom_field_values and
 ogr_georss_test_rss) reproduced."""
 
-import os
-
 import pytest
 
 from gdal_spark import georss as GR
 
-DATA = "/root/reference/autotest/ogr/data/georss"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/ogr/data/georss"
+
 
 ATOM_FIELDS = [
     ("title", "Atom draft-07 snapshot"),
@@ -43,7 +41,7 @@ RSS_WKTS = [
 @pytest.mark.parametrize("fname", ["atom_rfc_sample.xml",
                                    "atom_rfc_sample_atom_ns.xml"])
 def test_georss_atom(spark, fname):
-    rows = GR.read_georss(spark, f"{DATA}/{fname}").collect()
+    rows = GR.read_georss(spark, reference_fixture(f"{DATA}/{fname}")).collect()
     r = sorted(rows, key=lambda x: x.fid)[0].asDict()
     for k, v in ATOM_FIELDS:
         assert r.get(k) == v, (k, r.get(k))
@@ -53,7 +51,7 @@ def test_georss_atom(spark, fname):
 @pytest.mark.parametrize("fname", ["test_georss_simple.xml",
                                    "test_georss_gml.xml"])
 def test_georss_rss_geometries(spark, fname):
-    rows = sorted(GR.read_georss(spark, f"{DATA}/{fname}").collect(),
+    rows = sorted(GR.read_georss(spark, reference_fixture(f"{DATA}/{fname}")).collect(),
                   key=lambda r: r.fid)
     assert [r.geom_wkt for r in rows] == RSS_WKTS
     r0 = rows[0].asDict()

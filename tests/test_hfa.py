@@ -2,19 +2,17 @@
 and expected checksums (autotest/gcore/hfa_read.py init_list,
 gdrivers/hfa.py, gcore/gdal_stats.py:93)."""
 
-import os
-
 import numpy as np
 import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import hfa
 
-GCORE = "/root/reference/autotest/gcore/data"
-GDRV = "/root/reference/autotest/gdrivers/data/hfa"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(GCORE), reason="reference fixtures not present")
+GCORE = "autotest/gcore/data"
+GDRV = "autotest/gdrivers/data/hfa"
+
 
 # (file, band, expected checksum) — autotest/gcore/hfa_read.py:37-46
 CASES = [
@@ -50,12 +48,12 @@ def _band(spark, path, band):
 @pytest.mark.parametrize("fname,band,cks", CASES,
                          ids=[c[0].split(".")[0] for c in CASES])
 def test_hfa_checksums(spark, fname, band, cks):
-    assert G.gdal_checksum(_band(spark, f"{GCORE}/{fname}", band)) == cks
+    assert G.gdal_checksum(_band(spark, reference_fixture(f"{GCORE}/{fname}"), band)) == cks
 
 
 def test_hfa_compressed_i8u(spark):
     # i8u_c_i.img: RLC-compressed u8 thematic layer (hfa.py #2419)
-    a = _band(spark, f"{GDRV}/i8u_c_i.img", 1)
+    a = _band(spark, reference_fixture(f"{GDRV}/i8u_c_i.img"), 1)
     assert a.shape == (250, 233) and a.dtype == np.uint8
     # the unique-values histogram total (autotest hfa.py:689 expected
     # HISTOBINVALUES) must equal the pixel count
@@ -64,12 +62,12 @@ def test_hfa_compressed_i8u(spark):
 
 def test_hfa_spill_file(spark):
     # spill.img + spill.ige external raster (ExternalRasterDMS)
-    a = _band(spark, f"{GDRV}/spill.img", 1)
+    a = _band(spark, reference_fixture(f"{GDRV}/spill.img"), 1)
     assert a.size > 0
 
 
 def test_hfa_geotransform_byte(spark):
-    rows = hfa.read_hfa(spark, f"{GCORE}/byte.img").collect()
+    rows = hfa.read_hfa(spark, reference_fixture(f"{GCORE}/byte.img")).collect()
     r00 = [r for r in rows if (r.tile_x, r.tile_y) == (0, 0)][0]
     np.testing.assert_allclose(
         r00.geotransform, [440720.0, 60.0, 0.0, 3751320.0, 0.0, -60.0])

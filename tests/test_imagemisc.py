@@ -1,18 +1,14 @@
 """SGI / Terragen / ILWIS drivers vs the reference's own fixtures
 (autotest/gdrivers/sgi.py:41, terragen.py:40, ilwis.py:41)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import imagemisc as IM
 
-DATA = "/root/reference/autotest/gdrivers/data"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data"
 
 
 def _band(rows, band=1):
@@ -27,13 +23,13 @@ def _band(rows, band=1):
 
 
 def test_sgi_byte_4672(spark):
-    rows = IM.read_sgi(spark, f"{DATA}/sgi/byte.sgi").collect()
+    rows = IM.read_sgi(spark, reference_fixture(f"{DATA}/sgi/byte.sgi")).collect()
     assert G.gdal_checksum(_band(rows)) == 4672   # autotest sgi.py:41
 
 
 def test_terragen_float32_1128(spark):
     rows = IM.read_terragen(
-        spark, f"{DATA}/terragen/float32.ter").collect()
+        spark, reference_fixture(f"{DATA}/terragen/float32.ter")).collect()
     a = _band(rows)
     assert a.dtype == np.int16
     assert G.gdal_checksum(a) == 1128        # autotest terragen.py:40
@@ -41,7 +37,7 @@ def test_terragen_float32_1128(spark):
 
 def test_ilwis_landuse_2351(spark):
     rows = IM.read_ilwis(
-        spark, f"{DATA}/ilwis/LanduseSmall.mpr").collect()
+        spark, reference_fixture(f"{DATA}/ilwis/LanduseSmall.mpr")).collect()
     a = _band(rows)
     assert a.shape == (75, 75)
     assert G.gdal_checksum(a) == 2351         # autotest ilwis.py:41

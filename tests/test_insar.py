@@ -1,18 +1,14 @@
 """ROI_PAC / ISCE InSAR drivers vs the reference's own fixtures
 (autotest/gdrivers/roipac.py:43 -> 64074, isce.py:43 -> 350)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import insar as I
 
-DATA = "/root/reference/autotest/gdrivers/data"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data"
 
 
 def _band(rows, band=1):
@@ -27,7 +23,7 @@ def _band(rows, band=1):
 
 
 def test_roipac_srtm_dem_64074(spark):
-    rows = I.read_roipac(spark, f"{DATA}/roipac/srtm.dem").collect()
+    rows = I.read_roipac(spark, reference_fixture(f"{DATA}/roipac/srtm.dem")).collect()
     a = _band(rows)
     assert a.dtype == np.int16 and a.shape == (10, 12)
     assert G.gdal_checksum(a) == 64074      # autotest roipac.py:43
@@ -35,12 +31,12 @@ def test_roipac_srtm_dem_64074(spark):
         rows[0].geotransform,
         [-180.0083333, 8.3333333e-03, 0, -59.9916667, 0,
          -8.3333333e-03], rtol=1e-6)
-    h = I.parse_roipac(f"{DATA}/roipac/srtm.dem")
+    h = I.parse_roipac(reference_fixture(f"{DATA}/roipac/srtm.dem"))
     assert h["z_scale"] == 2.0              # scale exposed as metadata
 
 
 def test_isce_slc_350(spark):
-    rows = I.read_isce(spark, f"{DATA}/isce/isce.slc").collect()
+    rows = I.read_isce(spark, reference_fixture(f"{DATA}/isce/isce.slc")).collect()
     a = _band(rows)
     assert a.dtype == np.complex64 and a.shape == (10, 12)
     # GDAL's checksum walks interleaved (re, im) components

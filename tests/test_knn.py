@@ -138,3 +138,27 @@ def test_knn_distributed_matches_small_q(spark):
     np.testing.assert_allclose(
         got["dist_m"].to_numpy(), exp["dist_m"].to_numpy(), rtol=1e-9
     )
+
+
+def test_knn_distributed_raises_when_rounds_run_out(spark):
+    """Sparse points on a fine grid: two rounds cover a 7x7 cell block,
+    far short of any 5th neighbour. The operator must fail like
+    knn_join, not return the resolved queries only (here: none)."""
+    import pytest
+
+    from gdal_spark.knn import knn_join_distributed
+
+    rng = np.random.default_rng(7)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [f"p{i:03d}" for i in range(300)],
+        "lon": rng.uniform(-180, 180, 300),
+        "lat": rng.uniform(-85, 85, 300),
+    }))
+    queries = spark.createDataFrame(pd.DataFrame({
+        "q_id": np.arange(20, dtype=np.int64),
+        "lon": rng.uniform(-180, 180, 20),
+        "lat": rng.uniform(-85, 85, 20),
+        "k": np.full(20, 5, dtype=np.int32),
+    }))
+    with pytest.raises(RuntimeError, match="did not converge for 20 queries"):
+        knn_join_distributed(spark, pts, queries, level=8, max_rounds=2)

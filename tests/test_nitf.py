@@ -2,18 +2,14 @@
 (autotest/gdrivers/nitf.py: rgb.ntf checksum/gt, fake_nsif BLOCKA
 metadata + checksum, i_3034c 1-bit checksum)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import nitf
 
-DATA = "/root/reference/autotest/gdrivers/data/nitf"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/nitf"
 
 
 def _band(rows, band=1):
@@ -29,7 +25,7 @@ def _band(rows, band=1):
 
 def test_nitf_rgb(spark):
     # autotest nitf.py::test_nitf_6
-    p = f"{DATA}/rgb.ntf"
+    p = reference_fixture(f"{DATA}/rgb.ntf")
     assert nitf.identify(p)
     info = nitf.parse_nitf(p)
     gt = nitf.image_geotransform(info["images"][0])
@@ -43,7 +39,7 @@ def test_nitf_rgb(spark):
 
 def test_nitf_nsif_blocka(spark):
     # autotest nitf.py::test_nitf_8
-    p = f"{DATA}/fake_nsif.ntf"
+    p = reference_fixture(f"{DATA}/fake_nsif.ntf")
     info = nitf.parse_nitf(p)
     md = info["metadata"]
     assert md["NITF_FHDR"] == "NSIF01.00"
@@ -59,7 +55,7 @@ def test_nitf_nsif_blocka(spark):
 
 def test_nitf_1bit(spark):
     # autotest nitf.py::test_nitf_11 (i_3034c.ntf)
-    rows = nitf.read_nitf(spark, f"{DATA}/i_3034c.ntf").collect()
+    rows = nitf.read_nitf(spark, reference_fixture(f"{DATA}/i_3034c.ntf")).collect()
     a = _band(rows, 1)
     assert a.shape == (18, 35)
     assert G.gdal_checksum(a) == 170

@@ -2,8 +2,6 @@
 (autotest/gdrivers/pcidsk.py::test_pcidsk_1 checksum 39576;
 frmts/pcidsk/sdk header layouts)."""
 
-import os
-
 import numpy as np
 import pytest
 
@@ -11,10 +9,9 @@ from gdal_spark import geomlite as G
 from gdal_spark import pcidsk
 from gdal_spark import synth
 
-DATA = "/root/reference/autotest/gdrivers/data/pcidsk"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/pcidsk"
 
 
 def _mosaic(rows, band=1):
@@ -29,7 +26,7 @@ def _mosaic(rows, band=1):
 
 
 def test_pcidsk_utm(spark):
-    p = f"{DATA}/utm.pix"
+    p = reference_fixture(f"{DATA}/utm.pix")
     assert pcidsk.identify(p)
     rows = pcidsk.read_pcidsk(spark, p).collect()
     a = _mosaic(rows)
@@ -40,7 +37,7 @@ def test_pcidsk_utm(spark):
 def test_pcidsk_tiled_rejected():
     # /SIS= system-block tiled channels are a documented gap
     with pytest.raises(ValueError, match="SIS"):
-        pcidsk.parse_pcidsk(f"{DATA}/tile_v2.pix")
+        pcidsk.parse_pcidsk(reference_fixture(f"{DATA}/tile_v2.pix"))
 
 
 def test_pcidsk_roundtrip(spark, tmp_path):

@@ -3,18 +3,14 @@ expected checksums/geotransforms (autotest/gdrivers/pds.py, isis2.py,
 isis.py; frmts/pds/*.cpp). gdaltest's gt tolerance is
 (|gt1|+|gt2|)/100 — mirrored here."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import planetary as P
 
-DATA = "/root/reference/autotest/gdrivers/data"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data"
 
 
 def _mosaic(rows, band=1):
@@ -36,7 +32,7 @@ def _gt_close(got, want):
 
 def test_pds_mc02(spark):
     # autotest pds.py::test_pds_1
-    p = f"{DATA}/pds/mc02_truncated.img"
+    p = reference_fixture(f"{DATA}/pds/mc02_truncated.img")
     rows = P.read_pds(spark, p, sample_shift=-0.5,
                       line_shift=-0.5).collect()
     a = _mosaic(rows)
@@ -52,7 +48,7 @@ def test_pds_mc02(spark):
 
 def test_pds_fl73n003(spark):
     # autotest pds.py::test_pds_2
-    p = f"{DATA}/pds/fl73n003_truncated.img"
+    p = reference_fixture(f"{DATA}/pds/fl73n003_truncated.img")
     info = P.parse_pds(p, sample_shift=-0.5, line_shift=-0.5)
     assert info["nodata"] == 7
     assert info["scale"] == 0.2
@@ -65,13 +61,13 @@ def test_pds_fl73n003(spark):
     rows = P.read_pds(spark, p).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 34962
     # MISSING_CONSTANT variant (gdal #3939)
-    alt = P.parse_pds(f"{DATA}/pds/fl73n003_alt_truncated.img")
+    alt = P.parse_pds(reference_fixture(f"{DATA}/pds/fl73n003_alt_truncated.img"))
     assert alt["nodata"] == 7
 
 
 def test_pds_16bit(spark):
     # autotest pds.py::test_pds_3
-    p = f"{DATA}/pds/EN0001426030M_truncated.IMG"
+    p = reference_fixture(f"{DATA}/pds/EN0001426030M_truncated.IMG")
     info = P.parse_pds(p)
     assert info["dtype"] == "uint16" and info["nodata"] == 0
     rows = P.read_pds(spark, p).collect()
@@ -80,7 +76,7 @@ def test_pds_16bit(spark):
 
 def test_pds_detached_offset(spark):
     # autotest pds.py::test_pds_4 (#3177) and test_pds_5 (#3355)
-    p = f"{DATA}/pds/pds_3177.lbl"
+    p = reference_fixture(f"{DATA}/pds/pds_3177.lbl")
     info = P.parse_pds(p, sample_shift=-0.5, line_shift=-0.5)
     np.testing.assert_allclose(
         info["geotransform"],
@@ -88,13 +84,13 @@ def test_pds_detached_offset(spark):
          -549696.39009125973, 0.0, -1.0113804322107001], rtol=1e-12)
     rows = P.read_pds(spark, p).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 3418
-    rows = P.read_pds(spark, f"{DATA}/pds/pds_3355.lbl").collect()
+    rows = P.read_pds(spark, reference_fixture(f"{DATA}/pds/pds_3355.lbl")).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 2748
 
 
 def test_pds_geotiff_backed(spark):
     # autotest pds.py::test_pds_6 — PDS label over a detached TIFF
-    p = f"{DATA}/pds/ESP_013951_1955_RED.LBL"
+    p = reference_fixture(f"{DATA}/pds/ESP_013951_1955_RED.LBL")
     rows = P.read_pds(spark, p, sample_shift=-0.5,
                       line_shift=-0.5).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 4672
@@ -108,7 +104,7 @@ def test_pds_geotiff_backed(spark):
 
 def test_isis2_arvidson(spark):
     # autotest isis2.py::test_isis2_1
-    p = f"{DATA}/isis2/arvidson_original_truncated.cub"
+    p = reference_fixture(f"{DATA}/isis2/arvidson_original_truncated.cub")
     rows = P.read_isis2(spark, p).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 382
     _gt_close(rows[0].geotransform,
@@ -122,19 +118,19 @@ def test_isis2_arvidson(spark):
 def test_isis3_detached(spark):
     # autotest isis.py::test_isis_2
     rows = P.read_isis3(
-        spark, f"{DATA}/isis3/isis3_detached.lbl").collect()
+        spark, reference_fixture(f"{DATA}/isis3/isis3_detached.lbl")).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 9978
 
 
 def test_isis3_tiled(spark):
     # autotest isis.py::test_isis_3 (isis3_unit_test.cub, Tile format)
     rows = P.read_isis3(
-        spark, f"{DATA}/isis3/isis3_unit_test.cub").collect()
+        spark, reference_fixture(f"{DATA}/isis3/isis3_unit_test.cub")).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 42403
 
 
 def test_isis3_geotiff_backed(spark):
     # autotest isis.py::test_isis_4 (Format = GeoTIFF)
     rows = P.read_isis3(
-        spark, f"{DATA}/isis3/isis3_geotiff.lbl").collect()
+        spark, reference_fixture(f"{DATA}/isis3/isis3_geotiff.lbl")).collect()
     assert G.gdal_checksum(_mosaic(rows)) == 9978

@@ -2,19 +2,15 @@
 fixtures and expected checksums (autotest/gdrivers/rraster.py:45,
 genbin.py:43 gt, paux.py:42, mff.py:41-59)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import rawlabels as RL
 from gdal_spark import synth
 
-DATA = "/root/reference/autotest/gdrivers/data"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data"
 
 
 def _band(rows, band=1):
@@ -30,7 +26,7 @@ def _band(rows, band=1):
 
 def test_rraster_byte_4672(spark):
     rows = RL.read_rraster(
-        spark, f"{DATA}/rraster/byte_rraster.grd").collect()
+        spark, reference_fixture(f"{DATA}/rraster/byte_rraster.grd")).collect()
     a = _band(rows)
     assert G.gdal_checksum(a) == 4672      # autotest rraster.py:45
     np.testing.assert_allclose(
@@ -39,7 +35,7 @@ def test_rraster_byte_4672(spark):
 
 def test_rraster_rgba_multiband(spark):
     rows = RL.read_rraster(
-        spark, f"{DATA}/rraster/rgba_rraster.grd").collect()
+        spark, reference_fixture(f"{DATA}/rraster/rgba_rraster.grd")).collect()
     assert sorted({r.band for r in rows}) == [1, 2, 3, 4]
 
 
@@ -62,7 +58,7 @@ def test_genbin_header_gt(spark):
     # pixel file is truncated upstream; the label parse must still
     # reproduce the reference's expected geotransform
     # (autotest genbin.py:50-52, incl. the half-pixel CENTER shift)
-    hdr = RL.parse_genbin(f"{DATA}/genbin/tm4628_96.bil")
+    hdr = RL.parse_genbin(reference_fixture(f"{DATA}/genbin/tm4628_96.bil"))
     np.testing.assert_allclose(
         hdr["geotransform"],
         [1181700.9894981384, 82.021003723042099, 0.0,
@@ -90,7 +86,7 @@ def test_genbin_roundtrip_via_synthetic(spark, tmp_path):
 
 
 def test_paux_small16_band2_12816(spark):
-    rows = RL.read_paux(spark, f"{DATA}/paux/small16.raw").collect()
+    rows = RL.read_paux(spark, reference_fixture(f"{DATA}/paux/small16.raw")).collect()
     a2 = _band(rows, band=2)
     assert a2.shape == (35, 31) and a2.dtype == np.uint16
     assert G.gdal_checksum(a2) == 12816    # autotest paux.py:42
@@ -99,12 +95,12 @@ def test_paux_small16_band2_12816(spark):
 
 
 def test_mff_byte_4672(spark):
-    rows = RL.read_mff(spark, f"{DATA}/mff/bytemff.hdr").collect()
+    rows = RL.read_mff(spark, reference_fixture(f"{DATA}/mff/bytemff.hdr")).collect()
     assert G.gdal_checksum(_band(rows)) == 4672  # autotest mff.py:59
 
 
 def test_mff_fake_and_tiled(spark):
-    r1 = RL.read_mff(spark, f"{DATA}/mff/fakemff.hdr").collect()
+    r1 = RL.read_mff(spark, reference_fixture(f"{DATA}/mff/fakemff.hdr")).collect()
     assert G.gdal_checksum(_band(r1)) == 1       # autotest mff.py:41
-    r2 = RL.read_mff(spark, f"{DATA}/mff/fakemfftiled.hdr").collect()
+    r2 = RL.read_mff(spark, reference_fixture(f"{DATA}/mff/fakemfftiled.hdr")).collect()
     assert G.gdal_checksum(_band(r2)) == 1       # autotest mff.py:50

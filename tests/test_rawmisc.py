@@ -2,19 +2,15 @@
 expectations (autotest/gdrivers/lcp.py test 1, doq2.py test 1,
 zmap.py + sigdem.py byte.tif roundtrips at checksum 4672)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import rawmisc as R
 from gdal_spark import synth
 
-DATA = "/root/reference/autotest/gdrivers/data"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data"
 
 
 def _band(rows, band=1):
@@ -30,7 +26,7 @@ def _band(rows, band=1):
 
 def test_lcp_farsite(spark):
     # autotest lcp.py::test_lcp_1 — 8 bands, full checksum set
-    p = f"{DATA}/lcp/test_FARSITE_UTM12.LCP"
+    p = reference_fixture(f"{DATA}/lcp/test_FARSITE_UTM12.LCP")
     info = R.parse_lcp(p)
     assert info["nbands"] == 8
     assert info["metadata"]["LATITUDE"] == "49"
@@ -53,7 +49,7 @@ def test_lcp_farsite(spark):
 
 def test_doq2(spark):
     # autotest doq2.py::test_doq2_1 — first-row checksums per band
-    p = f"{DATA}/doq2/C3607614_truncated.NWS"
+    p = reference_fixture(f"{DATA}/doq2/C3607614_truncated.NWS")
     info = R.parse_doq2(p)
     assert info["metadata"]["QUADRANGLE_NAME"] == \
         "NORFOLK SOUTH 3.45 or 7.5-min. name*"
@@ -114,7 +110,7 @@ def test_sigdem_roundtrip(spark, tmp_path):
 
 def test_ndf(spark):
     # autotest ndf.py::test_ndf_1 — row-0 window checksum + gt
-    p = f"{DATA}/ndf/LE7134052000500350.H3"
+    p = reference_fixture(f"{DATA}/ndf/LE7134052000500350.H3")
     from gdal_spark.rawmisc import parse_ndf, read_ndf
     info = parse_ndf(p)
     np.testing.assert_allclose(
@@ -131,7 +127,7 @@ def test_ndf(spark):
 def test_snodas_header(spark):
     # autotest snodas.py::test_snodas_1 — documented gt (the fake
     # fixture ships no .dat: reads zero-fill, checksum 0)
-    p = f"{DATA}/snodas/fake_snodas.hdr"
+    p = reference_fixture(f"{DATA}/snodas/fake_snodas.hdr")
     info = R.parse_snodas(p)
     np.testing.assert_allclose(
         info["geotransform"],
@@ -146,7 +142,7 @@ def test_snodas_header(spark):
 
 def test_til(spark):
     # autotest til.py::test_til_1/2 — single-tile TIL over byte.tif
-    p = "/root/reference/autotest/gdrivers/data/til/testtil.til"
+    p = reference_fixture("autotest/gdrivers/data/til/testtil.til")
     info = R.parse_til(p)
     assert [t["filename"] for t in info["tiles"]] == ["byte.tif"]
     md = info["metadata"]
@@ -157,7 +153,7 @@ def test_til(spark):
 
 def test_mff2(spark):
     # autotest mff2.py::test_mff2_1 — bytemff2 checksum 4672
-    d = f"{DATA}/mff2/bytemff2"
+    d = reference_fixture(f"{DATA}/mff2/bytemff2")
     from gdal_spark.rawmisc import parse_mff2, read_mff2
     info = parse_mff2(d)
     assert (info["width"], info["height"], info["dtype"]) == \
@@ -168,7 +164,7 @@ def test_mff2(spark):
 
 def test_gsc(spark):
     # autotest gsc.py::test_gsc_1 — 1x1 fake grid, checksum 0
-    p = f"{DATA}/gsc/fakegsc.gsc"
+    p = reference_fixture(f"{DATA}/gsc/fakegsc.gsc")
     from gdal_spark.rawmisc import parse_gsc, read_gsc
     info = parse_gsc(p)
     assert (info["width"], info["height"]) == (1, 1)

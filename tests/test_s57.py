@@ -2,19 +2,17 @@
 documented autotest expectations (autotest/ogr/ogr_s57.py:
 layer/feature counts, COALNE/M_QUAL/SOUNDG attributes + geometry)."""
 
-import os
 import re
 
 import numpy as np
-import pytest
 
 from gdal_spark import s57
 
-DATA = "/root/reference/autotest/ogr/data/s57"
+from .conftest import reference_fixture
+
+DATA = "autotest/ogr/data/s57"
 CELL = f"{DATA}/1B5X02NE.000"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
 
 _COUNTS = {"COALNE": 1, "DEPARE": 4, "DEPCNT": 4, "LNDARE": 1,
            "LNDELV": 2, "SBDARE": 2, "SLCONS": 1, "SLOTOP": 1,
@@ -28,7 +26,7 @@ def _nums(wkt):
 
 def test_s57_layer_counts(spark):
     # autotest ogr_s57.py::test_ogr_s57_check_layers
-    df = s57.read_s57(spark, CELL)
+    df = s57.read_s57(spark, reference_fixture(CELL))
     got = {r["layer"]: r["count"]
            for r in df.groupBy("layer").count().collect()}
     assert got == _COUNTS
@@ -36,7 +34,7 @@ def test_s57_layer_counts(spark):
 
 def test_s57_coalne(spark):
     # autotest ogr_s57.py::test_ogr_s57_COALNE
-    rows = s57.read_s57(spark, CELL)
+    rows = s57.read_s57(spark, reference_fixture(CELL))
     f = rows.filter(rows.layer == "COALNE").collect()[0]
     assert f.RCID == 1
     assert f.LNAM == "FFFF7F4F0FB002D3"
@@ -55,7 +53,7 @@ def test_s57_coalne(spark):
 
 def test_s57_soundg(spark):
     # autotest ogr_s57.py::test_ogr_s57_SOUNDG
-    rows = s57.read_s57(spark, CELL)
+    rows = s57.read_s57(spark, reference_fixture(CELL))
     f = sorted(rows.filter(rows.layer == "SOUNDG").collect(),
                key=lambda r: r.RCID)[0]
     assert f.RCID == 20 and f.OBJL == 129 and f.AGEN == 65535
@@ -72,7 +70,7 @@ def test_s57_m_qual_ring(spark):
     # autotest ogr_s57.py::test_ogr_s57_M_QUAL — same closed ring
     # (compared as a cyclic coordinate multiset; GDAL's edge
     # stitching can start the ring at any shared endpoint)
-    rows = s57.read_s57(spark, CELL)
+    rows = s57.read_s57(spark, reference_fixture(CELL))
     f = rows.filter(rows.layer == "M_QUAL").collect()[0]
     assert f.RCID == 15 and f.OBJL == 308 and f.AGEN == 65535
     assert f.geom_wkt.startswith("POLYGON")
@@ -97,7 +95,7 @@ def test_s57_m_qual_ring(spark):
 
 
 def test_s57_dsid():
-    info = s57.parse_s57(CELL)
+    info = s57.parse_s57(reference_fixture(CELL))
     assert info["dsid"]["DSNM"] == "1B5X02NE.000"
     assert info["comf"] == 500000.0 and info["somf"] == 10.0
 
@@ -105,7 +103,7 @@ def test_s57_dsid():
 def test_s57_multilinestring(spark):
     # autotest ogr_s57.py::test_ogr_s57_multilinestring (#2147) —
     # disjoint ROADWY edges become MULTILINESTRING parts
-    rows = s57.read_s57(spark, f"{DATA}/bug2147_3R7D0889.000")
+    rows = s57.read_s57(spark, reference_fixture(f"{DATA}/bug2147_3R7D0889.000"))
     f = rows.filter(rows.layer == "ROADWY").orderBy("RCID").collect()[0]
     assert f.geom_wkt.startswith("MULTILINESTRING")
     got = f.geom_wkt[len("MULTILINESTRING ("):-1].split("), (")
@@ -123,7 +121,7 @@ def test_s57_multilinestring(spark):
 
 def test_s57_double_byte_attrs(spark):
     # autotest ogr_s57.py::test_ogr_s57_double_byte_attrs (#1526)
-    rows = s57.read_s57(spark, f"{DATA}/bug1526.000")
+    rows = s57.read_s57(spark, reference_fixture(f"{DATA}/bug1526.000"))
     f = rows.filter(rows.layer == "FOGSIG").collect()[0]
     assert f.attributes["INFORM"] == (
         "During South winds nautophone is not always heard in S "
@@ -132,7 +130,7 @@ def test_s57_double_byte_attrs(spark):
 
 def test_s57_update_dsid():
     # autotest ogr_s57.py::test_ogr_s57_update_dsid — DSID fields
-    info = s57.parse_s57(f"{DATA}/fake_s57_update_dsid.000")
+    info = s57.parse_s57(reference_fixture(f"{DATA}/fake_s57_update_dsid.000"))
     d = info["dsid"]
     assert d["EDTN"] == "0"
     assert d["UPDN"] == "1"

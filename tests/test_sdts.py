@@ -2,19 +2,15 @@
 (autotest/gdrivers/sdts.py::test_sdts_1: checksum 61672, gt
 (666015, 30, 0, 5040735, 0, -30), TITLE metadata)."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import sdts
 
-CATD = ("/root/reference/autotest/gdrivers/data/"
-        "STDS_1107834_truncated/1107CATD.DDF")
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(CATD), reason="reference fixtures not present")
+CATD = ("autotest/gdrivers/data/"
+        "STDS_1107834_truncated/1107CATD.DDF")
 
 
 def _mosaic(rows):
@@ -28,13 +24,13 @@ def _mosaic(rows):
 
 
 def test_sdts_alanson(spark):
-    info = sdts.parse_sdts(CATD)
+    info = sdts.parse_sdts(reference_fixture(CATD))
     assert info["metadata"]["TITLE"] == "ALANSON, MI-24000"
     np.testing.assert_allclose(
         info["geotransform"], [666015, 30, 0, 5040735, 0, -30])
     assert (info["width"], info["height"]) == (339, 25)
     assert info["dtype"] == "int16"
-    rows = sdts.read_sdts(spark, CATD).collect()
+    rows = sdts.read_sdts(spark, reference_fixture(CATD)).collect()
     a = _mosaic(rows)
     assert a.shape == (25, 339)
     assert G.gdal_checksum(a) == 61672   # autotest sdts.py:10

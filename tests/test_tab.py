@@ -5,18 +5,15 @@ way ogrtest.check_feature_geometry does — numerically), plus
 poly_indexed.tab attribute filtering (::test_ogr_mitab_47)."""
 
 import csv
-import os
 import re
 
 import numpy as np
-import pytest
 
 from gdal_spark import tab
 
-DATA = "/root/reference/autotest/ogr/data/mitab"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/ogr/data/mitab"
 
 
 def _nums(wkt: str) -> np.ndarray:
@@ -29,13 +26,13 @@ def _kind(wkt: str) -> str:
 
 
 def _golden():
-    with open(f"{DATA}/all_geoms.mif.golden.csv") as f:
+    with open(reference_fixture(f"{DATA}/all_geoms.mif.golden.csv")) as f:
         return [row["WKT"] for row in csv.DictReader(f)]
 
 
 def test_tab_all_geoms_vs_golden(spark):
     rows = tab.read_tab(
-        spark, f"{DATA}/all_geoms.tab").orderBy("fid").collect()
+        spark, reference_fixture(f"{DATA}/all_geoms.tab")).orderBy("fid").collect()
     golden = _golden()
     assert len(rows) == len(golden) == 16
     for r, want in zip(rows, golden):
@@ -48,14 +45,14 @@ def test_tab_all_geoms_vs_golden(spark):
 
 
 def test_tab_identify():
-    assert tab.identify(f"{DATA}/all_geoms.tab")
-    assert not tab.identify(f"{DATA}/all_geoms.map")
+    assert tab.identify(reference_fixture(f"{DATA}/all_geoms.tab"))
+    assert not tab.identify(reference_fixture(f"{DATA}/all_geoms.map"))
 
 
 def test_tab_poly_indexed_attributes(spark):
     # autotest ogr_mitab.py::test_ogr_mitab_47 (sans the .ind file:
     # the filter is evaluated by Spark, not the B-tree index)
-    df = tab.read_tab(spark, f"{DATA}/poly_indexed.tab")
+    df = tab.read_tab(spark, reference_fixture(f"{DATA}/poly_indexed.tab"))
     assert df.filter(df.PRFEDEA == "35043413").count() == 1
     rows = df.orderBy("fid").collect()
     assert len(rows) == 10
@@ -63,7 +60,7 @@ def test_tab_poly_indexed_attributes(spark):
 
 
 def test_tab_first_table_types(spark):
-    df = tab.read_tab(spark, f"{DATA}/first_table.tab")
+    df = tab.read_tab(spark, reference_fixture(f"{DATA}/first_table.tab"))
     assert dict(df.dtypes)["joint_field"] == "int"
     assert dict(df.dtypes)["foo"] == "string"
     rows = df.collect()
@@ -74,8 +71,8 @@ def test_tab_first_table_types(spark):
 def test_tab_lambert93_empty_table(spark):
     # 0-record table with uppercase sidecar names: the scan yields an
     # empty frame with the declared schema and the .map header parses
-    df = tab.read_tab(spark, f"{DATA}/lambert93_francais.TAB")
+    df = tab.read_tab(spark, reference_fixture(f"{DATA}/lambert93_francais.TAB"))
     assert df.count() == 0
     assert "foo" in df.columns
-    mf = tab.MapFile(f"{DATA}/lambert93_francais.MAP")
+    mf = tab.MapFile(reference_fixture(f"{DATA}/lambert93_francais.MAP"))
     assert mf.block_size == 512

@@ -2,18 +2,15 @@
 fixtures and expected checksums (autotest/gdrivers/tga.py;
 frmts/tga/tgadataset.cpp)."""
 
-import os
-
 import numpy as np
 import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import tga
 
-DATA = "/root/reference/autotest/gdrivers/data/tga"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/tga"
 
 
 def _band(rows, band=1):
@@ -29,7 +26,7 @@ def _band(rows, band=1):
 
 def test_tga_rle_grey(spark):
     # autotest tga.py::test_tga_read_rle_grey_level
-    p = f"{DATA}/ref_test_suite/cbw8.tga"
+    p = reference_fixture(f"{DATA}/ref_test_suite/cbw8.tga")
     assert tga.identify(p)
     info = tga.parse_tga(p)
     assert info["nbands"] == 1 and info["color_table"] is None
@@ -45,7 +42,7 @@ def test_tga_rle_grey(spark):
 
 def test_tga_rle_color_table(spark):
     # autotest tga.py::test_tga_read_rle_color_table
-    p = f"{DATA}/ref_test_suite/ccm8.tga"
+    p = reference_fixture(f"{DATA}/ref_test_suite/ccm8.tga")
     info = tga.parse_tga(p)
     ct = info["color_table"]
     assert len(ct) == 256
@@ -63,24 +60,24 @@ def test_tga_rle_color_table(spark):
 ])
 def test_tga_truecolor(spark, name, sums):
     rows = tga.read_tga(
-        spark, f"{DATA}/ref_test_suite/{name}.tga").collect()
+        spark, reference_fixture(f"{DATA}/ref_test_suite/{name}.tga")).collect()
     for b, want in enumerate(sums, start=1):
         assert G.gdal_checksum(_band(rows, b)) == want, (name, b)
 
 
 def test_tga_uncompressed_grey_and_cmap(spark):
     a = _band(tga.read_tga(
-        spark, f"{DATA}/ref_test_suite/ubw8.tga").collect())
+        spark, reference_fixture(f"{DATA}/ref_test_suite/ubw8.tga")).collect())
     assert G.gdal_checksum(a) == 43089
     a = _band(tga.read_tga(
-        spark, f"{DATA}/ref_test_suite/ucm8.tga").collect())
+        spark, reference_fixture(f"{DATA}/ref_test_suite/ucm8.tga")).collect())
     assert G.gdal_checksum(a) == 38151
 
 
 def test_tga_32bit_attribute_type_2(spark):
     # autotest tga.py::test_tga_read_uncompressed_32bit: footer
     # attribute-type 2 keeps the 4th channel but it is NOT alpha
-    p = f"{DATA}/ref_test_suite/utc32.tga"
+    p = reference_fixture(f"{DATA}/ref_test_suite/utc32.tga")
     info = tga.parse_tga(p)
     assert info["nbands"] == 4 and not info["fourth_is_alpha"]
     rows = tga.read_tga(spark, p).collect()
@@ -90,7 +87,7 @@ def test_tga_32bit_attribute_type_2(spark):
 
 def test_tga_32bit_alpha(spark):
     # autotest tga.py::test_tga_read_uncompressed_32bit_alpha
-    p = f"{DATA}/stefan_full_rgba.tga"
+    p = reference_fixture(f"{DATA}/stefan_full_rgba.tga")
     info = tga.parse_tga(p)
     assert (info["width"], info["height"]) == (162, 150)
     assert info["nbands"] == 4 and info["fourth_is_alpha"]

@@ -2,17 +2,14 @@
 fixtures — the TopoJSON test reproduces the 35-case expected table
 of autotest/ogr/ogr_topojson.py verbatim."""
 
-import os
-
 import numpy as np
-import pytest
 
 from gdal_spark import vecmisc as V
 
-DATA = "/root/reference/autotest/ogr/data"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/ogr/data"
+
 
 EXPECTED_TOPO1 = [
     (None, None, "POINT EMPTY"),
@@ -61,7 +58,7 @@ EXPECTED_TOPO1 = [
 
 
 def test_topojson1_full_table(spark):
-    df = V.read_topojson(spark, f"{DATA}/topojson/topojson1.topojson")
+    df = V.read_topojson(spark, reference_fixture(f"{DATA}/topojson/topojson1.topojson"))
     rows = df.collect()
     a = sorted((r for r in rows if r.layer == "a_layer"),
                key=lambda r: r.fid)
@@ -77,19 +74,19 @@ def test_topojson1_full_table(spark):
 
 def test_topojson2_and_3(spark):
     r2 = V.read_topojson(
-        spark, f"{DATA}/topojson/topojson2.topojson").collect()
+        spark, reference_fixture(f"{DATA}/topojson/topojson2.topojson")).collect()
     a2 = [r for r in r2 if r.layer == "a_layer"]
     assert a2[0].geom_wkt == \
         "LINESTRING (100 1000,110 1000,110 1100)"
     r3 = V.read_topojson(
-        spark, f"{DATA}/topojson/topojson3.topojson").collect()
+        spark, reference_fixture(f"{DATA}/topojson/topojson3.topojson")).collect()
     a3 = [r for r in r3 if r.layer == "a_layer"]
     assert a3[0].geom_wkt == "LINESTRING (0 0,10 0,0 10,10 0,0 0)"
 
 
 def test_arcgen_all_variants(spark):
     # autotest/ogr/ogr_arcgen.py expected geometries
-    got = {f: V.read_arcgen(spark, f"{DATA}/arcgen/{f}.gen").collect()
+    got = {f: V.read_arcgen(spark, reference_fixture(f"{DATA}/arcgen/{f}.gen")).collect()
            for f in ("points", "points25d", "lines", "lines25d",
                      "polygons", "polygons25d")}
     assert got["points"][0].geom_wkt == "POINT (2 49)"
@@ -106,7 +103,7 @@ def test_arcgen_all_variants(spark):
 
 
 def test_gmt_multi(spark):
-    df = V.read_gmt(spark, f"{DATA}/gmt/test_multi.gmt")
+    df = V.read_gmt(spark, reference_fixture(f"{DATA}/gmt/test_multi.gmt"))
     rows = sorted(df.collect(), key=lambda r: r.fid)
     assert len(rows) == 2
     assert rows[0].id == "1" and rows[0].name == "feature 1"
@@ -123,7 +120,7 @@ def test_gmt_multi(spark):
 def test_identify_new_formats(spark):
     from gdal_spark.info import identify
 
-    G2 = "/root/reference/autotest/gdrivers/data"
+    G2 = reference_fixture("autotest/gdrivers/data")
     cases = {
         f"{G2}/hfa/int.img": "HFA",
         f"{G2}/gif/bug407.gif": "GIF",
@@ -139,8 +136,8 @@ def test_identify_new_formats(spark):
         f"{G2}/ilwis/LanduseSmall.mpr": "ILWIS",
         f"{G2}/isg/test.isg": "ISG",
         f"{G2}/usgsdem/39079G6_truncated.dem": "USGSDEM",
-        f"{DATA}/topojson/topojson1.topojson": "TopoJSON",
-        f"{DATA}/gmt/test_multi.gmt": "GMT",
+        reference_fixture(f"{DATA}/topojson/topojson1.topojson"): "TopoJSON",
+        reference_fixture(f"{DATA}/gmt/test_multi.gmt"): "GMT",
     }
     got = {r.path: r.driver
            for r in identify(spark, list(cases)).collect()}

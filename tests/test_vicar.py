@@ -1,18 +1,16 @@
 """VICAR driver vs the reference's own fixtures — the uncompressed
 layout/type matrix of autotest/gdrivers/vicar.py:88-101 verbatim."""
 
-import os
-
 import numpy as np
 import pytest
 
 from gdal_spark import geomlite as G
 from gdal_spark import vicar as VIC
 
-DATA = "/root/reference/autotest/gdrivers/data/vicar"
+from .conftest import reference_fixture
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA), reason="reference fixtures not present")
+DATA = "autotest/gdrivers/data/vicar"
+
 
 CASES = [
     ("vicar_byte", "uint8", 129),
@@ -45,7 +43,7 @@ def _band(rows, band=1):
 @pytest.mark.parametrize("fname,dt,cks", CASES,
                          ids=[c[0] for c in CASES])
 def test_vicar_read_datatypes(spark, fname, dt, cks):
-    rows = VIC.read_vicar(spark, f"{DATA}/{fname}.vic").collect()
+    rows = VIC.read_vicar(spark, reference_fixture(f"{DATA}/{fname}.vic")).collect()
     a = _band(rows)
     assert str(a.dtype) == dt
     if np.iscomplexobj(a):
@@ -58,10 +56,10 @@ def test_vicar_read_datatypes(spark, fname, dt, cks):
 def test_vicar_binary_prefix(spark):
     # NBB prefix bytes strip cleanly (autotest test_vicar_read_binary_prefix)
     rows = VIC.read_vicar(
-        spark, f"{DATA}/vicar_binary_prefix.vic").collect()
+        spark, reference_fixture(f"{DATA}/vicar_binary_prefix.vic")).collect()
     assert len(rows) >= 1
 
 
 def test_vicar_basic_compressed_refused():
     with pytest.raises(ValueError, match="COMPRESS"):
-        VIC.parse_vicar(f"{DATA}/vicar_byte_basic.vic")
+        VIC.parse_vicar(reference_fixture(f"{DATA}/vicar_byte_basic.vic"))
