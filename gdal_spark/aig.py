@@ -53,6 +53,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 GRID_NO_DATA = -2147483647
@@ -380,9 +381,8 @@ def read_aig(spark: SparkSession, cover: str, *,
                     # (aigopen.c AIGReadTile :~90-118)
                     off, sz = idx[bid] if bid < len(idx) else (0, 0)
                     rows.append((grid_p or cover, BX, BY, off, sz))
-    seg = spark.createDataFrame(
-        rows, "path string, bx int, by int, offset long, size int"
-    ).repartition(max(4, min(len(rows), 256)))
+    seg = blockscan.spread(
+        spark, rows, "path string, bx int, by int, offset long, size int")
 
     def scan(batches):
         for pdf in batches:

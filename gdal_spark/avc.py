@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .fmt import fmt_coord as fnum
 
 
@@ -132,8 +133,7 @@ def read_avce00(spark: SparkSession,
                 paths: str | list[str]) -> DataFrame:
     if isinstance(paths, str):
         paths = [paths]
-    seg = spark.createDataFrame([(p,) for p in paths], "path string") \
-        .repartition(max(4, min(len(paths), 256)))
+    seg = blockscan.spread(spark, [(p,) for p in paths], "path string")
 
     def scan(batches):
         for pdf in batches:

@@ -18,9 +18,9 @@ Reference:
 
 Spark lowering: an uncompressed BMP is a fixed-stride raw raster with
 two quirks — rows are stored bottom-to-top and padded to 4 bytes — so
-the scan is the ehdr.read_raw family's descriptor-parallel MAP-ONLY
-pattern: the driver reads only the <200-byte header (+1 KB palette)
-and emits one strip descriptor per tile-row; an image strip
+the scan is the shared block scan's (blockscan) descriptor-parallel
+MAP-ONLY pattern: the driver reads only the <200-byte header (+1 KB
+palette) and emits one strip descriptor per tile-row; an image strip
 [y0, y0+h) is the CONTIGUOUS file range [(nrows-y0-h)*stride,
 (nrows-y0)*stride), so each executor does one pread, one vertical
 flip, one numpy de-interleave.  Zero shuffles, zero driver pixel
@@ -39,7 +39,6 @@ reference rejects writing it.
 
 from __future__ import annotations
 
-import math
 import os
 import struct
 
@@ -49,18 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
+from . import blockscan
+from .blockscan import Layout
 
 FILE_HDR = 14
 BIH_WIN4 = 40
-
-_SEG_SCHEMA = T.StructType([
-    T.StructField("tile_y", T.IntegerType()),
-    T.StructField("offset", T.LongType()),
-    T.StructField("nbytes", T.LongType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("y0", T.IntegerType()),
-])
 
 
 def _pad4(n: int) -> int:
@@ -154,61 +146,36 @@ def read_bmp(spark: SparkSession, path: str, *, tile_px: int = 256,
     """BMP scan -> tile table, map-only.  One descriptor per tile-row;
     bottom-up strips are contiguous preads flipped in memory."""
     hdr = parse_bmp(path)
-    nrows, ncols = hdr["nrows"], hdr["ncols"]
-    bits, stride = hdr["bits"], hdr["stride"]
-    top_down, data_off = hdr["top_down"], hdr["data_offset"]
-    palette = hdr["palette"]
-    bpp = max(1, hdr["bytes_pp"])
+    nrows, ncols, bits = hdr["nrows"], hdr["ncols"], hdr["bits"]
     gt = geotransform or read_world_file(path) or \
         [0.0, 1.0, 0.0, float(nrows), 0.0, -1.0]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(nrows / tile_px)
+    decode = None
+    if bits in (24, 32):
+        # stored B,G,R(,x): band n = byte 3-n (:392)
+        offs, width, pix = (2, 1, 0), ncols, bits // 8
+    elif bits == 8:
+        offs, width, pix = (0,), ncols, 1
+    else:
+        offs, width, pix = (0,), (ncols * bits + 7) // 8, 1
 
-    rows = []
-    for ty in range(nty):
-        y0 = ty * tile_px
-        h = min(tile_px, nrows - y0)
-        frow = y0 if top_down else nrows - y0 - h
-        rows.append((ty, data_off + frow * stride, h * stride, h, y0))
-    seg = spark.createDataFrame(rows, _SEG_SCHEMA) \
-        .repartition(max(4, min(len(rows), 256)))
+        def decode(planes, strip):
+            return [(1, _unpack_sub_byte(planes[0][1], bits, ncols))]
 
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    raw = os.pread(fd, int(r.nbytes), int(r.offset))
-                    h = int(r.height)
-                    scanlines = np.frombuffer(raw, dtype=np.uint8) \
-                        .reshape(h, stride)
-                    if not top_down:
-                        scanlines = scanlines[::-1]
-                    if bits in (24, 32):
-                        px = scanlines[:, :ncols * bpp] \
-                            .reshape(h, ncols, bpp)
-                        # stored B,G,R(,x): band n = byte 3-n (:392)
-                        planes = [(b, px[:, :, 3 - b]) for b in (1, 2, 3)]
-                    elif bits == 8:
-                        planes = [(1, scanlines[:, :ncols])]
-                    else:
-                        planes = [(1, _unpack_sub_byte(
-                            scanlines[:, :(ncols * bits + 7) // 8],
-                            bits, ncols))]
-                    y0 = int(r.y0)
-                    # world-file rotation terms shift the origin too
-                    out += [tile_row(
-                        rid, band, int(zoom), tx, int(r.tile_y),
-                        plane[:, x:x + tile_px],
-                        [gt[0] + x * gt[1] + y0 * gt[2], gt[1], gt[2],
-                         gt[3] + x * gt[4] + y0 * gt[5], gt[4], gt[5]],
-                        nodata=None, crs=crs)
-                        for band, plane in planes
-                        for tx, x in enumerate(range(0, ncols, tile_px))]
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+    t = blockscan.read(
+        spark, Layout(path, width, nrows, "u1",
+                      tuple(hdr["data_offset"] + o for o in offs),
+                      pixel_offset=pix, line_offset=hdr["stride"],
+                      bottom_up=not hdr["top_down"], decode=decode),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=gt, tile_px=tile_px, zoom=zoom, nodata=None, crs=crs)
+    if gt[2] or gt[4]:
+        # world-file rotation terms shift the tile origins too
+        x0, y0 = F.col("tile_x") * tile_px, F.col("tile_y") * tile_px
+        t = t.withColumn("geotransform", F.array(
+            F.lit(gt[0]) + x0 * gt[1] + y0 * gt[2], F.lit(gt[1]),
+            F.lit(gt[2]), F.lit(gt[3]) + x0 * gt[4] + y0 * gt[5],
+            F.lit(gt[4]), F.lit(gt[5])))
+    return t
 
 
 def read_bmp_palette(path: str) -> pd.DataFrame:

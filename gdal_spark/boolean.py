@@ -79,13 +79,6 @@ def _directed_segs(polys):
     return np.concatenate(segs)
 
 
-def _point_in_polys(polys, x: float, y: float) -> bool:
-    """Even-odd membership over normalized [(rings)] parts."""
-    return bool(
-        _points_in_polys(polys, np.array([x]), np.array([y]))[0]
-    )
-
-
 def _points_in_polys(polys, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
     """Vectorized even-odd membership for ALL query points at once —
     one pip_one call per ring instead of per (point, ring) pair."""

@@ -32,9 +32,9 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
+from . import blockscan
+from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 
 def parse_bsb(path: str) -> dict:
@@ -197,11 +197,8 @@ def read_bsb(spark: SparkSession, path: str, *, tile_px: int = 256,
     nty = math.ceil(H / tile_px)
     rows = [(0, ty, min(tile_px, H - ty * tile_px))
             for ty in range(nty)]
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 64)))
+    desc = blockscan.spread(spark, rows,
+                            "band int, tile_y int, height int")
 
     def scan(batches):
         for pdf in batches:
@@ -222,13 +219,11 @@ def read_bsb(spark: SparkSession, path: str, *, tile_px: int = 256,
                     plane = np.stack(lines)
                     emit = [(1, plane)] if expand != "rgb" else [
                         (b + 1, pal[plane, b]) for b in range(3)]
-                    # every tile carries the unshifted identity transform
-                    out += [tile_row(rid, band, int(zoom), tx,
-                                     int(r.tile_y), pl[:, x:x + tile_px],
-                                     [0.0, 1.0, 0.0, 0.0, 0.0, -1.0],
-                                     dtype="uint8")
-                            for band, pl in emit
-                            for tx, x in enumerate(range(0, W, tile_px))]
+                    for band, pl in emit:
+                        out += strip_rows(
+                            rid, band, int(zoom), int(r.tile_y), pl,
+                            [0.0, 1.0, 0.0, 0.0, 0.0, -1.0], tile_px,
+                            y0=y0, dtype="uint8")
             yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 _BT_TYPES = {(0, 2): "int16", (0, 4): "int32", (1, 4): "float32"}
@@ -61,10 +62,7 @@ def read_bt(spark: SparkSession, path: str, *, tile_px: int = 256,
     ntx = math.ceil(W / tile_px)
     rows = [(txi, min(tile_px, W - txi * tile_px))
             for txi in range(ntx)]
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("txi", T.IntegerType()),
-                            T.StructField("width", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 64)))
+    desc = blockscan.spread(spark, rows, "txi int, width int")
 
     def scan(batches):
         for pdf in batches:

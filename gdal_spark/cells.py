@@ -96,15 +96,6 @@ def quadkey(tx: Column, ty_tms: Column, zoom: int) -> Column:
     return F.lpad(F.conv(x4 + y4 * 2, 10, 4), zoom, "0")
 
 
-def tile_id(tx: Column, ty_google: Column, zoom: int) -> Column:
-    """Pack (zoom, tx, ty_google) into one int64 equality-join key."""
-    return (
-        (F.lit(int(zoom)).cast("long") * (1 << 52))
-        + (tx.cast("long") * (1 << 26))
-        + ty_google.cast("long")
-    )
-
-
 def geo_cell(lon: Column, lat: Column, level: int) -> Column:
     """Geodetic index cell id at `level` (2^level x 2^level world grid).
 

@@ -248,18 +248,6 @@ def utm_forward(lon: Column, lat: Column, zone: int, ellipsoid: str = "WGS84",
     )
 
 
-def utm_forward_sql(lon_expr: str, lat_expr: str, zone: int,
-                    ellipsoid: str = "WGS84", south: bool = False) -> tuple[str, str]:
-    """The SAME expression as SQL text (identical association order)."""
-    a, f = ELLIPSOIDS[ellipsoid]
-    lon0 = -183.0 + 6.0 * zone
-    e, n = _tm_forward(
-        _SqlBackend, _Sql(lon_expr), _Sql(lat_expr), lon0, a, f,
-        false_n=10000000.0 if south else 0.0,
-    )
-    return str(e), str(n)
-
-
 def to_utm(df: DataFrame, epsg: int, lon_col: str = "lon",
            lat_col: str = "lat") -> DataFrame:
     """Project lon/lat columns to the given UTM EPSG — the warped-layer
@@ -3131,6 +3119,3 @@ def crs_to_crs_sql(src_epsg: int, dst_epsg: int,
     return str(x2), str(y2)
 
 
-def crs_to_crs_np(src_epsg: int, dst_epsg: int, xs, ys):
-    """numpy twin (vertex arrays) — grid_transform_np's forward leg."""
-    return grid_transform_np(src_epsg, dst_epsg)[0](xs, ys)

@@ -162,12 +162,6 @@ def geocentric_sql(lon: str, lat: str, h: str, ellps: str = "WGS84"):
         _SqlBackend, _Sql(lon), _Sql(lat), _Sql(h), a, f)
 
 
-def geodetic_sql(x: str, y: str, z: str, ellps: str = "WGS84"):
-    a, f = DATUM_ELLIPSOIDS[ellps]
-    return geocentric_to_geodetic(
-        _SqlBackend, _Sql(x), _Sql(y), _Sql(z), a, f)
-
-
 # ------------------------------------------------------ NTv2-style grid
 # synthetic subgrid header (NTv2 stores lat0/lon0, node spacing and
 # counts per subgrid; shifts in arc-seconds, lon +WEST).  World-wide

@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .fmt import fmt_coord as fnum
 
 DGNT_TCB = 9
@@ -208,8 +209,7 @@ def read_dgn(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     stream, no index — the file is the parallel unit)."""
     if isinstance(paths, str):
         paths = [paths]
-    seg = spark.createDataFrame([(p,) for p in paths], "path string") \
-        .repartition(max(4, min(len(paths), 256)))
+    seg = blockscan.spread(spark, [(p,) for p in paths], "path string")
 
     def scan(batches):
         for pdf in batches:

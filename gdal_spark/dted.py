@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 from . import ehdr
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
@@ -259,8 +260,7 @@ def read_dted(spark: SparkSession, path: str, *, tile_px: int = 256,
     ntx = math.ceil(nx / tile_px)
     strips = [(tx * tile_px, min(tile_px, nx - tx * tile_px))
               for tx in range(ntx)]
-    seg = spark.createDataFrame(strips, _STRIP_SCHEMA) \
-        .repartition(max(4, min(len(strips), 256)))
+    seg = blockscan.spread(spark, strips, _STRIP_SCHEMA)
 
     def scan(batches):
         for pdf in batches:

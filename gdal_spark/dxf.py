@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 from . import geometry as GM
 from .fmt import fmt_coord as _F
 
@@ -212,9 +213,8 @@ def read_dxf(spark: SparkSession, path: str, *,
     size = os.path.getsize(path)
     ranges = [(s, min(s + chunk_bytes, size), ent0, s <= ent0)
               for s in range(ent0, size, chunk_bytes)]
-    seg = spark.createDataFrame(
-        ranges, "start long, end long, ent0 long, first boolean") \
-        .repartition(max(4, min(len(ranges), 256)))
+    seg = blockscan.spread(
+        spark, ranges, "start long, end long, ent0 long, first boolean")
 
     def scan(batches):
         for pdf in batches:

@@ -18,11 +18,12 @@ Reference:
 
 Spark lowering: raw formats are the ideal distributed scan — every
 byte's position is arithmetic on (row, col, band), so the driver reads
-ONLY the text header and emits a strip-descriptor DataFrame; executors
-pread their strips, de-interleave with numpy reshapes, and emit
-TILE_SCHEMA rows. The whole read is MAP-ONLY — zero shuffles, zero
-driver pixel bytes — and splits identically at 100 TB (each strip is
-an independent range read, same shape as a parquet row-group scan).
+ONLY the text header and hands the layout to the shared block scan
+(blockscan): executors pread their strips, de-interleave with strided
+numpy views, and emit TILE_SCHEMA rows. The whole read is MAP-ONLY —
+zero shuffles, zero driver pixel bytes — and splits identically at
+100 TB (each strip is an independent range read, same shape as a
+parquet row-group scan).
 
 The writer plans the same closed-form offsets: the driver writes the
 tiny .hdr and truncates the data file; executors os.pwrite each tile
@@ -44,22 +45,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
+from . import blockscan
+from .blockscan import Layout
 
 # ENVI `data type` code -> numpy dtype (envidataset.cpp:1018 mapping)
 ENVI_DTYPES = {1: "uint8", 2: "int16", 3: "int32", 4: "float32",
                5: "float64", 12: "uint16", 13: "uint32", 14: "int64",
                15: "uint64"}
 _ENVI_CODES = {v: k for k, v in ENVI_DTYPES.items()}
-
-_SEG_SCHEMA = T.StructType([
-    T.StructField("band", T.IntegerType()),     # -1 = all bands (BIL/BIP)
-    T.StructField("tile_y", T.IntegerType()),
-    T.StructField("offset", T.LongType()),
-    T.StructField("nbytes", T.LongType()),
-    T.StructField("height", T.IntegerType()),
-])
-
 
 # ------------------------------------------------------------ header parse
 def parse_ehdr_header(text: str) -> dict:
@@ -157,68 +150,34 @@ def parse_envi_header(text: str) -> dict:
 def read_raw(spark: SparkSession, data_path: str, hdr: dict, *,
              tile_px: int = 256, raster_id: str | None = None,
              zoom: int = 0, crs: str | None = None) -> DataFrame:
-    """Raw fixed-stride scan -> tile table, map-only (no shuffle).
-
-    One strip descriptor per (tile-row [, band for BSQ]); each strip is
-    a contiguous pread whose interior de-interleaves with a single
-    numpy reshape (rawdataset.cpp RawRasterBand::AccessBlock, made
-    batch)."""
-    nrows, ncols = hdr["nrows"], hdr["ncols"]
-    nbands, dtype = hdr["nbands"], hdr["dtype"]
-    interleave, skip = hdr["interleave"], hdr["skip"]
+    """Raw fixed-stride scan -> tile table, map-only (no shuffle): the
+    header dict (nrows/ncols/nbands/dtype/byteorder/interleave/skip) as
+    a block-scan layout. Reads past EOF zero-fill, as the reference's
+    RawRasterBand::AccessBlock does for the truncated fixtures these
+    drivers ship."""
+    nrows, ncols, nbands = hdr["nrows"], hdr["ncols"], hdr["nbands"]
+    isz = np.dtype(hdr["dtype"]).itemsize
+    interleave = hdr["interleave"]
+    if interleave == "bsq":
+        offs, pix = [b * nrows * ncols * isz for b in range(nbands)], isz
+    elif interleave == "bil":
+        offs, pix = [b * ncols * isz for b in range(nbands)], isz
+    else:  # bip
+        offs, pix = [b * isz for b in range(nbands)], nbands * isz
+    line = ncols * isz * (1 if interleave == "bsq" else nbands)
     gt = hdr["geotransform"]
-    gt = (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5])   # tiles carry no rotation
     nodata = hdr.get("nodata")
-    nodata = float("nan") if nodata is None else float(nodata)
-    crs = crs if crs is not None else hdr.get("crs", "")
-    isz = np.dtype(dtype).itemsize
-    np_dtype = np.dtype(dtype).newbyteorder(hdr["byteorder"])
-    rid = raster_id or os.path.splitext(os.path.basename(data_path))[0]
-    nty = math.ceil(nrows / tile_px)
-
-    rows = []
-    for ty in range(nty):
-        h = min(tile_px, nrows - ty * tile_px)
-        if interleave == "bsq":
-            for b in range(nbands):
-                off = skip + (b * nrows + ty * tile_px) * ncols * isz
-                rows.append((b, ty, off, h * ncols * isz, h))
-        else:  # bil / bip: a row carries all bands
-            off = skip + ty * tile_px * ncols * nbands * isz
-            rows.append((-1, ty, off, h * ncols * nbands * isz, h))
-    seg = spark.createDataFrame(rows, _SEG_SCHEMA) \
-        .repartition(max(4, min(len(rows), 256)))
-
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(data_path, "rb") as f:
-                for r in pdf.itertuples(index=False):
-                    raw = os.pread(f.fileno(), int(r.nbytes), int(r.offset))
-                    if len(raw) < int(r.nbytes):
-                        # truncated files zero-fill past EOF, the
-                        # reference's RawRasterBand::AccessBlock
-                        # behavior its own truncated fixtures rely on
-                        raw = raw + b"\0" * (int(r.nbytes) - len(raw))
-                    arr = np.frombuffer(raw, dtype=np_dtype)
-                    h = int(r.height)
-                    if interleave == "bsq":
-                        planes = [(int(r.band) + 1, arr.reshape(h, ncols))]
-                    elif interleave == "bil":
-                        a = arr.reshape(h, nbands, ncols)
-                        planes = [(b + 1, a[:, b, :]) for b in range(nbands)]
-                    else:  # bip
-                        a = arr.reshape(h, ncols, nbands)
-                        planes = [(b + 1, a[:, :, b]) for b in range(nbands)]
-                    for band, plane in planes:
-                        out += strip_rows(
-                            rid, band, int(zoom), int(r.tile_y),
-                            plane.astype(np.dtype(dtype), copy=False), gt,
-                            tile_px, y0=int(r.tile_y) * tile_px,
-                            nodata=nodata, crs=crs, dtype=dtype)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(data_path, ncols, nrows, hdr["dtype"],
+                      tuple(hdr["skip"] + o for o in offs), pixel_offset=pix,
+                      line_offset=line, byteorder=hdr["byteorder"],
+                      zero_fill=True, out_dtype=hdr["dtype"]),
+        raster_id=raster_id or os.path.splitext(
+            os.path.basename(data_path))[0],
+        geotransform=(gt[0], gt[1], 0.0, gt[3], 0.0, gt[5]),  # no rotation
+        tile_px=tile_px, zoom=zoom,
+        nodata=float("nan") if nodata is None else float(nodata),
+        crs=crs if crs is not None else hdr.get("crs", ""))
 
 
 def read_ehdr(spark: SparkSession, data_path: str, *,

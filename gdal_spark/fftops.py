@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 from .tiling import _decode, _gdal_cast
 
 _KEY = ["raster_id", "band", "zoom"]
@@ -59,11 +59,10 @@ def _axis_fft(tiles: DataFrame, axis: int, inverse: bool,
         for i, r in enumerate(pdf.itertuples(index=False)):
             piece = (out[:, i * step:(i + 1) * step] if axis == 1
                      else out[i * step:(i + 1) * step, :])
-            d = r._asdict()
-            d.update(dtype="complex128", data=np.ascontiguousarray(piece).tobytes())
-            if dst_raster_id is not None:
-                d["raster_id"] = dst_raster_id
-            rows.append(d)
+            rows.append(tile_row(
+                r.raster_id if dst_raster_id is None else dst_raster_id,
+                r.band, r.zoom, r.tile_x, r.tile_y, piece, r.geotransform,
+                nodata=r.nodata, crs=r.crs, dtype="complex128"))
         return pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.groupBy(*_KEY, gcol).applyInPandas(run, schema=TILE_SCHEMA)
@@ -109,13 +108,10 @@ def magphase(tiles: DataFrame) -> DataFrame:
                 for suffix, arr in (
                     ("_mag", np.abs(z)), ("_phase", np.angle(z)),
                 ):
-                    d = r._asdict()
-                    d.update(
-                        raster_id=str(r.raster_id) + suffix,
-                        dtype="float64",
-                        data=arr.astype(np.float64).tobytes(),
-                    )
-                    rows.append(d)
+                    rows.append(tile_row(
+                        str(r.raster_id) + suffix, r.band, r.zoom, r.tile_x,
+                        r.tile_y, arr.astype(np.float64), r.geotransform,
+                        nodata=r.nodata, crs=r.crs, dtype="float64"))
             yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 from . import geometry as GM
 
 MAGIC = bytes([0x66, 0x67, 0x62, 0x03, 0x66, 0x67, 0x62, 0x00])
@@ -640,9 +641,9 @@ def write_fgb(df: DataFrame, path: str, *, wkt_col: str = "wkt",
         f.truncate(feat_off + int(parts["nbytes"].sum()))
 
     # feature slabs + leaf nodes, parallel by part
-    pl = spark.createDataFrame(
-        parts[["pid", "i0", "b0"]], "pid int, i0 long, b0 long") \
-        .repartition(max(4, min(len(parts), 64)))
+    pl = blockscan.spread(
+        spark, parts[["pid", "i0", "b0"]].values.tolist(),
+        "pid int, i0 long, b0 long")
 
     def wr_part(batches):
         for pdf in batches:
@@ -715,8 +716,7 @@ def write_fgb(df: DataFrame, path: str, *, wkt_col: str = "wkt",
 
             # chunk 4096 children per task, aligned to node_size
             ks = list(range(0, n_child, 4096))
-            kdf = spark.createDataFrame([(k,) for k in ks], "k0 long") \
-                .repartition(max(2, min(len(ks), 32)))
+            kdf = blockscan.spread(spark, [(k,) for k in ks], "k0 long")
             pnodes = kdf.mapInPandas(
                 build, schema="idx long, x0 double, y0 double,"
                 " x1 double, y1 double, off long").toPandas()
@@ -836,9 +836,7 @@ def read_fgb(spark: SparkSession, path: str, *,
     has_index = bool(hdr["index_bytes"])
     leaf_start = hdr["level_bounds"][0][0] if has_index else 0
 
-    seg = spark.createDataFrame(strips or [(0, 0)],
-                                "i0 long, i1 long") \
-        .repartition(max(4, min(max(len(strips), 1), 128)))
+    seg = blockscan.spread(spark, strips or [(0, 0)], "i0 long, i1 long")
 
     def scan(batches):
         for pdf in batches:

@@ -37,10 +37,10 @@ import math
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
+from . import blockscan
+from .blockscan import Layout
 
 _BLOCK = 2880
 _CARD = 80
@@ -354,52 +354,26 @@ def read_fits(spark: SparkSession, path: str, *, hdu: int | None = None,
                 f"(subdatasets: {fits_subdatasets(path)})")
         hdu = images[0]
     info = FitsInfo(path, hdu)
-    W, H, nb = info.width, info.height, info.nbands
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    raw_np = np.dtype(info.raw_dtype).newbyteorder(">")
-    out_np = np.dtype(info.dtype)
-    isz = raw_np.itemsize
+    W, H = info.width, info.height
+    isz = np.dtype(info.raw_dtype).itemsize
     gt = info.geotransform or [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]
-    gt = (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5])   # tiles carry no rotation
-    nodata = float("nan") if info.nodata is None else float(info.nodata)
     promote = info.promote
-    nty = math.ceil(H / tile_px)
-    base = info.data_offset
-    crs = info.crs
-    dtype_name = info.dtype
+    decode = None
+    if promote:
+        def decode(planes, strip):
+            return [(b, v.astype(np.int64) + promote) for b, v in planes]
 
-    rows = []
-    for b in range(nb):
-        for ty in range(nty):
-            h = min(tile_px, H - ty * tile_px)
-            frow0 = H - ty * tile_px - h     # first FITS file row
-            off = base + (b * H + frow0) * W * isz
-            rows.append((b, ty, off, h * W * isz, h))
-    seg = spark.createDataFrame(
-        rows, "band int, tile_y int, offset long, nbytes long, height int"
-    ).repartition(max(4, min(len(rows), 256)))
-
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    raw = os.pread(fd, int(r.nbytes), int(r.offset))
-                    h = int(r.height)
-                    arr = np.frombuffer(raw, dtype=raw_np).reshape(h, W)
-                    arr = np.flipud(arr)
-                    if promote:
-                        arr = (arr.astype(np.int64) + promote).astype(out_np)
-                    else:
-                        arr = arr.astype(out_np, copy=False)
-                    out += strip_rows(
-                        rid, int(r.band) + 1, int(zoom), int(r.tile_y), arr,
-                        gt, tile_px, y0=int(r.tile_y) * tile_px, nodata=nodata,
-                        crs=crs, dtype=dtype_name)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(path, W, H, info.raw_dtype,
+                      tuple(info.data_offset + b * H * W * isz
+                            for b in range(info.nbands)),
+                      byteorder=">", bottom_up=True, out_dtype=info.dtype,
+                      decode=decode),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=(gt[0], gt[1], 0.0, gt[3], 0.0, gt[5]),  # no rotation
+        tile_px=tile_px, zoom=zoom,
+        nodata=float("nan") if info.nodata is None else float(info.nodata),
+        crs=info.crs)
 
 
 def _card(key: str, value, comment: str = "") -> bytes:

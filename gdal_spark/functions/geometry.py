@@ -363,19 +363,6 @@ def st_simplify(col, tol: float):
     return u(col)
 
 
-def st_simplify_preserve_topology(col, tol: float):
-    @F.pandas_udf(T.StringType())
-    def u(c: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                GM.to_wkt(GM.simplify_preserve_topology(GM.geom_of(v), tol))
-                if v is not None else None
-            for v in c]
-        )
-
-    return u(col)
-
-
 def st_dump(col):
     """Collection parts as an array of WKT strings (ogr2ogr
     -explodecollections; explode the result for one row per part)."""

@@ -54,12 +54,6 @@ def png_image_decoder(data: bytes) -> np.ndarray:
     return arr
 
 
-def png_image_encode(arr: np.ndarray) -> bytes:
-    from ..png import encode_png
-
-    return encode_png(np.ascontiguousarray(arr, dtype=np.uint8))
-
-
 def default_decoder(data: bytes) -> np.ndarray:
     """PNG decodes for REAL via the in-tree codec; other formats
     (JPEG/WebP/...) still need an injected decoder — those codecs

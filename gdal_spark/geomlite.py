@@ -36,24 +36,7 @@ def splitmix64(x) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
-def u01(h: np.ndarray) -> np.ndarray:
-    """uint64 hash -> uniform [0,1) double with 53-bit mantissa."""
-    return (np.asarray(h, dtype=np.uint64) >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-
-
-def h32(x) -> np.ndarray:
-    """Knuth multiplicative 32-bit mix — also expressible in plain SQL
-    ((x * 2654435761) % 4294967296) for DuckDB-oracle-checked queries."""
-    return (np.asarray(x, dtype=np.int64) * 2654435761) % 4294967296
-
-
 # ---------------------------------------------------------------------- WKT
-def format_point_wkt(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-    return np.array(
-        [f"POINT({x:.7f} {y:.7f})" for x, y in zip(lon, lat)], dtype=object
-    )
-
-
 def parse_wkt_batch(wkt: "np.ndarray") -> tuple[list[np.ndarray], list[np.ndarray]]:
     """Parse POINT/POLYGON WKT batch -> per-row (xs, ys) vertex arrays.
 

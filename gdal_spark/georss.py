@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .fmt import fmt_xy
 
 _GEORSS_NS = "http://www.georss.org/georss"
@@ -250,9 +251,7 @@ def read_georss(spark: SparkSession, path: str) -> DataFrame:
         [T.StructField("fid", T.LongType()),
          T.StructField("geom_wkt", T.StringType())]
         + [T.StructField(n, T.StringType()) for n in all_fields])
-    desc = spark.createDataFrame(
-        [(p,) for p in paths], "path string").repartition(
-        max(4, min(len(paths), 64)))
+    desc = blockscan.spread(spark, [(p,) for p in paths], "path string")
     cols = [f.name for f in schema.fields]
 
     def scan(batches):

@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
@@ -209,8 +210,7 @@ def read_gif(spark: SparkSession, path: str, raster_id: str | None = None,
     rows = [(k, fr["width"], fr["height"], fr["interlaced"], fr["mcs"],
              fr["data_lo"], fr["data_hi"])
             for k, fr in enumerate(meta["frames"])]
-    desc = spark.createDataFrame(rows, _DESC).repartition(
-        max(4, min(len(rows), 64)))
+    desc = blockscan.spread(spark, rows, _DESC)
 
     def scan(batches):
         for pdf in batches:

@@ -73,6 +73,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 _SEG_SCHEMA = T.StructType([
@@ -642,8 +643,7 @@ def read_grib2(spark: SparkSession, path: str, *, tile_px: int = 256,
                              False, -1, 0,
                              m["R"], m["E"], m["D"], nbits, flip))
     meta = {bi: m for bi, m in enumerate(msgs, start=1)}
-    seg = spark.createDataFrame(rows, _SEG_SCHEMA) \
-        .repartition(max(4, min(len(rows), 256)))
+    seg = blockscan.spread(spark, rows, _SEG_SCHEMA)
     bc = spark.sparkContext.broadcast(meta)
 
     def scan(batches):

@@ -31,11 +31,12 @@ Reference:
     0x26 s32, 0x5A f32, 0xDB f64; byteOrder word 0x00000001 = native
     little-endian.
 
-Spark lowering: ELAS/BYN/PCRaster are stride-offset raw strips (the
-PAux contract: driver reads the KB header, executors pread
-closed-form strips); JDEM rows are fixed-size ASCII records so the
-strip offsets stay closed-form TEXT ranges; ISG rides the asciigrid
-line-parallel scan (spark.read.text + zipindex).  All map-only.
+Spark lowering: ELAS/BYN/PCRaster/Leveller/DIPEx are stride-offset
+raw strips read by the shared block scan (blockscan: the driver reads
+the KB header, executors pread closed-form strips); JDEM rows are
+fixed-size ASCII records so the strip offsets stay closed-form TEXT
+ranges; ISG rides the asciigrid line-parallel scan (spark.read.text +
+zipindex).  All map-only.
 """
 
 from __future__ import annotations
@@ -50,7 +51,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
+from . import blockscan
+from .blockscan import Layout
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 _DESC = T.StructType([
     T.StructField("band", T.IntegerType()),
@@ -59,43 +62,25 @@ _DESC = T.StructType([
 ])
 
 
-def _strip_scan(spark, path, *, W, H, nbands, dtype_of, origin_of,
-                line_stride, gt, rid, zoom, tile_px=256, crs="",
-                nodata=float("nan"), transform=None):
-    """Shared stride-offset band scan: band b's line y lives at
-    `origin_of(b) + y*line_stride` for `W*itemsize` bytes.  One
-    descriptor per (band, strip); map-only."""
-    nty = math.ceil(H / tile_px)
-    rows = [(b, ty, min(tile_px, H - ty * tile_px))
-            for b in range(nbands) for ty in range(nty)]
-    desc = spark.createDataFrame(rows, _DESC).repartition(
-        max(4, min(len(rows), 64)))
+def _read_grid(spark, path, h, offset, *, tile_px, raster_id, zoom):
+    """One-band top-down grid of h["dtype"] at `offset`."""
+    return blockscan.read(
+        spark, Layout(path, h["width"], h["height"], h["dtype"], (offset,)),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=h["geotransform"], tile_px=tile_px, zoom=zoom)
 
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    b = int(r.band)
-                    dt = np.dtype(dtype_of(b))
-                    h = int(r.height)
-                    y0 = int(r.tile_y) * tile_px
-                    lines = []
-                    for i in range(h):
-                        off = origin_of(b) + (y0 + i) * line_stride
-                        lines.append(np.frombuffer(
-                            os.pread(fd, W * dt.itemsize, off), dt))
-                    plane = np.stack(lines).astype(
-                        dt.newbyteorder("="), copy=False)
-                    if transform is not None:
-                        plane = transform(plane)
-                    out += strip_rows(rid, b + 1, int(zoom), int(r.tile_y),
-                                      plane, gt, tile_px, y0=y0,
-                                      nodata=nodata, crs=crs)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
-    return desc.mapInPandas(scan, schema=TILE_SCHEMA)
+def _read_records(spark, path, h, *, tile_px, raster_id, zoom):
+    """ELAS/DIPEx: line records of NBPR bytes at 1024, band b of a line
+    at byte b*xsize*itemsize of its record."""
+    isz = np.dtype(h["dtype"]).itemsize
+    W = h["width"]
+    return blockscan.read(
+        spark, Layout(path, W, h["height"], h["dtype"],
+                      tuple(1024 + b * W * isz for b in range(h["nbands"])),
+                      line_offset=h["line_stride"]),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=h["geotransform"], tile_px=tile_px, zoom=zoom)
 
 
 # ----------------------------------------------------------------- ELAS
@@ -134,16 +119,8 @@ def parse_elas(path: str) -> dict:
 
 def read_elas(spark: SparkSession, path: str, *, tile_px: int = 256,
               raster_id: str | None = None, zoom: int = 0) -> DataFrame:
-    h = parse_elas(path)
-    isz = np.dtype(h["dtype"]).itemsize
-    W = h["width"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    return _strip_scan(
-        spark, path, W=W, H=h["height"], nbands=h["nbands"],
-        dtype_of=lambda b: h["dtype"],
-        origin_of=lambda b: 1024 + b * W * isz,
-        line_stride=h["line_stride"], gt=h["geotransform"],
-        rid=rid, zoom=zoom, tile_px=tile_px)
+    return _read_records(spark, path, parse_elas(path), tile_px=tile_px,
+                         raster_id=raster_id, zoom=zoom)
 
 
 # ------------------------------------------------------------------ BYN
@@ -193,13 +170,8 @@ def parse_byn(path: str) -> dict:
 def read_byn(spark: SparkSession, path: str, *, tile_px: int = 256,
              raster_id: str | None = None, zoom: int = 0) -> DataFrame:
     h = parse_byn(path)
-    isz = np.dtype(h["dtype"]).itemsize
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    return _strip_scan(
-        spark, path, W=h["width"], H=h["height"], nbands=1,
-        dtype_of=lambda b: h["dtype"], origin_of=lambda b: 80,
-        line_stride=h["width"] * isz, gt=h["geotransform"],
-        rid=rid, zoom=zoom, tile_px=tile_px)
+    return _read_grid(spark, path, h, 80, tile_px=tile_px,
+                      raster_id=raster_id, zoom=zoom)
 
 
 # ----------------------------------------------------------------- JDEM
@@ -240,8 +212,7 @@ def read_jdem(spark: SparkSession, path: str, *, tile_px: int = 256,
     nty = math.ceil(h["height"] / tile_px)
     rows = [(0, ty, min(tile_px, h["height"] - ty * tile_px))
             for ty in range(nty)]
-    desc = spark.createDataFrame(rows, _DESC).repartition(
-        max(4, min(len(rows), 16)))
+    desc = blockscan.spread(spark, rows, _DESC)
     gt = h["geotransform"]
     fsize = os.path.getsize(path)
 
@@ -343,14 +314,8 @@ def parse_csf(path: str) -> dict:
 def read_pcraster(spark: SparkSession, path: str, *,
                   tile_px: int = 256, raster_id: str | None = None,
                   zoom: int = 0) -> DataFrame:
-    h = parse_csf(path)
-    isz = np.dtype(h["dtype"]).itemsize
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    return _strip_scan(
-        spark, path, W=h["width"], H=h["height"], nbands=1,
-        dtype_of=lambda b: h["dtype"], origin_of=lambda b: 256,
-        line_stride=h["width"] * isz, gt=h["geotransform"],
-        rid=rid, zoom=zoom, tile_px=tile_px)
+    return _read_grid(spark, path, parse_csf(path), 256, tile_px=tile_px,
+                      raster_id=raster_id, zoom=zoom)
 
 
 # -------------------------------------------------------------- Leveller
@@ -414,13 +379,8 @@ def read_leveller(spark: SparkSession, path: str, *,
                   tile_px: int = 256, raster_id: str | None = None,
                   zoom: int = 0) -> DataFrame:
     h = parse_leveller(path)
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    return _strip_scan(
-        spark, path, W=h["width"], H=h["height"], nbands=1,
-        dtype_of=lambda b: "<f4",
-        origin_of=lambda b: h["data_off"],
-        line_stride=h["width"] * 4, gt=h["geotransform"],
-        rid=rid, zoom=zoom, tile_px=tile_px)
+    return _read_grid(spark, path, dict(h, dtype="<f4"), h["data_off"],
+                      tile_px=tile_px, raster_id=raster_id, zoom=zoom)
 
 
 # ---------------------------------------------------------------- DIPEx
@@ -453,16 +413,8 @@ def parse_dipex(path: str) -> dict:
 
 def read_dipex(spark: SparkSession, path: str, *, tile_px: int = 256,
                raster_id: str | None = None, zoom: int = 0) -> DataFrame:
-    h = parse_dipex(path)
-    isz = np.dtype(h["dtype"]).itemsize
-    W = h["width"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    return _strip_scan(
-        spark, path, W=W, H=h["height"], nbands=h["nbands"],
-        dtype_of=lambda b: h["dtype"],
-        origin_of=lambda b: 1024 + b * W * isz,
-        line_stride=h["line_stride"], gt=h["geotransform"],
-        rid=rid, zoom=zoom, tile_px=tile_px)
+    return _read_records(spark, path, parse_dipex(path), tile_px=tile_px,
+                         raster_id=raster_id, zoom=zoom)
 
 
 # ------------------------------------------------------------------ CTG

@@ -19,7 +19,7 @@ Reference:
     + ySize/2, 0, -ySize).
 
 Spark lowering: fixed-stride raw layouts, so the scan is the
-descriptor-parallel MAP-ONLY pattern (ehdr/bmp family): the driver
+descriptor-parallel MAP-ONLY block scan (blockscan): the driver
 reads 56/100 header bytes and emits one strip descriptor per
 tile-row; a bottom-up image strip [y0, y0+h) is the contiguous file
 range [(ny-y0-h)*stride, (ny-y0)*stride), one pread + one in-memory
@@ -42,22 +42,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
+from . import blockscan
+from .blockscan import Layout
 
 GSBG_NODATA = 1.701410009187828e+38
 GSBG_HEADER = 56
 GS7BG_HEADER = 100
-
-_SEG_SCHEMA = T.StructType([
-    T.StructField("tile_y", T.IntegerType()),
-    T.StructField("offset", T.LongType()),
-    T.StructField("nbytes", T.LongType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("y0", T.IntegerType()),
-])
-
 
 # ---------------------------------------------------------------- headers
 def parse_gsbg(path: str) -> dict:
@@ -115,42 +106,14 @@ def parse_gs7bg(path: str) -> dict:
 def _read_bottom_up(spark: SparkSession, path: str, hdr: dict, *,
                     tile_px: int, raster_id: str | None, zoom: int,
                     crs: str) -> DataFrame:
-    nrows, ncols = hdr["nrows"], hdr["ncols"]
-    dtype, data_off = hdr["dtype"], hdr["data_offset"]
-    nodata, gt = hdr["nodata"], hdr["geotransform"]
-    isz = np.dtype(dtype).itemsize
-    stride = ncols * isz
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(nrows / tile_px)
-
-    rows = []
-    for ty in range(nty):
-        y0 = ty * tile_px
-        h = min(tile_px, nrows - y0)
-        rows.append((ty, data_off + (nrows - y0 - h) * stride,
-                     h * stride, h, y0))
-    seg = spark.createDataFrame(rows, _SEG_SCHEMA) \
-        .repartition(max(4, min(len(rows), 256)))
-
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    raw = os.pread(fd, int(r.nbytes), int(r.offset))
-                    h = int(r.height)
-                    plane = np.frombuffer(
-                        raw, dtype=np.dtype(dtype).newbyteorder("<")
-                    ).reshape(h, ncols)[::-1]
-                    out += strip_rows(
-                        rid, 1, int(zoom), int(r.tile_y),
-                        plane.astype(np.dtype(dtype), copy=False), gt,
-                        tile_px, y0=int(r.y0), nodata=float(nodata),
-                        crs=crs, dtype=dtype)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+    dtype = hdr["dtype"]
+    return blockscan.read(
+        spark, Layout(path, hdr["ncols"], hdr["nrows"], dtype,
+                      (hdr["data_offset"],), byteorder="<", bottom_up=True,
+                      out_dtype=dtype),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=hdr["geotransform"], tile_px=tile_px, zoom=zoom,
+        nodata=float(hdr["nodata"]), crs=crs)
 
 
 def read_gsbg(spark: SparkSession, path: str, *, tile_px: int = 256,

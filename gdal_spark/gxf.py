@@ -29,8 +29,8 @@ import os
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 
@@ -155,11 +155,8 @@ def read_gxf(spark: SparkSession, path: str, *, tile_px: int = 256,
     nty = math.ceil(H / tile_px)
     rows = [(0, ty, min(tile_px, H - ty * tile_px))
             for ty in range(nty)]
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 16)))
+    desc = blockscan.spread(spark, rows,
+                            "band int, tile_y int, height int")
 
     def parse_scanline(lines, span):
         l0, f0, l1, f1 = span

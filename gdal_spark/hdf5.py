@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 from .multidim import MDArray
 
 UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -599,8 +600,7 @@ def read_hdf5_array(spark: SparkSession, path: str, name: str, *,
             raise NotImplementedError(f"HDF5 filter id {fid}")
     itemsize = dt.itemsize
 
-    seg = spark.createDataFrame(plan, _CHUNK_PLAN).repartition(
-        max(4, min(len(plan), 256)))
+    seg = blockscan.spread(spark, plan, _CHUNK_PLAN)
     out_schema = T.StructType(
         [T.StructField(n, T.LongType()) for n in dims]
         + [T.StructField("value", T.DoubleType())])

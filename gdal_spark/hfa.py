@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 _EPT = ["u1", "u2", "u4", "u8", "s8", "u16", "s16", "u32", "s32",
@@ -425,8 +426,7 @@ def read_hfa(spark: SparkSession, path: str, *,
                 rows.append((bi, k % bpr, k // bpr, off, size, comp,
                              valid, False))
 
-    desc = spark.createDataFrame(rows, _DESC).repartition(
-        max(4, min(len(rows), 256)))
+    desc = blockscan.spread(spark, rows, _DESC)
     bm = band_meta
     ige = ige_path
 

@@ -18,26 +18,24 @@ Reference:
     CoordBounds edge coordinates, .grf GeoRefCorners; the .mp# body
     is plain top-down raw rows.
 
-Spark lowering: ILWIS and verbatim SGI are raw strips (ehdr /
-bottom-up pread); RLE SGI scanlines are independent byte ranges, so
-the descriptor carries (rowStart, rowSize) per line and the kernel
-decodes its own lines — the format's own per-scanline index IS the
-split table (same shape as the GeoTIFF strip scan).  Terragen is a
-bottom-up int16 strip scan.  All map-only.
+Spark lowering: ILWIS, verbatim SGI and Terragen are raw strips of
+the shared block scan (bottom-up for SGI and Terragen); RLE SGI
+scanlines are independent byte ranges, so the layout carries the
+format's own (rowStart, rowSize) table and a strip reads from its first
+line's start to its last line's end, decoding its own lines.  All
+map-only.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
+from . import blockscan
+from .blockscan import Layout
 
 # ------------------------------------------------------------------ SGI
 
@@ -89,49 +87,28 @@ def read_sgi(spark: SparkSession, path: str, *, tile_px: int = 256,
              raster_id: str | None = None, zoom: int = 0) -> DataFrame:
     h = parse_sgi(path)
     W, H, nb = h["width"], h["height"], h["nbands"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(H / tile_px)
-    rows = [(b, ty, min(tile_px, H - ty * tile_px))
-            for b in range(nb) for ty in range(nty)]
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 64)))
-    rle = h["rle"]
-    tables = h["tables"]
+    decode = table = None
+    if h["rle"]:
+        table = h["tables"]
 
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    b = int(r.band)
-                    hh = int(r.height)
-                    y0 = int(r.tile_y) * tile_px
-                    lines = []
-                    for i in range(hh):
-                        fy = H - 1 - (y0 + i)   # bottom-up storage
-                        if rle:
-                            st = int(tables[0][fy + b * H])
-                            sz = int(tables[1][fy + b * H])
-                            lines.append(_sgi_rle_decode(
-                                os.pread(fd, sz, st), W))
-                        else:
-                            off = 512 + fy * W + b * W * H
-                            lines.append(np.frombuffer(
-                                os.pread(fd, W, off), np.uint8))
-                    plane = np.stack(lines)
-                    # every tile carries the unshifted identity transform
-                    out += [tile_row(rid, b + 1, int(zoom), tx,
-                                     int(r.tile_y), plane[:, x:x + tile_px],
-                                     [0.0, 1.0, 0.0, 0.0, 0.0, -1.0],
-                                     dtype="uint8")
-                            for tx, x in enumerate(range(0, W, tile_px))]
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
+        def decode(planes, s):
+            # stored lines line0+h-1 .. line0, i.e. the strip top-down
+            b = s.bands[0]
+            lines = []
+            for fy in range(s.line0 + s.h - 1, s.line0 - 1, -1):
+                st = int(table[0][b * H + fy]) - s.offset
+                lines.append(_sgi_rle_decode(
+                    s.raw[st:st + int(table[1][b * H + fy])], W))
+            return [(b + 1, np.stack(lines))]
 
-    return desc.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(path, W, H, "u1",
+                      tuple(512 + b * W * H for b in range(nb)),
+                      bottom_up=True, out_dtype="uint8", decode=decode,
+                      line_table=table),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=[0.0, 1.0, 0.0, 0.0, 0.0, -1.0], tile_px=tile_px,
+        zoom=zoom)
 
 
 # ------------------------------------------------------------- Terragen
@@ -181,49 +158,14 @@ def read_terragen(spark: SparkSession, path: str, *,
                   zoom: int = 0) -> DataFrame:
     """Int16 band (value scale SCAL*hs/65536 carried in the module's
     parse dict, the reference's band metadata) — bottom-up strips."""
-    from .gridmisc import _strip_scan
-
     h = parse_terragen(path)
     W, H = h["width"], h["height"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
     scal = h["scal"]
-    gt = [0.0, scal[0], 0.0, H * scal[1], 0.0, -scal[1]]
-
-    # bottom-up: flip via origin at the LAST row and negative stride
-    # is not expressible in a pread; use per-line seek via transform
-    def origin_of(b):
-        return h["data_off"]
-
-    # custom: strip at rows [y0, y0+h) maps to file rows
-    # [H-y0-h, H-y0) contiguous -> one pread + flip (gsg pattern)
-    nty = math.ceil(H / tile_px)
-    rows = [(0, ty, min(tile_px, H - ty * tile_px))
-            for ty in range(nty)]
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 16)))
-    data_off = h["data_off"]
-
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    hh = int(r.height)
-                    y0 = int(r.tile_y) * tile_px
-                    off = data_off + (H - y0 - hh) * W * 2
-                    raw = os.pread(fd, hh * W * 2, off)
-                    plane = np.frombuffer(raw, "<i2").reshape(
-                        hh, W)[::-1]
-                    out += strip_rows(rid, 1, int(zoom), int(r.tile_y),
-                                      plane.astype(np.int16, copy=False),
-                                      gt, tile_px, y0=y0)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return desc.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(path, W, H, "<i2", (h["data_off"],), bottom_up=True),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=[0.0, scal[0], 0.0, H * scal[1], 0.0, -scal[1]],
+        tile_px=tile_px, zoom=zoom)
 
 
 # ---------------------------------------------------------------- ILWIS

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import blockscan
 from . import raster as RST
 
 
@@ -284,9 +285,7 @@ def identify(spark: SparkSession, paths: list[str],
     only, so identifying 10^7 objects is a map over descriptors."""
     import pandas as pd
 
-    seg = spark.createDataFrame(
-        [(p,) for p in paths], "path string").repartition(
-        max(4, min(len(paths), 256)))
+    seg = blockscan.spread(spark, [(p,) for p in paths], "path string")
     schema = "path string, driver string"
 
     def run(batches):

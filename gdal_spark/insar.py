@@ -14,21 +14,20 @@ Reference:
     (BIL/BIP/BSQ)/BYTE_ORDER ('l'/'b'); the pixel file is the .xml
     path minus its extension.
 
-Spark lowering: both are fixed-stride raw layouts — the shared
-stride-offset strip scan (gridmisc) with per-band line origins; BIP
-goes through a per-line interleaved decode.  Map-only.
+Spark lowering: both are fixed-stride raw layouts read by the shared
+block scan (blockscan) with per-band line origins.  Map-only.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import xml.etree.ElementTree as ET
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from .gridmisc import _strip_scan
+from . import blockscan
+from .blockscan import Layout
 
 _ROIPAC_EXT = {
     # ext -> (numpy dtype, bands, rmg_bil)
@@ -69,14 +68,13 @@ def read_roipac(spark: SparkSession, path: str, *, tile_px: int = 256,
     h = parse_roipac(path)
     W = h["width"]
     isz = np.dtype(h["dtype"]).itemsize
-    stride = (2 * W * isz) if h["rmg"] else (W * isz)
-    rid = raster_id or os.path.basename(path)
-    return _strip_scan(
-        spark, path, W=W, H=h["height"], nbands=h["nbands"],
-        dtype_of=lambda b: h["dtype"],
-        origin_of=lambda b: b * W * isz,     # RMG: band 2 after band 1
-        line_stride=stride, gt=h["geotransform"],
-        rid=rid, zoom=zoom, tile_px=tile_px)
+    # RMG: a line holds band 1's samples, then band 2's
+    return blockscan.read(
+        spark, Layout(path, W, h["height"], h["dtype"],
+                      tuple(b * W * isz for b in range(h["nbands"])),
+                      line_offset=(2 * W * isz) if h["rmg"] else (W * isz)),
+        raster_id=raster_id or os.path.basename(path),
+        geotransform=h["geotransform"], tile_px=tile_px, zoom=zoom)
 
 
 _ISCE_TYPES = {"BYTE": "u1", "CHAR": "u1", "SHORT": "i2",
@@ -113,36 +111,18 @@ def read_isce(spark: SparkSession, path: str, *, tile_px: int = 256,
     dt = np.dtype(h["dtype"]).newbyteorder(h["byteorder"])
     isz = dt.itemsize
     scheme = h["scheme"]
-    data = h["data"]
-    rid = raster_id or os.path.basename(data)
-
     if scheme == "BSQ":
-        return _strip_scan(
-            spark, data, W=W, H=H, nbands=NB,
-            dtype_of=lambda b: str(dt),
-            origin_of=lambda b: b * W * H * isz,
-            line_stride=W * isz, gt=[0, 1, 0, 0, 0, 1],
-            rid=rid, zoom=zoom, tile_px=tile_px)
-    if scheme == "BIL":
-        return _strip_scan(
-            spark, data, W=W, H=H, nbands=NB,
-            dtype_of=lambda b: str(dt),
-            origin_of=lambda b: b * W * isz,
-            line_stride=W * NB * isz, gt=[0, 1, 0, 0, 0, 1],
-            rid=rid, zoom=zoom, tile_px=tile_px)
-    # BIP: read interleaved lines, de-interleave in a transform —
-    # one pread per strip (the ehdr BIP contract)
-    if NB == 1:
-        return _strip_scan(
-            spark, data, W=W, H=H, nbands=1,
-            dtype_of=lambda b: str(dt), origin_of=lambda b: 0,
-            line_stride=W * isz, gt=[0, 1, 0, 0, 0, 1],
-            rid=rid, zoom=zoom, tile_px=tile_px)
-    from .ehdr import read_raw
-
-    raw = dict(nrows=H, ncols=W, nbands=NB, dtype=str(dt.base),
-               interleave="bip", skip=0,
-               geotransform=[0, 1, 0, 0, 0, 1],
-               byteorder=h["byteorder"], crs="")
-    return read_raw(spark, data, raw, tile_px=tile_px,
-                    raster_id=rid, zoom=zoom)
+        offs, pix, line = [b * W * H * isz for b in range(NB)], isz, W * isz
+    elif scheme == "BIL":
+        offs, pix, line = [b * W * isz for b in range(NB)], isz, W * NB * isz
+    else:  # BIP
+        offs, pix, line = [b * isz for b in range(NB)], NB * isz, W * NB * isz
+    # multi-band BIP keeps the stored byte order in its tiles and
+    # zero-fills past EOF (the ehdr raw contract)
+    bip = scheme not in ("BSQ", "BIL") and NB > 1
+    return blockscan.read(
+        spark, Layout(h["data"], W, H, str(dt), tuple(offs),
+                      pixel_offset=pix, line_offset=line, zero_fill=bip,
+                      out_dtype=str(dt.base) if bip else None),
+        raster_id=raster_id or os.path.basename(h["data"]),
+        geotransform=[0, 1, 0, 0, 0, 1], tile_px=tile_px, zoom=zoom)

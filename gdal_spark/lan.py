@@ -14,7 +14,7 @@ Reference:
 
 Spark lowering: 8/16-bit is the ehdr BIL raw family with skip=128 —
 map-only strip preads.  4-bit packs two pixels per byte, so a band
-line is ncols/2 contiguous bytes: the same strip descriptors with an
+line is ncols/2 contiguous bytes: the same block scan with an
 in-kernel nibble unpack (vectorized shifts — the bmp.py sub-byte
 pattern).  Zero shuffles either way.
 """
@@ -27,6 +27,8 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
+from .blockscan import Layout
 from .ehdr import read_raw
 
 HEADER_SIZE = 128
@@ -111,51 +113,23 @@ def read_lan(spark: SparkSession, path: str, *, tile_px: int = 256,
         return read_raw(spark, path, raw, tile_px=tile_px,
                         raster_id=rid, zoom=zoom)
 
-    # 4-bit: a band line is ncols//2 packed bytes, BIL interleaved
-    import math
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
-
-    nrows, ncols, nbands = h["nrows"], h["ncols"], h["nbands"]
-    gt = h["geotransform"]
+    # 4-bit: a band line is (ncols+1)//2 packed bytes, BIL interleaved
+    ncols, nbands = h["ncols"], h["nbands"]
     line_b = (ncols + 1) // 2
-    nty = math.ceil(nrows / tile_px)
-    rows = []
-    for ty in range(nty):
-        hh = min(tile_px, nrows - ty * tile_px)
-        for b in range(nbands):
-            rows.append((b, ty, hh))
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 64)))
 
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    hh = int(r.height)
-                    y0 = int(r.tile_y) * tile_px
-                    lines = []
-                    for i in range(hh):
-                        off = HEADER_SIZE + \
-                            ((y0 + i) * nbands + int(r.band)) * line_b
-                        lines.append(np.frombuffer(
-                            os.pread(fd, line_b, off), np.uint8))
-                    packed = np.stack(lines)
-                    # HIGH nibble first (:242-258)
-                    unp = np.empty((hh, line_b * 2), np.uint8)
-                    unp[:, 0::2] = packed >> 4
-                    unp[:, 1::2] = packed & 0x0F
-                    out += strip_rows(rid, int(r.band) + 1, int(zoom),
-                                      int(r.tile_y), unp[:, :ncols], gt,
-                                      tile_px, y0=y0)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
+    def decode(planes, strip):
+        out = []
+        for b, packed in planes:
+            # HIGH nibble first (:242-258)
+            unp = np.empty((packed.shape[0], line_b * 2), np.uint8)
+            unp[:, 0::2] = packed >> 4
+            unp[:, 1::2] = packed & 0x0F
+            out.append((b, unp[:, :ncols]))
+        return out
 
-    return desc.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(path, line_b, h["nrows"], "u1",
+                      tuple(HEADER_SIZE + b * line_b for b in range(nbands)),
+                      line_offset=nbands * line_b, decode=decode),
+        raster_id=rid, geotransform=h["geotransform"], tile_px=tile_px,
+        zoom=zoom)

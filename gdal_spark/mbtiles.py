@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .jpeg import decode_jpeg, encode_jpeg
 from .png import decode_png, encode_png
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
@@ -94,9 +95,7 @@ def read_mbtiles(spark: SparkSession, path: str, *, zoom: int | None = None,
         lo, hi, _ = extents[z]
         for a in range(lo, hi + 1, cols_per_batch):
             ranges.append((z, a, min(a + cols_per_batch - 1, hi)))
-    plan = spark.createDataFrame(
-        ranges, "zoom int, col_lo int, col_hi int"
-    ).repartition(max(4, min(len(ranges), 256)))
+    plan = blockscan.spread(spark, ranges, "zoom int, col_lo int, col_hi int")
 
     def scan(batches):
         con = _ro_connect(path)

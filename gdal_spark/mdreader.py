@@ -40,6 +40,8 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
+
 #: gdal_mdreader.h:42-48
 MD_CLOUDCOVER_NA = "999"
 MD_DATETIMEFORMAT = "%Y-%m-%d %H:%M:%S"
@@ -299,9 +301,7 @@ def read_scene_metadata(spark: SparkSession, paths: list[str]) -> DataFrame:
     KB-sized sidecars; no shuffle at any fleet size."""
     import pandas as pd
 
-    seg = spark.createDataFrame(
-        [(p,) for p in paths], "path string").repartition(
-        max(4, min(len(paths), 256)))
+    seg = blockscan.spread(spark, [(p,) for p in paths], "path string")
 
     def run(batches):
         for pdf in batches:

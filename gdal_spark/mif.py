@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .fmt import fmt_coord as _F
 from .geometry import parse_wkt
 
@@ -182,8 +183,7 @@ def read_mif(spark: SparkSession, path: str) -> DataFrame:
     if not files:
         raise FileNotFoundError(f"no .mif files under {path}")
     schema, cols, delim = mif_schema(files[0])
-    plan = spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(max(4, min(len(files), 256)))
+    plan = blockscan.spread(spark, [(f,) for f in files], "path string")
 
     def scan(batches):
         for pdf in batches:

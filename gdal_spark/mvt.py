@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 from . import geometry as GM
 
 CMD_MOVETO, CMD_LINETO, CMD_CLOSEPATH = 1, 2, 7  # mvt_tile.h:65-67
@@ -252,16 +253,6 @@ def _clip_ring(xs, ys, lo, hi):
     xs = np.asarray([p[0] for p in pts] + [pts[0][0]])
     ys = np.asarray([p[1] for p in pts] + [pts[0][1]])
     return xs, ys
-
-
-def _quantize(xs, ys, x0, ytop, size, extent):
-    qx = np.rint((xs - x0) / size * extent).astype(np.int64)
-    qy = np.rint((ytop - ys) / size * extent).astype(np.int64)
-    if len(qx) > 1:
-        keep = np.ones(len(qx), dtype=bool)
-        keep[1:] = (np.diff(qx) != 0) | (np.diff(qy) != 0)
-        qx, qy = qx[keep], qy[keep]
-    return qx, qy
 
 
 # ------------------------------------------------------------ encode
@@ -628,9 +619,8 @@ def read_mvt_mbtiles(spark: SparkSession, path: str,
         while c <= hi:
             windows.append((z, c, min(c + step - 1, hi)))
             c += step
-    seg = spark.createDataFrame(
-        windows or [(0, 0, -1)], "z int, c0 int, c1 int") \
-        .repartition(max(4, min(len(windows), 64)))
+    seg = blockscan.spread(spark, windows or [(0, 0, -1)],
+                           "z int, c0 int, c1 int")
 
     def scan(batches):
         con = sqlite3.connect(f"file:{path}?mode=ro&immutable=1",

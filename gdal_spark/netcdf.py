@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 from .multidim import MDArray
 
 NC_BYTE, NC_CHAR, NC_SHORT, NC_INT, NC_FLOAT, NC_DOUBLE = 1, 2, 3, 4, 5, 6
@@ -215,8 +216,7 @@ def read_netcdf(spark: SparkSession, path: str, var: str, *,
     n0_total = shape[0]
     strips = [(i, min(rows_per_strip, n0_total - i))
               for i in range(0, n0_total, rows_per_strip)]
-    seg = spark.createDataFrame(strips or [(0, 0)], _STRIP_SCHEMA) \
-        .repartition(max(4, min(len(strips), 256)))
+    seg = blockscan.spread(spark, strips or [(0, 0)], _STRIP_SCHEMA)
 
     dim_names = v["dims"] if v["dims"] else ["i"]
     scale = float(v["atts"].get("scale_factor", 1.0)) if unpack else 1.0

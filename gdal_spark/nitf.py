@@ -37,6 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
@@ -317,9 +318,8 @@ def read_nitf(spark: SparkSession, path: str, *, image: int = 0,
                 start = seg_start + (bx_ + by_ * bpr) * block_off \
                     + b * band_off
                 rows.append((b, bx_, by_, start))
-    seg = spark.createDataFrame(
-        rows, "band int, bx int, by int, offset long"
-    ).repartition(max(4, min(len(rows), 256)))
+    seg = blockscan.spread(
+        spark, rows, "band int, bx int, by int, offset long")
     np_dt = np.dtype(dtype).newbyteorder(">")
 
     def scan(batches):

@@ -22,16 +22,14 @@ derive from the SAME strip pread — map-only.
 
 from __future__ import annotations
 
-import math
 import os
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
+from . import blockscan
+from .blockscan import Layout
 
 NODATA = -1.0e37
 
@@ -141,45 +139,25 @@ def read_grd(spark: SparkSession, path: str, *, tile_px: int = 256,
              raster_id: str | None = None, zoom: int = 0) -> DataFrame:
     """Four bands: 1-3 = ramp RGB (uint8), 4 = Float32 Z."""
     h = parse_grd(path)
-    W, H = h["width"], h["height"]
     zmin, zmax = h["zmin"], h["zmax"]
     scale = (zmax - zmin) / 65534.0
     cmap = _load_colors(zmin, zmax, h["inflections"])
-    gt = h["geotransform"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(H / tile_px)
-    rows = [(0, ty, min(tile_px, H - ty * tile_px))
-            for ty in range(nty)]
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 64)))
 
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    hh = int(r.height)
-                    y0 = int(r.tile_y) * tile_px
-                    raw = os.pread(fd, hh * W * 2, 1024 + y0 * W * 2)
-                    u16 = np.frombuffer(raw, "<u2").reshape(hh, W)
-                    z = (zmin + (u16.astype(np.float64) - 1)
-                         * scale).astype(np.float32)
-                    z[u16 == 0] = NODATA
-                    rgb = cmap[u16 >> 4]
-                    for band, plane in enumerate(
-                            (rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2], z),
-                            start=1):
-                        out += strip_rows(
-                            rid, band, int(zoom), int(r.tile_y), plane, gt,
-                            tile_px, y0=y0,
-                            nodata=NODATA if band == 4 else float("nan"))
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
+    def decode(planes, strip):
+        u16 = planes[0][1]
+        z = (zmin + (u16.astype(np.float64) - 1)
+             * scale).astype(np.float32)
+        z[u16 == 0] = NODATA
+        rgb = cmap[u16 >> 4]
+        return [(1, rgb[:, :, 0]), (2, rgb[:, :, 1]), (3, rgb[:, :, 2]),
+                (4, z)]
 
-    return desc.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(path, h["width"], h["height"], "<u2", (1024,),
+                      decode=decode),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=h["geotransform"], tile_px=tile_px, zoom=zoom,
+        nodata={4: NODATA})
 
 
 def parse_grc(path: str) -> dict:
@@ -213,13 +191,8 @@ def parse_grc(path: str) -> dict:
 
 def read_grc(spark: SparkSession, path: str, *, tile_px: int = 256,
              raster_id: str | None = None, zoom: int = 0) -> DataFrame:
-    from .gridmisc import _strip_scan
-
     h = parse_grc(path)
-    isz = np.dtype(h["dtype"]).itemsize
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    return _strip_scan(
-        spark, path, W=h["width"], H=h["height"], nbands=1,
-        dtype_of=lambda b: h["dtype"], origin_of=lambda b: 1024,
-        line_stride=h["width"] * isz, gt=h["geotransform"],
-        rid=rid, zoom=zoom, tile_px=tile_px)
+    return blockscan.read(
+        spark, Layout(path, h["width"], h["height"], h["dtype"], (1024,)),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=h["geotransform"], tile_px=tile_px, zoom=zoom)

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .mvt import _read_varint, _unzz, _varint, _zz
 
 
@@ -244,9 +245,7 @@ def read_osm_pbf(spark: SparkSession, path: str,
     }[layer]
     blocks = [(o, s) for o, s, t in scan_blocks(path) if t == "OSMData"]
 
-    seg = spark.createDataFrame(blocks or [(0, 0)],
-                                "off long, size long") \
-        .repartition(max(4, min(max(len(blocks), 1), 256)))
+    seg = blockscan.spread(spark, blocks or [(0, 0)], "off long, size long")
 
     def scan(batches):
         with open(path, "rb") as f:

@@ -22,20 +22,19 @@ Reference: gdal/frmts/pcidsk/sdk/ —
 The tiled-channel form (/SIS= system blocks) is not implemented.
 
 Spark lowering: driver reads the KB headers; executors pread row
-strips (map-only, zero shuffles). The sink writes the file/channel
-headers driver-side and pwrites BAND-interleaved strips in
-parallel."""
+strips through the shared block scan (map-only, zero shuffles). The
+sink writes the file/channel headers driver-side and pwrites
+BAND-interleaved strips in parallel."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
+from . import blockscan
+from .blockscan import Layout
 
 _TYPES = {"8U": "uint8", "16S": "int16", "16U": "uint16",
           "32R": "float32", "32S": "int32", "32U": "uint32",
@@ -125,62 +124,19 @@ def parse_pcidsk(path: str) -> dict:
 
 def read_pcidsk(spark: SparkSession, path: str, *, tile_px: int = 256,
                 raster_id: str | None = None, zoom: int = 0) -> DataFrame:
+    """One layout per channel (channels may differ in type and file);
+    short reads zero-fill."""
     info = parse_pcidsk(path)
     W, H = info["width"], info["height"]
-    chans = info["channels"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(H / tile_px)
-
-    rows = []
-    for b, ch in enumerate(chans):
-        for ty in range(nty):
-            h = min(tile_px, H - ty * tile_px)
-            start = ch["start"] + ty * tile_px * ch["line_offset"]
-            rows.append((b, ty, start, h * ch["line_offset"], h))
-    seg = spark.createDataFrame(
-        rows, "band int, tile_y int, offset long, nbytes long, height int"
-    ).repartition(max(4, min(len(rows), 256)))
-    bchans = chans  # closure
-
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            handles = {}
-            for r in pdf.itertuples(index=False):
-                ch = bchans[int(r.band)]
-                fd = handles.get(ch["path"])
-                if fd is None:
-                    fd = os.open(ch["path"], os.O_RDONLY)
-                    handles[ch["path"]] = fd
-                want = int(r.nbytes)
-                raw = os.pread(fd, want, int(r.offset))
-                if len(raw) < want:
-                    raw = raw + b"\0" * (want - len(raw))
-                h = int(r.height)
-                dtype = ch["dtype"]
-                isz = np.dtype(dtype).itemsize
-                buf = np.frombuffer(raw, np.uint8) \
-                    .reshape(h, ch["line_offset"])
-                step = ch["pixel_offset"]
-                if step == isz:
-                    plane = np.ascontiguousarray(
-                        buf[:, :W * isz]).view(
-                        np.dtype(dtype).newbyteorder("<")).reshape(h, W)
-                else:
-                    plane = np.ascontiguousarray(
-                        buf[:, :W * step].reshape(h, W, step)[:, :, :isz]
-                    ).reshape(h, W * isz).view(
-                        np.dtype(dtype).newbyteorder("<")).reshape(h, W)
-                out += strip_rows(
-                    rid, int(r.band) + 1, int(zoom), int(r.tile_y),
-                    plane.astype(np.dtype(dtype), copy=False),
-                    (0.0, 1.0, 0.0, 0.0, 0.0, 1.0), tile_px,
-                    y0=int(r.tile_y) * tile_px, dtype=dtype)
-            for fd in handles.values():
-                os.close(fd)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, [Layout(ch["path"], W, H, ch["dtype"], (ch["start"],),
+                       pixel_offset=ch["pixel_offset"],
+                       line_offset=ch["line_offset"], byteorder="<",
+                       zero_fill=True, out_dtype=ch["dtype"])
+                for ch in info["channels"]],
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=(0.0, 1.0, 0.0, 0.0, 0.0, 1.0), tile_px=tile_px,
+        zoom=zoom)
 
 
 def write_pcidsk(tiles: DataFrame, path: str, *,

@@ -30,13 +30,13 @@ on.
 
 Spark lowering: the driver parses the KB label; executors pread
 strip/tile byte ranges in mapInPandas — map-only, zero shuffles,
-arbitrary strides resolved by one numpy strided view per strip.
+arbitrary strides resolved by one numpy strided view per strip (the
+shared block scan, blockscan).
 The ISIS3 GeoTIFF-backed form delegates to the engine's
 distributed GeoTIFF scan."""
 
 from __future__ import annotations
 
-import math
 import os
 import re
 import struct
@@ -45,7 +45,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
+from . import blockscan
+from .blockscan import Layout
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 NULL1 = 0.0
 NULL2 = -32768.0
@@ -557,89 +559,33 @@ def parse_isis3(path: str) -> dict:
 
 
 def _strided_scan(spark, info, *, tile_px, raster_id, zoom):
-    """Generic strip scan for bsq/bil/bip layouts with line-prefix
-    bytes; short preads zero-fill (truncated fixtures)."""
+    """Strip scan for bsq/bil/bip layouts with line-prefix bytes; short
+    reads zero-fill (truncated fixtures)."""
     W, H, nb = info["width"], info["height"], info["nbands"]
-    dtype = info["dtype"]
-    isz = np.dtype(dtype).itemsize
-    np_dt = np.dtype(dtype).newbyteorder(info["byteorder"])
+    isz = np.dtype(info["dtype"]).itemsize
     layout = info["layout"]
+    # the line prefix is folded into `skip` (the reference's ParseImage
+    # adds nLinePrefixBytes there), so each stored line is
+    # [data][prefix-of-next-line]
     prefix = info["prefix_bytes"]
-    skip = info["skip"]
-    gt = info["geotransform"]
-    nodata, crs = info["nodata"], info["crs"]
-    data_path = info["data_path"]
-    rid = raster_id or os.path.splitext(os.path.basename(data_path))[0]
-    nty = math.ceil(H / tile_px)
-
     if layout == "bip":
-        pixel_off = isz * nb
-        line_off = prefix + pixel_off * W
-        band_off = isz
+        pixel_off, line_off, band_off = isz * nb, prefix + isz * nb * W, isz
     elif layout == "bsq":
-        pixel_off = isz
-        line_off = prefix + isz * W
+        pixel_off, line_off = isz, prefix + isz * W
         band_off = line_off * H
     else:  # bil
-        pixel_off = isz
-        band_off = isz * W
-        line_off = prefix + band_off * nb
-
-    rows = []
-    for ty in range(nty):
-        h = min(tile_px, H - ty * tile_px)
-        if layout == "bsq":
-            for b in range(nb):
-                start = skip + b * band_off + ty * tile_px * line_off
-                rows.append((b, ty, start, h * line_off, h))
-        else:
-            start = skip + ty * tile_px * line_off
-            rows.append((-1, ty, start, h * line_off, h))
-    seg = spark.createDataFrame(
-        rows, "band int, tile_y int, offset long, nbytes long, height int"
-    ).repartition(max(4, min(len(rows), 256)))
-
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            fd = os.open(data_path, os.O_RDONLY)
-            for r in pdf.itertuples(index=False):
-                want = int(r.nbytes)
-                raw = os.pread(fd, want, int(r.offset))
-                if len(raw) < want:
-                    raw = raw + b"\0" * (want - len(raw))
-                h = int(r.height)
-                buf = np.frombuffer(raw, np.uint8).reshape(h, line_off)
-                # the line prefix is folded into `skip` (the
-                # reference's ParseImage adds nLinePrefixBytes there),
-                # so each strip row is [data][prefix-of-next-row]
-                if layout == "bsq":
-                    planes = [(int(r.band) + 1, np.ascontiguousarray(
-                        buf[:, :W * isz]).view(np_dt))]
-                elif layout == "bil":
-                    planes = [
-                        (b + 1, np.ascontiguousarray(
-                            buf[:, b * band_off:
-                                (b + 1) * band_off]).view(np_dt))
-                        for b in range(nb)]
-                else:  # bip
-                    body = np.ascontiguousarray(
-                        buf[:, :W * pixel_off]) \
-                        .reshape(h, W, nb, isz)
-                    planes = [(b + 1, np.ascontiguousarray(
-                        body[:, :, b, :]).reshape(h, W * isz).view(np_dt))
-                        for b in range(nb)]
-                for band, plane in planes:
-                    out += strip_rows(
-                        rid, band, int(zoom), int(r.tile_y),
-                        plane.reshape(h, W).astype(np.dtype(dtype),
-                                                   copy=False),
-                        gt, tile_px, y0=int(r.tile_y) * tile_px,
-                        nodata=float(nodata), crs=crs, dtype=dtype)
-            os.close(fd)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+        pixel_off, line_off, band_off = isz, prefix + isz * W * nb, isz * W
+    data_path = info["data_path"]
+    return blockscan.read(
+        spark, Layout(data_path, W, H, info["dtype"],
+                      tuple(info["skip"] + b * band_off for b in range(nb)),
+                      pixel_offset=pixel_off, line_offset=line_off,
+                      byteorder=info["byteorder"], zero_fill=True,
+                      out_dtype=info["dtype"]),
+        raster_id=raster_id or os.path.splitext(
+            os.path.basename(data_path))[0],
+        geotransform=info["geotransform"], tile_px=tile_px, zoom=zoom,
+        nodata=float(info["nodata"]), crs=info["crs"])
 
 
 def read_pds(spark: SparkSession, path: str, *, tile_px: int = 256,
@@ -730,9 +676,8 @@ def read_isis3(spark: SparkSession, path: str, *, tile_px: int = 256,
             for tx in range(bpr):
                 off = skip + (b * bpc + ty) * row_stride + tx * tile_bytes
                 rows.append((b, tx, ty, off))
-    seg = spark.createDataFrame(
-        rows, "band int, tile_x int, tile_y int, offset long"
-    ).repartition(max(4, min(len(rows), 256)))
+    seg = blockscan.spread(
+        spark, rows, "band int, tile_x int, tile_y int, offset long")
 
     def scan(batches):
         for pdf in batches:

@@ -74,10 +74,6 @@ def bng_forward_cols(lon: Column, lat: Column):
     return bng_forward(_ColBackend, lon, lat)
 
 
-def bng_inverse_cols(e: Column, n: Column):
-    return bng_inverse(_ColBackend, e, n)
-
-
 def to_bng(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
            keep: list[str] | None = None) -> DataFrame:
     """WGS84 -> EPSG:27700 as a staged plan: one Project per pipeline
@@ -116,10 +112,6 @@ def bng_forward_sql(lon_expr: str, lat_expr: str):
     full pipeline is multiplicative — for an oracle query prefer the
     staged step builders below with one CTE per step."""
     return bng_forward(_SqlBackend, _Sql(lon_expr), _Sql(lat_expr))
-
-
-def bng_inverse_sql(e_expr: str, n_expr: str):
-    return bng_inverse(_SqlBackend, _Sql(e_expr), _Sql(n_expr))
 
 
 def bng_tm_forward_sql(lon_expr: str, lat_expr: str):

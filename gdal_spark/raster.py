@@ -654,10 +654,10 @@ def mask_band(tiles: DataFrame, dst_band_offset: int = 200) -> DataFrame:
                     m = np.where(
                         arr.astype(np.float64) == float(r.nodata), 0, 255
                     ).astype(np.uint8)
-                d = r._asdict()
-                d.update(band=int(r.band) + dst_band_offset,
-                         dtype="uint8", data=m.tobytes())
-                rows.append(d)
+                rows.append(tile_row(
+                    r.raster_id, int(r.band) + dst_band_offset, r.zoom,
+                    r.tile_x, r.tile_y, m, r.geotransform,
+                    nodata=r.nodata, crs=r.crs))
             yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
@@ -1669,12 +1669,10 @@ def color_relief(tiles: DataFrame, ramp: list[tuple[float, int, int, int]],
                             0, len(vals) - 1,
                         )
                         out = cv[idx]
-                    d = r._asdict()
-                    d.update(
-                        raster_id=dst_raster_id, band=band, dtype="uint8",
-                        data=_gdal_cast(out, "uint8").tobytes(),
-                    )
-                    rows.append(d)
+                    rows.append(tile_row(
+                        dst_raster_id, band, r.zoom, r.tile_x, r.tile_y,
+                        _gdal_cast(out, "uint8"), r.geotransform,
+                        nodata=r.nodata, crs=r.crs, dtype="uint8"))
             yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)

@@ -21,10 +21,11 @@ Reference:
     :165); short tail reads are legal (fixtures are truncated) and
     pad with zeros.
 
-Spark lowering: all four are the ehdr raw-strip family — driver
-reads the KB label, executors pread closed-form strips; PAux's
-arbitrary per-channel (offset, pixOffset, lineOffset) triples become
-numpy strided views over one contiguous strip pread.  Map-only,
+Spark lowering: all four are raw-strip layouts of the shared block
+scan (blockscan) — driver reads the KB label, executors pread
+closed-form strips; PAux's arbitrary per-channel (offset, pixOffset,
+lineOffset) triples become numpy strided views over one contiguous
+strip pread.  Tiled MFF reads its block grid directly.  Map-only,
 zero shuffles.
 """
 
@@ -32,15 +33,15 @@ from __future__ import annotations
 
 import math
 import os
-import re
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
+from . import blockscan
+from .blockscan import Layout
 from .ehdr import read_raw
-from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows, tile_row
+from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 # ------------------------------------------------------------- RRASTER
 _R_TYPES = {
@@ -205,61 +206,19 @@ def parse_paux(path: str) -> dict:
 
 def read_paux(spark: SparkSession, path: str, *, tile_px: int = 256,
               raster_id: str | None = None, zoom: int = 0) -> DataFrame:
-    """PAux scan: per-(band, strip) descriptors; each strip is ONE
-    contiguous pread [offset + y0*lineOff, h*lineOff) sliced by a
-    numpy strided view (pixOffset stride).  Map-only."""
+    """PAux scan: one layout per channel, its (offset, pixOffset,
+    lineOffset) triple as given; a short tail line zero-fills.
+    Map-only."""
     hdr = parse_paux(path)
     W, H = hdr["width"], hdr["height"]
-    gt = hdr["geotransform"]
-    raw_path = hdr["raw"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(H / tile_px)
-    chans = hdr["chans"]
-
-    rows = []
-    for b, ch in enumerate(chans):
-        for ty in range(nty):
-            rows.append((b, ty, min(tile_px, H - ty * tile_px)))
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 64)))
-
-    def scan(batches):
-        fsize = os.path.getsize(raw_path)
-        for pdf in batches:
-            out = []
-            with open(raw_path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    ch = chans[int(r.band)]
-                    dt = np.dtype(ch["dtype"])
-                    dt = dt.newbyteorder(">" if ch["big"] else "<")
-                    h = int(r.height)
-                    y0 = int(r.tile_y) * tile_px
-                    start = ch["offset"] + y0 * ch["line_off"]
-                    want = h * ch["line_off"]
-                    raw = os.pread(fd, min(want, fsize - start), start)
-                    if len(raw) < want:      # short tail line
-                        raw = raw + b"\x00" * (want - len(raw))
-                    buf = np.frombuffer(raw, np.uint8).reshape(
-                        h, ch["line_off"])
-                    # strided pixel gather: one view over the strip,
-                    # (pixOffset, 1)-strided bytes per value
-                    v = np.lib.stride_tricks.as_strided(
-                        buf, shape=(h, W, dt.itemsize),
-                        strides=(buf.strides[0], ch["pix_off"], 1))
-                    vals = np.ascontiguousarray(v).reshape(
-                        h, W * dt.itemsize).view(dt)
-                    vals = vals.astype(dt.newbyteorder("="),
-                                       copy=False)
-                    out += strip_rows(rid, int(r.band) + 1, int(zoom),
-                                      int(r.tile_y), vals, gt, tile_px,
-                                      y0=y0)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return desc.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, [Layout(hdr["raw"], W, H, ch["dtype"], (ch["offset"],),
+                       pixel_offset=ch["pix_off"],
+                       line_offset=ch["line_off"],
+                       byteorder=">" if ch["big"] else "<", zero_fill=True)
+                for ch in hdr["chans"]],
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=hdr["geotransform"], tile_px=tile_px, zoom=zoom)
 
 
 # ----------------------------------------------------------------- MFF
@@ -302,38 +261,31 @@ def parse_mff(path: str) -> dict:
 
 def read_mff(spark: SparkSession, path: str, *,
              raster_id: str | None = None, zoom: int = 0) -> DataFrame:
-    """MFF scan: per-(band file, tile) descriptors; untiled rasters
-    use the raw strip layout, tiled ones the block grid of
-    mffdataset.cpp IReadBlock.  Short tail reads pad with zeros (the
-    reference accepts any read >= 1 byte).  Map-only."""
+    """MFF scan: an untiled raster is one raw band file per band, read
+    as one W x H tile each; a tiled one is the block grid of
+    mffdataset.cpp IReadBlock, one descriptor per (band file, block).
+    Short tail reads pad with zeros (the reference accepts any read
+    >= 1 byte).  Map-only."""
     hdr = parse_mff(path)
     W, H = hdr["width"], hdr["height"]
     tw, th = hdr["tile_w"], hdr["tile_h"]
     bo = hdr["byteorder"]
     rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    tpr = math.ceil(W / tw)
-    tpc = math.ceil(H / th)
     bands = hdr["bands"]
+    gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
+    if not hdr["tiled"]:
+        return blockscan.read(
+            spark, [Layout(fn, W, H, dt, (0,), byteorder=bo, zero_fill=True)
+                    for fn, dt in bands],
+            raster_id=rid, geotransform=gt, tile_px=max(W, H, 1),
+            zoom=zoom)
 
-    rows = []
-    for b, (fn, dt) in enumerate(bands):
-        isz = np.dtype(dt).itemsize
-        bsize = tw * th * isz
-        for ty in range(tpc):
-            for tx in range(tpr):
-                off = bsize * (tx + ty * tpr) if hdr["tiled"] else \
-                    (ty * th * W + 0) * isz
-                nbytes = bsize if hdr["tiled"] else \
-                    min(th, H - ty * th) * W * isz
-                rows.append((b, tx, ty, off, nbytes))
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("bx", T.IntegerType()),
-                            T.StructField("by", T.IntegerType()),
-                            T.StructField("offset", T.LongType()),
-                            T.StructField("nbytes", T.LongType())])
-    ).repartition(max(4, min(len(rows), 64)))
-    tiled = hdr["tiled"]
+    tpr = math.ceil(W / tw)
+    rows = [(b, tx, ty, tw * th * np.dtype(dt).itemsize * (tx + ty * tpr))
+            for b, (fn, dt) in enumerate(bands)
+            for ty in range(math.ceil(H / th)) for tx in range(tpr)]
+    desc = blockscan.spread(
+        spark, rows, "band int, bx int, by int, offset long")
 
     def scan(batches):
         for pdf in batches:
@@ -341,25 +293,17 @@ def read_mff(spark: SparkSession, path: str, *,
             for r in pdf.itertuples(index=False):
                 fn, dts = bands[int(r.band)]
                 dt = np.dtype(dts).newbyteorder(bo)
+                nbytes = tw * th * dt.itemsize
                 with open(fn, "rb") as f:
-                    raw = os.pread(f.fileno(), int(r.nbytes),
-                                   int(r.offset))
-                if len(raw) < int(r.nbytes):
-                    raw = raw + b"\x00" * (int(r.nbytes) - len(raw))
-                if tiled:
-                    arr = np.frombuffer(raw, dt).reshape(th, tw)
-                    w = min(tw, W - int(r.bx) * tw)
-                    h = min(th, H - int(r.by) * th)
-                    arr = arr[:h, :w]
-                    x0, y0 = int(r.bx) * tw, int(r.by) * th
-                else:
-                    h = int(r.nbytes) // (W * dt.itemsize)
-                    arr = np.frombuffer(raw, dt).reshape(h, W)
-                    x0, y0 = 0, int(r.by) * th
+                    raw = os.pread(f.fileno(), nbytes, int(r.offset))
+                raw = raw + b"\x00" * (nbytes - len(raw))
+                arr = np.frombuffer(raw, dt).reshape(th, tw)
+                w = min(tw, W - int(r.bx) * tw)
+                h = min(th, H - int(r.by) * th)
                 out.append(tile_row(
                     rid, int(r.band) + 1, int(zoom), int(r.bx), int(r.by),
-                    arr.astype(dt.newbyteorder("="), copy=False),
-                    (0.0, 1.0, 0.0, 0.0, 0.0, -1.0), x0=x0, y0=y0))
+                    arr[:h, :w].astype(dt.newbyteorder("="), copy=False),
+                    gt, x0=int(r.bx) * tw, y0=int(r.by) * th))
             yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
     return desc.mapInPandas(scan, schema=TILE_SCHEMA)

@@ -33,7 +33,6 @@ column offsets closed-form)."""
 
 from __future__ import annotations
 
-import math
 import os
 import re
 import struct
@@ -42,6 +41,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
+from .blockscan import Layout
 from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 # ------------------------------------------------------------------ LCP
@@ -350,34 +351,18 @@ def read_sigdem(spark: SparkSession, path: str, *, tile_px: int = 256,
                 raster_id: str | None = None, zoom: int = 0
                 ) -> DataFrame:
     info = parse_sigdem(path)
-    W, H = info["width"], info["height"]
-    gt = info["geotransform"]
     offz, scalez = info["offz"], info["scalez"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(H / tile_px)
-    rows = [(ty, 132 + ty * tile_px * W * 4,
-             min(tile_px, H - ty * tile_px) * W * 4,
-             min(tile_px, H - ty * tile_px)) for ty in range(nty)]
-    seg = spark.createDataFrame(
-        rows, "tile_y int, offset long, nbytes long, height int"
-    ).repartition(max(4, min(len(rows), 256)))
 
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            fd = os.open(path, os.O_RDONLY)
-            for r in pdf.itertuples(index=False):
-                raw = os.pread(fd, int(r.nbytes), int(r.offset))
-                h = int(r.height)
-                iv = np.frombuffer(raw, ">i4").reshape(h, W)
-                a = np.where(iv == SIGDEM_NODATA, np.nan,
-                             iv / (scalez or 1.0) + offz)
-                out += strip_rows(rid, 1, int(zoom), int(r.tile_y), a, gt,
-                                  tile_px, y0=int(r.tile_y) * tile_px)
-            os.close(fd)
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
+    def decode(planes, strip):
+        iv = planes[0][1]
+        return [(1, np.where(iv == SIGDEM_NODATA, np.nan,
+                             iv / (scalez or 1.0) + offz))]
 
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(path, info["width"], info["height"], ">i4", (132,),
+                      decode=decode),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=info["geotransform"], tile_px=tile_px, zoom=zoom)
 
 
 def write_sigdem(tiles: DataFrame, path: str, *, tile_px: int = 256,
@@ -709,32 +694,17 @@ def parse_gsc(path: str) -> dict:
 
 def read_gsc(spark: SparkSession, path: str, *, tile_px: int = 256,
              raster_id: str | None = None, zoom: int = 0) -> DataFrame:
-    from .ehdr import read_raw
-
+    """Each row record carries 8 marker bytes after its W float32s: a
+    line stride larger than the row. One tile column, as wide as the
+    raster."""
     info = parse_gsc(path)
-    # rows carry 8 marker bytes between records: model as a BIL-like
-    # stride via an oversized "ncols" then trim — simplest faithful
-    # form: read full records and slice in a custom pass. The shared
-    # scan supports only tight strides, so use nbands=1 with a
-    # synthetic line that includes the marker bytes as extra columns.
     W, H = info["width"], info["height"]
-    pad = 2                                   # 8 marker bytes = 2 f32
-    hdr = dict(nrows=H, ncols=W + pad, nbands=1, dtype="float32",
-               interleave="bsq", skip=info["skip"],
-               geotransform=info["geotransform"], byteorder="<",
-               nodata=info["nodata"], crs="")
-    t = read_raw(spark, path, hdr, tile_px=max(tile_px, W + pad),
-                 raster_id=raster_id, zoom=zoom)
-
-    def trim(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["data"] = [
-                np.frombuffer(d, np.float32)
-                .reshape(hgt, wid)[:, :W].tobytes()
-                for d, hgt, wid in zip(pdf["data"], pdf["height"],
-                                       pdf["width"])]
-            pdf["width"] = W
-            yield pdf
-
-    return t.mapInPandas(trim, schema=t.schema)
+    gt = info["geotransform"]
+    return blockscan.read(
+        spark, Layout(path, W, H, "float32", (info["skip"],),
+                      line_offset=(W + 2) * 4, byteorder="<",
+                      zero_fill=True, out_dtype="float32"),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=(gt[0], gt[1], 0.0, gt[3], 0.0, gt[5]),
+        tile_px=max(tile_px, W + 2), zoom=zoom,
+        nodata=float(info["nodata"]))

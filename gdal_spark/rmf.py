@@ -33,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
@@ -115,9 +116,8 @@ def read_rmf(spark: SparkSession, path: str, *,
     for i, (off, size) in enumerate(info["tiles"][:ntx * nty]):
         tx, ty = i % ntx, i // ntx
         rows.append((tx, ty, int(off) * mult, int(size)))
-    seg = spark.createDataFrame(
-        rows, "tile_x int, tile_y int, offset long, size int"
-    ).repartition(max(4, min(len(rows), 256)))
+    seg = blockscan.spread(
+        spark, rows, "tile_x int, tile_y int, offset long, size int")
 
     def scan(batches):
         for pdf in batches:

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .fmt import fmt_coord as fnum
 from .iso8211 import ISO8211Reader
 
@@ -307,8 +308,7 @@ def read_s57(spark: SparkSession, paths: str | list[str], *,
     """Distributed ENC read: one task per cell file."""
     if isinstance(paths, str):
         paths = [paths]
-    seg = spark.createDataFrame([(p,) for p in paths], "path string") \
-        .repartition(max(4, min(len(paths), 256)))
+    seg = blockscan.spread(spark, [(p,) for p in paths], "path string")
 
     def scan(batches):
         for pdf in batches:

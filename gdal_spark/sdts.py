@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
 from .iso8211 import FT, ISO8211Reader
 from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
@@ -132,9 +133,7 @@ def read_sdts(spark: SparkSession, catd_path: str, *,
     for lo in range(0, len(offs), tile_px):
         hi = min(lo + tile_px, len(offs))
         ranges.append((offs[lo], hi - lo))
-    seg = spark.createDataFrame(
-        ranges, "offset long, nrecords int").repartition(
-        max(4, min(len(ranges), 64)))
+    seg = blockscan.spread(spark, ranges, "offset long, nrecords int")
     np_dt = np.dtype(dtype).newbyteorder(">")
     isz = np_dt.itemsize
 

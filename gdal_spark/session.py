@@ -9,6 +9,7 @@ for all pandas-UDF exchange, shuffle partitions sized to cores locally
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
@@ -24,11 +25,18 @@ def package_zip() -> str:
     On a real cluster:  spark-submit --py-files gdal_spark.zip job.py
     Locally get_spark() calls addPyFile with this zip so executor Python
     workers can unpickle UDF closures that reference the package,
-    regardless of the driver's cwd.
+    regardless of the driver's cwd. The archive name is keyed on the
+    checkout's path, so sessions started from two checkouts at once
+    never rebuild (or import) each other's archive.
     """
-    out = os.path.join(tempfile.gettempdir(), "gdal_spark_pkg")
-    archive = shutil.make_archive(out, "zip", root_dir=_REPO_ROOT, base_dir="gdal_spark")
-    return archive
+    return shutil.make_archive(_zip_base(_REPO_ROOT), "zip",
+                               root_dir=_REPO_ROOT, base_dir="gdal_spark")
+
+
+def _zip_base(root: str) -> str:
+    """Archive path (without .zip) for the checkout at `root`."""
+    key = hashlib.sha1(root.encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"gdal_spark_pkg_{key}")
 
 
 def get_spark(

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 
 # ------------------------------------------------------------- driver side
 def _read_shx(path: str) -> tuple[np.ndarray, np.ndarray]:
@@ -234,9 +235,7 @@ def read_shapefile(
     ] + [T.StructField(nm, _dbf_spark_type(t, d)) for nm, t, fl, d in fields]
     out_schema = T.StructType(out_fields)
 
-    desc = spark.createDataFrame(batches, _DESC_SCHEMA).repartition(
-        max(4, min(len(batches), 256))
-    )
+    desc = blockscan.spread(spark, batches, _DESC_SCHEMA)
     offs_l, lens_l = offs, lens  # closure ships the (8 bytes/record) index
 
     def scan(pdfs):

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from . import geometry
 from .gpkg import _SQLITE_TYPES, _ro_connect
 
@@ -239,8 +240,7 @@ def read_sqlite(
 
     ranges = [(int(a), int(min(a + rows_per_batch - 1, hi)))
               for a in range(int(lo), int(hi) + 1, rows_per_batch)]
-    plan = spark.createDataFrame(ranges, "lo long, hi long").repartition(
-        max(4, min(len(ranges), 256)))
+    plan = blockscan.spread(spark, ranges, "lo long, hi long")
     sel_cols = [c for c, _, _ in cols if c.lower() != "fid"]
     sel_sql = ", ".join(f'"{c}"' for c in sel_cols)
     geom_i = sel_cols.index(geom_col) if geom_col in sel_cols else None

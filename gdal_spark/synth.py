@@ -287,22 +287,12 @@ ZONE_SCHEMA = T.StructType(
 )
 
 
-def zones_df(spark: SparkSession, m: int, seed: int = SEED) -> DataFrame:
-    """Zones are the small/broadcast side — driver-side numpy generation
-    is fine at any target scale (10^4 zones ≈ a few MB)."""
-    return spark.createDataFrame(zones_np(m, seed), schema=ZONE_SCHEMA)
-
-
 # ============================================================= T4 kNN queries
 def knn_queries_np(n: int, seed: int = KNN_SEED) -> pd.DataFrame:
     i = np.arange(n, dtype=np.int64)
     lon = _grid7_np(-180.0 + rnd_u01_np(h_np(i, 1, seed)) * 360.0)
     lat = _grid7_np(-85.0 + rnd_u01_np(h_np(i, 2, seed)) * 170.0)
     return pd.DataFrame({"q_id": i, "lon": lon, "lat": lat, "k": 5})
-
-
-def knn_queries_df(spark: SparkSession, n: int, seed: int = KNN_SEED) -> DataFrame:
-    return spark.createDataFrame(knn_queries_np(n, seed))
 
 
 # ================================================================ T3 raster

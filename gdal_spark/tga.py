@@ -22,21 +22,22 @@ Reference: gdal/frmts/tga/tgadataset.cpp —
   - RLE (IReadBlock :277-): packets of u8 count | 0x80 (run of one
     pixel) or raw pixel block; packets never span scan lines.
 
-Spark lowering: uncompressed scans are strip-parallel preads
-(map-only, zero shuffles) like the other raw families; an RLE TGA
+Spark lowering: uncompressed scans are strip-parallel preads of the
+shared block scan (blockscan; map-only, zero shuffles); an RLE TGA
 is one sequential packet stream with no index, so — exactly like
 the GIF LZW stream — the FILE is the parallel unit and a fleet of
 files decodes embarrassingly parallel."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from . import blockscan
+from .blockscan import Layout
 from .synth import TILE_COLUMNS, TILE_SCHEMA, strip_rows
 
 _FOOTER_SIG = b"TRUEVISION-XFILE.\x00"
@@ -216,15 +217,6 @@ def read_tga(spark: SparkSession, path: str, *, tile_px: int = 256,
     rle = info["rle"]
     base = info["data_offset"]
     gt = [0.0, 1.0, 0.0, 0.0, 0.0, 1.0]
-    nty = math.ceil(H / tile_px)
-
-    def emit(plane_rows, ty):
-        """plane_rows: (nbands, h, W) in gdal row order."""
-        return [row for b in range(plane_rows.shape[0])
-                for row in strip_rows(rid, b + 1, int(zoom), ty,
-                                      plane_rows[b], gt, tile_px,
-                                      y0=ty * tile_px, nodata=nodata,
-                                      dtype=dtype)]
 
     if rle:
         # no scanline index exists: the file is the parallel unit
@@ -250,50 +242,34 @@ def read_tga(spark: SparkSession, path: str, *, tile_px: int = 256,
                         .reshape(nb, H, W)
                 if not top:
                     planes = planes[:, ::-1, :]
-                out = []
-                for ty, y0 in enumerate(range(0, H, tile_px)):
-                    out.extend(emit(planes[:, y0:y0 + tile_px], ty))
+                out = [row for b in range(nb)
+                       for ty, y0 in enumerate(range(0, H, tile_px))
+                       for row in strip_rows(
+                           rid, b + 1, int(zoom), ty,
+                           planes[b, y0:y0 + tile_px], gt, tile_px, y0=y0,
+                           nodata=nodata, dtype=dtype)]
                 yield pd.DataFrame(out, columns=TILE_COLUMNS)
 
         return seg.mapInPandas(scan_rle, schema=TILE_SCHEMA)
 
-    rows = []
-    for ty in range(nty):
-        h = min(tile_px, H - ty * tile_px)
-        # gdal rows [y0, y0+h) = file rows (same if top origin, else
-        # H-1-y descending — a contiguous reversed range)
-        y0 = ty * tile_px
-        frow0 = y0 if top else H - y0 - h
-        rows.append((ty, base + frow0 * W * bpp, h * W * bpp, h))
-    seg = spark.createDataFrame(
-        rows, "tile_y int, offset long, nbytes long, height int"
-    ).repartition(max(4, min(len(rows), 256)))
+    decode = None
+    if nb == 1:                   # gray/indexed: one 8/16-bit sample
+        offs, dt = (0,), ("<u2" if bpp == 2 else "u1")
+    elif depth == 16:             # 5-5-5 truecolor
+        offs, dt = (0,), "<u2"
 
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    raw = os.pread(fd, int(r.nbytes), int(r.offset))
-                    h = int(r.height)
-                    buf = np.frombuffer(raw, np.uint8).reshape(h * W, bpp)
-                    if nb == 1:
-                        if depth == 16:
-                            plane = (buf[:, 0].astype(np.uint16)
-                                     | (buf[:, 1].astype(np.uint16) << 8))
-                            planes = plane.reshape(1, h, W)
-                        else:
-                            planes = buf.reshape(1, h, W)
-                    else:
-                        planes = _expand_pixels(buf, depth, nb) \
-                            .reshape(nb, h, W)
-                    if not top:
-                        planes = planes[:, ::-1, :]
-                    out.extend(emit(planes, int(r.tile_y)))
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return seg.mapInPandas(scan, schema=TILE_SCHEMA)
+        def decode(planes, strip):
+            v = planes[0][1]
+            return [(b, (((v >> (5 * (3 - b))) & 31) << 3).astype(np.uint8))
+                    for b in (1, 2, 3)]
+    else:                         # stored B,G,R(,A) bytes
+        offs, dt = (2, 1, 0, 3)[:nb], "u1"
+    return blockscan.read(
+        spark, Layout(path, W, H, dt, tuple(base + o for o in offs),
+                      pixel_offset=bpp, bottom_up=not top, out_dtype=dtype,
+                      decode=decode),
+        raster_id=rid, geotransform=gt, tile_px=tile_px, zoom=zoom,
+        nodata=nodata)
 
 
 def write_tga(tiles: DataFrame, path: str, *, tile_px: int = 256) -> dict:

@@ -144,16 +144,11 @@ def translate(
                     if lx0 >= lx1 or ly0 >= ly1:
                         continue
                     arr = _decode(r.data, r.dtype, r.height, r.width)
-                    piece = arr[ly0:ly1, lx0:lx1]
-                    d = r._asdict()
-                    gt = list(r.geotransform)
-                    gt[0] = gt[0] + lx0 * gt[1]
-                    gt[3] = gt[3] + ly0 * gt[5]
-                    d.update(
-                        width=piece.shape[1], height=piece.shape[0],
-                        geotransform=gt, data=piece.tobytes(),
-                    )
-                    rows.append(d)
+                    rows.append(tile_row(
+                        r.raster_id, r.band, r.zoom, r.tile_x, r.tile_y,
+                        arr[ly0:ly1, lx0:lx1], list(r.geotransform),
+                        x0=lx0, y0=ly0, nodata=r.nodata, crs=r.crs,
+                        dtype=r.dtype))
                 yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
         out = out.mapInPandas(clip, schema=TILE_SCHEMA)
@@ -1075,12 +1070,10 @@ def cutline_blend_density(
                     np.where(inside, 0.5 + 0.5 * dist / blend_dist_px,
                              0.5 - 0.5 * dist / blend_dist_px),
                 )
-                d = r._asdict()
-                d.update(
-                    raster_id=dst_raster_id, dtype="float64",
-                    data=dens.reshape(h, w).tobytes(),
-                )
-                rows.append(d)
+                rows.append(tile_row(
+                    dst_raster_id, r.band, r.zoom, r.tile_x, r.tile_y,
+                    dens.reshape(h, w), r.geotransform, nodata=r.nodata,
+                    crs=r.crs, dtype="float64"))
             yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
@@ -1215,16 +1208,13 @@ def upsample_nearest(tiles: DataFrame, factor: int,
             for r in pdf.itertuples(index=False):
                 arr = _decode(r.data, r.dtype, r.height, r.width)
                 big = np.repeat(np.repeat(arr, factor, axis=0), factor, axis=1)
-                d = r._asdict()
                 gt = list(r.geotransform)
                 gt[1] = gt[1] / factor
                 gt[5] = gt[5] / factor
-                d.update(
-                    width=big.shape[1], height=big.shape[0],
-                    geotransform=gt, data=big.tobytes(),
-                    raster_id=dst_raster_id or r.raster_id,
-                )
-                rows.append(d)
+                rows.append(tile_row(
+                    dst_raster_id or r.raster_id, r.band, r.zoom, r.tile_x,
+                    r.tile_y, big, gt, nodata=r.nodata, crs=r.crs,
+                    dtype=r.dtype))
             yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return tiles.mapInPandas(run, schema=TILE_SCHEMA)
@@ -1254,19 +1244,13 @@ def retile(tiles: DataFrame, new_px: int,
                         for sx in range(k):
                             piece = arr[sy * new_px : (sy + 1) * new_px,
                                         sx * new_px : (sx + 1) * new_px]
-                            d = r._asdict()
-                            d.update(
-                                raster_id=dst_raster_id or r.raster_id,
-                                tile_x=int(r.tile_x) * k + sx,
-                                tile_y=int(r.tile_y) * k + sy,
-                                width=new_px, height=new_px,
-                                geotransform=[gt[0] + sx * new_px * gt[1],
-                                              gt[1], 0.0,
-                                              gt[3] + sy * new_px * gt[5],
-                                              0.0, gt[5]],
-                                data=piece.tobytes(),
-                            )
-                            rows.append(d)
+                            rows.append(tile_row(
+                                dst_raster_id or r.raster_id, r.band, r.zoom,
+                                int(r.tile_x) * k + sx,
+                                int(r.tile_y) * k + sy, piece,
+                                [gt[0] + sx * new_px * gt[1], gt[1], 0.0,
+                                 gt[3] + sy * new_px * gt[5], 0.0, gt[5]],
+                                nodata=r.nodata, crs=r.crs, dtype=r.dtype))
                 yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
         return tiles.mapInPandas(split, schema=TILE_SCHEMA)

@@ -36,8 +36,8 @@ import re
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
+from . import blockscan
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 NODATA = -32767
@@ -202,13 +202,8 @@ def read_usgsdem(spark: SparkSession, path: str, *, tile_px: int = 256,
         lo = spans[x0][0] if x0 < len(spans) else -1
         hi = spans[x1 - 1][1] if x1 - 1 < len(spans) else -1
         rows.append((txi, x0, x1, lo, hi))
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("txi", T.IntegerType()),
-                            T.StructField("x0", T.IntegerType()),
-                            T.StructField("x1", T.IntegerType()),
-                            T.StructField("lo", T.LongType()),
-                            T.StructField("hi", T.LongType())])
-    ).repartition(max(4, min(len(rows), 64)))
+    desc = blockscan.spread(
+        spark, rows, "txi int, x0 int, x1 int, lo long, hi long")
     span_lo = [s[0] for s in spans]
     dy_gt = gt[5]
     ymin_c = gt[3] + (H - 0.5) * gt[5]

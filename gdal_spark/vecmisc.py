@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import blockscan
 from .fmt import fmt_coord, fmt_xy
 
 
@@ -50,10 +51,7 @@ def _files_of(path: str) -> list[str]:
 
 
 def _file_parallel(spark, paths, parse_one, schema):
-    desc = spark.createDataFrame(
-        [(p,) for p in paths], T.StructType(
-            [T.StructField("path", T.StringType())])
-    ).repartition(max(4, min(len(paths), 64)))
+    desc = blockscan.spread(spark, [(p,) for p in paths], "path string")
 
     def scan(batches):
         for pdf in batches:

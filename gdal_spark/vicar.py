@@ -13,23 +13,21 @@ vicar.py pins checksums for 12 uncompressed layout/type variants,
 reproduced in tests.
 
 Spark lowering: records are fixed RECSIZE strides, so every (band,
-strip) is a closed-form byte range — the ehdr raw family with a
-per-record NBB prefix skip (a numpy strided view strips it).
+strip) is a closed-form byte range read by the shared block scan
+(blockscan), the NBB record prefix folded into the band offsets.
 Map-only, zero shuffles.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
+from . import blockscan
+from .blockscan import Layout
 
 _FMT = {"BYTE": ("u1", 1), "HALF": ("i2", 2), "FULL": ("i4", 4),
         "REAL": ("f4", 4), "DOUB": ("f8", 8), "COMP": ("c8", 8)}
@@ -116,98 +114,40 @@ def read_vicar(spark: SparkSession, path: str, *, tile_px: int = 256,
     h = parse_vicar(path)
     NL, NS, NB = h["nl"], h["ns"], h["nb"]
     isz = h["itemsize"]
-    recsize, nbb = h["recsize"], h["nbb"]
-    org = h["org"]
-    rid = raster_id or os.path.splitext(os.path.basename(path))[0]
-    nty = math.ceil(NL / tile_px)
-    rows = [(b, ty, min(tile_px, NL - ty * tile_px))
-            for b in range(NB) for ty in range(nty)]
-    desc = spark.createDataFrame(
-        rows, T.StructType([T.StructField("band", T.IntegerType()),
-                            T.StructField("tile_y", T.IntegerType()),
-                            T.StructField("height", T.IntegerType())])
-    ).repartition(max(4, min(len(rows), 64)))
-    base, bo, vax = h["dtype"], h["byteorder"], h["vax"]
-    data_off = h["data_off"]
-    fsize = os.path.getsize(path)
+    recsize, org = h["recsize"], h["org"]
+    base, vax = h["dtype"], h["vax"]
+    # record index by organization (vicardataset IReadBlock): BSQ
+    # records are lines per band, BIL band-lines, BIP one record per
+    # PIXEL (N1=NB) — a line is NS consecutive records; each record
+    # starts with NBB prefix bytes
+    start = h["data_off"] + h["nbb"]
+    if org == "BSQ":
+        offs = [start + b * NL * recsize for b in range(NB)]
+        pix, line = isz, recsize
+    elif org == "BIL":
+        offs = [start + b * recsize for b in range(NB)]
+        pix, line = isz, NB * recsize
+    else:
+        offs = [start + b * isz for b in range(NB)]
+        pix, line = recsize, NS * recsize
+    decode = None
+    if vax:
+        def decode(planes, strip):
+            if base == "f4":
+                return [(b, _vax_f(v).astype(np.float32)) for b, v in planes]
+            if base == "f8":
+                return [(b, _vax_d(v)) for b, v in planes]
+            # CFloat32: (re, im) VAX floats in one 8-byte sample
+            return [(b, (_vax_f(v & 0xFFFFFFFF).astype(np.float32)
+                         + 1j * _vax_f(v >> 32).astype(np.float32))
+                     .astype(np.complex64)) for b, v in planes]
 
-    def rec_offset(b, y):
-        # record index by organization (vicardataset IReadBlock):
-        # BSQ records are lines per band, BIL band-lines, BIP one
-        # record per PIXEL (N1=NB) — a line is NS consecutive records
-        if org == "BSQ":
-            k = b * NL + y
-        elif org == "BIL":
-            k = y * NB + b
-        else:
-            k = y * NS
-        return data_off + k * recsize
-
-    def decode(raw: bytes, n: int) -> np.ndarray:
-        if vax and base == "f4":
-            u = np.frombuffer(raw, "<u4", count=n)
-            return _vax_f(u).astype(np.float32)
-        if vax and base == "f8":
-            u = np.frombuffer(raw, "<u8", count=n)
-            return _vax_d(u)
-        if vax and base == "c8":
-            u = np.frombuffer(raw, "<u4", count=2 * n)
-            fl = _vax_f(u).astype(np.float32)
-            return fl[0::2] + 1j * fl[1::2]
-        return np.frombuffer(raw, np.dtype(base).newbyteorder(bo),
-                             count=n)
-
-    def scan(batches):
-        for pdf in batches:
-            out = []
-            with open(path, "rb") as f:
-                fd = f.fileno()
-                for r in pdf.itertuples(index=False):
-                    b = int(r.band)
-                    hh = int(r.height)
-                    y0 = int(r.tile_y) * tile_px
-                    lines = []
-                    for i in range(hh):
-                        off = rec_offset(b, y0 + i) + nbb
-                        if org == "BIP":
-                            # read whole pixel records from the
-                            # record START; the per-record NBB
-                            # prefix strips in the reshape below
-                            off = rec_offset(b, y0 + i)
-                            want = NS * recsize
-                            raw = os.pread(
-                                fd, min(want, fsize - off), off)
-                            raw = raw.ljust(want, b"\x00")
-                            if nbb:
-                                v8 = np.frombuffer(raw, np.uint8)
-                                v8 = v8.reshape(NS, recsize)[:, nbb:]
-                                raw = np.ascontiguousarray(
-                                    v8).tobytes()
-                            vals = decode(raw, NS * NB)
-                            lines.append(
-                                np.ascontiguousarray(vals.reshape(
-                                    NS, NB)[:, b]))
-                        else:
-                            want = NS * isz
-                            raw = os.pread(
-                                fd, min(want, max(0, fsize - off)),
-                                off)
-                            raw = raw.ljust(want, b"\x00")
-                            lines.append(decode(raw, NS))
-                    plane = np.stack(lines)
-                    if base == "c8":
-                        # CFloat32: emit interleaved re/im as the
-                        # tile payload (the engine's complex carry)
-                        plane = plane.astype(np.complex64)
-                    else:
-                        plane = plane.astype(
-                            np.dtype(base).newbyteorder("="),
-                            copy=False)
-                    # every tile carries the unshifted identity transform
-                    out += [tile_row(rid, b + 1, int(zoom), tx,
-                                     int(r.tile_y), plane[:, x:x + tile_px],
-                                     [0.0, 1.0, 0.0, 0.0, 0.0, -1.0])
-                            for tx, x in enumerate(range(0, NS, tile_px))]
-            yield pd.DataFrame(out, columns=TILE_COLUMNS)
-
-    return desc.mapInPandas(scan, schema=TILE_SCHEMA)
+    return blockscan.read(
+        spark, Layout(path, NS, NL,
+                      {"f4": "<u4"}.get(base, "<u8") if vax else base,
+                      tuple(offs), pixel_offset=pix, line_offset=line,
+                      byteorder=None if vax else h["byteorder"],
+                      zero_fill=True, decode=decode),
+        raster_id=raster_id or os.path.splitext(os.path.basename(path))[0],
+        geotransform=[0.0, 1.0, 0.0, 0.0, 0.0, -1.0], tile_px=tile_px,
+        zoom=zoom)

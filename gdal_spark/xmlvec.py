@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blockscan
 from .fmt import fmt_coord as _F
 
 GPX_NS = "http://www.topografix.com/GPX/1/1"
@@ -100,8 +101,7 @@ def _file_plan(spark: SparkSession, path: str, suffix: str) -> DataFrame:
         files = [path]
     if not files:
         raise FileNotFoundError(f"no {suffix} files under {path}")
-    return spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(max(4, min(len(files), 256)))
+    return blockscan.spread(spark, [(f,) for f in files], "path string")
 
 
 # -------------------------------------------------------------------- GPX

@@ -8,7 +8,12 @@
   `dict(...)` call holding the row's keys, or a column list spelled as
   `[f.name for f in TILE_SCHEMA...]`, is a second copy of the record
   that can drift from it (use `tile_row` / `strip_rows` and
-  `TILE_COLUMNS`).
+  `TILE_COLUMNS`). Copying an input row (`r._asdict()`) and updating
+  it inside a function that emits TILE_COLUMNS frames is the same
+  second copy.
+- Descriptor frames are spread one way: `blockscan.spread`, defined
+  once. No `.repartition(max(...))` under gdal_spark/ (a round-robin
+  shuffle of the descriptors before every read).
 """
 
 import ast
@@ -50,7 +55,27 @@ def test_no_top_level_name_defined_twice():
     assert not twice, twice
 
 
+def _own_nodes(fn):
+    """Nodes of a function body, not descending into nested defs."""
+    todo = list(fn.body)
+    while todo:
+        n = todo.pop()
+        yield n
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.Lambda)):
+            todo.extend(ast.iter_child_nodes(n))
+
+
 def _tile_row_spellings(path):
+    for fn in ast.walk(_tree(path)):
+        if (isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and any(isinstance(n, ast.Name) and n.id == "TILE_COLUMNS"
+                        for n in ast.walk(fn))):
+            for c in _own_nodes(fn):
+                if (isinstance(c, ast.Call)
+                        and isinstance(c.func, ast.Attribute)
+                        and c.func.attr == "_asdict"):
+                    yield f"{_rel(path)}:{c.lineno} _asdict row copy"
     for node in ast.walk(_tree(path)):
         keys = None
         if isinstance(node, ast.Dict):
@@ -74,3 +99,23 @@ def test_tile_rows_built_only_by_synth_tile_row():
              for s in _tile_row_spellings(p)]
     assert not found, found
     assert len(list(_tile_row_spellings(synth))) == 1
+
+
+def _spread_sites(path):
+    for node in ast.walk(_tree(path)):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition" and node.args
+                and isinstance(node.args[0], ast.Call)
+                and isinstance(node.args[0].func, ast.Name)
+                and node.args[0].func.id == "max"):
+            yield f"{_rel(path)}:{node.lineno}"
+
+
+def test_descriptors_spread_by_one_function():
+    pkg = [p for p in SOURCES
+           if _rel(p).startswith("gdal_spark" + os.sep)]
+    found = [s for p in pkg for s in _spread_sites(p)]
+    assert not found, found
+    defs = [_rel(p) for p in pkg for n in _tree(p).body
+            if isinstance(n, ast.FunctionDef) and n.name == "spread"]
+    assert defs == [os.path.join("gdal_spark", "blockscan.py")], defs
