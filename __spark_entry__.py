@@ -18,10 +18,16 @@ and whether bench.py's timed suite runs it.
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import math
+import os
+import shutil
 import sys
+import tempfile
+import threading
 from collections.abc import Callable
-from functools import partial
+from functools import partial, reduce
 from typing import NamedTuple
 
 import pandas as pd
@@ -29,7 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gdal_spark import (
+    asciigrid, bmp, btkro, cnsdtf, dted, ehdr, ers, fits, geotiff, gsg, hfa,
+    idrisi, lan, mbtiles, pcidsk, pnm, rawlabels, saga, tfat, tga,
+)
 from gdal_spark import derived as DRV
+from gdal_spark import gif as GIF
+from gdal_spark import gpkg as GPKG
 from gdal_spark import ogrsql as Q
 from gdal_spark import overlay as OV
 from gdal_spark import raster as RST
@@ -50,6 +62,29 @@ MOD32 = DRV.MOD32
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+_SCRATCH_ROOT: list[str] = []
+_SCRATCH_SEQ = itertools.count()
+_SCRATCH_LOCK = threading.Lock()
+
+
+def _scratch(name: str) -> str:
+    """A fresh, empty directory for one builder's files. Every one lives
+    under a per-process root that is made on the first call and removed
+    when the process exits, not before: builders return lazy DataFrames
+    that read their files only when the caller runs an action. Spark's
+    Python workers may import this module but never build a query, so
+    they never make or remove the root."""
+    with _SCRATCH_LOCK:
+        if not _SCRATCH_ROOT:
+            _SCRATCH_ROOT.append(tempfile.mkdtemp(prefix="gdal_spark_q_"))
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT[0],
+                            ignore_errors=True)
+        path = os.path.join(_SCRATCH_ROOT[0],
+                            f"{name}_{next(_SCRATCH_SEQ)}")
+    os.mkdir(path)
+    return path
 
 
 def _docs_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,8 +121,6 @@ def _q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     form): features serialized in-Spark (to_json), written as a
     line-parallel text dataset, read back through the GeoJSON feature
     reader — ids, geometry WKT, and properties survive."""
-    import tempfile
-
     from gdal_spark.geojson import read_geojson_seq
 
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
@@ -104,7 +137,7 @@ def _q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(F.col("lang").alias("lang")).alias("properties"),
         )
     )
-    path = tempfile.mkdtemp(prefix="gdal_spark_geojson_") + "/feats"
+    path = _scratch("geojson") + "/feats"
     d.select(feat.alias("value")).write.mode("overwrite").text(path)
     out = read_geojson_seq(spark, path)
     return out.select(
@@ -120,11 +153,9 @@ def _q_netcdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink (parallel pwrite strips), read back by the map-only strip
     scan, and unpacked like GDALNetCDFRasterBand's offset/scale path
     (netcdfdataset.cpp:447). Both vars in one output table."""
-    import tempfile
-
     from gdal_spark.netcdf import read_netcdf, write_netcdf
 
-    path = tempfile.mkdtemp(prefix="gdal_spark_nc_") + "/rt.nc"
+    path = _scratch("nc") + "/rt.nc"
     ny, nx, nt, npp = 24, 37, 11, 29
     grid = (
         spark.range(ny).select(F.col("id").alias("y"))
@@ -165,13 +196,11 @@ def _q_grib2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal scale 1 — missing cells decode to NULL. Packing is
     deterministic (E=0, R=min, one float64 division), so values are
     hash-exact vs the closed-form oracle."""
-    import tempfile
-
     import numpy as np
 
     from gdal_spark import grib
 
-    path = tempfile.mkdtemp(prefix="gdal_spark_grib_") + "/rt.grib2"
+    path = _scratch("grib") + "/rt.grib2"
     r = np.arange(24).reshape(24, 1)
     c = np.arange(37).reshape(1, 37)
     a = (((r * 131 + c) % 251) - 17) * 0.25
@@ -221,13 +250,11 @@ def _q_grib2_complex_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     true last length), extra descriptors signed-magnitude. Decode is
     one float64 division, so every cell is hash-exact vs the
     closed-form oracle."""
-    import tempfile
-
     import numpy as np
 
     from gdal_spark import grib
 
-    path = tempfile.mkdtemp(prefix="gdal_spark_gribcx_") + "/cx.grib2"
+    path = _scratch("gribcx") + "/cx.grib2"
     r = np.arange(40).reshape(40, 1)
     c = np.arange(53).reshape(1, 53)
     a = (((r * 131 + c * 17) % 509) - 200) * 0.25
@@ -287,13 +314,11 @@ def _q_grib2_lcc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the tile geotransform; the oracle recomputes the centres
     from the engine's own lcc forward SQL of (Lo1, La1) — the
     georeferencing itself is value-verified engine-vs-engine."""
-    import tempfile
-
     import numpy as np
 
     from gdal_spark import grib
 
-    path = tempfile.mkdtemp(prefix="gdal_spark_griblcc_") + "/lcc.grib2"
+    path = _scratch("griblcc") + "/lcc.grib2"
     r = np.arange(40).reshape(40, 1)
     c = np.arange(55).reshape(1, 55)
     a = (((r * 131 + c * 17) % 509) - 200) * 0.25
@@ -364,13 +389,11 @@ def _q_grib2_ps_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip in-kernel). Per-cell value + projected centre, centres
     verified against the oracle's own polar-stereographic forward
     SQL (variant B, lat_ts = LaD)."""
-    import tempfile
-
     import numpy as np
 
     from gdal_spark import grib
 
-    path = tempfile.mkdtemp(prefix="gdal_spark_gribps_") + "/ps.grib2"
+    path = _scratch("gribps") + "/ps.grib2"
     r = np.arange(24).reshape(24, 1)
     c = np.arange(31).reshape(1, 31)
     a = (((r * 37 + c * 11) % 211) - 90) * 0.5
@@ -439,13 +462,11 @@ def _q_netcdf4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with CF scale/offset/_FillValue — then the chunk-descriptor-
     parallel scan reads them back map-only, inflates per chunk, and
     unpacks."""
-    import tempfile
-
     import numpy as np
 
     from gdal_spark import hdf5
 
-    path = tempfile.mkdtemp(prefix="gdal_spark_nc4_") + "/rt.nc"
+    path = _scratch("nc4") + "/rt.nc"
     ny, nx, nt, npp = 24, 37, 11, 29
     grid = (
         spark.range(ny).select(F.col("id").alias("y"))
@@ -588,8 +609,6 @@ def _q_mvt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment and 4096-extent quantized coordinates must match the
     closed-form web-mercator arithmetic, and the lang property must
     survive the layer key/value dictionaries."""
-    import tempfile
-
     from gdal_spark.mvt import read_mvt_mbtiles, write_mvt_mbtiles
 
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
@@ -603,7 +622,7 @@ def _q_mvt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(")")).alias("wkt"),
         F.create_map(F.lit("lang"), F.col("lang")).alias("props"),
     )
-    path = tempfile.mkdtemp(prefix="gdal_spark_mvt_") + "/d.mbtiles"
+    path = _scratch("mvt") + "/d.mbtiles"
     write_mvt_mbtiles(feats, path, zoom=6, buffer=0)
     out = read_mvt_mbtiles(spark, path)
     return out.select(
@@ -621,8 +640,6 @@ def _q_dxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     them back — layer, entity type, and shortest-round-trip-formatted
     geometry (gdal_spark.fmt, OGRFormatDouble semantics) must survive
     the group-code pair stream exactly."""
-    import tempfile
-
     from gdal_spark.dxf import concat_dxf_dir, read_dxf, write_dxf
 
     d = DRV.with_derived_squares(
@@ -649,7 +666,7 @@ def _q_dxf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("y0").cast("string"), F.lit("))"),
         ).alias("wkt"),
     )
-    root = tempfile.mkdtemp(prefix="gdal_spark_dxf_")
+    root = _scratch("dxf")
     write_dxf(pts.unionByName(sq), f"{root}/parts")
     concat_dxf_dir(f"{root}/parts", f"{root}/out.dxf")
     out = read_dxf(spark, f"{root}/out.dxf")
@@ -686,11 +703,10 @@ def _q_identify(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import sqlite3
     import struct as _s
-    import tempfile
 
     from gdal_spark.info import identify
 
-    root = tempfile.mkdtemp(prefix="gdal_spark_idy_")
+    root = _scratch("idy")
     fixtures = {
         "a.tif": b"II*\x00" + b"\x00" * 16,
         "b.png": b"\x89PNG\r\n\x1a\n" + b"\x00" * 8,
@@ -722,8 +738,6 @@ def _q_fgb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink (Hilbert-sorted leaf order, packed R-tree built bottom-up,
     parallel pwrite), the strip-split reader decodes them back —
     attributes and coordinates must survive the flatbuffer codec."""
-    import tempfile
-
     from gdal_spark.fgb import read_fgb, write_fgb
 
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
@@ -736,7 +750,7 @@ def _q_fgb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(")")).alias("wkt"),
         "lang", F.col("n_chars").cast("long").alias("n_chars"),
     )
-    path = tempfile.mkdtemp(prefix="gdal_spark_fgb_") + "/d.fgb"
+    path = _scratch("fgb") + "/d.fgb"
     write_fgb(feats, path, name="docs")
     out = read_fgb(spark, path)
     nums = F.expr(
@@ -757,8 +771,6 @@ def _q_sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink (BLOB geometries per the public Spatialite spec), then the
     rowid-window mapInPandas scan reads them back distributed —
     attributes and coordinates must survive the blob codec."""
-    import tempfile
-
     from gdal_spark import sqlitevec
 
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
@@ -771,7 +783,7 @@ def _q_sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(" "), F.col("lat").cast("string"),
                  F.lit(")")).alias("wkt"),
     )
-    path = tempfile.mkdtemp(prefix="gdal_spark_sqlite_") + "/d.sqlite"
+    path = _scratch("sqlite") + "/d.sqlite"
     sqlitevec.write_sqlite(feats, path, table="docs",
                            geometry_type="POINT")
     out = sqlitevec.read_sqlite(spark, path, "docs", rows_per_batch=128)
@@ -831,12 +843,10 @@ def _q_netcdf_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw values + _FillValue): a south-up CF grid becomes the engine's
     tile table; the geotransform corners and the nodata-excluded band
     statistics are closed forms DuckDB restates."""
-    import tempfile
-
     from gdal_spark.netcdf import netcdf_as_raster, write_netcdf
     from gdal_spark.raster import band_stats
 
-    path = tempfile.mkdtemp(prefix="gdal_spark_nccf_") + "/cf.nc"
+    path = _scratch("nccf") + "/cf.nc"
     ny, nx = 20, 30
     lats = spark.range(ny).select(
         F.col("id").alias("lat"), (10.0 + F.col("id") * 0.5).alias("value"))
@@ -880,8 +890,6 @@ def _q_fgb_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     only features intersecting the window are scheduled. The driver
     walk reads O(log n) node ranges; the result must equal the plain
     WHERE-range oracle."""
-    import tempfile
-
     from gdal_spark.fgb import read_fgb, write_fgb
 
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
@@ -894,7 +902,7 @@ def _q_fgb_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(")")).alias("wkt"),
         "lang",
     )
-    path = tempfile.mkdtemp(prefix="gdal_spark_fgbq_") + "/q.fgb"
+    path = _scratch("fgbq") + "/q.fgb"
     write_fgb(feats, path, name="docs")
     out = read_fgb(spark, path, bbox=(-60.0, -85.0, 60.0, -40.0))
     return out.select(F.col("src_id").alias("doc_id"), "lang")
@@ -906,8 +914,6 @@ def _q_gml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FeatureCollection (one document per partition, parallel), the
     file-parallel reader parses them back — properties and pos
     coordinates survive the XML."""
-    import tempfile
-
     from gdal_spark.xmlvec import read_gml, write_gml
 
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
@@ -919,7 +925,7 @@ def _q_gml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(" "), F.col("lat").cast("string"),
                  F.lit(")")).alias("geom_wkt"),
     )
-    root = tempfile.mkdtemp(prefix="gdal_spark_gml_")
+    root = _scratch("gml")
     write_gml(feats, f"{root}/parts", layer="docs")
     out = read_gml(spark, f"{root}/parts")
     nums = F.expr(
@@ -941,8 +947,6 @@ def _q_osm_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs, delta-coded DenseNodes, string-table tags); the
     block-parallel scan decodes them back — ids, nanodegree
     quantization, and tags must match the closed form."""
-    import tempfile
-
     from gdal_spark.osm import read_osm_pbf, write_osm_pbf
 
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
@@ -952,7 +956,7 @@ def _q_osm_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = [{"id": int(r["doc_id"]), "lat": float(r["lat"]),
               "lon": float(r["lon"]), "tags": {"lang": r["lang"]}}
              for r in sorted(rows, key=lambda r: r["doc_id"])]
-    path = tempfile.mkdtemp(prefix="gdal_spark_osm_") + "/d.osm.pbf"
+    path = _scratch("osm") + "/d.osm.pbf"
     write_osm_pbf(path, nodes, nodes_per_block=64)
     out = read_osm_pbf(spark, path, "nodes")
     return out.select(
@@ -966,7 +970,6 @@ def _q_osm_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     document nodes each — explode+join on node id, reassemble keyed by
     way — returned as per-way vertex aggregates the oracle restates
     from the quantized coordinates."""
-    import tempfile
 
     from gdal_spark.osm import osm_lines, read_osm_pbf, write_osm_pbf
 
@@ -979,7 +982,7 @@ def _q_osm_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
               "lon": float(r["lon"]), "tags": {}} for r in rows]
     ways = [{"id": w, "refs": list(range(5 * w, 5 * w + 5)),
              "tags": {"ref": str(w)}} for w in range(80)]
-    path = tempfile.mkdtemp(prefix="gdal_spark_osml_") + "/l.osm.pbf"
+    path = _scratch("osml") + "/l.osm.pbf"
     write_osm_pbf(path, nodes, ways, nodes_per_block=64)
     n = read_osm_pbf(spark, path, "nodes")
     w = read_osm_pbf(spark, path, "ways")
@@ -1070,9 +1073,7 @@ def _q_streaming_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateless join -> availableNow parquet sink with checkpoint):
     the drained sink must value-match the BATCH oracle — the
     streaming path is held to the same correctness gate as batch."""
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="gdal_spark_stream_")
+    root = _scratch("stream")
     src_dir, out_dir, ck = f"{root}/src", f"{root}/out", f"{root}/ck"
     docs = _docs_points(spark, sf_dir)
     docs.write.mode("overwrite").parquet(src_dir)
@@ -1782,35 +1783,16 @@ def _q_shapefile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write .shp/.shx/.dbf, re-read through the range-read scan, attrs
     must survive bit-exactly (N-field fixed decimals are sized to hold
     the closed-form values)."""
-    import tempfile
-
     from gdal_spark import shapefile as SHPF
 
     zones = DRV.rect_zone_grid(ZONE_G)
     src = spark.createDataFrame(
         zones[["zone_id", "eas_id", "prfedea", "geom_wkt"]]
     )
-    base = tempfile.mkdtemp(prefix="gdal_spark_shp_") + "/zones"
+    base = _scratch("shp") + "/zones"
     SHPF.write_shapefile(src, base)
     back = SHPF.read_shapefile(spark, base, records_per_batch=16)
     return back.select("fid", "zone_id", "eas_id", "prfedea")
-
-
-def _q_geotiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GeoTIFF sink + source (gdal/frmts/gtiff): the synthetic tile
-    table written as a real tiled GeoTIFF via planned-offset parallel
-    pwrite, read back via the distributed IFD-plan/segment-scan reader
-    — per-tile checksums must equal the source table's (same oracle as
-    raster_checksums)."""
-    import tempfile
-
-    from gdal_spark import geotiff
-
-    tiles = synth.tiles_src_df(spark, 4, 4)
-    path = tempfile.mkdtemp(prefix="gdal_spark_gtiff_") + "/rt.tif"
-    geotiff.write_geotiff(tiles, path)
-    back = geotiff.read_geotiff(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
 
 
 def _q_geotiff_byte_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1818,8 +1800,6 @@ def _q_geotiff_byte_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch TIFF parser: checksum 4672 + the documented
     geotransform/CRS (autotest/utilities/test_gdalwarp.py:56,
     gcore/data/byte.tif)."""
-    from gdal_spark import geotiff
-
     t = geotiff.read_geotiff(
         spark, "/root/reference/autotest/gcore/data/byte.tif",
         raster_id="byte",
@@ -1845,8 +1825,6 @@ def _q_gpkg_byte_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 20x20 contents window must checksum to the canonical 4672
     with byte.tif's exact geotransform (ogr/ogrsf_frmts/gpkg/
     ogrgeopackagedataset.cpp tile decode path)."""
-    from gdal_spark import gpkg as GPKG
-
     t = GPKG.read_gpkg_tiles(
         spark,
         "/root/reference/autotest/gdrivers/data/gpkg/byte.gpkg",
@@ -1871,39 +1849,15 @@ def _q_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone grid: write a feature table with GPB geometry blobs + the
     gpkg_* catalog, re-read through the rowid-range distributed
     scan (ogrgeopackagetablelayer.cpp feature I/O semantics)."""
-    import tempfile
-
-    from gdal_spark import gpkg as GPKG
-
     zones = DRV.rect_zone_grid(ZONE_G)
     src = spark.createDataFrame(
         zones[["zone_id", "eas_id", "prfedea", "geom_wkt"]]
     )
-    path = tempfile.mkdtemp(prefix="gdal_spark_gpkg_") + "/zones.gpkg"
+    path = _scratch("gpkg") + "/zones.gpkg"
     GPKG.write_gpkg(src, path, table="zones", wkt_col="geom_wkt",
                     srs_id=4326)
     back = GPKG.read_gpkg(spark, path, rows_per_batch=16)
     return back.select("fid", "zone_id", "eas_id", "prfedea")
-
-
-def _q_gpkg_tiles_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GeoPackage tile sink + source roundtrip: PNG encoding runs
-    distributed (mapInPandas), the driver writes only finished blobs
-    + catalog rows; read back through the tile scan and re-key the
-    spec's top-origin tile_row to the synth table's TMS row so the
-    checksums answer to the raster_checksums oracle."""
-    import tempfile
-
-    from gdal_spark import gpkg as GPKG
-
-    tiles = synth.tiles_src_df(spark, 4, 4)
-    path = tempfile.mkdtemp(prefix="gdal_spark_gpkg_") + "/rt.gpkg"
-    GPKG.write_gpkg_tiles(tiles, path, srs_id=3857)
-    back = GPKG.read_gpkg_tiles(spark, path, raster_id="byte_like")
-    back = back.withColumn(
-        "tile_y", (F.lit(3) - F.col("tile_y")).cast("int")
-    )
-    return tiling.checksum_table(back)
 
 
 def _q_enhance_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1998,11 +1952,9 @@ def _q_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters prove the second run resumed from the snapshots (builds
     stay 1). Rows come from the per-partition lineage table, not a
     recount."""
-    import tempfile
-
     from gdal_spark.checkpoint import Checkpointer
 
-    root = tempfile.mkdtemp(prefix="gdal_spark_ckpt_")
+    root = _scratch("ckpt")
     ck = Checkpointer(spark, root, run_id="contract")
     calls = {"filtered": 0, "by_lang": 0}
 
@@ -2970,8 +2922,6 @@ def _q_rat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTRIBUTED — per-tile bincount partials, one keyed sum — then
     roundtrips through the PAM .aux.xml serialization
     (GDALRasterAttributeTable XML) before reporting."""
-    import tempfile
-
     import localref
     from gdal_spark import enhance
     from gdal_spark import rat as RT
@@ -2979,7 +2929,7 @@ def _q_rat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiles = synth.tiles_src_df(spark, 2, 2)
     classified = enhance.classify(tiles, localref.CLASSIFY_DEFS)
     hist = RT.default_rat_df(classified).toPandas()
-    path = tempfile.mkdtemp(prefix="gdal_spark_rat_") + "/x.aux.xml"
+    path = _scratch("rat") + "/x.aux.xml"
     RT.write_aux_xml(path, {1: RT.rat_from_df(hist)})
     back = RT.read_aux_xml(path)[1]
     pdf = back.to_pandas()
@@ -3402,11 +3352,9 @@ def _q_mdim_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
     netcdf sink writes the derived double var; the final read-back is
     what the query returns — the whole chain is scan -> column math ->
     one strip-keyed shuffle at the sink."""
-    import tempfile
-
     from gdal_spark.netcdf import read_netcdf, write_netcdf
 
-    root = tempfile.mkdtemp(prefix="gdal_spark_mdim_")
+    root = _scratch("mdim")
     src, dst = f"{root}/src.nc", f"{root}/dst.nc"
     ny, nx = 30, 22
     grid = (
@@ -3688,11 +3636,9 @@ def _q_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle applies the same cutoff (window end <= max ts - 10
     minutes) in plain SQL — the streaming semantics ARE the thing
     verified."""
-    import tempfile
-
     from gdal_spark.streaming import stream_windowed_counts
 
-    root = tempfile.mkdtemp(prefix="gdal_spark_swin_")
+    root = _scratch("swin")
     src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ck"
     ev = _read(spark, sf_dir, "events")
     ev.write.mode("overwrite").parquet(src)
@@ -3705,11 +3651,9 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet sink, availableNow drain) over the events firehose keyed
     by (user_id, event_type). Emitting only the key columns makes the
     drained result exactly the batch DISTINCT, which is the oracle."""
-    import tempfile
-
     from gdal_spark.streaming import stream_dedup
 
-    root = tempfile.mkdtemp(prefix="gdal_spark_sdd_")
+    root = _scratch("sdd")
     src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ck"
     ev = _read(spark, sf_dir, "events")
     ev.write.mode("overwrite").parquet(src)
@@ -5722,199 +5666,6 @@ def _q_ogrinfo_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_cog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COG writer loop (gdal/frmts/gtiff/cogdriver.cpp; layout spec
-    gdal.org/drivers/raster/cog.html): 2x2 synth tiles + 2 average
-    overview levels written as a multi-IFD COG (overview bytes lead the
-    data region, geo tags on IFD0 only), every level read back through
-    the distributed IFD-planned scan and checksummed."""
-    import tempfile
-
-    from gdal_spark import geotiff
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_cog_") + "/rt.tif"
-    geotiff.write_cog(src, path, levels=2)
-    parts = [
-        tiling.checksum_table(
-            geotiff.read_geotiff(spark, path, ifd=i, raster_id="byte_like",
-                                 zoom=12 - i))
-        for i in range(3)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _q_aaigrid_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AAIGrid full loop (gdal/frmts/aaigrid/aaigriddataset.cpp): the
-    2x2 synth tile table through the sequential .asc sink, re-read via
-    the line-parallel distributed scan (spark.read.text + zipindex +
-    one keyed shuffle), per-tile checksums must equal the source's."""
-    import tempfile
-
-    from gdal_spark import asciigrid
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_asc_") + "/rt.asc"
-    asciigrid.write_aaigrid(src, path)
-    back = asciigrid.read_aaigrid(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_ehdr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EHdr raw-binary full loop (gdal/frmts/raw/ehdrdataset.cpp): the
-    2x2 synth tiles through the parallel-pwrite BIL sink (driver writes
-    only the keyword .hdr), back via the map-only strip scan — every
-    byte offset a closed form, zero shuffles, zero driver pixel I/O.
-    Per-tile checksums must equal the source's."""
-    import tempfile
-
-    from gdal_spark import ehdr
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_ehdr_") + "/rt.bil"
-    ehdr.write_ehdr(src, path, layout="bil")
-    back = ehdr.read_ehdr(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_bt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VTerrain BT loop (gdal/frmts/raw/btdataset.cpp): int16 synth
-    tiles through the COLUMN-major bottom-up sink (one keyed shuffle
-    zips each column strip; contiguous column pwrites), back via the
-    column-strip scan (the DTED profile contract). Checksums equal
-    the mosaic oracle's exactly (values preserved through the int16
-    cast)."""
-    import tempfile
-
-    import numpy as np
-
-    from gdal_spark import btkro
-
-    base = synth.tiles_src_df(spark, 2, 2)
-    rows = []
-    for r in base.collect():
-        d = r.asDict()
-        d["dtype"] = "int16"
-        d["data"] = np.frombuffer(r.data, np.uint8).astype(
-            np.int16).tobytes()
-        rows.append(d)
-    src = spark.createDataFrame(rows, base.schema)
-    path = tempfile.mkdtemp(prefix="gdal_spark_bt_") + "/rt.bt"
-    btkro.write_bt(src, path)
-    back = btkro.read_bt(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_kro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KOLOR KRO loop (gdal/frmts/raw/krodataset.cpp): the 2x2 synth
-    tiles through the big-endian BIP sink (20-byte header + parallel
-    strip pwrites), back via the ehdr BIP scan. Checksums equal the
-    mosaic oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import btkro
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_kro_") + "/rt.kro"
-    btkro.write_kro(src, path)
-    back = btkro.read_kro(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_rraster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RRASTER loop (gdal/frmts/raw/rrasterdataset.cpp — the R
-    'raster' package's native format): the 2x2 synth tiles through
-    the .grd+.gri sink (KB INI header driver-side, BIL strips pwrite
-    in parallel), back via the ehdr raw-strip map-only scan; the
-    READ side is parity-proven against the reference's own
-    byte_rraster fixture (checksum 4672, tests/test_rawlabels.py).
-    Checksums equal the mosaic oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import rawlabels
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    base = tempfile.mkdtemp(prefix="gdal_spark_rr_") + "/rt.grd"
-    rawlabels.write_rraster(src, base)
-    back = rawlabels.read_rraster(spark, base, raster_id="byte_like",
-                                  zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_hfa_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Erdas Imagine HFA loop (gdal/frmts/hfa/): the 2x2 synth tiles
-    through the uncompressed .img sink (driver writes entry tree +
-    MIF dictionary, blocks pwrite at closed-form offsets — the HFA
-    block IS the tile), back via the block-descriptor-parallel scan
-    whose READ side is parity-proven against 10 of the reference's
-    own fixtures (tests/test_hfa.py: byte/int16/.../float64 4672,
-    utmsmall 50054, 2bit_compressed RLC 11918, spill .ige).
-    Checksums equal the mosaic oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import hfa
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_hfa_") + "/rt.img"
-    hfa.write_hfa(src, path)
-    back = hfa.read_hfa(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_saga_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SAGA grid loop (gdal/frmts/saga/sagadataset.cpp): the 2x2
-    synth tiles through the .sgrd+.sdat sink (KB keyword header
-    driver-side, bottom-up strips pwrite in parallel), back via the
-    gsg bottom-up strip scan. POSITION_* keywords name cell CENTERS —
-    the half-cell shift must close. Checksums equal the mosaic
-    oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import saga
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    base = tempfile.mkdtemp(prefix="gdal_spark_saga_") + "/rt.sgrd"
-    saga.write_saga(src, base)
-    back = saga.read_saga(spark, base, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_lan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Erdas LAN loop (gdal/frmts/raw/landataset.cpp): the 2x2 synth
-    tiles through the HEAD74 BIL sink (128-byte header driver-side,
-    strip pwrites after it), back via the ehdr BIL raw scan.
-    Checksums equal the mosaic oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import lan
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_lan_") + "/rt.lan"
-    lan.write_lan(src, path)
-    back = lan.read_lan(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_pnm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PNM binary P5 loop (gdal/frmts/raw/pnmdataset.cpp): the 2x2
-    synth tiles through the header+strip-parallel sink (driver writes
-    only the ASCII header; body pwrites at closed-form offsets after
-    it), back via the ehdr raw-strip map-only scan. Checksums equal
-    the mosaic oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import pnm
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_pnm_") + "/rt.pgm"
-    pnm.write_pnm(src, path)
-    back = pnm.read_pnm(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
 def _q_aig_cover_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arc/Info Binary Grid coverage scan (gdal/frmts/aigrid/): the
     reference's own abc3x1 fixture through the block-descriptor
@@ -6121,8 +5872,6 @@ def _q_zmap_sigdem_roundtrip(spark: SparkSession,
     sink, both back via their scans. Byte imagery survives both loops
     exactly (the reference's own byte.tif CreateCopy tests assert
     checksum 4672), so checksums equal the mosaic oracle's."""
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -6140,7 +5889,7 @@ def _q_zmap_sigdem_roundtrip(spark: SparkSession,
             yield pdf
 
     srcf = src.mapInPandas(cast, schema=src.schema)
-    d = tempfile.mkdtemp(prefix="gdal_spark_zs_")
+    d = _scratch("zs")
     rawmisc.write_zmap(srcf, d + "/rt.zmap")
     rawmisc.write_sigdem(srcf, d + "/rt.sigdem")
     a = rawmisc.read_zmap(spark, d + "/rt.zmap",
@@ -6187,26 +5936,6 @@ def _q_dgn_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.aggregate(nums, F.lit(0.0), lambda a, v: a + v), 3)
         .alias("coord_sum"),
     )
-
-
-def _q_pcidsk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCIDSK loop (gdal/frmts/pcidsk/sdk/): the 2x2 synth tiles
-    through the BAND-interleaved .pix sink (512-byte file header +
-    1024-byte channel headers driver-side, band planes pwrite in
-    parallel), back via the strip-parallel scan. The READ side is
-    parity-proven against the reference's own utm.pix (checksum
-    39576, autotest pcidsk.py::test_pcidsk_1; tests/test_pcidsk.py).
-    Checksums equal the mosaic oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import pcidsk
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_pix_") + "/rt.pix"
-    pcidsk.write_pcidsk(src, path)
-    back = pcidsk.read_pcidsk(spark, path, raster_id="byte_like",
-                              zoom=12)
-    return tiling.checksum_table(back)
 
 
 def _q_pds_cover_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6287,212 +6016,6 @@ def _q_isis_cover_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b).unionByName(c)
 
 
-def _q_tga_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TGA loop (gdal/frmts/tga/tgadataset.cpp): the 2x2 synth tiles
-    through the type-3 grayscale sink plus a 3-band stack through the
-    type-2 truecolor sink (BGR pixels packed by one narrow keyed
-    shuffle, bottom-up strips pwrite in parallel), both back via the
-    strip-parallel scan. The READ side is parity-proven against all
-    8 Truevision reference-suite fixtures and the reference's own
-    expected checksums (tests/test_tga.py: RLE + uncompressed, 5-5-5
-    expansion, colormap, v2 footer metadata, alpha semantics).
-    Oracle: localref.sql_bmp_checksums (same two stacks as BMP)."""
-    import tempfile
-
-    from gdal_spark import tga
-
-    d = tempfile.mkdtemp(prefix="gdal_spark_tga_")
-    src8 = synth.tiles_src_df(spark, 2, 2)
-    tga.write_tga(src8, d + "/g8.tga")
-    rgb = None
-    for band, seed in ((1, 1), (2, 9), (3, 17)):
-        b = synth.tiles_src_df(spark, 2, 2, seed=seed,
-                               raster_id="rgb_like").withColumn(
-            "band", F.lit(band).cast("int"))
-        rgb = b if rgb is None else rgb.unionByName(b)
-    tga.write_tga(rgb, d + "/rgb24.tga")
-    back8 = tga.read_tga(spark, d + "/g8.tga", tile_px=256,
-                         raster_id="byte_like", zoom=12)
-    back24 = tga.read_tga(spark, d + "/rgb24.tga", tile_px=256,
-                          raster_id="rgb_like", zoom=12)
-    return tiling.checksum_table(back8.unionByName(back24))
-
-
-def _q_fits_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FITS loop (gdal/frmts/fits/fitsdataset.cpp): the 2x2 synth
-    tiles through the 2880-block sink (cards driver-side, big-endian
-    bottom-up strips pwrite in parallel), back via the map-only
-    bottom-up strip scan. The READ side is parity-proven against the
-    reference's own byte_merc.fits fixture (exact WKT + geotransform
-    of autotest fits.py::test_fits_read_georef_merc, imagery checksum;
-    tests/test_fits.py). Checksums equal the mosaic oracle's."""
-    import tempfile
-
-    from gdal_spark import fits
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_fits_") + "/rt.fits"
-    fits.write_fits(src, path)
-    back = fits.read_fits(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF full loop (gdal/frmts/gif/gifdataset.cpp + the GIF89a
-    spec): the 2x2 synth tiles through the ordered single-stream
-    GIF89a sink (one file = one sequential LZW stream, so the frame
-    is the parallel unit), back via the frame-descriptor scan with
-    ``expand='rgb'`` through the identity grayscale palette — three
-    equal bands, checksummed. LZW is lossless, so checksums must
-    equal the mosaic oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import gif as GIF
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_gif_") + "/rt.gif"
-    GIF.write_gif(src, path)
-    back = GIF.read_gif(spark, path, raster_id="byte_like",
-                        expand="rgb", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BMP full loop (gdal/frmts/bmp/bmpdataset.cpp): the 2x2 synth
-    tiles through the 8-bit paletted sink (parallel pwrite of
-    bottom-up 4-byte-padded scanlines at closed-form offsets), plus a
-    3-band stack through the 24-bit sink (one narrow keyed shuffle
-    interleaves each tile's bands B,G,R — the reference's :573 write
-    order, made batch), both back via the map-only strip scan.
-    Oracle: localref.sql_bmp_checksums."""
-    import tempfile
-
-    from gdal_spark import bmp
-
-    d = tempfile.mkdtemp(prefix="gdal_spark_bmp_")
-    src8 = synth.tiles_src_df(spark, 2, 2)
-    bmp.write_bmp(src8, d + "/g8.bmp")
-    rgb = None
-    for band, seed in ((1, 1), (2, 9), (3, 17)):
-        b = synth.tiles_src_df(spark, 2, 2, seed=seed,
-                               raster_id="rgb_like").withColumn(
-            "band", F.lit(band).cast("int"))
-        rgb = b if rgb is None else rgb.unionByName(b)
-    bmp.write_bmp(rgb, d + "/rgb24.bmp")
-    back8 = bmp.read_bmp(spark, d + "/g8.bmp", tile_px=256,
-                         raster_id="byte_like", zoom=12)
-    back24 = bmp.read_bmp(spark, d + "/rgb24.bmp", tile_px=256,
-                          raster_id="rgb_like", zoom=12)
-    return tiling.checksum_table(back8.unionByName(back24))
-
-
-def _q_surfer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Surfer binary grid loops (gdal/frmts/gsg/gsbgdataset.cpp,
-    gs7bgdataset.cpp): the synth mosaic cast to float32 through the
-    GSBG sink and to float64 through the GS7BG sink (bottom-up rows,
-    node-coordinate extents, distributed non-blank z-range for the
-    header), both back via the map-only strip scan.  Oracle:
-    localref.sql_surfer_checksums."""
-    import tempfile
-
-    from gdal_spark import gsg
-
-    d = tempfile.mkdtemp(prefix="gdal_spark_gsg_")
-    src = synth.tiles_src_df(spark, 2, 2)
-    gsg.write_gsbg(tiling.translate(src, cast_to="float32"),
-                   d + "/g6.grd")
-    gsg.write_gs7bg(tiling.translate(src, cast_to="float64"),
-                    d + "/g7.grd")
-    b6 = gsg.read_gsbg(spark, d + "/g6.grd", tile_px=256,
-                       raster_id="byte_like", zoom=12)
-    b7 = gsg.read_gs7bg(spark, d + "/g7.grd", tile_px=256,
-                        raster_id="gs7_like", zoom=12)
-    return tiling.checksum_table(b6.unionByName(b7))
-
-
-def _q_rst_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Idrisi RST loops (gdal/frmts/idrisi/IdrisiDataset.cpp): the
-    synth tiles through the byte sink, plus a 3-band stack through the
-    rgb24 sink (stored B,G,R — band numbers remap 4-n on both sides),
-    back via the map-only raw scan.  Checksums must equal the
-    source's; oracle shared with the BMP loop (same mosaics)."""
-    import tempfile
-
-    from gdal_spark import idrisi
-
-    d = tempfile.mkdtemp(prefix="gdal_spark_rst_")
-    idrisi.write_rst(synth.tiles_src_df(spark, 2, 2), d + "/g.rst")
-    rgb = None
-    for band, seed in ((1, 1), (2, 9), (3, 17)):
-        b = synth.tiles_src_df(spark, 2, 2, seed=seed,
-                               raster_id="rgb_like").withColumn(
-            "band", F.lit(band).cast("int"))
-        rgb = b if rgb is None else rgb.unionByName(b)
-    idrisi.write_rst(rgb, d + "/c.rst")
-    back1 = idrisi.read_rst(spark, d + "/g.rst", tile_px=256,
-                            raster_id="byte_like", zoom=12)
-    back3 = idrisi.read_rst(spark, d + "/c.rst", tile_px=256,
-                            raster_id="rgb_like", zoom=12)
-    return tiling.checksum_table(back1.unionByName(back3))
-
-
-def _q_ers_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ERMapper ERS loop (gdal/frmts/ers/ersdataset.cpp): a 2-band
-    stack through the BIL sink (nested Begin/End text header
-    driver-side, pixels parallel-pwrite), back via the map-only BIL
-    strip scan.  Oracle: localref.sql_envi_checksums_2x2_2band (same
-    mosaics as the ENVI loop)."""
-    import tempfile
-
-    from gdal_spark import ers
-
-    b1 = synth.tiles_src_df(spark, 2, 2)
-    b2 = synth.tiles_src_df(spark, 2, 2, seed=9).withColumn(
-        "band", F.lit(2).cast("int"))
-    path = tempfile.mkdtemp(prefix="gdal_spark_ers_") + "/rt.ers"
-    ers.write_ers(b1.unionByName(b2), path)
-    back = ers.read_ers(spark, path, tile_px=256, raster_id="byte_like",
-                        zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_dted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DTED full loop (gdal/frmts/dted/dted_api.c, dted_create.c): a
-    synthetic 121x121 int16 level-0 cell with negatives through the
-    column-profile sink (driver writes only UHL/DSI/ACC; one keyed
-    shuffle assembles the format's whole-column checksummed records),
-    back via the strip-parallel map-only scan with checksum
-    verification on. Per-tile checksums must equal the source's."""
-    import tempfile
-
-    from gdal_spark import dted
-
-    src = synth.dem_tiles_df(spark, 121, tile_px=64)
-    path = tempfile.mkdtemp(prefix="gdal_spark_dted_") + "/n43w080.dt0"
-    dted.write_dted(src, path, level=0, tile_px=64)
-    back = dted.read_dted(spark, path, tile_px=64, raster_id="dem_cell",
-                          verify_checksum=True)
-    return tiling.checksum_table(back)
-
-
-def _q_srtmhgt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRTMHGT full loop (gdal/frmts/srtmhgt/srtmhgtdataset.cpp): a
-    1201x1201 int16 cell through the parallel-pwrite big-endian sink
-    (the FILENAME is the georeferencing — the writer derives and
-    enforces N43W080.hgt from the geotransform), back via the map-only
-    raw strip scan. Per-tile checksums must equal the source's."""
-    import tempfile
-
-    from gdal_spark import dted
-
-    src = synth.dem_tiles_df(spark, 1201, tile_px=256)
-    path = tempfile.mkdtemp(prefix="gdal_spark_hgt_") + "/N43W080.hgt"
-    dted.write_srtmhgt(src, path, tile_px=256)
-    back = dted.read_srtmhgt(spark, path, tile_px=256,
-                             raster_id="dem_cell")
-    return tiling.checksum_table(back)
-
-
 def _q_segmentize_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OGRGeometry::segmentize (ogr/ogrlinestring.cpp:2474; also the
     osgeo_utils/samples/densify.py UNIFORM mode): per-doc single-
@@ -6528,11 +6051,7 @@ def _q_dump_overviews(spark: SparkSession, sf_dir: str) -> DataFrame:
     the COG fixture extracted to its own `<base>_<band>_<ovr>.tif`,
     then each dumped file re-scanned and checksummed. Oracle:
     localref.sql_dump_overviews replays the average-overview chain."""
-    import tempfile
-
-    from gdal_spark import geotiff
-
-    d = tempfile.mkdtemp(prefix="gdal_spark_dumpovr_")
+    d = _scratch("dumpovr")
     src = synth.tiles_src_df(spark, 2, 2)
     cog = d + "/good.tif"
     geotiff.write_cog(src, cog, levels=2)
@@ -6572,11 +6091,10 @@ def _q_cog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     internal-overviews error. Message text matches the reference
     script verbatim."""
     import shutil
-    import tempfile
 
-    from gdal_spark import cogcheck, geotiff
+    from gdal_spark import cogcheck
 
-    d = tempfile.mkdtemp(prefix="gdal_spark_cogv_")
+    d = _scratch("cogv")
     src = synth.tiles_src_df(spark, 4, 4)
     cog = d + "/good.tif"
     geotiff.write_cog(src, cog, levels=2)
@@ -6596,26 +6114,6 @@ def _q_cog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _q_tfat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TFAT sharded-MBTiles loop (the fork's
-    frmts/mbtiles/tfatmbtilesdataset.cpp): the 2x2 synth tiles split
-    across 2 shards by the reference's positional ordinal formula
-    (column-major TMS, ceil(ord/TileMaxCount)-1), written with
-    distributed PNG encoding, read back through the XML descriptor +
-    per-shard descriptor-parallel scans. Checksums must equal the
-    source's."""
-    import tempfile
-
-    from gdal_spark import tfat
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    xml = tempfile.mkdtemp(prefix="gdal_spark_tfat_") + "/layer.xml"
-    tfat.write_tfat(src, xml, tile_max_count=2)
-    back = tfat.read_tfat(spark, xml)
-    return tiling.checksum_table(
-        back.withColumn("raster_id", F.lit("byte_like")))
-
-
 def _q_mdreader_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Satellite metadata sweep (the fork's mdreader additions:
     reader_gaofen/tianhui/triplesat/ziyuan.cpp): 25 synthetic scenes
@@ -6625,11 +6123,9 @@ def _q_mdreader_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaced as columns. Oracle: localref.sql_mdreader_scenes replays
     the reference derivations from the shared closed-form fixture
     parameters."""
-    import tempfile
-
     from gdal_spark import mdreader
 
-    d = tempfile.mkdtemp(prefix="gdal_spark_scenes_")
+    d = _scratch("scenes")
     paths = [synth.write_scene_fixture(d, i) for i in range(25)]
     df = mdreader.read_scene_metadata(spark, paths)
     return df.select(
@@ -6638,46 +6134,6 @@ def _q_mdreader_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rpc")["LINE_OFF"].cast("double").alias("line_off"),
         F.col("rpc")["LONG_SCALE"].cast("double").alias("long_scale"),
     )
-
-
-def _q_cnsdtf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CNSDTF grid full loop (the fork's own GB/T 17798-2007 driver,
-    frmts/cnsdtf/cnsdtfdataset.cpp): the 2x2 synth tiles through the
-    byte-faithful sequential text sink (10-token line wrapping,
-    hard-coded ValueType:Integer) and back via the TOKEN-offset
-    parallel scan (a raster row spans many text lines, so the reader
-    prefix-sums per-line token counts with the zipindex trick — no
-    global sort). Keys and geotransforms must survive; per-tile
-    checksums must equal the source's."""
-    import tempfile
-
-    from gdal_spark import cnsdtf
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_cnsdtf_") + "/rt.grd"
-    cnsdtf.write_cnsdtf(src, path)
-    back = cnsdtf.read_cnsdtf(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
-
-
-def _q_envi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ENVI 2-band pixel-interleaved loop (gdal/frmts/envi/
-    envidataset.cpp): a 2-band stack (default-seed + seed-9 synth
-    mosaics) through the BIP sink — one narrow keyed shuffle
-    interleaves each tile's bands into contiguous row buffers — then
-    the map-only scan de-interleaves with numpy reshapes. Oracle:
-    localref.sql_envi_checksums_2x2_2band."""
-    import tempfile
-
-    from gdal_spark import ehdr
-
-    b1 = synth.tiles_src_df(spark, 2, 2)
-    b2 = synth.tiles_src_df(spark, 2, 2, seed=9).withColumn(
-        "band", F.lit(2).cast("int"))
-    path = tempfile.mkdtemp(prefix="gdal_spark_envi_") + "/rt.dat"
-    ehdr.write_envi(b1.unionByName(b2), path, interleave="bip")
-    back = ehdr.read_envi(spark, path, raster_id="byte_like", zoom=12)
-    return tiling.checksum_table(back)
 
 
 def _q_pgdump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6689,8 +6145,6 @@ def _q_pgdump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     newlines/punctuation — the COPY escape/unescape loop must be
     lossless. Oracle: straight SQL over documents (the dump is pure
     transport)."""
-    import tempfile
-
     from gdal_spark import pgdump
 
     d = _read(spark, sf_dir, "documents").select(
@@ -6700,7 +6154,7 @@ def _q_pgdump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(" "),
                  (F.col("doc_id") % 171 - 85).cast("string"),
                  F.lit(")")).alias("wkt"))
-    path = tempfile.mkdtemp(prefix="gdal_spark_pgd_") + "/docs_dump"
+    path = _scratch("pgd") + "/docs_dump"
     pgdump.write_pgdump(d, path, "documents", geom_col="wkt", srid=4326)
     back = pgdump.read_pgdump(spark, path)
     w = pgdump.hexewkb_to_wkt("wkt")
@@ -6721,8 +6175,6 @@ def _q_gpx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     by luck) must survive the attribute text exactly
     (gdal_spark.fmt shortest-round-trip). Oracle: straight SQL over
     documents."""
-    import tempfile
-
     from gdal_spark import xmlvec
 
     d = DRV.with_derived_points(
@@ -6731,7 +6183,7 @@ def _q_gpx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("name"),
         F.concat(F.col("lang"), F.lit(" & "), F.col("source"))
         .alias("desc"))
-    path = tempfile.mkdtemp(prefix="gdal_spark_gpx_") + "/wpts"
+    path = _scratch("gpx") + "/wpts"
     xmlvec.write_gpx(d, path)
     back = xmlvec.read_gpx(spark, path, layer="waypoints")
     return back.select(
@@ -6748,8 +6200,6 @@ def _q_mif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the MIF coordinate text exactly (shortest-round-trip
     fmt), free-text lang/source must survive MID quoting. Oracle:
     straight SQL over documents."""
-    import tempfile
-
     from gdal_spark import mif
 
     d = DRV.with_derived_points(
@@ -6762,7 +6212,7 @@ def _q_mif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("lang"), F.lit(" & "), F.col("source"))
         .alias("lang_source"),
         F.col("n_chars").alias("n_chars")).orderBy("doc_id")
-    path = tempfile.mkdtemp(prefix="gdal_spark_mif_") + "/docs"
+    path = _scratch("mif") + "/docs"
     mif.write_mif(d, path)
     back = mif.read_mif(spark, path + ".mif")
     m = F.regexp_extract("wkt", r"POINT \(([-0-9.eE]+) ([-0-9.eE]+)\)",
@@ -6780,8 +6230,6 @@ def _q_kml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     as Point Placemarks through the parallel sink, back via the
     file-per-task Placemark scan; lon/lat re-extracted from the
     canonical WKT. Oracle: straight SQL over documents."""
-    import tempfile
-
     from gdal_spark import xmlvec
 
     d = DRV.with_derived_points(
@@ -6792,7 +6240,7 @@ def _q_kml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("lon").cast("string"), F.lit(" "),
                  F.col("lat").cast("string"), F.lit(")"))
         .alias("wkt"))
-    path = tempfile.mkdtemp(prefix="gdal_spark_kml_") + "/marks"
+    path = _scratch("kml") + "/marks"
     xmlvec.write_kml(d, path)
     back = xmlvec.read_kml(spark, path)
     return back.select(
@@ -6802,67 +6250,6 @@ def _q_kml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lon"),
         F.regexp_extract("wkt", r" ([-0-9.eE]+)\)", 1).cast("double")
         .alias("lat"))
-
-
-def _q_mbtiles_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MBTiles full loop (gdal/frmts/mbtiles/mbtilesdataset.cpp): the
-    2x2 synth tiles PNG-encoded DISTRIBUTED (pure-zlib codec, one keyed
-    shuffle per tile), driver INSERTs blobs with the TMS row flip
-    (:2903); read back via (zoom, tile_column-range) descriptor
-    windows — works on table- or view-backed `tiles` — with the flip
-    undone (:1262). Checksums must equal the source's."""
-    import tempfile
-
-    from gdal_spark import mbtiles
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gdal_spark_mbt_") + "/rt.mbtiles"
-    mbtiles.write_mbtiles(src, path, name="byte_like")
-    back = mbtiles.read_mbtiles(spark, path, raster_id="byte_like")
-    return tiling.checksum_table(back)
-
-
-def _q_mbtiles_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MBTiles format=jpg loop (mbtilesdataset.cpp TILE_FORMAT=JPEG;
-    frmts/jpeg/jpgdataset.cpp): tiles encode DISTRIBUTED through the
-    from-scratch baseline T.81 codec (jpeg.py — exact-DCT einsum,
-    Annex K tables), driver INSERTs blobs, read back via descriptor
-    windows decoding with the 16-bit-LUT Huffman reader. JPEG is
-    lossy but decode(encode(x)) is deterministic, so checksums must
-    equal the sequential oracle's exactly."""
-    import tempfile
-
-    from gdal_spark import mbtiles
-
-    src = synth.tiles_src_df(spark, 2, 2, raster_id="jpeg_like")
-    path = tempfile.mkdtemp(prefix="gdal_spark_mbtj_") + "/rt.mbtiles"
-    mbtiles.write_mbtiles(src, path, name="jpeg_like",
-                          tile_format="jpg", quality=85)
-    back = mbtiles.read_mbtiles(spark, path, raster_id="jpeg_like")
-    return tiling.checksum_table(back)
-
-
-def _q_tiff_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG-compressed tiled GeoTIFF loop (gdal_translate -co
-    COMPRESS=JPEG; frmts/gtiff/gt_jpeg_copy.cpp + libtiff
-    tif_jpeg.c): the 2x2 synth tiles encode DISTRIBUTED twice (pass 1
-    sizes -> driver IFD layout, pass 2 pwrite — compressed sizes are
-    data-dependent so the uncompressed writer's closed-form plan
-    can't apply), then read back through the compression-7 branch of
-    the distributed scan. decode(encode(x)) is deterministic, so
-    checksums must equal the sequential oracle's exactly — the SAME
-    oracle as the MBTiles-JPEG loop, proving both containers carry
-    the identical codec."""
-    import tempfile
-
-    from gdal_spark import geotiff
-
-    src = synth.tiles_src_df(spark, 2, 2, raster_id="jpeg_like")
-    path = tempfile.mkdtemp(prefix="gdal_spark_tjpg_") + "/rt.tif"
-    geotiff.write_geotiff_jpeg(src, path, quality=85)
-    back = geotiff.read_geotiff(spark, path, raster_id="jpeg_like",
-                                zoom=12)
-    return tiling.checksum_table(back)
 
 
 def _q_webtiles_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6886,28 +6273,6 @@ def _q_webtiles_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tiling.checksum_table(tiles)
 
 
-def _q_xyz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XYZ driver loop (gdal/frmts/xyz/xyzdataset.cpp): gdal2xyz dump
-    of the 2x2 synth tiles -> text -> distributed grid re-inference
-    (one aggregation, no serial pre-scan) -> tiles -> checksums."""
-    import tempfile
-
-    from gdal_spark import asciigrid
-
-    src = synth.tiles_src_df(spark, 2, 2)
-    xyz = RST.to_xyz(src).select(
-        F.col("gx").cast("string"), F.col("gy").cast("string"),
-        F.col("value").cast("string"))
-    path = tempfile.mkdtemp(prefix="gdal_spark_xyz_") + "/pts"
-    xyz.write.mode("overwrite").option("sep", " ").csv(path)
-    back = asciigrid.read_xyz(spark, path, raster_id="byte_like", zoom=12)
-    # the synth grid keys tiles TMS-style (tile_y up, synth.py
-    # tiles_src_df geotransform); the XYZ reconstruction is top-down —
-    # flip back to the source keying for the per-tile compare
-    back = back.withColumn("tile_y", (F.lit(1) - F.col("tile_y")).cast("int"))
-    return tiling.checksum_table(back)
-
-
 def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OGR CSV driver full loop (ogr/ogrsf_frmts/csv/ogrcsvlayer.cpp):
     documents' scalar fields through the parallel CSV sink (Spark
@@ -6915,13 +6280,11 @@ def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     AutodetectFieldTypes pass (:1050 — one bit_or aggregation, not a
     serial 1 MB prefix read), values must survive exactly. doc_id
     autodetects Integer at this SF; cast to long for the compare."""
-    import tempfile
-
     from gdal_spark import csvdrv
 
     d = _read(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars")
-    path = tempfile.mkdtemp(prefix="gdal_spark_csv_") + "/docs"
+    path = _scratch("csv") + "/docs"
     csvdrv.write_csv_layer(d, path)
     back = csvdrv.read_csv_layer(spark, path, autodetect_type=True,
                                  with_fid=False)
@@ -7713,6 +7076,101 @@ def _ogr_style_query_sql() -> str:
         """
 
 
+# ============================================================ round trips
+# A raster driver's write -> read -> checksum loop, GDAL autotest's
+# GDALTest.testCreateCopy (autotest/pymod/gdaltest.py): each loop is one
+# REGISTRY row built by _roundtrip from a writer, a reader and a source.
+_BYTE = {"raster_id": "byte_like", "zoom": 12}
+
+
+def _tiles(n: int = 2, raster_id: str = "byte_like",
+           cast_to: str | None = None) -> Callable[[SparkSession], DataFrame]:
+    """Source: the n x n synth mosaic, cast to `cast_to` if given."""
+    def make(spark: SparkSession) -> DataFrame:
+        src = synth.tiles_src_df(spark, n, n, raster_id=raster_id)
+        return src if cast_to is None else tiling.translate(
+            src, cast_to=cast_to)
+    return make
+
+
+def _stack(*seeds: int, raster_id: str = "byte_like"
+           ) -> Callable[[SparkSession], DataFrame]:
+    """Source: 2x2 synth mosaics as bands 1.., band b drawn with
+    seeds[b - 1]."""
+    def make(spark: SparkSession) -> DataFrame:
+        return reduce(DataFrame.unionByName, (
+            synth.tiles_src_df(spark, 2, 2, seed=seed, raster_id=raster_id)
+            .withColumn("band", F.lit(band).cast("int"))
+            for band, seed in enumerate(seeds, 1)))
+    return make
+
+
+def _roundtrip(write: Callable, read: Callable, name: str,
+               src: Callable[[SparkSession], DataFrame] = _tiles()
+               ) -> Callable[[SparkSession, str], DataFrame]:
+    """The builder of one loop: `write(src(spark), path)` to a fresh
+    scratch file `name`, then the per-tile checksums of
+    `read(spark, path)`."""
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        path = os.path.join(_scratch("rt"), name)
+        write(src(spark), path)
+        return tiling.checksum_table(read(spark, path))
+    return build
+
+
+def _union(*builds: Callable[[SparkSession, str], DataFrame]
+           ) -> Callable[[SparkSession, str], DataFrame]:
+    """One builder returning the rows of all of `builds`."""
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return reduce(DataFrame.unionByName,
+                      (b(spark, sf_dir) for b in builds))
+    return build
+
+
+def _gray_rgb(write: Callable, read: Callable, ext: str
+              ) -> Callable[[SparkSession, str], DataFrame]:
+    """The gray 2x2 mosaic and a 3-band rgb_like stack, each through
+    its own file (oracle: localref.sql_bmp_checksums)."""
+    return _union(*(
+        _roundtrip(write, partial(read, tile_px=256, raster_id=rid, zoom=12),
+                   f"{stem}.{ext}", src)
+        for stem, rid, src in (
+            ("g8", "byte_like", _tiles()),
+            ("rgb24", "rgb_like", _stack(1, 9, 17, raster_id="rgb_like")))))
+
+
+def _flip_y(read: Callable, n: int
+            ) -> Callable[[SparkSession, str], DataFrame]:
+    """`read`, its top-down tile rows re-keyed to the synth table's TMS
+    rows (tile_y counts up from the bottom of n rows)."""
+    def flipped(spark: SparkSession, path: str) -> DataFrame:
+        return read(spark, path).withColumn(
+            "tile_y", (F.lit(n - 1) - F.col("tile_y")).cast("int"))
+    return flipped
+
+
+def _write_xyz(src: DataFrame, path: str) -> None:
+    """gdal2xyz: one `x y value` text line per pixel."""
+    RST.to_xyz(src).select(
+        F.col("gx").cast("string"), F.col("gy").cast("string"),
+        F.col("value").cast("string"),
+    ).write.mode("overwrite").option("sep", " ").csv(path)
+
+
+def _read_cog_levels(spark: SparkSession, path: str) -> DataFrame:
+    """A COG's full-resolution IFD and both overviews, one zoom each."""
+    return reduce(DataFrame.unionByName, (
+        geotiff.read_geotiff(spark, path, ifd=i, raster_id="byte_like",
+                             zoom=12 - i)
+        for i in range(3)))
+
+
+def _read_tfat(spark: SparkSession, path: str) -> DataFrame:
+    """read_tfat, its rows keyed with the synth source's raster id."""
+    return tfat.read_tfat(spark, path).withColumn(
+        "raster_id", F.lit("byte_like"))
+
+
 # ================================================================ registry
 class Query(NamedTuple):
     """One contract query: the builder that runs it on Spark, its
@@ -7733,21 +7191,50 @@ REGISTRY: dict[str, Query] = {
         "SELECT doc_id, lang, source, n_chars FROM documents"),
     "gdalinfo_report": Query(_q_gdalinfo_report, localref.sql_gdalinfo_2x2),
     "ogrinfo_zones": Query(_q_ogrinfo_zones, _ogrinfo_zones_sql),
-    "cog_roundtrip": Query(_q_cog_roundtrip, localref.sql_cog_checksums),
+    # gdal/frmts/gtiff/cogdriver.cpp: 2 average overview levels, each
+    # IFD read back at its own zoom
+    "cog_roundtrip": Query(
+        _roundtrip(partial(geotiff.write_cog, levels=2), _read_cog_levels,
+                   "rt.tif"),
+        localref.sql_cog_checksums),
+    # gdal/frmts/aaigrid/aaigriddataset.cpp
     "aaigrid_roundtrip": Query(
-        _q_aaigrid_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(asciigrid.write_aaigrid,
+                   partial(asciigrid.read_aaigrid, **_BYTE), "rt.asc"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/xyz/xyzdataset.cpp: the reconstruction is top-down
     "xyz_roundtrip": Query(
-        _q_xyz_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(_write_xyz,
+                   _flip_y(partial(asciigrid.read_xyz, **_BYTE), 2), "pts"),
+        localref.sql_raster_checksums_2x2),
     "webtiles_xyz": Query(_q_webtiles_xyz, localref.sql_raster_checksums_2x2),
+    # gdal/frmts/raw/ehdrdataset.cpp
     "ehdr_roundtrip": Query(
-        _q_ehdr_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
-    "bmp_roundtrip": Query(_q_bmp_roundtrip, localref.sql_bmp_checksums),
-    "gif_roundtrip": Query(_q_gif_roundtrip, localref.sql_gif_checksums),
+        _roundtrip(partial(ehdr.write_ehdr, layout="bil"),
+                   partial(ehdr.read_ehdr, **_BYTE), "rt.bil"),
+        localref.sql_raster_checksums_2x2, suite=True),
+    # gdal/frmts/bmp/bmpdataset.cpp: 8-bit paletted and 24-bit sinks
+    "bmp_roundtrip": Query(
+        _gray_rgb(bmp.write_bmp, bmp.read_bmp, "bmp"),
+        localref.sql_bmp_checksums),
+    # gdal/frmts/gif/gifdataset.cpp: read through the identity palette
+    "gif_roundtrip": Query(
+        _roundtrip(GIF.write_gif, partial(GIF.read_gif, expand="rgb", **_BYTE),
+                   "rt.gif"),
+        localref.sql_gif_checksums),
+    # gdal/frmts/raw/pnmdataset.cpp
     "pnm_roundtrip": Query(
-        _q_pnm_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(pnm.write_pnm, partial(pnm.read_pnm, **_BYTE), "rt.pgm"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/fits/fitsdataset.cpp
     "fits_roundtrip": Query(
-        _q_fits_roundtrip, localref.sql_raster_checksums_2x2),
-    "tga_roundtrip": Query(_q_tga_roundtrip, localref.sql_bmp_checksums),
+        _roundtrip(fits.write_fits, partial(fits.read_fits, **_BYTE),
+                   "rt.fits"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/tga/tgadataset.cpp: type-3 gray and type-2 truecolor
+    "tga_roundtrip": Query(
+        _gray_rgb(tga.write_tga, tga.read_tga, "tga"),
+        localref.sql_bmp_checksums),
     "aig_cover_ref": Query(
         _q_aig_cover_ref,
         "SELECT 'abc3x1' AS raster_id, 1 AS band, 0 AS tile_x,"
@@ -7761,8 +7248,11 @@ REGISTRY: dict[str, Query] = {
         " 926.1152999999999e0 AS gt1,"
         " 3852176.5903499997e0 AS gt3,"
         " -926.1152999999999e0 AS gt5"),
+    # gdal/frmts/pcidsk/sdk/
     "pcidsk_roundtrip": Query(
-        _q_pcidsk_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(pcidsk.write_pcidsk, partial(pcidsk.read_pcidsk, **_BYTE),
+                   "rt.pix"),
+        localref.sql_raster_checksums_2x2),
     "tab_all_geoms": Query(
         _q_tab_all_geoms,
         "SELECT row_number() OVER () AS fid,"
@@ -7838,35 +7328,85 @@ REGISTRY: dict[str, Query] = {
         " ('isis3_detached', 1, 0, 0, 0, 9978),"
         " ('isis3_tiled', 1, 0, 0, 0, 42403))"
         " t(raster_id, band, zoom, tile_x, tile_y, checksum)"),
-    "bt_roundtrip": Query(_q_bt_roundtrip, localref.sql_raster_checksums_2x2),
+    # gdal/frmts/raw/btdataset.cpp: int16, column-major
+    "bt_roundtrip": Query(
+        _roundtrip(btkro.write_bt, partial(btkro.read_bt, **_BYTE), "rt.bt",
+                   src=_tiles(cast_to="int16")),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/raw/krodataset.cpp
     "kro_roundtrip": Query(
-        _q_kro_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(btkro.write_kro, partial(btkro.read_kro, **_BYTE),
+                   "rt.kro"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/raw/rrasterdataset.cpp
     "rraster_roundtrip": Query(
-        _q_rraster_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(rawlabels.write_rraster,
+                   partial(rawlabels.read_rraster, **_BYTE), "rt.grd"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/hfa/
     "hfa_roundtrip": Query(
-        _q_hfa_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(hfa.write_hfa, partial(hfa.read_hfa, **_BYTE), "rt.img"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/saga/sagadataset.cpp
     "saga_roundtrip": Query(
-        _q_saga_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(saga.write_saga, partial(saga.read_saga, **_BYTE),
+                   "rt.sgrd"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/raw/landataset.cpp
     "lan_roundtrip": Query(
-        _q_lan_roundtrip, localref.sql_raster_checksums_2x2),
+        _roundtrip(lan.write_lan, partial(lan.read_lan, **_BYTE), "rt.lan"),
+        localref.sql_raster_checksums_2x2),
+    # gdal/frmts/gsg/gsbgdataset.cpp, gs7bgdataset.cpp: float32 and
+    # float64 sinks
     "surfer_roundtrip": Query(
-        _q_surfer_roundtrip, localref.sql_surfer_checksums),
-    "rst_roundtrip": Query(_q_rst_roundtrip, localref.sql_bmp_checksums),
+        _union(
+            _roundtrip(gsg.write_gsbg,
+                       partial(gsg.read_gsbg, tile_px=256, **_BYTE),
+                       "g6.grd", src=_tiles(cast_to="float32")),
+            _roundtrip(gsg.write_gs7bg,
+                       partial(gsg.read_gs7bg, tile_px=256,
+                               raster_id="gs7_like", zoom=12),
+                       "g7.grd", src=_tiles(cast_to="float64"))),
+        localref.sql_surfer_checksums),
+    # gdal/frmts/idrisi/IdrisiDataset.cpp: byte and rgb24 sinks
+    "rst_roundtrip": Query(
+        _gray_rgb(idrisi.write_rst, idrisi.read_rst, "rst"),
+        localref.sql_bmp_checksums),
+    # gdal/frmts/ers/ersdataset.cpp: 2 bands, BIL
     "ers_roundtrip": Query(
-        _q_ers_roundtrip, localref.sql_envi_checksums_2x2_2band),
+        _roundtrip(ers.write_ers, partial(ers.read_ers, tile_px=256, **_BYTE),
+                   "rt.ers", src=_stack(synth.SEED, 9)),
+        localref.sql_envi_checksums_2x2_2band),
+    # gdal/frmts/dted/dted_api.c, dted_create.c: a 121x121 level-0 cell
     "dted_roundtrip": Query(
-        _q_dted_roundtrip,
+        _roundtrip(partial(dted.write_dted, level=0, tile_px=64),
+                   partial(dted.read_dted, tile_px=64, raster_id="dem_cell",
+                           verify_checksum=True),
+                   "n43w080.dt0",
+                   src=partial(synth.dem_tiles_df, npx=121, tile_px=64)),
         partial(localref.sql_dem_checksums, 121, 64, "dem_cell"), suite=True),
+    # gdal/frmts/srtmhgt/srtmhgtdataset.cpp: the file name is the
+    # georeferencing
     "srtmhgt_roundtrip": Query(
-        _q_srtmhgt_roundtrip,
+        _roundtrip(partial(dted.write_srtmhgt, tile_px=256),
+                   partial(dted.read_srtmhgt, tile_px=256,
+                           raster_id="dem_cell"),
+                   "N43W080.hgt",
+                   src=partial(synth.dem_tiles_df, npx=1201, tile_px=256)),
         partial(localref.sql_dem_checksums, 1201, 256, "dem_cell"),
         suite=True),
+    # the fork's frmts/cnsdtf/cnsdtfdataset.cpp (GB/T 17798-2007)
     "cnsdtf_roundtrip": Query(
-        _q_cnsdtf_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+        _roundtrip(cnsdtf.write_cnsdtf, partial(cnsdtf.read_cnsdtf, **_BYTE),
+                   "rt.grd"),
+        localref.sql_raster_checksums_2x2, suite=True),
     "mdreader_scenes": Query(
         _q_mdreader_scenes, localref.sql_mdreader_scenes, suite=True),
+    # the fork's frmts/mbtiles/tfatmbtilesdataset.cpp: 2 shards
     "tfat_roundtrip": Query(
-        _q_tfat_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+        _roundtrip(partial(tfat.write_tfat, tile_max_count=2), _read_tfat,
+                   "layer.xml"),
+        localref.sql_raster_checksums_2x2, suite=True),
     "cog_validate": Query(_q_cog_validate, """
             SELECT * FROM (VALUES
               ('plain', 'WARNING', 'The file is greater than 512xH or ' ||
@@ -7909,15 +7449,33 @@ REGISTRY: dict[str, Query] = {
                          END, 5) AS y
             FROM k, UNNEST(generate_series(0, n + 1)) AS t(j)
         """, suite=True),
+    # gdal/frmts/envi/envidataset.cpp: 2 bands, BIP
     "envi_roundtrip": Query(
-        _q_envi_roundtrip, localref.sql_envi_checksums_2x2_2band, suite=True),
+        _roundtrip(partial(ehdr.write_envi, interleave="bip"),
+                   partial(ehdr.read_envi, **_BYTE), "rt.dat",
+                   src=_stack(synth.SEED, 9)),
+        localref.sql_envi_checksums_2x2_2band, suite=True),
+    # gdal/frmts/mbtiles/mbtilesdataset.cpp: TMS row flip at :2903,
+    # undone at :1262
     "mbtiles_roundtrip": Query(
-        _q_mbtiles_roundtrip, localref.sql_raster_checksums_2x2, suite=True),
+        _roundtrip(partial(mbtiles.write_mbtiles, name="byte_like"),
+                   partial(mbtiles.read_mbtiles, raster_id="byte_like"),
+                   "rt.mbtiles"),
+        localref.sql_raster_checksums_2x2, suite=True),
+    # mbtilesdataset.cpp TILE_FORMAT=JPEG; frmts/jpeg/jpgdataset.cpp
     "mbtiles_jpeg_roundtrip": Query(
-        _q_mbtiles_jpeg_roundtrip,
+        _roundtrip(partial(mbtiles.write_mbtiles, name="jpeg_like",
+                           tile_format="jpg", quality=85),
+                   partial(mbtiles.read_mbtiles, raster_id="jpeg_like"),
+                   "rt.mbtiles", src=_tiles(raster_id="jpeg_like")),
         partial(localref.sql_mbtiles_jpeg_checksums, 85), suite=True),
+    # frmts/gtiff/gt_jpeg_copy.cpp + libtiff tif_jpeg.c: the same codec
+    # and oracle as the MBTiles-JPEG loop
     "tiff_jpeg_roundtrip": Query(
-        _q_tiff_jpeg_roundtrip,
+        _roundtrip(partial(geotiff.write_geotiff_jpeg, quality=85),
+                   partial(geotiff.read_geotiff, raster_id="jpeg_like",
+                           zoom=12),
+                   "rt.tif", src=_tiles(raster_id="jpeg_like")),
         partial(localref.sql_mbtiles_jpeg_checksums, 85)),
     "pgdump_roundtrip": Query(_q_pgdump_roundtrip, """
             SELECT doc_id, text, lang, n_chars,
@@ -8556,8 +8114,12 @@ REGISTRY: dict[str, Query] = {
         _q_raster_checksums, localref.sql_raster_checksums),
     # a faithful GeoTIFF roundtrip reproduces the source tile table
     # exactly, so it answers to the raster_checksums oracle
+    # gdal/frmts/gtiff
     "geotiff_roundtrip": Query(
-        _q_geotiff_roundtrip, localref.sql_raster_checksums),
+        _roundtrip(geotiff.write_geotiff,
+                   partial(geotiff.read_geotiff, **_BYTE), "rt.tif",
+                   src=_tiles(4)),
+        localref.sql_raster_checksums),
     "geotiff_byte_ref": Query(
         _q_geotiff_byte_ref,
         "SELECT 'byte' AS raster_id, 1 AS band, 0 AS tile_x, 0 AS tile_y,"
@@ -8575,8 +8137,13 @@ REGISTRY: dict[str, Query] = {
         " 3751320.0 AS gt3, -60.0 AS gt5"),
     "gpkg_roundtrip": Query(_q_gpkg_roundtrip, partial(_zone_attrs_sql, 1)),
     # a faithful tile roundtrip reproduces the synth tile table
+    # ogr/ogrsf_frmts/gpkg: the spec's tile_row is top-origin
     "gpkg_tiles_roundtrip": Query(
-        _q_gpkg_tiles_roundtrip, localref.sql_raster_checksums),
+        _roundtrip(partial(GPKG.write_gpkg_tiles, srs_id=3857),
+                   _flip_y(partial(GPKG.read_gpkg_tiles,
+                                   raster_id="byte_like"), 4),
+                   "rt.gpkg", src=_tiles(4)),
+        localref.sql_raster_checksums),
     "enhance_equalize_checksums": Query(
         _q_enhance_equalize, localref.sql_enhance_checksums, suite=True),
     "lut_checksums": Query(

@@ -23,7 +23,6 @@ legacy wkb25DBit 0x80000000 form the reference also accepts
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 

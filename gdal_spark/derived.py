@@ -21,7 +21,6 @@ The oracle checks the engine, not itself.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -37,7 +37,6 @@ descriptor row per file."""
 from __future__ import annotations
 
 import math
-import os
 import struct
 
 import pandas as pd

@@ -29,7 +29,6 @@ constant-size shuffle, so there is nothing to approximate away.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .raster import histogram

@@ -29,7 +29,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row

@@ -32,7 +32,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 END = "</w>"
 _WORD_RE = re.compile(r"\w+|[^\w\s]", re.UNICODE)

@@ -20,8 +20,6 @@ All batch functions take numpy arrays and never loop per row in Python
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
 GOLDEN = 0.6180339887498949  # frac(phi)

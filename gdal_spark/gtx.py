@@ -29,7 +29,7 @@ import io
 import struct
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 NODATA = -88.8888

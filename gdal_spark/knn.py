@@ -26,14 +26,13 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import geomlite as G
-from .cells import geo_cell, np_geo_cell, pack_geo_cell
+from .cells import geo_cell, pack_geo_cell
 
 
 def _haversine_col(lon1, lat1, lon2, lat2):

@@ -29,9 +29,7 @@ output tile) — map-only, zero shuffles."""
 
 from __future__ import annotations
 
-import math
 import os
-import re
 
 import numpy as np
 import pandas as pd

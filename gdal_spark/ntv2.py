@@ -33,7 +33,6 @@ reshuffles at any corpus size.
 from __future__ import annotations
 
 import io
-import math
 import struct
 
 import numpy as np

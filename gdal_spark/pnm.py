@@ -23,7 +23,6 @@ from __future__ import annotations
 import os
 import re
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from .ehdr import _collect_meta, _write_raw_data, read_raw

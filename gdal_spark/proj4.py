@@ -24,7 +24,6 @@ math (presets are native-unit, e.g. the Trinidad links grid).
 from __future__ import annotations
 
 import itertools
-import math
 
 from . import crs
 

@@ -34,8 +34,6 @@ partitions), never O(n1*n2).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T

@@ -38,9 +38,8 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from . import geomlite as G
-from .cells import (EARTH_RADIUS, ORIGIN_SHIFT, TILE_SIZE, clamp_tile,
-                    lonlat_to_meters, meters_to_tile_tms, quadkey, resolution,
-                    tms_to_google)
+from .cells import (TILE_SIZE, clamp_tile, lonlat_to_meters,
+                    meters_to_tile_tms, quadkey, tms_to_google)
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
 
 
@@ -1226,9 +1225,11 @@ def retile(tiles: DataFrame, new_px: int,
     gdal_merge.py): splitting (new < old) is map-only — each tile emits
     its sub-tiles; coarsening (new > old, must divide evenly) groups
     the contributing tiles per output key and pastes — the only
-    shuffle carries exactly the pixels being regrouped."""
-    first = tiles.select("width", "height").first()
-    old_px = int(first["width"])
+    shuffle carries exactly the pixels being regrouped. The old tile
+    size is the largest tile side; partial edge tiles (right and
+    bottom, top-down grids) stay partial both ways."""
+    old_px = int(tiles.select(
+        F.max(F.greatest("width", "height"))).first()[0])
     if new_px == old_px:
         return tiles
     if old_px % new_px == 0:  # split: map-only
@@ -1240,16 +1241,15 @@ def retile(tiles: DataFrame, new_px: int,
                 for r in pdf.itertuples(index=False):
                     arr = _decode(r.data, r.dtype, r.height, r.width)
                     gt = list(r.geotransform)
-                    for sy in range(k):
-                        for sx in range(k):
-                            piece = arr[sy * new_px : (sy + 1) * new_px,
-                                        sx * new_px : (sx + 1) * new_px]
+                    for sy in range(0, arr.shape[0], new_px):
+                        for sx in range(0, arr.shape[1], new_px):
                             rows.append(tile_row(
                                 dst_raster_id or r.raster_id, r.band, r.zoom,
-                                int(r.tile_x) * k + sx,
-                                int(r.tile_y) * k + sy, piece,
-                                [gt[0] + sx * new_px * gt[1], gt[1], 0.0,
-                                 gt[3] + sy * new_px * gt[5], 0.0, gt[5]],
+                                int(r.tile_x) * k + sx // new_px,
+                                int(r.tile_y) * k + sy // new_px,
+                                arr[sy:sy + new_px, sx:sx + new_px],
+                                [gt[0] + sx * gt[1], gt[1], 0.0,
+                                 gt[3] + sy * gt[5], 0.0, gt[5]],
                                 nodata=r.nodata, crs=r.crs, dtype=r.dtype))
                 yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
@@ -1264,13 +1264,22 @@ def retile(tiles: DataFrame, new_px: int,
     def paste(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ntx, nty = int(key[0]), int(key[1])
         f0 = pdf.iloc[0]
-        big = np.full((new_px, new_px), float(f0["nodata"]))
+        pieces = []
+        big_w = big_h = new_px
         for i in range(len(pdf)):
             row = pdf.iloc[i]
-            arr = _decode(row["data"], row["dtype"], int(row["height"]), int(row["width"]))
+            w, h = int(row["width"]), int(row["height"])
             ox = (int(row["tile_x"]) - ntx * k) * old_px
             oy = (int(row["tile_y"]) - nty * k) * old_px
-            big[oy : oy + old_px, ox : ox + old_px] = arr
+            pieces.append((ox, oy, _decode(row["data"], row["dtype"], h, w)))
+            # a partial tile is the raster's edge: the output ends there
+            if w < old_px:
+                big_w = ox + w
+            if h < old_px:
+                big_h = oy + h
+        big = np.full((big_h, big_w), float(f0["nodata"]))
+        for ox, oy, arr in pieces:
+            big[oy : oy + arr.shape[0], ox : ox + arr.shape[1]] = arr
         gt = list(f0["geotransform"])
         ox0 = (int(f0["tile_x"]) - ntx * k) * old_px
         oy0 = (int(f0["tile_y"]) - nty * k) * old_px

@@ -60,7 +60,6 @@ import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

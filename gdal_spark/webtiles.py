@@ -30,7 +30,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .jpeg import decode_jpeg
 from .png import decode_png

@@ -33,7 +33,6 @@ import xml.etree.ElementTree as ET
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import blockscan

@@ -4,7 +4,6 @@ CreateCopy :1180); frmts/xyz/xyzdataset.cpp (grid inference :531,
 point registration :1106); autotest/gdrivers/aaigrid.py + xyz.py."""
 
 import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -16,8 +15,8 @@ from gdal_spark.tiling import _decode
 
 
 @pytest.fixture(scope="module")
-def tmp():
-    yield tempfile.mkdtemp(prefix="gdal_spark_asc_")
+def tmp(tmp_path_factory):
+    yield str(tmp_path_factory.mktemp("asc"))
 
 
 def _grid_text(arr, nodata=-9999, cellsize=10.0, xll=100.0, yll=200.0):

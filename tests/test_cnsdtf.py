@@ -3,7 +3,6 @@ format. Reference: frmts/cnsdtf/cnsdtfdataset.cpp (Identify :489,
 ParseHeader :703, CreateCopy :936)."""
 
 import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -13,8 +12,8 @@ from gdal_spark.tiling import _decode
 
 
 @pytest.fixture(scope="module")
-def tmp():
-    yield tempfile.mkdtemp(prefix="gdal_spark_cnsdtf_")
+def tmp(tmp_path_factory):
+    yield str(tmp_path_factory.mktemp("cnsdtf"))
 
 
 HDR = ("DataMark:CNSDTF-DEM\n"

@@ -6,7 +6,6 @@ written before full res) and the published COG layout
 the same ordering via a validate script."""
 
 import os
-import tempfile
 
 import pytest
 
@@ -16,8 +15,8 @@ from gdal_spark.synth import tile_pixels_np
 
 
 @pytest.fixture(scope="module")
-def cog_path(spark):
-    d = tempfile.mkdtemp(prefix="gdal_spark_cog_")
+def cog_path(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("cog"))
     p = os.path.join(d, "t.cog.tif")
     tiles = synth.tiles_src_df(spark, 2, 2)
     meta = geotiff.write_cog(tiles, p, levels=2)

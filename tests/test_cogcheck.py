@@ -3,7 +3,6 @@ validate_cloud_optimized_geotiff.py) over the engine's own GeoTIFF
 structures."""
 
 import os
-import tempfile
 
 import pytest
 
@@ -11,8 +10,8 @@ from gdal_spark import cogcheck, geotiff, synth
 
 
 @pytest.fixture(scope="module")
-def tmp():
-    yield tempfile.mkdtemp(prefix="gdal_spark_cog_")
+def tmp(tmp_path_factory):
+    yield str(tmp_path_factory.mktemp("cog"))
 
 
 @pytest.fixture(scope="module")

@@ -5,7 +5,6 @@ FIDs, writer roundtrip. Reference: ogr/ogrsf_frmts/csv/ogrcsvlayer.cpp
 autotest/ogr/ogr_csv.py exercises the same surfaces."""
 
 import os
-import tempfile
 
 import pytest
 
@@ -20,9 +19,8 @@ def _write(tmp, name, text):
 
 
 @pytest.fixture(scope="module")
-def tmp():
-    d = tempfile.mkdtemp(prefix="gdal_spark_csv_")
-    yield d
+def tmp(tmp_path_factory):
+    yield str(tmp_path_factory.mktemp("csv"))
 
 
 def test_autodetect_lattice(spark, tmp):

@@ -2,7 +2,6 @@
 frmts/envi/envidataset.cpp)."""
 
 import os
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -118,13 +117,13 @@ def test_ehdr_big_endian_read(spark, tmp_path):
     np.testing.assert_array_equal(got[1], a.astype(np.uint16))
 
 
-def test_ehdr_synth_2x2_checksums(spark):
+def test_ehdr_synth_2x2_checksums(spark, tmp_path):
     """The contract query path: synth 2x2 -> EHdr BIL -> checksums
     equal the source table's."""
     src = synth.tiles_src_df(spark, 2, 2)
     want = {(r.tile_x, r.tile_y): r.checksum
             for r in tiling.checksum_table(src).collect()}
-    path = tempfile.mkdtemp(prefix="gdal_spark_ehdr_") + "/rt.bil"
+    path = str(tmp_path / "rt.bil")
     ehdr.write_ehdr(src, path)
     back = ehdr.read_ehdr(spark, path, raster_id="byte_like", zoom=12)
     got = {(r.tile_x, r.tile_y): r.checksum

@@ -5,7 +5,6 @@ byte.tif geotransform) and poly.gpkg.sql (the poly fixture feature
 as a GPB blob)."""
 
 import sqlite3
-import tempfile
 
 import numpy as np
 import pytest
@@ -81,7 +80,7 @@ def test_read_byte_gpkg_tiles(spark):
     assert r.crs == "EPSG:26711"
 
 
-def test_vector_roundtrip(spark):
+def test_vector_roundtrip(spark, tmp_path):
     src = spark.createDataFrame(
         [
             ("a", 1, 2.5, "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"),
@@ -90,7 +89,7 @@ def test_vector_roundtrip(spark):
         ],
         "name string, v long, x double, wkt string",
     )
-    path = tempfile.mkdtemp(prefix="gpkg_rt_") + "/rt.gpkg"
+    path = str(tmp_path / "rt.gpkg")
     n = gpkg.write_gpkg(src, path, table="zones", srs_id=4326)
     assert n == 3
     back = gpkg.read_gpkg(spark, path).orderBy("fid").collect()
@@ -108,12 +107,12 @@ def test_vector_roundtrip(spark):
     assert (mnx, mny, mxx, mxy) == (0.0, 0.0, 4.0, 4.0)
 
 
-def test_vector_scan_is_split(spark):
+def test_vector_scan_is_split(spark, tmp_path):
     """rows_per_batch slices the rowid space -> a multi-task scan."""
     src = spark.createDataFrame(
         [(i, f"POINT ({i} {i})") for i in range(100)], "k long, wkt string"
     )
-    path = tempfile.mkdtemp(prefix="gpkg_split_") + "/s.gpkg"
+    path = str(tmp_path / "s.gpkg")
     gpkg.write_gpkg(src, path, table="pts")
     back = gpkg.read_gpkg(spark, path, rows_per_batch=16)
     assert back.count() == 100
@@ -121,9 +120,9 @@ def test_vector_scan_is_split(spark):
     assert ks == list(range(100))
 
 
-def test_tiles_roundtrip_content_and_georef(spark):
+def test_tiles_roundtrip_content_and_georef(spark, tmp_path):
     tiles = synth.tiles_src_df(spark, 2, 2)
-    path = tempfile.mkdtemp(prefix="gpkg_tiles_") + "/t.gpkg"
+    path = str(tmp_path / "t.gpkg")
     gpkg.write_gpkg_tiles(tiles, path, srs_id=3857)
     back = gpkg.read_gpkg_tiles(spark, path, raster_id="byte_like")
 
@@ -142,11 +141,11 @@ def test_tiles_roundtrip_content_and_georef(spark):
     assert a == b and len(a) == 4
 
 
-def test_tiles_row0_is_top(spark):
+def test_tiles_row0_is_top(spark, tmp_path):
     """GPKG spec: tile_row 0 at the matrix-set TOP even though the
     synth table is TMS-style (row 0 at bottom)."""
     tiles = synth.tiles_src_df(spark, 1, 2)
-    path = tempfile.mkdtemp(prefix="gpkg_rows_") + "/t.gpkg"
+    path = str(tmp_path / "t.gpkg")
     gpkg.write_gpkg_tiles(tiles, path, srs_id=3857)
     con = sqlite3.connect(path)
     rows = dict(

@@ -4,7 +4,6 @@ shared RPB/_rpc.txt loaders (gdal_mdreader.cpp:540,612) and
 ReadXMLToList flattening (:341)."""
 
 import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -13,8 +12,8 @@ from gdal_spark import mdreader, synth
 
 
 @pytest.fixture(scope="module")
-def tmp():
-    yield tempfile.mkdtemp(prefix="gdal_spark_md_")
+def tmp(tmp_path_factory):
+    yield str(tmp_path_factory.mktemp("md"))
 
 
 def test_flatten_xml_dotted_and_duplicate_runs():

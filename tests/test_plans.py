@@ -11,8 +11,6 @@ broadcast-only in tests/test_ntv2.py.
 
 import json
 import operator
-import os
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -95,14 +93,13 @@ def test_kmeans_assignment_no_embedding_shuffle(spark, sf_dir):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
-def test_geojson_seq_reader_no_single_partition_exchange(spark):
+def test_geojson_seq_reader_no_single_partition_exchange(spark, tmp_path):
     """read_geojson_seq assigns global fids via partition-offset
     zip-with-index: the consuming plan must contain no WindowExec and
     no SinglePartition exchange."""
     from gdal_spark.geojson import read_geojson_seq
 
-    root = tempfile.mkdtemp(prefix="gdal_spark_plan_gj_")
-    path = os.path.join(root, "feats")
+    path = str(tmp_path / "feats")
     feats = [
         json.dumps({"type": "Feature", "id": i,
                     "geometry": {"type": "Point", "coordinates": [i, i / 2]},

@@ -14,11 +14,19 @@
 - Descriptor frames are spread one way: `blockscan.spread`, defined
   once. No `.repartition(max(...))` under gdal_spark/ (a round-robin
   shuffle of the descriptors before every read).
+- Every top-level import is read in its module (`__init__.py`
+  re-exports and `__future__` imports aside): an unread import is dead
+  code that still reads as a dependency.
+- The query builders' scratch files live under one root:
+  `tempfile.mkdtemp` is called once in `__spark_entry__.py`, by
+  `_scratch`, and a process that used `_scratch` leaves nothing behind.
 """
 
 import ast
 import glob
 import os
+import subprocess
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCES = sorted(
@@ -119,3 +127,50 @@ def test_descriptors_spread_by_one_function():
     defs = [_rel(p) for p in pkg for n in _tree(p).body
             if isinstance(n, ast.FunctionDef) and n.name == "spread"]
     assert defs == [os.path.join("gdal_spark", "blockscan.py")], defs
+
+
+def _unread_imports(path):
+    tree = _tree(path)
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                if (a.asname or a.name.split(".")[0]) not in read:
+                    yield f"{_rel(path)}:{node.lineno} {a.asname or a.name}"
+
+
+def test_every_top_level_import_is_read():
+    found = [s for p in SOURCES if os.path.basename(p) != "__init__.py"
+             for s in _unread_imports(p)]
+    assert not found, found
+
+
+def test_one_mkdtemp_in_the_query_builders():
+    entry = os.path.join(REPO, "__spark_entry__.py")
+    calls = [n.lineno for n in ast.walk(_tree(entry))
+             if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+             and n.func.attr == "mkdtemp"]
+    assert len(calls) == 1, calls
+
+
+def test_scratch_root_removed_at_exit(tmp_path):
+    # TMPDIR puts the root where this test can look for it
+    script = (
+        "import os, sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "import __spark_entry__ as E\n"
+        "a, b = E._scratch('x'), E._scratch('x')\n"
+        "assert a != b and not os.listdir(a), (a, b)\n"
+        "for d in (a, b):\n"
+        "    open(os.path.join(d, 'f'), 'w').write('x')\n"
+        "print(os.path.dirname(a))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run([sys.executable, "-c", script], env=env,
+                         capture_output=True, text=True, check=True)
+    root = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(root) == str(tmp_path), root
+    assert not os.path.exists(root)
+    assert os.listdir(tmp_path) == []

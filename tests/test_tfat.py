@@ -2,7 +2,6 @@
 frmts/mbtiles/tfatmbtilesdataset.cpp)."""
 
 import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -11,8 +10,8 @@ from gdal_spark import synth, tfat, tiling
 
 
 @pytest.fixture(scope="module")
-def tmp():
-    yield tempfile.mkdtemp(prefix="gdal_spark_tfat_")
+def tmp(tmp_path_factory):
+    yield str(tmp_path_factory.mktemp("tfat"))
 
 
 LEVELS = [
@@ -89,10 +88,8 @@ def test_missing_shard_hard_fails(spark, tmp):
         tfat.read_tfat(spark, xml)
 
 
-def test_xml_required_fields():
-    import tempfile as tf
-
-    p = os.path.join(tf.mkdtemp(), "bad.xml")
+def test_xml_required_fields(tmp_path):
+    p = str(tmp_path / "bad.xml")
     with open(p, "w") as f:
         f.write("<TileMetadata><TileFileCount>1</TileFileCount>"
                 "</TileMetadata>")

@@ -311,6 +311,31 @@ def test_retile_roundtrip(spark):
     assert list(gt0) == list(gtb)
 
 
+def test_retile_partial_edge_tiles(spark):
+    """A 300x300 raster tiled at 256 has 44-px edge tiles: split to 64
+    emits no zero-area piece, and coarsening back pastes each tile by
+    its own shape, rebuilding the source's tiles."""
+    tiles = synth.dem_tiles_df(spark, 300, tile_px=256)
+    small = tiling.retile(tiles, 64)
+    sizes = {(r["width"], r["height"]) for r in small.collect()}
+    assert sizes == {(64, 64), (44, 64), (64, 44), (44, 44)}
+    assert small.count() == 5 * 5
+    back = tiling.retile(small, 256)
+
+    def cks(t):
+        return {(r["tile_x"], r["tile_y"]): r["checksum"]
+                for r in tiling.checksum_table(t).collect()}
+
+    assert cks(back) == cks(tiles)
+
+    def shapes(t):
+        return {(r["tile_x"], r["tile_y"]): (r["width"], r["height"],
+                                             list(r["geotransform"]))
+                for r in t.collect()}
+
+    assert shapes(back) == shapes(tiles)
+
+
 def test_mode_tiebreak_first_to_max():
     """GDAL's mode picks the value whose count FIRST reaches the max in
     row-major scan (overview.cpp histogram path) — pin the vectorized

@@ -91,7 +91,10 @@ def main():
     import __spark_entry__ as E
     from gdal_spark.session import get_spark
 
-    spark = get_spark("contract_check", cpus=8)
+    # no console progress bar: in a merged log it would leave verdicts
+    # mid-line behind a `[Stage N:...]` bar
+    spark = get_spark("contract_check", cpus=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
