@@ -4425,6 +4425,7 @@ _CONIC_REGION = {
     54010: "lon > -179.0 AND lon < 179.0",
     54042: "lon > -179.0 AND lon < 179.0",
     54044: "lon > -179.0 AND lon < 179.0",
+    -54052: "lon > -179.0 AND lon < 179.0",  # crs.CODE_GOODE
     # Bonne: the atan2 inverse holds the full |E| < 180 deg branch and
     # the derived lat stays off the poles (m > 0)
     54024: "lon > -179.0 AND lon < 179.0",
@@ -4447,26 +4448,52 @@ _CONIC_REGION = {
 
 def _q_conic(epsg: int):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Conic/polar CRS (Snyder closed forms on the crs.py
-        dual-backend builder; the reference reaches these through PROJ,
-        ogr/ogrct.cpp:1822): forward to projected meters plus the
-        inverse round-trip back to degrees, all pure JVM column math."""
-        from gdal_spark import crs
-
+        """Conic/polar/world CRS (Snyder closed forms and Newton solves
+        on the crs.py backend-generic formulas; the reference reaches
+        these through PROJ, ogr/ogrct.cpp:1822): forward to projected
+        meters plus the inverse round-trip back to degrees, all pure
+        JVM column math (_conic_roundtrip)."""
         d = DRV.with_derived_points(_read(spark, sf_dir, "documents"))
         d = d.filter(F.expr(_CONIC_REGION[epsg]))
-        x, y = crs.conic_forward(epsg, F.col("lon"), F.col("lat"))
-        d = d.select("doc_id", "lon", "lat", x.alias("x"), y.alias("y"))
-        lon2, lat2 = crs.conic_inverse(epsg, F.col("x"), F.col("y"))
-        return d.select(
-            "doc_id",
-            F.round("x", 3).alias("x"),
-            F.round("y", 3).alias("y"),
-            F.round(lon2, 6).alias("lon_rt"),
-            F.round(lat2, 6).alias("lat_rt"),
-        )
+        return _conic_roundtrip(d.select("doc_id", "lon", "lat"), epsg)
 
     return q
+
+
+def _conic_roundtrip(d: DataFrame, epsg: int) -> DataFrame:
+    """Forward lon/lat to x/y, then the inverse back, through
+    crs.transform_df: one fused Column expression per direction, or
+    one Project per stage where the formula has stage cuts."""
+    from gdal_spark import crs
+
+    d = crs.transform_df(d, epsg, "lon", "lat", ("x", "y"))
+    d = crs.transform_df(d, epsg, "x", "y", ("lon_rt", "lat_rt"),
+                         inverse=True)
+    return d.select(
+        "doc_id",
+        F.round("x", 3).alias("x"),
+        F.round("y", 3).alias("y"),
+        F.round("lon_rt", 6).alias("lon_rt"),
+        F.round("lat_rt", 6).alias("lat_rt"),
+    )
+
+
+def _conic_roundtrip_sql(epsg: int, head: str) -> str:
+    """The oracle of _conic_roundtrip over the doc_id/lon/lat rows of
+    CTE `c`, which `head` (a WITH clause) defines: crs.transform_sql
+    splices a CTE chain in where the formula has stage cuts."""
+    from gdal_spark.crs import transform_sql
+
+    fwd, x, y = transform_sql(epsg, "c", "lon", "lat")
+    inv, lon2, lat2 = transform_sql(epsg, "p", "x", "y", inverse=True)
+    return f"""
+        {head}, p AS (
+          SELECT doc_id, {x} AS x, {y} AS y FROM {fwd}
+        )
+        SELECT doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y,
+               ROUND({lon2}, 6) AS lon_rt, ROUND({lat2}, 6) AS lat_rt
+        FROM {inv}
+    """
 
 
 def _q_warped_layer_conic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4525,22 +4552,11 @@ def _warped_layer_sql() -> str:
 
 
 def _conic_sql(epsg: int) -> str:
-    from gdal_spark.crs import conic_forward_sql, conic_inverse_sql
-
-    x, y = conic_forward_sql(epsg, "lon", "lat")
-    lon2, lat2 = conic_inverse_sql(epsg, "x", "y")
-    return f"""
-        WITH b AS (
+    return _conic_roundtrip_sql(epsg, f"""WITH b AS (
           SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents
         ), c AS (
           SELECT doc_id, lon, lat FROM b WHERE {_CONIC_REGION[epsg]}
-        ), p AS (
-          SELECT doc_id, {x} AS x, {y} AS y FROM c
-        )
-        SELECT doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y,
-               ROUND({lon2}, 6) AS lon_rt, ROUND({lat2}, 6) AS lat_rt
-        FROM p
-    """
+        )""")
 
 
 _CONIC_DOMAIN = {
@@ -4592,232 +4608,18 @@ def _q_conic_mapped(epsg: int):
         """Regional CRS whose area of use the derived points must be
         remapped into (the laborde_transform affine pattern): forward
         to projected units plus the inverse round trip, pure JVM
-        column math on the crs.py dual-backend builder (reference
+        column math on the crs.py backend-generic formulas (reference
         reaches these through PROJ, ogr/ogrct.cpp:1822)."""
-        from gdal_spark import crs
-
         d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
             F.col("doc_id") < 4000
         ).select("doc_id", *_domain_select(epsg))
-        x, y = crs.conic_forward(epsg, F.col("lon"), F.col("lat"))
-        d = d.select("doc_id", "lon", "lat", x.alias("x"), y.alias("y"))
-        lon2, lat2 = crs.conic_inverse(epsg, F.col("x"), F.col("y"))
-        return d.select(
-            "doc_id",
-            F.round("x", 3).alias("x"),
-            F.round("y", 3).alias("y"),
-            F.round(lon2, 6).alias("lon_rt"),
-            F.round(lat2, 6).alias("lat_rt"),
-        )
+        return _conic_roundtrip(d, epsg)
 
     return q
 
 
 def _conic_mapped_sql(epsg: int) -> str:
-    from gdal_spark.crs import conic_forward_sql, conic_inverse_sql
-
-    x, y = conic_forward_sql(epsg, "lon", "lat")
-    lon2, lat2 = conic_inverse_sql(epsg, "x", "y")
-    return f"""
-        WITH c AS ({_domain_sql(epsg)}), p AS (
-          SELECT doc_id, {x} AS x, {y} AS y FROM c
-        )
-        SELECT doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y,
-               ROUND({lon2}, 6) AS lon_rt, ROUND({lat2}, 6) AS lat_rt
-        FROM p
-    """
-
-
-def _q_polyconic_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """American Polyconic / EPSG:29101 SAD69 Brasil Polyconic (EPSG
-    method 9818; reference via PROJ +proj=poly, named in
-    frmts/gtiff/libgeotiff/geotiff_proj4.c): exact Snyder 18-12 closed
-    forward plus the 18-18..18-21 Newton inverse run STAGED — one
-    Project per step, like Laborde/NZMG, because the fused tree grows
-    ~48x per iteration. The oracle runs the identical stage templates
-    as a DuckDB CTE chain."""
-    from gdal_spark import crs
-
-    d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
-        F.col("doc_id") < 4000
-    ).select("doc_id", *_domain_select(29101))
-    x, y = crs.conic_forward(29101, F.col("lon"), F.col("lat"))
-    d = d.select("doc_id", "lon", "lat", x.alias("x"), y.alias("y"))
-    d = crs.from_polyconic(d)  # staged Newton inverse
-    return d.select(
-        "doc_id",
-        F.round("x", 3).alias("x"),
-        F.round("y", 3).alias("y"),
-        F.round("poly_lon", 6).alias("lon_rt"),
-        F.round("poly_lat", 6).alias("lat_rt"),
-    )
-
-
-def _polyconic_sql() -> str:
-    from gdal_spark import nzmg
-    from gdal_spark.crs import conic_forward_sql, poly_inverse_stages
-
-    x, y = conic_forward_sql(29101, "lon", "lat")
-    fwd = f"SELECT doc_id, {x} AS x, {y} AS y FROM ({_domain_sql(29101)})"
-    final = ("doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y, "
-             "ROUND(poly_lon, 6) AS lon_rt, ROUND(poly_lat, 6) AS lat_rt")
-    return nzmg.sql_cte_chain(fwd, poly_inverse_stages("x", "y"),
-                              final, "pc")
-
-
-def _q_robinson_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robinson (ESRI:54030 World_Robinson; reference reaches it via
-    PROJ +proj=robin): fused spline forward (two flat 18-branch CASE
-    cubics — compiles inside one codegen method) + the STAGED Newton
-    inverse (crs.robin_inverse_stages: exact interval selection by
-    node-value comparisons, coefficients materialized once, one
-    Project per Newton step). Oracle runs the identical templates as
-    a DuckDB CTE chain."""
-    from gdal_spark import crs
-
-    d = DRV.with_derived_points(_read(spark, sf_dir, "documents"))
-    d = d.filter(F.expr(_CONIC_REGION[54030]))
-    x, y = crs.conic_forward(54030, F.col("lon"), F.col("lat"))
-    d = d.select("doc_id", "lon", "lat", x.alias("x"), y.alias("y"))
-    d = crs.from_robinson(d)
-    return d.select(
-        "doc_id",
-        F.round("x", 3).alias("x"),
-        F.round("y", 3).alias("y"),
-        F.round("robin_lon", 6).alias("lon_rt"),
-        F.round("robin_lat", 6).alias("lat_rt"),
-    )
-
-
-def _robinson_sql() -> str:
-    from gdal_spark import nzmg
-    from gdal_spark.crs import conic_forward_sql, robin_inverse_stages
-
-    x, y = conic_forward_sql(54030, "lon", "lat")
-    fwd = (f"SELECT doc_id, {x} AS x, {y} AS y FROM ("
-           f"SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents"
-           f") WHERE {_CONIC_REGION[54030]}")
-    final = ("doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y, "
-             "ROUND(robin_lon, 6) AS lon_rt, ROUND(robin_lat, 6) AS lat_rt")
-    return nzmg.sql_cte_chain(fwd, robin_inverse_stages("x", "y"),
-                              final, "rb")
-
-
-def _q_goode_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goode homolosine, uninterrupted (+proj=goode — no EPSG code;
-    sinusoidal inside |phi| <= 40d44', y-shifted Mollweide outside,
-    x continuous at the seam by construction): STAGED in both
-    directions (crs.goode_forward_stages / goode_inverse_stages — the
-    Mollweide Newton under a seam CASE defeats subexpression
-    elimination when fused). Oracle = identical templates as a DuckDB
-    CTE chain."""
-    from gdal_spark import crs
-
-    d = DRV.with_derived_points(_read(spark, sf_dir, "documents"))
-    d = d.filter(F.expr("lon > -179.0 AND lon < 179.0"))
-    d = d.select("doc_id", "lon", "lat")
-    d = crs.to_goode(d, "lon", "lat", crs.CODE_GOODE)
-    d = d.select("doc_id", "lon", "lat",
-                 F.col("goode_x").alias("x"), F.col("goode_y").alias("y"))
-    d = crs.from_goode(d, "x", "y", crs.CODE_GOODE)
-    return d.select(
-        "doc_id",
-        F.round("x", 3).alias("x"),
-        F.round("y", 3).alias("y"),
-        F.round("goode_lon", 6).alias("lon_rt"),
-        F.round("goode_lat", 6).alias("lat_rt"),
-    )
-
-
-def _goode_sql() -> str:
-    from gdal_spark import crs, nzmg
-
-    src = (f"SELECT doc_id, lon, lat FROM ("
-           f"SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents"
-           f") WHERE lon > -179.0 AND lon < 179.0")
-    fwd = nzmg.sql_cte_chain(
-        src, crs.goode_forward_stages("lon", "lat", crs.CODE_GOODE),
-        "doc_id, lon, lat, goode_x AS x, goode_y AS y", "gf")
-    final = ("doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y, "
-             "ROUND(goode_lon, 6) AS lon_rt, ROUND(goode_lat, 6) AS lat_rt")
-    return nzmg.sql_cte_chain(
-        f"({fwd})", crs.goode_inverse_stages("x", "y", crs.CODE_GOODE),
-        final, "gi")
-
-
-def _q_eckert4_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eckert IV (ESRI:54012; reference via PROJ +proj=eck4): STAGED
-    Newton forward (crs.eck4_forward_stages — the fused 4-step tree
-    costs ~15 s of Catalyst/janino compile per query at any data
-    size) + the closed fused inverse. Oracle = identical templates as
-    a DuckDB CTE chain."""
-    from gdal_spark import crs
-
-    d = DRV.with_derived_points(_read(spark, sf_dir, "documents"))
-    d = d.filter(F.expr(_CONIC_REGION[54012]))
-    d = crs.to_eck4(d.select("doc_id", "lon", "lat"))
-    d = d.select("doc_id", "lon", "lat",
-                 F.col("eck4_x").alias("x"), F.col("eck4_y").alias("y"))
-    lon2, lat2 = crs.conic_inverse(54012, F.col("x"), F.col("y"))
-    return d.select(
-        "doc_id",
-        F.round("x", 3).alias("x"),
-        F.round("y", 3).alias("y"),
-        F.round(lon2, 6).alias("lon_rt"),
-        F.round(lat2, 6).alias("lat_rt"),
-    )
-
-
-def _eckert4_sql() -> str:
-    from gdal_spark import nzmg
-    from gdal_spark.crs import conic_inverse_sql, eck4_forward_stages
-
-    src = (f"SELECT doc_id, lon, lat FROM ("
-           f"SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents"
-           f") WHERE {_CONIC_REGION[54012]}")
-    lon2, lat2 = conic_inverse_sql(54012, "eck4_x", "eck4_y")
-    final = ("doc_id, ROUND(eck4_x, 3) AS x, ROUND(eck4_y, 3) AS y, "
-             f"ROUND({lon2}, 6) AS lon_rt, ROUND({lat2}, 6) AS lat_rt")
-    return nzmg.sql_cte_chain(src, eck4_forward_stages("lon", "lat"),
-                              final, "e4")
-
-
-def _q_winkel_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winkel Tripel (ESRI:54042, the National Geographic world map;
-    reference via PROJ +proj=wintri): fused eqc/Aitoff-mean forward +
-    the STAGED bivariate Newton inverse (crs.wintri_inverse_stages —
-    numeric central-difference Jacobian, one Project per step, the
-    same generic scheme PROJ's wintri inverse uses). Oracle runs the
-    identical templates as a DuckDB CTE chain."""
-    from gdal_spark import crs
-
-    d = DRV.with_derived_points(_read(spark, sf_dir, "documents"))
-    d = d.filter(F.expr(_CONIC_REGION[54042]))
-    x, y = crs.conic_forward(54042, F.col("lon"), F.col("lat"))
-    d = d.select("doc_id", "lon", "lat", x.alias("x"), y.alias("y"))
-    d = crs.from_winkel(d)
-    return d.select(
-        "doc_id",
-        F.round("x", 3).alias("x"),
-        F.round("y", 3).alias("y"),
-        F.round("winkel_lon", 6).alias("lon_rt"),
-        F.round("winkel_lat", 6).alias("lat_rt"),
-    )
-
-
-def _winkel_sql() -> str:
-    from gdal_spark import nzmg
-    from gdal_spark.crs import conic_forward_sql, wintri_inverse_stages
-
-    x, y = conic_forward_sql(54042, "lon", "lat")
-    fwd = (f"SELECT doc_id, {x} AS x, {y} AS y FROM ("
-           f"SELECT doc_id, {_LON} AS lon, {_LAT} AS lat FROM documents"
-           f") WHERE {_CONIC_REGION[54042]}")
-    final = ("doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y, "
-             "ROUND(winkel_lon, 6) AS lon_rt, "
-             "ROUND(winkel_lat, 6) AS lat_rt")
-    return nzmg.sql_cte_chain(fwd, wintri_inverse_stages("x", "y"),
-                              final, "wt")
+    return _conic_roundtrip_sql(epsg, f"WITH c AS ({_domain_sql(epsg)})")
 
 
 def _q_proj4_import(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5131,12 +4933,10 @@ def _q_laborde_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Laborde Oblique Mercator / EPSG:29701 Madagascar grid (EPSG
     method 9813; reference: ogr/ogrspatialreference.cpp:6390 SetLOM ->
     PROJ +proj=labrd). Sphere rotation + complex-cubic correction with
-    the two-Newton-step inverse, pure JVM column math on the crs.py
-    dual-backend builder; value-anchored to the EPSG GN 7-2 worked
-    example in tests. Derived points remapped into the Madagascar
-    domain with shared affine arithmetic."""
-    from gdal_spark import crs
-
+    the two-Newton-step inverse run staged (_conic_roundtrip);
+    value-anchored to the EPSG GN 7-2 worked example in tests. Derived
+    points remapped into the Madagascar domain with shared affine
+    arithmetic."""
     d = DRV.with_derived_points(_read(spark, sf_dir, "documents")).filter(
         F.col("doc_id") < 4000
     ).select(
@@ -5144,31 +4944,16 @@ def _q_laborde_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(43.5) + (F.col("lon") + 180.0) / 360.0 * 8.5).alias("lon"),
         (F.lit(-25.5) + (F.col("lat") + 90.0) / 180.0 * 13.0).alias("lat"),
     )
-    x, y = crs.conic_forward(29701, F.col("lon"), F.col("lat"))
-    d = d.select("doc_id", "lon", "lat", x.alias("x"), y.alias("y"))
-    d = crs.from_laborde(d)  # staged inverse — one Project per step
-    return d.select(
-        "doc_id",
-        F.round("x", 3).alias("x"),
-        F.round("y", 3).alias("y"),
-        F.round("lab_lon", 6).alias("lon_rt"),
-        F.round("lab_lat", 6).alias("lat_rt"),
-    )
+    return _conic_roundtrip(d, 29701)
 
 
 def _laborde_sql() -> str:
-    from gdal_spark import nzmg
-    from gdal_spark.crs import conic_forward_sql, laborde_inverse_stages
-
-    x, y = conic_forward_sql(29701, "lon", "lat")
-    src = (f"SELECT doc_id, 43.5 + ({_LON} + 180.0) / 360.0 * 8.5 AS lon,"
-           f" -25.5 + ({_LAT} + 90.0) / 180.0 * 13.0 AS lat"
-           f" FROM documents WHERE doc_id < 4000")
-    fwd = f"SELECT doc_id, {x} AS x, {y} AS y FROM ({src})"
-    final = ("doc_id, ROUND(x, 3) AS x, ROUND(y, 3) AS y, "
-             "ROUND(lab_lon, 6) AS lon_rt, ROUND(lab_lat, 6) AS lat_rt")
-    return nzmg.sql_cte_chain(fwd, laborde_inverse_stages("x", "y"),
-                              final, "lb")
+    return _conic_roundtrip_sql(
+        29701,
+        f"WITH c AS (SELECT doc_id,"
+        f" 43.5 + ({_LON} + 180.0) / 360.0 * 8.5 AS lon,"
+        f" -25.5 + ({_LAT} + 90.0) / 180.0 * 13.0 AS lat"
+        f" FROM documents WHERE doc_id < 4000)")
 
 
 def _q_geoid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9109,7 +8894,8 @@ REGISTRY: dict[str, Query] = {
         _q_conic(2193), partial(_conic_sql, 2193), suite=True),
     "cassini_transform": Query(
         _q_conic_mapped(30200), partial(_conic_mapped_sql, 30200)),
-    "polyconic_transform": Query(_q_polyconic_transform, _polyconic_sql),
+    "polyconic_transform": Query(
+        _q_conic_mapped(29101), partial(_conic_mapped_sql, 29101)),
     "bonne_transform": Query(_q_conic(54024), partial(_conic_sql, 54024)),
     "ups_north_transform": Query(
         _q_conic_mapped(5041), partial(_conic_mapped_sql, 5041)),
@@ -9127,12 +8913,15 @@ REGISTRY: dict[str, Query] = {
         _q_conic_mapped(6932), partial(_conic_mapped_sql, 6932)),
     "miller_transform": Query(_q_conic(54003), partial(_conic_sql, 54003)),
     "gall_transform": Query(_q_conic(54016), partial(_conic_sql, 54016)),
-    "eckert4_transform": Query(_q_eckert4_transform, _eckert4_sql, suite=True),
+    "eckert4_transform": Query(
+        _q_conic(54012), partial(_conic_sql, 54012), suite=True),
     "eckert6_transform": Query(_q_conic(54010), partial(_conic_sql, 54010)),
     "robinson_transform": Query(
-        _q_robinson_transform, _robinson_sql, suite=True),
-    "goode_transform": Query(_q_goode_transform, _goode_sql, suite=True),
-    "winkel_transform": Query(_q_winkel_transform, _winkel_sql, suite=True),
+        _q_conic(54030), partial(_conic_sql, 54030), suite=True),
+    "goode_transform": Query(
+        _q_conic(-54052), partial(_conic_sql, -54052), suite=True),
+    "winkel_transform": Query(
+        _q_conic(54042), partial(_conic_sql, 54042), suite=True),
     "hammer_transform": Query(_q_conic(54044), partial(_conic_sql, 54044)),
     "geos_meteosat_transform": Query(
         _q_conic_mapped(-90360), partial(_conic_mapped_sql, -90360)),

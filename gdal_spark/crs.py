@@ -9,7 +9,20 @@ and instantiated twice: as pyspark Column expressions (pure JVM
 whole-stage codegen — no UDF) and as an ANSI-SQL string with the
 IDENTICAL association order, so the DuckDB oracle evaluates the same
 floating-point expression tree (sin/cos ulp differences are absorbed
-by mm-level rounding).
+by mm-level rounding). A third instantiation, numpy, serves vertex
+arrays (_NpBackend).
+
+Stage cuts: a formula whose fused tree is too large for whole-stage
+codegen (a Newton loop) marks its cuts once, inline, with
+`B.stage(*exprs)`, which hands back values that stand for the
+expressions. On the Column, SQL and numpy backends `stage` is the
+identity. `_StageRecorder`, the SQL backend that records, turns each
+call into one named stage and hands back its column names. The staged
+executor lives here: `_apply_stages` runs the stages one Project each
+(`transform_df`), `sql_cte_chain` one CTE each (`transform_sql`, the
+DuckDB oracle), and both run a direction without cuts as one fused
+expression. conic_forward / conic_inverse and their _sql forms refuse
+the directions in `_STAGED_ONLY`.
 
 Datum note: this is the PROJECTION step only — no datum shift, i.e.
 exact for same-datum transforms (EPSG:4326->326xx WGS84, 4269->269xx
@@ -40,6 +53,12 @@ ELLIPSOIDS = {
 }
 
 
+def _fuse(*exprs):
+    """`stage` on the fused backends: the identity (one value back for
+    one argument, a tuple for several)."""
+    return exprs[0] if len(exprs) == 1 else exprs
+
+
 class _ColBackend:
     lit = staticmethod(F.lit)
     sin = staticmethod(F.sin)
@@ -57,6 +76,7 @@ class _ColBackend:
     # numpy backends so the dual-emitted formulas stay engine-vs-engine
     abs = staticmethod(F.abs)
     sign = staticmethod(F.signum)
+    stage = staticmethod(_fuse)
 
     @staticmethod
     def lt(a, b):
@@ -106,6 +126,7 @@ def _sqlify(v):
 
 class _SqlBackend:
     lit = staticmethod(_sqlify)
+    stage = staticmethod(_fuse)
 
     @staticmethod
     def sin(x):
@@ -165,6 +186,26 @@ class _SqlBackend:
     def when(cond, t, f):
         return _Sql(
             f"(CASE WHEN {cond} THEN {_sqlify(t)} ELSE {_sqlify(f)} END)")
+
+
+class _StageRecorder(_SqlBackend):
+    """The SQL backend with its stage cuts recorded: each
+    `B.stage(*exprs)` call in a formula becomes one named stage
+    ({column: SQL}) and hands back the stage's column names, so the
+    rest of the formula reads the staged values by name. Run through
+    `_apply_stages` (one Project per stage) or `sql_cte_chain` (one CTE
+    per stage), the chain keeps every generated method small where the
+    fused tree would not compile."""
+
+    def __init__(self, prefix: str):
+        self.prefix = prefix
+        self.stages: list[dict[str, str]] = []
+
+    def stage(self, *exprs):
+        k = len(self.stages)
+        names = [f"{self.prefix}{k}_{j}" for j in range(len(exprs))]
+        self.stages.append({n: str(_sqlify(e)) for n, e in zip(names, exprs)})
+        return _fuse(*map(_Sql, names))
 
 
 def _tm_forward(B, lon, lat, lon0, a: float, f: float,
@@ -886,6 +927,26 @@ def _moll_theta_seed(B, sp):
     )
 
 
+def _moll_theta(B, sp, stage):
+    """theta solving 2*theta + sin(2*theta) = pi*sin(phi), from
+    sp = sin(phi): the _moll_theta_seed guess plus 4 Newton steps,
+    each step passed through `stage` (the identity for plain
+    Mollweide; B.stage where Goode embeds it, one cut per step)."""
+    target, th = stage(B.lit(math.pi) * sp, _moll_theta_seed(B, sp))
+    for _ in range(4):
+        th = stage(th - (th * 2.0 + B.sin(th * 2.0) - target) / (
+            2.0 + B.cos(th * 2.0) * 2.0))
+    return th
+
+
+def _moll_xy(B, lam, th, a: float, fe: float = 0.0, fn: float = 0.0):
+    """Mollweide x/y from lam (radians) and theta."""
+    k = 2.0 * math.sqrt(2.0) / math.pi
+    x = B.lit(fe) + B.lit(k * a) * lam * B.cos(th)
+    y = B.lit(fn) + B.lit(math.sqrt(2.0) * a) * B.sin(th)
+    return x, y
+
+
 def moll_forward(B, lon, lat, lon0: float, a: float, f: float,
                  fe: float = 0.0, fn: float = 0.0):
     """Mollweide forward (Snyder 31-1..31-5; spherical formulation on
@@ -897,18 +958,8 @@ def moll_forward(B, lon, lat, lon0: float, a: float, f: float,
     Newton step QUADRUPLES the emitted expression size — seeding keeps
     the dual-emitted SQL tree at ~10^2 KB instead of the 4^8 blow-up
     a from-phi loop would need."""
-    phi = B.radians(lat)
-    sp = B.sin(phi)
-    target = B.lit(math.pi) * sp
-    th = _moll_theta_seed(B, sp)
-    for _ in range(4):
-        th = th - (th * 2.0 + B.sin(th * 2.0) - target) / (
-            2.0 + B.cos(th * 2.0) * 2.0)
-    lam = B.radians(lon - B.lit(lon0))
-    k = 2.0 * math.sqrt(2.0) / math.pi
-    x = B.lit(fe) + B.lit(k * a) * lam * B.cos(th)
-    y = B.lit(fn) + B.lit(math.sqrt(2.0) * a) * B.sin(th)
-    return x, y
+    th = _moll_theta(B, B.sin(B.radians(lat)), _fuse)
+    return _moll_xy(B, B.radians(lon - B.lit(lon0)), th, a, fe, fn)
 
 
 def moll_inverse(B, x, y, lon0: float, a: float, f: float,
@@ -1216,96 +1267,30 @@ def wintri_inverse(B, x, y, phi1: float, lon0: float,
     """Winkel Tripel inverse: bivariate Newton with a numeric
     central-difference Jacobian (PROJ's wintri inverse is the same
     generic bivariate scheme), seeded at phi = y/R (exact on the
-    central meridian) and the eqc/Aitoff-averaged lambda. FUSED form
-    for the numpy vertex-array path — the Column/SQL twins must use
-    wintri_inverse_stages (each step quintuples the tree)."""
+    central meridian) and the eqc/Aitoff-averaged lambda. Each step is
+    five F-evaluations, so a fused tree quintuples per step: the
+    declarative engines run it staged, three cuts per step."""
     cphi1 = math.cos(math.radians(phi1))
-    xx = (x - B.lit(fe)) / B.lit(a)
-    yy = (y - B.lit(fn)) / B.lit(a)
+    xx, yy = B.stage((x - B.lit(fe)) / B.lit(a), (y - B.lit(fn)) / B.lit(a))
     p = yy
-    lam = xx * 2.0 / (B.lit(cphi1) + B.cos(p))
+    lam = B.stage(xx * 2.0 / (B.lit(cphi1) + B.cos(p)))
     for _ in range(6):
         fx0, fy0 = _wintri_xy(B, lam, p, cphi1)
         fxl1, fyl1 = _wintri_xy(B, lam + B.lit(_WT_H), p, cphi1)
         fxl2, fyl2 = _wintri_xy(B, lam - B.lit(_WT_H), p, cphi1)
         fxp1, fyp1 = _wintri_xy(B, lam, p + B.lit(_WT_H), cphi1)
         fxp2, fyp2 = _wintri_xy(B, lam, p - B.lit(_WT_H), cphi1)
-        a11 = (fxl1 - fxl2) / B.lit(2.0 * _WT_H)
-        a12 = (fxp1 - fxp2) / B.lit(2.0 * _WT_H)
-        a21 = (fyl1 - fyl2) / B.lit(2.0 * _WT_H)
-        a22 = (fyp1 - fyp2) / B.lit(2.0 * _WT_H)
-        det = a11 * a22 - a12 * a21
-        rx = fx0 - xx
-        ry = fy0 - yy
-        lam = lam - (a22 * rx - a12 * ry) / det
-        p = p - (a11 * ry - a21 * rx) / det
+        rx, ry, a11, a12, a21, a22 = B.stage(
+            fx0 - xx, fy0 - yy,
+            (fxl1 - fxl2) / B.lit(2.0 * _WT_H),
+            (fxp1 - fxp2) / B.lit(2.0 * _WT_H),
+            (fyl1 - fyl2) / B.lit(2.0 * _WT_H),
+            (fyp1 - fyp2) / B.lit(2.0 * _WT_H))
+        det = B.stage(a11 * a22 - a12 * a21)
+        lam, p = B.stage(lam - (a22 * rx - a12 * ry) / det,
+                         p - (a11 * ry - a21 * rx) / det)
     deg = 180.0 / math.pi
     return B.lit(lon0) + lam * B.lit(deg), p * B.lit(deg)
-
-
-def wintri_inverse_stages(x_expr: str, y_expr: str, epsg: int = 54042,
-                          steps: int = 6) -> list:
-    """The staged twin of wintri_inverse — one Project per Newton
-    step (each step is ~5 F-evaluations; fusing them quintuples the
-    tree per step, the poly/laborde lesson). Appends winkel_lon /
-    winkel_lat; identical templates drive the DuckDB CTE oracle."""
-    kind, ell, prm = CONIC_PRESETS[epsg]
-    a, _f = ELLIPSOIDS[ell]
-    fe, fn = prm.get("fe", 0.0), prm.get("fn", 0.0)
-    lon0 = prm.get("lon0", 0.0)
-    cphi1 = math.cos(math.radians(prm["phi1"]))
-
-    def F(lexpr: str, pexpr: str):
-        fx, fy = _wintri_xy(_SqlBackend, _Sql(lexpr), _Sql(pexpr), cphi1)
-        return str(fx), str(fy)
-
-    st = [{
-        "wt_x": f"((({x_expr}) - {fe!r}) / {a!r})",
-        "wt_y": f"((({y_expr}) - {fn!r}) / {a!r})",
-    }]
-    st.append({"wt_p0": "wt_y"})
-    st.append({"wt_l0": f"(wt_x * 2.0 / ({cphi1!r} + COS(wt_p0)))"})
-    h2 = 2.0 * _WT_H
-    for k in range(steps):
-        li, pi = f"wt_l{k}", f"wt_p{k}"
-        fx0, fy0 = F(li, pi)
-        fxl1, fyl1 = F(f"({li} + {_WT_H!r})", pi)
-        fxl2, fyl2 = F(f"({li} - {_WT_H!r})", pi)
-        fxp1, fyp1 = F(li, f"({pi} + {_WT_H!r})")
-        fxp2, fyp2 = F(li, f"({pi} - {_WT_H!r})")
-        st.append({
-            f"wt_rx_{k}": f"({fx0} - wt_x)",
-            f"wt_ry_{k}": f"({fy0} - wt_y)",
-            f"wt_a11_{k}": f"(({fxl1} - {fxl2}) / {h2!r})",
-            f"wt_a12_{k}": f"(({fxp1} - {fxp2}) / {h2!r})",
-            f"wt_a21_{k}": f"(({fyl1} - {fyl2}) / {h2!r})",
-            f"wt_a22_{k}": f"(({fyp1} - {fyp2}) / {h2!r})",
-        })
-        st.append({f"wt_det_{k}": (
-            f"(wt_a11_{k} * wt_a22_{k} - wt_a12_{k} * wt_a21_{k})")})
-        st.append({
-            f"wt_l{k + 1}": (
-                f"({li} - (wt_a22_{k} * wt_rx_{k}"
-                f" - wt_a12_{k} * wt_ry_{k}) / wt_det_{k})"),
-            f"wt_p{k + 1}": (
-                f"({pi} - (wt_a11_{k} * wt_ry_{k}"
-                f" - wt_a21_{k} * wt_rx_{k}) / wt_det_{k})"),
-        })
-    deg = 180.0 / math.pi
-    st.append({
-        "winkel_lon": f"({lon0!r} + wt_l{steps} * {deg!r})",
-        "winkel_lat": f"(wt_p{steps} * {deg!r})",
-    })
-    return st
-
-
-def from_winkel(df, x_col: str = "x", y_col: str = "y",
-                epsg: int = 54042):
-    """Staged Column inverse — appends winkel_lon / winkel_lat."""
-    from .nzmg import _apply_stages
-
-    return _apply_stages(df, wintri_inverse_stages(x_col, y_col, epsg),
-                         False, out_prefix="winkel_")
 
 
 # ---------------------------------------------------- Eckert IV and VI
@@ -1339,60 +1324,22 @@ def _odd_poly(B, coefs, sp):
 def eck4_forward(B, lon, lat, lon0: float, a: float, f: float,
                  fe: float = 0.0, fn: float = 0.0):
     """Eckert IV (Snyder p.253; ESRI:54012 World_Eckert_IV, spherical
-    on the semi-major axis; reference via PROJ +proj=eck4): seed + 3
+    on the semi-major axis; reference via PROJ +proj=eck4): seed + 4
     Newton steps on g(th) = th + sin th cos th + 2 sin th,
     g' = 2 cos th (1 + cos th). Four steps like moll_forward — the
     seed error profile is the same 0.026 rad and the pole-adjacent
-    convergence needs the fourth step for float precision."""
-    sp = B.sin(B.radians(lat))
-    t = B.lit(_ECK4_T) * sp
-    th = _odd_poly(B, _ECK4_SEED, sp)
+    convergence needs the fourth step for float precision. Fused, the
+    4-step tree costs ~15 s of Catalyst/janino compile per query at
+    any data size; staged (one cut per step) it takes milliseconds."""
+    sp, lam = B.stage(B.sin(B.radians(lat)), B.radians(lon - B.lit(lon0)))
+    t, th = B.stage(B.lit(_ECK4_T) * sp, _odd_poly(B, _ECK4_SEED, sp))
     for _ in range(4):
         c = B.cos(th)
         s = B.sin(th)
-        th = th - (th + s * c + s * 2.0 - t) / (c * (c + 1.0) * 2.0)
-    lam = B.radians(lon - B.lit(lon0))
+        th = B.stage(th - (th + s * c + s * 2.0 - t) / (c * (c + 1.0) * 2.0))
     x = B.lit(fe) + B.lit(_ECK4_CX * a) * lam * (1.0 + B.cos(th))
     y = B.lit(fn) + B.lit(_ECK4_CY * a) * B.sin(th)
     return x, y
-
-
-def eck4_forward_stages(lon_expr: str, lat_expr: str,
-                        epsg: int = 54012) -> list:
-    """The staged twin of eck4_forward — seed plus one Project per
-    Newton step (the fused 4-step tree costs ~15 s of Catalyst/janino
-    compile per query at ANY data size; staging makes it
-    milliseconds). Appends eck4_x / eck4_y; identical templates drive
-    the DuckDB CTE oracle."""
-    kind, ell, p = CONIC_PRESETS[epsg]
-    a, _f = ELLIPSOIDS[ell]
-    fe, fn, lon0 = p.get("fe", 0.0), p.get("fn", 0.0), p.get("lon0", 0.0)
-    st = [{"e4_sp": f"(SIN(RADIANS({lat_expr})))",
-           "e4_lam": f"(RADIANS(({lon_expr}) - {lon0!r}))"}]
-    st.append({
-        "e4_t": f"({_ECK4_T!r} * e4_sp)",
-        "e4_th0": str(_odd_poly(_SqlBackend, _ECK4_SEED, _Sql("e4_sp"))),
-    })
-    for k in range(4):
-        i, o = f"e4_th{k}", f"e4_th{k + 1}"
-        st.append({o: (
-            f"({i} - ({i} + SIN({i}) * COS({i}) + SIN({i}) * 2.0"
-            f" - e4_t) / (COS({i}) * (COS({i}) + 1.0) * 2.0))")})
-    st.append({
-        "eck4_x": (f"({fe!r} + {_ECK4_CX * a!r} * e4_lam"
-                   f" * (1.0 + COS(e4_th4)))"),
-        "eck4_y": f"({fn!r} + {_ECK4_CY * a!r} * SIN(e4_th4))",
-    })
-    return st
-
-
-def to_eck4(df, lon_col: str = "lon", lat_col: str = "lat",
-            epsg: int = 54012):
-    """Staged Column forward — appends eck4_x / eck4_y."""
-    from .nzmg import _apply_stages
-
-    return _apply_stages(df, eck4_forward_stages(lon_col, lat_col, epsg),
-                         False, out_prefix="eck4_")
 
 
 def eck4_inverse(B, x, y, lon0: float, a: float, f: float,
@@ -1510,53 +1457,39 @@ def robin_forward(B, lon, lat, lon0: float, a: float, f: float,
     return x, y
 
 
-def _robin_inv_z(B, i: int, t):
-    """Within interval i (chosen exactly by node-value comparisons),
-    solve the monotone cubic P_i(z) = t: linear seed + two Newton
-    steps (the spline is near-linear per interval — the seed is
-    already < 0.05 deg off; three steps reach float precision, the
-    same count as the staged robin_inverse_stages so the fused
-    numpy/SQL forms and the staged Column form agree to converged
-    double precision)."""
-    c0, c1, c2, c3 = _ROBIN_CY[i]
-    y0, y1 = _ROBIN_Y[i], _ROBIN_Y[i + 1]
-    z = (t - B.lit(y0)) * B.lit(5.0 / (y1 - y0))
-    for _ in range(3):
-        p = B.lit(c0) + z * (B.lit(c1) + z * (B.lit(c2) + z * B.lit(c3)))
-        dp = B.lit(c1) + z * (B.lit(2.0 * c2) + z * B.lit(3.0 * c3))
-        z = z - (p - t) / dp
-    return z
-
-
 def robin_inverse(B, x, y, lon0: float, a: float, f: float,
                   fe: float = 0.0, fn: float = 0.0):
     """Robinson inverse: the Y-spline is strictly monotone, so the
     interval is selected EXACTLY by comparing the target against the
-    node values (flat CASE), then a fixed-interval Newton recovers z;
-    lam divides out the X-spline at the recovered latitude.
+    node values (one flat CASE per coefficient, chosen once), then a
+    linear seed plus three generic Newton steps on that interval's
+    cubic recover z (the spline is near-linear per interval: the seed
+    is already < 0.05 deg off); lam divides out the X-spline at the
+    recovered latitude. Each step reads the chosen coefficients and z
+    several times, so the fused tree trips the JVM 64 KB codegen
+    limit: one cut per step."""
+    t, sgn, xx = B.stage(B.abs(y - B.lit(fn)) / B.lit(_ROBIN_FYC * a),
+                         B.sign(y - B.lit(fn)), x - B.lit(fe))
 
-    FUSED form — fine for the numpy/SQL backends; the Column path
-    must use robin_inverse_stages/from_robinson (the Newton-in-branch
-    tree trips the JVM 64 KB codegen limit when fused)."""
-    t = B.abs(y - B.lit(fn)) / B.lit(_ROBIN_FYC * a)
-
-    def branch(vals):
-        expr = vals[17]
+    def sel(vals):
+        expr = B.lit(vals[17])
         for i in range(16, -1, -1):
-            expr = B.when(B.lt(t, _ROBIN_Y[i + 1]), vals[i], expr)
+            expr = B.when(B.lt(t, _ROBIN_Y[i + 1]), B.lit(vals[i]), expr)
         return expr
 
-    phis, lams = [], []
-    for i in range(18):
-        z = _robin_inv_z(B, i, t)
-        cx = _ROBIN_CX[i]
-        xf = B.lit(cx[0]) + z * (B.lit(cx[1]) + z * (B.lit(cx[2])
-                                                     + z * B.lit(cx[3])))
-        phis.append(B.lit(5.0 * i) + z)
-        lams.append((x - B.lit(fe)) / (B.lit(_ROBIN_FXC * a) * xf))
+    c0, c1, c2, c3, x0, x1, x2, x3, base, y0, slope = B.stage(
+        *(sel([c[k] for c in _ROBIN_CY]) for k in range(4)),
+        *(sel([c[k] for c in _ROBIN_CX]) for k in range(4)),
+        sel([5.0 * i for i in range(18)]), sel(_ROBIN_Y[:18]),
+        sel([(_ROBIN_Y[i + 1] - _ROBIN_Y[i]) / 5.0 for i in range(18)]))
+    z = B.stage((t - y0) / slope)
+    for _ in range(3):
+        z = B.stage(z - (((c3 * z + c2) * z + c1) * z + c0 - t)
+                    / ((3.0 * c3 * z + 2.0 * c2) * z + c1))
     deg = 180.0 / math.pi
-    lat = branch(phis) * B.sign(y - B.lit(fn))
-    return B.lit(lon0) + branch(lams) * B.lit(deg), lat
+    xf = ((x3 * z + x2) * z + x1) * z + x0
+    return (B.lit(lon0) + xx / (B.lit(_ROBIN_FXC * a) * xf) * B.lit(deg),
+            (base + z) * sgn)
 
 
 # ------------------------------------------------- Goode homolosine
@@ -1591,15 +1524,17 @@ def goode_forward(B, lon, lat, lon0: float, a: float, f: float,
     """Goode homolosine, uninterrupted (+proj=goode; spherical on the
     semi-major axis like the engine's Mollweide): sinusoidal inside
     |phi| <= 40d44', Mollweide shifted by y_corr outside. x is
-    continuous at the seam by the phi_lim definition."""
-    phi = B.radians(lat)
-    xs = B.lit(a) * B.radians(lon - B.lit(lon0)) * B.cos(phi)
-    ys = B.lit(a) * phi
-    xm, ym = moll_forward(B, lon, lat, lon0, a, f)
+    continuous at the seam by the phi_lim definition. The seam CASE
+    in each output column defeats Catalyst's subexpression
+    elimination on the embedded Mollweide Newton, so that Newton is
+    cut once per step."""
+    phi, lam = B.stage(B.radians(lat), B.radians(lon - B.lit(lon0)))
+    th = _moll_theta(B, B.stage(B.sin(phi)), B.stage)
+    xm, ym = _moll_xy(B, lam, th, a)
     cond = B.lt(B.abs(phi), _GOODE_PHI_LIM)
-    x = B.lit(fe) + B.when(cond, xs, xm)
+    x = B.lit(fe) + B.when(cond, B.lit(a) * lam * B.cos(phi), xm)
     y = B.lit(fn) + B.when(
-        cond, ys, ym - B.sign(phi) * B.lit(a * _GOODE_Y_COR))
+        cond, B.lit(a) * phi, ym - B.sign(phi) * B.lit(a * _GOODE_Y_COR))
     return x, y
 
 
@@ -1610,8 +1545,7 @@ def goode_inverse(B, x, y, lon0: float, a: float, f: float,
     their functions' domains for all on-sphere inputs, so the
     untaken branch never produces an error (just a discarded
     value)."""
-    yy = (y - B.lit(fn)) / B.lit(a)
-    xx = x - B.lit(fe)
+    yy, xx = B.stage((y - B.lit(fn)) / B.lit(a), x - B.lit(fe))
     deg = 180.0 / math.pi
     lat_s = yy * B.lit(deg)
     lon_s = B.lit(lon0) + xx / (B.lit(a) * B.cos(yy)) * B.lit(deg)
@@ -1685,166 +1619,6 @@ def geos_inverse(B, x, y, h: float, lon0: float, sweep_x: float,
     phi = B.atan(vz * k * B.cos(lam) / wx / B.lit(one_es))
     deg = 180.0 / math.pi
     return B.lit(lon0) + lam * B.lit(deg), phi * B.lit(deg)
-
-
-# --------------------------- staged forms (Robinson inverse / Goode)
-# The fused Robinson inverse (Newton inside 18 CASE branches) and the
-# fused Goode forward (the Mollweide Newton duplicated under a seam
-# CASE in each output column, where conditional evaluation defeats
-# Catalyst's subexpression elimination) both trip the JVM 64 KB
-# whole-stage-codegen method limit. Same cure as nzmg/poly/laborde:
-# one named expression per step — CollapseProject keeps multiply-
-# referenced non-trivial steps as separate Projects, so every
-# generated method stays small. The IDENTICAL templates drive the
-# DuckDB CTE oracle (nzmg.sql_cte_chain).
-
-def robin_inverse_stages(x_expr: str, y_expr: str, epsg: int = 54030,
-                         steps: int = 3) -> list:
-    """Robinson staged inverse — appends robin_lon / robin_lat.
-    Interval selection is exact (node-value comparisons); per-stage
-    CASE columns materialize the interval's cubic coefficients once,
-    so each Newton step is a tiny generic expression."""
-    kind, ell, p = CONIC_PRESETS[epsg]
-    a, _f = ELLIPSOIDS[ell]
-    fe, fn, lon0 = p.get("fe", 0.0), p.get("fn", 0.0), p.get("lon0", 0.0)
-
-    def sel(vals):
-        """Flat CASE keyed on rb_t vs the Y node values."""
-        expr = repr(float(vals[17]))
-        for i in range(16, -1, -1):
-            expr = (f"CASE WHEN rb_t < {_ROBIN_Y[i + 1]!r}"
-                    f" THEN {float(vals[i])!r} ELSE {expr} END")
-        return f"({expr})"
-
-    st = [{
-        "rb_t": f"(ABS(({y_expr}) - {fn!r}) / {_ROBIN_FYC * a!r})",
-        "rb_sgn": f"(1.0 * SIGN(({y_expr}) - {fn!r}))",
-        "rb_xx": f"(({x_expr}) - {fe!r})",
-    }]
-    st.append({
-        "rb_c0": sel([c[0] for c in _ROBIN_CY]),
-        "rb_c1": sel([c[1] for c in _ROBIN_CY]),
-        "rb_c2": sel([c[2] for c in _ROBIN_CY]),
-        "rb_c3": sel([c[3] for c in _ROBIN_CY]),
-        "rb_x0": sel([c[0] for c in _ROBIN_CX]),
-        "rb_x1": sel([c[1] for c in _ROBIN_CX]),
-        "rb_x2": sel([c[2] for c in _ROBIN_CX]),
-        "rb_x3": sel([c[3] for c in _ROBIN_CX]),
-        "rb_b": sel([5.0 * i for i in range(18)]),
-        # seed inputs: z0 = (t - Y_i) / ((Y_{i+1} - Y_i) / 5)
-        "rb_y0": sel([_ROBIN_Y[i] for i in range(18)]),
-        "rb_sl": sel([(_ROBIN_Y[i + 1] - _ROBIN_Y[i]) / 5.0
-                      for i in range(18)]),
-    })
-    st.append({"rb_zs0": "((rb_t - rb_y0) / rb_sl)"})
-    for k in range(steps):
-        i, o = f"rb_zs{k}", f"rb_zs{k + 1}"
-        st.append({o: (
-            f"({i} - (((rb_c3 * {i} + rb_c2) * {i} + rb_c1) * {i}"
-            f" + rb_c0 - rb_t)"
-            f" / ((3.0 * rb_c3 * {i} + 2.0 * rb_c2) * {i} + rb_c1))")})
-    zf = f"rb_zs{steps}"
-    deg = 180.0 / math.pi
-    st.append({
-        "robin_lat": f"((rb_b + {zf}) * rb_sgn)",
-        "robin_lon": (
-            f"({lon0!r} + rb_xx / ({_ROBIN_FXC * a!r}"
-            f" * (((rb_x3 * {zf} + rb_x2) * {zf} + rb_x1) * {zf}"
-            f" + rb_x0)) * {deg!r})"),
-    })
-    return st
-
-
-def from_robinson(df, x_col: str = "x", y_col: str = "y",
-                  epsg: int = 54030):
-    """Staged Column inverse — appends robin_lon / robin_lat."""
-    from .nzmg import _apply_stages
-
-    return _apply_stages(df, robin_inverse_stages(x_col, y_col, epsg),
-                         False, out_prefix="robin_")
-
-
-def goode_forward_stages(lon_expr: str, lat_expr: str,
-                         epsg: int) -> list:
-    """Goode homolosine staged forward — appends goode_x / goode_y.
-    The Mollweide theta Newton runs one step per Project."""
-    kind, ell, p = CONIC_PRESETS[epsg]
-    a, _f = ELLIPSOIDS[ell]
-    fe, fn, lon0 = p.get("fe", 0.0), p.get("fn", 0.0), p.get("lon0", 0.0)
-    st = [{
-        "gd_phi": f"(RADIANS({lat_expr}))",
-        "gd_lam": f"(RADIANS(({lon_expr}) - {lon0!r}))",
-    }]
-    st.append({"gd_sp": "(SIN(gd_phi))"})
-    st.append({
-        "gd_tg": f"({math.pi!r} * gd_sp)",
-        "gd_th0": str(_moll_theta_seed(_SqlBackend, _Sql("gd_sp"))),
-    })
-    for k in range(4):
-        i, o = f"gd_th{k}", f"gd_th{k + 1}"
-        st.append({o: (
-            f"({i} - ({i} * 2.0 + SIN({i} * 2.0) - gd_tg)"
-            f" / (2.0 + COS({i} * 2.0) * 2.0))")})
-    kx = 2.0 * math.sqrt(2.0) / math.pi
-    st.append({
-        "goode_x": (
-            f"({fe!r} + CASE WHEN ABS(gd_phi) < {_GOODE_PHI_LIM!r}"
-            f" THEN {a!r} * gd_lam * COS(gd_phi)"
-            f" ELSE {kx * a!r} * gd_lam * COS(gd_th4) END)"),
-        "goode_y": (
-            f"({fn!r} + CASE WHEN ABS(gd_phi) < {_GOODE_PHI_LIM!r}"
-            f" THEN {a!r} * gd_phi"
-            f" ELSE {math.sqrt(2.0) * a!r} * SIN(gd_th4)"
-            f" - 1.0 * SIGN(gd_phi) * {a * _GOODE_Y_COR!r} END)"),
-    })
-    return st
-
-
-def goode_inverse_stages(x_expr: str, y_expr: str, epsg: int) -> list:
-    """Goode staged inverse — appends goode_lon / goode_lat."""
-    kind, ell, p = CONIC_PRESETS[epsg]
-    a, _f = ELLIPSOIDS[ell]
-    fe, fn, lon0 = p.get("fe", 0.0), p.get("fn", 0.0), p.get("lon0", 0.0)
-    deg = 180.0 / math.pi
-    kx = 2.0 * math.sqrt(2.0) / math.pi
-    st = [{
-        "gi_yy": f"((({y_expr}) - {fn!r}) / {a!r})",
-        "gi_xx": f"(({x_expr}) - {fe!r})",
-    }]
-    st.append({"gi_th": (
-        f"(ASIN((gi_yy + 1.0 * SIGN(gi_yy) * {_GOODE_Y_COR!r})"
-        f" * {1.0 / math.sqrt(2.0)!r}))")})
-    st.append({
-        "goode_lon": (
-            f"(CASE WHEN ABS(gi_yy) < {_GOODE_PHI_LIM!r}"
-            f" THEN {lon0!r} + gi_xx / ({a!r} * COS(gi_yy)) * {deg!r}"
-            f" ELSE {lon0!r} + gi_xx / ({kx * a!r} * COS(gi_th))"
-            f" * {deg!r} END)"),
-        "goode_lat": (
-            f"(CASE WHEN ABS(gi_yy) < {_GOODE_PHI_LIM!r}"
-            f" THEN gi_yy * {deg!r}"
-            f" ELSE ASIN((gi_th * 2.0 + SIN(gi_th * 2.0))"
-            f" / {math.pi!r}) * {deg!r} END)"),
-    })
-    return st
-
-
-def to_goode(df, lon_col: str = "lon", lat_col: str = "lat",
-             epsg: int = -54052):
-    """Staged Column forward — appends goode_x / goode_y."""
-    from .nzmg import _apply_stages
-
-    return _apply_stages(df, goode_forward_stages(lon_col, lat_col, epsg),
-                         False, out_prefix="goode_")
-
-
-def from_goode(df, x_col: str = "x", y_col: str = "y",
-               epsg: int = -54052):
-    """Staged Column inverse — appends goode_lon / goode_lat."""
-    from .nzmg import _apply_stages
-
-    return _apply_stages(df, goode_inverse_stages(x_col, y_col, epsg),
-                         False, out_prefix="goode_")
 
 
 def tmerc_forward(B, lon, lat, lon0: float, k0: float, a: float, f: float,
@@ -1963,99 +1737,36 @@ def poly_forward(B, lon, lat, phi0: float, lon0: float,
 def poly_inverse(B, x, y, phi0: float, lon0: float,
                  a: float, f: float, fe: float = 0.0, fn: float = 0.0,
                  iters: int = 4):
-    """American Polyconic inverse (Snyder 18-18..18-21 Newton): the
-    eager-backend form (numpy vertex arrays). The Column/SQL tree
-    grows ~48x per Newton step, so the declarative engines must run
-    the STAGED form instead (poly_inverse_stages / from_polyconic) —
-    conic_inverse raises for this family just like Laborde."""
+    """American Polyconic inverse (Snyder 18-18..18-21 Newton). The
+    fused tree grows ~48x per Newton step, so the declarative engines
+    run it staged: two cuts per step."""
     e2 = f * (2.0 - f)
     c0, c2, c4, c6 = _m_coeffs(e2)
     M0 = a * _m_of(e2, math.radians(phi0))
 
-    xp = (x - B.lit(fe)) / B.lit(a)
-    A = B.lit(M0 / a) + (y - B.lit(fn)) / B.lit(a)
-    Bv = xp * xp + A * A
+    xp, A = B.stage((x - B.lit(fe)) / B.lit(a),
+                    B.lit(M0 / a) + (y - B.lit(fn)) / B.lit(a))
+    Bv = B.stage(xp * xp + A * A)
     phi = A
     for _ in range(iters):
-        s2 = B.sin(phi * 2.0)
         sphi = B.sin(phi)
-        C = B.sqrt(1.0 - sphi * sphi * B.lit(e2)) * B.tan(phi)
-        Ma = _m_expr(B, e2, phi)
-        Mna = (B.lit(c0) - B.lit(2.0 * c2) * B.cos(phi * 2.0)
-               + B.lit(4.0 * c4) * B.cos(phi * 4.0)
-               - B.lit(6.0 * c6) * B.cos(phi * 6.0))
+        s2, C, Ma, Mna = B.stage(
+            B.sin(phi * 2.0),
+            B.sqrt(1.0 - sphi * sphi * B.lit(e2)) * B.tan(phi),
+            _m_expr(B, e2, phi),
+            B.lit(c0) - B.lit(2.0 * c2) * B.cos(phi * 2.0)
+            + B.lit(4.0 * c4) * B.cos(phi * 4.0)
+            - B.lit(6.0 * c6) * B.cos(phi * 6.0))
         num = A * (C * Ma + 1.0) - Ma - (Ma * Ma + Bv) * C * 0.5
         den = (B.lit(e2) * s2 * (Ma * Ma + Bv - A * Ma * 2.0)
                / (C * 4.0)
                + (A - Ma) * (C * Mna - B.lit(2.0) / s2) - Mna)
-        phi = phi - num / den
+        phi = B.stage(phi - num / den)
     sphi = B.sin(phi)
-    Cf = B.sqrt(1.0 - sphi * sphi * B.lit(e2)) * B.tan(phi)
+    Cf = B.stage(B.sqrt(1.0 - sphi * sphi * B.lit(e2)) * B.tan(phi))
     lam = B.asin(xp * Cf) / sphi
     deg = 180.0 / math.pi
     return B.lit(lon0) + lam * B.lit(deg), phi * B.lit(deg)
-
-
-def poly_inverse_stages(x_expr: str, y_expr: str,
-                        epsg: int = 29101, iters: int = 4) -> list:
-    """The Polyconic Newton inverse as NAMED-EXPRESSION STAGES (the
-    laborde_inverse_stages pattern): one Project per Newton step on
-    the Column path, the IDENTICAL templates as a DuckDB CTE chain on
-    the oracle side. Appends poly_lon / poly_lat."""
-    kind, ell, p = CONIC_PRESETS[epsg]
-    a, f = ELLIPSOIDS[ell]
-    e2 = f * (2.0 - f)
-    c0, c2, c4, c6 = _m_coeffs(e2)
-    M0 = a * _m_of(e2, math.radians(p["phi0"]))
-    fe, fn = p.get("fe", 0.0), p.get("fn", 0.0)
-    lon0 = p["lon0"]
-
-    st = [{
-        "pxp": f"((({x_expr}) - {fe!r}) / {a!r})",
-        "pA": f"({M0 / a!r} + (({y_expr}) - {fn!r}) / {a!r})",
-    }]
-    st.append({"pBv": "(pxp * pxp + pA * pA)", "pphi0": "pA"})
-    for k in range(iters):
-        i, o = f"pphi{k}", f"pphi{k + 1}"
-        st.append({
-            f"ps2_{k}": f"(SIN(2.0 * {i}))",
-            f"pC_{k}": f"(SQRT(1.0 - {e2!r} * SIN({i}) * SIN({i}))"
-                       f" * TAN({i}))",
-            f"pMa_{k}": f"({c0!r} * {i} - {c2!r} * SIN(2.0 * {i})"
-                        f" + {c4!r} * SIN(4.0 * {i})"
-                        f" - {c6!r} * SIN(6.0 * {i}))",
-            f"pMna_{k}": f"({c0!r} - {2.0 * c2!r} * COS(2.0 * {i})"
-                         f" + {4.0 * c4!r} * COS(4.0 * {i})"
-                         f" - {6.0 * c6!r} * COS(6.0 * {i}))",
-        })
-        st.append({o: (
-            f"({i} - (pA * (pC_{k} * pMa_{k} + 1.0) - pMa_{k}"
-            f" - 0.5 * (pMa_{k} * pMa_{k} + pBv) * pC_{k})"
-            f" / ({e2!r} * ps2_{k}"
-            f" * (pMa_{k} * pMa_{k} + pBv - 2.0 * pA * pMa_{k})"
-            f" / (4.0 * pC_{k})"
-            f" + (pA - pMa_{k}) * (pC_{k} * pMna_{k} - 2.0 / ps2_{k})"
-            f" - pMna_{k}))")})
-    fin = f"pphi{iters}"
-    deg = 180.0 / math.pi
-    st.append({
-        "pCf": f"(SQRT(1.0 - {e2!r} * SIN({fin}) * SIN({fin}))"
-               f" * TAN({fin}))",
-    })
-    st.append({
-        "poly_lat": f"({fin} * {deg!r})",
-        "poly_lon": f"({lon0!r} + ASIN(pxp * pCf) / SIN({fin}) * {deg!r})",
-    })
-    return st
-
-
-def from_polyconic(df, x_col: str = "x", y_col: str = "y",
-                   epsg: int = 29101):
-    """Staged Column inverse — appends poly_lon / poly_lat."""
-    from .nzmg import _apply_stages
-
-    return _apply_stages(df, poly_inverse_stages(x_col, y_col, epsg),
-                         False, out_prefix="poly_")
 
 
 # ------------------------------------------------------ Bonne (EPSG 9827)
@@ -2472,122 +2183,46 @@ def laborde_inverse(B, x, y, phic: float, lonc: float, alphac: float,
     """Laborde inverse: two Newton steps on the complex cubic
     G*H^3 + H = zeta (the GN 7-2 iteration), inverse sphere rotation,
     conformal-latitude series (Snyder 3-5) instead of the iterative
-    isometric solve."""
+    isometric solve. Fused, the two complex-cubic steps blow up to a
+    multi-MB tree, so the declarative engines run it staged."""
     e, e2, Bc, phis, R, C, G, l0 = _laborde_consts(phic, lonc, alphac,
                                                    kc, a, f)
     ss, cs = math.sin(phis), math.cos(phis)
-    zr = (y - B.lit(fn)) / B.lit(R)
-    zi = (x - B.lit(fe)) / B.lit(R)
+    zr, zi = B.stage((y - B.lit(fn)) / B.lit(R), (x - B.lit(fe)) / B.lit(R))
     hr, hi = zr, zi
     for _ in range(2):
         # H <- (zeta + 2 G H^3) / (3 G H^2 + 1)
-        h2r = hr * hr - hi * hi
-        h2i = hr * hi * 2.0
-        h3r = h2r * hr - h2i * hi
-        h3i = h2r * hi + h2i * hr
-        nr = zr + (B.lit(G.real) * h3r - B.lit(G.imag) * h3i) * 2.0
-        ni = zi + (B.lit(G.real) * h3i + B.lit(G.imag) * h3r) * 2.0
-        dr = (B.lit(G.real) * h2r - B.lit(G.imag) * h2i) * 3.0 + 1.0
-        di = (B.lit(G.real) * h2i + B.lit(G.imag) * h2r) * 3.0
+        h2r, h2i = B.stage(hr * hr - hi * hi, hr * hi * 2.0)
+        h3r, h3i = B.stage(h2r * hr - h2i * hi, h2r * hi + h2i * hr)
+        nr, ni, dr, di = B.stage(
+            zr + (B.lit(G.real) * h3r - B.lit(G.imag) * h3i) * 2.0,
+            zi + (B.lit(G.real) * h3i + B.lit(G.imag) * h3r) * 2.0,
+            (B.lit(G.real) * h2r - B.lit(G.imag) * h2i) * 3.0 + 1.0,
+            (B.lit(G.real) * h2i + B.lit(G.imag) * h2r) * 3.0)
         dd = dr * dr + di * di
-        hr = (nr * dr + ni * di) / dd
-        hi = (ni * dr - nr * di) / dd
-    Lp = hr * B.lit(-1.0)
-    Pp = B.atan(B.exp(hi)) * 2.0 - B.lit(math.pi / 2.0)
+        hr, hi = B.stage((nr * dr + ni * di) / dd, (ni * dr - nr * di) / dd)
+    Lp, Pp = B.stage(hr * B.lit(-1.0),
+                     B.atan(B.exp(hi)) * 2.0 - B.lit(math.pi / 2.0))
     cPp = B.cos(Pp)
     sPp = B.sin(Pp)
     # inverse rotation (transpose of the forward's orthogonal matrix):
     # x = cosP'cosL'*cs + cosP'sinL'*ss, y = sinP',
     # z = cosP'cosL'*ss - cosP'sinL'*cs
-    U = cPp * B.cos(Lp) * B.lit(cs) + cPp * B.sin(Lp) * B.lit(ss)
-    V = sPp
-    W = cPp * B.cos(Lp) * B.lit(ss) - cPp * B.sin(Lp) * B.lit(cs)
-    d = B.sqrt(U * U + V * V)
-    L = B.atan2(V, U + d) * 2.0
-    P = B.atan2(W, d)
-    qp = (B.log(B.tan(P * 0.5 + B.lit(math.pi / 4.0))) - B.lit(C)) \
-        / B.lit(Bc)
-    chi = B.atan(B.exp(qp)) * 2.0 - B.lit(math.pi / 2.0)
+    U, V, W = B.stage(
+        cPp * B.cos(Lp) * B.lit(cs) + cPp * B.sin(Lp) * B.lit(ss),
+        sPp,
+        cPp * B.cos(Lp) * B.lit(ss) - cPp * B.sin(Lp) * B.lit(cs))
+    d = B.stage(B.sqrt(U * U + V * V))
+    L, P = B.stage(B.atan2(V, U + d) * 2.0, B.atan2(W, d))
+    qp = B.stage((B.log(B.tan(P * 0.5 + B.lit(math.pi / 4.0))) - B.lit(C))
+                 / B.lit(Bc))
+    chi = B.stage(B.atan(B.exp(qp)) * 2.0 - B.lit(math.pi / 2.0))
     c1, c2, c3, c4 = _chi_series(e2)
     phi = (chi + B.lit(c1) * B.sin(chi * 2.0) + B.lit(c2) * B.sin(chi * 4.0)
            + B.lit(c3) * B.sin(chi * 6.0) + B.lit(c4) * B.sin(chi * 8.0))
     deg = 180.0 / math.pi
     lam = B.lit(l0) + L / B.lit(Bc)
     return lam * B.lit(deg), phi * B.lit(deg)
-
-
-def laborde_inverse_stages(x_expr: str, y_expr: str,
-                           epsg: int = 29701) -> list:
-    """The Laborde inverse as NAMED-EXPRESSION STAGES (the nzmg.py
-    pattern): the single-expression B-backend form blows up to a
-    multi-MB tree through the two complex-cubic Newton steps, so the
-    Column path runs one Project per step (still a single map stage)
-    and the oracle runs the IDENTICAL templates as a DuckDB CTE chain
-    — ATAN/ATAN2/EXP/LN/TAN/SIN/COS/SQRT spell the same in both."""
-    kind, ell, p = CONIC_PRESETS[epsg]
-    a, f = ELLIPSOIDS[ell]
-    e, e2, Bc, phis, R, C, G, l0 = _laborde_consts(
-        p["phic"], p["lonc"], p["alphac"], p["kc"], a, f)
-    ss, cs = math.sin(phis), math.cos(phis)
-    fe, fn = p.get("fe", 0.0), p.get("fn", 0.0)
-    gr, gi = G.real, G.imag
-    st = [{"lzr": f"(({y_expr}) - {fn!r}) / {R!r}",
-           "lzi": f"(({x_expr}) - {fe!r}) / {R!r}",
-           "h0r": f"(({y_expr}) - {fn!r}) / {R!r}",
-           "h0i": f"(({x_expr}) - {fe!r}) / {R!r}"}]
-    for k in (1, 2):
-        i, o = f"h{k - 1}", f"h{k}"
-        st.append({f"{o}_2r": f"({i}r * {i}r - {i}i * {i}i)",
-                   f"{o}_2i": f"(2.0 * {i}r * {i}i)"})
-        st.append({f"{o}_3r": f"({o}_2r * {i}r - {o}_2i * {i}i)",
-                   f"{o}_3i": f"({o}_2r * {i}i + {o}_2i * {i}r)"})
-        st.append({
-            f"{o}_nr": f"(lzr + 2.0 * ({gr!r} * {o}_3r - {gi!r} * {o}_3i))",
-            f"{o}_ni": f"(lzi + 2.0 * ({gr!r} * {o}_3i + {gi!r} * {o}_3r))",
-            f"{o}_dr": f"(1.0 + 3.0 * ({gr!r} * {o}_2r - {gi!r} * {o}_2i))",
-            f"{o}_di": f"(3.0 * ({gr!r} * {o}_2i + {gi!r} * {o}_2r))",
-        })
-        st.append({
-            f"{o}r": f"(({o}_nr * {o}_dr + {o}_ni * {o}_di)"
-                     f" / ({o}_dr * {o}_dr + {o}_di * {o}_di))",
-            f"{o}i": f"(({o}_ni * {o}_dr - {o}_nr * {o}_di)"
-                     f" / ({o}_dr * {o}_dr + {o}_di * {o}_di))",
-        })
-    hp = math.pi / 2.0
-    st.append({"llp": "(-h2r)",
-               "lpp": f"(2.0 * ATAN(EXP(h2i)) - {hp!r})"})
-    st.append({
-        "lrx": f"(COS(lpp) * COS(llp) * {cs!r}"
-               f" + COS(lpp) * SIN(llp) * {ss!r})",
-        "lry": "(SIN(lpp))",
-        "lrz": f"(COS(lpp) * COS(llp) * {ss!r}"
-               f" - COS(lpp) * SIN(llp) * {cs!r})",
-    })
-    st.append({"lrd": "(SQRT(lrx * lrx + lry * lry))"})
-    st.append({"lbigl": "(2.0 * ATAN2(lry, lrx + lrd))",
-               "lbigp": "(ATAN2(lrz, lrd))"})
-    qp = math.pi / 4.0
-    st.append({"lqp": f"((LN(TAN(lbigp * 0.5 + {qp!r})) - {C!r}) / {Bc!r})"})
-    st.append({"lchi": f"(2.0 * ATAN(EXP(lqp)) - {hp!r})"})
-    c1, c2, c3, c4 = _chi_series(e2)
-    deg = 180.0 / math.pi
-    st.append({
-        "lab_lat": f"((lchi + {c1!r} * SIN(2.0 * lchi)"
-                   f" + {c2!r} * SIN(4.0 * lchi)"
-                   f" + {c3!r} * SIN(6.0 * lchi)"
-                   f" + {c4!r} * SIN(8.0 * lchi)) * {deg!r})",
-        "lab_lon": f"(({l0!r} + lbigl / {Bc!r}) * {deg!r})",
-    })
-    return st
-
-
-def from_laborde(df, x_col: str = "x", y_col: str = "y",
-                 epsg: int = 29701):
-    """Staged Column inverse — appends lab_lon / lab_lat."""
-    from .nzmg import _apply_stages
-
-    return _apply_stages(df, laborde_inverse_stages(x_col, y_col, epsg),
-                         False, out_prefix="lab_")
 
 
 # ------------------------------------------------------------------ Krovak
@@ -2883,6 +2518,16 @@ class _NpBackend:
     sign = staticmethod(_np.sign)
     lt = staticmethod(_np.less)
     when = staticmethod(_np.where)
+    stage = staticmethod(_fuse)
+
+
+def _formula(epsg: int, inverse: bool):
+    """(family, fn): one direction's formula with the preset's
+    parameters bound, fn(B, x, y)."""
+    kind, ellps, p = CONIC_PRESETS[epsg]
+    a, f = ELLIPSOIDS[ellps]
+    fn = _CONIC_FNS[kind][int(inverse)]
+    return kind, lambda B, x, y: fn(B, x, y, a=a, f=f, **p)
 
 
 def np_transform_fn(epsg: int, inverse: bool = False):
@@ -2893,14 +2538,8 @@ def np_transform_fn(epsg: int, inverse: bool = False):
     the DRIVER's CONIC_PRESETS — an executor-side dict lookup would
     KeyError, while the resolved (kind, a, f, params) pickle cleanly
     into the closure."""
-    kind, ellps, p = CONIC_PRESETS[epsg]
-    a, f = ELLIPSOIDS[ellps]
-    fn = _CONIC_FNS[kind][1 if inverse else 0]
-
-    def tx(xs, ys):
-        return fn(_NpBackend, xs, ys, a=a, f=f, **p)
-
-    return tx
+    fn = _formula(epsg, inverse)[1]
+    return lambda xs, ys: fn(_NpBackend, xs, ys)
 
 
 def transform_points_np(epsg: int, xs, ys, inverse: bool = False):
@@ -2909,77 +2548,107 @@ def transform_points_np(epsg: int, xs, ys, inverse: bool = False):
     return np_transform_fn(epsg, inverse)(xs, ys)
 
 
+# (family, inverse) directions whose fused Column/SQL tree is too
+# large to compile: conic_forward / conic_inverse and their _sql forms
+# refuse them. Eckert IV's forward compiles fused, only slowly.
+_STAGED_ONLY = {("goode", False), ("goode", True), ("laborde", True),
+                ("poly", True), ("robin", True), ("wintri", True)}
+
+
+def _refuse_fused(kind: str, inverse: bool):
+    raise ValueError(
+        f"{kind} {'inverse' if inverse else 'forward'} must run staged: "
+        f"use crs.transform_df / crs.transform_sql")
+
+
+def _fused(B, epsg: int, inverse: bool, x, y):
+    kind, fn = _formula(epsg, inverse)
+    if (kind, inverse) in _STAGED_ONLY:
+        _refuse_fused(kind, inverse)
+    return fn(B, x, y)
+
+
 def conic_forward(epsg: int, lon: Column, lat: Column) -> tuple[Column, Column]:
-    kind, ellps, p = CONIC_PRESETS[epsg]
-    if kind == "goode":
-        # conditional seam evaluation defeats Catalyst subexpression
-        # elimination on the embedded Mollweide Newton -> 64 KB limit
-        raise ValueError("goode forward must run staged: use "
-                         "crs.to_goode(df) / goode_forward_stages")
-    a, f = ELLIPSOIDS[ellps]
-    return _CONIC_FNS[kind][0](_ColBackend, lon, lat, a=a, f=f, **p)
+    return _fused(_ColBackend, epsg, False, lon, lat)
 
 
 def conic_inverse(epsg: int, x: Column, y: Column) -> tuple[Column, Column]:
-    kind, ellps, p = CONIC_PRESETS[epsg]
-    if kind == "laborde":
-        # the fused Newton tree is multi-MB — use the staged form
-        raise ValueError("laborde inverse must run staged: use "
-                         "crs.from_laborde(df) / laborde_inverse_stages")
-    if kind == "poly":
-        # ~48x tree growth per Newton step — use the staged form
-        raise ValueError("polyconic inverse must run staged: use "
-                         "crs.from_polyconic(df) / poly_inverse_stages")
-    if kind == "robin":
-        # Newton-in-CASE-branch trips the 64 KB codegen method limit
-        raise ValueError("robinson inverse must run staged: use "
-                         "crs.from_robinson(df) / robin_inverse_stages")
-    if kind == "goode":
-        raise ValueError("goode inverse must run staged: use "
-                         "crs.from_goode(df) / goode_inverse_stages")
-    if kind == "wintri":
-        # 5 F-evaluations per bivariate Newton step — fused tree
-        # quintuples per step
-        raise ValueError("winkel inverse must run staged: use "
-                         "crs.from_winkel(df) / wintri_inverse_stages")
-    a, f = ELLIPSOIDS[ellps]
-    return _CONIC_FNS[kind][1](_ColBackend, x, y, a=a, f=f, **p)
+    return _fused(_ColBackend, epsg, True, x, y)
 
 
 def conic_forward_sql(epsg: int, lon_expr: str, lat_expr: str) -> tuple[str, str]:
-    kind, ellps, p = CONIC_PRESETS[epsg]
-    if kind == "goode":
-        raise ValueError("goode forward must run staged: use "
-                         "goode_forward_stages + nzmg.sql_cte_chain")
-    a, f = ELLIPSOIDS[ellps]
-    x, y = _CONIC_FNS[kind][0](_SqlBackend, _Sql(lon_expr), _Sql(lat_expr),
-                               a=a, f=f, **p)
+    x, y = _fused(_SqlBackend, epsg, False, _Sql(lon_expr), _Sql(lat_expr))
     return str(x), str(y)
 
 
 def conic_inverse_sql(epsg: int, x_expr: str, y_expr: str) -> tuple[str, str]:
-    kind, ellps, p = CONIC_PRESETS[epsg]
-    if kind == "laborde":
-        raise ValueError("laborde inverse must run staged: use "
-                         "laborde_inverse_stages + nzmg.sql_cte_chain")
-    if kind == "poly":
-        raise ValueError("polyconic inverse must run staged: use "
-                         "poly_inverse_stages + nzmg.sql_cte_chain")
-    if kind == "robin":
-        # DuckDB runs the fused form fine, but the oracle must use
-        # the SAME templates as the Spark side (step counts differ)
-        raise ValueError("robinson inverse must run staged: use "
-                         "robin_inverse_stages + nzmg.sql_cte_chain")
-    if kind == "goode":
-        raise ValueError("goode inverse must run staged: use "
-                         "goode_inverse_stages + nzmg.sql_cte_chain")
-    if kind == "wintri":
-        raise ValueError("winkel inverse must run staged: use "
-                         "wintri_inverse_stages + nzmg.sql_cte_chain")
-    a, f = ELLIPSOIDS[ellps]
-    lon, lat = _CONIC_FNS[kind][1](_SqlBackend, _Sql(x_expr), _Sql(y_expr),
-                                   a=a, f=f, **p)
+    lon, lat = _fused(_SqlBackend, epsg, True, _Sql(x_expr), _Sql(y_expr))
     return str(lon), str(lat)
+
+
+# ----------------------------------------------- staged executor
+def _record(epsg: int, inverse: bool, x_expr: str, y_expr: str):
+    """Run one direction's formula on a _StageRecorder: the recorder
+    (its stages are empty when the formula has no cut) and the two
+    output expressions over those stages."""
+    kind, fn = _formula(epsg, inverse)
+    rec = _StageRecorder(f"{kind}_{'i' if inverse else 'f'}")
+    ex, ey = fn(rec, _Sql(x_expr), _Sql(y_expr))
+    return rec, str(ex), str(ey)
+
+
+def _apply_stages(df: DataFrame, stages, out) -> DataFrame:
+    """Run named-expression stages ({column: SQL} dicts) as one
+    `select("*", ...)` Project each, then drop every stage column not
+    named in `out`. Catalyst keeps a multiply-referenced step as its
+    own Project, so every generated method stays small, and the whole
+    chain is still one map stage: no shuffle, no UDF."""
+    tmp: list[str] = []
+    for stage in stages:
+        df = df.select("*", *[F.expr(sql).alias(name)
+                              for name, sql in stage.items()])
+        tmp += [n for n in stage if n not in out]
+    return df.drop(*tmp)
+
+
+def sql_cte_chain(src_sql: str, stages, final_select: str,
+                  prefix: str) -> str:
+    """The same stages as a DuckDB WITH chain, one CTE per stage."""
+    ctes = [f"{prefix}0 AS ({src_sql})"]
+    for k, stage in enumerate(stages, start=1):
+        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage.items())
+        ctes.append(f"{prefix}{k} AS (SELECT *, {cols} FROM {prefix}{k-1})")
+    return ("WITH " + ",\n".join(ctes)
+            + f"\nSELECT {final_select} FROM {prefix}{len(stages)}")
+
+
+def transform_df(df: DataFrame, epsg: int, x_col: str, y_col: str,
+                 out: tuple[str, str], inverse: bool = False) -> DataFrame:
+    """Append the projection of columns x_col/y_col (lon/lat degrees,
+    or projected x/y when inverse) as the two columns named in `out`.
+    A formula with stage cuts runs one Project per stage; any other
+    runs as one fused Column expression, as conic_forward /
+    conic_inverse would."""
+    rec, ex, ey = _record(epsg, inverse, x_col, y_col)
+    if not rec.stages:
+        ex, ey = _formula(epsg, inverse)[1](_ColBackend, F.col(x_col),
+                                            F.col(y_col))
+        return df.select("*", ex.alias(out[0]), ey.alias(out[1]))
+    return _apply_stages(df, rec.stages + [dict(zip(out, (ex, ey)))], out)
+
+
+def transform_sql(epsg: int, rel: str, x_expr: str, y_expr: str,
+                  inverse: bool = False) -> tuple[str, str, str]:
+    """The SQL twin of transform_df: (relation, x, y) such that
+    `SELECT x, y FROM relation` projects x_expr/y_expr of relation
+    `rel`. Without stage cuts the relation is `rel` itself and x/y are
+    the fused conic_*_sql expressions; with cuts it is a subquery that
+    runs one CTE per stage (sql_cte_chain)."""
+    rec, ex, ey = _record(epsg, inverse, x_expr, y_expr)
+    if rec.stages:
+        rel = "(" + sql_cte_chain(f"SELECT * FROM {rel}", rec.stages, "*",
+                                  rec.prefix) + ")"
+    return rel, ex, ey
 
 
 # ------------------------------------------------- raster reprojection
@@ -3064,16 +2733,13 @@ def grid_transform_np(src_epsg: int, dst_epsg: int):
 
 
 # ----------------------------------- generic CRS -> CRS point transform
-_STAGED_KINDS = ("laborde", "poly")
-
-
 def _geo_hub(B, epsg: int, x, y, inverse: bool):
     """One leg of the geodetic-hub composition on backend B:
     projected (x, y) -> WGS84-frame lon/lat when inverse, else
     lon/lat -> projected. Same dispatch as grid_transform_np minus
-    the two legs that can't run fused declaratively: 27700 (the BNG
-    Helmert pipeline is staged in projpipe) and the staged-inverse
-    families (laborde/poly)."""
+    the legs that can't run fused declaratively: 27700 (the BNG
+    Helmert pipeline is staged in projpipe) and the Laborde and
+    Polyconic inverses (staged Newton)."""
     if epsg == 4326:
         return x, y
     if epsg == 3857:
@@ -3083,14 +2749,10 @@ def _geo_hub(B, epsg: int, x, y, inverse: bool):
     try:
         ellps, zone, south = utm_params(epsg)
     except ValueError:
-        kind, ellps, p = CONIC_PRESETS[epsg]
-        if inverse and kind in _STAGED_KINDS:
-            raise ValueError(
-                f"{kind} inverse must run staged: use "
-                f"crs.from_{'laborde' if kind == 'laborde' else 'polyconic'}"
-            )
-        a, f = ELLIPSOIDS[ellps]
-        return _CONIC_FNS[kind][1 if inverse else 0](B, x, y, a=a, f=f, **p)
+        kind, fn = _formula(epsg, inverse)
+        if inverse and kind in ("laborde", "poly"):
+            _refuse_fused(kind, inverse)
+        return fn(B, x, y)
     a, f = ELLIPSOIDS[ellps]
     fn = _tm_inverse if inverse else _tm_forward
     return fn(B, x, y, float(zone * 6 - 183), a, f,

@@ -26,12 +26,13 @@ isometric-latitude derivative at -41 deg in these units.
 
 Spark lowering: NZMG is TRIG-FREE — both directions are pure
 polynomial arithmetic — so every stage is defined ONCE as a SQL
-expression template and executed two ways: `F.expr` per staged
-`.select` (one Project per complex power / Newton step, the
-projpipe.py anti-codegen-blowup pattern; the whole transform stays a
-single map stage, no shuffle, no UDF), and the identical templates as
-a DuckDB CTE chain for the oracle.  A third, independent numpy
-implementation (complex dtype) serves vertex arrays and tests.
+expression template and executed two ways by the staged executor in
+crs.py: `crs._apply_stages` runs one `.select` Project per complex
+power / Newton step (the projpipe.py anti-codegen-blowup pattern; the
+whole transform stays a single map stage, no shuffle, no UDF), and
+`crs.sql_cte_chain` runs the identical templates as a DuckDB CTE
+chain for the oracle.  A third, independent numpy implementation
+(complex dtype) serves vertex arrays and tests.
 """
 
 from __future__ import annotations
@@ -40,7 +41,8 @@ import math
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .crs import _apply_stages, sql_cte_chain
 
 A_INTL = 6378388.0
 LAT0, LON0 = -41.0, 173.0
@@ -158,43 +160,22 @@ def inverse_stages(e: str, n: str) -> list[dict[str, str]]:
 
 
 # --------------------------------------------------------- Column path
-def _apply_stages(df: DataFrame, stages, keep_tmp: bool,
-                  out_prefix: str = "nzmg_") -> DataFrame:
-    tmp: list[str] = []
-    for stage in stages:
-        df = df.select("*", *[F.expr(sql).alias(name)
-                              for name, sql in stage.items()])
-        tmp += [n for n in stage if not n.startswith(out_prefix)]
-    if not keep_tmp:
-        df = df.drop(*tmp)
-    return df
-
-
 def to_nzmg(df: DataFrame, lon_col: str = "lon",
             lat_col: str = "lat") -> DataFrame:
     """Append nzmg_e / nzmg_n — staged Projects, single map stage."""
-    return _apply_stages(df, forward_stages(lon_col, lat_col), False)
+    return _apply_stages(df, forward_stages(lon_col, lat_col),
+                         ("nzmg_e", "nzmg_n"))
 
 
 def from_nzmg(df: DataFrame, e_col: str = "nzmg_e",
               n_col: str = "nzmg_n") -> DataFrame:
     """Append nzmg_lon / nzmg_lat — staged Projects incl. the two
     Newton steps, still one map stage."""
-    return _apply_stages(df, inverse_stages(e_col, n_col), False)
+    return _apply_stages(df, inverse_stages(e_col, n_col),
+                         ("nzmg_lon", "nzmg_lat"))
 
 
 # ------------------------------------------------------------ SQL path
-def sql_cte_chain(src_sql: str, stages, final_select: str,
-                  prefix: str) -> str:
-    """The SAME stage templates as a DuckDB WITH chain."""
-    ctes = [f"{prefix}0 AS ({src_sql})"]
-    for k, stage in enumerate(stages, start=1):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in stage.items())
-        ctes.append(f"{prefix}{k} AS (SELECT *, {cols} FROM {prefix}{k-1})")
-    return ("WITH " + ",\n".join(ctes)
-            + f"\nSELECT {final_select} FROM {prefix}{len(stages)}")
-
-
 def roundtrip_sql(src_sql: str, lon: str = "lon", lat: str = "lat",
                   id_col: str = "doc_id") -> str:
     """Oracle query: forward + inverse round trip from src_sql rows."""

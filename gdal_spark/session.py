@@ -39,6 +39,18 @@ def _zip_base(root: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"gdal_spark_pkg_{key}")
 
 
+def _driver_memory() -> str:
+    """spark.driver.memory default: half the physical memory, rounded
+    to whole gigabytes, between 1g and 8g, so a small machine keeps
+    room for the Python workers beside the JVM (a flat 8g asked an
+    8 GB box for all of it). SPARK_GRAFT_DRIVER_MEM overrides it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "8g"
+    return f"{max(1, min(8, round(phys / 2 ** 31)))}g"
+
+
 def get_spark(
     app_name: str = "gdal_spark",
     cpus: int | None = None,
@@ -76,7 +88,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "40000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # OGR SQL is permissive (no overflow/cast errors; swq evaluators

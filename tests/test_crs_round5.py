@@ -103,11 +103,9 @@ def test_np_roundtrip_domain(epsg, lo, hi, la0, la1):
 
 
 def test_polyconic_column_and_sql_stages_match_numpy(spark):
-    """The staged Column inverse and the identical DuckDB CTE chain
-    both reproduce the eager numpy Newton iteration."""
+    """The staged Column inverse and its DuckDB CTE chain both
+    reproduce the eager numpy Newton iteration."""
     import duckdb
-
-    from gdal_spark import nzmg
 
     _, a, f, p = _preset(29101)
     rng = np.random.default_rng(11)
@@ -118,7 +116,8 @@ def test_polyconic_column_and_sql_stages_match_numpy(spark):
     df = spark.createDataFrame(
         [(i, float(X[i]), float(Y[i])) for i in range(250)],
         "id long, x double, y double")
-    out = crs.from_polyconic(df).orderBy("id").collect()
+    out = crs.transform_df(df, 29101, "x", "y", ("poly_lon", "poly_lat"),
+                           inverse=True).orderBy("id").collect()
     np.testing.assert_allclose([r.poly_lon for r in out], lons,
                                rtol=0, atol=1e-9)
     np.testing.assert_allclose([r.poly_lat for r in out], lats,
@@ -129,10 +128,9 @@ def test_polyconic_column_and_sql_stages_match_numpy(spark):
         f"({i}, CAST({float(X[i])!r} AS DOUBLE),"
         f" CAST({float(Y[i])!r} AS DOUBLE))" for i in range(250)) +
         ") t(doc_id, x, y)")
-    q = nzmg.sql_cte_chain("SELECT * FROM p",
-                           crs.poly_inverse_stages("x", "y"),
-                           "doc_id, poly_lon, poly_lat", "pc")
-    res = con.execute(q + " ORDER BY doc_id").fetchnumpy()
+    rel, lon, lat = crs.transform_sql(29101, "p", "x", "y", inverse=True)
+    res = con.execute(f"SELECT doc_id, {lon} AS poly_lon, {lat} AS poly_lat"
+                      f" FROM {rel} ORDER BY doc_id").fetchnumpy()
     np.testing.assert_allclose(res["poly_lon"], lons, rtol=0, atol=1e-9)
     np.testing.assert_allclose(res["poly_lat"], lats, rtol=0, atol=1e-8)
 

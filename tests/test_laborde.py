@@ -46,9 +46,9 @@ def test_column_path_matches_numpy(spark):
         "id long, lon double, lat double")
     x, y = crs.conic_forward(29701, F.col("lon"), F.col("lat"))
     d = df.select("id", "lon", "lat", x.alias("x"), y.alias("y"))
-    out = crs.from_laborde(d).select(
-        "id", "x", "y", F.col("lab_lon").alias("lon2"),
-        F.col("lab_lat").alias("lat2")).orderBy("id").collect()
+    out = crs.transform_df(d, 29701, "x", "y", ("lon2", "lat2"),
+                           inverse=True).select(
+        "id", "x", "y", "lon2", "lat2").orderBy("id").collect()
     X, Y = crs.laborde_forward(crs._NpBackend, lons, lats,
                                a=A, f=FLAT, **P29701)
     np.testing.assert_allclose([r.x for r in out], X, rtol=0, atol=1e-6)
@@ -65,16 +65,15 @@ def test_plan_pure_codegen(spark):
         "CAST(-25.0 + id * 0.2 AS DOUBLE) AS lat")
     x, y = crs.conic_forward(29701, F.col("lon"), F.col("lat"))
     d = df.select(x.alias("x"), y.alias("y"))
-    plan = crs.from_laborde(d)._jdf.queryExecution() \
+    plan = crs.transform_df(d, 29701, "x", "y", ("lon2", "lat2"),
+                            inverse=True)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan and "Python" not in plan
 
 
 def test_sql_stages_match_numpy():
-    """The identical inverse stage templates evaluated by DuckDB."""
+    """The staged inverse's CTE chain evaluated by DuckDB."""
     import duckdb
-
-    from gdal_spark import nzmg
 
     rng = np.random.default_rng(9)
     lons = rng.uniform(43, 51, 200)
@@ -86,10 +85,9 @@ def test_sql_stages_match_numpy():
         f"({i}, CAST({float(X[i])!r} AS DOUBLE),"
         f" CAST({float(Y[i])!r} AS DOUBLE))" for i in range(200)) +
         ") t(doc_id, x, y)")
-    q = nzmg.sql_cte_chain("SELECT * FROM p",
-                           crs.laborde_inverse_stages("x", "y"),
-                           "doc_id, lab_lon, lab_lat", "lb")
-    res = con.execute(q + " ORDER BY doc_id").fetchnumpy()
+    rel, lon, lat = crs.transform_sql(29701, "p", "x", "y", inverse=True)
+    res = con.execute(f"SELECT doc_id, {lon} AS lab_lon, {lat} AS lab_lat"
+                      f" FROM {rel} ORDER BY doc_id").fetchnumpy()
     np.testing.assert_allclose(res["lab_lon"], lons, rtol=0, atol=1e-9)
     np.testing.assert_allclose(res["lab_lat"], lats, rtol=0, atol=1e-8)
 

@@ -17,6 +17,11 @@
 - Every top-level import is read in its module (`__init__.py`
   re-exports and `__future__` imports aside): an unread import is dead
   code that still reads as a dependency.
+- Each projection direction is written once, against the backend B,
+  with its stage cuts marked by `B.stage`: crs.py has no top-level
+  `*_stages` twin, the staged executor (`_apply_stages`,
+  `sql_cte_chain`) is defined once, and no module imports it from
+  nzmg.
 - The query builders' scratch files live under one root:
   `tempfile.mkdtemp` is called once in `__spark_entry__.py`, by
   `_scratch`, and a process that used `_scratch` leaves nothing behind.
@@ -145,6 +150,26 @@ def test_every_top_level_import_is_read():
     found = [s for p in SOURCES if os.path.basename(p) != "__init__.py"
              for s in _unread_imports(p)]
     assert not found, found
+
+
+def test_one_formula_per_projection_direction():
+    crs_py = os.path.join(REPO, "gdal_spark", "crs.py")
+    twins = [n.name for n in _tree(crs_py).body
+             if isinstance(n, ast.FunctionDef) and n.name.endswith("_stages")
+             and n.name != "_apply_stages"]
+    assert not twins, twins
+    defs = {"_apply_stages": [], "sql_cte_chain": []}
+    from_nzmg = []
+    for path in SOURCES:
+        for n in ast.walk(_tree(path)):
+            if isinstance(n, ast.FunctionDef) and n.name in defs:
+                defs[n.name].append(_rel(path))
+            if (isinstance(n, ast.ImportFrom)
+                    and (n.module or "").split(".")[-1] == "nzmg"
+                    and any(a.name == "_apply_stages" for a in n.names)):
+                from_nzmg.append(f"{_rel(path)}:{n.lineno}")
+    assert all(len(v) == 1 for v in defs.values()), defs
+    assert not from_nzmg, from_nzmg
 
 
 def test_one_mkdtemp_in_the_query_builders():

@@ -15,7 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from gdal_spark import crs, nzmg, proj4
+from gdal_spark import crs, proj4
 
 B = crs._NpBackend
 A_WGS84 = 6378137.0
@@ -167,7 +167,8 @@ def test_robinson_staged_inverse_spark(spark):
         "lon double, lat double")
     x, y = crs.conic_forward(54030, F.col("lon"), F.col("lat"))
     d = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    r = crs.from_robinson(d).toPandas()
+    r = crs.transform_df(d, 54030, "x", "y", ("robin_lon", "robin_lat"),
+                         inverse=True).toPandas()
     assert np.abs(r.robin_lon - r.lon).max() < 1e-9
     assert np.abs(r.robin_lat - r.lat).max() < 1e-9
     # map-only: staged Projects add no exchange
@@ -181,10 +182,9 @@ def test_goode_staged_spark_matches_numpy(spark):
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(lons, lats)],
         "lon double, lat double")
-    g = crs.to_goode(df, "lon", "lat", crs.CODE_GOODE)
-    g = g.withColumnRenamed("goode_x", "x").withColumnRenamed(
-        "goode_y", "y")
-    r = crs.from_goode(g, "x", "y", crs.CODE_GOODE).toPandas()
+    g = crs.transform_df(df, crs.CODE_GOODE, "lon", "lat", ("x", "y"))
+    r = crs.transform_df(g, crs.CODE_GOODE, "x", "y",
+                         ("goode_lon", "goode_lat"), inverse=True).toPandas()
     xn, yn = crs.goode_forward(B, lons, lats, lon0=0.0, a=A_WGS84, f=0.0)
     r = r.sort_values("lon")
     assert np.abs(r.x.values - xn).max() < 1e-6
@@ -225,17 +225,19 @@ def test_robinson_oracle_cte_matches_spark(spark):
         "lon double, lat double")
     x, y = crs.conic_forward(54030, F.col("lon"), F.col("lat"))
     d = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    r = crs.from_robinson(d).toPandas().sort_values("lon")
+    r = crs.transform_df(d, 54030, "x", "y", ("robin_lon", "robin_lat"),
+                         inverse=True).toPandas().sort_values("lon")
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE pts AS SELECT * FROM (VALUES "
         + ",".join(f"({a!r},{b!r})" for a, b in zip(lons, lats))
         + ") t(lon,lat)")
     fx, fy = crs.conic_forward_sql(54030, "lon", "lat")
-    src = f"SELECT lon, lat, {fx} AS x, {fy} AS y FROM pts"
-    q = nzmg.sql_cte_chain(src, crs.robin_inverse_stages("x", "y"),
-                           "lon, x, y, robin_lon, robin_lat", "rb")
-    o = con.execute(q + " ORDER BY lon").fetchnumpy()
+    con.execute(f"CREATE TABLE xy AS SELECT lon, lat, {fx} AS x, {fy} AS y"
+                " FROM pts")
+    rel, lon, lat = crs.transform_sql(54030, "xy", "x", "y", inverse=True)
+    o = con.execute(f"SELECT lon, x, y, {lon} AS robin_lon,"
+                    f" {lat} AS robin_lat FROM {rel} ORDER BY lon").fetchnumpy()
     assert np.abs(o["x"] - r.x.values).max() < 1e-6
     assert np.abs(o["robin_lon"] - r.robin_lon.values).max() < 1e-8
 
@@ -347,7 +349,8 @@ def test_wintri_staged_spark_matches_numpy(spark):
         "lon double, lat double")
     x, y = crs.conic_forward(54042, F.col("lon"), F.col("lat"))
     d = df.select("lon", "lat", x.alias("x"), y.alias("y"))
-    r = crs.from_winkel(d).toPandas().sort_values("lon")
+    r = crs.transform_df(d, 54042, "x", "y", ("winkel_lon", "winkel_lat"),
+                         inverse=True).toPandas().sort_values("lon")
     xn, yn = crs.wintri_forward(B, lons, lats, a=a, f=f, **p)
     assert np.abs(r.x.values - xn).max() < 1e-6
     assert np.abs(r.winkel_lon.values - lons).max() < 1e-8

@@ -10,6 +10,11 @@ Usage: python tools/check_contract.py [--exact] [--json out.json]
 (NaN==NaN), not at rtol 1e-9 — the mode that catches
 silent-precision defects like r4's %.10g GML truncation, which the
 tolerance compare waved through.
+
+If the Spark gateway is lost (the JVM died, e.g. killed for memory),
+the run stops at the first connection-layer error: that query FAILs,
+every later one is NOT RUN in the --json summary, and the exit code is
+non-zero.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ import sys
 import duckdb
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JNetworkError
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -99,45 +105,15 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    failures = 0
-    summary = {}
-    for name, fn in E.queries().items():
-        if only and name not in only:
-            continue
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as ex:
-            print(f"FAIL {name}: spark error: {ex}")
-            summary[name] = {"status": "FAIL", "error": f"spark: {ex}"}
-            failures += 1
-            continue
-        try:
-            sql = E.oracle(name)
-        except Exception as ex:
-            print(f"FAIL {name}: oracle build error: {ex}")
-            summary[name] = {"status": "FAIL", "error": f"oracle build: {ex}"}
-            failures += 1
-            continue
-        try:
-            odf = con.execute(sql).fetchdf()
-        except Exception as ex:
-            print(f"FAIL {name}: oracle error: {ex}")
-            summary[name] = {"status": "FAIL", "error": f"oracle: {ex}"}
-            failures += 1
-            continue
-        errs = compare(name, sdf, odf)
-        if errs:
-            failures += 1
-            print(f"FAIL {name}: " + "; ".join(errs))
-            summary[name] = {"status": "FAIL", "error": "; ".join(errs)}
-        else:
-            print(f"OK   {name}: {len(sdf)} rows")
-            summary[name] = {"status": "OK", "rows": len(sdf)}
+    summary = run(spark, con, E.queries(), E.oracle, sf_dir, only)
+    failures = sum(1 for v in summary.values() if v["status"] == "FAIL")
+    lost = any(v["status"] == "NOT RUN" for v in summary.values())
     # entry smoke
-    if not only:
+    if not only and not lost:
         n = E.entry(spark).count()
         print(f"ENTRY rows={n}")
-    spark.stop()
+    if not lost:
+        spark.stop()
     if json_out:
         import json
 
@@ -149,7 +125,59 @@ def main():
                 fh, indent=1, sort_keys=True,
             )
         print(f"wrote {json_out}: {ok}/{len(summary)} OK")
-    sys.exit(1 if failures else 0)
+    sys.exit(1 if failures or lost else 0)
+
+
+def _gateway_lost(ex: BaseException) -> bool:
+    """True for a py4j connection-layer error anywhere in ex's chain:
+    the JVM behind the session is gone, so every later query would
+    fail the same way."""
+    while ex is not None:
+        if isinstance(ex, (Py4JNetworkError, ConnectionError, EOFError)):
+            return True
+        ex = ex.__cause__ or ex.__context__
+    return False
+
+
+def run(spark, con, queries: dict, oracle, sf_dir: str, only=()) -> dict:
+    """Run each selected query and its oracle; returns {name: verdict}.
+    Stops at the first sign of a lost gateway and marks the rest
+    NOT RUN."""
+    summary = {}
+    names = [n for n in queries if not only or n in only]
+    for i, name in enumerate(names):
+        try:
+            sdf = queries[name](spark, sf_dir).toPandas()
+        except Exception as ex:
+            print(f"FAIL {name}: spark error: {ex}")
+            summary[name] = {"status": "FAIL", "error": f"spark: {ex}"}
+            if _gateway_lost(ex):
+                print(f"STOP gateway lost; {len(names) - i - 1} not run")
+                for rest in names[i + 1:]:
+                    summary[rest] = {"status": "NOT RUN",
+                                     "error": f"gateway lost at {name}"}
+                break
+            continue
+        try:
+            sql = oracle(name)
+        except Exception as ex:
+            print(f"FAIL {name}: oracle build error: {ex}")
+            summary[name] = {"status": "FAIL", "error": f"oracle build: {ex}"}
+            continue
+        try:
+            odf = con.execute(sql).fetchdf()
+        except Exception as ex:
+            print(f"FAIL {name}: oracle error: {ex}")
+            summary[name] = {"status": "FAIL", "error": f"oracle: {ex}"}
+            continue
+        errs = compare(name, sdf, odf)
+        if errs:
+            print(f"FAIL {name}: " + "; ".join(errs))
+            summary[name] = {"status": "FAIL", "error": "; ".join(errs)}
+        else:
+            print(f"OK   {name}: {len(sdf)} rows")
+            summary[name] = {"status": "OK", "rows": len(sdf)}
+    return summary
 
 
 if __name__ == "__main__":
