@@ -5,8 +5,9 @@ with linear edge interpolation; saddles disambiguated by the cell
 center mean.
 
 Distributed shape: every tile computes the cells whose TOP-LEFT pixel
-it owns; the right/bottom halo strips (1 px) come from the same
-neighbor-strip exchange the focal DEM ops use, so border cells between
+it owns; the right/bottom 1-px halo comes from the one halo exchange
+(`raster.halo` / `raster.halo_window`, NaN past the raster's edge)
+the focal DEM ops use, so border cells between
 tiles are computed exactly once, by the tile that owns their top-left
 corner. Cells that would extend past the global raster edge are
 dropped (no pixels beyond the edge — GDAL generates contours only
@@ -26,8 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .raster import _neighbor_strips
-from .tiling import _decode
+from .raster import halo, halo_window
 
 CONTOUR_SCHEMA = T.StructType(
     [
@@ -103,42 +103,15 @@ def cell_segments(A, B, C, D, level):
 
 def contour(tiles: DataFrame, levels: list[float]) -> DataFrame:
     """Iso-line segment count + length per (tile, level)."""
-    strips = _neighbor_strips(tiles).groupBy("dst_tx", "dst_ty").agg(
-        F.collect_list(F.struct("dx", "dy", "strip")).alias("halo")
-    )
-    j = tiles.join(
-        strips,
-        (tiles.tile_x == strips.dst_tx) & (tiles.tile_y == strips.dst_ty),
-        "left",
-    ).drop("dst_tx", "dst_ty")
 
     def run(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
-                H, W = arr.shape
-                right = bottom = corner = None
-                if r.halo is not None:
-                    for s in r.halo:
-                        piece = np.frombuffer(s["strip"], dtype=np.float64)
-                        if s["dx"] == 1 and s["dy"] == 0:
-                            right = piece
-                        elif s["dx"] == 0 and s["dy"] == 1:
-                            bottom = piece
-                        elif s["dx"] == 1 and s["dy"] == 1:
-                            corner = piece[0]
                 # extended array: (H+1, W+1) where the extra row/col are
                 # the neighbors' first pixels; NaN where no neighbor ->
                 # those cells produce no crossings (NaN compares False)
-                ext = np.full((H + 1, W + 1), np.nan)
-                ext[:H, :W] = arr
-                if right is not None:
-                    ext[:H, W] = right
-                if bottom is not None:
-                    ext[H, :W] = bottom
-                if corner is not None:
-                    ext[H, W] = corner
+                ext = halo_window(r, 1, np.nan)[1:, 1:]
                 A = ext[:-1, :-1].ravel()
                 B = ext[:-1, 1:].ravel()
                 C = ext[1:, 1:].ravel()
@@ -156,7 +129,7 @@ def contour(tiles: DataFrame, levels: list[float]) -> DataFrame:
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in CONTOUR_SCHEMA.fields])
 
-    return j.mapInPandas(run, schema=CONTOUR_SCHEMA)
+    return halo(tiles, 1).mapInPandas(run, schema=CONTOUR_SCHEMA)
 
 
 def contour_totals(tiles: DataFrame, levels: list[float]) -> DataFrame:
@@ -233,42 +206,14 @@ SEG_SCHEMA = T.StructType(
 
 def contour_segments(tiles: DataFrame, levels: list[float]) -> DataFrame:
     """Per-level iso-segments with GLOBAL pixel coordinates (same cell
-    ownership + halo-strip plan as contour())."""
-    from .raster import _neighbor_strips
-
-    strips = _neighbor_strips(tiles).groupBy("dst_tx", "dst_ty").agg(
-        F.collect_list(F.struct("dx", "dy", "strip")).alias("halo")
-    )
-    j = tiles.join(
-        strips,
-        (tiles.tile_x == strips.dst_tx) & (tiles.tile_y == strips.dst_ty),
-        "left",
-    ).drop("dst_tx", "dst_ty")
+    ownership + halo plan as contour())."""
 
     def run(batches):
         for pdf in batches:
             outs = []
             for r in pdf.itertuples(index=False):
-                arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
-                H, W = arr.shape
-                right = bottom = corner = None
-                if r.halo is not None:
-                    for s in r.halo:
-                        piece = np.frombuffer(s["strip"], dtype=np.float64)
-                        if s["dx"] == 1 and s["dy"] == 0:
-                            right = piece
-                        elif s["dx"] == 0 and s["dy"] == 1:
-                            bottom = piece
-                        elif s["dx"] == 1 and s["dy"] == 1:
-                            corner = piece[0]
-                ext = np.full((H + 1, W + 1), np.nan)
-                ext[:H, :W] = arr
-                if right is not None:
-                    ext[:H, W] = right
-                if bottom is not None:
-                    ext[H, :W] = bottom
-                if corner is not None:
-                    ext[H, W] = corner
+                H, W = int(r.height), int(r.width)
+                ext = halo_window(r, 1, np.nan)[1:, 1:]
                 A = ext[:-1, :-1].ravel()
                 B = ext[:-1, 1:].ravel()
                 C = ext[1:, 1:].ravel()
@@ -297,7 +242,7 @@ def contour_segments(tiles: DataFrame, levels: list[float]) -> DataFrame:
                 )
             )
 
-    return j.mapInPandas(run, schema=SEG_SCHEMA)
+    return halo(tiles, 1).mapInPandas(run, schema=SEG_SCHEMA)
 
 
 _QUANT = float(1 << 20)

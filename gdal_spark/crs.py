@@ -2738,8 +2738,8 @@ def _geo_hub(B, epsg: int, x, y, inverse: bool):
     projected (x, y) -> WGS84-frame lon/lat when inverse, else
     lon/lat -> projected. Same dispatch as grid_transform_np minus
     the legs that can't run fused declaratively: 27700 (the BNG
-    Helmert pipeline is staged in projpipe) and the Laborde and
-    Polyconic inverses (staged Newton)."""
+    Helmert pipeline is staged in projpipe) and every `_STAGED_ONLY`
+    direction, which `_fused` refuses."""
     if epsg == 4326:
         return x, y
     if epsg == 3857:
@@ -2749,10 +2749,7 @@ def _geo_hub(B, epsg: int, x, y, inverse: bool):
     try:
         ellps, zone, south = utm_params(epsg)
     except ValueError:
-        kind, fn = _formula(epsg, inverse)
-        if inverse and kind in ("laborde", "poly"):
-            _refuse_fused(kind, inverse)
-        return fn(B, x, y)
+        return _fused(B, epsg, inverse, x, y)
     a, f = ELLIPSOIDS[ellps]
     fn = _tm_inverse if inverse else _tm_forward
     return fn(B, x, y, float(zone * 6 - 183), a, f,

@@ -719,23 +719,12 @@ def polygonize_wkt(tiles: DataFrame, band: int = 1) -> DataFrame:
     Distributed shape: per-tile CCL emits each LOCAL label's directed
     boundary half-edges (boundaries are where the neighbor VALUE
     differs, so cross-tile seams need no label knowledge — a 1-px
-    value halo via the focal strip exchange decides the tile-edge
+    value halo from the one halo exchange decides the tile-edge
     sides); labels map to global regions through the same distributed
     connected-components stitch as polygonize(); each region's edges
     (O(perimeter), not O(area)) gather to ONE task that walks its
     rings. Distribution axis = regions."""
-    from .raster import _neighbor_strips
-
-    spark = tiles.sparkSession
-
-    strips = _neighbor_strips(tiles).groupBy("dst_tx", "dst_ty").agg(
-        F.collect_list(F.struct("dx", "dy", "strip")).alias("halo")
-    )
-    j = tiles.join(
-        strips,
-        (tiles.tile_x == strips.dst_tx) & (tiles.tile_y == strips.dst_ty),
-        "left",
-    ).drop("dst_tx", "dst_ty")
+    from .raster import halo, halo_window
 
     EDGE_SCHEMA = T.StructType(
         [
@@ -754,25 +743,14 @@ def polygonize_wkt(tiles: DataFrame, band: int = 1) -> DataFrame:
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                if int(r.band) != band:
-                    continue
-                arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
+                # value halo: NaN beyond the raster -> always a boundary
+                pad = halo_window(r, 1, np.nan)
+                arr = pad[1:-1, 1:-1]
                 H, W = arr.shape
                 tx, ty = int(r.tile_x), int(r.tile_y)
                 labels = tile_ccl(arr)
                 gbase = (np.int64(ty) * (1 << 20) + tx) * (1 << 22)
                 glab = labels + gbase
-                # value halo: NaN beyond the raster -> always a boundary
-                pad = np.full((H + 2, W + 2), np.nan)
-                pad[1:-1, 1:-1] = arr
-                if r.halo is not None:
-                    for s in r.halo:
-                        piece = np.frombuffer(s["strip"], dtype=np.float64)
-                        dx, dy = int(s["dx"]), int(s["dy"])
-                        if dx == 0 and dy != 0:
-                            pad[0 if dy < 0 else H + 1, 1 : W + 1] = piece
-                        elif dy == 0 and dx != 0:
-                            pad[1 : H + 1, 0 if dx < 0 else W + 1] = piece
                 gx0, gy0 = tx * W, ty * H
                 same_up = pad[:-2, 1:-1] == arr
                 same_dn = pad[2:, 1:-1] == arr
@@ -809,7 +787,8 @@ def polygonize_wkt(tiles: DataFrame, band: int = 1) -> DataFrame:
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in EDGE_SCHEMA.fields])
 
-    parts = j.mapInPandas(part, schema=EDGE_SCHEMA).persist()
+    parts = halo(tiles.filter(F.col("band") == band), 1).mapInPandas(
+        part, schema=EDGE_SCHEMA).persist()
 
     # region stitch: reuse polygonize()'s seam machinery for the
     # label -> component map

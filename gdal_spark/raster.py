@@ -21,9 +21,11 @@
   hillshade / slope
                3x3 focal DEM ops (apps/gdaldem_lib.cpp:901-1035 Horn
                hillshade, :1325 slope) with HALO EXCHANGE: every tile
-               joins its 8 neighbors' 1-px edge strips (self-join on
-               neighbor tile ids), then the kernel runs on the padded
-               array — the distributed form of GDAL's scanline window.
+               joins its 8 neighbors' edge blocks (`halo`, keyed by the
+               whole tile address), then the kernel runs on the padded
+               window (`halo_window`) — the distributed form of GDAL's
+               scanline window. Contour, polygonize_wkt, fill_nodata
+               and SURF detection read their windows the same way.
 """
 
 from __future__ import annotations
@@ -693,92 +695,98 @@ def value_counts(tiles: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------- focal (halo)
-def _neighbor_strips(tiles: DataFrame) -> DataFrame:
-    """Every tile contributes its 1-px edge strips to each of its 8
-    neighbors: (dst_tx, dst_ty, dx, dy, strip bytes). Strip volume is
-    ~1/128 of the data — the halo exchange shuffles edges, not tiles."""
-    STRIP_SCHEMA = T.StructType(
-        [
-            T.StructField("dst_tx", T.IntegerType()),
-            T.StructField("dst_ty", T.IntegerType()),
-            T.StructField("dx", T.IntegerType()),
-            T.StructField("dy", T.IntegerType()),
-            T.StructField("strip", T.BinaryType()),
-        ]
-    )
+# the whole tile address: every exchange between tiles is keyed by it
+_TILE_ADDRESS = ["raster_id", "band", "zoom", "tile_x", "tile_y"]
+_KEY_FIELDS = [TILE_SCHEMA[c] for c in _TILE_ADDRESS]
+_BLOCK_SCHEMA = T.StructType(
+    _KEY_FIELDS
+    + [
+        T.StructField("dx", T.IntegerType()),
+        T.StructField("dy", T.IntegerType()),
+        T.StructField("bh", T.IntegerType()),
+        T.StructField("bw", T.IntegerType()),
+        T.StructField("block", T.BinaryType()),
+    ]
+)
+
+
+def halo(tiles: DataFrame, h: int) -> DataFrame:
+    """The halo exchange: every tile sends its h-px edge and corner
+    blocks to its 8 neighbours, addressed by the whole tile key
+    (raster_id, band, zoom, tile_x, tile_y), so rasters and bands never
+    mix. The blocks are collected per key and left-joined back onto the
+    tiles as `halo`, a list of (dx, dy, bh, bw, block): the side of the
+    receiving tile the float64 block lies on, and its shape. A tile
+    ships ~4h/tile_px of its pixels — the exchange shuffles edges, not
+    tiles. `halo_window` turns one joined row into its window."""
 
     def emit(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
                 arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
-                tx, ty = int(r.tile_x), int(r.tile_y)
                 for dx in (-1, 0, 1):
                     for dy in (-1, 0, 1):
                         if dx == 0 and dy == 0:
                             continue
-                        # the piece of THIS tile adjacent to neighbor (tx+dx, ty+dy)
-                        sx = slice(0, 1) if dx < 0 else (slice(-1, None) if dx > 0 else slice(None))
-                        sy = slice(0, 1) if dy < 0 else (slice(-1, None) if dy > 0 else slice(None))
+                        # the piece of THIS tile next to neighbour (dx, dy)
+                        sx = slice(0, h) if dx < 0 else (slice(-h, None) if dx > 0 else slice(None))
+                        sy = slice(0, h) if dy < 0 else (slice(-h, None) if dy > 0 else slice(None))
                         piece = arr[sy, sx]
-                        rows.append(
-                            {
-                                "dst_tx": tx + dx, "dst_ty": ty + dy,
-                                # position of the piece relative to the dst tile
-                                "dx": -dx, "dy": -dy,
-                                "strip": piece.tobytes(),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in STRIP_SCHEMA.fields])
+                        rows.append((r.raster_id, int(r.band), int(r.zoom),
+                                     int(r.tile_x) + dx, int(r.tile_y) + dy,
+                                     -dx, -dy, *piece.shape, piece.tobytes()))
+            yield pd.DataFrame(rows, columns=_BLOCK_SCHEMA.fieldNames())
 
-    return tiles.mapInPandas(emit, schema=STRIP_SCHEMA)
+    blocks = tiles.mapInPandas(emit, schema=_BLOCK_SCHEMA)
+    gathered = blocks.groupBy(*_TILE_ADDRESS).agg(
+        F.collect_list(F.struct("dx", "dy", "bh", "bw", "block")).alias("halo")
+    )
+    return tiles.join(gathered, _TILE_ADDRESS, "left")
+
+
+def halo_window(r, h: int, fill) -> np.ndarray:
+    """The (H+2h, W+2h) float64 window of one `halo` row: the tile in
+    the centre, each neighbour's block against the side it came from,
+    and `fill` where no neighbour sent one (past the raster's edge).
+    fill="edge" is GDAL's edge rule for the 3x3 DEM ops: the tile's
+    border repeats outward (np.pad mode="edge"), and a missing corner
+    whose straight neighbour is present repeats that neighbour's end
+    pixels — the edge-padded global mosaic."""
+    arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
+    H, W = arr.shape
+    if fill == "edge":
+        win = np.pad(arr, h, mode="edge")
+    else:
+        win = np.full((H + 2 * h, W + 2 * h), fill)
+        win[h : h + H, h : h + W] = arr
+    sent = set()
+    for b in (r.halo if r.halo is not None else ()):
+        dx, dy, bh, bw = int(b["dx"]), int(b["dy"]), int(b["bh"]), int(b["bw"])
+        ys = slice(h - bh, h) if dy < 0 else (slice(h + H, h + H + bh) if dy > 0 else slice(h, h + H))
+        xs = slice(h - bw, h) if dx < 0 else (slice(h + W, h + W + bw) if dx > 0 else slice(h, h + W))
+        win[ys, xs] = np.frombuffer(b["block"], dtype=np.float64).reshape(bh, bw)
+        sent.add((dx, dy))
+    if fill == "edge":
+        for dx, dy in ((-1, -1), (1, -1), (-1, 1), (1, 1)):
+            if (dx, dy) in sent:
+                continue
+            ys = slice(0, h) if dy < 0 else slice(h + H, None)
+            xs = slice(0, h) if dx < 0 else slice(h + W, None)
+            if (0, dy) in sent:
+                win[ys, xs] = win[ys, h if dx < 0 else h + W - 1][:, None]
+            elif (dx, 0) in sent:
+                win[ys, xs] = win[h if dy < 0 else h + H - 1, xs][None, :]
+    return win
 
 
 def _focal(tiles: DataFrame, kernel_fn, out_dtype: str, dst_raster_id: str,
            res: float) -> DataFrame:
-    strips = _neighbor_strips(tiles).groupBy("dst_tx", "dst_ty").agg(
-        F.collect_list(F.struct("dx", "dy", "strip")).alias("halo")
-    )
-    j = tiles.join(
-        strips,
-        (tiles.tile_x == strips.dst_tx) & (tiles.tile_y == strips.dst_ty),
-        "left",
-    ).drop("dst_tx", "dst_ty")
-
     def run(batches):
         for pdf in batches:
             out_rows = []
             for r in pdf.itertuples(index=False):
-                arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
-                h, w = arr.shape
-                pad = np.pad(arr, 1, mode="edge")  # GDAL edge behavior
-                present = set()
-                if r.halo is not None:
-                    for s in r.halo:
-                        piece = np.frombuffer(s["strip"], dtype=np.float64)
-                        dx, dy = int(s["dx"]), int(s["dy"])
-                        present.add((dx, dy))
-                        if dx == 0 and dy != 0:
-                            row = 0 if dy < 0 else h + 1
-                            pad[row, 1 : w + 1] = piece
-                        elif dy == 0 and dx != 0:
-                            col = 0 if dx < 0 else w + 1
-                            pad[1 : h + 1, col] = piece
-                        else:
-                            pad[0 if dy < 0 else h + 1, 0 if dx < 0 else w + 1] = piece[0]
-                # corners with a missing DIAGONAL neighbor but a present
-                # straight neighbor replicate the straight neighbor's
-                # corner — the padded-global-mosaic edge semantics
-                for dx, dy in ((-1, -1), (1, -1), (-1, 1), (1, 1)):
-                    if (dx, dy) in present:
-                        continue
-                    cy = 0 if dy < 0 else h + 1
-                    cx = 0 if dx < 0 else w + 1
-                    if (0, dy) in present:
-                        pad[cy, cx] = pad[cy, 1 if dx < 0 else w]
-                    elif (dx, 0) in present:
-                        pad[cy, cx] = pad[1 if dy < 0 else h, cx]
-                out = kernel_fn(pad, res)
+                out = kernel_fn(halo_window(r, 1, "edge"), res)
                 out_rows.append(tile_row(
                     dst_raster_id, int(r.band), int(r.zoom), int(r.tile_x),
                     int(r.tile_y), _gdal_cast(out, out_dtype),
@@ -786,7 +794,7 @@ def _focal(tiles: DataFrame, kernel_fn, out_dtype: str, dst_raster_id: str,
                     dtype=out_dtype))
             yield pd.DataFrame(out_rows, columns=TILE_COLUMNS)
 
-    return j.mapInPandas(run, schema=TILE_SCHEMA)
+    return halo(tiles, 1).mapInPandas(run, schema=TILE_SCHEMA)
 
 
 def _horn_gradients(pad: np.ndarray, res: float):
@@ -1069,12 +1077,9 @@ def proximity(tiles: DataFrame, target_values: list[float],
     iteration. For unbounded / larger maxdist use `proximity_full`
     below (geometric ring-doubling rounds, exact at any distance)."""
     TGT_SCHEMA = T.StructType(
-        [
-            T.StructField("dst_tx", T.IntegerType()),
-            T.StructField("dst_ty", T.IntegerType()),
-            T.StructField("txs", T.ArrayType(T.LongType())),
-            T.StructField("tys", T.ArrayType(T.LongType())),
-        ]
+        _KEY_FIELDS
+        + [T.StructField("txs", T.ArrayType(T.LongType())),
+           T.StructField("tys", T.ArrayType(T.LongType()))]
     )
     tvals = list(target_values)
 
@@ -1087,29 +1092,21 @@ def proximity(tiles: DataFrame, target_values: list[float],
                 if not mask.any():
                     continue
                 ys, xs = np.nonzero(mask)
-                gx = (xs + int(r.tile_x) * r.width).astype(np.int64)
-                gy = (ys + int(r.tile_y) * r.height).astype(np.int64)
+                gx = (xs + int(r.tile_x) * r.width).astype(np.int64).tolist()
+                gy = (ys + int(r.tile_y) * r.height).astype(np.int64).tolist()
                 for dx in (-1, 0, 1):
                     for dy in (-1, 0, 1):
-                        rows.append(
-                            {
-                                "dst_tx": int(r.tile_x) + dx,
-                                "dst_ty": int(r.tile_y) + dy,
-                                "txs": gx.tolist(), "tys": gy.tolist(),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in TGT_SCHEMA.fields])
+                        rows.append((r.raster_id, int(r.band), int(r.zoom),
+                                     int(r.tile_x) + dx, int(r.tile_y) + dy,
+                                     gx, gy))
+            yield pd.DataFrame(rows, columns=TGT_SCHEMA.fieldNames())
 
     tgts = tiles.mapInPandas(emit_targets, schema=TGT_SCHEMA)
-    agg = tgts.groupBy("dst_tx", "dst_ty").agg(
+    agg = tgts.groupBy(*_TILE_ADDRESS).agg(
         F.flatten(F.collect_list("txs")).alias("all_tx"),
         F.flatten(F.collect_list("tys")).alias("all_ty"),
     )
-    j = tiles.join(
-        agg,
-        (tiles.tile_x == agg.dst_tx) & (tiles.tile_y == agg.dst_ty),
-        "left",
-    ).drop("dst_tx", "dst_ty")
+    j = tiles.join(agg, _TILE_ADDRESS, "left")
 
     md2 = maxdist * maxdist
 
@@ -1180,13 +1177,14 @@ def proximity_full(tiles: DataFrame, target_values: list[float],
     per-tile best-distance state) shuffles once per round on its own
     key only; target lists ride the join."""
     tvals = list(target_values)
+    # a target tile's whole address, its position named (jx, jy): the
+    # (tile, annulus tile) pairs join it on raster_id, band, zoom, jx, jy
     TGT_SCHEMA = T.StructType(
-        [
-            T.StructField("src_tx", T.IntegerType()),
-            T.StructField("src_ty", T.IntegerType()),
-            T.StructField("txs", T.ArrayType(T.LongType())),
-            T.StructField("tys", T.ArrayType(T.LongType())),
-        ]
+        _KEY_FIELDS[:3]
+        + [T.StructField("jx", T.IntegerType()),
+           T.StructField("jy", T.IntegerType()),
+           T.StructField("txs", T.ArrayType(T.LongType())),
+           T.StructField("tys", T.ArrayType(T.LongType()))]
     )
 
     def emit_targets(batches):
@@ -1198,16 +1196,13 @@ def proximity_full(tiles: DataFrame, target_values: list[float],
                 if not mask.any():
                     continue
                 ys, xs = np.nonzero(mask)
-                rows.append(
-                    {
-                        "src_tx": int(r.tile_x), "src_ty": int(r.tile_y),
-                        "txs": (xs + int(r.tile_x) * r.width)
-                        .astype(np.int64).tolist(),
-                        "tys": (ys + int(r.tile_y) * r.height)
-                        .astype(np.int64).tolist(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in TGT_SCHEMA.fields])
+                rows.append((
+                    r.raster_id, int(r.band), int(r.zoom),
+                    int(r.tile_x), int(r.tile_y),
+                    (xs + int(r.tile_x) * r.width).astype(np.int64).tolist(),
+                    (ys + int(r.tile_y) * r.height).astype(np.int64).tolist(),
+                ))
+            yield pd.DataFrame(rows, columns=TGT_SCHEMA.fieldNames())
 
     tgts = tiles.mapInPandas(emit_targets, schema=TGT_SCHEMA).persist()
 
@@ -1280,30 +1275,27 @@ def proximity_full(tiles: DataFrame, target_values: list[float],
             F.sequence(F.lit(-radius), F.lit(radius))
         ).alias("dy")
         pairs = (
-            state.select("tile_x", "tile_y", dxs)
-            .select("tile_x", "tile_y", "dx", dys)
+            state.select(*_TILE_ADDRESS, dxs)
+            .select(*_TILE_ADDRESS, "dx", dys)
             .filter(
                 F.greatest(F.abs(F.col("dx")), F.abs(F.col("dy"))) > r_prev
             )
             .select(
-                "tile_x", "tile_y",
+                *_TILE_ADDRESS,
                 (F.col("tile_x") + F.col("dx")).alias("jx"),
                 (F.col("tile_y") + F.col("dy")).alias("jy"),
             )
         )
         ring = (
-            pairs.join(
-                tgts,
-                (pairs.jx == tgts.src_tx) & (pairs.jy == tgts.src_ty),
-            )
-            .groupBy("tile_x", "tile_y")
+            pairs.join(tgts, ["raster_id", "band", "zoom", "jx", "jy"])
+            .groupBy(*_TILE_ADDRESS)
             .agg(
                 F.flatten(F.collect_list("txs")).alias("all_tx"),
                 F.flatten(F.collect_list("tys")).alias("all_ty"),
             )
         )
         state = (
-            state.join(ring, ["tile_x", "tile_y"], "left")
+            state.join(ring, _TILE_ADDRESS, "left")
             .mapInPandas(relax(radius), schema=STATE_SCHEMA)
             .localCheckpoint()
         )
@@ -1366,47 +1358,6 @@ def idw_fill_window(pad: np.ndarray, h: int, nodata: float,
     return filled
 
 
-def _neighbor_blocks(tiles: DataFrame, h: int) -> DataFrame:
-    """h-px edge blocks to each of the 8 neighbors (the width-h
-    generalization of _neighbor_strips)."""
-    BLOCK_SCHEMA = T.StructType(
-        [
-            T.StructField("dst_tx", T.IntegerType()),
-            T.StructField("dst_ty", T.IntegerType()),
-            T.StructField("dx", T.IntegerType()),
-            T.StructField("dy", T.IntegerType()),
-            T.StructField("bh", T.IntegerType()),
-            T.StructField("bw", T.IntegerType()),
-            T.StructField("block", T.BinaryType()),
-        ]
-    )
-
-    def emit(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
-                tx, ty = int(r.tile_x), int(r.tile_y)
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        sx = slice(0, h) if dx < 0 else (slice(-h, None) if dx > 0 else slice(None))
-                        sy = slice(0, h) if dy < 0 else (slice(-h, None) if dy > 0 else slice(None))
-                        piece = arr[sy, sx]
-                        rows.append(
-                            {
-                                "dst_tx": tx + dx, "dst_ty": ty + dy,
-                                "dx": -dx, "dy": -dy,
-                                "bh": piece.shape[0], "bw": piece.shape[1],
-                                "block": piece.tobytes(),
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
-
-    return tiles.mapInPandas(emit, schema=BLOCK_SCHEMA)
-
-
 def fill_smooth_window(pad: np.ndarray, search: int, n_smooth: int,
                        nodata: float, power: float = 2.0) -> np.ndarray:
     """Fill + the reference's -si post-smoothing (GDALMultiFilter,
@@ -1457,38 +1408,19 @@ def fill_nodata(tiles: DataFrame, search: int = 8, power: float = 2.0,
     iteration so the passes stay exact across tile borders.
     """
     h = search + smoothing
-    blocks = _neighbor_blocks(tiles, h).groupBy("dst_tx", "dst_ty").agg(
-        F.collect_list(F.struct("dx", "dy", "bh", "bw", "block")).alias("halo")
-    )
-    j = tiles.join(
-        blocks,
-        (tiles.tile_x == blocks.dst_tx) & (tiles.tile_y == blocks.dst_ty),
-        "left",
-    ).drop("dst_tx", "dst_ty")
 
     def run(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
-                H, W = arr.shape
+                H, W = int(r.height), int(r.width)
                 if h > min(H, W):
                     raise ValueError(
                         f"fill_nodata: search={h} px exceeds the tile size "
                         f"{W}x{H} — the one-tile halo exchange is only "
                         "exact for search <= one tile extent"
                     )
-                pad = np.full((H + 2 * h, W + 2 * h), np.nan)
-                pad[h : h + H, h : h + W] = arr
-                if r.halo is not None:
-                    for s in r.halo:
-                        piece = np.frombuffer(s["block"], dtype=np.float64).reshape(
-                            s["bh"], s["bw"]
-                        )
-                        dx, dy = int(s["dx"]), int(s["dy"])
-                        ys = slice(0, h) if dy < 0 else (slice(h + H, None) if dy > 0 else slice(h, h + H))
-                        xs = slice(0, h) if dx < 0 else (slice(h + W, None) if dx > 0 else slice(h, h + W))
-                        pad[ys, xs] = piece
+                pad = halo_window(r, h, np.nan)
                 filled = fill_smooth_window(pad, search, smoothing,
                                             float(r.nodata), power)
                 rows.append(tile_row(
@@ -1497,7 +1429,7 @@ def fill_nodata(tiles: DataFrame, search: int = 8, power: float = 2.0,
                     nodata=float(r.nodata), crs=r.crs, dtype="float64"))
             yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
-    return j.mapInPandas(run, schema=TILE_SCHEMA)
+    return halo(tiles, h).mapInPandas(run, schema=TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------- viewshed

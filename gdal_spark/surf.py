@@ -22,7 +22,7 @@ over accepted pairs, then pruned at MATCHING_THRESHOLD — documented
 deviation, deterministic under any partitioning.
 
 Spark shape: detection is a one-round halo exchange (the same
-``_neighbor_blocks`` machinery as the focal/fillnodata ops) + a
+``raster.halo`` / ``raster.halo_window`` as the focal/fillnodata ops) + a
 map-only window kernel per tile — keypoints are emitted as rows, no
 global state.  Matching broadcasts the SMALLER collection (the
 reference itself is O(n1*n2) on one core; the broadcast side is the
@@ -286,42 +286,17 @@ def feature_points(tiles: DataFrame, ntx: int, nty: int,
     image borders the window edge IS the global edge, so the
     reference's border clamping applies identically.
     """
-    from gdal_spark.raster import _neighbor_blocks
-    from gdal_spark.tiling import _decode
+    from gdal_spark.raster import halo, halo_window
 
     h = surf_halo(octave_end)
-    blocks = _neighbor_blocks(tiles, h).groupBy("dst_tx", "dst_ty").agg(
-        F.collect_list(F.struct("dx", "dy", "bh", "bw", "block")).alias("halo")
-    )
-    j = tiles.join(
-        blocks,
-        (tiles.tile_x == blocks.dst_tx) & (tiles.tile_y == blocks.dst_ty),
-        "left",
-    ).drop("dst_tx", "dst_ty")
 
     def run(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                arr = _decode(r.data, r.dtype, r.height, r.width
-                              ).astype(np.float64)
-                Ht, Wt = arr.shape
+                Ht, Wt = int(r.height), int(r.width)
                 tx, ty = int(r.tile_x), int(r.tile_y)
-                pad = np.zeros((Ht + 2 * h, Wt + 2 * h))
-                pad[h:h + Ht, h:h + Wt] = arr
-                if r.halo is not None:
-                    for s_ in r.halo:
-                        piece = np.frombuffer(
-                            s_["block"], dtype=np.float64
-                        ).reshape(s_["bh"], s_["bw"])
-                        dx, dy = int(s_["dx"]), int(s_["dy"])
-                        ysl = (slice(0, h) if dy < 0 else
-                               (slice(h + Ht, None) if dy > 0
-                                else slice(h, h + Ht)))
-                        xsl = (slice(0, h) if dx < 0 else
-                               (slice(h + Wt, None) if dx > 0
-                                else slice(h, h + Wt)))
-                        pad[ysl, xsl] = piece
+                pad = halo_window(r, h, 0.0)
                 # crop margins that lie outside the global image so the
                 # window edge coincides with the true border there
                 top = h if ty > 0 else 0
@@ -348,7 +323,7 @@ def feature_points(tiles: DataFrame, ntx: int, nty: int,
             yield pd.DataFrame(
                 rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
 
-    return j.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return halo(tiles, h).mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 MATCH_SCHEMA = T.StructType([

@@ -228,13 +228,18 @@ def _mode_2x2(q: np.ndarray, qv: np.ndarray, nodata: float) -> np.ndarray:
     return np.where(cmax > 0, out, nodata)
 
 
+_PARENT_KEY = ["raster_id", "band", "zoom", "p_tx", "p_ty"]
+
+
 def _gauss_halo_strips(tiles: DataFrame) -> DataFrame:
     """The 2x-overview gauss window [2x, 2x+3) crosses into the NEXT
     parent block: children on an even tile row/col ship their first
     column/row (and corner pixel) to the previous parent."""
     GS_SCHEMA = T.StructType(
         [
+            T.StructField("raster_id", T.StringType()),
             T.StructField("band", T.IntegerType()),
+            T.StructField("zoom", T.IntegerType()),
             T.StructField("p_tx", T.IntegerType()),
             T.StructField("p_ty", T.IntegerType()),
             T.StructField("kind", T.StringType()),
@@ -249,26 +254,17 @@ def _gauss_halo_strips(tiles: DataFrame) -> DataFrame:
             for r in pdf.itertuples(index=False):
                 arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
                 tx, ty = int(r.tile_x), int(r.tile_y)
-                band = int(r.band)
+                key = (r.raster_id, int(r.band), int(r.zoom))
                 h, w = arr.shape
                 if tx % 2 == 0 and tx > 0:
-                    rows.append(
-                        {"band": band, "p_tx": tx // 2 - 1, "p_ty": ty // 2,
-                         "kind": "col", "off": (ty % 2) * h,
-                         "strip": arr[:, 0].tobytes()}
-                    )
+                    rows.append(key + (tx // 2 - 1, ty // 2, "col",
+                                       (ty % 2) * h, arr[:, 0].tobytes()))
                 if ty % 2 == 0 and ty > 0:
-                    rows.append(
-                        {"band": band, "p_tx": tx // 2, "p_ty": ty // 2 - 1,
-                         "kind": "row", "off": (tx % 2) * w,
-                         "strip": arr[0, :].tobytes()}
-                    )
+                    rows.append(key + (tx // 2, ty // 2 - 1, "row",
+                                       (tx % 2) * w, arr[0, :].tobytes()))
                 if tx % 2 == 0 and ty % 2 == 0 and tx > 0 and ty > 0:
-                    rows.append(
-                        {"band": band, "p_tx": tx // 2 - 1, "p_ty": ty // 2 - 1,
-                         "kind": "corner", "off": 0,
-                         "strip": arr[0:1, 0].tobytes()}
-                    )
+                    rows.append(key + (tx // 2 - 1, ty // 2 - 1, "corner", 0,
+                                       arr[0:1, 0].tobytes()))
             yield pd.DataFrame(rows, columns=[f.name for f in GS_SCHEMA.fields])
 
     return tiles.mapInPandas(emit, schema=GS_SCHEMA)
@@ -310,10 +306,10 @@ def build_overview(tiles: DataFrame, kernel: str = "average") -> DataFrame:
     parent = tiles.withColumn("p_tx", F.floor(F.col("tile_x") / 2).cast("int")) \
                   .withColumn("p_ty", F.floor(F.col("tile_y") / 2).cast("int"))
     if kernel == "gauss":
-        strips = _gauss_halo_strips(tiles).groupBy("band", "p_tx", "p_ty").agg(
+        strips = _gauss_halo_strips(tiles).groupBy(*_PARENT_KEY).agg(
             F.collect_list(F.struct("kind", "off", "strip")).alias("_halo")
         )
-        parent = parent.join(strips, ["band", "p_tx", "p_ty"], "left")
+        parent = parent.join(strips, _PARENT_KEY, "left")
 
     def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
         raster_id, band, zoom, p_tx, p_ty = key
@@ -378,9 +374,7 @@ def build_overview(tiles: DataFrame, kernel: str = "average") -> DataFrame:
             [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
             nodata=float(first["nodata"]), crs=first["crs"])])
 
-    return parent.groupBy("raster_id", "band", "zoom", "p_tx", "p_ty").applyInPandas(
-        agg, schema=TILE_SCHEMA
-    )
+    return parent.groupBy(*_PARENT_KEY).applyInPandas(agg, schema=TILE_SCHEMA)
 
 
 def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
@@ -422,7 +416,7 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
         F.floor(F.col("tile_y") / 2).cast("int").alias("p_ty"),
     ).distinct()
     needs = parents.select(
-        "raster_id", "band", "zoom", "p_tx", "p_ty",
+        *_PARENT_KEY,
         F.explode(
             F.sequence(F.col("p_tx") * 2 - 1, F.col("p_tx") * 2 + 2)
         ).alias("s_tx"),
@@ -478,9 +472,7 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
             [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
             nodata=float(first["nodata"]), crs=first["crs"])])
 
-    return joined.groupBy("raster_id", "band", "zoom", "p_tx", "p_ty").applyInPandas(
-        agg, schema=TILE_SCHEMA
-    )
+    return joined.groupBy(*_PARENT_KEY).applyInPandas(agg, schema=TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------- warp
@@ -1262,7 +1254,7 @@ def retile(tiles: DataFrame, new_px: int,
                  .withColumn("_nty", (F.col("tile_y") / k).cast("int"))
 
     def paste(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ntx, nty = int(key[0]), int(key[1])
+        ntx, nty = int(key[3]), int(key[4])
         f0 = pdf.iloc[0]
         pieces = []
         big_w = big_h = new_px
@@ -1289,4 +1281,5 @@ def retile(tiles: DataFrame, new_px: int,
             (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5]), x0=-ox0, y0=-oy0,
             nodata=float(f0["nodata"]), crs=str(f0["crs"]))])
 
-    return keyed.groupBy("_ntx", "_nty").applyInPandas(paste, schema=TILE_SCHEMA)
+    return keyed.groupBy("raster_id", "band", "zoom", "_ntx", "_nty").applyInPandas(
+        paste, schema=TILE_SCHEMA)

@@ -223,6 +223,16 @@ def test_crs_to_crs_staged_kinds_refuse():
     crs.crs_to_crs_cols(4326, 29101, F.col("lon"), F.col("lat"))
 
 
+@pytest.mark.parametrize("kind, inverse", sorted(crs._STAGED_ONLY))
+def test_crs_to_crs_refuses_every_staged_only_direction(spark, kind, inverse):
+    epsg = next(c for c, p in crs.CONIC_PRESETS.items() if p[0] == kind)
+    src, dst = (epsg, 4326) if inverse else (4326, epsg)
+    with pytest.raises(ValueError, match="staged"):
+        crs.crs_to_crs_cols(src, dst, F.col("x"), F.col("y"))
+    with pytest.raises(ValueError, match="staged"):
+        crs.crs_to_crs_sql(src, dst, "x", "y")
+
+
 def test_ups_south_mirrors_north_anchor():
     """Variant A south is the exact mirror of the GN 7-2 north worked
     example: E_south(lam, -phi) = E_north(lam, phi) and

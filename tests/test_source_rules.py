@@ -22,6 +22,12 @@
   `*_stages` twin, the staged executor (`_apply_stages`,
   `sql_cte_chain`) is defined once, and no module imports it from
   nzmg.
+- One halo exchange: `raster.halo` is the only function that emits
+  neighbour blocks (a loop over dx in (-1, 0, 1) that ships
+  `.tobytes()` pieces) and the only one that gathers them
+  (`collect_list(struct("dx", "dy", ...))`); `"dst_tx"` is spelled
+  nowhere else, `_neighbor_strips` / `_neighbor_blocks` are gone, and
+  no module but raster.py joins tiles on a `tile_x` comparison.
 - The query builders' scratch files live under one root:
   `tempfile.mkdtemp` is called once in `__spark_entry__.py`, by
   `_scratch`, and a process that used `_scratch` leaves nothing behind.
@@ -170,6 +176,58 @@ def test_one_formula_per_projection_direction():
                 from_nzmg.append(f"{_rel(path)}:{n.lineno}")
     assert all(len(v) == 1 for v in defs.values()), defs
     assert not from_nzmg, from_nzmg
+
+
+def _neighbour_loop(node):
+    return (isinstance(node, ast.For) and isinstance(node.iter, ast.Tuple)
+            and [ast.unparse(e) for e in node.iter.elts] == ["-1", "0", "1"])
+
+
+def _calls(node, attr):
+    return [c for c in ast.walk(node) if isinstance(c, ast.Call)
+            and ast.unparse(c.func).split(".")[-1] == attr]
+
+
+def _block_gather(call):
+    args = [a for a in call.args if isinstance(a, ast.Call)
+            and ast.unparse(a.func).split(".")[-1] == "struct"]
+    return any({"dx", "dy"} <= {c.value for c in a.args
+                                if isinstance(c, ast.Constant)} for a in args)
+
+
+def test_one_halo_exchange():
+    pkg = [p for p in SOURCES if _rel(p).startswith("gdal_spark" + os.sep)]
+    emitters, gathers, dst, tile_joins, old = [], [], [], [], []
+    for path in SOURCES:
+        tree = _tree(path)
+        for n in ast.walk(tree):
+            name = getattr(n, "name", None) or getattr(n, "id", None) \
+                or getattr(n, "attr", None)
+            if name in ("_neighbor_strips", "_neighbor_blocks"):
+                old.append(f"{_rel(path)}:{n.lineno}")
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = f"{_rel(path)}:{fn.name}"
+            if any(_neighbour_loop(n) and _calls(n, "tobytes")
+                   for n in ast.walk(fn)):
+                emitters.append(where)
+            if any(_block_gather(c) for c in _calls(fn, "collect_list")):
+                gathers.append(where)
+            if any(isinstance(n, ast.Constant) and n.value == "dst_tx"
+                   for n in ast.walk(fn)):
+                dst.append(where)
+            if path in pkg and os.path.basename(path) != "raster.py" and any(
+                    isinstance(n, ast.Attribute) and n.attr == "tile_x"
+                    for c in _calls(fn, "join") for a in c.args
+                    for n in ast.walk(a)):
+                tile_joins.append(where)
+    halo = os.path.join("gdal_spark", "raster.py") + ":halo"
+    assert not old, old
+    assert emitters == [halo], emitters
+    assert gathers == [halo], gathers
+    assert set(dst) <= {halo}, dst
+    assert not tile_joins, tile_joins
 
 
 def test_one_mkdtemp_in_the_query_builders():
