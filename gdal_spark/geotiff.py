@@ -809,8 +809,8 @@ def write_cog(tiles: DataFrame, path: str, levels: int = 2,
             nb = int(m.nbands)
             itemsize = np.dtype(str(m.dtype)).itemsize
             # level dims halve from FULL RES (ceil), like overview.cpp
-            # (n+1)/2 — build_overview tiles stay padded to the child
-            # tile size, and TIFF tiles legitimately pad past the edge
+            # (n+1)/2 — build_overview tiles end at the raster's edge,
+            # and TIFF tiles legitimately pad past it
             f = 1 << (z0 - z)
             lv[z] = {
                 "ntx": ntx, "nty": nty, "tw": tw, "th": th, "nbands": nb,

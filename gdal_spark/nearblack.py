@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tiling import TILE_SCHEMA, _decode
+from .tiling import TILE_SCHEMA, _decode, _group_tile_px, paste
 
 _COLB_SCHEMA = T.StructType(
     [
@@ -122,23 +122,17 @@ def nearblack(tiles: DataFrame, near_dist: int = 15, white: bool = False,
     )
 
     def run_strip(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("tile_x")
-        h = int(pdf["height"].iloc[0])
-        w = int(pdf["width"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
+        ts = _group_tile_px(pdf)
         tx_min = int(pdf["tile_x"].min())
-        tx_max = int(pdf["tile_x"].max())
-        W = (tx_max - tx_min + 1) * w
-        x0 = tx_min * w
-        y0 = tile_y * h
         # placement by tile index (robust to a sparse strip; absent
         # tiles read as all-collar, matching an all-nodata region)
-        strip = np.zeros((h, W), dtype=np.dtype(pdf["dtype"].iloc[0]))
+        strip = paste(pdf, 0.0, ts)
+        W = strip.shape[1]
+        x0 = tx_min * ts
+        y0 = int(pdf["tile_y"].iloc[0]) * ts
         t = np.full(W, np.iinfo(np.int64).max, np.int64)
         b = np.full(W, np.iinfo(np.int64).min, np.int64)
         for r in pdf.itertuples(index=False):
-            j0 = (int(r.tile_x) - tx_min) * w
-            strip[:, j0 : j0 + w] = _decode(r.data, r.dtype, h, w)
             if r.colb is not None:
                 for e in r.colb:
                     xi = int(e["x"]) - x0
@@ -161,21 +155,21 @@ def nearblack(tiles: DataFrame, near_dist: int = 15, white: bool = False,
         right = near[:, -1]
         np.logical_or.at(flagged, key_arr[edge_rows[right], -1], True)
         blacken = near & flagged[key_arr]
-        out = np.where(blacken, np.uint8(replace), strip).astype(strip.dtype)
+        out = np.where(blacken, replace, strip).astype(pdf["dtype"].iloc[0])
         mask = np.where(blacken, 0, 255).astype(np.uint8)
 
         res = []
         for r in pdf.itertuples(index=False):
-            j0 = (int(r.tile_x) - tx_min) * w
-            sl = slice(j0, j0 + w)
+            j0 = (int(r.tile_x) - tx_min) * ts
+            sl = slice(j0, j0 + int(r.width))
             base = {
                 "raster_id": r.raster_id,
                 "band": int(r.band),
                 "zoom": int(r.zoom),
                 "tile_x": int(r.tile_x),
                 "tile_y": int(r.tile_y),
-                "width": w,
-                "height": h,
+                "width": int(r.width),
+                "height": int(r.height),
                 "dtype": r.dtype,
                 "nodata": r.nodata,
                 "crs": r.crs,

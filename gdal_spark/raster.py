@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .synth import TILE_COLUMNS, TILE_SCHEMA, tile_row
-from .tiling import _decode, _gdal_cast
+from .tiling import _decode, _gdal_cast, full_tile_px, gather, paste
 
 # ------------------------------------------------------------------ stats
 _PARTIAL_SCHEMA = T.StructType(
@@ -1517,41 +1517,26 @@ def viewshed(tiles: DataFrame, observers: "pd.DataFrame",
              pixel_size: float = 1.0) -> DataFrame:
     """Viewshed (alg/viewshed.cpp:202): per-observer visibility over a
     bounded radius. Observers are a small table (gx, gy in global pixel
-    coords); each observer's radius window of tiles is gathered to ONE
-    task (groupBy obs_id after a bbox tile join), which assembles the
-    window and runs the sampled line-of-sight kernel. Long-range ops
-    like this are per-observer local by nature — the distribution axis
-    is ACROSS observers, matching GDAL's one-observer-per-call shape.
+    coords); each observer gathers the tiles its radius box touches to
+    ONE task (the window gather), which pastes the window and runs the
+    sampled line-of-sight kernel. Long-range ops like this are
+    per-observer local by nature — the distribution axis is ACROSS
+    observers, matching GDAL's one-observer-per-call shape.
     """
-    spark = tiles.sparkSession
-    obs = spark.createDataFrame(observers[["obs_id", "gx", "gy"]])
-    t = tiles.withColumn("_tx0", F.col("tile_x") * F.col("width")) \
-             .withColumn("_ty0", F.col("tile_y") * F.col("height"))
-    j = t.join(
-        F.broadcast(obs),
-        (F.col("_tx0") <= obs.gx + radius_px)
-        & (F.col("_tx0") + F.col("width") >= obs.gx - radius_px)
-        & (F.col("_ty0") <= obs.gy + radius_px)
-        & (F.col("_ty0") + F.col("height") >= obs.gy - radius_px),
-        "inner",
-    )
+    ts = full_tile_px(tiles)
+    gx, gy = observers["gx"].astype(np.int64), observers["gy"].astype(np.int64)
+    # tiles whose pixel extent touches [g - r, g + r] on both axes
+    wants = tiles.sparkSession.createDataFrame(pd.DataFrame({
+        "obs_id": observers["obs_id"].astype(np.int64), "gx": gx, "gy": gy,
+        "tx0": (gx - radius_px - 1) // ts, "tx1": (gx + radius_px) // ts,
+        "ty0": (gy - radius_px - 1) // ts, "ty1": (gy + radius_px) // ts,
+    }))
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        obs_id = int(key[0])
-        gx = int(pdf["gx"].iloc[0])
-        gy = int(pdf["gy"].iloc[0])
-        tx0 = int(pdf["_tx0"].min())
-        ty0 = int(pdf["_ty0"].min())
-        tx1 = int((pdf["_tx0"] + pdf["width"]).max())
-        ty1 = int((pdf["_ty0"] + pdf["height"]).max())
-        dem = np.full((ty1 - ty0, tx1 - tx0), np.nan)
-        for i in range(len(pdf)):
-            row = pdf.iloc[i]
-            h, w = int(row["height"]), int(row["width"])
-            arr = _decode(row["data"], row["dtype"], h, w).astype(np.float64)
-            y = int(row["_ty0"])
-            x = int(row["_tx0"])
-            dem[y - ty0 : y - ty0 + h, x - tx0 : x - tx0 + w] = arr
+        obs_id, gx, gy = int(key[0]), int(key[1]), int(key[2])
+        tx0 = int(pdf["tile_x"].min()) * ts
+        ty0 = int(pdf["tile_y"].min()) * ts
+        dem = paste(pdf, np.nan, ts)
         vis = los_visibility(dem, gx - tx0, gy - ty0, obs_height, radius_px,
                              curv_coeff, sphere_diameter, pixel_size)
         yy, xx = np.mgrid[0 : dem.shape[0], 0 : dem.shape[1]]
@@ -1569,7 +1554,7 @@ def viewshed(tiles: DataFrame, observers: "pd.DataFrame",
             ]
         )
 
-    return j.groupBy("obs_id").applyInPandas(run, schema=VIEWSHED_SCHEMA)
+    return gather(tiles, wants, ["obs_id", "gx", "gy"], run, VIEWSHED_SCHEMA)
 
 
 # ------------------------------------------------------------ color relief

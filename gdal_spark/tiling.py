@@ -11,19 +11,27 @@ VRT Python pixel functions, frmts/vrt/vrtderivedrasterband.cpp:1205, and
 gdal_calc, osgeo_utils/gdal_calc.py:35-50):
 
   translate       — window/cast/scale per tile      (apps/gdal_translate_lib.cpp:107-262)
-  build_overview  — 2x factor pyramid level          (gcore/overview.cpp:144 ff)
+  gather / paste  — the window gather: each destination's rectangle of
+                    source tiles joined and grouped by the whole tile
+                    address, pasted into one window (gcore/rasterio.cpp:207)
+  build_overview  — 2x factor pyramid level          (gcore/overview.cpp:144 ff;
+                    build_overview_conv: cubic/lanczos :2771)
   warp_affine     — chunked inverse-mapping resample (alg/gdalwarpoperation.cpp:116-157,
-                    kernels alg/gdalwarpkernel.cpp:101-137; Near/Bilinear/Cubic)
+                    kernels alg/gdalwarpkernel.cpp:101-137; near/bilinear/
+                    cubic/cubicspline/lanczos and the average..q3 footprints)
+  warp_transform  — the same with a general transformer (-t_srs)
+  retile          — re-chunk the grid (gdal_retile.py)
   checksum_table  — GDAL checksum per tile           (alg/gdalchecksum.cpp:64-180)
   mosaic          — VRT-style priority resolve       (apps/gdalbuildvrt_lib.cpp:1684)
 
-Scale notes: translate/checksum are map-only. build_overview shuffles
-by parent tile (unavoidable 4->1 re-grouping; partial nothing to
-combine). warp shuffles only the src tiles each dst tile needs —
-GDAL's ChunkAndWarpImage chunk list (gdalwarpoperation.cpp:808)
-restated as a deterministic dst-tile table joined to its source
-window, with its 2-thread I/O-compute overlap (:992-1050) generalized
-to all executors.
+Scale notes: translate/checksum are map-only. Every operator whose
+output tile reads a window of source tiles — both warps, both
+overviews, retile's coarsen, raster.viewshed — goes through the one
+window gather: only the source tiles each destination needs move
+through the shuffle. For warp that is GDAL's ChunkAndWarpImage chunk
+list (gdalwarpoperation.cpp:808) restated as a deterministic dst-tile
+table joined to its source window, with its 2-thread I/O-compute
+overlap (:992-1050) generalized to all executors.
 """
 
 from __future__ import annotations
@@ -188,6 +196,74 @@ def translate(
     return out.mapInPandas(xform, schema=TILE_SCHEMA)
 
 
+# ------------------------------------------------------------ window gather
+_SOURCE_KEY = ["raster_id", "band", "zoom"]
+
+
+def full_tile_px(tiles: DataFrame) -> int:
+    """The full tile size: the largest tile side (a partial edge tile
+    is smaller). One small aggregate job."""
+    return int(tiles.select(F.max(F.greatest("width", "height"))).first()[0])
+
+
+def gather(tiles: DataFrame, wants: DataFrame, key: list[str], fn,
+           schema: T.StructType) -> DataFrame:
+    """The window gather — GDAL's source-window read (RasterIO,
+    gcore/rasterio.cpp:207) as a tile-range join. `wants` holds one
+    rectangle of source tiles per destination: the `key` columns plus
+    tx0..tx1 x ty0..ty1 (inclusive); a want that carries raster_id,
+    band or zoom reads only those tiles. Each rectangle is exploded
+    into tile addresses and equi-joined to `tiles`; the tiles that
+    arrive are grouped by the destination key plus their own
+    raster_id, band and zoom, so bands and rasters never share a
+    window, and `fn(key, pdf)` runs once per group (applyInPandas,
+    `schema` out). Only the tiles a destination needs move through the
+    shuffle; a rectangle that holds no tile yields no group."""
+    own = [c for c in _SOURCE_KEY if c in wants.columns]
+    carry = list(dict.fromkeys(key + own))
+    cells = wants.select(
+        *carry, F.explode(F.sequence("tx0", "tx1")).alias("tile_x"), "ty0", "ty1",
+    ).select(*carry, "tile_x", F.explode(F.sequence("ty0", "ty1")).alias("tile_y"))
+    joined = cells.join(tiles, own + ["tile_x", "tile_y"])
+    group = list(dict.fromkeys(key + _SOURCE_KEY))
+    return joined.groupBy(*group).applyInPandas(fn, schema=schema)
+
+
+def paste(pdf: pd.DataFrame, fill: float, ts: int,
+          window: tuple[int, int, int, int] | None = None,
+          h: int = 0) -> np.ndarray:
+    """The float64 window of one gathered group over tiles
+    tx0..tx0+nx-1 x ty0..ty0+ny-1 (`window` = (tx0, ty0, nx, ny),
+    default the bounding box of the tiles that arrived). Each tile
+    lands at (tile index - window origin) * ts, ts the full tile size,
+    by its own shape; `fill` stands where no tile arrived. A partial
+    tile is the raster's edge, so the window ends there. With h > 0
+    the rows carry `raster.halo` blocks and each tile lands with its
+    h-px halo (`raster.halo_window`): the window grows by h on every
+    side."""
+    from .raster import halo_window  # raster imports this module
+
+    if window is None:
+        tx0, ty0 = int(pdf["tile_x"].min()), int(pdf["tile_y"].min())
+        window = (tx0, ty0, int(pdf["tile_x"].max()) - tx0 + 1,
+                  int(pdf["tile_y"].max()) - ty0 + 1)
+    tx0, ty0, nx, ny = window
+    W, H = nx * ts, ny * ts
+    placed = []
+    for r in pdf.itertuples(index=False):
+        ox, oy = (int(r.tile_x) - tx0) * ts, (int(r.tile_y) - ty0) * ts
+        if r.width < ts:
+            W = min(W, ox + int(r.width))
+        if r.height < ts:
+            H = min(H, oy + int(r.height))
+        placed.append((ox, oy, halo_window(r, h, fill) if h else
+                       _decode(r.data, r.dtype, r.height, r.width)))
+    win = np.full((H + 2 * h, W + 2 * h), fill, dtype=np.float64)
+    for ox, oy, arr in placed:
+        win[oy : oy + arr.shape[0], ox : ox + arr.shape[1]] = arr
+    return win
+
+
 # ------------------------------------------------------------------ overview
 def _mode_firstmax(V: np.ndarray, OK: np.ndarray, nodata: float) -> np.ndarray:
     """GDAL mode tie-break over an arbitrary K-slot footprint
@@ -231,43 +307,39 @@ def _mode_2x2(q: np.ndarray, qv: np.ndarray, nodata: float) -> np.ndarray:
 _PARENT_KEY = ["raster_id", "band", "zoom", "p_tx", "p_ty"]
 
 
-def _gauss_halo_strips(tiles: DataFrame) -> DataFrame:
-    """The 2x-overview gauss window [2x, 2x+3) crosses into the NEXT
-    parent block: children on an even tile row/col ship their first
-    column/row (and corner pixel) to the previous parent."""
-    GS_SCHEMA = T.StructType(
-        [
-            T.StructField("raster_id", T.StringType()),
-            T.StructField("band", T.IntegerType()),
-            T.StructField("zoom", T.IntegerType()),
-            T.StructField("p_tx", T.IntegerType()),
-            T.StructField("p_ty", T.IntegerType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("off", T.IntegerType()),
-            T.StructField("strip", T.BinaryType()),
-        ]
+def _block_wants(tiles: DataFrame, k: int, lo: int, hi: int) -> DataFrame:
+    """One want per k x k block of `tiles` that holds a tile: the block
+    (p_tx, p_ty) reads source tiles k*p+lo .. k*p+hi on both axes."""
+    blocks = tiles.select(
+        *_SOURCE_KEY,
+        F.floor(F.col("tile_x") / k).cast("int").alias("p_tx"),
+        F.floor(F.col("tile_y") / k).cast("int").alias("p_ty"),
+    ).distinct()
+    return blocks.select(
+        *_PARENT_KEY,
+        (F.col("p_tx") * k + lo).alias("tx0"), (F.col("p_tx") * k + hi).alias("tx1"),
+        (F.col("p_ty") * k + lo).alias("ty0"), (F.col("p_ty") * k + hi).alias("ty1"),
     )
 
-    def emit(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = _decode(r.data, r.dtype, r.height, r.width).astype(np.float64)
-                tx, ty = int(r.tile_x), int(r.tile_y)
-                key = (r.raster_id, int(r.band), int(r.zoom))
-                h, w = arr.shape
-                if tx % 2 == 0 and tx > 0:
-                    rows.append(key + (tx // 2 - 1, ty // 2, "col",
-                                       (ty % 2) * h, arr[:, 0].tobytes()))
-                if ty % 2 == 0 and ty > 0:
-                    rows.append(key + (tx // 2, ty // 2 - 1, "row",
-                                       (tx % 2) * w, arr[0, :].tobytes()))
-                if tx % 2 == 0 and ty % 2 == 0 and tx > 0 and ty > 0:
-                    rows.append(key + (tx // 2 - 1, ty // 2 - 1, "corner", 0,
-                                       arr[0:1, 0].tobytes()))
-            yield pd.DataFrame(rows, columns=[f.name for f in GS_SCHEMA.fields])
 
-    return tiles.mapInPandas(emit, schema=GS_SCHEMA)
+def _overview_row(key, pdf: pd.DataFrame, out: np.ndarray, ts: int) -> pd.DataFrame:
+    """The parent tile of one overview group: doubled pixel size, its
+    origin at the parent's 2x2 child block."""
+    raster_id, band, zoom, p_tx, p_ty = key
+    first = pdf.iloc[0]
+    gt = list(first["geotransform"])
+    x0 = gt[0] - (int(first["tile_x"]) - 2 * int(p_tx)) * ts * gt[1]
+    y0 = gt[3] - (int(first["tile_y"]) - 2 * int(p_ty)) * ts * gt[5]
+    return pd.DataFrame([tile_row(
+        raster_id, int(band), int(zoom) - 1, int(p_tx), int(p_ty),
+        _gdal_cast(out, first["dtype"]), [x0, gt[1] * 2, 0.0, y0, 0.0, gt[5] * 2],
+        nodata=float(first["nodata"]), crs=first["crs"])])
+
+
+def _group_tile_px(pdf: pd.DataFrame) -> int:
+    """The full tile size seen by one gathered group: its largest tile
+    side."""
+    return int(max(pdf["width"].max(), pdf["height"].max()))
 
 
 def gauss_2x2(big: np.ndarray, nodata: float) -> np.ndarray:
@@ -293,88 +365,67 @@ def build_overview(tiles: DataFrame, kernel: str = "average") -> DataFrame:
     """One pyramid level up (zoom-1): each output tile aggregates its
     <=4 children (gcore/overview.cpp — average :144 ff; nearest =
     upper-left of each 2x2 block; mode :1913 with GDAL's first-to-max
-    tie-break; gauss :1616 3x3 binomial with a 1-px cross-parent halo
-    exchange; rms with ComputeIntegerRMS rounding :365). Convolution
-    kernels (cubic, lanczos) live in build_overview_conv.
+    tie-break; gauss :1616 3x3 binomial; rms with ComputeIntegerRMS
+    rounding :365). Convolution kernels (cubic, lanczos) live in
+    build_overview_conv. A parent over partial edge children ends
+    where they do: ceil(extent / 2) pixels.
 
-    Shuffle: groupBy parent tile — 4->1 regrouping, keys are tile ids
-    (no skew possible: fan-in is bounded by 4; gauss adds 3 halo strip
-    rows per tile, ~1/128 of the pixel volume)."""
+    Shuffle: the window gather of each parent's 2x2 children — fan-in
+    bounded by 4, keys are tile ids, no skew possible. Gauss's 3x3
+    window reaches 1 px into the next parent block; that pixel comes
+    from the halo exchange (raster.halo), so only edges cross
+    parents."""
     if kernel not in ("average", "nearest", "mode", "gauss", "rms"):
         raise ValueError(f"unsupported overview kernel: {kernel}")
+    reach = 1 if kernel == "gauss" else 0
+    src = tiles
+    if reach:
+        from .raster import halo  # raster imports this module
 
-    parent = tiles.withColumn("p_tx", F.floor(F.col("tile_x") / 2).cast("int")) \
-                  .withColumn("p_ty", F.floor(F.col("tile_y") / 2).cast("int"))
-    if kernel == "gauss":
-        strips = _gauss_halo_strips(tiles).groupBy(*_PARENT_KEY).agg(
-            F.collect_list(F.struct("kind", "off", "strip")).alias("_halo")
-        )
-        parent = parent.join(strips, _PARENT_KEY, "left")
+        src = halo(tiles, reach)
 
     def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        raster_id, band, zoom, p_tx, p_ty = key
+        p_tx, p_ty = int(key[3]), int(key[4])
         first = pdf.iloc[0]
-        w, h = int(first["width"]), int(first["height"])
-        pad = 1 if kernel == "gauss" else 0
-        mosaic = np.full((2 * h + pad, 2 * w + pad), np.nan)
-        for r in pdf.itertuples(index=False):
-            ox = (int(r.tile_x) - 2 * int(p_tx)) * w
-            oy = (int(r.tile_y) - 2 * int(p_ty)) * h
-            arr = _decode(r.data, r.dtype, r.height, r.width)
-            mosaic[oy : oy + h, ox : ox + w] = arr
+        nodata = float(first["nodata"])
+        ts = _group_tile_px(pdf)
+        win = paste(pdf, np.nan, ts, (2 * p_tx, 2 * p_ty, 2, 2), reach)[reach:, reach:]
+        # whole 2x2 blocks (+ the gauss tap) past an odd edge read NaN
+        h, w = -(-(win.shape[0] - reach) // 2), -(-(win.shape[1] - reach) // 2)
+        win = np.pad(win, ((0, 2 * h + reach - win.shape[0]),
+                           (0, 2 * w + reach - win.shape[1])), constant_values=np.nan)
         if kernel == "gauss":
-            halo = first.get("_halo")
-            if halo is not None:
-                for s in halo:
-                    piece = np.frombuffer(s["strip"], dtype=np.float64)
-                    if s["kind"] == "col":
-                        mosaic[int(s["off"]) : int(s["off"]) + len(piece), 2 * w] = piece
-                    elif s["kind"] == "row":
-                        mosaic[2 * h, int(s["off"]) : int(s["off"]) + len(piece)] = piece
-                    else:
-                        mosaic[2 * h, 2 * w] = piece[0]
-            out = gauss_2x2(mosaic, float(first["nodata"]))
-        else:
-            core = mosaic[: 2 * h, : 2 * w]
-            valid = ~np.isnan(core) & (core != float(first["nodata"]))
-            core = np.where(np.isnan(core), float(first["nodata"]), core)
-            q = core.reshape(h, 2, w, 2).transpose(0, 2, 1, 3).reshape(h, w, 4)
-            qv = valid.reshape(h, 2, w, 2).transpose(0, 2, 1, 3).reshape(h, w, 4)
-            if kernel == "average":
-                cnt = qv.sum(axis=2)
-                s = np.where(qv, q, 0.0).sum(axis=2)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    out = np.where(cnt > 0, s / np.maximum(cnt, 1), first["nodata"])
-            elif kernel == "rms":
-                # sqrt(mean of squares); integer bands round to the
-                # integer minimizing |rms^2 - mean| (overview.cpp:365
-                # ComputeIntegerRMS), NOT the usual +0.5 cast
-                cnt = qv.sum(axis=2)
-                s = np.where(qv, q * q, 0.0).sum(axis=2)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    m = s / np.maximum(cnt, 1)
-                if np.dtype(first["dtype"]).kind in "ui":
-                    r = np.floor(np.sqrt(m))
-                    r = r + (2 * r * (r + 1) + 1 < 2 * m)
-                    out = np.where(cnt > 0, r, first["nodata"])
-                else:
-                    out = np.where(cnt > 0, np.sqrt(m), first["nodata"])
-            elif kernel == "mode":
-                out = _mode_2x2(q, qv, float(first["nodata"]))
-            else:  # nearest: upper-left of each 2x2 block
-                out = core[0 : 2 * h : 2, 0 : 2 * w : 2]
-        out = _gdal_cast(out, first["dtype"])
-        # parent tile geotransform: doubled pixel size, origin of block
-        gt = list(first["geotransform"])
-        res2 = gt[1] * 2
-        x0 = gt[0] - ((int(first["tile_x"]) - 2 * int(p_tx)) * w) * gt[1]
-        y0 = gt[3] - ((int(first["tile_y"]) - 2 * int(p_ty)) * h) * gt[5]
-        return pd.DataFrame([tile_row(
-            raster_id, band, int(zoom) - 1, int(p_tx), int(p_ty), out,
-            [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
-            nodata=float(first["nodata"]), crs=first["crs"])])
+            return _overview_row(key, pdf, gauss_2x2(win, nodata), ts)
+        valid = ~np.isnan(win) & (win != nodata)
+        core = np.where(np.isnan(win), nodata, win)
+        q = core.reshape(h, 2, w, 2).transpose(0, 2, 1, 3).reshape(h, w, 4)
+        qv = valid.reshape(h, 2, w, 2).transpose(0, 2, 1, 3).reshape(h, w, 4)
+        if kernel == "average":
+            cnt = qv.sum(axis=2)
+            s = np.where(qv, q, 0.0).sum(axis=2)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                out = np.where(cnt > 0, s / np.maximum(cnt, 1), nodata)
+        elif kernel == "rms":
+            # sqrt(mean of squares); integer bands round to the
+            # integer minimizing |rms^2 - mean| (overview.cpp:365
+            # ComputeIntegerRMS), NOT the usual +0.5 cast
+            cnt = qv.sum(axis=2)
+            s = np.where(qv, q * q, 0.0).sum(axis=2)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                m = s / np.maximum(cnt, 1)
+            if np.dtype(first["dtype"]).kind in "ui":
+                r = np.floor(np.sqrt(m))
+                r = r + (2 * r * (r + 1) + 1 < 2 * m)
+                out = np.where(cnt > 0, r, nodata)
+            else:
+                out = np.where(cnt > 0, np.sqrt(m), nodata)
+        elif kernel == "mode":
+            out = _mode_2x2(q, qv, nodata)
+        else:  # nearest: upper-left of each 2x2 block
+            out = core[0::2, 0::2]
+        return _overview_row(key, pdf, out, ts)
 
-    return parent.groupBy(*_PARENT_KEY).applyInPandas(agg, schema=TILE_SCHEMA)
+    return gather(src, _block_wants(tiles, 2, 0, 1), _PARENT_KEY, agg, TILE_SCHEMA)
 
 
 def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
@@ -383,12 +434,12 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
     scale weight 0.5, scaled radius 2*r, so taps s = 2i+o with o in
     [1-2r, 2r] and CONSTANT per-axis weights w(o) = f(0.5*(o - 0.5))
     normalized by their sum). The kernel reaches up to 2r-1 source px
-    beyond the 2x2 child block on every side, so instead of the gauss
-    strip exchange each parent gathers its 4x4 child-tile neighborhood
-    (the warp-style window join: shuffle volume = 4x the child tiles,
-    bounded fan-in of 16, no skew possible). Missing neighbors (raster
-    edges) truncate the window and renormalize per axis — exactly the
-    reference's chunk-clamp behavior."""
+    beyond the 2x2 child block on every side, so each parent gathers
+    its 4x4 child-tile neighborhood, origin 2p-1 (shuffle volume = 4x
+    the child tiles, bounded fan-in of 16, no skew possible). Missing
+    neighbors (raster edges) truncate the window and renormalize per
+    axis — exactly the reference's chunk-clamp behavior — and a parent
+    over partial edge children ends where they do."""
     radius = {"cubic": 2, "lanczos": 3}[kernel]
     offs = list(range(1 - 2 * radius, 2 * radius + 1))
 
@@ -409,70 +460,38 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
 
     w_o = np.array([wfun(0.5 * (o - 0.5)) for o in offs])
 
-    spark = tiles.sparkSession
-    parents = tiles.select(
-        "raster_id", "band", "zoom",
-        F.floor(F.col("tile_x") / 2).cast("int").alias("p_tx"),
-        F.floor(F.col("tile_y") / 2).cast("int").alias("p_ty"),
-    ).distinct()
-    needs = parents.select(
-        *_PARENT_KEY,
-        F.explode(
-            F.sequence(F.col("p_tx") * 2 - 1, F.col("p_tx") * 2 + 2)
-        ).alias("s_tx"),
-    ).select(
-        "raster_id", "band", "zoom", "p_tx", "p_ty", "s_tx",
-        F.explode(
-            F.sequence(F.col("p_ty") * 2 - 1, F.col("p_ty") * 2 + 2)
-        ).alias("s_ty"),
-    )
-    joined = needs.join(
-        tiles.withColumnRenamed("tile_x", "s_tx").withColumnRenamed("tile_y", "s_ty"),
-        ["raster_id", "band", "zoom", "s_tx", "s_ty"],
-        "inner",
-    )
-
     def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        raster_id, band, zoom, p_tx, p_ty = key
-        first = pdf.iloc[0]
-        w, h = int(first["width"]), int(first["height"])
-        mosaic = np.full((4 * h, 4 * w), np.nan)
-        for r in pdf.itertuples(index=False):
-            ox = (int(r.s_tx) - (2 * int(p_tx) - 1)) * w
-            oy = (int(r.s_ty) - (2 * int(p_ty) - 1)) * h
-            arr = _decode(r.data, r.dtype, r.height, r.width)
-            mosaic[oy : oy + h, ox : ox + w] = arr
-        # horizontal pass: Hf[:, i] = sum_o w_o * M[:, w + 2i + o],
+        p_tx, p_ty = int(key[3]), int(key[4])
+        ts = _group_tile_px(pdf)
+        win = paste(pdf, np.nan, ts, (2 * p_tx - 1, 2 * p_ty - 1, 4, 4))
+        # the parent block is window [ts, 3ts); past a partial edge it ends
+        oh = min(ts, -(-(win.shape[0] - ts) // 2))
+        ow = min(ts, -(-(win.shape[1] - ts) // 2))
+        mosaic = np.pad(win, ((0, 4 * ts - win.shape[0]), (0, 4 * ts - win.shape[1])),
+                        constant_values=np.nan)
+        # horizontal pass: Hf[:, i] = sum_o w_o * M[:, ts + 2i + o],
         # NaN taps drop out and the weight sum renormalizes
-        num = np.zeros((4 * h, w))
-        den = np.zeros((4 * h, w))
+        num = np.zeros((4 * ts, ts))
+        den = np.zeros((4 * ts, ts))
         for o, wt in zip(offs, w_o):
-            v = mosaic[:, w + o : w + o + 2 * w : 2]
+            v = mosaic[:, ts + o : ts + o + 2 * ts : 2]
             ok = ~np.isnan(v)
             num += np.where(ok, v, 0.0) * wt
             den += np.where(ok, wt, 0.0)
         with np.errstate(invalid="ignore", divide="ignore"):
             hf = np.where(den != 0, num / den, np.nan)
-        num = np.zeros((h, w))
-        den = np.zeros((h, w))
+        num = np.zeros((ts, ts))
+        den = np.zeros((ts, ts))
         for o, wt in zip(offs, w_o):
-            v = hf[h + o : h + o + 2 * h : 2, :]
+            v = hf[ts + o : ts + o + 2 * ts : 2, :]
             ok = ~np.isnan(v)
             num += np.where(ok, v, 0.0) * wt
             den += np.where(ok, wt, 0.0)
         with np.errstate(invalid="ignore", divide="ignore"):
-            out = np.where(den != 0, num / den, float(first["nodata"]))
-        out = _gdal_cast(out, first["dtype"])
-        gt = list(first["geotransform"])
-        res2 = gt[1] * 2
-        x0 = gt[0] - ((int(first["s_tx"]) - 2 * int(p_tx)) * w) * gt[1]
-        y0 = gt[3] - ((int(first["s_ty"]) - 2 * int(p_ty)) * h) * gt[5]
-        return pd.DataFrame([tile_row(
-            raster_id, int(band), int(zoom) - 1, int(p_tx), int(p_ty), out,
-            [x0, res2, 0.0, y0, 0.0, gt[5] * 2],
-            nodata=float(first["nodata"]), crs=first["crs"])])
+            out = np.where(den != 0, num / den, float(pdf["nodata"].iloc[0]))
+        return _overview_row(key, pdf, out[:oh, :ow], ts)
 
-    return joined.groupBy(*_PARENT_KEY).applyInPandas(agg, schema=TILE_SCHEMA)
+    return gather(tiles, _block_wants(tiles, 2, -1, 2), _PARENT_KEY, agg, TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------- warp
@@ -547,38 +566,21 @@ def warp_affine(
     spx1 = (wx1 - sx0) / src_res
     spy0 = (F.lit(sy0) - wy1) / src_res
     spy1 = (F.lit(sy0) - wy0) / src_res
-    stx0 = F.floor((spx0 - margin) / sts).cast("int")
-    stx1 = F.floor((spx1 + margin) / sts).cast("int")
-    sty0 = F.floor((spy0 - margin) / sts).cast("int")
-    sty1 = F.floor((spy1 + margin) / sts).cast("int")
-    needs = dst.select(
+    wants = dst.select(
         "d_tx", "d_ty",
-        F.explode(F.sequence(stx0, stx1)).alias("s_tx"), sty0.alias("_y0"), sty1.alias("_y1"),
-    ).select(
-        "d_tx", "d_ty", "s_tx", F.explode(F.sequence(F.col("_y0"), F.col("_y1"))).alias("s_ty")
-    )
-
-    joined = needs.join(
-        tiles.withColumnRenamed("tile_x", "s_tx").withColumnRenamed("tile_y", "s_ty"),
-        ["s_tx", "s_ty"],
-        "inner",
+        F.floor((spx0 - margin) / sts).cast("int").alias("tx0"),
+        F.floor((spx1 + margin) / sts).cast("int").alias("tx1"),
+        F.floor((spy0 - margin) / sts).cast("int").alias("ty0"),
+        F.floor((spy1 + margin) / sts).cast("int").alias("ty1"),
     )
 
     def warp_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         d_tx, d_ty = int(key[0]), int(key[1])
-        if len(pdf) == 0:
-            return pd.DataFrame([], columns=TILE_COLUMNS)
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
-        tx_min, ty_min = int(pdf["s_tx"].min()), int(pdf["s_ty"].min())
-        tx_max, ty_max = int(pdf["s_tx"].max()), int(pdf["s_ty"].max())
-        W = (tx_max - tx_min + 1) * sts
-        H = (ty_max - ty_min + 1) * sts
-        mosaic = np.full((H, W), nodata, dtype=np.float64)
-        for r in pdf.itertuples(index=False):
-            arr = _decode(r.data, r.dtype, r.height, r.width)
-            ox, oy = (int(r.s_tx) - tx_min) * sts, (int(r.s_ty) - ty_min) * sts
-            mosaic[oy : oy + arr.shape[0], ox : ox + arr.shape[1]] = arr
+        tx_min, ty_min = int(pdf["tile_x"].min()), int(pdf["tile_y"].min())
+        mosaic = paste(pdf, nodata, sts)
+        H, W = mosaic.shape
 
         if cutline_rings is not None:
             # GDAL applies the cutline as a SOURCE validity mask
@@ -811,7 +813,7 @@ def warp_affine(
             (dx0, dst_res, 0.0, dy0, 0.0, -dst_res), x0=d_tx * ts,
             y0=d_ty * ts, nodata=nodata, crs=first["crs"])])
 
-    return joined.groupBy("d_tx", "d_ty").applyInPandas(warp_group, schema=TILE_SCHEMA)
+    return gather(tiles, wants, ["d_tx", "d_ty"], warp_group, TILE_SCHEMA)
 
 
 def suggested_warp_output(src_origin: tuple[float, float], src_res: float,
@@ -891,14 +893,9 @@ def warp_transform(
         (F.col("id") / dst_tiles_x).cast("int").alias("d_ty"),
     )
 
-    win_schema = T.StructType([
-        T.StructField("d_tx", T.IntegerType()),
-        T.StructField("d_ty", T.IntegerType()),
-        T.StructField("stx0", T.IntegerType()),
-        T.StructField("stx1", T.IntegerType()),
-        T.StructField("sty0", T.IntegerType()),
-        T.StructField("sty1", T.IntegerType()),
-    ])
+    win_schema = T.StructType(
+        [T.StructField(c, T.IntegerType())
+         for c in ("d_tx", "d_ty", "tx0", "tx1", "ty0", "ty1")])
 
     def windows(batches):
         lin = np.linspace(0.0, 1.0, nsamp)
@@ -920,39 +917,17 @@ def warp_transform(
                              int(np.floor((spx.max() + margin) / sts)),
                              int(np.floor((spy.min() - margin) / sts)),
                              int(np.floor((spy.max() + margin) / sts))))
-            yield pd.DataFrame(rows, columns=[f.name for f in win_schema])
+            yield pd.DataFrame(rows, columns=win_schema.fieldNames())
 
-    win = dst.mapInPandas(windows, schema=win_schema)
-    needs = win.select(
-        "d_tx", "d_ty",
-        F.explode(F.sequence(F.col("stx0"), F.col("stx1"))).alias("s_tx"),
-        "sty0", "sty1",
-    ).select(
-        "d_tx", "d_ty", "s_tx",
-        F.explode(F.sequence(F.col("sty0"), F.col("sty1"))).alias("s_ty"),
-    )
-    joined = needs.join(
-        tiles.withColumnRenamed("tile_x", "s_tx")
-             .withColumnRenamed("tile_y", "s_ty"),
-        ["s_tx", "s_ty"], "inner")
+    wants = dst.mapInPandas(windows, schema=win_schema)
 
     def warp_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         d_tx, d_ty = int(key[0]), int(key[1])
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                [], columns=TILE_COLUMNS)
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
-        tx_min, ty_min = int(pdf["s_tx"].min()), int(pdf["s_ty"].min())
-        tx_max, ty_max = int(pdf["s_tx"].max()), int(pdf["s_ty"].max())
-        W = (tx_max - tx_min + 1) * sts
-        H = (ty_max - ty_min + 1) * sts
-        mosaic = np.full((H, W), nodata, dtype=np.float64)
-        for r in pdf.itertuples(index=False):
-            arr = _decode(r.data, r.dtype, r.height, r.width)
-            ox = (int(r.s_tx) - tx_min) * sts
-            oy = (int(r.s_ty) - ty_min) * sts
-            mosaic[oy:oy + arr.shape[0], ox:ox + arr.shape[1]] = arr
+        tx_min, ty_min = int(pdf["tile_x"].min()), int(pdf["tile_y"].min())
+        mosaic = paste(pdf, nodata, sts)
+        H, W = mosaic.shape
 
         jj, ii = np.mgrid[0:ts, 0:ts]
         wxp = dx0 + (d_tx * ts + ii + 0.5) * dst_res
@@ -991,8 +966,7 @@ def warp_transform(
             (dx0, dst_res, 0.0, dy0, 0.0, -dst_res), x0=d_tx * ts,
             y0=d_ty * ts, nodata=nodata, crs=dst_crs)])
 
-    return joined.groupBy("d_tx", "d_ty").applyInPandas(
-        warp_group, schema=TILE_SCHEMA)
+    return gather(tiles, wants, ["d_tx", "d_ty"], warp_group, TILE_SCHEMA)
 
 
 def cutline_blend_density(
@@ -1215,13 +1189,12 @@ def retile(tiles: DataFrame, new_px: int,
            dst_raster_id: str | None = None) -> DataFrame:
     """Re-chunk the tile grid to `new_px` tiles (gdal_retile.py /
     gdal_merge.py): splitting (new < old) is map-only — each tile emits
-    its sub-tiles; coarsening (new > old, must divide evenly) groups
-    the contributing tiles per output key and pastes — the only
-    shuffle carries exactly the pixels being regrouped. The old tile
-    size is the largest tile side; partial edge tiles (right and
-    bottom, top-down grids) stay partial both ways."""
-    old_px = int(tiles.select(
-        F.max(F.greatest("width", "height"))).first()[0])
+    its sub-tiles; coarsening (new > old, must divide evenly) gathers
+    each output tile's k x k block of tiles (the window gather, origin
+    k*n) and pastes it. The old tile size is the largest tile side;
+    partial edge tiles (right and bottom, top-down grids) stay partial
+    both ways."""
+    old_px = full_tile_px(tiles)
     if new_px == old_px:
         return tiles
     if old_px % new_px == 0:  # split: map-only
@@ -1250,28 +1223,11 @@ def retile(tiles: DataFrame, new_px: int,
     if new_px % old_px != 0:
         raise ValueError("new_px must divide or be a multiple of the old size")
     k = new_px // old_px
-    keyed = tiles.withColumn("_ntx", (F.col("tile_x") / k).cast("int")) \
-                 .withColumn("_nty", (F.col("tile_y") / k).cast("int"))
 
-    def paste(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def coarsen(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ntx, nty = int(key[3]), int(key[4])
         f0 = pdf.iloc[0]
-        pieces = []
-        big_w = big_h = new_px
-        for i in range(len(pdf)):
-            row = pdf.iloc[i]
-            w, h = int(row["width"]), int(row["height"])
-            ox = (int(row["tile_x"]) - ntx * k) * old_px
-            oy = (int(row["tile_y"]) - nty * k) * old_px
-            pieces.append((ox, oy, _decode(row["data"], row["dtype"], h, w)))
-            # a partial tile is the raster's edge: the output ends there
-            if w < old_px:
-                big_w = ox + w
-            if h < old_px:
-                big_h = oy + h
-        big = np.full((big_h, big_w), float(f0["nodata"]))
-        for ox, oy, arr in pieces:
-            big[oy : oy + arr.shape[0], ox : ox + arr.shape[1]] = arr
+        big = paste(pdf, float(f0["nodata"]), old_px, (ntx * k, nty * k, k, k))
         gt = list(f0["geotransform"])
         ox0 = (int(f0["tile_x"]) - ntx * k) * old_px
         oy0 = (int(f0["tile_y"]) - nty * k) * old_px
@@ -1281,5 +1237,5 @@ def retile(tiles: DataFrame, new_px: int,
             (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5]), x0=-ox0, y0=-oy0,
             nodata=float(f0["nodata"]), crs=str(f0["crs"]))])
 
-    return keyed.groupBy("raster_id", "band", "zoom", "_ntx", "_nty").applyInPandas(
-        paste, schema=TILE_SCHEMA)
+    return gather(tiles, _block_wants(tiles, k, 0, k - 1), _PARENT_KEY, coarsen,
+                  TILE_SCHEMA)

@@ -1,9 +1,9 @@
 """Two-band parity of the tile exchanges: an operator run on a tile
 table that holds two bands of one raster gives exactly the union of
 its outputs on each band alone. Every exchange (the focal halo, the
-proximity target lists, retile's coarsen paste, the gauss overview
-strips) is keyed by the whole tile address, so a band never reads its
-neighbour band's pixels."""
+proximity target lists, and the window gather behind both warps, both
+overviews and retile's coarsen) is keyed by the whole tile address,
+so a band never reads its neighbour band's pixels."""
 
 from collections import Counter
 
@@ -47,6 +47,13 @@ CASES = {
     "proximity_full": (_src, lambda t: R.proximity_full(t, [7.0], maxdist=20.0)),
     "retile_coarsen": (_src, lambda t: TL.retile(t, 512)),
     "overview_gauss": (_src, lambda t: TL.build_overview(t, "gauss")),
+    "overview_average": (_src, lambda t: TL.build_overview(t, "average")),
+    "overview_cubic": (_src, lambda t: TL.build_overview_conv(t, "cubic")),
+    # identity grids: each band warps onto itself
+    "warp_affine": (_src, lambda t: TL.warp_affine(
+        t, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2, "nearest")),
+    "warp_transform": (_src, lambda t: TL.warp_transform(
+        t, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2, lambda xs, ys: (xs, ys))),
     "surf_feature_points": (_surf, lambda t: S.feature_points(t, 2, 2)),
 }
 

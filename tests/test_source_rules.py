@@ -28,6 +28,15 @@
   (`collect_list(struct("dx", "dy", ...))`); `"dst_tx"` is spelled
   nowhere else, `_neighbor_strips` / `_neighbor_blocks` are gone, and
   no module but raster.py joins tiles on a `tile_x` comparison.
+- One window gather: the six window operators (both warps, both
+  overviews, retile, viewshed) read their source tiles through
+  `tiling.gather` and build their windows with `tiling.paste`. Only
+  `gather` joins a tile table on an exploded source-tile range (or a
+  tile-range comparison), no function but `paste` (and
+  `raster.halo_window`) slice-assigns a decoded tile into a window at
+  an offset from a tile index, `groupBy("d_tx", "d_ty")` is spelled
+  nowhere, the gauss overview takes its reach from `raster.halo`, and
+  `_gauss_halo_strips` / `GS_SCHEMA` are gone.
 - The query builders' scratch files live under one root:
   `tempfile.mkdtemp` is called once in `__spark_entry__.py`, by
   `_scratch`, and a process that used `_scratch` leaves nothing behind.
@@ -228,6 +237,110 @@ def test_one_halo_exchange():
     assert gathers == [halo], gathers
     assert set(dst) <= {halo}, dst
     assert not tile_joins, tile_joins
+
+
+_TILE_INDEX = {"tile_x", "tile_y", "s_tx", "s_ty", "_tx0", "_ty0"}
+
+
+def _reads_tile_index(node, names=()):
+    return any((isinstance(n, ast.Attribute) and n.attr in _TILE_INDEX)
+               or (isinstance(n, ast.Constant) and n.value in _TILE_INDEX)
+               or (isinstance(n, ast.Name)
+                   and (n.id in _TILE_INDEX or n.id in names))
+               for n in ast.walk(node))
+
+
+def _window_pastes(fn):
+    """Lines of `fn`'s own body that slice-assign an array at an offset
+    from a tile index: the slice holds a subtraction over a tile index,
+    or a local name computed from one."""
+    assigns = [n for n in _own_nodes(fn) if isinstance(n, ast.Assign)]
+    tainted, offsets = set(), set()
+
+    def sub_over_index(node):
+        return any(isinstance(b, ast.BinOp) and isinstance(b.op, ast.Sub)
+                   and _reads_tile_index(b, tainted) for b in ast.walk(node))
+
+    grew = True
+    while grew:  # names computed (transitively) from a tile index
+        grew = False
+        for a in assigns:
+            for t in a.targets:
+                for n in ast.walk(t):
+                    if not isinstance(n, ast.Name):
+                        continue
+                    if n.id not in tainted and _reads_tile_index(a.value, tainted):
+                        tainted.add(n.id)
+                        grew = True
+                    if n.id not in offsets and (sub_over_index(a.value) or any(
+                            isinstance(m, ast.Name) and m.id in offsets
+                            for m in ast.walk(a.value))):
+                        offsets.add(n.id)
+                        grew = True
+    for a in assigns:
+        if isinstance(a.value, ast.Constant):  # a fill, not a tile
+            continue
+        for t in a.targets:
+            if (isinstance(t, ast.Subscript)
+                    and any(isinstance(s, ast.Slice) for s in ast.walk(t.slice))
+                    and (sub_over_index(t.slice) or any(
+                        isinstance(m, ast.Name) and m.id in offsets
+                        for m in ast.walk(t.slice)))):
+                yield a.lineno
+
+
+def _range_join(fn):
+    """A join fed by an explode(sequence(...)) aliased to a tile index,
+    or a join whose condition orders a tile index (<, <=, >, >=)."""
+    joins = _calls(fn, "join")
+    exploded = any(
+        ast.unparse(a.func).split(".")[-1] == "alias"
+        and isinstance(a.func, ast.Attribute)
+        and _calls(a.func.value, "sequence") and _calls(a.func.value, "explode")
+        and a.args and isinstance(a.args[0], ast.Constant)
+        and a.args[0].value in _TILE_INDEX
+        for a in ast.walk(fn) if isinstance(a, ast.Call))
+    theta = any(isinstance(n, ast.Compare) and _reads_tile_index(n)
+                and not all(isinstance(o, ast.Eq) for o in n.ops)
+                for c in joins for a in c.args[1:] for n in ast.walk(a))
+    return bool(joins) and (exploded or theta)
+
+
+def test_one_window_gather():
+    tiling_py = os.path.join("gdal_spark", "tiling.py")
+    raster_py = os.path.join("gdal_spark", "raster.py")
+    old, dst_groups, range_joins, pastes = [], [], [], []
+    fns = {}
+    for path in SOURCES:
+        tree = _tree(path)
+        for n in ast.walk(tree):
+            name = getattr(n, "name", None) or getattr(n, "id", None) \
+                or getattr(n, "attr", None)
+            if name in ("_gauss_halo_strips", "GS_SCHEMA"):
+                old.append(f"{_rel(path)}:{n.lineno}")
+        for c in _calls(tree, "groupBy"):
+            if [ast.unparse(a) for a in c.args[:2]] == ["'d_tx'", "'d_ty'"]:
+                dst_groups.append(f"{_rel(path)}:{c.lineno}")
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = f"{_rel(path)}:{fn.name}"
+            fns[where] = fn
+            if _range_join(fn):
+                range_joins.append(where)
+            if any(True for f in ast.walk(fn) if isinstance(f, ast.FunctionDef)
+                   for _ in _window_pastes(f)):
+                pastes.append(where)
+    assert not old, old
+    assert not dst_groups, dst_groups
+    assert range_joins == [f"{tiling_py}:gather"], range_joins
+    assert f"{tiling_py}:paste" in pastes
+    assert set(pastes) <= {f"{tiling_py}:paste", f"{raster_py}:halo_window"}, pastes
+    users = [f"{tiling_py}:{n}" for n in ("build_overview", "build_overview_conv",
+                                          "warp_affine", "warp_transform", "retile")]
+    for where in users + [f"{raster_py}:viewshed"]:
+        assert _calls(fns[where], "gather") and _calls(fns[where], "paste"), where
+    assert _calls(fns[f"{tiling_py}:build_overview"], "halo")
 
 
 def test_one_mkdtemp_in_the_query_builders():

@@ -189,6 +189,24 @@ def test_overview_average_golden(spark):
     assert np.array_equal(got, exp)
 
 
+def test_overview_partial_edge_tiles(spark):
+    """A 300x300 raster tiled at 256 has 44-px edge tiles: each child
+    lands by its own shape, so the average overview is one 150x150
+    tile, the 2x2 mean of the whole raster, and every other kernel
+    ends at the same edge."""
+    tiles = synth.dem_tiles_df(spark, 300, tile_px=256)
+    ov = tiling.build_overview(tiles, "average").collect()
+    assert [(r["width"], r["height"]) for r in ov] == [(150, 150)]
+    src = synth.dem_pixels_np(0, 0, 300, 300).astype(np.float64)
+    exp = np.floor(src.reshape(150, 2, 150, 2).mean(axis=(1, 3)) + 0.5)
+    got = np.frombuffer(ov[0]["data"], dtype=np.int16).reshape(150, 150)
+    assert np.array_equal(got, exp.astype(np.int16))
+    others = [tiling.build_overview(tiles, k) for k in ("nearest", "mode", "gauss", "rms")]
+    others += [tiling.build_overview_conv(tiles, k) for k in ("cubic", "lanczos")]
+    for out in others:
+        assert [(r["width"], r["height"]) for r in out.collect()] == [(150, 150)]
+
+
 # -------------------------------------------------------------------- warp
 def test_warp_identity_nearest_preserves_checksums(spark):
     tiles = synth.tiles_src_df(spark, 2, 2)

@@ -7,6 +7,7 @@ import pandas as pd
 from pyspark.sql import Row
 
 from gdal_spark import raster as R
+from gdal_spark import synth
 from gdal_spark.raster import los_visibility
 from gdal_spark.synth import TILE_SCHEMA
 
@@ -63,6 +64,18 @@ def test_distributed_matches_kernel(spark):
         np.frombuffer(r["mask"], dtype=np.uint8), count=h * w
     ).reshape(h, w).astype(bool)
     assert np.array_equal(got_mask, vis_exp & in_rng)
+
+
+def test_partial_edge_tiles_land_by_tile_index(spark):
+    """A 300x300 DEM tiled at 256 (44-px edge tiles) and as one 300-px
+    tile give the same viewshed: each tile lands at its index times
+    the full tile size, and the window ends at the raster's edge."""
+    obs = pd.DataFrame({"obs_id": [1], "gx": [250], "gy": [250]})
+    got = [R.viewshed(synth.dem_tiles_df(spark, 300, tile_px=px), obs, radius_px=40)
+           .select("visible_px", "in_range_px", "x0", "y0", "w", "h").collect()
+           for px in (256, 512)]
+    assert got[0] == got[1]
+    assert (got[0][0]["w"], got[0][0]["h"]) == (300, 300)
 
 
 def test_curvature_hides_beyond_horizon(spark):
