@@ -801,16 +801,18 @@ def write_cog(tiles: DataFrame, path: str, levels: int = 2,
         zooms_asc = sorted(metas)                 # data order: coarsest first
         z0 = zooms_desc[0]
         w0, h0 = int(metas[z0].img_w), int(metas[z0].img_h)
+        # every level keeps the full-res tile size: an overview tile
+        # ends at the raster's edge and pads into its segment, so
+        # TileWidth/TileLength stay the multiple of 16 TIFF requires
+        tw, th = int(metas[z0].tw), int(metas[z0].th)
         lv = {}
         for z in metas:
             m = metas[z]
             ntx, nty = int(m.ntx1) + 1, int(m.nty1) + 1
-            tw, th = int(m.tw), int(m.th)
             nb = int(m.nbands)
             itemsize = np.dtype(str(m.dtype)).itemsize
             # level dims halve from FULL RES (ceil), like overview.cpp
-            # (n+1)/2 — build_overview tiles end at the raster's edge,
-            # and TIFF tiles legitimately pad past it
+            # (n+1)/2, and TIFF tiles legitimately pad past them
             f = 1 << (z0 - z)
             lv[z] = {
                 "ntx": ntx, "nty": nty, "tw": tw, "th": th, "nbands": nb,

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tiling import TILE_SCHEMA, _decode, _group_tile_px, paste
+from .tiling import TILE_SCHEMA, _decode, full_tile_px, paste
 
 _COLB_SCHEMA = T.StructType(
     [
@@ -70,10 +70,11 @@ def _near_mask(arr: np.ndarray, near_dist: int, white: bool) -> np.ndarray:
     return ~((c - v > near_dist) | (v > near_dist + c))
 
 
-def column_bounds(tiles: DataFrame, near_dist: int = 15,
+def column_bounds(tiles: DataFrame, ts: int, near_dist: int = 15,
                   white: bool = False) -> DataFrame:
     """Per global column: first (t) and last (b) non-near row — the
-    whole cross-tile state of the reference's vertical check."""
+    whole cross-tile state of the reference's vertical check. A tile
+    starts at its index times the full tile size `ts`."""
 
     def scan(batches):
         for pdf in batches:
@@ -89,11 +90,11 @@ def column_bounds(tiles: DataFrame, near_dist: int = 15,
                 nn = ~near[:, xs]
                 first = nn.argmax(axis=0)
                 last = arr.shape[0] - 1 - nn[::-1, :].argmax(axis=0)
-                y0 = int(r.tile_y) * r.height
+                y0 = int(r.tile_y) * ts
                 rows["raster_id"].extend([r.raster_id] * len(xs))
                 rows["band"].extend([int(r.band)] * len(xs))
                 rows["tile_x"].extend([int(r.tile_x)] * len(xs))
-                rows["x"].extend((int(r.tile_x) * r.width + xs).tolist())
+                rows["x"].extend((int(r.tile_x) * ts + xs).tolist())
                 rows["t"].extend((y0 + first).tolist())
                 rows["b"].extend((y0 + last).tolist())
             yield pd.DataFrame(rows)
@@ -109,7 +110,8 @@ def nearblack(tiles: DataFrame, near_dist: int = 15, white: bool = False,
     """Blacken (or whiten) the edge collar; returns processed band
     rows plus, when set_mask, a mask band (band = input band + 100;
     255 valid / 0 collar, like the reference's -setmask band)."""
-    colb = column_bounds(tiles, near_dist, white)
+    ts = full_tile_px(tiles)
+    colb = column_bounds(tiles, ts, near_dist, white)
     # per-tile_x struct arrays keep broadcast rows small (tile_px
     # structs each) while still avoiding any shuffle of pixel data
     colg = colb.groupBy("raster_id", "band", "tile_x").agg(
@@ -122,7 +124,6 @@ def nearblack(tiles: DataFrame, near_dist: int = 15, white: bool = False,
     )
 
     def run_strip(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = _group_tile_px(pdf)
         tx_min = int(pdf["tile_x"].min())
         # placement by tile index (robust to a sparse strip; absent
         # tiles read as all-collar, matching an all-nodata region)

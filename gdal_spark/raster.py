@@ -1499,6 +1499,9 @@ def los_visibility(dem: np.ndarray, ox: int, oy: int, obs_height: float,
 VIEWSHED_SCHEMA = T.StructType(
     [
         T.StructField("obs_id", T.LongType()),
+        T.StructField("raster_id", T.StringType()),
+        T.StructField("band", T.IntegerType()),
+        T.StructField("zoom", T.IntegerType()),
         T.StructField("visible_px", T.LongType()),
         T.StructField("in_range_px", T.LongType()),
         T.StructField("mask", T.BinaryType()),
@@ -1521,7 +1524,9 @@ def viewshed(tiles: DataFrame, observers: "pd.DataFrame",
     ONE task (the window gather), which pastes the window and runs the
     sampled line-of-sight kernel. Long-range ops like this are
     per-observer local by nature — the distribution axis is ACROSS
-    observers, matching GDAL's one-observer-per-call shape.
+    observers, matching GDAL's one-observer-per-call shape. Each
+    band (raster, zoom) of the table is its own window: one row per
+    observer and band, labelled by raster_id, band and zoom.
     """
     ts = full_tile_px(tiles)
     gx, gy = observers["gx"].astype(np.int64), observers["gy"].astype(np.int64)
@@ -1534,6 +1539,7 @@ def viewshed(tiles: DataFrame, observers: "pd.DataFrame",
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
         obs_id, gx, gy = int(key[0]), int(key[1]), int(key[2])
+        raster_id, band, zoom = key[3], int(key[4]), int(key[5])
         tx0 = int(pdf["tile_x"].min()) * ts
         ty0 = int(pdf["tile_y"].min()) * ts
         dem = paste(pdf, np.nan, ts)
@@ -1544,7 +1550,8 @@ def viewshed(tiles: DataFrame, observers: "pd.DataFrame",
         return pd.DataFrame(
             [
                 {
-                    "obs_id": obs_id,
+                    "obs_id": obs_id, "raster_id": raster_id,
+                    "band": band, "zoom": zoom,
                     "visible_px": int((vis & in_rng).sum()),
                     "in_range_px": int(in_rng.sum()),
                     "mask": np.packbits(vis & in_rng).tobytes(),

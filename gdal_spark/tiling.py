@@ -13,7 +13,8 @@ gdal_calc, osgeo_utils/gdal_calc.py:35-50):
   translate       — window/cast/scale per tile      (apps/gdal_translate_lib.cpp:107-262)
   gather / paste  — the window gather: each destination's rectangle of
                     source tiles joined and grouped by the whole tile
-                    address, pasted into one window (gcore/rasterio.cpp:207)
+                    address, pasted into one window (gcore/rasterio.cpp:207);
+                    group_blocks is its aligned k x k case, one groupBy
   build_overview  — 2x factor pyramid level          (gcore/overview.cpp:144 ff;
                     build_overview_conv: cubic/lanczos :2771)
   warp_affine     — chunked inverse-mapping resample (alg/gdalwarpoperation.cpp:116-157,
@@ -26,9 +27,13 @@ gdal_calc, osgeo_utils/gdal_calc.py:35-50):
 
 Scale notes: translate/checksum are map-only. Every operator whose
 output tile reads a window of source tiles — both warps, both
-overviews, retile's coarsen, raster.viewshed — goes through the one
-window gather: only the source tiles each destination needs move
-through the shuffle. For warp that is GDAL's ChunkAndWarpImage chunk
+overviews, retile's coarsen, raster.viewshed — builds it with the one
+paste. Where a source tile feeds several destinations (both warps,
+build_overview_conv, viewshed) the window gather joins each
+destination's source range; where each feeds exactly one (the 2x
+overviews, retile's coarsen) group_blocks keys the tile by its block,
+one groupBy and no join. Either way only the source tiles each
+destination needs move through the shuffle. For warp that is GDAL's ChunkAndWarpImage chunk
 list (gdalwarpoperation.cpp:808) restated as a deterministic dst-tile
 table joined to its source window, with its 2-thread I/O-compute
 overlap (:992-1050) generalized to all executors.
@@ -231,16 +236,17 @@ def gather(tiles: DataFrame, wants: DataFrame, key: list[str], fn,
 
 def paste(pdf: pd.DataFrame, fill: float, ts: int,
           window: tuple[int, int, int, int] | None = None,
-          h: int = 0) -> np.ndarray:
+          h: int = 0, crop: bool = True) -> np.ndarray:
     """The float64 window of one gathered group over tiles
     tx0..tx0+nx-1 x ty0..ty0+ny-1 (`window` = (tx0, ty0, nx, ny),
     default the bounding box of the tiles that arrived). Each tile
     lands at (tile index - window origin) * ts, ts the full tile size,
     by its own shape; `fill` stands where no tile arrived. A partial
-    tile is the raster's edge, so the window ends there. With h > 0
-    the rows carry `raster.halo` blocks and each tile lands with its
-    h-px halo (`raster.halo_window`): the window grows by h on every
-    side."""
+    tile is the raster's edge, so with `crop` the window ends there;
+    without it the window keeps all nx*ts x ny*ts pixels and `fill`
+    stands past the edge. With h > 0 the rows carry `raster.halo`
+    blocks and each tile lands with its h-px halo
+    (`raster.halo_window`): the window grows by h on every side."""
     from .raster import halo_window  # raster imports this module
 
     if window is None:
@@ -252,9 +258,9 @@ def paste(pdf: pd.DataFrame, fill: float, ts: int,
     placed = []
     for r in pdf.itertuples(index=False):
         ox, oy = (int(r.tile_x) - tx0) * ts, (int(r.tile_y) - ty0) * ts
-        if r.width < ts:
+        if crop and r.width < ts:
             W = min(W, ox + int(r.width))
-        if r.height < ts:
+        if crop and r.height < ts:
             H = min(H, oy + int(r.height))
         placed.append((ox, oy, halo_window(r, h, fill) if h else
                        _decode(r.data, r.dtype, r.height, r.width)))
@@ -307,19 +313,17 @@ def _mode_2x2(q: np.ndarray, qv: np.ndarray, nodata: float) -> np.ndarray:
 _PARENT_KEY = ["raster_id", "band", "zoom", "p_tx", "p_ty"]
 
 
-def _block_wants(tiles: DataFrame, k: int, lo: int, hi: int) -> DataFrame:
-    """One want per k x k block of `tiles` that holds a tile: the block
-    (p_tx, p_ty) reads source tiles k*p+lo .. k*p+hi on both axes."""
-    blocks = tiles.select(
-        *_SOURCE_KEY,
-        F.floor(F.col("tile_x") / k).cast("int").alias("p_tx"),
-        F.floor(F.col("tile_y") / k).cast("int").alias("p_ty"),
-    ).distinct()
-    return blocks.select(
-        *_PARENT_KEY,
-        (F.col("p_tx") * k + lo).alias("tx0"), (F.col("p_tx") * k + hi).alias("tx1"),
-        (F.col("p_ty") * k + lo).alias("ty0"), (F.col("p_ty") * k + hi).alias("ty1"),
-    )
+def group_blocks(tiles: DataFrame, k: int, fn) -> DataFrame:
+    """The aligned-block exchange: each k x k block of tiles (p_tx,
+    p_ty) = floor(tile / k) is one group, `fn(key, pdf)` runs once per
+    group (applyInPandas, tile rows out). Every source tile feeds
+    exactly one block, so the key is a pure function of the tile
+    address: one groupBy, no join; the block is pasted like any
+    gathered window."""
+    return tiles.withColumns({
+        "p_tx": F.floor(F.col("tile_x") / k).cast("int"),
+        "p_ty": F.floor(F.col("tile_y") / k).cast("int"),
+    }).groupBy(*_PARENT_KEY).applyInPandas(fn, schema=TILE_SCHEMA)
 
 
 def _overview_row(key, pdf: pd.DataFrame, out: np.ndarray, ts: int) -> pd.DataFrame:
@@ -334,12 +338,6 @@ def _overview_row(key, pdf: pd.DataFrame, out: np.ndarray, ts: int) -> pd.DataFr
         raster_id, int(band), int(zoom) - 1, int(p_tx), int(p_ty),
         _gdal_cast(out, first["dtype"]), [x0, gt[1] * 2, 0.0, y0, 0.0, gt[5] * 2],
         nodata=float(first["nodata"]), crs=first["crs"])])
-
-
-def _group_tile_px(pdf: pd.DataFrame) -> int:
-    """The full tile size seen by one gathered group: its largest tile
-    side."""
-    return int(max(pdf["width"].max(), pdf["height"].max()))
 
 
 def gauss_2x2(big: np.ndarray, nodata: float) -> np.ndarray:
@@ -370,14 +368,15 @@ def build_overview(tiles: DataFrame, kernel: str = "average") -> DataFrame:
     build_overview_conv. A parent over partial edge children ends
     where they do: ceil(extent / 2) pixels.
 
-    Shuffle: the window gather of each parent's 2x2 children — fan-in
-    bounded by 4, keys are tile ids, no skew possible. Gauss's 3x3
-    window reaches 1 px into the next parent block; that pixel comes
-    from the halo exchange (raster.halo), so only edges cross
-    parents."""
+    Shuffle: the aligned-block exchange (group_blocks) of each
+    parent's 2x2 children — fan-in bounded by 4, keys are tile ids, no
+    skew possible. Gauss's 3x3 window reaches 1 px into the next parent
+    block; that pixel comes from the halo exchange (raster.halo), so
+    only edges cross parents."""
     if kernel not in ("average", "nearest", "mode", "gauss", "rms"):
         raise ValueError(f"unsupported overview kernel: {kernel}")
     reach = 1 if kernel == "gauss" else 0
+    ts = full_tile_px(tiles)
     src = tiles
     if reach:
         from .raster import halo  # raster imports this module
@@ -388,7 +387,6 @@ def build_overview(tiles: DataFrame, kernel: str = "average") -> DataFrame:
         p_tx, p_ty = int(key[3]), int(key[4])
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
-        ts = _group_tile_px(pdf)
         win = paste(pdf, np.nan, ts, (2 * p_tx, 2 * p_ty, 2, 2), reach)[reach:, reach:]
         # whole 2x2 blocks (+ the gauss tap) past an odd edge read NaN
         h, w = -(-(win.shape[0] - reach) // 2), -(-(win.shape[1] - reach) // 2)
@@ -425,7 +423,7 @@ def build_overview(tiles: DataFrame, kernel: str = "average") -> DataFrame:
             out = core[0::2, 0::2]
         return _overview_row(key, pdf, out, ts)
 
-    return gather(src, _block_wants(tiles, 2, 0, 1), _PARENT_KEY, agg, TILE_SCHEMA)
+    return group_blocks(src, 2, agg)
 
 
 def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
@@ -459,10 +457,20 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
         return 3.0 * math.sin(pix) * math.sin(pix / 3.0) / (pix * pix)
 
     w_o = np.array([wfun(0.5 * (o - 0.5)) for o in offs])
+    ts = full_tile_px(tiles)
+    parents = tiles.select(
+        *_SOURCE_KEY,
+        F.floor(F.col("tile_x") / 2).cast("int").alias("p_tx"),
+        F.floor(F.col("tile_y") / 2).cast("int").alias("p_ty"),
+    ).distinct()
+    wants = parents.select(
+        *_PARENT_KEY,
+        (F.col("p_tx") * 2 - 1).alias("tx0"), (F.col("p_tx") * 2 + 2).alias("tx1"),
+        (F.col("p_ty") * 2 - 1).alias("ty0"), (F.col("p_ty") * 2 + 2).alias("ty1"),
+    )
 
     def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
         p_tx, p_ty = int(key[3]), int(key[4])
-        ts = _group_tile_px(pdf)
         win = paste(pdf, np.nan, ts, (2 * p_tx - 1, 2 * p_ty - 1, 4, 4))
         # the parent block is window [ts, 3ts); past a partial edge it ends
         oh = min(ts, -(-(win.shape[0] - ts) // 2))
@@ -491,7 +499,7 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
             out = np.where(den != 0, num / den, float(pdf["nodata"].iloc[0]))
         return _overview_row(key, pdf, out[:oh, :ow], ts)
 
-    return gather(tiles, _block_wants(tiles, 2, -1, 2), _PARENT_KEY, agg, TILE_SCHEMA)
+    return gather(tiles, wants, _PARENT_KEY, agg, TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------- warp
@@ -579,7 +587,7 @@ def warp_affine(
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
         tx_min, ty_min = int(pdf["tile_x"].min()), int(pdf["tile_y"].min())
-        mosaic = paste(pdf, nodata, sts)
+        mosaic = paste(pdf, nodata, sts, crop=False)
         H, W = mosaic.shape
 
         if cutline_rings is not None:
@@ -926,7 +934,7 @@ def warp_transform(
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
         tx_min, ty_min = int(pdf["tile_x"].min()), int(pdf["tile_y"].min())
-        mosaic = paste(pdf, nodata, sts)
+        mosaic = paste(pdf, nodata, sts, crop=False)
         H, W = mosaic.shape
 
         jj, ii = np.mgrid[0:ts, 0:ts]
@@ -1189,9 +1197,9 @@ def retile(tiles: DataFrame, new_px: int,
            dst_raster_id: str | None = None) -> DataFrame:
     """Re-chunk the tile grid to `new_px` tiles (gdal_retile.py /
     gdal_merge.py): splitting (new < old) is map-only — each tile emits
-    its sub-tiles; coarsening (new > old, must divide evenly) gathers
-    each output tile's k x k block of tiles (the window gather, origin
-    k*n) and pastes it. The old tile size is the largest tile side;
+    its sub-tiles; coarsening (new > old, must divide evenly) groups
+    each output tile's k x k block of tiles (group_blocks, origin k*n)
+    and pastes it. The old tile size is the largest tile side;
     partial edge tiles (right and bottom, top-down grids) stay partial
     both ways."""
     old_px = full_tile_px(tiles)
@@ -1237,5 +1245,4 @@ def retile(tiles: DataFrame, new_px: int,
             (gt[0], gt[1], 0.0, gt[3], 0.0, gt[5]), x0=-ox0, y0=-oy0,
             nodata=float(f0["nodata"]), crs=str(f0["crs"]))])
 
-    return gather(tiles, _block_wants(tiles, k, 0, k - 1), _PARENT_KEY, coarsen,
-                  TILE_SCHEMA)
+    return group_blocks(tiles, k, coarsen)

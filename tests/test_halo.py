@@ -1,13 +1,15 @@
 """Two-band parity of the tile exchanges: an operator run on a tile
 table that holds two bands of one raster gives exactly the union of
 its outputs on each band alone. Every exchange (the focal halo, the
-proximity target lists, and the window gather behind both warps, both
-overviews and retile's coarsen) is keyed by the whole tile address,
-so a band never reads its neighbour band's pixels."""
+proximity target lists, the window gather behind both warps, the
+convolution overview and viewshed, and the aligned-block grouping
+behind the 2x overviews and retile's coarsen) is keyed by the whole
+tile address, so a band never reads its neighbour band's pixels."""
 
 from collections import Counter
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -54,6 +56,8 @@ CASES = {
         t, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2, "nearest")),
     "warp_transform": (_src, lambda t: TL.warp_transform(
         t, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2, lambda xs, ys: (xs, ys))),
+    "viewshed": (_src, lambda t: R.viewshed(
+        t, pd.DataFrame({"obs_id": [1, 2], "gx": [100, 300], "gy": [100, 260]}), 60)),
     "surf_feature_points": (_surf, lambda t: S.feature_points(t, 2, 2)),
 }
 

@@ -74,3 +74,23 @@ def test_distributed_matches_sequential_white(spark):
         got[r.tile_y * 64:(r.tile_y + 1) * 64,
             r.tile_x * 64:(r.tile_x + 1) * 64] = a
     assert (got == ref_out).all()
+
+
+def test_partial_edge_tiles_match_one_tile(spark):
+    """A 300x300 DEM tiled at 256 (44-px edge tiles) and as one 300-px
+    tile give the same output and mask: every tile starts at its index
+    times the full tile size."""
+    from gdal_spark.nearblack import nearblack
+    from gdal_spark.tiling import _decode
+
+    got = []
+    for px in (256, 512):
+        img = {1: np.zeros((300, 300), np.int16), 101: np.zeros((300, 300), np.uint8)}
+        for r in nearblack(synth.dem_tiles_df(spark, 300, tile_px=px)).collect():
+            img[r.band][r.tile_y * px:r.tile_y * px + r.height,
+                        r.tile_x * px:r.tile_x * px + r.width] = (
+                _decode(r.data, r.dtype, r.height, r.width))
+        got.append(img)
+    assert (got[1][101] == 0).any() and (got[1][101] == 255).any()
+    for band in (1, 101):
+        np.testing.assert_array_equal(got[0][band], got[1][band])

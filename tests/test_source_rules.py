@@ -29,8 +29,11 @@
   nowhere else, `_neighbor_strips` / `_neighbor_blocks` are gone, and
   no module but raster.py joins tiles on a `tile_x` comparison.
 - One window gather: the six window operators (both warps, both
-  overviews, retile, viewshed) read their source tiles through
-  `tiling.gather` and build their windows with `tiling.paste`. Only
+  overviews, retile, viewshed) build their windows with
+  `tiling.paste`. Those whose source tiles feed several destinations
+  (both warps, `build_overview_conv`, viewshed) read them through
+  `tiling.gather`; the aligned 2x overview and retile's coarsen
+  through `tiling.group_blocks`, one groupBy. Only
   `gather` joins a tile table on an exploded source-tile range (or a
   tile-range comparison), no function but `paste` (and
   `raster.halo_window`) slice-assigns a decoded tile into a window at
@@ -336,10 +339,12 @@ def test_one_window_gather():
     assert range_joins == [f"{tiling_py}:gather"], range_joins
     assert f"{tiling_py}:paste" in pastes
     assert set(pastes) <= {f"{tiling_py}:paste", f"{raster_py}:halo_window"}, pastes
-    users = [f"{tiling_py}:{n}" for n in ("build_overview", "build_overview_conv",
-                                          "warp_affine", "warp_transform", "retile")]
-    for where in users + [f"{raster_py}:viewshed"]:
-        assert _calls(fns[where], "gather") and _calls(fns[where], "paste"), where
+    gathers = [f"{tiling_py}:{n}" for n in ("build_overview_conv", "warp_affine",
+                                            "warp_transform")] + [f"{raster_py}:viewshed"]
+    blocks = [f"{tiling_py}:{n}" for n in ("build_overview", "retile")]
+    for where in gathers + blocks:
+        assert _calls(fns[where], "paste"), where
+        assert _calls(fns[where], "gather" if where in gathers else "group_blocks"), where
     assert _calls(fns[f"{tiling_py}:build_overview"], "halo")
 
 

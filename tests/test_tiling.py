@@ -189,11 +189,12 @@ def test_overview_average_golden(spark):
     assert np.array_equal(got, exp)
 
 
-def test_overview_partial_edge_tiles(spark):
+def test_overview_partial_edge_tiles(spark, tmp_path):
     """A 300x300 raster tiled at 256 has 44-px edge tiles: each child
     lands by its own shape, so the average overview is one 150x150
     tile, the 2x2 mean of the whole raster, and every other kernel
-    ends at the same edge."""
+    ends at the same edge. A COG of it keeps the full-res 256-px tile
+    size on the overview IFD (TIFF wants a multiple of 16)."""
     tiles = synth.dem_tiles_df(spark, 300, tile_px=256)
     ov = tiling.build_overview(tiles, "average").collect()
     assert [(r["width"], r["height"]) for r in ov] == [(150, 150)]
@@ -205,6 +206,13 @@ def test_overview_partial_edge_tiles(spark):
     others += [tiling.build_overview_conv(tiles, k) for k in ("cubic", "lanczos")]
     for out in others:
         assert [(r["width"], r["height"]) for r in out.collect()] == [(150, 150)]
+    from gdal_spark import geotiff
+
+    p = str(tmp_path / "edge.tif")
+    geotiff.write_cog(tiles, p, levels=1)
+    _, ifds = geotiff._parse_ifds(p)
+    assert [(d["tile_w"], d["tile_h"]) for d in ifds] == [([256], [256])] * 2
+    assert [(d["width"], d["height"]) for d in ifds] == [([300], [300]), ([150], [150])]
 
 
 # -------------------------------------------------------------------- warp
@@ -224,6 +232,22 @@ def test_warp_identity_nearest_preserves_checksums(spark):
     src_cks = tiling.checksum_table(tiles).toPandas().set_index(["tile_x", "tile_y"])["checksum"]
     for k in src_cks.index:
         assert got[k] == src_cks[k]
+
+
+def test_warp_past_a_partial_source_edge_is_nodata(spark):
+    """An identity warp of a 300x300 raster tiled at 256 onto a 512x512
+    grid: destination pixels past the source's right and bottom edge
+    read nodata, not the last source column or row."""
+    tiles = synth.dem_tiles_df(spark, 300, tile_px=256)
+    warped = tiling.warp_affine(tiles, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2,
+                                "nearest", tile_px=256)
+    got = np.zeros((512, 512))
+    for r in warped.collect():
+        got[r.tile_y * 256:(r.tile_y + 1) * 256, r.tile_x * 256:(r.tile_x + 1) * 256] = (
+            np.frombuffer(r.data, dtype=r.dtype).reshape(256, 256))
+    exp = np.full((512, 512), -32767.0)
+    exp[:300, :300] = synth.dem_pixels_np(0, 0, 300, 300)
+    np.testing.assert_array_equal(got, exp)
 
 
 def test_warp_shift_halfres_bilinear_golden(spark):
