@@ -2195,8 +2195,8 @@ def _q_warp_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiles = synth.tiles_src_df(spark, 2, 2)
     res = 2 * math.pi * 6378137 / 256 / (2**ZOOM)
     origin = (-math.pi * 6378137, -math.pi * 6378137 + 2 * 256 * res)
-    warped = tiling.warp_affine(
-        tiles, src_zoom_origin=origin, src_res=res,
+    warped = tiling.warp(
+        tiles, src_origin=origin, src_res=res,
         dst_origin=origin, dst_res=res * 2, dst_tiles_x=1, dst_tiles_y=1,
         kernel="bilinear",
     )
@@ -2228,7 +2228,7 @@ def _q_vshift_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDALApplyVerticalShiftGrid (alg/gdalapplyverticalshiftgrid.cpp):
     bilinear-regrid a coarse float32 shift grid onto the 2x2 synth
     DEM's pixel grid, then out = (src*srcU + grid)/dstU per pixel with
-    nodata passthrough — stage 1 is the audited warp_affine, stage 2 a
+    nodata passthrough — stage 1 is the audited tiling.warp, stage 2 a
     1:1 tile join + map-only Arrow combine. Oracle:
     localref.sql_vshift_checksums replays the regrid+combine on the
     global mosaic in numpy."""
@@ -2262,7 +2262,7 @@ def _q_warp_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiles = synth.tiles_src_df(spark, 2, 2)
     (sx0, sy0), res, dst_origin, dres = localref.reproject_fixture_grid()
     _, inv = grid_transform_np(3857, 3031)
-    warped = tiling.warp_transform(
+    warped = tiling.warp(
         tiles, (sx0, sy0), res, dst_origin, dres,
         dst_tiles_x=2, dst_tiles_y=2, inv_transform=inv,
         kernel="bilinear", dst_raster_id="reprojected",
@@ -2274,7 +2274,7 @@ def _q_warp_datum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-datum raster warp: EPSG:3857 -> EPSG:27700 (the
     transformer chain runs TM inverse + OSGB36 Helmert per pixel
     lattice — gdalwarp -t_srs EPSG:27700 through PROJ's +towgs84
-    pipeline). Same windowed warp_transform engine as the 3031
+    pipeline). Same windowed tiling.warp as the 3031
     reprojection, different transformer composition."""
     import localref
     from gdal_spark.crs import grid_transform_np
@@ -2282,7 +2282,7 @@ def _q_warp_datum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiles = synth.tiles_src_df(spark, 2, 2)
     (sx0, sy0), res, dst_origin, dres = localref.datum_warp_fixture_grid()
     _, inv = grid_transform_np(3857, 27700)
-    warped = tiling.warp_transform(
+    warped = tiling.warp(
         tiles, (sx0, sy0), res, dst_origin, dres,
         dst_tiles_x=2, dst_tiles_y=2, inv_transform=inv,
         kernel="bilinear", dst_raster_id="bng_warp",
@@ -2295,8 +2295,8 @@ def _q_warp_kernel(kernel: str, factor: float):
         tiles = synth.tiles_src_df(spark, 2, 2)
         res = 2 * math.pi * 6378137 / 256 / (2**ZOOM)
         origin = (-math.pi * 6378137, -math.pi * 6378137 + 2 * 256 * res)
-        warped = tiling.warp_affine(
-            tiles, src_zoom_origin=origin, src_res=res,
+        warped = tiling.warp(
+            tiles, src_origin=origin, src_res=res,
             dst_origin=origin, dst_res=res * factor, dst_tiles_x=1,
             dst_tiles_y=1, kernel=kernel,
         )
@@ -3968,8 +3968,8 @@ def _q_warp_cutline(spark: SparkSession, sf_dir: str) -> DataFrame:
         np.array([x0 + 100 * res, x0 + 400 * res, x0 + 400 * res, x0 + 100 * res]),
         np.array([ytop - 450 * res, ytop - 450 * res, ytop - 80 * res, ytop - 80 * res]),
     )
-    warped = tiling.warp_affine(
-        tiles, src_zoom_origin=(x0, ytop), src_res=res,
+    warped = tiling.warp(
+        tiles, src_origin=(x0, ytop), src_res=res,
         dst_origin=(x0, ytop), dst_res=res, dst_tiles_x=2, dst_tiles_y=2,
         kernel="nearest", cutline_rings=[ring],
     )

@@ -2691,7 +2691,7 @@ def webmerc_inverse_np(x, y):
 def grid_transform_np(src_epsg: int, dst_epsg: int):
     """(fwd, inv) vectorized world->world numpy transforms between two
     projected CRS through geodetic — the GDALGenImgProjTransformer
-    chain (alg/gdaltransformer.cpp:1000) for tiling.warp_transform.
+    chain (alg/gdaltransformer.cpp:1000) for tiling.warp.
     Supports EPSG:3857 (spherical), every CONIC_PRESETS family, UTM
     codes (326xx/327xx/269xx), and EPSG:27700 — the British National
     Grid INCLUDING its OSGB36 Helmert datum step (projpipe), so the

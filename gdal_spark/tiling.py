@@ -17,18 +17,19 @@ gdal_calc, osgeo_utils/gdal_calc.py:35-50):
                     group_blocks is its aligned k x k case, one groupBy
   build_overview  — 2x factor pyramid level          (gcore/overview.cpp:144 ff;
                     build_overview_conv: cubic/lanczos :2771)
-  warp_affine     — chunked inverse-mapping resample (alg/gdalwarpoperation.cpp:116-157,
-                    kernels alg/gdalwarpkernel.cpp:101-137; near/bilinear/
-                    cubic/cubicspline/lanczos and the average..q3 footprints)
-  warp_transform  — the same with a general transformer (-t_srs)
+  warp            — chunked inverse-mapping resample (alg/gdalwarpoperation.cpp:116-157)
+                    on affine grids or through a general transformer (-t_srs)
+  resample        — its one kernel (alg/gdalwarpkernel.cpp:101-137): near/bilinear/
+                    cubic/cubicspline/lanczos and the average..q3 footprints,
+                    one validity mask
   retile          — re-chunk the grid (gdal_retile.py)
   checksum_table  — GDAL checksum per tile           (alg/gdalchecksum.cpp:64-180)
   mosaic          — VRT-style priority resolve       (apps/gdalbuildvrt_lib.cpp:1684)
 
 Scale notes: translate/checksum are map-only. Every operator whose
-output tile reads a window of source tiles — both warps, both
-overviews, retile's coarsen, raster.viewshed — builds it with the one
-paste. Where a source tile feeds several destinations (both warps,
+output tile reads a window of source tiles — warp, both overviews,
+retile's coarsen, raster.viewshed — builds it with the one paste.
+Where a source tile feeds several destinations (warp,
 build_overview_conv, viewshed) the window gather joins each
 destination's source range; where each feeds exactly one (the 2x
 overviews, retile's coarsen) group_blocks keys the tile by its block,
@@ -236,17 +237,16 @@ def gather(tiles: DataFrame, wants: DataFrame, key: list[str], fn,
 
 def paste(pdf: pd.DataFrame, fill: float, ts: int,
           window: tuple[int, int, int, int] | None = None,
-          h: int = 0, crop: bool = True) -> np.ndarray:
+          h: int = 0) -> np.ndarray:
     """The float64 window of one gathered group over tiles
     tx0..tx0+nx-1 x ty0..ty0+ny-1 (`window` = (tx0, ty0, nx, ny),
     default the bounding box of the tiles that arrived). Each tile
     lands at (tile index - window origin) * ts, ts the full tile size,
     by its own shape; `fill` stands where no tile arrived. A partial
-    tile is the raster's edge, so with `crop` the window ends there;
-    without it the window keeps all nx*ts x ny*ts pixels and `fill`
-    stands past the edge. With h > 0 the rows carry `raster.halo`
-    blocks and each tile lands with its h-px halo
-    (`raster.halo_window`): the window grows by h on every side."""
+    tile is the raster's edge, so the window ends there. With h > 0
+    the rows carry `raster.halo` blocks and each tile lands with its
+    h-px halo (`raster.halo_window`): the window grows by h on every
+    side."""
     from .raster import halo_window  # raster imports this module
 
     if window is None:
@@ -258,9 +258,9 @@ def paste(pdf: pd.DataFrame, fill: float, ts: int,
     placed = []
     for r in pdf.itertuples(index=False):
         ox, oy = (int(r.tile_x) - tx0) * ts, (int(r.tile_y) - ty0) * ts
-        if crop and r.width < ts:
+        if r.width < ts:
             W = min(W, ox + int(r.width))
-        if crop and r.height < ts:
+        if r.height < ts:
             H = min(H, oy + int(r.height))
         placed.append((ox, oy, halo_window(r, h, fill) if h else
                        _decode(r.data, r.dtype, r.height, r.width)))
@@ -440,23 +440,11 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
     over partial edge children ends where they do."""
     radius = {"cubic": 2, "lanczos": 3}[kernel]
     offs = list(range(1 - 2 * radius, 2 * radius + 1))
-
-    def wfun(x):
-        if kernel == "cubic":
-            ax = abs(x)
-            if ax <= 1.0:
-                return x * x * (1.5 * ax - 2.5) + 1.0
-            if ax <= 2.0:
-                return x * x * (-0.5 * ax + 2.5) - 4.0 * ax + 2.0
-            return 0.0
-        if x == 0.0:
-            return 1.0
-        if abs(x) >= 3.0:
-            return 0.0
-        pix = math.pi * x
-        return 3.0 * math.sin(pix) * math.sin(pix / 3.0) / (pix * pix)
-
-    w_o = np.array([wfun(0.5 * (o - 0.5)) for o in offs])
+    # f is the warp's filter: at distance x its weight is tap ceil(x)
+    # at fraction ceil(x) - x
+    first, taps = _FILTERS[kernel]
+    w_o = np.array([taps(math.ceil(x) - x)[math.ceil(x) - first]
+                    for x in (0.5 * (o - 0.5) for o in offs)])
     ts = full_tile_px(tiles)
     parents = tiles.select(
         *_SOURCE_KEY,
@@ -503,323 +491,327 @@ def build_overview_conv(tiles: DataFrame, kernel: str = "cubic") -> DataFrame:
 
 
 # ---------------------------------------------------------------- warp
-def warp_affine(
+# The filters' tap weights at fraction d of a source pixel, for taps
+# first .. first + n - 1 about floor(x) (GWKGetFilterFunc and
+# anGWKFilterRadius, alg/gdalwarpkernel.cpp). resample convolves with
+# them; build_overview_conv samples them at its fixed 2x taps.
+def _cubic(d):
+    """Catmull-Rom (GWKCubicComputeWeights, :2650-2660)."""
+    h = 0.5 * d
+    h2 = h * d
+    t = 3.0 * d
+    return [h * (-1 + d * (2 - d)), 1 + h2 * (-5 + t),
+            h * (1 + d * (4 - t)), h2 * (-1 + d)]
+
+
+def _bspline(d):
+    """Cubic B-spline (GWKBSpline, :3239), unnormalized: at x = tap - d,
+    xp2^3 - 4*xp1^3 + 6*x^3 - 4*xm1^3, each term gated on positivity."""
+    taps = []
+    for k in range(-1, 3):
+        t = 0.0
+        for c, off in ((1.0, 2.0), (-4.0, 1.0), (6.0, 0.0), (-4.0, -1.0)):
+            xo = (k - d) + off
+            t = t + c * np.where(xo > 0, xo * xo * xo, 0.0)
+        taps.append(t)
+    return taps
+
+
+def _lanczos(d):
+    """Lanczos-3 windowed sinc (GWKLanczosSinc, :874-905): sinc(x) *
+    sinc(x / 3) at x = d - tap, zero from |x| = 3."""
+    taps = []
+    for k in range(-2, 4):
+        x = d - k
+        a = np.pi * x
+        with np.errstate(divide="ignore", invalid="ignore"):
+            w = np.where(np.abs(x) < 1e-12, 1.0,
+                         3.0 * np.sin(a) * np.sin(a / 3.0) / (a * a))
+        taps.append(np.where(np.abs(x) >= 3.0, 0.0, w))
+    return taps
+
+
+_FILTERS = {"cubic": (-1, _cubic), "cubicspline": (-1, _bspline),
+            "lanczos": (-2, _lanczos)}
+_FOOTPRINT = ("average", "sum", "rms", "min", "max", "mode", "med", "q1", "q3")
+_KERNELS = ("nearest", "bilinear", *_FILTERS, *_FOOTPRINT)
+
+
+def _convolve(window: np.ndarray, valid: np.ndarray, x0, y0, wx, wy,
+              kernel: str, nodata: float) -> np.ndarray:
+    """The separable sum over taps x0 + i, y0 + j (clamped to the
+    window) weighted wx[i] * wy[j]: the kernel's own formula where
+    every tap is valid, elsewhere the valid taps' weighted mean
+    (GWKResample), nodata where their weight is under 1e-6 of the
+    whole."""
+    H, W = window.shape
+    xs = [np.clip(x0 + i, 0, W - 1) for i in range(len(wx))]
+    ys = [np.clip(y0 + j, 0, H - 1) for j in range(len(wy))]
+    V = [[window[y, x] for x in xs] for y in ys]
+    M = [[valid[y, x] for x in xs] for y in ys]
+    if kernel == "bilinear":  # one term per tap, the oracles' order
+        out = sum(v * a * b for row, b in zip(V, wy) for v, a in zip(row, wx))
+    else:
+        out = sum(sum(v * a for v, a in zip(row, wx)) * b for row, b in zip(V, wy))
+        if kernel != "cubic":
+            out = out / (sum(wx) * sum(wy))
+    clean = np.logical_and.reduce([m for row in M for m in row])
+    if clean.all():
+        return out
+    num = den = 0.0
+    for vrow, mrow, b in zip(V, M, wy):
+        for v, m, a in zip(vrow, mrow, wx):
+            w = np.where(m, a * b, 0.0)
+            num = num + np.where(m, v, 0.0) * w
+            den = den + w
+    with np.errstate(invalid="ignore", divide="ignore"):
+        part = np.where(den >= 1e-6 * sum(wx) * sum(wy), num / den, nodata)
+    return np.where(clean, out, part)
+
+
+def _footprint(window: np.ndarray, valid: np.ndarray, lx, ly, kernel: str,
+               nodata: float, ratio: float) -> np.ndarray:
+    """GWKAverageOrMode (GRA_Average .. GRA_Q3, alg/gdalwarpkernel.cpp
+    :5882-6462): reduce the valid pixels of each destination pixel's
+    integer source footprint, `ratio` source pixels wide about (lx,
+    ly) and clamped to the window. average/sum/rms read summed-area
+    tables (O(1) a pixel at any ratio); the others walk the footprint
+    in row-major scan order."""
+    H, W = window.shape
+    fx0 = lx + 0.5 - 0.5 * ratio
+    fy0 = ly + 0.5 - 0.5 * ratio
+    px0 = np.clip(np.floor(fx0 + 1e-8).astype(np.int64), 0, W - 1)
+    px1 = np.clip(np.ceil(fx0 + ratio - 1e-8).astype(np.int64), 1, W)
+    py0 = np.clip(np.floor(fy0 + 1e-8).astype(np.int64), 0, H - 1)
+    py1 = np.clip(np.ceil(fy0 + ratio - 1e-8).astype(np.int64), 1, H)
+    px1 = np.maximum(px1, px0 + 1)
+    py1 = np.maximum(py1, py0 + 1)
+    if kernel in ("average", "sum", "rms"):
+        def box(a):
+            sat = np.zeros((H + 1, W + 1))
+            sat[1:, 1:] = a.cumsum(axis=0).cumsum(axis=1)
+            return sat[py1, px1] - sat[py0, px1] - sat[py1, px0] + sat[py0, px0]
+
+        s = box(np.where(valid, window * window if kernel == "rms" else window, 0.0))
+        n = box(valid.astype(np.float64))
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out = s if kernel == "sum" else s / n
+        if kernel == "rms":
+            out = np.sqrt(out)
+        return np.where(n > 0, out, nodata)
+
+    def scan():
+        for dy in range(int((py1 - py0).max())):
+            yy = np.minimum(py0 + dy, H - 1)
+            for dx in range(int((px1 - px0).max())):
+                xx = np.minimum(px0 + dx, W - 1)
+                yield window[yy, xx], (py0 + dy < py1) & (px0 + dx < px1) & valid[yy, xx]
+
+    if kernel in ("min", "max"):
+        pick = np.minimum if kernel == "min" else np.maximum
+        acc = np.full(lx.shape, np.inf if kernel == "min" else -np.inf)
+        seen = np.zeros(lx.shape, dtype=bool)
+        for v, ok in scan():
+            acc = np.where(ok, pick(acc, v), acc)
+            seen |= ok
+        return np.where(seen, acc, nodata)
+    V, OK = (np.stack(a, axis=-1) for a in zip(*scan()))
+    if kernel == "mode":
+        return _mode_firstmax(V, OK, nodata)
+    # sort the valid taps ascending; quantIdx = ceil(q*n - 1)
+    # (gdalwarpkernel.cpp:6454)
+    q = {"med": 0.5, "q1": 0.25, "q3": 0.75}[kernel]
+    n = OK.sum(axis=-1)
+    idx = np.maximum(np.ceil(q * n - 1).astype(np.int64), 0)
+    out = np.take_along_axis(np.sort(np.where(OK, V, np.inf), axis=-1),
+                             idx[..., None], axis=-1)[..., 0]
+    return np.where(n > 0, out, nodata)
+
+
+def resample(window: np.ndarray, valid: np.ndarray, lx: np.ndarray,
+             ly: np.ndarray, kernel: str, nodata: float,
+             ratio: float) -> np.ndarray:
+    """GDAL's warp kernel (alg/gdalwarpkernel.cpp:101-137) over one
+    source window: the value at each window-local source point (lx,
+    ly), pixel centres at integers, for any of the 14 kernels —
+    nearest, bilinear, the filters (cubic, cubicspline, lanczos; each
+    falls back to bilinear where its support leaves the window, as
+    GWKCubicResampleNoMasks4SampleT:3053 does) and the footprints
+    (average .. q3, over a destination pixel `ratio` source pixels
+    wide).
+
+    One validity rule, GDAL's: a point outside the window (the
+    raster's extent) reads nodata; taps that are not `valid` drop out
+    and the remaining weights renormalise, and a footprint counts
+    only valid pixels; where every tap is valid the kernel's plain
+    formula stands. Taps past the window's edge clamp to it."""
+    H, W = window.shape
+    inside = (np.isfinite(lx) & np.isfinite(ly) & (lx > -0.5) & (lx < W - 0.5)
+              & (ly > -0.5) & (ly < H - 0.5))
+    lx = np.where(inside, lx, 0.0)
+    ly = np.where(inside, ly, 0.0)
+    if kernel in _FOOTPRINT:
+        out = _footprint(window, valid, lx, ly, kernel, nodata, ratio)
+    elif kernel == "nearest":
+        xi = np.clip(np.round(lx).astype(np.int64), 0, W - 1)
+        yi = np.clip(np.round(ly).astype(np.int64), 0, H - 1)
+        out = np.where(valid[yi, xi], window[yi, xi], nodata)
+    else:
+        x0 = np.clip(np.floor(lx).astype(np.int64), 0, W - 1)
+        y0 = np.clip(np.floor(ly).astype(np.int64), 0, H - 1)
+        fx = np.clip(lx - x0, 0.0, 1.0)
+        fy = np.clip(ly - y0, 0.0, 1.0)
+        out = _convolve(window, valid, x0, y0, [1 - fx, fx], [1 - fy, fy],
+                        "bilinear", nodata)
+        if kernel in _FILTERS:
+            first, taps = _FILTERS[kernel]
+            ix = np.floor(lx).astype(np.int64)
+            iy = np.floor(ly).astype(np.int64)
+            wx, wy = taps(lx - ix), taps(ly - iy)
+            last = first + len(wx) - 1
+            interior = ((ix + first >= 0) & (ix + last <= W - 1)
+                        & (iy + first >= 0) & (iy + last <= H - 1))
+            conv = _convolve(window, valid, ix + first, iy + first, wx, wy,
+                             kernel, nodata)
+            out = np.where(interior, conv, out)
+    return np.where(inside, out, nodata)
+
+
+def warp(
     tiles: DataFrame,
-    src_zoom_origin: tuple[float, float],
+    src_origin: tuple[float, float],
     src_res: float,
     dst_origin: tuple[float, float],
     dst_res: float,
     dst_tiles_x: int,
     dst_tiles_y: int,
     kernel: str = "nearest",
-    dst_raster_id: str = "warped",
+    inv_transform=None,
     cutline_rings: list | None = None,
+    dst_raster_id: str = "warped",
+    dst_crs: str | None = None,
     tile_px: int | None = None,
     src_tile_px: int | None = None,
+    window_samples: int = 11,
 ) -> DataFrame:
-    """Warp between two affine grids (GDALWarpOperation restated).
+    """gdalwarp (GDALWarpOperation restated,
+    alg/gdalwarpoperation.cpp:116-157): any of resample's 14 kernels
+    from the source grid onto a destination grid of dst_tiles_x x
+    dst_tiles_y tiles of tile_px (default 256) pixels, origin
+    dst_origin, pixel size dst_res.
 
-    cutline_rings: optional list of (xs, ys) polygon rings in world
-    coordinates — gdalwarp -cutline (apps/gdalwarp_lib.cpp:181-195):
-    the rings rasterize against the SOURCE grid as a validity mask
-    before resampling (alg/gdalcutline.cpp; source pixels whose center
-    is outside become nodata), matching the reference's golden
-    checksums 19139/14047 exactly (test_gdalwarp.py:441,458).
-    BLEND_DIST feathering lives in cutline_blend_density (apply the
-    density as the blend weight when composing onto existing raster
-    content). Rings ship in the UDF
-    closure (broadcast-sized, like the zone cover).
+    The source is one global pixel grid: tile (tx, ty) covers pixels
+    [tx*sts, (tx+1)*sts) x [ty*sts, (ty+1)*sts), sts = src_tile_px
+    (default tile_px); world x = x0 + px*res, y = y0 - py*res
+    (north-up). inv_transform=None puts the destination grid in the
+    source's CRS. Otherwise it is a picklable vectorized numpy
+    function (dst world xs, ys) -> (src world xs, ys) — the -t_srs
+    transformer chain (GDALGenImgProjTransformer,
+    alg/gdaltransformer.cpp:1000), built from crs.grid_transform_np /
+    datum.* backends — and ships to executors in the UDF closures.
+    The footprint kernels need no transform. dst_crs defaults to the
+    source's.
 
-    The source is treated as a global pixel grid: tile (tx, ty) covers
-    pixels [tx*256,(tx+1)*256) x [ty*256,(ty+1)*256); world x = x0 +
-    px*res, y = y0 - py*res (north-up). The destination grid is given by
-    its own origin/res and tile extent.
+    cutline_rings: optional list of (xs, ys) polygon rings in source
+    world coordinates — gdalwarp -cutline (apps/gdalwarp_lib.cpp
+    :181-195). GDAL rasterizes them against the SOURCE grid as a
+    validity mask before resampling (alg/gdalcutline.cpp): source
+    pixels whose centre is outside drop out, matching the reference's
+    golden checksums 19139/14047 (test_gdalwarp.py:441,458).
+    BLEND_DIST feathering lives in cutline_blend_density. The rings
+    ship in the UDF closure (broadcast-sized, like the zone cover).
 
-    Plan: enumerate dst tiles (deterministic, = GDAL's chunk list,
-    gdalwarpoperation.cpp:808) -> compute each dst tile's conservative
-    src tile window (the ComputeSourceWindow step) -> explode ->
-    shuffle-join src tiles -> per-dst-tile grouped pandas UDF assembles
-    the window and runs the numpy kernel (gdalwarpkernel.cpp:101-137).
-    Only the src tiles actually needed move through the shuffle.
-    """
-    _FOOTPRINT = ("average", "sum", "rms", "min", "max",
-                  "mode", "med", "q1", "q3")
-    if kernel not in ("nearest", "bilinear", "cubic", "cubicspline",
-                      "lanczos") + _FOOTPRINT:
+    Plan: enumerate the dst tiles (GDAL's chunk list,
+    gdalwarpoperation.cpp:808) -> each one's source window from a
+    window_samples^2 lattice through the transform (the identity when
+    none is given), plus the kernel's margin and, under a transform,
+    2 px curvature slack (ComputeSourceWindow, :2118) -> the window
+    gather -> per dst tile, paste the window, map the dst pixel
+    centres to source pixel coords and resample. Only the source
+    tiles a dst tile needs move through the shuffle; a dst tile whose
+    window holds no source tile produces no row."""
+    if kernel not in _KERNELS:
         raise ValueError(f"unsupported warp kernel: {kernel}")
-    sx0, sy0 = src_zoom_origin
+    if inv_transform is not None and kernel in _FOOTPRINT:
+        raise ValueError(f"warp kernel {kernel} needs inv_transform=None")
+    sx0, sy0 = src_origin
     dx0, dy0 = dst_origin
-    spark = tiles.sparkSession
     ts = tile_px if tile_px is not None else TILE_SIZE
     sts = src_tile_px if src_tile_px is not None else ts
-    fp_margin = max(2, int(math.ceil(dst_res / src_res)) + 1)
-    margin = {
-        "nearest": 1, "bilinear": 2, "cubic": 3, "cubicspline": 3,
-        "lanczos": 4,
-        "average": fp_margin, "sum": fp_margin, "rms": fp_margin,
-        "min": fp_margin, "max": fp_margin, "mode": fp_margin,
-        "med": fp_margin, "q1": fp_margin, "q3": fp_margin,
-    }[kernel]
+    margin = {"nearest": 1, "bilinear": 2, "cubic": 3, "cubicspline": 3,
+              "lanczos": 4}.get(kernel, max(2, int(math.ceil(dst_res / src_res)) + 1))
+    transform = inv_transform
+    if transform is None:
+        def transform(xs, ys):
+            return xs, ys
+    else:
+        margin += 2
 
-    dst = spark.range(0, dst_tiles_x * dst_tiles_y, 1).select(
+    dst = tiles.sparkSession.range(0, dst_tiles_x * dst_tiles_y, 1).select(
         (F.col("id") % dst_tiles_x).cast("int").alias("d_tx"),
         (F.col("id") / dst_tiles_x).cast("int").alias("d_ty"),
     )
-    # dst tile world bounds -> src pixel bounds -> src tile range (pure cols)
-    wx0 = F.lit(dx0) + F.col("d_tx") * ts * dst_res
-    wx1 = F.lit(dx0) + (F.col("d_tx") + 1) * ts * dst_res
-    wy1 = F.lit(dy0) - F.col("d_ty") * ts * dst_res
-    wy0 = F.lit(dy0) - (F.col("d_ty") + 1) * ts * dst_res
-    spx0 = (wx0 - sx0) / src_res
-    spx1 = (wx1 - sx0) / src_res
-    spy0 = (F.lit(sy0) - wy1) / src_res
-    spy1 = (F.lit(sy0) - wy0) / src_res
-    wants = dst.select(
-        "d_tx", "d_ty",
-        F.floor((spx0 - margin) / sts).cast("int").alias("tx0"),
-        F.floor((spx1 + margin) / sts).cast("int").alias("tx1"),
-        F.floor((spy0 - margin) / sts).cast("int").alias("ty0"),
-        F.floor((spy1 + margin) / sts).cast("int").alias("ty1"),
-    )
+    win_schema = T.StructType(
+        [T.StructField(c, T.IntegerType())
+         for c in ("d_tx", "d_ty", "tx0", "tx1", "ty0", "ty1")])
+
+    def windows(batches):
+        lin = np.linspace(0.0, 1.0, window_samples)
+        for pdf in batches:
+            rows = []
+            for tx, ty in zip(pdf["d_tx"], pdf["d_ty"]):
+                wx0 = dx0 + int(tx) * ts * dst_res
+                wy1 = dy0 - int(ty) * ts * dst_res
+                gx, gy = np.meshgrid(wx0 + lin * ts * dst_res,
+                                     wy1 - lin * ts * dst_res)
+                sxw, syw = transform(gx.ravel(), gy.ravel())
+                ok = np.isfinite(sxw) & np.isfinite(syw)
+                if not ok.any():
+                    continue
+                spx = (sxw[ok] - sx0) / src_res
+                spy = (sy0 - syw[ok]) / src_res
+                rows.append((int(tx), int(ty),
+                             int(np.floor((spx.min() - margin) / sts)),
+                             int(np.floor((spx.max() + margin) / sts)),
+                             int(np.floor((spy.min() - margin) / sts)),
+                             int(np.floor((spy.max() + margin) / sts))))
+            yield pd.DataFrame(rows, columns=win_schema.fieldNames())
+
+    wants = dst.mapInPandas(windows, schema=win_schema)
 
     def warp_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         d_tx, d_ty = int(key[0]), int(key[1])
         first = pdf.iloc[0]
         nodata = float(first["nodata"])
         tx_min, ty_min = int(pdf["tile_x"].min()), int(pdf["tile_y"].min())
-        mosaic = paste(pdf, nodata, sts, crop=False)
-        H, W = mosaic.shape
-
+        window = paste(pdf, np.nan, sts)
+        valid = ~np.isnan(window) & (window != nodata)
         if cutline_rings is not None:
-            # GDAL applies the cutline as a SOURCE validity mask
-            # (apps/gdalwarp_lib.cpp -> alg/gdalcutline.cpp rasterizes
-            # it against the source grid before resampling) — verified
-            # against test_gdalwarp.py goldens 19139/14047
+            H, W = window.shape
             gj, gi = np.mgrid[0:H, 0:W]
-            swx = sx0 + (tx_min * sts + gi + 0.5) * src_res
-            swy = sy0 - (ty_min * sts + gj + 0.5) * src_res
-            inside = np.zeros((H, W), dtype=bool)
+            swx = (sx0 + (tx_min * sts + gi + 0.5) * src_res).ravel()
+            swy = (sy0 - (ty_min * sts + gj + 0.5) * src_res).ravel()
+            inside = np.zeros(H * W, dtype=bool)
             for rxs, rys in cutline_rings:
-                inside |= G.pip_one(
-                    swx.ravel(), swy.ravel(),
-                    np.asarray(rxs, dtype=np.float64),
-                    np.asarray(rys, dtype=np.float64),
-                ).reshape(H, W)
-            mosaic = np.where(inside, mosaic, nodata)
-
-        # dst pixel centers -> world -> global src pixel coords
+                inside |= G.pip_one(swx, swy, np.asarray(rxs, dtype=np.float64),
+                                    np.asarray(rys, dtype=np.float64))
+            valid &= inside.reshape(H, W)
+        # dst pixel centres -> world -> global source pixel coords, then
+        # window-local by an exact integer shift (bit-equal to the
+        # single-node oracles' global coords)
         jj, ii = np.mgrid[0:ts, 0:ts]
-        wx = dx0 + (d_tx * ts + ii + 0.5) * dst_res
-        wy = dy0 - (d_ty * ts + jj + 0.5) * dst_res
-        spx = (wx - sx0) / src_res - 0.5
-        spy = (sy0 - wy) / src_res - 0.5
-        lx = spx - tx_min * sts
-        ly = spy - ty_min * sts
-        if kernel in ("average", "sum", "rms", "min", "max",
-                      "mode", "med", "q1", "q3"):
-            # GWKAverageOrMode family (alg/gdalwarpkernel.cpp
-            # GRA_Average/Sum/RMS/Min/Max): reduce over the dst pixel's
-            # integer source-pixel footprint. average/sum/rms evaluate
-            # via summed-area tables (O(1)/pixel at any factor);
-            # min/max walk the bounded footprint offsets with masking.
-            fx0 = (dx0 + (d_tx * ts + ii) * dst_res - sx0) / src_res - tx_min * sts
-            fy0 = (sy0 - (dy0 - (d_ty * ts + jj) * dst_res)) / src_res - ty_min * sts
-            px0 = np.clip(np.floor(fx0 + 1e-8).astype(np.int64), 0, W - 1)
-            px1 = np.clip(np.ceil(fx0 + dst_res / src_res - 1e-8).astype(np.int64), 1, W)
-            py0 = np.clip(np.floor(fy0 + 1e-8).astype(np.int64), 0, H - 1)
-            py1 = np.clip(np.ceil(fy0 + dst_res / src_res - 1e-8).astype(np.int64), 1, H)
-            px1 = np.maximum(px1, px0 + 1)
-            py1 = np.maximum(py1, py0 + 1)
-            cnt = (px1 - px0) * (py1 - py0)
-            if kernel in ("average", "sum", "rms"):
-                base = mosaic * mosaic if kernel == "rms" else mosaic
-                sat = np.zeros((H + 1, W + 1))
-                sat[1:, 1:] = base.cumsum(axis=0).cumsum(axis=1)
-                s = sat[py1, px1] - sat[py0, px1] - sat[py1, px0] + sat[py0, px0]
-                if kernel == "sum":
-                    out = s
-                elif kernel == "average":
-                    out = s / cnt
-                else:
-                    out = np.sqrt(s / cnt)
-            elif kernel in ("min", "max"):
-                fw = int((px1 - px0).max())
-                fh = int((py1 - py0).max())
-                acc = np.full(px0.shape, np.inf if kernel == "min" else -np.inf)
-                for dy in range(fh):
-                    yy_ = np.minimum(py0 + dy, H - 1)
-                    ok_y = py0 + dy < py1
-                    for dx_ in range(fw):
-                        xx_ = np.minimum(px0 + dx_, W - 1)
-                        ok = ok_y & (px0 + dx_ < px1)
-                        v = mosaic[yy_, xx_]
-                        if kernel == "min":
-                            acc = np.where(ok, np.minimum(acc, v), acc)
-                        else:
-                            acc = np.where(ok, np.maximum(acc, v), acc)
-                out = acc
-            else:
-                # GWKAOM_Fract/Quant family (GRA_Mode/Med/Q1/Q3,
-                # alg/gdalwarpkernel.cpp:5882-6462): gather the integer
-                # footprint in row-major scan order, then per-pixel
-                # order statistics
-                fw = int((px1 - px0).max())
-                fh = int((py1 - py0).max())
-                vals, oks = [], []
-                for dy in range(fh):
-                    yy_ = np.minimum(py0 + dy, H - 1)
-                    ok_y = py0 + dy < py1
-                    for dx_ in range(fw):
-                        xx_ = np.minimum(px0 + dx_, W - 1)
-                        oks.append(ok_y & (px0 + dx_ < px1))
-                        vals.append(mosaic[yy_, xx_])
-                V = np.stack(vals, axis=-1)  # (..., K) scan order
-                OK = np.stack(oks, axis=-1)
-                if kernel == "mode":
-                    out = _mode_firstmax(V, OK, nodata)
-                else:
-                    # sort valid ascending; quantIdx = ceil(q*n - 1)
-                    # (gdalwarpkernel.cpp:6454)
-                    q = {"med": 0.5, "q1": 0.25, "q3": 0.75}[kernel]
-                    Vs = np.sort(np.where(OK, V, np.inf), axis=-1)
-                    n = OK.sum(axis=-1)
-                    idx = np.maximum(
-                        np.ceil(q * n - 1).astype(np.int64), 0)
-                    out = np.take_along_axis(
-                        Vs, idx[..., None], axis=-1)[..., 0]
-                    out = np.where(n > 0, out, nodata)
-        elif kernel == "nearest":
-            xi = np.clip(np.round(lx).astype(np.int64), 0, W - 1)
-            yi = np.clip(np.round(ly).astype(np.int64), 0, H - 1)
-            out = mosaic[yi, xi]
-        else:
-            x0i = np.clip(np.floor(lx).astype(np.int64), 0, W - 1)
-            y0i = np.clip(np.floor(ly).astype(np.int64), 0, H - 1)
-            x1i = np.clip(x0i + 1, 0, W - 1)
-            y1i = np.clip(y0i + 1, 0, H - 1)
-            fx = np.clip(lx - x0i, 0.0, 1.0)
-            fy = np.clip(ly - y0i, 0.0, 1.0)
-            v00, v10 = mosaic[y0i, x0i], mosaic[y0i, x1i]
-            v01, v11 = mosaic[y1i, x0i], mosaic[y1i, x1i]
-            out = (
-                v00 * (1 - fx) * (1 - fy) + v10 * fx * (1 - fy)
-                + v01 * (1 - fx) * fy + v11 * fx * fy
-            )
-        if kernel == "cubic":
-            # Catmull-Rom 4x4 cubic convolution, exact GDAL weights
-            # (GWKCubicComputeWeights, alg/gdalwarpkernel.cpp:2650-2660)
-            # with GDAL's bilinear fallback where the 4x4 support would
-            # leave the image (GWKCubicResampleNoMasks4SampleT:3053) —
-            # `out` currently holds that bilinear value
-            ix = np.floor(lx).astype(np.int64)
-            iy = np.floor(ly).astype(np.int64)
-            dxf = lx - ix
-            dyf = ly - iy
-            interior = (ix - 1 >= 0) & (ix + 2 <= W - 1) & (iy - 1 >= 0) & (iy + 2 <= H - 1)
-
-            def cubw(d):
-                h = 0.5 * d
-                h2 = h * d
-                t = 3.0 * d
-                return (h * (-1 + d * (2 - d)), 1 + h2 * (-5 + t),
-                        h * (1 + d * (4 - t)), h2 * (-1 + d))
-
-            wx = cubw(dxf)
-            wy = cubw(dyf)
-            ixc = np.clip(ix, 1, max(W - 3, 1))
-            iyc = np.clip(iy, 1, max(H - 3, 1))
-            cub = np.zeros_like(out)
-            for j in range(-1, 3):
-                row = (
-                    mosaic[iyc + j, ixc - 1] * wx[0]
-                    + mosaic[iyc + j, ixc] * wx[1]
-                    + mosaic[iyc + j, ixc + 1] * wx[2]
-                    + mosaic[iyc + j, ixc + 2] * wx[3]
-                )
-                cub = cub + row * wy[j + 1]
-            out = np.where(interior, cub, out)
-        if kernel == "cubicspline":
-            # Cubic B-Spline 4x4 (GWKBSpline, alg/gdalwarpkernel.cpp
-            # :3239; unnormalized basis, normalized by the weight sum
-            # like GWKResampleNoMasksT:3781), bilinear fallback where
-            # the 4x4 support would leave the window (`out` currently
-            # holds that bilinear value)
-            ix = np.floor(lx).astype(np.int64)
-            iy = np.floor(ly).astype(np.int64)
-            dxf = lx - ix
-            dyf = ly - iy
-            interior = (ix - 1 >= 0) & (ix + 2 <= W - 1) & (iy - 1 >= 0) & (iy + 2 <= H - 1)
-
-            def bspl(x):
-                # xp2^3 - 4*xp1^3 + 6*x^3 - 4*xm1^3, each term gated on
-                # positivity (x in (-2, 2)); scale cancels in the
-                # normalization
-                t = 0.0
-                for c, off in ((1.0, 2.0), (-4.0, 1.0), (6.0, 0.0), (-4.0, -1.0)):
-                    xo = x + off
-                    t = t + c * np.where(xo > 0, xo * xo * xo, 0.0)
-                return t
-
-            # taps at ix-1..ix+2; argument = (tap - ix) - dxf
-            wx = [bspl(k - dxf) for k in range(-1, 3)]
-            wy = [bspl(k - dyf) for k in range(-1, 3)]
-            wsx = sum(wx)
-            wsy = sum(wy)
-            ixc = np.clip(ix, 1, max(W - 3, 1))
-            iyc = np.clip(iy, 1, max(H - 3, 1))
-            acc = np.zeros_like(out)
-            for j in range(-1, 3):
-                row = (
-                    mosaic[iyc + j, ixc - 1] * wx[0]
-                    + mosaic[iyc + j, ixc] * wx[1]
-                    + mosaic[iyc + j, ixc + 1] * wx[2]
-                    + mosaic[iyc + j, ixc + 2] * wx[3]
-                )
-                acc = acc + row * wy[j + 1]
-            out = np.where(interior, acc / (wsx * wsy), out)
-        if kernel == "lanczos":
-            # Lanczos-3 windowed sinc (GWKLanczosSinc,
-            # alg/gdalwarpkernel.cpp:874-905; radius 3 per
-            # anGWKFilterRadius), weights normalized by their sum like
-            # GWKResampleOptimizedLanczos; bilinear fallback where the
-            # 6x6 support would leave the assembled window (`out`
-            # currently holds that bilinear value)
-            ix = np.floor(lx).astype(np.int64)
-            iy = np.floor(ly).astype(np.int64)
-            dxf = lx - ix
-            dyf = ly - iy
-            interior = (ix - 2 >= 0) & (ix + 3 <= W - 1) & (iy - 2 >= 0) & (iy + 3 <= H - 1)
-            ixc = np.clip(ix, 2, max(W - 4, 2))
-            iyc = np.clip(iy, 2, max(H - 4, 2))
-
-            def lweight(d):
-                # normalized sinc(d) * sinc(d/3), |d| < 3
-                a = np.pi * d
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    w = np.where(
-                        np.abs(d) < 1e-12,
-                        1.0,
-                        3.0 * np.sin(a) * np.sin(a / 3.0) / (a * a),
-                    )
-                return np.where(np.abs(d) >= 3.0, 0.0, w)
-
-            wxs = [lweight(dxf - k) for k in range(-2, 4)]
-            wys = [lweight(dyf - k) for k in range(-2, 4)]
-            wsum_x = sum(wxs)
-            wsum_y = sum(wys)
-            acc = np.zeros_like(out)
-            for j, wy_ in enumerate(wys):
-                row = np.zeros_like(out)
-                for i, wx_ in enumerate(wxs):
-                    row = row + mosaic[iyc + j - 2, ixc + i - 2] * wx_
-                acc = acc + row * wy_
-            acc = acc / (wsum_x * wsum_y)
-            out = np.where(interior, acc, out)
+        sxw, syw = transform(dx0 + (d_tx * ts + ii.ravel() + 0.5) * dst_res,
+                             dy0 - (d_ty * ts + jj.ravel() + 0.5) * dst_res)
+        lx = (np.asarray(sxw) - sx0) / src_res - 0.5 - tx_min * sts
+        ly = (sy0 - np.asarray(syw)) / src_res - 0.5 - ty_min * sts
+        out = resample(window, valid, lx.reshape(ts, ts), ly.reshape(ts, ts),
+                       kernel, nodata, dst_res / src_res)
         return pd.DataFrame([tile_row(
             dst_raster_id, int(first["band"]), int(first["zoom"]), d_tx,
             d_ty, _gdal_cast(out, str(first["dtype"])),
             (dx0, dst_res, 0.0, dy0, 0.0, -dst_res), x0=d_tx * ts,
-            y0=d_ty * ts, nodata=nodata, crs=first["crs"])])
+            y0=d_ty * ts, nodata=nodata,
+            crs=first["crs"] if dst_crs is None else dst_crs)])
 
     return gather(tiles, wants, ["d_tx", "d_ty"], warp_group, TILE_SCHEMA)
 
@@ -845,136 +837,6 @@ def suggested_warp_output(src_origin: tuple[float, float], src_res: float,
     w = int(math.ceil((xmax - xmin) / res))
     h = int(math.ceil((ymax - ymin) / res))
     return (xmin, ymax), res, w, h
-
-
-def warp_transform(
-    tiles: DataFrame,
-    src_origin: tuple[float, float],
-    src_res: float,
-    dst_origin: tuple[float, float],
-    dst_res: float,
-    dst_tiles_x: int,
-    dst_tiles_y: int,
-    inv_transform,
-    kernel: str = "nearest",
-    dst_raster_id: str = "reprojected",
-    dst_crs: str = "custom",
-    tile_px: int | None = None,
-    src_tile_px: int | None = None,
-    window_samples: int = 11,
-) -> DataFrame:
-    """gdalwarp with a GENERAL coordinate transformer — the -t_srs
-    reprojection core (GDALGenImgProjTransformer, alg/gdaltransformer
-    .cpp:1000; GDALWarpOperation per-chunk source-window computation,
-    alg/gdalwarpoperation.cpp:2118 samples boundary points the same
-    way). `inv_transform` is a picklable vectorized numpy function
-    (dst world xs, ys) -> (src world xs, ys) — the composition
-    inverse-dst-projection -> [datum step] -> forward-src-projection;
-    build it from crs.grid_transform_np / datum.* numpy backends. It
-    ships to executors inside the UDF closures.
-
-    Plan (all distributed, two stages):
-      1. mapInPandas over the dst tile list: each tile's conservative
-         source window from a transformed window_samples^2 lattice
-         (+ kernel margin + curvature slack).
-      2. explode the window -> shuffle-join the source tile table ->
-         per-dst-tile grouped pandas UDF inverse-transforms the dst
-         pixel-center lattice (vectorized, one call per tile) and
-         samples the assembled window. Pixels whose preimage falls
-         outside the source become nodata.
-
-    Kernels: nearest / bilinear (GDAL's default near and the common
-    reprojection choice). Dst tiles whose preimage intersects no
-    source tile produce no row, like warp_affine."""
-    if kernel not in ("nearest", "bilinear"):
-        raise ValueError(f"unsupported warp_transform kernel: {kernel}")
-    sx0, sy0 = src_origin
-    dx0, dy0 = dst_origin
-    spark = tiles.sparkSession
-    ts = tile_px if tile_px is not None else TILE_SIZE
-    sts = src_tile_px if src_tile_px is not None else ts
-    margin = {"nearest": 1, "bilinear": 2}[kernel] + 2  # + curvature slack
-    nsamp = window_samples
-
-    dst = spark.range(0, dst_tiles_x * dst_tiles_y, 1).select(
-        (F.col("id") % dst_tiles_x).cast("int").alias("d_tx"),
-        (F.col("id") / dst_tiles_x).cast("int").alias("d_ty"),
-    )
-
-    win_schema = T.StructType(
-        [T.StructField(c, T.IntegerType())
-         for c in ("d_tx", "d_ty", "tx0", "tx1", "ty0", "ty1")])
-
-    def windows(batches):
-        lin = np.linspace(0.0, 1.0, nsamp)
-        for pdf in batches:
-            rows = []
-            for tx, ty in zip(pdf["d_tx"], pdf["d_ty"]):
-                wx0 = dx0 + int(tx) * ts * dst_res
-                wy1 = dy0 - int(ty) * ts * dst_res
-                gx, gy = np.meshgrid(wx0 + lin * ts * dst_res,
-                                     wy1 - lin * ts * dst_res)
-                sxw, syw = inv_transform(gx.ravel(), gy.ravel())
-                ok = np.isfinite(sxw) & np.isfinite(syw)
-                if not ok.any():
-                    continue
-                spx = (sxw[ok] - sx0) / src_res
-                spy = (sy0 - syw[ok]) / src_res
-                rows.append((int(tx), int(ty),
-                             int(np.floor((spx.min() - margin) / sts)),
-                             int(np.floor((spx.max() + margin) / sts)),
-                             int(np.floor((spy.min() - margin) / sts)),
-                             int(np.floor((spy.max() + margin) / sts))))
-            yield pd.DataFrame(rows, columns=win_schema.fieldNames())
-
-    wants = dst.mapInPandas(windows, schema=win_schema)
-
-    def warp_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        d_tx, d_ty = int(key[0]), int(key[1])
-        first = pdf.iloc[0]
-        nodata = float(first["nodata"])
-        tx_min, ty_min = int(pdf["tile_x"].min()), int(pdf["tile_y"].min())
-        mosaic = paste(pdf, nodata, sts, crop=False)
-        H, W = mosaic.shape
-
-        jj, ii = np.mgrid[0:ts, 0:ts]
-        wxp = dx0 + (d_tx * ts + ii + 0.5) * dst_res
-        wyp = dy0 - (d_ty * ts + jj + 0.5) * dst_res
-        sxw, syw = inv_transform(wxp.ravel(), wyp.ravel())
-        # global source pixel coords, then window-local (exact integer
-        # shift — bit-identical to the single-node oracle's global lx)
-        spx = (np.asarray(sxw) - sx0) / src_res - 0.5
-        spy = (sy0 - np.asarray(syw)) / src_res - 0.5
-        lx = (spx - tx_min * sts).reshape(ts, ts)
-        ly = (spy - ty_min * sts).reshape(ts, ts)
-        valid = (np.isfinite(lx) & np.isfinite(ly) &
-                 (lx > -0.5) & (lx < W - 0.5) &
-                 (ly > -0.5) & (ly < H - 0.5))
-        lxs = np.where(valid, lx, 0.0)
-        lys = np.where(valid, ly, 0.0)
-        if kernel == "nearest":
-            xi = np.clip(np.round(lxs).astype(np.int64), 0, W - 1)
-            yi = np.clip(np.round(lys).astype(np.int64), 0, H - 1)
-            out = mosaic[yi, xi]
-        else:
-            x0i = np.clip(np.floor(lxs).astype(np.int64), 0, W - 1)
-            y0i = np.clip(np.floor(lys).astype(np.int64), 0, H - 1)
-            x1i = np.clip(x0i + 1, 0, W - 1)
-            y1i = np.clip(y0i + 1, 0, H - 1)
-            fx = np.clip(lxs - x0i, 0.0, 1.0)
-            fy = np.clip(lys - y0i, 0.0, 1.0)
-            out = (mosaic[y0i, x0i] * (1 - fx) * (1 - fy)
-                   + mosaic[y0i, x1i] * fx * (1 - fy)
-                   + mosaic[y1i, x0i] * (1 - fx) * fy
-                   + mosaic[y1i, x1i] * fx * fy)
-        out = np.where(valid, out, nodata)
-        return pd.DataFrame([tile_row(
-            dst_raster_id, int(first["band"]), int(first["zoom"]), d_tx,
-            d_ty, _gdal_cast(out, str(first["dtype"])),
-            (dx0, dst_res, 0.0, dy0, 0.0, -dst_res), x0=d_tx * ts,
-            y0=d_ty * ts, nodata=nodata, crs=dst_crs)])
-
-    return gather(tiles, wants, ["d_tx", "d_ty"], warp_group, TILE_SCHEMA)
 
 
 def cutline_blend_density(

@@ -15,7 +15,7 @@ with source-nodata passthrough (a nodata source pixel stays the
 nodata value) and a hard error where the resampled grid has no value
 (the reference surfaces missing grid as +Inf and fails the block).
 
-Spark shape: stage 1 IS the audited ``tiling.warp_affine`` bilinear
+Spark shape: stage 1 IS the audited ``tiling.warp`` bilinear
 regrid (dst grid = the source's tile grid, so its output arrives
 keyed by the same (tile_x, tile_y) the source uses); stage 2 is one
 equi-join on the tile key plus a map-only Arrow combine.  At 100 TB
@@ -59,8 +59,9 @@ def apply_vertical_shift_grid(
     """
     # grid coverage extent: one O(1) metadata aggregate (4 doubles) —
     # the reference turns "sampled outside the grid" into +Inf and a
-    # hard error; warp_affine instead edge-clamps, so containment is
-    # checked explicitly against the true extent
+    # hard error; the warp only reads nodata where a pixel centre falls
+    # past the grid, so tile containment is checked explicitly against
+    # the true extent
     ext = grid_tiles.select(
         F.min(F.element_at("geotransform", 1)).alias("x0"),
         F.max(F.element_at("geotransform", 1)
@@ -72,9 +73,9 @@ def apply_vertical_shift_grid(
     gx0, gx1, gy0, gy1 = (float(ext["x0"]), float(ext["x1"]),
                           float(ext["y0"]), float(ext["y1"]))
 
-    grid_on_src = tiling.warp_affine(
+    grid_on_src = tiling.warp(
         grid_tiles,
-        src_zoom_origin=grid_origin,
+        src_origin=grid_origin,
         src_res=grid_res,
         dst_origin=src_origin,
         dst_res=src_res,
@@ -90,7 +91,7 @@ def apply_vertical_shift_grid(
         F.col("width").alias("g_width"), F.col("height").alias("g_height"),
     )
     # LEFT join: a source tile with no grid coverage at all must
-    # surface as the reference's hard error (warp_affine drops dst
+    # surface as the reference's hard error (the warp drops dst
     # tiles whose source window is empty, so an inner join would
     # silently lose them instead)
     joined = src_tiles.join(g, ["tile_x", "tile_y"], "left")

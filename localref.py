@@ -288,7 +288,8 @@ def _warp_global(src: np.ndarray, sx0, sy0, src_res, dx0, dy0, dst_res,
                  dst_w, dst_h, kernel: str, cutline_rings=None,
                  nodata: float = 0.0) -> np.ndarray:
     """Whole-raster warp between two affine grids — the single-node
-    counterpart of tiling.warp_affine's windowed/sharded pipeline."""
+    counterpart of tiling.warp's windowed/sharded pipeline with no
+    inv_transform."""
     H, W = src.shape
     src = src.astype(np.float64)
     if cutline_rings is not None:
@@ -2661,8 +2662,8 @@ def _warp_transform_global(src: np.ndarray, sx0, sy0, src_res,
                            dx0, dy0, dst_res, dst_w, dst_h, inv_fn,
                            kernel: str = "bilinear",
                            nodata: float = 0.0) -> np.ndarray:
-    """Single-node counterpart of tiling.warp_transform: inverse-
-    transform every dst pixel center, sample the GLOBAL source.
+    """Single-node counterpart of tiling.warp with an inv_transform:
+    inverse-transform every dst pixel center, sample the GLOBAL source.
     Identical arithmetic sequence (global pixel index + 0.5, then the
     exact-integer window shift on the engine side) so values are
     bit-equal wherever the engine's window covers the kernel support."""

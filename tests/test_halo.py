@@ -1,7 +1,7 @@
 """Two-band parity of the tile exchanges: an operator run on a tile
 table that holds two bands of one raster gives exactly the union of
 its outputs on each band alone. Every exchange (the focal halo, the
-proximity target lists, the window gather behind both warps, the
+proximity target lists, the window gather behind the warp, the
 convolution overview and viewshed, and the aligned-block grouping
 behind the 2x overviews and retile's coarsen) is keyed by the whole
 tile address, so a band never reads its neighbour band's pixels."""
@@ -51,11 +51,13 @@ CASES = {
     "overview_gauss": (_src, lambda t: TL.build_overview(t, "gauss")),
     "overview_average": (_src, lambda t: TL.build_overview(t, "average")),
     "overview_cubic": (_src, lambda t: TL.build_overview_conv(t, "cubic")),
-    # identity grids: each band warps onto itself
-    "warp_affine": (_src, lambda t: TL.warp_affine(
+    # identity grids, with no transform and through an identity one:
+    # each band warps onto itself
+    "warp_affine": (_src, lambda t: TL.warp(
         t, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2, "nearest")),
-    "warp_transform": (_src, lambda t: TL.warp_transform(
-        t, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2, lambda xs, ys: (xs, ys))),
+    "warp_transform": (_src, lambda t: TL.warp(
+        t, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2,
+        inv_transform=lambda xs, ys: (xs, ys))),
     "viewshed": (_src, lambda t: R.viewshed(
         t, pd.DataFrame({"obs_id": [1, 2], "gx": [100, 300], "gy": [100, 260]}), 60)),
     "surf_feature_points": (_surf, lambda t: S.feature_points(t, 2, 2)),

@@ -314,7 +314,7 @@ def test_gdalwarp_21_cutline_checksum_19139(spark):
     from gdal_spark import tiling
     from gdal_spark.geomlite import gdal_checksum
 
-    out = tiling.warp_affine(
+    out = tiling.warp(
         _utm_tile_df(spark), (440720.0, 3751320.0), 60.0,
         (440720.0, 3751320.0), 60.0, 1, 1, "nearest",
         cutline_rings=[_cutline_ring()], tile_px=100,
@@ -332,7 +332,7 @@ def test_gdalwarp_22_cutline_tr30_checksum_14047(spark):
     from gdal_spark import tiling
     from gdal_spark.geomlite import gdal_checksum
 
-    out = tiling.warp_affine(
+    out = tiling.warp(
         _utm_tile_df(spark), (440720.0, 3751320.0), 60.0,
         (440720.0, 3751320.0), 30.0, 1, 1, "nearest",
         cutline_rings=[_cutline_ring()], tile_px=200, src_tile_px=100,
@@ -387,7 +387,7 @@ def test_gdalwarp_11_bilinear_vs_golden_raster(spark):
     from gdal_spark import tiling
 
     tiles, _ = _byte_tile_df(spark)
-    out = tiling.warp_affine(
+    out = tiling.warp(
         tiles, (440720.0, 3751320.0), 60.0, (440720.0, 3751320.0), 30.0,
         1, 1, "bilinear", tile_px=40, src_tile_px=20,
     ).collect()[0]
@@ -427,7 +427,7 @@ def test_gdalwarp_12_cubic_vs_golden_raster(spark):
     from gdal_spark import tiling
 
     tiles, _ = _byte_tile_df(spark)
-    out = tiling.warp_affine(
+    out = tiling.warp(
         tiles, (440720.0, 3751320.0), 60.0, (440720.0, 3751320.0), 30.0,
         1, 1, "cubic", tile_px=40, src_tile_px=20,
     ).collect()[0]

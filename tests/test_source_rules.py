@@ -28,10 +28,10 @@
   (`collect_list(struct("dx", "dy", ...))`); `"dst_tx"` is spelled
   nowhere else, `_neighbor_strips` / `_neighbor_blocks` are gone, and
   no module but raster.py joins tiles on a `tile_x` comparison.
-- One window gather: the six window operators (both warps, both
+- One window gather: the five window operators (the warp, both
   overviews, retile, viewshed) build their windows with
   `tiling.paste`. Those whose source tiles feed several destinations
-  (both warps, `build_overview_conv`, viewshed) read them through
+  (the warp, `build_overview_conv`, viewshed) read them through
   `tiling.gather`; the aligned 2x overview and retile's coarsen
   through `tiling.group_blocks`, one groupBy. Only
   `gather` joins a tile table on an exploded source-tile range (or a
@@ -40,6 +40,14 @@
   an offset from a tile index, `groupBy("d_tx", "d_ty")` is spelled
   nowhere, the gauss overview takes its reach from `raster.halo`, and
   `_gauss_halo_strips` / `GS_SCHEMA` are gone.
+- One warp: `tiling.warp` is the one entry (it calls `gather`, `paste`
+  and `resample`); `warp_affine` / `warp_transform` are defined
+  nowhere and `paste` takes no `crop`. The filter weights (`_cubic`,
+  `_bspline`, `_lanczos`) are named only in the `_FILTERS` table,
+  which only `resample` and `build_overview_conv` read (the overview
+  samples them at its fixed 2x taps); no module under gdal_spark/
+  defines the old copies (`wfun`, `cubw`, `bspl`, `lweight`) or spells
+  the lanczos window `sin(x / 3)` outside `_lanczos`.
 - The query builders' scratch files live under one root:
   `tempfile.mkdtemp` is called once in `__spark_entry__.py`, by
   `_scratch`, and a process that used `_scratch` leaves nothing behind.
@@ -339,13 +347,65 @@ def test_one_window_gather():
     assert range_joins == [f"{tiling_py}:gather"], range_joins
     assert f"{tiling_py}:paste" in pastes
     assert set(pastes) <= {f"{tiling_py}:paste", f"{raster_py}:halo_window"}, pastes
-    gathers = [f"{tiling_py}:{n}" for n in ("build_overview_conv", "warp_affine",
-                                            "warp_transform")] + [f"{raster_py}:viewshed"]
+    gathers = [f"{tiling_py}:{n}" for n in ("build_overview_conv", "warp")] + [
+        f"{raster_py}:viewshed"]
     blocks = [f"{tiling_py}:{n}" for n in ("build_overview", "retile")]
     for where in gathers + blocks:
         assert _calls(fns[where], "paste"), where
         assert _calls(fns[where], "gather" if where in gathers else "group_blocks"), where
     assert _calls(fns[f"{tiling_py}:build_overview"], "halo")
+
+
+_FILTER_FNS = {"_cubic", "_bspline", "_lanczos"}
+
+
+def test_one_warp():
+    tiling_py = os.path.join("gdal_spark", "tiling.py")
+    pkg = "gdal_spark" + os.sep
+    tests = sorted(glob.glob(os.path.join(REPO, "tests", "*.py")))
+    old, crops, filter_refs, table_reads, sinc3 = [], [], [], [], []
+    fns = {}
+    for path in SOURCES + tests:
+        tree = _tree(path)
+        # the oracles in localref keep their own weight functions
+        gone = {"warp_affine", "warp_transform"} | (
+            {"wfun", "cubw", "bspl", "lweight"} if _rel(path).startswith(pkg) else set())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.FunctionDef) and n.name in gone:
+                old.append(f"{_rel(path)}:{n.name}")
+            if isinstance(n, (ast.keyword, ast.arg)) and n.arg == "crop":
+                crops.append(f"{_rel(path)}:{n.lineno}")
+        if not _rel(path).startswith(pkg):
+            continue
+        for top in tree.body:
+            name = getattr(top, "name", None) or ast.unparse(
+                getattr(top, "targets", [top])[0])
+            where = f"{_rel(path)}:{name}"
+            if isinstance(top, ast.FunctionDef):
+                fns[where] = top
+            for n in ast.walk(top):
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                    if n.id in _FILTER_FNS:
+                        filter_refs.append(where)
+                    if n.id == "_FILTERS" and isinstance(top, ast.FunctionDef):
+                        table_reads.append(where)
+                # sin(x / 3): the lanczos window spelled a second time
+                if (isinstance(n, ast.Call) and ast.unparse(n.func).endswith("sin")
+                        and n.args and isinstance(n.args[0], ast.BinOp)
+                        and isinstance(n.args[0].op, ast.Div)
+                        and ast.unparse(n.args[0].right) in ("3", "3.0")):
+                    sinc3.append(where)
+    assert not old, old
+    assert not crops, crops
+    # the filters are named only in their table; resample reads it, and
+    # the convolution overview takes its fixed 2x tap weights from it
+    assert set(filter_refs) == {f"{tiling_py}:_FILTERS"}, filter_refs
+    assert sorted(set(table_reads)) == [f"{tiling_py}:build_overview_conv",
+                                        f"{tiling_py}:resample"], table_reads
+    assert sinc3 == [f"{tiling_py}:_lanczos"], sinc3
+    warp = fns[f"{tiling_py}:warp"]
+    for callee in ("gather", "paste", "resample"):
+        assert _calls(warp, callee), callee
 
 
 def test_one_mkdtemp_in_the_query_builders():

@@ -223,8 +223,8 @@ def test_warp_identity_nearest_preserves_checksums(spark):
     src0 = tiles.filter((tiles.tile_x == 0) & (tiles.tile_y == 0)).select("geotransform").first()[0]
     origin = (src0[0], src0[3])
     res = src0[1]
-    warped = tiling.warp_affine(
-        tiles, src_zoom_origin=origin, src_res=res,
+    warped = tiling.warp(
+        tiles, src_origin=origin, src_res=res,
         dst_origin=origin, dst_res=res, dst_tiles_x=2, dst_tiles_y=2,
         kernel="nearest",
     )
@@ -234,20 +234,112 @@ def test_warp_identity_nearest_preserves_checksums(spark):
         assert got[k] == src_cks[k]
 
 
-def test_warp_past_a_partial_source_edge_is_nodata(spark):
-    """An identity warp of a 300x300 raster tiled at 256 onto a 512x512
-    grid: destination pixels past the source's right and bottom edge
-    read nodata, not the last source column or row."""
-    tiles = synth.dem_tiles_df(spark, 300, tile_px=256)
-    warped = tiling.warp_affine(tiles, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, 2, 2,
-                                "nearest", tile_px=256)
-    got = np.zeros((512, 512))
+def _warped_mosaic(warped, n):
+    got = np.zeros((n, n))
     for r in warped.collect():
-        got[r.tile_y * 256:(r.tile_y + 1) * 256, r.tile_x * 256:(r.tile_x + 1) * 256] = (
-            np.frombuffer(r.data, dtype=r.dtype).reshape(256, 256))
-    exp = np.full((512, 512), -32767.0)
-    exp[:300, :300] = synth.dem_pixels_np(0, 0, 300, 300)
+        got[r.tile_y * r.height:(r.tile_y + 1) * r.height,
+            r.tile_x * r.width:(r.tile_x + 1) * r.width] = (
+            np.frombuffer(r.data, dtype=r.dtype).reshape(r.height, r.width))
+    return got
+
+
+@pytest.mark.parametrize("npx, dst_tiles", [
+    pytest.param(300, 2, id="partial-tile-edge"),
+    pytest.param(512, 3, id="whole-tile-edge")])
+def test_warp_past_a_partial_source_edge_is_nodata(spark, npx, dst_tiles):
+    """An identity warp of an npx x npx raster tiled at 256 onto a
+    larger grid: destination pixels past the source's right and bottom
+    edge read nodata, not the last source column or row, whether the
+    edge tile is partial (300) or whole (512)."""
+    tiles = synth.dem_tiles_df(spark, npx, tile_px=256)
+    warped = tiling.warp(tiles, (0.0, 0.0), 1.0, (0.0, 0.0), 1.0, dst_tiles,
+                         dst_tiles, "nearest", tile_px=256)
+    got = _warped_mosaic(warped, dst_tiles * 256)
+    exp = np.full(got.shape, -32767.0)
+    exp[:npx, :npx] = synth.dem_pixels_np(0, 0, npx, npx)
     np.testing.assert_array_equal(got, exp)
+
+
+def test_warp_half_pixel_shift_never_blends_the_fill(spark):
+    """A bilinear warp of the 300x300 table shifted half a pixel in x:
+    each destination pixel is the mean of two source columns, and
+    column 299, whose source point is the raster's right edge, reads
+    nodata, never the mean of the last column and the nodata fill."""
+    tiles = synth.dem_tiles_df(spark, 300, tile_px=256)
+    warped = tiling.warp(tiles, (0.0, 0.0), 1.0, (0.5, 0.0), 1.0, 2, 2,
+                         "bilinear", tile_px=256)
+    got = _warped_mosaic(warped, 512)
+    src = synth.dem_pixels_np(0, 0, 300, 300).astype(np.float64)
+    exp = np.full(got.shape, -32767.0)
+    exp[:300, :299] = np.floor((src[:, :-1] + src[:, 1:]) / 2 + 0.5)
+    assert got[10, 299] == -32767.0
+    assert not (got == -16690.0).any()
+    np.testing.assert_array_equal(got, exp)
+
+
+_HOLE = (20, 20)  # (row, col) of the one interior nodata pixel
+
+
+def _holed_tiles(spark):
+    """One 64x64 float64 tile of the DEM ramp with one nodata pixel."""
+    src = synth.dem_pixels_np(0, 0, 64, 64).astype(np.float64)
+    src[_HOLE] = -32767.0
+    row = synth.tile_row("holed", 1, 0, 0, 0, src, (0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+                         nodata=-32767.0)
+    return spark.createDataFrame(pd.DataFrame([row]), synth.TILE_SCHEMA), src
+
+
+def _filter_weight(kernel, t):
+    """The filters as their textbook formulas of the distance t."""
+    a = np.abs(t)
+    if kernel == "cubic":  # Catmull-Rom
+        return np.where(a <= 1, 1.5 * a**3 - 2.5 * a**2 + 1,
+                        np.where(a <= 2, -0.5 * a**3 + 2.5 * a**2 - 4 * a + 2, 0.0))
+    if kernel == "cubicspline":
+        return np.where(a < 1, (2 - a)**3 - 4 * (1 - a)**3, np.where(a < 2, (2 - a)**3, 0.0))
+    return np.where(a < 3, np.sinc(t) * np.sinc(t / 3), 0.0)  # lanczos-3
+
+
+@pytest.mark.parametrize("kernel", [
+    "nearest", "bilinear", "cubic", "cubicspline", "lanczos", "average", "sum",
+    "rms", "min", "max", "mode", "med", "q1", "q3"])
+def test_warp_drops_nodata_taps(spark, kernel):
+    """Every kernel drops the nodata pixel from its taps instead of
+    blending the fill into data (GDAL's masked warp kernel). The point
+    kernels sample at (+0.3, +0.2) px, the footprints at 2x."""
+    tiles, src = _holed_tiles(spark)
+    footprint = kernel in ("average", "sum", "rms", "min", "max", "mode", "med",
+                           "q1", "q3")
+    res, origin, ts = (2.0, (0.0, 0.0), 32) if footprint else (1.0, (0.3, -0.2), 48)
+    out = tiling.warp(tiles, (0.0, 0.0), 1.0, origin, res, 1, 1, kernel,
+                      tile_px=ts, src_tile_px=64).collect()[0]
+    got = np.frombuffer(out.data, dtype=np.float64).reshape(ts, ts)
+    valid = src != -32767.0
+    if kernel in ("cubic", "cubicspline", "lanczos"):
+        first, n = (-2, 6) if kernel == "lanczos" else (-1, 4)
+        for r in range(19, 22):
+            for c in range(19, 22):
+                lx = (origin[0] + (c + 0.5) * res) - 0.5
+                ly = (-(origin[1] - (r + 0.5) * res)) - 0.5
+                ix, iy = int(np.floor(lx)), int(np.floor(ly))
+                k = np.arange(first, first + n)
+                w = np.outer(_filter_weight(kernel, k - (ly - iy)),
+                             _filter_weight(kernel, k - (lx - ix)))
+                v = src[iy + first:iy + first + n, ix + first:ix + first + n]
+                m = valid[iy + first:iy + first + n, ix + first:ix + first + n]
+                assert not m.all()
+                want = (w * v)[m].sum() / w[m].sum()
+                assert got[r, c] == pytest.approx(want, rel=1e-9), (r, c)
+    elif kernel in ("sum", "rms"):
+        r, c = _HOLE[0] // 2, _HOLE[1] // 2
+        block = src[2 * r:2 * r + 2, 2 * c:2 * c + 2][valid[2 * r:2 * r + 2, 2 * c:2 * c + 2]]
+        assert block.size == 3
+        want = block.sum() if kernel == "sum" else np.sqrt((block**2).mean())
+        assert got[r, c] == pytest.approx(want, rel=1e-12)
+    else:
+        lo, hi = src[valid].min(), src[valid].max()
+        assert (got == -32767.0).sum() <= 1
+        assert ((got == -32767.0) | ((got >= lo) & (got <= hi))).all()
 
 
 def test_warp_shift_halfres_bilinear_golden(spark):
@@ -257,8 +349,8 @@ def test_warp_shift_halfres_bilinear_golden(spark):
     src0 = tiles.filter((tiles.tile_x == 0) & (tiles.tile_y == 0)).select("geotransform").first()[0]
     origin = (src0[0], src0[3])
     res = src0[1]
-    warped = tiling.warp_affine(
-        tiles, src_zoom_origin=origin, src_res=res,
+    warped = tiling.warp(
+        tiles, src_origin=origin, src_res=res,
         dst_origin=origin, dst_res=res * 2, dst_tiles_x=1, dst_tiles_y=1,
         kernel="bilinear",
     ).toPandas()
@@ -320,8 +412,8 @@ def test_warp_cutline_masks_outside(spark):
         np.array([cx0, cx1, cx1, cx0]),
         np.array([cy0, cy0, cy1, cy1]),
     )
-    out = tiling.warp_affine(
-        tiles, src_zoom_origin=(x0, ytop), src_res=res,
+    out = tiling.warp(
+        tiles, src_origin=(x0, ytop), src_res=res,
         dst_origin=(x0, ytop), dst_res=res, dst_tiles_x=1, dst_tiles_y=1,
         kernel="nearest", cutline_rings=[ring],
     ).collect()[0]

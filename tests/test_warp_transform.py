@@ -1,9 +1,10 @@
 """General-transformer warp (gdalwarp -t_srs analog): identity
-transform reproduces the source exactly, the reprojection fixture
-matches the sequential localref warp, and suggested_warp_output covers
-the transformed extent."""
+transform reproduces the source exactly and equals the warp with no
+transform, the reprojection fixture matches the sequential localref
+warp, and suggested_warp_output covers the transformed extent."""
 
 import numpy as np
+import pytest
 
 from gdal_spark import synth, tiling
 from gdal_spark.crs import grid_transform_np
@@ -19,9 +20,9 @@ def test_identity_transform_reproduces_source(spark):
     res = localref._zoom_res(12)
     x0 = -np.pi * 6378137.0
     origin = (x0, x0 + 2 * 256 * res)
-    out = tiling.warp_transform(
-        tiles, origin, res, origin, res, 2, 2, _identity,
-        kernel="nearest", dst_raster_id="idwarp")
+    out = tiling.warp(
+        tiles, origin, res, origin, res, 2, 2, "nearest",
+        inv_transform=_identity, dst_raster_id="idwarp")
     got = {(r["tile_x"], r["tile_y"]): r["checksum"]
            for r in tiling.checksum_table(out).collect()}
     g = localref.global_mosaic(2, 2)
@@ -30,14 +31,37 @@ def test_identity_transform_reproduces_source(spark):
     assert got == want
 
 
+@pytest.mark.parametrize("kernel", ["nearest", "bilinear", "cubic", "cubicspline",
+                                    "lanczos"])
+def test_identity_transform_equals_no_transform(spark, kernel):
+    """The transformer path and the affine path are one warp: through
+    an identity inv_transform every point kernel gives the same tiles
+    as with inv_transform=None (a 0.75x grid offset by a fraction of a
+    pixel, so every tap weight is in play)."""
+    import localref
+    tiles = synth.tiles_src_df(spark, 2, 2)
+    res = localref._zoom_res(12)
+    x0 = -np.pi * 6378137.0
+    origin = (x0, x0 + 2 * 256 * res)
+    dst = (x0 + 0.3 * res, origin[1] - 0.2 * res)
+
+    def tiles_of(**kw):
+        out = tiling.warp(tiles, origin, res, dst, 0.75 * res, 2, 2, kernel, **kw)
+        return {(r.tile_x, r.tile_y): r.data for r in out.collect()}
+
+    affine = tiles_of()
+    assert len(affine) == 4
+    assert tiles_of(inv_transform=_identity) == affine
+
+
 def test_reproject_matches_localref(spark):
     import localref
     tiles = synth.tiles_src_df(spark, 2, 2)
     (sx0, sy0), res, (dx0, dy0), dres = localref.reproject_fixture_grid()
     _, inv = grid_transform_np(3857, 3031)
-    out = tiling.warp_transform(
-        tiles, (sx0, sy0), res, (dx0, dy0), dres, 2, 2, inv,
-        kernel="bilinear", dst_raster_id="reprojected",
+    out = tiling.warp(
+        tiles, (sx0, sy0), res, (dx0, dy0), dres, 2, 2, "bilinear",
+        inv_transform=inv, dst_raster_id="reprojected",
         dst_crs="EPSG:3031")
     got = {(r["tile_x"], r["tile_y"]): r["checksum"]
            for r in tiling.checksum_table(out).collect()}
@@ -77,9 +101,9 @@ def test_datum_warp_matches_localref_and_shifts(spark):
     tiles = synth.tiles_src_df(spark, 2, 2)
     (sx0, sy0), res, (dx0, dy0), dres = localref.datum_warp_fixture_grid()
     _, inv = grid_transform_np(3857, 27700)
-    out = tiling.warp_transform(
-        tiles, (sx0, sy0), res, (dx0, dy0), dres, 2, 2, inv,
-        kernel="bilinear", dst_raster_id="bng_warp", dst_crs="EPSG:27700")
+    out = tiling.warp(
+        tiles, (sx0, sy0), res, (dx0, dy0), dres, 2, 2, "bilinear",
+        inv_transform=inv, dst_raster_id="bng_warp", dst_crs="EPSG:27700")
     got = {(r["tile_x"], r["tile_y"]): r["checksum"]
            for r in tiling.checksum_table(out).collect()}
     g = localref.global_mosaic(2, 2)
